@@ -494,8 +494,8 @@ object SparkEntry {
     "ext_assoc_rules" -> ((s, dir) =>
       // no pre-distinct: itemPairs dedups inside its collect_set, and the
       // support sides use countDistinct — one less full-table exchange.
-      // The operator carries a broadcastSupport=false shuffled-hash twin
-      // for catalogs that outgrow the item-support broadcast (plan-pinned)
+      // Past graft.graph.broadcastLimitBytes the item-support lookups take
+      // the shuffled-hash twin (plan-pinned)
       operators.Graph.assocRules(
         t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")),
         "l_orderkey", "l_partkey", topK = 20)),

@@ -516,15 +516,14 @@ object Dedup {
     * (both collapse identical token sets to the min member id). */
   def lshRecallSweep(docs: DataFrame, idCol: String, textCol: String,
                      seeds: Int = 16, configs: Seq[Int] = Seq(2, 4, 8, 16),
-                     thetaNum: Int = 4, thetaDen: Int = 5,
-                     bitmap: Option[Boolean] = None): DataFrame = {
+                     thetaNum: Int = 4, thetaDen: Int = 5): DataFrame = {
     require(configs.nonEmpty && configs.forall(r => r >= 1 && seeds % r == 0),
       s"every rows-per-band must divide seeds=$seeds, got $configs")
     val jreps = jaccardReps(docs, idCol, textCol).localCheckpoint()
     var toFree = Seq(jreps)
     // ground truth only needs the PAIR IDS — dense-vocab corpora take the
     // popcount join (bitmapMasks doc) and skip the prefix machinery
-    val truth = (bitmapMasks(jreps, bitmap) match {
+    val truth = (bitmapMasks(jreps) match {
       case Some(m) => bitmapPairs(m, thetaNum, thetaDen, containment = false)
       case None =>
         val sorted = jaccardOrderedPrefix(jreps, thetaNum, thetaDen)
@@ -1558,29 +1557,23 @@ object Dedup {
     * corpus fails the 65-token probe on a dictionary-sized job and takes
     * the prefix-filter path unchanged.
     *
-    * Gate (auto when `flag` is None): distinct tokens ≤ 64 AND rep count
-    * ≤ `graft.dedup.bitmapMaxReps` (default 32768 ≈ 0.5 G popcount
-    * evals — bounds the quadratic gate work; past it the prefix filter's
-    * candidate bound wins). Some(false) forces the prefix twin (the
-    * spec pin), Some(true) REQUIRES the bitmap path and throws past the
-    * gate (test-only). Returns (__rep [, carry…], __m, __sz) or None.
+    * Gate: distinct tokens ≤ 64 AND rep count ≤
+    * `graft.dedup.bitmapMaxReps` (default 32768 ≈ 0.5 G popcount evals —
+    * bounds the quadratic gate work; past it the prefix filter's
+    * candidate bound wins). The limit is the only selector: 0 forces the
+    * prefix-filter twin on any non-empty rep table. Returns
+    * (__rep [, carry…], __m, __sz) or None.
     *
     * Bit assignment is the sorted token order — any assignment yields
     * the same popcounts, sorting just keeps plans/specs deterministic. */
-  private[graft] def bitmapMasks(reps: DataFrame, flag: Option[Boolean],
+  private[graft] def bitmapMasks(reps: DataFrame,
                                  carryCols: Seq[String] = Nil): Option[DataFrame] = {
-    if (flag.contains(false)) return None
     val toks = reps.select(explode(col("__ts")).as("__t"))
       .distinct().orderBy(col("__t")).limit(65)
       .collect().map(_.getString(0))
     val maxReps = reps.sparkSession.conf
       .get("graft.dedup.bitmapMaxReps", "32768").toLong
-    val pass = toks.length <= 64 && reps.count() <= maxReps
-    if (!pass) {
-      require(!flag.contains(true), s"bitmap path forced but the gate " +
-        s"failed (vocab ${toks.length} tokens / maxReps $maxReps)")
-      return None
-    }
+    if (toks.length > 64 || reps.count() > maxReps) return None
     // token → bit as a MAP literal: the in-row fold is a pure projection
     // over the checkpointed rep table — no dictionary join, no exchange
     val dict = if (toks.isEmpty) map()
@@ -1652,12 +1645,13 @@ object Dedup {
   /** UN-checkpointed single-stage body of the dense-vocab bitmap pair
     * stage, for the plan audit trail only ([[graft.SparkEntry.loopBodyPlans]]
     * / PLANS.md — the production entry points checkpoint their result, so
-    * their final plans collapse to `Scan ExistingRDD`). Forces the bitmap
-    * gate: callers pass a dense-vocab corpus. Never run by Verify/Bench. */
+    * their final plans collapse to `Scan ExistingRDD`). Callers pass a
+    * dense-vocab corpus that passes the [[bitmapMasks]] gate. Never run
+    * by Verify/Bench. */
   def bitmapPairsPlan(docs: DataFrame, idCol: String, textCol: String,
                       thetaNum: Int, thetaDen: Int): DataFrame = {
     val reps = jaccardReps(docs, idCol, textCol)
-    bitmapPairs(bitmapMasks(reps, Some(true)).get, thetaNum, thetaDen,
+    bitmapPairs(bitmapMasks(reps).get, thetaNum, thetaDen,
       containment = false)
   }
 
@@ -1674,14 +1668,13 @@ object Dedup {
     * expand-then-count formulation). The θ gate replays the exact integer
     * form 100·i ≥ θ·(|A|+|B|−i) over the min-θ verified pairs. */
   def jaccardThresholdSweep(docs: DataFrame, idCol: String, textCol: String,
-                            thetasPct: Seq[Int],
-                            bitmap: Option[Boolean] = None): DataFrame = {
+                            thetasPct: Seq[Int]): DataFrame = {
     require(thetasPct.nonEmpty && thetasPct.forall(t => t > 0 && t <= 100),
       s"thetasPct must be percentages in (0, 100], got $thetasPct")
     val tmin = thetasPct.min
     val reps = jaccardReps(docs, idCol, textCol).localCheckpoint()
     var toFree = Seq(reps)
-    val rp = bitmapMasks(reps, bitmap) match {
+    val rp = bitmapMasks(reps) match {
       case Some(m) => bitmapPairs(m, tmin, 100, containment = false)
       case None =>
         val sorted = jaccardOrderedPrefix(reps, tmin, 100).localCheckpoint()
@@ -1754,8 +1747,8 @@ object Dedup {
     * id space). Returns (id_in, id_ref, inter_size, size_in, size_ref,
     * jaccard). */
   def jaccardJoinAgainst(inc: DataFrame, ref: DataFrame, idCol: String,
-                         textCol: String, thetaNum: Int, thetaDen: Int,
-                         bitmap: Option[Boolean] = None): DataFrame = {
+                         textCol: String, thetaNum: Int,
+                         thetaDen: Int): DataFrame = {
     require(thetaNum > 0 && thetaDen > 0 && thetaNum <= thetaDen,
       s"theta must be a rational in (0,1], got $thetaNum/$thetaDen")
     val reps = jaccardReps(inc, idCol, textCol).withColumn("__corp", lit(0))
@@ -1765,7 +1758,7 @@ object Dedup {
     var toFree = Seq(reps)
     // dense-vocab corpora take the cross-corpus popcount join
     // (bitmapMasks doc) — the vocab probe spans BOTH sides' reps
-    val repPairs = bitmapMasks(reps, bitmap, carryCols = Seq("__corp")) match {
+    val repPairs = bitmapMasks(reps, carryCols = Seq("__corp")) match {
       case Some(m) =>
         bitmapPairsCross(m, thetaNum, thetaDen, containment = false)
       case None =>
@@ -1806,8 +1799,7 @@ object Dedup {
   }
 
   def jaccardJoinExact(docs: DataFrame, idCol: String, textCol: String,
-                       thetaNum: Int, thetaDen: Int,
-                       bitmap: Option[Boolean] = None): DataFrame = {
+                       thetaNum: Int, thetaDen: Int): DataFrame = {
     require(thetaNum > 0 && thetaDen > 0 && thetaNum <= thetaDen,
       s"theta must be a rational in (0,1], got $thetaNum/$thetaDen")
     // materialize the shared stages ONCE: reps feeds the token-df join,
@@ -1821,7 +1813,7 @@ object Dedup {
     // Dense-vocab corpora skip `sorted` entirely (bitmapMasks doc).
     val reps = jaccardReps(docs, idCol, textCol).localCheckpoint()
     var toFree = Seq(reps)
-    val repPairs = bitmapMasks(reps, bitmap) match {
+    val repPairs = bitmapMasks(reps) match {
       case Some(m) => bitmapPairs(m, thetaNum, thetaDen, containment = false)
       case None =>
         val sorted = jaccardOrderedPrefix(reps, thetaNum, thetaDen).localCheckpoint()
@@ -1887,8 +1879,7 @@ object Dedup {
     * rep-level and prefix-bounded — nothing all-pairs, the 100 TB story
     * of the jaccard join unchanged. */
   def containmentJoinExact(docs: DataFrame, idCol: String, textCol: String,
-                           thetaNum: Int, thetaDen: Int,
-                           bitmap: Option[Boolean] = None): DataFrame = {
+                           thetaNum: Int, thetaDen: Int): DataFrame = {
     require(thetaNum > 0 && thetaDen > 0 && thetaNum <= thetaDen,
       s"theta must be a rational in (0,1], got $thetaNum/$thetaDen")
     val par = docs.sparkSession.sparkContext.defaultParallelism
@@ -1896,7 +1887,7 @@ object Dedup {
     var toFree = Seq(reps)
     // dense-vocab corpora take the popcount join (bitmapMasks doc) —
     // same ordered-pair gate den·i ≥ num·|A|, zero pair-stream exchanges
-    val repPairs = bitmapMasks(reps, bitmap) match {
+    val repPairs = bitmapMasks(reps) match {
       case Some(m) => bitmapPairs(m, thetaNum, thetaDen, containment = true)
       case None =>
         val sorted = jaccardOrderedPrefix(reps, thetaNum, thetaDen)
@@ -1983,8 +1974,7 @@ object Dedup {
     * match always meets). */
   def containmentDropAgainst(reference: DataFrame, incoming: DataFrame,
                              idCol: String, textCol: String,
-                             thetaNum: Int, thetaDen: Int,
-                             bitmap: Option[Boolean] = None): DataFrame = {
+                             thetaNum: Int, thetaDen: Int): DataFrame = {
     require(thetaNum > 0 && thetaDen > 0 && thetaNum <= thetaDen,
       s"theta must be a rational in (0,1], got $thetaNum/$thetaDen")
     val par = incoming.sparkSession.sparkContext.defaultParallelism
@@ -1995,8 +1985,7 @@ object Dedup {
     var toFree = Seq(reps)
     // dense-vocab corpora take the cross-corpus popcount join
     // (bitmapMasks doc); the drop stays decided at REP level
-    val droppedReps = (bitmapMasks(reps, bitmap,
-        carryCols = Seq("__corp")) match {
+    val droppedReps = (bitmapMasks(reps, carryCols = Seq("__corp")) match {
       case Some(m) =>
         bitmapPairsCross(m, thetaNum, thetaDen, containment = true)
       case None =>

@@ -109,15 +109,15 @@ object Graph {
     * [[itemPairs]] stream (one exchange, per-group-unique pairs so no
     * dedup), item supports from one item-keyed countDistinct, the basket
     * count a one-row broadcast scalar. The two item-support lookups
-    * BROADCAST by default (the item side is catalog-dimension-sized);
-    * `broadcastSupport = false` keeps a shuffled-hash path for catalogs
-    * that outgrow a broadcast at 100× SF — the pair stream exchanges on
-    * the item key it already carries, no sort of either side
+    * BROADCAST while [[resolveBroadcast]] passes (the item side is
+    * catalog-dimension-sized); past the limit a shuffled-hash path
+    * serves catalogs that outgrow a broadcast at 100× SF — the pair
+    * stream exchanges on the item key it already carries, no sort of
+    * either side
     * (spec-pinned in PlanShapeSpec). Ratios are exact-integer-valued
     * double divisions, rounded once — cross-engine stable. */
   def assocRules(items: DataFrame, orderCol: String, itemCol: String,
-                 topK: Int,
-                 broadcastSupport: Option[Boolean] = None): DataFrame = {
+                 topK: Int): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val li = items.select(col(orderCol), col(itemCol))
     val sab = itemPairs(li, orderCol, itemCol)
@@ -127,7 +127,7 @@ object Graph {
       .agg(countDistinct(col(orderCol)).as("__s"))
     val nb = li.agg(countDistinct(col(orderCol)).as("__N"))
     // item-support side is bounded by the distinct-item projection
-    val bcast = resolveBroadcast(broadcastSupport, sa)
+    val bcast = resolveBroadcast(sa)
     val side = (d: DataFrame) =>
       if (bcast) broadcast(d) else d.hint("shuffle_hash")
     sab
@@ -187,7 +187,7 @@ object Graph {
     val longBfsIds = pairs.schema(uCol).dataType ==
       org.apache.spark.sql.types.LongType &&
       pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (longBfsIds && resolveBroadcast(None, pairs)) {
+    if (longBfsIds && resolveBroadcast(pairs)) {
       // DRIVER-RESIDENT BFS (the multiSourceBfs discipline, one source):
       // the size gate says the pair stream fits driver memory — one
       // collect, one CSR walk from the minimum id, natural early exit
@@ -460,7 +460,7 @@ object Graph {
     val longPrIds = pairs.schema(uCol).dataType ==
       org.apache.spark.sql.types.LongType &&
       pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (longPrIds && resolveBroadcast(None, pairs)) {
+    if (longPrIds && resolveBroadcast(pairs)) {
       // DRIVER-RESIDENT rounds (the kcorePeel discipline): the size gate
       // says the pair stream fits driver memory — one collect, the exact
       // integer recurrence over the deduped CSR. The distributed chain
@@ -533,7 +533,7 @@ object Graph {
     val longPprIds = pairs.schema(uCol).dataType ==
       org.apache.spark.sql.types.LongType &&
       pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (longPprIds && resolveBroadcast(None, pairs)) {
+    if (longPprIds && resolveBroadcast(pairs)) {
       // DRIVER-RESIDENT rounds (the pagerankUndirected tier with the PPR
       // restart vector: seeds = nSeeds smallest ids = first indices).
       val sess = pairs.sparkSession
@@ -621,8 +621,7 @@ object Graph {
     * fixed-shape chain, one action, cleanup in finally
     * ([[pagerankUndirected]] discipline). */
   def hitsBipartite(edges: DataFrame, leftCol: String, rightCol: String,
-                    iters: Int, topK: Int,
-                    broadcastScores: Option[Boolean] = None): DataFrame = {
+                    iters: Int, topK: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val raw = edges.select(col(leftCol).cast("long").as("__c"),
@@ -635,13 +634,12 @@ object Graph {
     // the single consumer re-exchanges the checkpointed blocks in-plan
     // instead of paying a second materialization barrier.
     val ep = raw.repartition(col("__p")).distinct().ckpt()
-    if (resolveBroadcast(broadcastScores, ep)) {
+    if (resolveBroadcast(ep)) {
       // FULLY driver-resident recurrence (the kcorePeel discipline): the
-      // same materialized-bytes gate that would have broadcast the score
-      // frames says the DISTINCT pair list itself fits driver memory —
-      // collect the checkpointed blocks once and run the exact integer
-      // half-steps as primitive folds (jobs 8 → 3). The halved broadcast
-      // chain below stays the spec-pinned twin past broadcast range.
+      // materialized-bytes gate says the DISTINCT pair list fits driver
+      // memory — collect the checkpointed blocks once and run the exact
+      // integer half-steps as primitive folds (jobs 8 → 3). The
+      // co-partitioned chain below stays the spec-pinned twin.
       val sess = edges.sparkSession
       val rawP =
         try ep.select(col("__c"), col("__p")).collect2
@@ -695,15 +693,12 @@ object Graph {
             org.apache.spark.sql.Row(p, s) }).asJava, outSchema)
     }
     val ecPlan = ep.repartition(col("__c"))
-    // the __c-keyed copy serves one half-step per round from round 2 on
-    // (iters − 1 uses in either path: the broadcast path's h-groupBy, or
-    // the shuffle path's a-join), so its materialization BARRIER only
-    // pays for itself at ≥ 2 uses — at iters = 2 the single consumer
-    // re-exchanges the checkpointed ep blocks inside its own job instead
-    // (same exchange volume, one less job barrier; measured 9 → 7 jobs)
+    // the __c-keyed copy serves the a-join of every round from round 2
+    // on (iters − 1 uses), so its materialization BARRIER only pays for
+    // itself at ≥ 2 uses — at iters = 2 the single consumer re-exchanges
+    // the checkpointed ep blocks inside its own job instead (same
+    // exchange volume, one less job barrier; measured 9 → 7 jobs)
     val ec = if (iters >= 3) ecPlan.ckpt() else ecPlan
-    // score frames are node-dimension-sized, bounded by the edge bytes
-    val bScores = resolveBroadcast(broadcastScores, ep)
     val sess = ec.sparkSession
     val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
     val result = try {
@@ -713,34 +708,15 @@ object Graph {
       // The hub half-step is built only where a LATER authority step
       // consumes it (rounds 2..iters) — the returned frame derives from
       // `a` alone, so a trailing h would be dead plan construction.
-      //
-      // HALVED chain (r14 verdict): score frames are node-dimension-
-      // sized, so each half-step BROADCASTS the previous scores into
-      // whichever edge copy is already partitioned on the step's GROUP
-      // key (h groups by __c → rides ec; a groups by __p → rides ep) —
-      // after the two initial materializations no half-step exchanges
-      // the edge stream at all: a round is two riding map+agg stages
-      // plus their two driver broadcast builds, where the old chain
-      // paid two co-partitioned sort-joins + two full-exchange aggs.
-      // `broadcastScores = false` keeps that co-partitioned shuffle
-      // chain as the 100×-scale twin for node dimensions past
-      // broadcast range — spec-pinned equal.
+      // Score frames past the driver tier's range are node-dimension-
+      // sized too, so each half-step joins them co-partitioned against
+      // the edge copy keyed on the join key.
       var a = ep.groupBy(col("__p")).agg(count(lit(1)).cast("bigint").as("__as"))
       (2 to iters).foreach { _ =>
-        val h =
-          if (bScores)
-            ec.join(broadcast(a), "__p").groupBy(col("__c"))
-              .agg(sum(col("__as")).as("__hs"))
-          else
-            ep.join(a, "__p").groupBy(col("__c"))
-              .agg(sum(col("__as")).as("__hs"))
-        a =
-          if (bScores)
-            ep.join(broadcast(h), "__c").groupBy(col("__p"))
-              .agg(sum(col("__hs")).as("__as"))
-          else
-            ec.join(h, "__c").groupBy(col("__p"))
-              .agg(sum(col("__hs")).as("__as"))
+        val h = ep.join(a, "__p").groupBy(col("__c"))
+          .agg(sum(col("__as")).as("__hs"))
+        a = ec.join(h, "__c").groupBy(col("__p"))
+          .agg(sum(col("__hs")).as("__as"))
       }
       a.orderBy(col("__as").desc, col("__p").asc).limit(topK)
         .select(col("__p").as("part"), col("__as").as("authority"))
@@ -857,14 +833,13 @@ object Graph {
     * contraction fold) stay cluster-side at every level and shrink
     * geometrically with contraction; only node-sized state (pointer
     * table, community labels, the original→community mapping) crosses to
-    * the driver, gated by [[resolveBroadcast]] — the `bcastState = false`
+    * the driver, gated by [[resolveBroadcast]] — past the limit the
     * twin runs the label CC and mapping composition distributed
     * (per-level [[connectedComponentsMinLabel]]), spec-pinned equal. */
   def louvainLevels(wpairs: DataFrame, uCol: String, vCol: String,
-                    wCol: String, maxLevels: Int,
-                    bcastState: Option[Boolean] = None): DataFrame = {
+                    wCol: String, maxLevels: Int): DataFrame = {
     require(maxLevels >= 1, s"maxLevels must be >= 1, got $maxLevels")
-    val bState = resolveBroadcast(bcastState, wpairs, factor = 2)
+    val bState = resolveBroadcast(wpairs, factor = 2)
     val par = wpairs.sparkSession.sparkContext.defaultParallelism
     val sess = wpairs.sparkSession
     val sel = wpairs.select(col(uCol).cast("long").as("__u"),
@@ -1071,8 +1046,8 @@ object Graph {
           moved = p.filter(col("__n") =!= col("__p")).limit(1).count() > 0
           if (moved) {
             val ptr = p.filter(col("__n") =!= col("__p"))
-            val ccPart = connectedComponentsMinLabel(ptr, "__n", "__p",
-              bcastFrontier = Some(false))
+            val ccPart = connectedComponentsBody(ptr, "__n", "__p",
+              maxRounds = 50, bFrontier = false)
             val cc = p.select(col("__n"))
               .join(ccPart.withColumnRenamed("node", "__n"), Seq("__n"), "left")
               .select(col("__n").as("__x"),
@@ -1129,18 +1104,17 @@ object Graph {
     * plain incident-weight sum. All joins against the node-sized
     * community map; one edge-stream pass for W_c, one for strength. */
   def louvainModularity(wpairs: DataFrame, uCol: String, vCol: String,
-                        wCol: String, maxLevels: Int,
-                        bcastState: Option[Boolean] = None): DataFrame = {
+                        wCol: String, maxLevels: Int): DataFrame = {
     // ONE materialization of the (often expensive) upstream pair build:
     // the Louvain loop and both audit folds read these blocks — without
     // it the support aggregation runs twice inside one key
     val e = wpairs.select(col(uCol).cast("long").as("__u"),
       col(vCol).cast("long").as("__v"), col(wCol).cast("bigint").as("__w"))
       .ckpt()
-    val comm = louvainLevels(e, "__u", "__v", "__w", maxLevels, bcastState)
+    val comm = louvainLevels(e, "__u", "__v", "__w", maxLevels)
     // the community map is node-sized: broadcast when the same gate the
     // loop used says it fits, shuffled-hash twin past broadcast range
-    val bComm = resolveBroadcast(bcastState, wpairs)
+    val bComm = resolveBroadcast(wpairs)
     if (bComm) {
       // DRIVER-RESIDENT audit: comm is LocalRelation-backed (the loop's
       // fast path), so every per-community fold — node strength,
@@ -1233,11 +1207,10 @@ object Graph {
     * degree on this transitions graph — barrier savings can't buy back
     * a frontier-squared exchange. */
   def sccPivot(dedges: DataFrame, srcCol: String, dstCol: String,
-               maxDepth: Int,
-               bcastLabels: Option[Boolean] = None): DataFrame = {
+               maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     // the (dir, node)-keyed label table is ≤ 2 × node-sized
-    val bLabels = resolveBroadcast(bcastLabels, dedges, factor = 2)
+    val bLabels = resolveBroadcast(dedges, factor = 2)
     if (bLabels) {
       // FULLY driver-resident FW-BW kernel (the pathCounts discipline):
       // the gate says the directed edge list fits driver memory — one
@@ -1412,16 +1385,15 @@ object Graph {
     * r18: when the node-sized rank state passes [[resolveBroadcast]]
     * (default), the state lives DRIVER-RESIDENT and each iteration is
     * one cluster job with the strength divisor shipped on the frontier
-    * LocalRelation — see the fast-path comment in the body; the
-    * `bcastState = Some(false)` twin keeps this distributed loop. */
+    * LocalRelation — see the fast-path comment in the body; past the
+    * limit the twin keeps this distributed loop. */
   def weightedPersonalizedPagerank(wpairs: DataFrame, uCol: String,
                                    vCol: String, wCol: String,
-                                   iters: Int, nSeeds: Int,
-                                   bcastState: Option[Boolean] = None): DataFrame = {
+                                   iters: Int, nSeeds: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(nSeeds >= 1, s"nSeeds must be >= 1, got $nSeeds")
     // rank + strength state is node-sized — bounded by the pair stream
-    val bState = resolveBroadcast(bcastState, wpairs)
+    val bState = resolveBroadcast(wpairs)
     val par = wpairs.sparkSession.sparkContext.defaultParallelism
     // node ids cast to long up front: the seed collect below reads
     // getLong, and integer-typed caller columns must keep working (the
@@ -1458,7 +1430,7 @@ object Graph {
       //    disappears (the __t contribution fold still exchanges only
       //    node-sized partials).
       // Arithmetic is identical (integer (pr·w) div W per edge, integer
-      // 17·c div 20 damping); the bcastState = false twin keeps the
+      // 17·c div 20 damping); past the limit the twin keeps the
       // all-distributed loop for graphs whose node frame outgrows a
       // broadcast (spec-pinned equal in GraphSpec).
       val e = eBare.ckpt()
@@ -1703,35 +1675,27 @@ object Graph {
       .min(BigInt(Long.MaxValue)).toLong
   }
 
-  /** SIZE-BASED broadcast auto-selection for the graph family (r15
-    * verdict #4): every node-/frontier-/score-sized broadcast in this
-    * file defaults to AUTO — broadcast only while `proxy` (the
-    * operator's already-checkpointed edge frame, whose materialized
+  /** SIZE-BASED tier selection for the graph family (r15 verdict #4):
+    * every node-/frontier-/score-sized broadcast or driver collect in
+    * this file runs only while `proxy` (the operator's edge frame, whose
     * bytes BOUND the node-sized frames derived from it) times `factor`
     * fits `graft.graph.broadcastLimitBytes` (default 256 MB — a frame
-    * every production driver/executor can hold). The caller flag is
-    * kept as the OVERRIDE: `Some(true)` forces the broadcast plan,
-    * `Some(false)` forces the shuffle twin (both spec-pinned equal), so
-    * the 100× path needs no caller knowledge while benchmarks and specs
-    * can still pin either shape. `factor` scales the proxy where the
-    * broadcast side can outgrow the edge frame (multi-source visited
-    * state ≈ nSources × node frame). Operators whose PARTITIONING choice
-    * depends on the flag (the frontier/visited loop family) must resolve
-    * BEFORE anything materializes and therefore ride the optimizer's
-    * stats estimate — coarser than measured bytes, which is exactly why
-    * Some(true/false) stays available as the caller override; operators
-    * that checkpoint first (triangle/support family) resolve from
-    * measured block sizes. */
-  private[graft] def resolveBroadcast(flag: Option[Boolean], proxy: DataFrame,
-                                      factor: Long = 1L): Boolean =
-    flag.getOrElse {
-      val limit = proxy.sparkSession.conf
-        .get("graft.graph.broadcastLimitBytes", (256L << 20).toString).toLong
-      val est = materializedBytes(proxy)
-      if (sys.env.contains("GRAFT_DEBUG_BCAST"))
-        System.err.println(s"[resolveBroadcast] est=$est limit=$limit factor=$factor -> ${est <= limit / math.max(1L, factor)}")
-      est <= limit / math.max(1L, factor)
-    }
+    * every production driver/executor can hold); otherwise the
+    * distributed twin runs. The limit is the only selector: 0 forces the
+    * twin on any non-empty proxy, a very large value lets the tier run
+    * wherever its type preconditions hold. `factor` scales the proxy
+    * where the broadcast side can outgrow the edge frame (multi-source
+    * visited state ≈ nSources × node frame). Operators whose
+    * PARTITIONING choice depends on the result (the frontier/visited
+    * loop family) resolve BEFORE anything materializes and ride the
+    * optimizer's stats estimate; operators that checkpoint first
+    * (triangle/support family) resolve from measured block sizes. */
+  private[graft] def resolveBroadcast(proxy: DataFrame,
+                                      factor: Long = 1L): Boolean = {
+    val limit = proxy.sparkSession.conf
+      .get("graft.graph.broadcastLimitBytes", (256L << 20).toString).toLong
+    materializedBytes(proxy) <= limit / math.max(1L, factor)
+  }
 
   private def orientedAdjacency(pairs: DataFrame, uCol: String,
                                 vCol: String,
@@ -1740,7 +1704,7 @@ object Graph {
     // co-located by the CONTRIBUTION TARGET — the per-round candidate
     // fold groupBy(__n = __t) then rides this partitioning through the
     // alias and the whole round is exchange-free. Frontier-shuffle loops
-    // (bcastFrontier = false) want __s so the delta equi-join is
+    // (the past-the-limit twins) want __s so the delta equi-join is
     // co-located instead.
     val key = if (partitionByTarget) "__t" else "__s"
     pairs.select(explode(array(
@@ -1778,14 +1742,13 @@ object Graph {
     * 41 M-row generate/probe stages were the whole cost. All-integer →
     * bit-identical cross-run/partitioning/engine; the DuckDB oracle
     * replays the same triangle set as the portable wedge/close SQL.
-    * `broadcastAdj = false` swaps the broadcasts for node-keyed shuffle
-    * joins — the billion-edge cluster path where deg/adjacency outgrow
+    * Past the [[resolveBroadcast]] limit the broadcasts become node-keyed
+    * shuffle joins — the billion-edge cluster path where deg/adjacency outgrow
     * the driver (same semantics, spec-pinned). */
-  def triangleCount(edges: DataFrame, uCol: String, vCol: String,
-                    broadcastAdj: Option[Boolean] = None): DataFrame = {
+  def triangleCount(edges: DataFrame, uCol: String, vCol: String): DataFrame = {
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
-    val result = triangleBody(e, resolveBroadcast(broadcastAdj, e)).ckpt()
+    val result = triangleBody(e, resolveBroadcast(e)).ckpt()
     Dedup.freeCheckpoints(e)
     result
   }
@@ -1807,11 +1770,11 @@ object Graph {
     * the only float op, over integer-derived operands (identical IEEE
     * both engines; round(6) is belt). Returns
     * (node, n_tri, degree, clustering). */
-  def clusteringCoefficients(edges: DataFrame, uCol: String, vCol: String,
-                             broadcastAdj: Option[Boolean] = None): DataFrame = {
+  def clusteringCoefficients(edges: DataFrame, uCol: String,
+                             vCol: String): DataFrame = {
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
-    val result = clusteringBody(e, resolveBroadcast(broadcastAdj, e)).ckpt()
+    val result = clusteringBody(e, resolveBroadcast(e)).ckpt()
     Dedup.freeCheckpoints(e)
     result
   }
@@ -1849,11 +1812,11 @@ object Graph {
     * exchanges are the node-sized degree aggregate and the tiny final
     * group-by, where the portable SQL twin shuffle-joins the 2|E| end
     * stream against the deg CTE twice. */
-  def neighborDegreeProfile(edges: DataFrame, uCol: String, vCol: String,
-                            broadcastDeg: Option[Boolean] = None): DataFrame = {
+  def neighborDegreeProfile(edges: DataFrame, uCol: String,
+                            vCol: String): DataFrame = {
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
-    val result = neighborDegreeBody(e, resolveBroadcast(broadcastDeg, e)).ckpt()
+    val result = neighborDegreeBody(e, resolveBroadcast(e)).ckpt()
     Dedup.freeCheckpoints(e)
     result
   }
@@ -1893,11 +1856,10 @@ object Graph {
     * regression-moments recipe on the degree stream). Returns one row
     * (n_ends, assortativity). Degenerate variance (regular graph) →
     * NULL, both engines. */
-  def assortativity(edges: DataFrame, uCol: String, vCol: String,
-                    broadcastDeg: Option[Boolean] = None): DataFrame = {
+  def assortativity(edges: DataFrame, uCol: String, vCol: String): DataFrame = {
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
-    val result = endDegrees(e, resolveBroadcast(broadcastDeg, e))
+    val result = endDegrees(e, resolveBroadcast(e))
       .agg(count(lit(1)).cast("bigint").as("n"),
         sum(col("__da")).cast("bigint").as("sx"),
         sum(col("__da") * col("__db")).cast("bigint").as("sxy"),
@@ -1956,10 +1918,10 @@ object Graph {
     * in the row (the r11 edge-set form paid a pair-distinct exchange, an
     * edge-frame checkpoint, and TWO degree broadcasts). Identical
     * results (spec-pinned against [[neighborDegreeProfile]]). */
-  def neighborDegreeFromPairs(pairs: DataFrame, uCol: String, vCol: String,
-                              broadcastDeg: Option[Boolean] = None): DataFrame = {
+  def neighborDegreeFromPairs(pairs: DataFrame, uCol: String,
+                              vCol: String): DataFrame = {
     val adj = adjFromPairs(pairs, uCol, vCol)
-    val bcast = resolveBroadcast(broadcastDeg, adj)
+    val bcast = resolveBroadcast(adj)
     val hint = (d: DataFrame) => if (bcast) broadcast(d) else d
     val deg = adj.select(col("__n").as("__m"), col("__d").as("__db"))
     val result = adj
@@ -1979,10 +1941,10 @@ object Graph {
     * (so the moments match the edge-set form integer for integer,
     * spec-pinned), with one broadcast degree lookup instead of two and
     * no pair-distinct exchange or edge checkpoint. */
-  def assortativityFromPairs(pairs: DataFrame, uCol: String, vCol: String,
-                             broadcastDeg: Option[Boolean] = None): DataFrame = {
+  def assortativityFromPairs(pairs: DataFrame, uCol: String,
+                             vCol: String): DataFrame = {
     val adj = adjFromPairs(pairs, uCol, vCol)
-    val bcast = resolveBroadcast(broadcastDeg, adj)
+    val bcast = resolveBroadcast(adj)
     val hint = (d: DataFrame) => if (bcast) broadcast(d) else d
     val deg = adj.select(col("__n").as("__m"), col("__d").as("__db"))
     val result = adj
@@ -2025,11 +1987,10 @@ object Graph {
     * `localCheckpoint(eager = false)` truncates the LOGICAL plan
     * too. */
   def labelPropagate(pairs: DataFrame, uCol: String, vCol: String,
-                     rounds: Int,
-                     bcastFrontier: Option[Boolean] = None): DataFrame = {
+                     rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // frontier/label frames are node-sized — bounded by the pair stream
-    val bFrontier = resolveBroadcast(bcastFrontier, pairs)
+    val bFrontier = resolveBroadcast(pairs)
     val longLpIds = pairs.schema(uCol).dataType ==
       org.apache.spark.sql.types.LongType &&
       pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
@@ -2183,10 +2144,17 @@ object Graph {
     * (same contract, spec-pinned equal). Throws after `maxRounds`
     * instead of returning a half-converged labeling. */
   def connectedComponentsMinLabel(edges: DataFrame, uCol: String, vCol: String,
-                                  maxRounds: Int = 50,
-                                  bcastFrontier: Option[Boolean] = None): DataFrame = {
+                                  maxRounds: Int = 50): DataFrame =
     // frontier/label frames are node-sized — bounded by the pair stream
-    val bFrontier = resolveBroadcast(bcastFrontier, edges)
+    connectedComponentsBody(edges, uCol, vCol, maxRounds,
+      resolveBroadcast(edges))
+
+  /** [[connectedComponentsMinLabel]] with the tier decision made by the
+    * caller: Louvain's all-distributed branch runs its per-level CC as
+    * the twin (`bFrontier = false`). */
+  private def connectedComponentsBody(edges: DataFrame, uCol: String,
+                                      vCol: String, maxRounds: Int,
+                                      bFrontier: Boolean): DataFrame = {
     val longCcIds = edges.schema(uCol).dataType ==
       org.apache.spark.sql.types.LongType &&
       edges.schema(vCol).dataType == org.apache.spark.sql.types.LongType
@@ -2278,12 +2246,11 @@ object Graph {
     * cross-engine; the DuckDB twin is the depth-bounded recursive UNION
     * carrying the src column. */
   def multiSourceBfs(pairs: DataFrame, uCol: String, vCol: String,
-                     nSources: Int, maxDepth: Int,
-                     bcastState: Option[Boolean] = None): DataFrame = {
+                     nSources: Int, maxDepth: Int): DataFrame = {
     require(nSources >= 1, s"nSources must be >= 1, got $nSources")
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
     // the (src, node) level table is ≤ nSources × node-sized
-    val bState = resolveBroadcast(bcastState, pairs, factor = nSources)
+    val bState = resolveBroadcast(pairs, factor = nSources)
     val longMsIds = pairs.schema(uCol).dataType ==
       org.apache.spark.sql.types.LongType &&
       pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
@@ -2354,7 +2321,7 @@ object Graph {
       // frontier-neighborhood size) with first-discovery-wins ≡
       // min-level merge as a driver map lookup, and the loop EXITS as
       // soon as a frontier comes back empty (this graph family
-      // saturates well inside the depth cap). `bcastState = false`
+      // saturates well inside the depth cap). Past the limit the twin
       // keeps the all-distributed loop for nSources × |V| past the
       // broadcast limit (spec-pinned equal in GraphSpec).
       try {
@@ -2474,11 +2441,10 @@ object Graph {
     * stream instead of two. */
   def pathCounts(pairs: DataFrame, uCol: String, vCol: String,
                  nSources: Int, maxDepth: Int,
-                 dedupEdges: Boolean = false,
-                 bcastVisited: Option[Boolean] = None): DataFrame = {
+                 dedupEdges: Boolean = false): DataFrame = {
     require(nSources >= 1, s"nSources must be >= 1, got $nSources")
     // visited state is ~ nSources x the node frame — scale the proxy
-    val bVisited = resolveBroadcast(bcastVisited, pairs, factor = nSources)
+    val bVisited = resolveBroadcast(pairs, factor = nSources)
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
     val longPcIds = pairs.schema(uCol).dataType ==
       org.apache.spark.sql.types.LongType &&
@@ -2748,11 +2714,10 @@ object Graph {
   def betweennessSampled(pairs: DataFrame, uCol: String, vCol: String,
                          nSources: Int, maxDepth: Int,
                          dedupEdges: Boolean = false,
-                         scaleBits: Int = 20,
-                         bcastDelta: Option[Boolean] = None): DataFrame = {
+                         scaleBits: Int = 20): DataFrame = {
     require(nSources >= 1, s"nSources must be >= 1, got $nSources")
     // per-level state is ~ nSources x the node frame — scale the proxy
-    val bDelta = resolveBroadcast(bcastDelta, pairs, factor = nSources)
+    val bDelta = resolveBroadcast(pairs, factor = nSources)
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     require(scaleBits >= 1 && scaleBits <= 40,
       s"scaleBits must be in [1, 40], got $scaleBits")
@@ -3005,11 +2970,10 @@ object Graph {
     * chained relaxations). Both orientations expand in-row with the
     * weight riding along. */
   def ssspBounded(wedges: DataFrame, uCol: String, vCol: String,
-                  wCol: String, rounds: Int,
-                  bcastFrontier: Option[Boolean] = None): DataFrame = {
+                  wCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // frontier/dist frames are node-sized — bounded by the pair stream
-    val bFrontier = resolveBroadcast(bcastFrontier, wedges)
+    val bFrontier = resolveBroadcast(wedges)
     val longIds = wedges.schema(uCol).dataType ==
       org.apache.spark.sql.types.LongType &&
       wedges.schema(vCol).dataType == org.apache.spark.sql.types.LongType
@@ -3096,8 +3060,8 @@ object Graph {
       // a LocalRelation broadcast (built driver-side, no job). The heavy
       // stream — edges and the candidate fold — never leaves the
       // cluster; only the node-sized fold RESULT crosses. Arithmetic is
-      // identical (integer min over dist + w), and the
-      // `bcastFrontier = false` twin below keeps the all-distributed
+      // identical (integer min over dist + w), and past the limit the
+      // twin below keeps the all-distributed
       // loop for graphs whose node frame outgrows a broadcast
       // (spec-pinned equal in GraphSpec).
       try {
@@ -3213,14 +3177,13 @@ object Graph {
     * THREE edges each collect one support count from the
     * triangle-corner stream (≈|△|·3 rows, never wedge-sized). The
     * support fold is edge-keyed and broadcast back over the edge list
-    * (support frame ≤ |E|); `broadcastAdj = false` keeps the shuffle
-    * path throughout. Support is what k-truss peels on and what
+    * (support frame ≤ |E|); past the [[resolveBroadcast]] limit the
+    * shuffle path runs throughout. Support is what k-truss peels on and what
     * common-neighbor link prediction ranks by. */
-  def edgeSupport(edges: DataFrame, uCol: String, vCol: String,
-                  broadcastAdj: Option[Boolean] = None): DataFrame = {
+  def edgeSupport(edges: DataFrame, uCol: String, vCol: String): DataFrame = {
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
-    val bAdj = resolveBroadcast(broadcastAdj, e)
+    val bAdj = resolveBroadcast(e)
     val result = edgeSupportBody(e, bAdj).ckpt()
     Dedup.freeCheckpoints(e)
     result
@@ -3401,7 +3364,7 @@ object Graph {
     * item dictionary is sorted, so index order ≡ id order everywhere. */
   private[graft] final class BasketIndex(
       val itemIds: Array[Long], val nItems: Int,
-      val entries: Array[Long], val nEntries: Int, val nGroups: Int) {
+      val entries: Array[Long], val nEntries: Int) {
     /** In how many groups does each item appear (entries are distinct). */
     def itemSupports: Array[Long] = {
       val np = new Array[Long](nItems)
@@ -3459,35 +3422,31 @@ object Graph {
     * (executeTake runs partitions in waves) and falls back to the
     * caller's distributed twin having moved at most the broadcast-class
     * byte budget once. `pairBound` additionally declines when the
-    * quadratic pair expansion would exceed `graft.graph.pairStreamLimit`
-    * (callers that expand pairs). `flag`: Some(false) forces the
-    * distributed twin, Some(true) forces the tier and THROWS past either
-    * gate (spec/audit only), None auto-gates. Non-BIGINT id columns take
-    * the distributed twin (the packed-index arithmetic is 64-bit). */
+    * quadratic pair expansion would exceed `graft.graph.pairStreamLimit`,
+    * clamped to the one array [[BasketIndex.expandPairs]] can fill
+    * (callers that expand pairs). NULL semantics follow the twin's
+    * sorted sets: NULL items are skipped; a NULL group declines, since
+    * the twin keeps it as its own basket and the packed index cannot
+    * tell it from group 0. Non-BIGINT id columns take the distributed
+    * twin (the packed-index arithmetic is 64-bit). */
   private[graft] def collectBaskets(items: DataFrame, gCol: String,
-                                    iCol: String, flag: Option[Boolean],
-                                    pairBound: Boolean = false)
+                                    iCol: String, pairBound: Boolean = false)
       : Option[BasketIndex] = {
-    if (flag.contains(false)) return None
     if (items.schema(gCol).dataType != LongType ||
-        items.schema(iCol).dataType != LongType) {
-      require(!flag.contains(true),
-        s"basket driver tier forced but ($gCol, $iCol) are not BIGINT")
-      return None
-    }
+        items.schema(iCol).dataType != LongType) return None
     val sess = items.sparkSession
     val capRows = sess.conf
       .get("graft.graph.broadcastLimitBytes", (256L << 20).toString).toLong / 16
     val cap = math.min(capRows, (Int.MaxValue - 8).toLong).toInt
-    val rows = items.select(col(gCol), col(iCol)).limit(cap + 1).collect2
-    if (rows.length > cap) {
-      require(!flag.contains(true),
-        s"basket driver tier forced but the stream exceeds $cap rows")
-      return None
+    val raw = items.select(col(gCol), col(iCol)).limit(cap + 1)
+      .queryExecution.executedPlan.executeCollect()
+    if (raw.length > cap || raw.exists(_.isNullAt(0))) return None
+    val rows = raw.collect {
+      case r if !r.isNullAt(1) => (r.getLong(0), r.getLong(1))
     }
     if (rows.isEmpty)
       return Some(new BasketIndex(new Array[Long](0), 0,
-        new Array[Long](0), 0, 0))
+        new Array[Long](0), 0))
     val gIds = rows.map(_._1)
     val nG = sortDedup(gIds)
     val itemIds = rows.map(_._2)
@@ -3502,20 +3461,10 @@ object Graph {
       entries(i) = (g << 32) | it
       i += 1
     }
-    val nE = sortDedup(entries)
-    val bi = new BasketIndex(itemIds, nI, entries, nE, nG)
-    if (pairBound) {
-      val limit = sess.conf
-        .get("graft.graph.pairStreamLimit", (1L << 25).toString).toLong
-      val exp = bi.pairExpansionCount
-      if (exp > limit) {
-        require(!flag.contains(true),
-          s"basket driver tier forced but the pair expansion $exp " +
-            s"exceeds $limit")
-        return None
-      }
-    }
-    Some(bi)
+    val bi = new BasketIndex(itemIds, nI, entries, sortDedup(entries))
+    val pairLimit = math.min(Int.MaxValue.toLong - 8, sess.conf
+      .get("graft.graph.pairStreamLimit", (1L << 25).toString).toLong)
+    if (pairBound && bi.pairExpansionCount > pairLimit) None else Some(bi)
   }
 
   /** Distinct co-occurrence edges + supports off the SORTED pair stream:
@@ -3674,13 +3623,12 @@ object Graph {
     * `distEdges` thunk builds the UNCHANGED distributed derivation and
     * the operator's existing distributed/driver paths take over — the
     * at-scale plan is untouched (spec-pinned twin equality on random
-    * basket streams + forced-path flags). ------------------------------ */
+    * basket streams, the twin pinned by zero size limits). ------------ */
 
   /** [[triangleCount]] off the raw basket stream. */
   def triangleCountFromBaskets(items: DataFrame, gCol: String, iCol: String,
-                               distEdges: => DataFrame,
-                               flag: Option[Boolean] = None): DataFrame =
-    collectBaskets(items, gCol, iCol, flag, pairBound = true) match {
+                               distEdges: => DataFrame): DataFrame =
+    collectBaskets(items, gCol, iCol, pairBound = true) match {
       case Some(bi) =>
         val (eu, ev, _) = pairRuns(bi.expandPairs())
         val nTri =
@@ -3695,9 +3643,8 @@ object Graph {
     * counts fold from the per-edge supports: every triangle through n has
     * exactly two n-incident edges, so tri(n) = Σ_{e∋n} sup(e) / 2. */
   def clusteringFromBaskets(items: DataFrame, gCol: String, iCol: String,
-                            distEdges: => DataFrame,
-                            flag: Option[Boolean] = None): DataFrame =
-    collectBaskets(items, gCol, iCol, flag, pairBound = true) match {
+                            distEdges: => DataFrame): DataFrame =
+    collectBaskets(items, gCol, iCol, pairBound = true) match {
       case Some(bi) =>
         val (eu, ev, _) = pairRuns(bi.expandPairs())
         val sup =
@@ -3735,9 +3682,8 @@ object Graph {
 
   /** [[transitivitySummary]] off the raw basket stream. */
   def transitivityFromBaskets(items: DataFrame, gCol: String, iCol: String,
-                              distEdges: => DataFrame,
-                              flag: Option[Boolean] = None): DataFrame =
-    collectBaskets(items, gCol, iCol, flag, pairBound = true) match {
+                              distEdges: => DataFrame): DataFrame =
+    collectBaskets(items, gCol, iCol, pairBound = true) match {
       case Some(bi) =>
         val (eu, ev, _) = pairRuns(bi.expandPairs())
         val sup =
@@ -3770,10 +3716,9 @@ object Graph {
     * candidate set — the fix for the r18 net-negative full-driver
     * ranking). */
   def edgeJaccardTopKFromBaskets(items: DataFrame, gCol: String, iCol: String,
-                                 k: Int, distEdges: => DataFrame,
-                                 flag: Option[Boolean] = None): DataFrame = {
+                                 k: Int, distEdges: => DataFrame): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    collectBaskets(items, gCol, iCol, flag, pairBound = true) match {
+    collectBaskets(items, gCol, iCol, pairBound = true) match {
       case Some(bi) =>
         val (eu, ev, _) = pairRuns(bi.expandPairs())
         val schema = StructType(Seq(
@@ -3822,10 +3767,9 @@ object Graph {
     * [[itemPairs]] expansion, pair aggregate, two broadcast support
     * lookups, TakeOrderedAndProject). */
   def bipartiteProjectionTopK(items: DataFrame, gCol: String, iCol: String,
-                              topK: Int,
-                              flag: Option[Boolean] = None): DataFrame = {
+                              topK: Int): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    collectBaskets(items, gCol, iCol, flag, pairBound = true) match {
+    collectBaskets(items, gCol, iCol, pairBound = true) match {
       case Some(bi) =>
         val np = bi.itemSupports
         val keys = bi.expandPairs()
@@ -3885,91 +3829,75 @@ object Graph {
     }
   }
 
+  /** The driver truss peel shared by [[trussPeel]] and
+    * [[trussPeelFromBaskets]]: `rounds` support passes over the
+    * index-space edge list (eu, ev) on `nNodes` nodes, each keeping the
+    * edges with support ≥ k − 2, then the (support, n_edges) histogram
+    * of the survivors. */
+  private def driverTrussPeel(sess: SparkSession, eu0: Array[Int],
+                              ev0: Array[Int], nNodes: Int, k: Int,
+                              rounds: Int): DataFrame = {
+    var eu = eu0
+    var ev = ev0
+    var r0 = 0
+    while (r0 < rounds) {
+      val sup = driverEdgeSupport(eu, ev, nNodes)
+      val keep = sup.indices.filter(i => sup(i) >= k - 2).toArray
+      eu = keep.map(eu)
+      ev = keep.map(ev)
+      r0 += 1
+    }
+    val hist = scala.collection.mutable.HashMap.empty[Long, Long]
+    driverEdgeSupport(eu, ev, nNodes).foreach { s =>
+      hist(s) = hist.getOrElse(s, 0L) + 1L }
+    localDf(sess, StructType(Seq(
+      StructField("support", LongType, nullable = false),
+      StructField("n_edges", LongType, nullable = false))),
+      hist.toSeq.map { case (s, c) => Row(s, c) })
+  }
+
   /** [[trussPeel]] off the raw basket stream: all rounds+1 support
     * passes run on the striped kernel over the driver-derived edge list. */
   def trussPeelFromBaskets(items: DataFrame, gCol: String, iCol: String,
-                           k: Int, rounds: Int, distEdges: => DataFrame,
-                           flag: Option[Boolean] = None): DataFrame = {
+                           k: Int, rounds: Int,
+                           distEdges: => DataFrame): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    collectBaskets(items, gCol, iCol, flag, pairBound = true) match {
+    collectBaskets(items, gCol, iCol, pairBound = true) match {
       case Some(bi) =>
-        var (eu, ev, _) = pairRuns(bi.expandPairs())
-        var r0 = 0
-        while (r0 < rounds) {
-          val sup = driverEdgeSupport(eu, ev, bi.nItems)
-          val keep = sup.indices.filter(i => sup(i) >= k - 2).toArray
-          eu = keep.map(eu)
-          ev = keep.map(ev)
-          r0 += 1
-        }
-        val hist = scala.collection.mutable.HashMap.empty[Long, Long]
-        driverEdgeSupport(eu, ev, bi.nItems).foreach { s =>
-          hist(s) = hist.getOrElse(s, 0L) + 1L }
-        localDf(items.sparkSession, StructType(Seq(
-          StructField("support", LongType, nullable = false),
-          StructField("n_edges", LongType, nullable = false))),
-          hist.toSeq.map { case (s, c) => Row(s, c) })
+        val (eu, ev, _) = pairRuns(bi.expandPairs())
+        driverTrussPeel(items.sparkSession, eu, ev, bi.nItems, k, rounds)
       case None => trussPeel(distEdges, "u", "v", k, rounds)
     }
   }
 
   def trussPeel(edges: DataFrame, uCol: String, vCol: String,
-                k: Int, rounds: Int,
-                broadcastAdj: Option[Boolean] = None): DataFrame = {
+                k: Int, rounds: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val longTrussIds = edges.schema(uCol).dataType ==
       org.apache.spark.sql.types.LongType &&
       edges.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (longTrussIds && resolveBroadcast(broadcastAdj, edges)) {
+    if (longTrussIds && resolveBroadcast(edges)) {
       // DRIVER-RESIDENT peel (the kcorePeel discipline): the gate says
       // the edge list fits driver memory, so ALL rounds+1 support passes
       // run as [[driverEdgeSupport]] folds over one collect — no
       // adjacency aggregation, no triangle-corner exchange, no
       // per-round checkpoint barrier. The distributed loop below stays
       // the spec-pinned twin for edge lists past broadcast range.
-      val sess = edges.sparkSession
       val rows = edges.select(col(uCol), col(vCol))
         .collect2
       val ids = rows.flatMap(p => Array(p._1, p._2))
-      java.util.Arrays.sort(ids)
-      var n0 = 0
-      var ri = 0
-      while (ri < ids.length) {
-        if (n0 == 0 || ids(ri) != ids(n0 - 1)) { ids(n0) = ids(ri); n0 += 1 }
-        ri += 1
-      }
+      val n0 = sortDedup(ids)
       def lk(x: Long): Int =
         java.util.Arrays.binarySearch(ids, 0, n0, x)
-      var eu = rows.map(p => lk(p._1))
-      var ev = rows.map(p => lk(p._2))
-      var r0 = 0
-      while (r0 < rounds) {
-        val sup = driverEdgeSupport(eu, ev, n0)
-        val keep = sup.indices.filter(i => sup(i) >= k - 2).toArray
-        eu = keep.map(eu)
-        ev = keep.map(ev)
-        r0 += 1
-      }
-      val hist = scala.collection.mutable.HashMap.empty[Long, Long]
-      driverEdgeSupport(eu, ev, n0).foreach { s =>
-        hist(s) = hist.getOrElse(s, 0L) + 1L }
-      val lng = org.apache.spark.sql.types.LongType
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(
-          hist.toSeq.map { case (s, c) =>
-            org.apache.spark.sql.Row(s, c) }).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("support", lng,
-            nullable = false),
-          org.apache.spark.sql.types.StructField("n_edges", lng,
-            nullable = false))))
+      return driverTrussPeel(edges.sparkSession, rows.map(p => lk(p._1)),
+        rows.map(p => lk(p._2)), n0, k, rounds)
     }
     var e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
     // resolved AFTER the checkpoint so the estimate reads measured bytes
-    val bAdj = resolveBroadcast(broadcastAdj, e)
+    val bAdj = resolveBroadcast(e)
     val spent = scala.collection.mutable.ArrayBuffer(e)
     var r = 0
     while (r < rounds) {
@@ -3995,12 +3923,12 @@ object Graph {
     * (u, v), so the top-k cut is deterministic. Degrees broadcast
     * (node-sized). */
   def edgeJaccardTopK(edges: DataFrame, uCol: String, vCol: String,
-                      k: Int, broadcastAdj: Option[Boolean] = None): DataFrame = {
+                      k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
     // resolved AFTER the checkpoint so the estimate reads measured bytes
-    val bAdj = resolveBroadcast(broadcastAdj, e)
+    val bAdj = resolveBroadcast(e)
     val hint = (d: DataFrame) => if (bAdj) broadcast(d) else d
     val deg = degreeTable(e)
     val result = edgeSupportBody(e, bAdj)
@@ -4024,11 +3952,11 @@ object Graph {
     * (shared checkpointed edge frame — the pair build runs once), and
     * transitivity = 3·△/wedges as one IEEE division over the two exact
     * integers (NULL on a wedge-free graph, both engines). */
-  def transitivitySummary(edges: DataFrame, uCol: String, vCol: String,
-                          broadcastAdj: Option[Boolean] = None): DataFrame = {
+  def transitivitySummary(edges: DataFrame, uCol: String,
+                          vCol: String): DataFrame = {
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
-    val bAdj = resolveBroadcast(broadcastAdj, e)
+    val bAdj = resolveBroadcast(e)
     val wedges = degreeTable(e).agg(
       coalesce(sum(expr("d * (d - 1) div 2")), lit(0L))
         .cast("bigint").as("n_wedges"))
@@ -4107,18 +4035,17 @@ object Graph {
     * per round (the r11 shape paid 4 driver round-trips for 1.8 s of
     * compute). Survivor sets are node-sized, so both per-round semi
     * joins are `broadcast()` hash joins — map-only over the cached edge
-    * blocks; `broadcastKeep = false` keeps a shuffle path for
+    * blocks; past the [[resolveBroadcast]] limit a shuffle path serves
     * billion-node graphs (same semantics, spec-pinned). The chained-CTE
     * SQL form re-inlines every round's subtree ~3× per level in Catalyst
     * (plan grows 3^rounds; measured 12.5 s wall on 1.8 s of compute at
     * sf0.1), which is why the engine side is this loop and only the
     * oracle keeps the unrolled SQL. */
   def kcorePeel(edges: DataFrame, uCol: String, vCol: String,
-                k: Int, rounds: Int,
-                broadcastKeep: Option[Boolean] = None): DataFrame = {
+                k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // dead/survivor node frames — bounded by the pair stream
-    val bKeep = resolveBroadcast(broadcastKeep, edges)
+    val bKeep = resolveBroadcast(edges)
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     if (bKeep) {
       // DRIVER-RESIDENT peel: the same resolveBroadcast gate that would
@@ -4467,9 +4394,8 @@ object Graph {
     * [[resolveBroadcast]] auto-selection as [[edgeSupport]] (stats-based
     * here, nothing is materialized yet), so PlanShapeSpec can pin the
     * size-driven broadcast/shuffle flip on the static plan. */
-  def edgeSupportPlan(edges: DataFrame, uCol: String, vCol: String,
-                      broadcastAdj: Option[Boolean] = None): DataFrame = {
+  def edgeSupportPlan(edges: DataFrame, uCol: String, vCol: String): DataFrame = {
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
-    edgeSupportBody(e, resolveBroadcast(broadcastAdj, e))
+    edgeSupportBody(e, resolveBroadcast(e))
   }
 }

@@ -7,9 +7,22 @@ import org.scalatest.Suite
   * a single test JVM), small parallelism, UTC, AQE on as in production. */
 trait SparkSpec { self: Suite =>
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Runs `body` with the three driver-tier size limits at 0, so every
+    * size gate declines and the distributed twins run (the benchmark's
+    * twin regime); the previous settings are restored afterwards. */
+  def withTwins[T](body: => T): T = {
+    val was = SparkSpec.TierLimits.map(k => k -> spark.conf.getOption(k))
+    SparkSpec.TierLimits.foreach(spark.conf.set(_, "0"))
+    try body
+    finally was.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }
 
 object SparkSpec {
+  val TierLimits = Seq("graft.graph.broadcastLimitBytes",
+    "graft.graph.pairStreamLimit", "graft.dedup.bitmapMaxReps")
+
   lazy val session: SparkSession = LocalTuning(SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4"))

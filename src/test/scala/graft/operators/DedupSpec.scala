@@ -501,9 +501,9 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
         (id, text)
       }
       val df = resolved.toDF("doc_id", "text")
-      val got = Dedup.jaccardJoinExact(df, "doc_id", "text", 7, 10,
-          bitmap = Some(false)) // pin the prefix-filter twin (at-scale path)
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      val got = withTwins( // pin the prefix-filter twin (at-scale path)
+        Dedup.jaccardJoinExact(df, "doc_id", "text", 7, 10)
+          .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
       val sets = resolved.map { case (id, t) =>
         id -> t.toLowerCase.split(" ").filter(_.nonEmpty).toSet
       }.toMap
@@ -555,9 +555,9 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
           vocab(rnd.nextInt(vocab.size))).mkString(" "))
       }
       val df = resolved.toDF("doc_id", "text")
-      val got = Dedup.containmentJoinExact(df, "doc_id", "text", 4, 5,
-          bitmap = Some(false)) // pin the prefix-filter twin
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      val got = withTwins( // pin the prefix-filter twin
+        Dedup.containmentJoinExact(df, "doc_id", "text", 4, 5)
+          .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
       val sets = resolved.map { case (id, t) =>
         id -> t.toLowerCase.split(" ").filter(_.nonEmpty).toSet
       }.toMap
@@ -582,10 +582,11 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
           vocab(rnd.nextInt(vocab.size))).mkString(" "))
       }
       val inc = mk(40); val ref = mk(25).map { case (i, t) => (i + 1000L, t) }
-      val got = Dedup.containmentDropAgainst(
+      val got = withTwins( // prefix twin
+        Dedup.containmentDropAgainst(
           ref.toDF("doc_id", "text"), inc.toDF("doc_id", "text"),
-          "doc_id", "text", 4, 5, bitmap = Some(false)) // prefix twin
-        .as[Long].collect().toSet
+          "doc_id", "text", 4, 5)
+          .as[Long].collect().toSet)
       val tok = (t: String) => t.split(" ").filter(_.nonEmpty).toSet
       val refSets = ref.map(r => tok(r._2))
       val want = inc.collect { case (id, t)
@@ -613,9 +614,9 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       val df = resolved.toDF("doc_id", "text")
       val inc = df.filter($"doc_id" % 3 =!= 0)
       val ref = df.filter($"doc_id" % 3 === 0)
-      val got = Dedup.jaccardJoinAgainst(inc, ref, "doc_id", "text", 7, 10,
-          bitmap = Some(false)) // pin the prefix-filter twin
-        .select("id_in", "id_ref").as[(Long, Long)].collect().toSet
+      val got = withTwins( // pin the prefix-filter twin
+        Dedup.jaccardJoinAgainst(inc, ref, "doc_id", "text", 7, 10)
+          .select("id_in", "id_ref").as[(Long, Long)].collect().toSet)
       val sets = resolved.map { case (id, t) =>
         id -> t.split(" ").filter(_.nonEmpty).toSet
       }.toMap
@@ -699,40 +700,38 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val ref = df.filter($"doc_id" % 3 === 0)
     def rows(d: org.apache.spark.sql.DataFrame): Set[String] =
       d.collect().map(_.toString).toSet
-    def twin(name: String)(
-        f: Option[Boolean] => org.apache.spark.sql.DataFrame): Unit = {
-      val bm = rows(f(Some(true))); val pf = rows(f(Some(false)))
+    // the bitmap gate passes on this dense-vocab corpus, so the default
+    // run below takes the bitmap path and withTwins the prefix twin
+    assert(Dedup.bitmapMasks(Dedup.jaccardReps(df, "doc_id", "text"))
+      .isDefined)
+    def twin(name: String)(f: => org.apache.spark.sql.DataFrame): Unit = {
+      val bm = rows(f); val pf = withTwins(rows(f))
       assert(bm == pf, s"$name: bitmap twin diverged — " +
         s"${bm.diff(pf).size} extra, ${pf.diff(bm).size} missing of ${pf.size}")
       assert(bm.nonEmpty, s"$name: degenerate fixture (no rows)")
     }
-    twin("jaccardJoinExact")(b =>
-      Dedup.jaccardJoinExact(df, "doc_id", "text", 7, 10, bitmap = b))
-    twin("containmentJoinExact")(b =>
-      Dedup.containmentJoinExact(df, "doc_id", "text", 9, 10, bitmap = b))
-    twin("jaccardThresholdSweep")(b =>
-      Dedup.jaccardThresholdSweep(df, "doc_id", "text", Seq(70, 80, 90),
-        bitmap = b))
-    twin("lshRecallSweep")(b =>
+    twin("jaccardJoinExact")(
+      Dedup.jaccardJoinExact(df, "doc_id", "text", 7, 10))
+    twin("containmentJoinExact")(
+      Dedup.containmentJoinExact(df, "doc_id", "text", 9, 10))
+    twin("jaccardThresholdSweep")(
+      Dedup.jaccardThresholdSweep(df, "doc_id", "text", Seq(70, 80, 90)))
+    twin("lshRecallSweep")(
       Dedup.lshRecallSweep(df, "doc_id", "text", seeds = 8,
-        configs = Seq(2, 4), thetaNum = 4, thetaDen = 5, bitmap = b))
-    twin("jaccardJoinAgainst")(b =>
-      Dedup.jaccardJoinAgainst(inc, ref, "doc_id", "text", 7, 10, bitmap = b))
-    twin("containmentDropAgainst")(b =>
-      Dedup.containmentDropAgainst(ref, inc, "doc_id", "text", 4, 5,
-        bitmap = b))
-    // the gate: a 65+-token vocabulary must refuse the forced bitmap path…
+        configs = Seq(2, 4), thetaNum = 4, thetaDen = 5))
+    twin("jaccardJoinAgainst")(
+      Dedup.jaccardJoinAgainst(inc, ref, "doc_id", "text", 7, 10))
+    twin("containmentDropAgainst")(
+      Dedup.containmentDropAgainst(ref, inc, "doc_id", "text", 4, 5))
+    // the gate: a 65+-token vocabulary must refuse the bitmap path…
     val wide = (1L to 30L).map(id =>
       (id, (0 to 70).map(i => s"w$i").drop((id % 5).toInt).mkString(" ")))
       .toDF("doc_id", "text")
-    intercept[IllegalArgumentException] {
-      Dedup.jaccardJoinExact(wide, "doc_id", "text", 4, 5,
-        bitmap = Some(true)).collect()
-    }
-    // …and the AUTO gate must silently take the prefix twin there
+    assert(Dedup.bitmapMasks(Dedup.jaccardReps(wide, "doc_id", "text"))
+      .isEmpty)
+    // …and the default limits must silently take the prefix twin there
     assert(rows(Dedup.jaccardJoinExact(wide, "doc_id", "text", 4, 5)) ==
-      rows(Dedup.jaccardJoinExact(wide, "doc_id", "text", 4, 5,
-        bitmap = Some(false))))
+      withTwins(rows(Dedup.jaccardJoinExact(wide, "doc_id", "text", 4, 5))))
   }
 
   test("prefix + positional filters PRUNE on a Zipfian vocabulary " +

@@ -10,8 +10,8 @@ import graft.SparkSpec
   * the RAW (group, item) stream — duplicates and all — and must return
   * row-for-row (and for the rounded doubles BIT-for-bit) what the
   * distributed basket-fold + edge-derivation pipeline returns. Also pins
-  * the gate fallbacks (row cap, pair-expansion cap, forced-flag throws)
-  * and the driver replica of Spark's round(x, 6). */
+  * the gate fallbacks (row cap, pair-expansion cap, NULL group, non-BIGINT
+  * ids) and the driver replica of Spark's round(x, 6). */
 class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
 
   /** Random basket stream WITH duplicate (group, item) rows — the raw
@@ -40,26 +40,30 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
 
   test("FromBaskets tiers equal their distributed twins bit-for-bit " +
       "(duplicate rows, random baskets)") {
+    val sq = spark
+    import sq.implicits._
     val rows = randomBaskets(41, nGroups = 25, nItems = 18, rows = 400) ++
       randomBaskets(41, 25, 18, 50) // extra duplicates
-    val df = basketDf(rows)
-    def both(f: Option[Boolean] => DataFrame): (Set[Seq[Any]], Set[Seq[Any]]) =
-      (rowSet(f(None)), rowSet(f(Some(false))))
-    Seq[(String, Option[Boolean] => DataFrame)](
-      "triangles" -> (fl => Graph.triangleCountFromBaskets(df, "g", "i",
-        distEdges(df), fl)),
-      "clustering" -> (fl => Graph.clusteringFromBaskets(df, "g", "i",
-        distEdges(df), fl)),
-      "transitivity" -> (fl => Graph.transitivityFromBaskets(df, "g", "i",
-        distEdges(df), fl)),
-      "edgeJaccard" -> (fl => Graph.edgeJaccardTopKFromBaskets(df, "g", "i",
-        k = 15, distEdges(df), fl)),
-      "trussPeel" -> (fl => Graph.trussPeelFromBaskets(df, "g", "i",
-        k = 4, rounds = 1, distEdges(df), fl)),
-      "bipartite" -> (fl => Graph.bipartiteProjectionTopK(df, "g", "i",
-        topK = 15, fl))
+    // the twin's sorted sets drop a NULL item; the tier must skip it too
+    val df = (rows.map { case (g, i) => (g, Option(i)) } :+ ((10L, None)))
+      .toDF("g", "i")
+    assert(Graph.collectBaskets(df, "g", "i", pairBound = true).isDefined)
+    Seq[(String, () => DataFrame)](
+      "triangles" -> (() => Graph.triangleCountFromBaskets(df, "g", "i",
+        distEdges(df))),
+      "clustering" -> (() => Graph.clusteringFromBaskets(df, "g", "i",
+        distEdges(df))),
+      "transitivity" -> (() => Graph.transitivityFromBaskets(df, "g", "i",
+        distEdges(df))),
+      "edgeJaccard" -> (() => Graph.edgeJaccardTopKFromBaskets(df, "g", "i",
+        k = 15, distEdges(df))),
+      "trussPeel" -> (() => Graph.trussPeelFromBaskets(df, "g", "i",
+        k = 4, rounds = 1, distEdges(df))),
+      "bipartite" -> (() => Graph.bipartiteProjectionTopK(df, "g", "i",
+        topK = 15))
     ).foreach { case (name, f) =>
-      val (tier, twin) = both(f)
+      val tier = rowSet(f())
+      val twin = withTwins(rowSet(f()))
       assert(tier == twin, s"$name driver tier != distributed twin")
       assert(tier.nonEmpty, s"$name degenerate test input")
     }
@@ -88,20 +92,24 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
       distEdges(singles)).collect().map(_.getLong(0)).toSeq == Seq(0L))
   }
 
-  test("pair-expansion cap falls back to the distributed twin; forced " +
-      "flag throws past either gate") {
+  test("gate declines fall back to the distributed twin: pair-expansion " +
+      "and row caps, a NULL group, non-BIGINT ids") {
     val rows = randomBaskets(43, 4, 30, 300) // few hub groups → big expansion
     val df = basketDf(rows)
     val conf = spark.conf
     val was = conf.getOption("graft.graph.pairStreamLimit")
     try {
       conf.set("graft.graph.pairStreamLimit", "10")
-      val viaTwin = Graph.bipartiteProjectionTopK(df, "g", "i", 10, None)
-      val twin = Graph.bipartiteProjectionTopK(df, "g", "i", 10, Some(false))
+      assert(Graph.collectBaskets(df, "g", "i", pairBound = true).isEmpty)
+      val viaTwin = Graph.bipartiteProjectionTopK(df, "g", "i", 10)
+      val twin = withTwins(Graph.bipartiteProjectionTopK(df, "g", "i", 10))
       assert(rowSet(viaTwin) == rowSet(twin))
-      intercept[IllegalArgumentException] {
-        Graph.bipartiteProjectionTopK(df, "g", "i", 10, Some(true))
-      }
+      // at any limit the expansion must fit the one array expandPairs
+      // fills: 65,537 items in one group expand to 2,147,516,416 pairs,
+      // past Int.MaxValue − 8
+      conf.set("graft.graph.pairStreamLimit", Long.MaxValue.toString)
+      val hub = spark.range(65537L).select(lit(1L).as("g"), col("id").as("i"))
+      assert(Graph.collectBaskets(hub, "g", "i", pairBound = true).isEmpty)
     } finally {
       was.fold(conf.unset("graft.graph.pairStreamLimit"))(
         conf.set("graft.graph.pairStreamLimit", _))
@@ -109,28 +117,28 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
     val wasB = conf.getOption("graft.graph.broadcastLimitBytes")
     try {
       conf.set("graft.graph.broadcastLimitBytes", "64") // capRows = 4
+      assert(Graph.collectBaskets(df, "g", "i").isEmpty)
       val viaTwin = Graph.triangleCountFromBaskets(df, "g", "i",
-        distEdges(df), None)
-      val twin = Graph.triangleCountFromBaskets(df, "g", "i",
-        distEdges(df), Some(false))
+        distEdges(df))
+      val twin = withTwins(Graph.triangleCountFromBaskets(df, "g", "i",
+        distEdges(df)))
       assert(rowSet(viaTwin) == rowSet(twin))
-      intercept[IllegalArgumentException] {
-        Graph.triangleCountFromBaskets(df, "g", "i", distEdges(df),
-          Some(true))
-      }
     } finally {
       wasB.fold(conf.unset("graft.graph.broadcastLimitBytes"))(
         conf.set("graft.graph.broadcastLimitBytes", _))
     }
-    // non-BIGINT ids: auto-declines, forced throws
+    // a NULL group is its own basket in the twin, which the packed group
+    // index cannot tell from a real group 0
     val sq = spark
     import sq.implicits._
+    val nullGroup = Seq[(Option[Long], Long)]((Some(0L), 1L), (Some(0L), 2L),
+      (None, 2L), (None, 3L)).toDF("g", "i")
+    assert(Graph.collectBaskets(nullGroup, "g", "i").isEmpty)
+    // non-BIGINT ids decline to the twin
     val strDf = Seq(("a", "x"), ("a", "y"), ("b", "x")).toDF("g", "i")
-    assert(rowSet(Graph.bipartiteProjectionTopK(strDf, "g", "i", 5, None)) ==
-      rowSet(Graph.bipartiteProjectionTopK(strDf, "g", "i", 5, Some(false))))
-    intercept[IllegalArgumentException] {
-      Graph.bipartiteProjectionTopK(strDf, "g", "i", 5, Some(true))
-    }
+    assert(Graph.collectBaskets(strDf, "g", "i").isEmpty)
+    assert(rowSet(Graph.bipartiteProjectionTopK(strDf, "g", "i", 5)) ==
+      withTwins(rowSet(Graph.bipartiteProjectionTopK(strDf, "g", "i", 5))))
   }
 
   test("sparkRound6 is bit-equal to the SQL round(x, 6)") {

@@ -95,9 +95,8 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
         .map { case (n, xs) => n -> xs.size.toLong }
       assert(got == want, s"k=$k rounds=$rounds")
       // shuffle semi-join path (billion-node graphs): identical result
-      val shuffled = Graph.kcorePeel(df, "u", "v", k, rounds,
-          broadcastKeep = Some(false))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val shuffled = withTwins(Graph.kcorePeel(df, "u", "v", k, rounds)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(shuffled == want, s"k=$k rounds=$rounds shuffle path")
     }
   }
@@ -132,10 +131,10 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       assert(got2 == lab, s"rounds=$rounds with duplicate pairs")
       // billion-node twin: the shuffled-frontier path (no broadcast,
       // source-partitioned edges) folds to the same labels
-      val got3 = Graph.labelPropagate(pairs.toDF("u", "v"), "u", "v", rounds,
-          bcastFrontier = Some(false))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got3 == lab, s"rounds=$rounds with bcastFrontier=false")
+      val got3 = withTwins(Graph.labelPropagate(pairs.toDF("u", "v"), "u",
+          "v", rounds)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      assert(got3 == lab, s"rounds=$rounds twin")
     }
   }
 
@@ -177,11 +176,10 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     assert(gotHist == wantHist)
     val wantProfile = Graph.neighborDegreeProfile(edges, "u", "v")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    for (bcast <- Seq(true, false)) {
-      val gotProfile = Graph.neighborDegreeFromPairs(raw, "u", "v", Some(bcast))
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      assert(gotProfile == wantProfile, s"broadcastDeg=$bcast")
-    }
+    def profile = Graph.neighborDegreeFromPairs(raw, "u", "v")
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(profile == wantProfile, "broadcast path")
+    assert(withTwins(profile) == wantProfile, "twin")
     val wantR = Graph.assortativity(edges, "u", "v").collect()(0)
     val gotR = Graph.assortativityFromPairs(raw, "u", "v").collect()(0)
     assert(gotR.getLong(0) == wantR.getLong(0))
@@ -240,8 +238,8 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       val got = Graph.triangleCount(df, "u", "v").collect()
       assert(got.length == 1 && got(0).getLong(0) == tris.size.toLong,
         s"seed=$seed want=${tris.size}")
-      val shuffled = Graph.triangleCount(df, "u", "v", broadcastAdj = Some(false))
-        .collect()(0).getLong(0)
+      val shuffled = withTwins(Graph.triangleCount(df, "u", "v")
+        .collect()(0).getLong(0))
       assert(shuffled == tris.size.toLong, s"seed=$seed shuffle path")
     }
   }
@@ -271,11 +269,10 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       assert(math.abs(gcc - cc) < 2e-6, s"node $n cc $gcc vs $cc")
     }
     // shuffle-join path: identical frame
-    val shuffled = Graph
-      .clusteringCoefficients(df, "u", "v", broadcastAdj = Some(false))
+    val shuffled = withTwins(Graph.clusteringCoefficients(df, "u", "v")
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
-      .toMap
+      .toMap)
     assert(shuffled == got)
   }
 
@@ -290,12 +287,11 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     val want = ends.groupBy(p => deg(p._1)).map { case (d, ps) =>
       d -> ((ps.size.toLong, ps.map(p => deg(p._2)).sum))
     }
-    for (bcast <- Seq(true, false)) {
-      val got = Graph.neighborDegreeProfile(df, "u", "v", Some(bcast))
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
-        .toMap
-      assert(got == want, s"broadcastDeg=$bcast")
-    }
+    def got = Graph.neighborDegreeProfile(df, "u", "v")
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
+      .toMap
+    assert(got == want, "broadcast path")
+    assert(withTwins(got) == want, "twin")
   }
 
   test("connectedComponentsMinLabel equals brute-force components and the " +
@@ -325,10 +321,10 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
         (pairs ++ pairs.take(5)).toDF("u", "v"), "u", "v")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want)
-    val gotShuffle = Graph.connectedComponentsMinLabel(
-        pairs.toDF("u", "v"), "u", "v", bcastFrontier = Some(false))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotShuffle == want, "bcastFrontier=false twin")
+    val gotShuffle = withTwins(Graph.connectedComponentsMinLabel(
+        pairs.toDF("u", "v"), "u", "v")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(gotShuffle == want, "twin")
     val star = graft.operators.Dedup.connectedComponentsStar(
         pairs.toDF("doc_a", "doc_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -345,10 +341,10 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     val got = Graph.multiSourceBfs(df, "u", "v", nSources = 3, maxDepth = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     // the all-distributed twin (state past broadcast range) must match
-    val gotDist = Graph.multiSourceBfs(df, "u", "v", nSources = 3,
-        maxDepth = 4, bcastState = Some(false))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    assert(gotDist == got, "bcastState=false twin")
+    val gotDist = withTwins(Graph.multiSourceBfs(df, "u", "v", nSources = 3,
+        maxDepth = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap)
+    assert(gotDist == got, "twin")
     // brute-force BFS per source
     val nbrs = nodes.map { n =>
       n -> es.collect { case (a, b) if a == n => b; case (a, b) if b == n => a }.toSet
@@ -488,10 +484,10 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
         s"${want.diff(got)} missed")
       // the all-distributed twin (label table past broadcast range)
       // must match the driver-resident default row-for-row
-      val gotDist = Graph.sccPivot(des.toDF("s", "t"), "s", "t",
-          maxDepth = cap, bcastLabels = Some(false))
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-      assert(gotDist == want, s"maxDepth=$cap bcastLabels=false twin")
+      val gotDist = withTwins(Graph.sccPivot(des.toDF("s", "t"), "s", "t",
+          maxDepth = cap)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet)
+      assert(gotDist == want, s"maxDepth=$cap twin")
     }
   }
 
@@ -557,10 +553,10 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       val got = Graph.louvainLevels(df, "u", "v", "w", maxLevels = 5)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == want, s"seed=$seed driver path")
-      val gotDist = Graph.louvainLevels(df, "u", "v", "w", maxLevels = 5,
-          bcastState = Some(false))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotDist == want, s"seed=$seed bcastState=false twin")
+      val gotDist = withTwins(Graph.louvainLevels(df, "u", "v", "w",
+          maxLevels = 5)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      assert(gotDist == want, s"seed=$seed twin")
     }
     // level-capped: one level must equal the pointer-CC closure of the
     // single-level move phase (louvainFirstLevel's argmax)
@@ -598,11 +594,11 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     assert(got == want)
     // the all-distributed twin matches row-for-row
-    val gotDist = Graph.louvainModularity(df, "u", "v", "w", maxLevels = 5,
-        bcastState = Some(false))
+    val gotDist = withTwins(Graph.louvainModularity(df, "u", "v", "w",
+        maxLevels = 5)
       .collect().map(r => r.getLong(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    assert(gotDist == want, "bcastState=false twin")
+        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap)
+    assert(gotDist == want, "twin")
     // the scaled contributions recompose to the float Q exactly
     val q = got.values.map(_._4).sum.toDouble / (s2m.toDouble * s2m)
     val qBrute = want.values.map { case (_, wIn, kTot, _) =>
@@ -625,10 +621,10 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     assert(got == want)
     // the all-distributed twin (rank state past broadcast range) must
     // match the driver-resident default row-for-row
-    val gotDist = Graph.weightedPersonalizedPagerank(wpairs, "u", "v", "w",
-        iters = 3, nSeeds = 3, bcastState = Some(false))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotDist == want, "bcastState=false twin")
+    val gotDist = withTwins(Graph.weightedPersonalizedPagerank(wpairs, "u",
+        "v", "w", iters = 3, nSeeds = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(gotDist == want, "twin")
   }
 
   test("resourceAllocationTopK matches brute force over non-adjacent " +
@@ -698,13 +694,13 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       r.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     val got = key(Graph.betweennessSampled(df, "u", "v", 3, maxDepth))
     assert(got == want.toMap)
-    assert(key(Graph.betweennessSampled(df, "u", "v", 3, maxDepth,
-      bcastDelta = Some(false))) == want.toMap)
+    assert(withTwins(key(Graph.betweennessSampled(df, "u", "v", 3,
+      maxDepth))) == want.toMap)
   }
 
   test("pathCounts twins: dedupEdges=true on a duplicated raw pair " +
       "stream equals the default on the distinct input, and " +
-      "bcastVisited=false (shuffled-hash anti) matches row-for-row") {
+      "the shuffled-hash anti twin matches row-for-row") {
     import spark.implicits._
     val (es, _) = randomGraph(41, 19, 120)
     val distinctDf = es.distinct.toDF("u", "v")
@@ -718,8 +714,8 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     val base = key(Graph.pathCounts(distinctDf, "u", "v", 3, 4))
     assert(key(Graph.pathCounts(rawDf, "u", "v", 3, 4,
       dedupEdges = true)) == base)
-    assert(key(Graph.pathCounts(distinctDf, "u", "v", 3, 4,
-      bcastVisited = Some(false))) == base)
+    assert(withTwins(key(Graph.pathCounts(distinctDf, "u", "v", 3, 4)))
+      == base)
   }
 
   test("pathCounts edge cases: maxDepth = 0 is the seed rows only; " +
@@ -789,10 +785,9 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     val got = Graph.ssspBounded(df, "u", "v", "w", rounds)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == dist)
-    val gotShuffle = Graph.ssspBounded(df, "u", "v", "w", rounds,
-        bcastFrontier = Some(false))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotShuffle == dist, "bcastFrontier=false twin")
+    val gotShuffle = withTwins(Graph.ssspBounded(df, "u", "v", "w", rounds)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(gotShuffle == dist, "twin")
     val empty = Graph.ssspBounded(
       Seq.empty[(Long, Long, Long)].toDF("u", "v", "w"), "u", "v", "w", 2)
     assert(empty.collect().isEmpty)
@@ -815,18 +810,20 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       edges.map(e => e -> (nb(e._1) intersect nb(e._2)).size.toLong).toMap
     }
     val want = bruteSupport(set)
-    for (bcast <- Seq(true, false)) {
-      val got = Graph.edgeSupport(df, "u", "v", Some(bcast))
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      assert(got == want, s"broadcastAdj=$bcast")
-    }
     // brute truss peel (k=4, 1 round) + induced support histogram
     val survivors = set.filter(e => want(e) >= 2)
     val wantHist = bruteSupport(survivors).values
       .groupBy(identity).map { case (s, xs) => s -> xs.size.toLong }
-    val gotHist = Graph.trussPeel(df, "u", "v", k = 4, rounds = 1)
+    def got = Graph.edgeSupport(df, "u", "v")
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    def gotHist = Graph.trussPeel(df, "u", "v", k = 4, rounds = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(gotHist == wantHist)
+    assert(got == want, "broadcast path")
+    assert(gotHist == wantHist, "driver peel")
+    withTwins {
+      assert(got == want, "twin")
+      assert(gotHist == wantHist, "distributed peel")
+    }
   }
 
   test("edgeJaccardTopK and transitivitySummary equal brute force") {
@@ -926,9 +923,9 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == want)
     // the co-partitioned shuffle twin (node dims past broadcast range)
-    val gotShuffle = Graph.hitsBipartite(edges.toDF("c", "p"), "c", "p",
-      iters = 2, topK = 5, broadcastScores = Some(false))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val gotShuffle = withTwins(Graph.hitsBipartite(edges.toDF("c", "p"),
+      "c", "p", iters = 2, topK = 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
     assert(gotShuffle == want)
   }
 

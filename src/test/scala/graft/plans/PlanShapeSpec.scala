@@ -254,7 +254,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("assoc rules: item-support lookups broadcast by default; the " +
-      "broadcastSupport=false twin joins shuffled-hash (no sort, no " +
+      "twin past the size limit joins shuffled-hash (no sort, no " +
       "broadcast of a 100x-SF catalog dimension)") {
     import org.apache.spark.sql.functions.col
     val li = graft.Tables.load(spark, sf, "lineitem")
@@ -266,9 +266,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
         "l_partkey", 20).queryExecution.executedPlan.toString
       assert("BroadcastHashJoin".r.findAllIn(bc).size >= 2,
         s"default path must broadcast both item-support sides:\n${bc.take(1500)}")
-      val sh = graft.operators.Graph.assocRules(li, "l_orderkey",
-        "l_partkey", 20, broadcastSupport = Some(false))
-        .queryExecution.executedPlan.toString
+      val sh = withTwins(graft.operators.Graph.assocRules(li, "l_orderkey",
+        "l_partkey", 20).queryExecution.executedPlan.toString)
       assert("ShuffledHashJoin".r.findAllIn(sh).size >= 2,
         s"twin must shuffled-hash both support joins:\n${sh.take(1500)}")
       // the one-row basket-count scalar rides a broadcast NESTED-LOOP
@@ -278,8 +277,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       // and the two paths agree on the answer
       val a = graft.operators.Graph.assocRules(li, "l_orderkey", "l_partkey", 20)
         .collect().map(_.toSeq).toSeq
-      val b = graft.operators.Graph.assocRules(li, "l_orderkey", "l_partkey", 20,
-        broadcastSupport = Some(false)).collect().map(_.toSeq).toSeq
+      val b = withTwins(graft.operators.Graph.assocRules(li, "l_orderkey",
+        "l_partkey", 20).collect().map(_.toSeq).toSeq)
       assert(a == b, "broadcast and shuffled twins must return identical rules")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
@@ -309,12 +308,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
         .queryExecution.executedPlan.toString
       assert(!sh.contains("BroadcastHashJoin"),
         s"past budget the auto path must not broadcast:\n${sh.take(1500)}")
-      // the caller override still forces the broadcast shape past budget
-      val forced = graft.operators.Graph.edgeSupportPlan(edges, "u", "v",
-        broadcastAdj = Some(true)).queryExecution.executedPlan.toString
-      assert(forced.contains("BroadcastHashJoin"),
-        s"Some(true) must override the size heuristic:\n${forced.take(1500)}")
-      // and all three shapes agree on the answer
+      // and both shapes agree on the answer
       spark.conf.unset("graft.graph.broadcastLimitBytes")
       val a = graft.operators.Graph.edgeSupport(edges, "u", "v")
         .collect().map(_.toSeq).toSet
