@@ -3996,15 +3996,17 @@ object SparkEntry {
       "exchanges]" -> ((s, dir) =>
         operators.Dedup.bitmapPairsPlan(t(s, dir, "documents"),
           "doc_id", "text", 4, 5)),
-    "ext_graph_components / ext_label_prop [one pre-checkpoint min-label round]" ->
+    "ext_graph_components / ext_label_prop [one pre-checkpoint twin " +
+      "min-label round: shuffled-hash delta push, label merge]" ->
       ((s, dir) =>
         operators.Graph.minLabelRoundPlan(copurchasePairs(s, dir), "u", "v")),
-    "ext_sssp_bounded [one pre-checkpoint relaxation]" -> ((s, dir) =>
+    "ext_sssp_bounded [one pre-checkpoint twin relaxation: shuffled-hash " +
+      "delta push, full-outer merge]" -> ((s, dir) =>
       operators.Graph.ssspRoundPlan(copurchaseWeightedEdges(s, dir),
         "u", "v", "w", 0L)),
-    "ext_path_counts / ext_betweenness_sampled [one pre-checkpoint " +
+    "ext_path_counts / ext_betweenness_sampled [one pre-checkpoint twin " +
       "frontier-delta round: broadcast push, alias-riding sigma fold, " +
-      "anti-join delta merge]" -> ((s, dir) =>
+      "shuffled-hash anti-join delta merge]" -> ((s, dir) =>
         operators.Graph.pathCountsRoundPlan(copurchasePairs(s, dir),
           "u", "v")),
     "ext_ktruss / ext_edge_jaccard_topk [pre-checkpoint edge-support]" ->
@@ -4026,8 +4028,8 @@ object SparkEntry {
       "round]" -> ((s, dir) =>
         operators.Graph.multiBfsRoundPlan(copurchasePairs(s, dir), "u", "v",
           nSources = 4)),
-    "ext_kcore_peel [one pre-checkpoint peel round: dead-node frontier " +
-      "broadcast, alias-riding loss fold, survivor merge]" -> ((s, dir) =>
+    "ext_kcore_peel [one pre-checkpoint twin peel round: shuffled-hash " +
+      "dead-node frontier, loss fold, survivor merge]" -> ((s, dir) =>
         operators.Graph.kcoreRoundPlan(copurchaseEdgesRaw(s, dir), "u", "v",
           k = 4)),
     "ext_pagerank_personalized / ext_ppr_weighted [one pre-checkpoint " +

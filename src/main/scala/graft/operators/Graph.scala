@@ -24,21 +24,72 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, 
  * DuckDB oracle replays the same three chained CTE iterations integer for
  * integer. (Float PageRank sums doubles in partition order:
  * nondeterministic everywhere.)
+ *
+ * DRIVER TIER vs TWIN. Most iterative operators here have exactly two
+ * paths. The driver tier collects the edge list once ([[collectEdges]])
+ * into primitive arrays and computes on the driver; the twin is the
+ * distributed plan that runs at any scale. The contract both keep:
+ *  - the gate: the tier runs only when the id columns are BIGINT and
+ *    [[resolveBroadcast]] passes (the edge frame, times a per-operator
+ *    state factor, fits `graft.graph.broadcastLimitBytes`; 0 pins the
+ *    twin). Any other id type takes the twin, which handles every type;
+ *  - NULLs: an edge with a NULL endpoint (or NULL weight) is dropped —
+ *    the collector skips it and every twin input carries the same
+ *    [[nonNull]] filter;
+ *  - both paths return the same schema and rows (GraphDriverTierSpec).
  */
 object Graph {
 
-  /** Primitive collects for the driver-resident tiers: read the BIGINT
-    * columns straight off the deserialized InternalRows instead of paying
-    * the external-Row conversion (one allocation per row — measurable at
-    * the million-pair scale these tiers collect). Rows from
-    * executeCollect are already safe copies. */
-  private implicit class FastCollect(df: DataFrame) {
-    def collect2: Array[(Long, Long)] =
-      df.queryExecution.executedPlan.executeCollect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-    def collect3: Array[(Long, Long, Long)] =
-      df.queryExecution.executedPlan.executeCollect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+  /** The edge list a driver tier computes on: parallel primitive columns,
+    * one entry per collected edge (`w` is empty without a weight column),
+    * plus the dense id index — `ids` sorted distinct, so the id at index
+    * i is ids(i) and index order is id order (every min-id rule becomes a
+    * min-index rule); `iu`/`iv` are each edge's endpoint indices. */
+  private final class Edges(val u: Array[Long], val v: Array[Long],
+                            val w: Array[Long]) {
+    def m: Int = u.length
+    lazy val ids: Array[Long] = denseIds(u, v)
+    def n: Int = ids.length
+    lazy val iu: Array[Int] = indexOf(ids, u)
+    lazy val iv: Array[Int] = indexOf(ids, v)
+  }
+
+  /** Sorted distinct ids over `cols` — the dense index of a driver tier. */
+  private def denseIds(cols: Array[Long]*): Array[Long] = {
+    val all = Array.concat(cols: _*)
+    java.util.Arrays.copyOf(all, sortDedup(all))
+  }
+
+  private def indexOf(ids: Array[Long], xs: Array[Long]): Array[Int] =
+    xs.map(java.util.Arrays.binarySearch(ids, _))
+
+  /** The edge filter of the NULL rule, shared by collector and twins. */
+  private def nonNull(cols: String*): Column =
+    cols.map(col(_).isNotNull).reduce(_ && _)
+
+  /** THE gate and collect of every graph driver tier: None (take the
+    * twin) unless `uCol`/`vCol` are BIGINT and [[resolveBroadcast]]
+    * passes on `df` scaled by `factor`; otherwise ONE collect of the
+    * non-NULL (u, v[, w]) rows, read off the deserialized InternalRows
+    * straight into primitive columns (no external-Row conversion, no
+    * boxing). The weight is cast to BIGINT, as every twin casts it. */
+  private def collectEdges(df: DataFrame, uCol: String, vCol: String,
+                           wCol: Option[String] = None,
+                           factor: Long = 1L): Option[Edges] = {
+    if (df.schema(uCol).dataType != LongType ||
+        df.schema(vCol).dataType != LongType ||
+        !resolveBroadcast(df, factor)) return None
+    val rows = df.filter(nonNull(Seq(uCol, vCol) ++ wCol: _*))
+      .select(Seq(col(uCol), col(vCol)) ++ wCol.map(col(_).cast("bigint")): _*)
+      .queryExecution.executedPlan.executeCollect()
+    def column(i: Int): Array[Long] = {
+      val a = new Array[Long](rows.length)
+      var r = 0
+      while (r < rows.length) { a(r) = rows(r).getLong(i); r += 1 }
+      a
+    }
+    Some(new Edges(column(0), column(1),
+      if (wCol.isDefined) column(2) else Array.emptyLongArray))
   }
 
   /** `array_sort(collect_set(c))` with the primitive-long native fold
@@ -183,70 +234,33 @@ object Graph {
     * full-stream exchange here. Empty edge set → empty result (no NPE
     * on the null min). */
   def bfsLevelsUndirected(pairs: DataFrame, uCol: String, vCol: String,
-                          maxDepth: Int, earlyExit: Boolean = false): DataFrame = {
-    val longBfsIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (longBfsIds && resolveBroadcast(pairs)) {
-      // DRIVER-RESIDENT BFS (the multiSourceBfs discipline, one source):
-      // the size gate says the pair stream fits driver memory — one
-      // collect, one CSR walk from the minimum id, natural early exit
-      // (a dead frontier makes remaining rounds no-ops either way, so
-      // fixed and early-exit variants agree). The distributed loops
-      // below stay the past-broadcast path.
-      val sess = pairs.sparkSession
-      val raw = pairs.select(col(uCol), col(vCol))
-        .collect2
-      val lng = org.apache.spark.sql.types.LongType
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", lng),
-        org.apache.spark.sql.types.StructField("lvl",
-          org.apache.spark.sql.types.IntegerType, nullable = false)))
-      if (raw.isEmpty)
-        return sess.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          outSchema)
-      val (ids, off, nbr) = driverCsr(raw, dedup = false)
-      val n = ids.length
-      val lvl = new Array[Int](n)
-      java.util.Arrays.fill(lvl, -1)
-      lvl(0) = 0 // ids sorted ascending: index 0 is the minimum id
-      val out = scala.collection.mutable.ArrayBuffer(
-        org.apache.spark.sql.Row(ids(0), 0))
-      var frontier = Array(0)
-      var d = 1
-      while (d <= maxDepth && frontier.nonEmpty) {
-        val next = scala.collection.mutable.ArrayBuffer.empty[Int]
-        frontier.foreach { s =>
-          var j = off(s)
-          val end = off(s + 1)
-          while (j < end) {
-            val t = nbr(j)
-            if (lvl(t) < 0) {
-              lvl(t) = d
-              next += t
-              out += org.apache.spark.sql.Row(ids(t), d)
-            }
-            j += 1
+                          maxDepth: Int, earlyExit: Boolean = false): DataFrame =
+    collectEdges(pairs, uCol, vCol) match {
+      case Some(g) =>
+        // one CSR walk from the minimum id (index 0); a dead frontier
+        // makes the remaining rounds no-ops, so the fixed and early-exit
+        // variants agree
+        val rows =
+          if (g.m == 0) Nil
+          else {
+            val (off, nbr) = driverCsr(g, dedup = false)
+            val lvl = csrLevels(off, nbr, 0, maxDepth)
+            lvl.indices.collect { case i if lvl(i) >= 0 => Row(g.ids(i), lvl(i)) }
           }
-        }
-        frontier = next.toArray
-        d += 1
-      }
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(out.toSeq).asJava,
-        outSchema)
+        localDf(pairs.sparkSession, StructType(Seq(StructField("node", LongType),
+          StructField("lvl", IntegerType, nullable = false))), rows)
+      case None =>
+        val e = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)), uCol, vCol)
+          .localCheckpoint()
+        // one scalar off the materialized blocks — index-sized, not a re-run
+        val srcRow = e.agg(min(col("__s"))).head()
+        if (srcRow.isNullAt(0)) {
+          Dedup.freeCheckpoints(e)
+          e.sparkSession.range(0)
+            .select(col("id").as("node"), col("id").cast("int").as("lvl"))
+        } else if (earlyExit) bfsLoop(e, srcRow.get(0), maxDepth)
+        else bfsLoopFixed(e, srcRow.get(0), maxDepth)
     }
-    val e = orientedAdjacency(pairs, uCol, vCol).localCheckpoint()
-    // one scalar off the materialized blocks — index-sized, not a re-run
-    val srcRow = e.agg(min(col("__s"))).head()
-    if (srcRow.isNullAt(0)) {
-      Dedup.freeCheckpoints(e)
-      e.sparkSession.range(0)
-        .select(col("id").as("node"), col("id").cast("int").as("lvl"))
-    } else if (earlyExit) bfsLoop(e, srcRow.getLong(0), maxDepth)
-    else bfsLoopFixed(e, srcRow.getLong(0), maxDepth)
-  }
 
   /** [[bfsLoop]] without the per-round liveness barrier, for TIGHT depth
     * bounds (the oracle-twin queries run a depth-bounded recursion on
@@ -258,7 +272,7 @@ object Graph {
     * idempotent), so semantics match [[bfsLoop]] exactly; an
     * unknown-diameter graph at scale wants `earlyExit = true` instead —
     * there the count-per-round buys skipped rounds, not wasted ones. */
-  private def bfsLoopFixed(e: DataFrame, source: Long, maxDepth: Int): DataFrame = {
+  private def bfsLoopFixed(e: DataFrame, source: Any, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
     // AQE OFF for the whole loop (restored in finally — and it must wrap
     // the persist() calls too: CacheManager compiles each cached layer's
@@ -314,7 +328,7 @@ object Graph {
     * that materializes it — the pre-r11 eager-checkpoint-then-count shape
     * paid two jobs per level for the same blocks. Frees `e` and every
     * round's blocks before returning. */
-  private def bfsLoop(e: DataFrame, source: Long, maxDepth: Int): DataFrame = {
+  private def bfsLoop(e: DataFrame, source: Any, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
     var labels = e.sparkSession.range(1)
       .select(lit(source).as("__n"), lit(0).as("__lvl"))
@@ -400,25 +414,6 @@ object Graph {
     result
   }
 
-  /** [[pagerank]] specialized to an UNDIRECTED pair list (`uCol`,
-    * `vCol`) that MAY contain duplicate pairs (they are deduplicated
-    * in-pipeline, exchange-free — see the adjacency-build comment):
-    * same integer recurrence, same results as feeding both distinct
-    * orientations to [[pagerank]] (spec-pinned), but the structure
-    * exploits what undirectedness guarantees —
-    *  - both orientations expand IN-ROW with one explode, so the pair
-    *    pipeline upstream runs ONCE (a union of two selects re-runs it
-    *    per orientation);
-    *  - every node has an out-edge AND an in-edge (its own reversed
-    *    orientation), so the node base IS the out-degree aggregate — no
-    *    union-distinct node discovery, no left-join restore, no
-    *    coalesce — and base needs no checkpoint of its own: it derives
-    *    from the checkpointed `e` by one exchange-free aggregation (`e`
-    *    is pre-partitioned on __s), so re-deriving it per reference is
-    *    cheaper than a barrier.
-    * Net: ONE checkpoint barrier (the edge frame) + one per-iteration
-    * exchange (the contribution agg — every join in the loop reads
-    * co-partitioned sides). */
   /** Driver CSR PageRank rounds shared by [[pagerankUndirected]] and
     * [[personalizedPagerank]]'s driver tiers — the identical integer
     * recurrence pr'(v) = restart(v) + (17 · Σ pr(u) div od(u)) div 20
@@ -454,64 +449,68 @@ object Graph {
     pr
   }
 
+  /** [[pagerank]] specialized to an UNDIRECTED pair list (`uCol`,
+    * `vCol`) that MAY contain duplicate pairs (they are deduplicated
+    * in-pipeline, exchange-free — see the adjacency-build comment):
+    * same integer recurrence, same results as feeding both distinct
+    * orientations to [[pagerank]] (spec-pinned), but the structure
+    * exploits what undirectedness guarantees —
+    *  - both orientations expand IN-ROW with one explode, so the pair
+    *    pipeline upstream runs ONCE (a union of two selects re-runs it
+    *    per orientation);
+    *  - every node has an out-edge AND an in-edge (its own reversed
+    *    orientation), so the node base IS the out-degree aggregate — no
+    *    union-distinct node discovery, no left-join restore, no
+    *    coalesce — and base needs no checkpoint of its own: it derives
+    *    from the checkpointed `e` by one exchange-free aggregation (`e`
+    *    is pre-partitioned on __s), so re-deriving it per reference is
+    *    cheaper than a barrier.
+    * Net: ONE checkpoint barrier (the edge frame) + one per-iteration
+    * exchange (the contribution agg — every join in the loop reads
+    * co-partitioned sides). */
   def pagerankUndirected(pairs: DataFrame, uCol: String, vCol: String,
                          iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val longPrIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (longPrIds && resolveBroadcast(pairs)) {
-      // DRIVER-RESIDENT rounds (the kcorePeel discipline): the size gate
-      // says the pair stream fits driver memory — one collect, the exact
-      // integer recurrence over the deduped CSR. The distributed chain
-      // below stays the past-broadcast path (spec-pinned vs brute force).
-      val sess = pairs.sparkSession
-      val raw = pairs.select(col(uCol), col(vCol))
-        .collect2
-      val (ids, off, nbr) = driverCsr(raw, dedup = true)
-      val n = ids.length
-      val pr = driverPrRounds(off, nbr, iters,
-        Array.fill(n)(1000000L), _ => 150000L)
-      val lng = org.apache.spark.sql.types.LongType
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(
-          (0 until n).map(i => org.apache.spark.sql.Row(ids(i), pr(i)))
-            .asInstanceOf[Seq[org.apache.spark.sql.Row]]).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", lng),
-          org.apache.spark.sql.types.StructField("pagerank", lng))))
+    collectEdges(pairs, uCol, vCol) match {
+      case Some(g) =>
+        // the exact integer recurrence over the deduped CSR
+        val (off, nbr) = driverCsr(g, dedup = true)
+        val pr = driverPrRounds(off, nbr, iters,
+          Array.fill(g.n)(1000000L), _ => 150000L)
+        nodeValueDf(pairs.sparkSession, "pagerank", g.ids, pr)
+      case None =>
+        // orientation-exploded DISTINCT adjacency in TWO exchanges: the
+        // caller hands the raw (possibly globally-duplicated) pair stream;
+        // dedup runs AFTER the explode, as an exchange-free aggregate — the
+        // explicit __s repartition already satisfies the (__s, __t) distinct's
+        // clustering requirement (partitioning keys ⊆ grouping keys), so the
+        // classic pre-distinct on (u, v) would only add a third full-stream
+        // exchange for nothing.
+        val e = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)), uCol, vCol)
+          .distinct()
+          .ckpt()
+        // AQE OFF for the iteration chain (restored in finally): fixed-shape
+        // node-keyed exchanges over a checkpointed co-partitioned edge frame
+        // — adaptivity has nothing to decide and would turn each of the
+        // chain's exchanges into its own job barrier (the bfsLoopFixed
+        // measurement). The loop compiles into ONE straight-line job.
+        val sess = e.sparkSession
+        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
+        val result = try {
+          sess.conf.set("spark.sql.adaptive.enabled", "false")
+          val base = outdegBase(e)
+          var pr = base.withColumn("__pr", lit(1000000L))
+          (1 to iters).foreach { _ =>
+            pr = prIteration(e, base, pr)
+          }
+          pr.select(col("__n").as("node"), col("__pr").as("pagerank"))
+            .ckpt()
+        } finally {
+          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+          Dedup.freeCheckpoints(e) // free on the throw path too
+        }
+        result
     }
-    // orientation-exploded DISTINCT adjacency in TWO exchanges: the
-    // caller hands the raw (possibly globally-duplicated) pair stream;
-    // dedup runs AFTER the explode, as an exchange-free aggregate — the
-    // explicit __s repartition already satisfies the (__s, __t) distinct's
-    // clustering requirement (partitioning keys ⊆ grouping keys), so the
-    // classic pre-distinct on (u, v) would only add a third full-stream
-    // exchange for nothing.
-    val e = orientedAdjacency(pairs, uCol, vCol)
-      .distinct()
-      .ckpt()
-    // AQE OFF for the iteration chain (restored in finally): fixed-shape
-    // node-keyed exchanges over a checkpointed co-partitioned edge frame
-    // — adaptivity has nothing to decide and would turn each of the
-    // chain's exchanges into its own job barrier (the bfsLoopFixed
-    // measurement). The loop compiles into ONE straight-line job.
-    val sess = e.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val result = try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      val base = outdegBase(e)
-      var pr = base.withColumn("__pr", lit(1000000L))
-      (1 to iters).foreach { _ =>
-        pr = prIteration(e, base, pr)
-      }
-      pr.select(col("__n").as("node"), col("__pr").as("pagerank"))
-        .ckpt()
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      Dedup.freeCheckpoints(e) // free on the throw path too
-    }
-    result
   }
 
   /** PERSONALIZED PageRank (the recommendation primitive: random walk
@@ -530,64 +529,51 @@ object Graph {
                            iters: Int, nSeeds: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(nSeeds >= 1, s"nSeeds must be >= 1, got $nSeeds")
-    val longPprIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (longPprIds && resolveBroadcast(pairs)) {
-      // DRIVER-RESIDENT rounds (the pagerankUndirected tier with the PPR
-      // restart vector: seeds = nSeeds smallest ids = first indices).
-      val sess = pairs.sparkSession
-      val raw = pairs.select(col(uCol), col(vCol))
-        .collect2
-      val (ids, off, nbr) = driverCsr(raw, dedup = true)
-      val n = ids.length
-      val k = math.min(nSeeds, n)
-      val pr = driverPrRounds(off, nbr, iters,
-        Array.tabulate(n)(i => if (i < k) 1000000L else 0L),
-        i => if (i < k) 150000L else 0L)
-      val lng = org.apache.spark.sql.types.LongType
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(
-          (0 until n).map(i => org.apache.spark.sql.Row(ids(i), pr(i)))
-            .asInstanceOf[Seq[org.apache.spark.sql.Row]]).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", lng),
-          org.apache.spark.sql.types.StructField("ppr", lng))))
+    collectEdges(pairs, uCol, vCol) match {
+      case Some(g) =>
+        // the PPR restart vector: seeds = nSeeds smallest ids = first indices
+        val (off, nbr) = driverCsr(g, dedup = true)
+        val k = math.min(nSeeds, g.n)
+        val pr = driverPrRounds(off, nbr, iters,
+          Array.tabulate(g.n)(i => if (i < k) 1000000L else 0L),
+          i => if (i < k) 150000L else 0L)
+        nodeValueDf(pairs.sparkSession, "ppr", g.ids, pr)
+      case None =>
+        val e = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)), uCol, vCol)
+          .distinct()
+          .ckpt()
+        val sess = e.sparkSession
+        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
+        val result = try {
+          sess.conf.set("spark.sql.adaptive.enabled", "false")
+          val seeds = outdegBase(e).select(col("__n"))
+            .orderBy(col("__n")).limit(nSeeds)
+            .withColumn("__seed", lit(1))
+          val base = outdegBase(e)
+            .join(broadcast(seeds), Seq("__n"), "left")
+            .select(col("__n"), col("__od"),
+              coalesce(col("__seed"), lit(0)).as("__seed"))
+          var pr = base.withColumn("__pr",
+            when(col("__seed") === 1, lit(1000000L)).otherwise(lit(0L)))
+          (1 to iters).foreach { _ =>
+            val contrib = e
+              .join(pr.select(col("__n").as("__s"), col("__od"), col("__pr")),
+                Seq("__s"))
+              .groupBy(col("__t"))
+              .agg(sum(expr("__pr div __od")).as("__c"))
+            pr = base.join(contrib.withColumnRenamed("__t", "__n"), Seq("__n"))
+              .select(col("__n"), col("__od"), col("__seed"),
+                (when(col("__seed") === 1, lit(150000L)).otherwise(lit(0L))
+                  + expr("(17 * __c) div 20")).as("__pr"))
+          }
+          pr.select(col("__n").as("node"), col("__pr").as("ppr"))
+            .ckpt()
+        } finally {
+          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+          Dedup.freeCheckpoints(e)
+        }
+        result
     }
-    val e = orientedAdjacency(pairs, uCol, vCol)
-      .distinct()
-      .ckpt()
-    val sess = e.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val result = try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      val seeds = outdegBase(e).select(col("__n"))
-        .orderBy(col("__n")).limit(nSeeds)
-        .withColumn("__seed", lit(1))
-      val base = outdegBase(e)
-        .join(broadcast(seeds), Seq("__n"), "left")
-        .select(col("__n"), col("__od"),
-          coalesce(col("__seed"), lit(0)).as("__seed"))
-      var pr = base.withColumn("__pr",
-        when(col("__seed") === 1, lit(1000000L)).otherwise(lit(0L)))
-      (1 to iters).foreach { _ =>
-        val contrib = e
-          .join(pr.select(col("__n").as("__s"), col("__od"), col("__pr")),
-            Seq("__s"))
-          .groupBy(col("__t"))
-          .agg(sum(expr("__pr div __od")).as("__c"))
-        pr = base.join(contrib.withColumnRenamed("__t", "__n"), Seq("__n"))
-          .select(col("__n"), col("__od"), col("__seed"),
-            (when(col("__seed") === 1, lit(150000L)).otherwise(lit(0L))
-              + expr("(17 * __c) div 20")).as("__pr"))
-      }
-      pr.select(col("__n").as("node"), col("__pr").as("ppr"))
-        .ckpt()
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      Dedup.freeCheckpoints(e)
-    }
-    result
   }
 
   /** HITS hubs-and-authorities over a BIPARTITE edge list (left = hubs,
@@ -624,8 +610,9 @@ object Graph {
                     iters: Int, topK: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val raw = edges.select(col(leftCol).cast("long").as("__c"),
-      col(rightCol).cast("long").as("__p"))
+    val raw = edges.filter(nonNull(leftCol, rightCol))
+      .select(col(leftCol).cast("long").as("__c"),
+        col(rightCol).cast("long").as("__p"))
     // partition-by-subset-then-distinct: HashPartitioning(__p) satisfies
     // the (__c, __p) distinct's clustering, so the base copy pays one
     // exchange. The __p-keyed copy serves every h-step (iters uses); the
@@ -634,98 +621,69 @@ object Graph {
     // the single consumer re-exchanges the checkpointed blocks in-plan
     // instead of paying a second materialization barrier.
     val ep = raw.repartition(col("__p")).distinct().ckpt()
-    if (resolveBroadcast(ep)) {
-      // FULLY driver-resident recurrence (the kcorePeel discipline): the
-      // materialized-bytes gate says the DISTINCT pair list fits driver
-      // memory — collect the checkpointed blocks once and run the exact
-      // integer half-steps as primitive folds (jobs 8 → 3). The
-      // co-partitioned chain below stays the spec-pinned twin.
-      val sess = edges.sparkSession
-      val rawP =
-        try ep.select(col("__c"), col("__p")).collect2
-        finally Dedup.freeCheckpoints(ep)
-      val lng = org.apache.spark.sql.types.LongType
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("part", lng),
-        org.apache.spark.sql.types.StructField("authority", lng,
-          nullable = false)))
-      if (rawP.isEmpty)
-        return sess.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          outSchema)
-      // index both sides independently (the modes never mix); rows are
-      // already DISTINCT (ep), so no pair dedupe is needed
-      def dedupSorted(a: Array[Long]): Array[Long] = {
-        java.util.Arrays.sort(a)
-        var n0 = 0; var i = 0
-        while (i < a.length) {
-          if (n0 == 0 || a(i) != a(n0 - 1)) { a(n0) = a(i); n0 += 1 }
-          i += 1
+    collectEdges(ep, "__c", "__p") match {
+      case Some(g) =>
+        // the exact integer half-steps as primitive folds over the DISTINCT
+        // pairs; the two modes never mix, so each side has its own index
+        Dedup.freeCheckpoints(ep)
+        val cs = denseIds(g.u)
+        val ps = denseIds(g.v)
+        val hu = indexOf(cs, g.u)
+        val hv = indexOf(ps, g.v)
+        // iteration 1 with h0 ≡ 1 is the indegree count
+        var a = new Array[Long](ps.length)
+        hv.foreach(p => a(p) += 1L)
+        var it0 = 2
+        while (it0 <= iters) {
+          val h = new Array[Long](cs.length)
+          var i = 0
+          while (i < g.m) { h(hu(i)) += a(hv(i)); i += 1 }
+          a = new Array[Long](ps.length)
+          i = 0
+          while (i < g.m) { a(hv(i)) += h(hu(i)); i += 1 }
+          it0 += 1
         }
-        java.util.Arrays.copyOf(a, n0)
-      }
-      val cs = dedupSorted(rawP.map(_._1))
-      val ps = dedupSorted(rawP.map(_._2))
-      require(cs.length.toLong < (1L << 31) &&
-        ps.length.toLong < (1L << 31), "driver HITS tier size")
-      val pairs = rawP.map { case (c, p) =>
-        (java.util.Arrays.binarySearch(cs, c).toLong << 32) |
-          java.util.Arrays.binarySearch(ps, p).toLong
-      }
-      // iteration 1 with h0 ≡ 1 is the indegree count
-      var a = new Array[Long](ps.length)
-      pairs.foreach(pk => a((pk & 0xffffffffL).toInt) += 1L)
-      var it0 = 2
-      while (it0 <= iters) {
-        val h = new Array[Long](cs.length)
-        pairs.foreach { pk =>
-          h((pk >>> 32).toInt) += a((pk & 0xffffffffL).toInt) }
-        a = new Array[Long](ps.length)
-        pairs.foreach { pk =>
-          a((pk & 0xffffffffL).toInt) += h((pk >>> 32).toInt) }
-        it0 += 1
-      }
-      val top = ps.indices.map(i => (ps(i), a(i)))
-        .sortBy(t => (-t._2, t._1)).take(topK)
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(
-          top.map { case (p, s) =>
-            org.apache.spark.sql.Row(p, s) }).asJava, outSchema)
+        val top = ps.indices.sortBy(i => (-a(i), ps(i))).take(topK)
+        localDf(edges.sparkSession, StructType(Seq(
+            StructField("part", LongType),
+            StructField("authority", LongType, nullable = false))),
+          top.map(i => Row(ps(i), a(i))))
+      case None =>
+        val ecPlan = ep.repartition(col("__c"))
+        // the __c-keyed copy serves the a-join of every round from round 2
+        // on (iters − 1 uses), so its materialization BARRIER only pays for
+        // itself at ≥ 2 uses — at iters = 2 the single consumer re-exchanges
+        // the checkpointed ep blocks inside its own job instead (same
+        // exchange volume, one less job barrier; measured 9 → 7 jobs)
+        val ec = if (iters >= 3) ecPlan.ckpt() else ecPlan
+        val sess = ec.sparkSession
+        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
+        val result = try {
+          sess.conf.set("spark.sql.adaptive.enabled", "false")
+          // iteration 1 with h0 ≡ 1 is the indegree count — exchange-free
+          // over the __p-partitioned copy, no join, no h0 frame at all.
+          // The hub half-step is built only where a LATER authority step
+          // consumes it (rounds 2..iters) — the returned frame derives from
+          // `a` alone, so a trailing h would be dead plan construction.
+          // Score frames past the driver tier's range are node-dimension-
+          // sized too, so each half-step joins them co-partitioned against
+          // the edge copy keyed on the join key.
+          var a = ep.groupBy(col("__p")).agg(count(lit(1)).cast("bigint").as("__as"))
+          (2 to iters).foreach { _ =>
+            val h = ep.join(a, "__p").groupBy(col("__c"))
+              .agg(sum(col("__as")).as("__hs"))
+            a = ec.join(h, "__c").groupBy(col("__p"))
+              .agg(sum(col("__hs")).as("__as"))
+          }
+          a.orderBy(col("__as").desc, col("__p").asc).limit(topK)
+            .select(col("__p").as("part"), col("__as").as("authority"))
+            .ckpt()
+        } finally {
+          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+          Dedup.freeCheckpoints(ec, ep)
+        }
+        result
     }
-    val ecPlan = ep.repartition(col("__c"))
-    // the __c-keyed copy serves the a-join of every round from round 2
-    // on (iters − 1 uses), so its materialization BARRIER only pays for
-    // itself at ≥ 2 uses — at iters = 2 the single consumer re-exchanges
-    // the checkpointed ep blocks inside its own job instead (same
-    // exchange volume, one less job barrier; measured 9 → 7 jobs)
-    val ec = if (iters >= 3) ecPlan.ckpt() else ecPlan
-    val sess = ec.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val result = try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      // iteration 1 with h0 ≡ 1 is the indegree count — exchange-free
-      // over the __p-partitioned copy, no join, no h0 frame at all.
-      // The hub half-step is built only where a LATER authority step
-      // consumes it (rounds 2..iters) — the returned frame derives from
-      // `a` alone, so a trailing h would be dead plan construction.
-      // Score frames past the driver tier's range are node-dimension-
-      // sized too, so each half-step joins them co-partitioned against
-      // the edge copy keyed on the join key.
-      var a = ep.groupBy(col("__p")).agg(count(lit(1)).cast("bigint").as("__as"))
-      (2 to iters).foreach { _ =>
-        val h = ep.join(a, "__p").groupBy(col("__c"))
-          .agg(sum(col("__as")).as("__hs"))
-        a = ec.join(h, "__c").groupBy(col("__p"))
-          .agg(sum(col("__hs")).as("__as"))
-      }
-      a.orderBy(col("__as").desc, col("__p").asc).limit(topK)
-        .select(col("__p").as("part"), col("__as").as("authority"))
-        .ckpt()
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      Dedup.freeCheckpoints(ec, ep)
-    }
-    result
   }
 
   /** ONE LEVEL of Louvain community detection over a weighted pair list
@@ -829,262 +787,197 @@ object Graph {
     * undirected pair, like the co-purchase support table) — duplicate
     * pair rows would score per-row instead of per-pair.
     *
-    * Scale shape: all heavy streams (doubled orientation, scored argmax,
-    * contraction fold) stay cluster-side at every level and shrink
-    * geometrically with contraction; only node-sized state (pointer
-    * table, community labels, the original→community mapping) crosses to
-    * the driver, gated by [[resolveBroadcast]] — past the limit the
-    * twin runs the label CC and mapping composition distributed
-    * (per-level [[connectedComponentsMinLabel]]), spec-pinned equal. */
+    * Two paths (see the header): the driver tier ([[driverLouvain]])
+    * runs the whole level loop off one collect; the twin
+    * ([[louvainTwin]]) keeps every stream cluster-side, shrinking
+    * geometrically with contraction, and runs the per-level label CC
+    * and mapping composition distributed. */
   def louvainLevels(wpairs: DataFrame, uCol: String, vCol: String,
                     wCol: String, maxLevels: Int): DataFrame = {
     require(maxLevels >= 1, s"maxLevels must be >= 1, got $maxLevels")
-    val bState = resolveBroadcast(wpairs, factor = 2)
-    val par = wpairs.sparkSession.sparkContext.defaultParallelism
-    val sess = wpairs.sparkSession
-    val sel = wpairs.select(col(uCol).cast("long").as("__u"),
-      col(vCol).cast("long").as("__v"), col(wCol).cast("bigint").as("__w"))
-    if (bState) {
-      // FULLY driver-resident multi-level fold (the kcorePeel
-      // discipline): the ×2 gate says the weighted pair list itself fits
-      // driver memory, so the whole level loop — strength fold, integer
-      // argmax move, pointer-graph union-find, contraction — runs off
-      // ONE collect with no per-level cluster job (was 3 jobs/level).
-      // Arithmetic identical to the move plan: per-node strength counts
-      // a self-loop twice (both orientations of the doubled stream),
-      // gain 2m·w_ij − k_i·k_j exact BIGINT, ties to the smaller j,
-      // absent/≤0 argmax stays. The distributed twin below is untouched
-      // (spec-pinned equal).
-      // primitive INDEX-SPACE fold: ids sort ascending, so index order ==
-      // id order and every min-id rule becomes a min-index rule (the
-      // boxed-HashMap first cut measured as the wall floor — the
-      // path-counts lesson). mapping(i) = community index of original i.
-      val rows0 = sel.collect3
-      val ids = new Array[Long](rows0.length * 2)
-      var wi = 0
-      rows0.foreach { t =>
-        ids(wi) = t._1; ids(wi + 1) = t._2; wi += 2 }
-      java.util.Arrays.sort(ids)
-      var n = 0
-      var ri = 0
-      while (ri < ids.length) {
-        if (n == 0 || ids(ri) != ids(n - 1)) { ids(n) = ids(ri); n += 1 }
-        ri += 1
-      }
-      def lk(x: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, x)
-      var m = rows0.length
-      var eu = new Array[Int](m); var ev = new Array[Int](m)
-      var ew = new Array[Long](m)
-      var i0 = 0
-      rows0.foreach { t =>
-        eu(i0) = lk(t._1); ev(i0) = lk(t._2)
-        ew(i0) = t._3; i0 += 1
-      }
-      val lng = org.apache.spark.sql.types.LongType
-      var mapping: Array[Int] = null
-      val wd = new Array[Long](n)
-      val bestSc = new Array[Long](n)
-      val bestJ = new Array[Int](n)
-      val ptr = new Array[Int](n)
-      val parent = new Array[Int](n)
-      val minOf = new Array[Int](n)
-      var level = 0
-      var moved = true
-      while (level < maxLevels && moved) {
-        java.util.Arrays.fill(wd, 0L)
-        java.util.Arrays.fill(bestJ, -1)
-        var i = 0
-        while (i < m) {
-          wd(eu(i)) += ew(i); wd(ev(i)) += ew(i); i += 1 }
-        var m2 = 0L
-        i = 0
-        while (i < n) { m2 += wd(i); i += 1 }
-        // argmax move: best (score, j) per node — max score then min j
-        // (min INDEX = min id); self-loops never score
-        i = 0
-        while (i < m) {
-          if (eu(i) != ev(i)) {
-            val sc = m2 * ew(i) - wd(eu(i)) * wd(ev(i))
-            val (a, b) = (eu(i), ev(i))
-            if (bestJ(a) < 0 || sc > bestSc(a) ||
-                (sc == bestSc(a) && b < bestJ(a))) {
-              bestSc(a) = sc; bestJ(a) = b }
-            if (bestJ(b) < 0 || sc > bestSc(b) ||
-                (sc == bestSc(b) && a < bestJ(b))) {
-              bestSc(b) = sc; bestJ(b) = a }
-          }
-          i += 1
-        }
-        // pointer p(i) = argmax j when gain > 0 else stay; lvl membership
-        // = wd > 0 (weights are positive at every level). The pointer
-        // graph has cycles (mutual-best pairs), so the union-find forest
-        // is a SEPARATE self-initialized structure unioned edge by edge.
-        moved = false
-        i = 0
-        while (i < n) {
-          ptr(i) =
-            if (wd(i) > 0 && bestJ(i) >= 0 && bestSc(i) > 0) bestJ(i)
-            else i
-          if (ptr(i) != i) moved = true
-          i += 1
-        }
-        if (moved) {
-          // min-label CC over the pointer graph: union by min index
-          def find(x: Int): Int = {
-            var r = x
-            while (parent(r) != r) r = parent(r)
-            var c = x
-            while (parent(c) != c) {
-              val nx = parent(c); parent(c) = r; c = nx }
-            r
-          }
-          i = 0
-          while (i < n) { parent(i) = i; i += 1 }
-          i = 0
-          while (i < n) {
-            if (wd(i) > 0) {
-              val rn = find(i); val rq = find(ptr(i))
-              if (rn < rq) parent(rq) = rn
-              else if (rq < rn) parent(rn) = rq
-            }
-            i += 1
-          }
-          // root is not necessarily the min member — fold the true min
-          java.util.Arrays.fill(minOf, Int.MaxValue)
-          i = 0
-          while (i < n) {
-            if (wd(i) > 0) {
-              val r = find(i)
-              if (i < minOf(r)) minOf(r) = i
-            }
-            i += 1
-          }
-          // freeze community of each lvl node into parent (reuse as cc)
-          i = 0
-          while (i < n) {
-            if (wd(i) > 0) parent(i) = minOf(find(i))
-            i += 1
-          }
-          if (mapping == null) {
-            mapping = new Array[Int](n)
-            java.util.Arrays.fill(mapping, -1)
-            i = 0
-            while (i < n) {
-              if (wd(i) > 0) mapping(i) = parent(i)
-              i += 1
-            }
-          } else {
-            i = 0
-            while (i < n) {
-              if (mapping(i) >= 0) mapping(i) = parent(mapping(i))
-              i += 1
-            }
-          }
-          // contraction: community edges summed, internal weight kept as
-          // a self-loop (so the next level's strength counts it twice)
-          val agg = new LongAddMap(m)
-          i = 0
-          while (i < m) {
-            val cu = parent(eu(i)); val cv = parent(ev(i))
-            val key =
-              (math.min(cu, cv).toLong << 32) | math.max(cu, cv).toLong
-            agg.addTo(key, ew(i))
-            i += 1
-          }
-          m = agg.size
-          eu = new Array[Int](m); ev = new Array[Int](m)
-          ew = new Array[Long](m)
-          var wj = 0
-          agg.foreachEntry { (k, w) =>
-            eu(wj) = (k >>> 32).toInt
-            ev(wj) = (k & 0xffffffffL).toInt
-            ew(wj) = w
-            wj += 1
-          }
-          level += 1
-        }
-      }
-      val outRows = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.Row]
-      if (mapping == null) {
-        // zero moves at level 0: every node is its own community
-        var i = 0
-        while (i < n) {
-          if (wd(i) > 0)
-            outRows += org.apache.spark.sql.Row(ids(i), ids(i))
-          i += 1
-        }
-      } else {
-        var i = 0
-        while (i < n) {
-          if (mapping(i) >= 0)
-            outRows += org.apache.spark.sql.Row(ids(i), ids(mapping(i)))
-          i += 1
-        }
-      }
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(outRows.toSeq).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", lng, nullable = false),
-          org.apache.spark.sql.types.StructField("community", lng, nullable = false))))
+    // the ×2 factor: node-sized state on top of the pair list
+    collectEdges(wpairs, uCol, vCol, Some(wCol), factor = 2) match {
+      case Some(g) =>
+        val comm = driverLouvain(g, maxLevels)
+        localDf(wpairs.sparkSession, StructType(Seq(
+            StructField("node", LongType, nullable = false),
+            StructField("community", LongType, nullable = false))),
+          comm.indices.collect { case i if comm(i) >= 0 =>
+            Row(g.ids(i), g.ids(comm(i))) })
+      case None =>
+        louvainTwin(wpairs.filter(nonNull(uCol, vCol, wCol))
+          .select(col(uCol).cast("long").as("__u"),
+            col(vCol).cast("long").as("__v"), col(wCol).cast("bigint").as("__w")),
+          maxLevels)
     }
-    var eLvl = sel
+  }
+
+  /** The FULLY driver-resident multi-level fold behind [[louvainLevels]]'
+    * tier — strength fold, integer argmax move, pointer-graph union-find,
+    * contraction — off ONE collect with no per-level cluster job.
+    * Arithmetic identical to [[louvainMovePlan]]: per-node strength
+    * counts a self-loop twice (both orientations of the doubled stream),
+    * gain 2m·w_ij − k_i·k_j exact BIGINT, ties to the smaller j, absent
+    * or ≤ 0 argmax stays. Returns each node index's final community (its
+    * minimum member index), or −1 for a node outside the level-0 graph
+    * (zero strength). */
+  private def driverLouvain(g: Edges, maxLevels: Int): Array[Int] = {
+    val n = g.n
+    var m = g.m
+    var eu = g.iu
+    var ev = g.iv
+    var ew = g.w
+    var mapping: Array[Int] = null
+    val wd = new Array[Long](n)
+    val bestSc = new Array[Long](n)
+    val bestJ = new Array[Int](n)
+    val ptr = new Array[Int](n)
+    val parent = new Array[Int](n)
+    var level = 0
+    var moved = true
+    while (level < maxLevels && moved) {
+      java.util.Arrays.fill(wd, 0L)
+      java.util.Arrays.fill(bestJ, -1)
+      var i = 0
+      while (i < m) { wd(eu(i)) += ew(i); wd(ev(i)) += ew(i); i += 1 }
+      var m2 = 0L
+      i = 0
+      while (i < n) { m2 += wd(i); i += 1 }
+      // argmax move: best (score, j) per node — max score then min j
+      // (min INDEX = min id); self-loops never score
+      i = 0
+      while (i < m) {
+        if (eu(i) != ev(i)) {
+          val sc = m2 * ew(i) - wd(eu(i)) * wd(ev(i))
+          val (a, b) = (eu(i), ev(i))
+          if (bestJ(a) < 0 || sc > bestSc(a) ||
+              (sc == bestSc(a) && b < bestJ(a))) {
+            bestSc(a) = sc; bestJ(a) = b }
+          if (bestJ(b) < 0 || sc > bestSc(b) ||
+              (sc == bestSc(b) && a < bestJ(b))) {
+            bestSc(b) = sc; bestJ(b) = a }
+        }
+        i += 1
+      }
+      // pointer p(i) = argmax j when gain > 0 else stay; level membership
+      // = wd > 0 (weights are positive at every level)
+      moved = false
+      i = 0
+      while (i < n) {
+        ptr(i) =
+          if (wd(i) > 0 && bestJ(i) >= 0 && bestSc(i) > 0) bestJ(i) else i
+        if (ptr(i) != i) moved = true
+        i += 1
+      }
+      if (moved) {
+        // min-label CC over the pointer graph (it has cycles — mutual-best
+        // pairs), then freeze each member's community into parent
+        i = 0
+        while (i < n) { parent(i) = i; i += 1 }
+        i = 0
+        while (i < n) { if (wd(i) > 0) unionMin(parent, i, ptr(i)); i += 1 }
+        i = 0
+        while (i < n) { if (wd(i) > 0) parent(i) = findRoot(parent, i); i += 1 }
+        if (mapping == null)
+          mapping = Array.tabulate(n)(j => if (wd(j) > 0) parent(j) else -1)
+        else {
+          i = 0
+          while (i < n) {
+            if (mapping(i) >= 0) mapping(i) = parent(mapping(i))
+            i += 1
+          }
+        }
+        // contraction: community edges summed, internal weight kept as
+        // a self-loop (so the next level's strength counts it twice)
+        val agg = new LongAddMap(m)
+        i = 0
+        while (i < m) {
+          val cu = parent(eu(i)); val cv = parent(ev(i))
+          agg.addTo((math.min(cu, cv).toLong << 32) | math.max(cu, cv).toLong,
+            ew(i))
+          i += 1
+        }
+        m = agg.size
+        eu = new Array[Int](m); ev = new Array[Int](m)
+        ew = new Array[Long](m)
+        var wj = 0
+        agg.foreachEntry { (k, w) =>
+          eu(wj) = (k >>> 32).toInt
+          ev(wj) = (k & 0xffffffffL).toInt
+          ew(wj) = w
+          wj += 1
+        }
+        level += 1
+      }
+    }
+    // zero moves at level 0: every node is its own community
+    if (mapping == null) Array.tabulate(n)(i => if (wd(i) > 0) i else -1)
+    else mapping
+  }
+
+  /** [[louvainLevels]]' distributed twin over a cast (__u, __v, __w)
+    * frame: all heavy streams (doubled orientation, scored argmax,
+    * contraction fold) and the node-sized state stay cluster-side. */
+  private def louvainTwin(e: DataFrame, maxLevels: Int): DataFrame = {
+    val sess = e.sparkSession
+    val par = sess.sparkContext.defaultParallelism
+    var eLvl = e
       .repartition(par, col("__u"))
       .ckpt()
     val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
     try {
       sess.conf.set("spark.sql.adaptive.enabled", "false")
-        // ALL-DISTRIBUTED twin: per-level CC via the min-label loop,
-        // mapping composed as a checkpointed frame
-        val spent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        var mapping: DataFrame = null
-        var level = 0
-        var moved = true
-        while (level < maxLevels && moved) {
-          val p = louvainMovePlan(eLvl).ckpt()
-          spent += p
-          moved = p.filter(col("__n") =!= col("__p")).limit(1).count() > 0
-          if (moved) {
-            val ptr = p.filter(col("__n") =!= col("__p"))
-            val ccPart = connectedComponentsBody(ptr, "__n", "__p",
-              maxRounds = 50, bFrontier = false)
-            val cc = p.select(col("__n"))
-              .join(ccPart.withColumnRenamed("node", "__n"), Seq("__n"), "left")
-              .select(col("__n").as("__x"),
-                coalesce(col("component"), col("__n")).as("__c"))
-              .ckpt()
-            spent += cc
-            mapping =
-              if (mapping == null) cc.select(col("__x").as("node"),
-                col("__c").as("community")).ckpt()
-              else mapping.join(
-                  cc.select(col("__x").as("community"), col("__c")).hint("shuffle_hash"),
-                  Seq("community"))
-                .select(col("node"), col("__c").as("community")).ckpt()
-            spent += mapping
-            val contracted = eLvl
-              .join(cc.select(col("__x").as("__u"), col("__c").as("__cu"))
-                .hint("shuffle_hash"), "__u")
-              .join(cc.select(col("__x").as("__v"), col("__c").as("__cv"))
-                .hint("shuffle_hash"), "__v")
-              .groupBy(least(col("__cu"), col("__cv")).as("__u2"),
-                greatest(col("__cu"), col("__cv")).as("__v2"))
-              .agg(sum(col("__w")).as("__w"))
-              .select(col("__u2").as("__u"), col("__v2").as("__v"), col("__w"))
-              .ckpt()
-            Dedup.freeCheckpoints(eLvl)
-            eLvl = contracted
-            level += 1
-          }
+      // per-level CC via the min-label loop, mapping composed as a
+      // checkpointed frame
+      val spent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      var mapping: DataFrame = null
+      var level = 0
+      var moved = true
+      while (level < maxLevels && moved) {
+        val p = louvainMovePlan(eLvl).ckpt()
+        spent += p
+        moved = p.filter(col("__n") =!= col("__p")).limit(1).count() > 0
+        if (moved) {
+          val ptr = p.filter(col("__n") =!= col("__p"))
+          val ccPart = connectedComponentsTwin(ptr, "__n", "__p",
+            maxRounds = 50)
+          val cc = p.select(col("__n"))
+            .join(ccPart.withColumnRenamed("node", "__n"), Seq("__n"), "left")
+            .select(col("__n").as("__x"),
+              coalesce(col("component"), col("__n")).as("__c"))
+            .ckpt()
+          spent += cc
+          mapping =
+            if (mapping == null) cc.select(col("__x").as("node"),
+              col("__c").as("community")).ckpt()
+            else mapping.join(
+                cc.select(col("__x").as("community"), col("__c")).hint("shuffle_hash"),
+                Seq("community"))
+              .select(col("node"), col("__c").as("community")).ckpt()
+          spent += mapping
+          val contracted = eLvl
+            .join(cc.select(col("__x").as("__u"), col("__c").as("__cu"))
+              .hint("shuffle_hash"), "__u")
+            .join(cc.select(col("__x").as("__v"), col("__c").as("__cv"))
+              .hint("shuffle_hash"), "__v")
+            .groupBy(least(col("__cu"), col("__cv")).as("__u2"),
+              greatest(col("__cu"), col("__cv")).as("__v2"))
+            .agg(sum(col("__w")).as("__w"))
+            .select(col("__u2").as("__u"), col("__v2").as("__v"), col("__w"))
+            .ckpt()
+          Dedup.freeCheckpoints(eLvl)
+          eLvl = contracted
+          level += 1
         }
-        val result =
-          if (mapping == null)
-            louvainMovePlan(eLvl)
-              .select(col("__n").as("node"), col("__n").as("community"))
-              .ckpt()
-          else mapping.ckpt()
-        Dedup.freeCheckpoints(spent.toSeq: _*)
-        result
+      }
+      val result =
+        if (mapping == null)
+          louvainMovePlan(eLvl)
+            .select(col("__n").as("node"), col("__n").as("community"))
+            .ckpt()
+        else mapping.ckpt()
+      Dedup.freeCheckpoints(spent.toSeq: _*)
+      result
     } finally {
       sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
       Dedup.freeCheckpoints(eLvl)
@@ -1101,88 +994,77 @@ object Graph {
     * 2m ≤ ~2^31 keeps both terms under 2^63). Input contract matches
     * [[louvainLevels]]: an aggregated canonical pair list without
     * self-loops (the level-0 shape), so each node's strength is the
-    * plain incident-weight sum. All joins against the node-sized
-    * community map; one edge-stream pass for W_c, one for strength. */
+    * plain incident-weight sum. Loop and audit take ONE decision: the
+    * driver tier folds the audit in index space off the collect
+    * [[driverLouvain]] ran on; the twin joins the edge stream against
+    * the node-sized community map (one pass for W_c, one for strength). */
   def louvainModularity(wpairs: DataFrame, uCol: String, vCol: String,
                         wCol: String, maxLevels: Int): DataFrame = {
     // ONE materialization of the (often expensive) upstream pair build:
     // the Louvain loop and both audit folds read these blocks — without
     // it the support aggregation runs twice inside one key
-    val e = wpairs.select(col(uCol).cast("long").as("__u"),
-      col(vCol).cast("long").as("__v"), col(wCol).cast("bigint").as("__w"))
+    val e = wpairs.filter(nonNull(uCol, vCol, wCol))
+      .select(col(uCol).cast("long").as("__u"),
+        col(vCol).cast("long").as("__v"), col(wCol).cast("bigint").as("__w"))
       .ckpt()
-    val comm = louvainLevels(e, "__u", "__v", "__w", maxLevels)
-    // the community map is node-sized: broadcast when the same gate the
-    // loop used says it fits, shuffled-hash twin past broadcast range
-    val bComm = resolveBroadcast(wpairs)
-    if (bComm) {
-      // DRIVER-RESIDENT audit: comm is LocalRelation-backed (the loop's
-      // fast path), so every per-community fold — node strength,
-      // internal weight, member count — runs on the driver off ONE
-      // collect of the checkpointed pair blocks, instead of two join+agg
-      // pipelines and a final three-way join.
-      val sess = e.sparkSession
-      val commMap = scala.collection.mutable.HashMap.empty[Long, Long]
-      comm.collect().foreach(r => commMap(r.getLong(0)) = r.getLong(1))
-      val lng = org.apache.spark.sql.types.LongType
-      val ess = e.collect3
-      val kNode = scala.collection.mutable.HashMap.empty[Long, Long]
-      val wIn = scala.collection.mutable.HashMap.empty[Long, Long]
-      var m2 = 0L
-      ess.foreach { case (u, v, w) =>
-        kNode(u) = kNode.getOrElse(u, 0L) + w
-        kNode(v) = kNode.getOrElse(v, 0L) + w
-        m2 += 2 * w
-        val cu = commMap(u)
-        if (cu == commMap(v)) wIn(cu) = wIn.getOrElse(cu, 0L) + w
-      }
-      val kTot = scala.collection.mutable.HashMap.empty[Long, Long]
-      val nNodes = scala.collection.mutable.HashMap.empty[Long, Long]
-      kNode.foreach { case (n, k) =>
-        val c = commMap(n)
-        kTot(c) = kTot.getOrElse(c, 0L) + k
-        nNodes(c) = nNodes.getOrElse(c, 0L) + 1L
-      }
-      val outRows = kTot.keys.toSeq.map { c =>
-        val w = wIn.getOrElse(c, 0L); val kt = kTot(c)
-        org.apache.spark.sql.Row(c, nNodes(c), w, kt, 2 * m2 * w - kt * kt)
-      }
-      Dedup.freeCheckpoints(e)
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(outRows).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("community", lng, nullable = false),
-          org.apache.spark.sql.types.StructField("n_nodes", lng, nullable = false),
-          org.apache.spark.sql.types.StructField("w_internal", lng, nullable = false),
-          org.apache.spark.sql.types.StructField("k_total", lng, nullable = false),
-          org.apache.spark.sql.types.StructField("q_contrib", lng, nullable = false))))
+    // one decision for loop and audit: the same gate [[louvainLevels]]
+    // applies, on the same frame
+    collectEdges(e, "__u", "__v", Some("__w"), factor = 2) match {
+      case Some(g) =>
+        Dedup.freeCheckpoints(e)
+        val comm = driverLouvain(g, maxLevels)
+        val k = new Array[Long](g.n)
+        val wIn = new Array[Long](g.n)
+        var m2 = 0L
+        var i = 0
+        while (i < g.m) {
+          val (u, v, w) = (g.iu(i), g.iv(i), g.w(i))
+          k(u) += w; k(v) += w; m2 += 2 * w
+          if (comm(u) >= 0 && comm(u) == comm(v)) wIn(comm(u)) += w
+          i += 1
+        }
+        val kTot = new Array[Long](g.n)
+        val nNodes = new Array[Long](g.n)
+        i = 0
+        while (i < g.n) {
+          if (comm(i) >= 0) { kTot(comm(i)) += k(i); nNodes(comm(i)) += 1 }
+          i += 1
+        }
+        localDf(wpairs.sparkSession,
+          StructType(Seq("community", "n_nodes", "w_internal", "k_total",
+            "q_contrib").map(StructField(_, LongType, nullable = false))),
+          nNodes.indices.collect { case c if nNodes(c) > 0 =>
+            Row(g.ids(c), nNodes(c), wIn(c), kTot(c),
+              2 * m2 * wIn(c) - kTot(c) * kTot(c)) })
+      case None =>
+        val comm = louvainTwin(e, maxLevels)
+        val we = e.select(explode(array(
+            struct(col("__u").as("__s"), col("__w")),
+            struct(col("__v").as("__s"), col("__w")))).as("__e"))
+          .select(col("__e.__s").as("__s"), col("__e.__w").as("__w"))
+        val k = we.groupBy(col("__s")).agg(sum(col("__w")).as("__k"))
+        val s2m = we.agg(sum(col("__w")).as("__m2"))
+        val kc = k.join(comm.withColumnRenamed("node", "__s").hint("shuffle_hash"), "__s")
+          .groupBy(col("community"))
+          .agg(sum(col("__k")).as("k_total"), count(lit(1)).as("n_nodes"))
+        val wc = e
+          .join(comm.select(col("node").as("__u"),
+            col("community").as("__ca")).hint("shuffle_hash"), "__u")
+          .join(comm.select(col("node").as("__v"),
+            col("community").as("__cb")).hint("shuffle_hash"), "__v")
+          .filter(col("__ca") === col("__cb"))
+          .groupBy(col("__ca").as("community"))
+          .agg(sum(col("__w")).as("w_in"))
+        val result = kc.join(wc.hint("shuffle_hash"), Seq("community"), "left")
+          .crossJoin(broadcast(s2m))
+          .select(col("community"), col("n_nodes"),
+            coalesce(col("w_in"), lit(0L)).as("w_internal"), col("k_total"),
+            (lit(2) * col("__m2") * coalesce(col("w_in"), lit(0L))
+              - col("k_total") * col("k_total")).as("q_contrib"))
+          .localCheckpoint()
+        Dedup.freeCheckpoints(e)
+        result
     }
-    val we = e.select(explode(array(
-        struct(col("__u").as("__s"), col("__w")),
-        struct(col("__v").as("__s"), col("__w")))).as("__e"))
-      .select(col("__e.__s").as("__s"), col("__e.__w").as("__w"))
-    val k = we.groupBy(col("__s")).agg(sum(col("__w")).as("__k"))
-    val s2m = we.agg(sum(col("__w")).as("__m2"))
-    val kc = k.join(comm.withColumnRenamed("node", "__s").hint("shuffle_hash"), "__s")
-      .groupBy(col("community"))
-      .agg(sum(col("__k")).as("k_total"), count(lit(1)).as("n_nodes"))
-    val wc = e
-      .join(comm.select(col("node").as("__u"),
-        col("community").as("__ca")).hint("shuffle_hash"), "__u")
-      .join(comm.select(col("node").as("__v"),
-        col("community").as("__cb")).hint("shuffle_hash"), "__v")
-      .filter(col("__ca") === col("__cb"))
-      .groupBy(col("__ca").as("community"))
-      .agg(sum(col("__w")).as("w_in"))
-    val result = kc.join(wc.hint("shuffle_hash"), Seq("community"), "left")
-      .crossJoin(broadcast(s2m))
-      .select(col("community"), col("n_nodes"),
-        coalesce(col("w_in"), lit(0L)).as("w_internal"), col("k_total"),
-        (lit(2) * col("__m2") * coalesce(col("w_in"), lit(0L))
-          - col("k_total") * col("k_total")).as("q_contrib"))
-      .localCheckpoint()
-    Dedup.freeCheckpoints(e)
-    result
   }
 
   /** The pivot step of forward-backward SCC decomposition over a
@@ -1193,7 +1075,7 @@ object Graph {
     * distances. The DuckDB twin runs two depth-capped recursive UNION
     * BFS CTEs and min-folds the levels.
     *
-    * r17 chain shape — the two reaches run FUSED: both orientations
+    * The twin runs the two reaches FUSED: both orientations
     * live in ONE edge frame tagged with a direction column (dir 0 =
     * forward s→t, dir 1 = t→s), the label table is keyed (dir, node),
     * and each round's frontier join / min-fold serves both reaches at
@@ -1210,152 +1092,86 @@ object Graph {
                maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     // the (dir, node)-keyed label table is ≤ 2 × node-sized
-    val bLabels = resolveBroadcast(dedges, factor = 2)
-    if (bLabels) {
-      // FULLY driver-resident FW-BW kernel (the pathCounts discipline):
-      // the gate says the directed edge list fits driver memory — one
-      // collect, two directed CSRs, both depth-capped BFS reaches as
-      // primitive walks from the minimum id. Levels are identical to
-      // the fused (dir, node) loop (directions never mix there either);
-      // the distributed loop below stays the spec-pinned twin.
-      val sess = dedges.sparkSession
-      val raw = dedges.select(col(srcCol).cast("long"),
-        col(dstCol).cast("long")).collect2
-      val lng = org.apache.spark.sql.types.LongType
-      val it = org.apache.spark.sql.types.IntegerType
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", lng,
-          nullable = false),
-        org.apache.spark.sql.types.StructField("lvl_fwd", it,
-          nullable = false),
-        org.apache.spark.sql.types.StructField("lvl_bwd", it,
-          nullable = false)))
-      if (raw.isEmpty)
-        return sess.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          outSchema)
-      val allIds = raw.flatMap(p => Array(p._1, p._2))
-      java.util.Arrays.sort(allIds)
-      var n = 0
-      var ri = 0
-      while (ri < allIds.length) {
-        if (n == 0 || allIds(ri) != allIds(n - 1)) {
-          allIds(n) = allIds(ri); n += 1 }
-        ri += 1
-      }
-      val ids = java.util.Arrays.copyOf(allIds, n)
-      def lk(x: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, x)
-      // two directed CSRs: forward s→t, backward t→s
-      def csrOf(swap: Boolean): (Array[Int], Array[Int]) = {
-        val off = new Array[Int](n + 1)
-        raw.foreach { p =>
-          off(lk(if (swap) p._2 else p._1) + 1) += 1 }
-        var a = 0
-        while (a < n) { off(a + 1) += off(a); a += 1 }
-        val fill = java.util.Arrays.copyOf(off, n)
-        val nbr = new Array[Int](raw.length)
-        raw.foreach { p =>
-          val (s, t) = if (swap) (p._2, p._1) else (p._1, p._2)
-          val si = lk(s); nbr(fill(si)) = lk(t); fill(si) += 1 }
-        (off, nbr)
-      }
-      def reach(off: Array[Int], nbr: Array[Int]): Array[Int] = {
-        val lvl = new Array[Int](n)
-        java.util.Arrays.fill(lvl, -1)
-        lvl(0) = 0 // pivot = minimum id = index 0
-        var frontier = Array(0)
-        var d = 1
-        while (d <= maxDepth && frontier.nonEmpty) {
-          val next = scala.collection.mutable.ArrayBuffer.empty[Int]
-          frontier.foreach { s =>
-            var j = off(s)
-            val end = off(s + 1)
-            while (j < end) {
-              val t = nbr(j)
-              if (lvl(t) < 0) { lvl(t) = d; next += t }
-              j += 1
-            }
+    collectEdges(dedges, srcCol, dstCol, factor = 2) match {
+      case Some(g) =>
+        // both depth-capped reaches as primitive walks from the minimum id
+        // over two directed CSRs — directions never mix, as in the fused
+        // (dir, node) loop
+        val rows =
+          if (g.m == 0) Nil
+          else {
+            val (fOff, fNbr) = csr(g.n, g.iu, g.iv)
+            val (bOff, bNbr) = csr(g.n, g.iv, g.iu)
+            val lvlF = csrLevels(fOff, fNbr, 0, maxDepth)
+            val lvlB = csrLevels(bOff, bNbr, 0, maxDepth)
+            (0 until g.n).collect { case i if lvlF(i) >= 0 && lvlB(i) >= 0 =>
+              Row(g.ids(i), lvlF(i), lvlB(i)) }
           }
-          frontier = next.toArray
-          d += 1
+        localDf(dedges.sparkSession, StructType(Seq(
+            StructField("node", LongType, nullable = false),
+            StructField("lvl_fwd", IntegerType, nullable = false),
+            StructField("lvl_bwd", IntegerType, nullable = false))), rows)
+      case None =>
+        val par = dedges.sparkSession.sparkContext.defaultParallelism
+        // ONE materialization of the (often expensive) upstream edge build:
+        // the direction-tagged doubled orientation is written directly —
+        // the pivot scalar and every round read these blocks
+        val e = dedges.filter(nonNull(srcCol, dstCol)).select(explode(array(
+            struct(lit(0).as("__dir"), col(srcCol).cast("long").as("__s"),
+              col(dstCol).cast("long").as("__t")),
+            struct(lit(1).as("__dir"), col(dstCol).cast("long").as("__s"),
+              col(srcCol).cast("long").as("__t")))).as("__e"))
+          .select(col("__e.__dir").as("__dir"), col("__e.__s").as("__s"),
+            col("__e.__t").as("__t"))
+          .repartition(par, col("__dir"), col("__s"))
+          .ckpt()
+        // index-sized scalar off the materialized blocks (both node sides
+        // appear as __s in the doubled orientation)
+        val row = e.agg(min(col("__s"))).head()
+        if (row.isNullAt(0)) {
+          Dedup.freeCheckpoints(e)
+          return e.limit(0).select(col("__s").as("node"),
+            lit(0).as("lvl_fwd"), lit(0).as("lvl_bwd"))
         }
-        lvl
-      }
-      val (fOff, fNbr) = csrOf(swap = false)
-      val (bOff, bNbr) = csrOf(swap = true)
-      val lvlF = reach(fOff, fNbr)
-      val lvlB = reach(bOff, bNbr)
-      val outRows = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.Row]
-      var i = 0
-      while (i < n) {
-        if (lvlF(i) >= 0 && lvlB(i) >= 0)
-          outRows += org.apache.spark.sql.Row(ids(i), lvlF(i), lvlB(i))
-        i += 1
-      }
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(outRows.toSeq).asJava,
-        outSchema)
+        val pivot = row.getLong(0)
+        val sess = e.sparkSession
+        var labels = sess.range(1)
+          .select(explode(array(lit(0), lit(1))).as("__dir"),
+            lit(pivot).as("__n"), lit(0).as("__lvl"))
+          .localCheckpoint()
+        val spent = scala.collection.mutable.ArrayBuffer(e, labels)
+        var known = 2L
+        var done = 0
+        var frontierAlive = true
+        while (done < maxDepth && frontierAlive) {
+          // frontier = the rows discovered last round, in BOTH directions
+          val f = labels.filter(col("__lvl") === done)
+            .select(col("__dir"), col("__n").as("__s"))
+          val cand = e.join(f, Seq("__dir", "__s"))
+            .select(col("__dir"), col("__t").as("__n"),
+              lit(done + 1).as("__lvl"))
+          labels = labels.unionByName(cand)
+            .groupBy(col("__dir"), col("__n")).agg(min(col("__lvl")).as("__lvl"))
+            .localCheckpoint(eager = false)
+          spent += labels
+          val now = labels.count()
+          frontierAlive = now > known
+          known = now
+          done += 1
+        }
+        // one (node)-keyed fold replaces the fwd ⋈ bwd join: each (dir, n)
+        // appears once, so the min-when picks that direction's level; inner
+        // semantics = both levels present
+        val result = labels
+          .groupBy(col("__n"))
+          .agg(min(when(col("__dir") === 0, col("__lvl"))).as("lvl_fwd"),
+            min(when(col("__dir") === 1, col("__lvl"))).as("lvl_bwd"))
+          .filter(col("lvl_fwd").isNotNull && col("lvl_bwd").isNotNull)
+          .select(col("__n").as("node"), col("lvl_fwd"), col("lvl_bwd"))
+          .localCheckpoint()
+        Dedup.freeCheckpoints(spent.toSeq: _*)
+        result
     }
-    val par = dedges.sparkSession.sparkContext.defaultParallelism
-    // ONE materialization of the (often expensive) upstream edge build:
-    // the direction-tagged doubled orientation is written directly —
-    // the pivot scalar and every round read these blocks
-    val e = dedges.select(explode(array(
-        struct(lit(0).as("__dir"), col(srcCol).cast("long").as("__s"),
-          col(dstCol).cast("long").as("__t")),
-        struct(lit(1).as("__dir"), col(dstCol).cast("long").as("__s"),
-          col(srcCol).cast("long").as("__t")))).as("__e"))
-      .select(col("__e.__dir").as("__dir"), col("__e.__s").as("__s"),
-        col("__e.__t").as("__t"))
-      .repartition(par, col("__dir"), col("__s"))
-      .ckpt()
-    // index-sized scalar off the materialized blocks (both node sides
-    // appear as __s in the doubled orientation)
-    val row = e.agg(min(col("__s"))).head()
-    if (row.isNullAt(0)) {
-      Dedup.freeCheckpoints(e)
-      return e.limit(0).select(col("__s").as("node"),
-        lit(0).as("lvl_fwd"), lit(0).as("lvl_bwd"))
-    }
-    val pivot = row.getLong(0)
-    val sess = e.sparkSession
-    var labels = sess.range(1)
-      .select(explode(array(lit(0), lit(1))).as("__dir"),
-        lit(pivot).as("__n"), lit(0).as("__lvl"))
-      .localCheckpoint()
-    val spent = scala.collection.mutable.ArrayBuffer(e, labels)
-    var known = 2L
-    var done = 0
-    var frontierAlive = true
-    while (done < maxDepth && frontierAlive) {
-      // frontier = the rows discovered last round, in BOTH directions
-      val f = labels.filter(col("__lvl") === done)
-        .select(col("__dir"), col("__n").as("__s"))
-      val cand = e.join(f, Seq("__dir", "__s"))
-        .select(col("__dir"), col("__t").as("__n"),
-          lit(done + 1).as("__lvl"))
-      labels = labels.unionByName(cand)
-        .groupBy(col("__dir"), col("__n")).agg(min(col("__lvl")).as("__lvl"))
-        .localCheckpoint(eager = false)
-      spent += labels
-      val now = labels.count()
-      frontierAlive = now > known
-      known = now
-      done += 1
-    }
-    // one (node)-keyed fold replaces the fwd ⋈ bwd join: each (dir, n)
-    // appears once, so the min-when picks that direction's level; inner
-    // semantics = both levels present
-    val result = labels
-      .groupBy(col("__n"))
-      .agg(min(when(col("__dir") === 0, col("__lvl"))).as("lvl_fwd"),
-        min(when(col("__dir") === 1, col("__lvl"))).as("lvl_bwd"))
-      .filter(col("lvl_fwd").isNotNull && col("lvl_bwd").isNotNull)
-      .select(col("__n").as("node"), col("lvl_fwd"), col("lvl_bwd"))
-      .localCheckpoint()
-    Dedup.freeCheckpoints(spent.toSeq: _*)
-    result
   }
 
   /** WEIGHTED personalized PageRank — [[personalizedPagerank]] with
@@ -1408,7 +1224,7 @@ object Graph {
       .select(col("__e.__s").as("__s"), col("__e.__t").as("__t"),
         col("__e.__w").as("__w"))
     if (bState) {
-      // DRIVER-RESIDENT rank state (r17 chain-shortening, applied r18):
+      // DRIVER-RESIDENT rank state:
       // the (node → pr) table is node-sized and resolveBroadcast just
       // declared it broadcast-eligible — state that fits an executor
       // broadcast fits the driver. Two structural wins over the
@@ -1448,17 +1264,11 @@ object Graph {
         val seedSet = seedIds.toSet
         var pr = scala.collection.mutable.HashMap[Long, Long](
           seedIds.map(_ -> 1000000L): _*)
-        val lng = org.apache.spark.sql.types.LongType
-        val fSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__s", lng, nullable = false),
-          org.apache.spark.sql.types.StructField("__pr", lng, nullable = false),
-          org.apache.spark.sql.types.StructField("__wk", lng, nullable = false)))
+        val fSchema = StructType(Seq("__s", "__pr", "__wk")
+          .map(StructField(_, LongType, nullable = false)))
         (1 to iters).foreach { _ =>
-          val frontier = pr.toSeq.filter(_._2 != 0L)
-          val fDf = sess.createDataFrame(
-            scala.jdk.CollectionConverters.SeqHasAsJava(
-              frontier.map { case (n, p) =>
-                org.apache.spark.sql.Row(n, p, strength(n)) }).asJava, fSchema)
+          val fDf = localDf(sess, fSchema, pr.toSeq.collect {
+            case (n, p) if p != 0L => Row(n, p, strength(n)) })
           val folded = e.join(broadcast(fDf), Seq("__s"))
             .groupBy(col("__t"))
             .agg(sum(expr("(__pr * __w) div __wk")).as("__c"))
@@ -1473,13 +1283,9 @@ object Graph {
           seedIds.foreach { s => if (!next.contains(s)) next(s) = 150000L }
           pr = next
         }
-        val outRows = strength.keys.toSeq.map { n =>
-          org.apache.spark.sql.Row(n, pr.getOrElse(n, 0L)) }
-        return sess.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(outRows).asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", lng, nullable = false),
-            org.apache.spark.sql.types.StructField("wppr", lng, nullable = false))))
+        return localDf(sess, StructType(Seq("node", "wppr")
+            .map(StructField(_, LongType, nullable = false))),
+          strength.keys.toSeq.map(n => Row(n, pr.getOrElse(n, 0L))))
       } finally {
         sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
         Dedup.freeCheckpoints(e)
@@ -1683,13 +1489,12 @@ object Graph {
     * every production driver/executor can hold); otherwise the
     * distributed twin runs. The limit is the only selector: 0 forces the
     * twin on any non-empty proxy, a very large value lets the tier run
-    * wherever its type preconditions hold. `factor` scales the proxy
-    * where the broadcast side can outgrow the edge frame (multi-source
-    * visited state ≈ nSources × node frame). Operators whose
-    * PARTITIONING choice depends on the result (the frontier/visited
-    * loop family) resolve BEFORE anything materializes and ride the
-    * optimizer's stats estimate; operators that checkpoint first
-    * (triangle/support family) resolve from measured block sizes. */
+    * wherever its id columns are BIGINT. `factor` scales the proxy
+    * where the driver state can outgrow the edge frame (multi-source
+    * visited state ≈ nSources × node frame). Operators that decide
+    * before anything materializes ride the optimizer's stats estimate;
+    * operators that checkpoint first (triangle/support family, HITS,
+    * the Louvain audit) resolve from measured block sizes. */
   private[graft] def resolveBroadcast(proxy: DataFrame,
                                       factor: Long = 1L): Boolean = {
     val limit = proxy.sparkSession.conf
@@ -1700,12 +1505,12 @@ object Graph {
   private def orientedAdjacency(pairs: DataFrame, uCol: String,
                                 vCol: String,
                                 partitionByTarget: Boolean = false): DataFrame = {
-    // partitionByTarget: broadcast-frontier loops want the edges
-    // co-located by the CONTRIBUTION TARGET — the per-round candidate
-    // fold groupBy(__n = __t) then rides this partitioning through the
-    // alias and the whole round is exchange-free. Frontier-shuffle loops
-    // (the past-the-limit twins) want __s so the delta equi-join is
-    // co-located instead.
+    // partitionByTarget: loops that broadcast their frontier (the Brandes
+    // twins) want the edges co-located by the CONTRIBUTION TARGET — the
+    // per-round candidate fold groupBy(__n = __t) then rides this
+    // partitioning through the alias and the whole round is
+    // exchange-free. Shuffled-frontier loops want __s so the delta
+    // equi-join is co-located instead.
     val key = if (partitionByTarget) "__t" else "__s"
     pairs.select(explode(array(
         struct(col(uCol).as("__s"), col(vCol).as("__t")),
@@ -1989,139 +1794,87 @@ object Graph {
   def labelPropagate(pairs: DataFrame, uCol: String, vCol: String,
                      rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    // frontier/label frames are node-sized — bounded by the pair stream
-    val bFrontier = resolveBroadcast(pairs)
-    val longLpIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (bFrontier && longLpIds) {
-      // FULLY driver-resident min-label fold (the kcorePeel discipline):
-      // the gate says the pair stream fits driver memory, so the r-round
-      // synchronous min fold runs over one CSR off one collect — the
-      // delta optimization is semantics-free under the min-fold's
-      // idempotence, so the plain synchronous rounds are bit-equal.
-      // Index space: ids sort ascending, min index == min id. Duplicate
-      // pairs ride free (min-fold multiplicity-invariant). BIGINT ids
-      // only; the distributed loop below stays the spec-pinned twin.
-      val sess = pairs.sparkSession
-      val raw = pairs.select(col(uCol), col(vCol))
-        .collect2
-      val (ids, off, nbr) = driverCsr(raw, dedup = false)
-      val n = ids.length
-      var lab = Array.tabulate(n)(identity)
-      var r0 = 0
-      while (r0 < rounds) {
-        val nxt = new Array[Int](n)
-        var i = 0
-        while (i < n) {
-          var m0 = lab(i)
-          var j = off(i)
-          val end = off(i + 1)
-          while (j < end) {
-            val l = lab(nbr(j))
-            if (l < m0) m0 = l
-            j += 1
+    collectEdges(pairs, uCol, vCol) match {
+      case Some(g) =>
+        // the r-round synchronous min fold over one CSR — the twin's delta
+        // rounds are semantics-free under the min-fold's idempotence, so
+        // plain synchronous rounds are bit-equal; duplicate pairs ride free
+        val (off, nbr) = driverCsr(g, dedup = false)
+        var lab = Array.tabulate(g.n)(identity)
+        var r0 = 0
+        while (r0 < rounds) {
+          val nxt = new Array[Int](g.n)
+          var i = 0
+          while (i < g.n) {
+            var m0 = lab(i)
+            var j = off(i)
+            while (j < off(i + 1)) { m0 = math.min(m0, lab(nbr(j))); j += 1 }
+            nxt(i) = m0
+            i += 1
           }
-          nxt(i) = m0
-          i += 1
+          lab = nxt
+          r0 += 1
         }
-        lab = nxt
-        r0 += 1
-      }
-      val lng = org.apache.spark.sql.types.LongType
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(
-          (0 until n).map(i =>
-            org.apache.spark.sql.Row(ids(i), ids(lab(i))))
-            .asInstanceOf[Seq[org.apache.spark.sql.Row]]).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", lng),
-          org.apache.spark.sql.types.StructField("label", lng))))
+        nodeValueDf(pairs.sparkSession, "label", g.ids, lab.map(g.ids))
+      case None =>
+        val e = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)), uCol, vCol)
+          .ckpt()
+        val sess = e.sparkSession
+        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
+        val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+        val result = try {
+          sess.conf.set("spark.sql.adaptive.enabled", "false")
+          // every node appears as a source of the __s-partitioned oriented
+          // frame, so the seed distinct is exchange-free.
+          // FRONTIER DELTA (r12 verdict): only labels that CHANGED last round
+          // push this round — an unchanged node's contribution was already
+          // folded into its neighbors when it last changed, so re-pushing it
+          // is a no-op by the min-fold's idempotence. Round 0 seeds the delta
+          // with every node (all labels fresh); the seed is persist-marked
+          // because round 1 reads it twice (label side + delta side).
+          var merged = e.select(col("__s").as("__n")).distinct()
+            .select(col("__n"), col("__n").as("__l"), lit(true).as("__chg"))
+            .persist()
+          cached += merged
+          var r = 0
+          while (r < rounds) {
+            merged = minLabelDeltaRound(e,
+              merged.select(col("__n"), col("__l")),
+              merged.filter(col("__chg")).select(col("__n"), col("__l")))
+              .persist()
+            cached += merged
+            r += 1
+          }
+          merged.select(col("__n").as("node"), col("__l").as("label"))
+            .ckpt()
+        } finally {
+          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+          cached.foreach(_.unpersist(blocking = false))
+          Dedup.freeCheckpoints(e)
+        }
+        result
     }
-    val e = orientedAdjacency(pairs, uCol, vCol,
-      partitionByTarget = bFrontier).ckpt()
-    val sess = e.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val result = try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      // every node appears on BOTH sides of the oriented frame, so the
-      // seed reads whichever side the edges are co-located by and the
-      // distinct is exchange-free — and on the broadcast path the seed
-      // (and every later round) arrives partitioned by __n for the merge.
-      // FRONTIER DELTA (r12 verdict): only labels that CHANGED last round
-      // push this round — an unchanged node's contribution was already
-      // folded into its neighbors when it last changed, so re-pushing it
-      // is a no-op by the min-fold's idempotence. Round 0 seeds the delta
-      // with every node (all labels fresh); the seed is persist-marked
-      // because round 1 reads it twice (label side + delta side).
-      val seedSide = if (bFrontier) "__t" else "__s"
-      var merged = e.select(col(seedSide).as("__n")).distinct()
-        .select(col("__n"), col("__n").as("__l"), lit(true).as("__chg"))
-        .persist()
-      cached += merged
-      var r = 0
-      while (r < rounds) {
-        merged = minLabelDeltaRound(e,
-          merged.select(col("__n"), col("__l")),
-          merged.filter(col("__chg")).select(col("__n"), col("__l")),
-          bFrontier).persist()
-        cached += merged
-        r += 1
-      }
-      merged.select(col("__n").as("node"), col("__l").as("label"))
-        .ckpt()
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      cached.foreach(_.unpersist(blocking = false))
-      Dedup.freeCheckpoints(e)
-    }
-    result
   }
 
-  /** One min-label round: push every node's label to its neighbors, fold
-    * with the min-aggregate. The pre-r13 FULL-TABLE shape, kept for the
-    * plan audit and the spec equivalence pin — the production loops use
-    * [[minLabelDeltaRound]]. */
-  private def minLabelRound(e: DataFrame, lab: DataFrame): DataFrame = {
-    val contrib = e
-      .join(lab.select(col("__n").as("__s"), col("__l")), Seq("__s"))
-      .select(col("__t").as("__n"), col("__l"))
-    lab.unionByName(contrib)
-      .groupBy(col("__n")).agg(min(col("__l")).as("__l"))
-  }
-
-  /** One FRONTIER-DELTA min-label round — the [[minLabelRound]] fold with
-    * the full-table exchange cut out. [[minLabelRound]]'s
-    * `lab ∪ contrib → groupBy` re-exchanges the ENTIRE label table every
-    * round (the union discards `lab`'s hash partitioning); here only the
-    * CHANGED rows travel: `delta` shuffles to the edge frame's __s
-    * partitioning (delta-sized), the candidate fold shuffles the
-    * delta-neighborhood contribution stream (never the label table), and
-    * the merge join sees both sides already partitioned by __n (lab from
-    * the previous round's output, candidates from their own fold) — zero
-    * label-table movement. Returns (__n, __l, __chg): the merged labels
-    * plus the changed-this-round flag the caller filters the next delta
-    * from. Equivalent to the full fold by induction: an unchanged node's
-    * push is a replay of the round it last changed, already absorbed by
-    * every neighbor (min-fold idempotence); spec-pinned equal to
-    * [[minLabelRound]] chains in GraphSpec. */
+  /** One FRONTIER-DELTA min-label round: push the labels that CHANGED
+    * last round to their neighbors and fold with the min-aggregate. A
+    * full-table round (`lab ∪ contrib → groupBy`) re-exchanges the ENTIRE
+    * label table every round (the union discards `lab`'s hash
+    * partitioning); here only the changed rows travel: `delta` shuffles
+    * to the edge frame's __s partitioning (delta-sized), the candidate
+    * fold shuffles the delta-neighborhood contribution stream (never the
+    * label table), and the merge join is pinned SHUFFLED HASH so both
+    * sides arrive partitioned by __n (lab from the previous round's
+    * output, candidates from their own fold) — no sort of either table,
+    * zero label-table movement. Returns (__n, __l, __chg): the merged
+    * labels plus the changed-this-round flag the caller filters the next
+    * delta from. Equivalent to the full fold by induction: an unchanged
+    * node's push is a replay of the round it last changed, already
+    * absorbed by every neighbor (min-fold idempotence). */
   private def minLabelDeltaRound(e: DataFrame, lab: DataFrame,
-                                 delta: DataFrame,
-                                 bFrontier: Boolean = true): DataFrame = {
-    // ONE exchange per round (the candidate fold): the node-sized
-    // frontier BROADCASTS into the __s-partitioned edge frame (map-only
-    // push — the kcore survivor-set pattern; `bFrontier = false`
-    // keeps a spec-pinned shuffled-hash path for billion-node graphs
-    // where even the frontier doesn't broadcast), and the merge join is
-    // pinned SHUFFLED HASH so both sides arrive hash-partitioned by __n
-    // — no sort of either table, no second exchange, no broadcast-build
-    // job for the label side. Measured: an all-SHJ round paid one extra
-    // delta exchange per round, and a sort-merge round re-sorted the
-    // full label table.
+                                 delta: DataFrame): DataFrame = {
     val d = delta.select(col("__n").as("__s"), col("__l"))
-    val dSide = if (bFrontier) broadcast(d) else d.hint("shuffle_hash")
-    val cand = e.join(dSide, Seq("__s"))
+    val cand = e.join(d.hint("shuffle_hash"), Seq("__s"))
       .select(col("__t").as("__n"), col("__l"))
       .groupBy(col("__n")).agg(min(col("__l")).as("__c"))
     lab.join(cand.hint("shuffle_hash"), Seq("__n"), "left")
@@ -2130,79 +1883,44 @@ object Graph {
         (col("__c").isNotNull && col("__c") < col("__l")).as("__chg"))
   }
 
-  /** CONNECTED COMPONENTS by hash-min label propagation to FIXPOINT over
-    * an undirected pair list (duplicate pairs allowed) — (node,
-    * component) with component = min node id in the component. Each
-    * round is [[minLabelDeltaRound]]'s frontier-delta join + min-fold
-    * (only changed labels travel); convergence detection rides the SAME
-    * action that materializes the round (the [[bfsLevels]] liveness
-    * pattern): labels are monotone nonincreasing under the min-fold, so
-    * a zero changed-row count means no label moved.
-    * Hash-min needs O(diameter) rounds — right for the small-diameter
-    * graphs batch analytics feeds it; adversarial long-path graphs want
-    * [[Dedup.connectedComponentsStar]]'s O(log n) star contraction
-    * (same contract, spec-pinned equal). Throws after `maxRounds`
+  /** CONNECTED COMPONENTS to FIXPOINT over an undirected pair list
+    * (duplicate pairs allowed) — (node, component) with component = min
+    * node id in the component. The driver tier is one union-find fold
+    * (union by min root, so every root IS its component's minimum). The
+    * twin ([[connectedComponentsTwin]]) is hash-min label propagation:
+    * each round is [[minLabelDeltaRound]]'s frontier-delta join +
+    * min-fold, and convergence detection rides the SAME action that
+    * materializes the round (the [[bfsLevels]] liveness pattern): labels
+    * are monotone nonincreasing under the min-fold, so a zero
+    * changed-row count means no label moved. Hash-min needs O(diameter)
+    * rounds — right for the small-diameter graphs batch analytics feeds
+    * it; adversarial long-path graphs want
+    * [[Dedup.connectedComponentsStar]]'s O(log n) star contraction (same
+    * contract, spec-pinned equal). The twin throws after `maxRounds`
     * instead of returning a half-converged labeling. */
   def connectedComponentsMinLabel(edges: DataFrame, uCol: String, vCol: String,
                                   maxRounds: Int = 50): DataFrame =
-    // frontier/label frames are node-sized — bounded by the pair stream
-    connectedComponentsBody(edges, uCol, vCol, maxRounds,
-      resolveBroadcast(edges))
-
-  /** [[connectedComponentsMinLabel]] with the tier decision made by the
-    * caller: Louvain's all-distributed branch runs its per-level CC as
-    * the twin (`bFrontier = false`). */
-  private def connectedComponentsBody(edges: DataFrame, uCol: String,
-                                      vCol: String, maxRounds: Int,
-                                      bFrontier: Boolean): DataFrame = {
-    val longCcIds = edges.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      edges.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (bFrontier && longCcIds) {
-      // DRIVER-RESIDENT union-find (the kcorePeel discipline): the gate
-      // says the edge list fits driver memory, so the min-label fixpoint
-      // — a distributed loop paying one count action per round, ~37 jobs
-      // on the support subgraph — collapses to one collect plus a DSU
-      // fold whose labels are the per-component MINIMUM node id, exactly
-      // the min-fold fixpoint. This also serves the Louvain driver path,
-      // which runs this function once per level on its pointer graph.
-      // The distributed loop below stays the spec-pinned twin.
-      val sess = edges.sparkSession
-      val rows = edges.select(col(uCol), col(vCol))
-        .collect2
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r0 = x
-        while (parent.getOrElse(r0, r0) != r0) r0 = parent(r0)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nx = parent(c); parent(c) = r0; c = nx }
-        r0
-      }
-      rows.foreach { case (u, v) =>
-        parent.getOrElseUpdate(u, u)
-        parent.getOrElseUpdate(v, v)
-        val ru = find(u); val rv = find(v)
-        // union by MIN root: the component label IS the minimum id
-        if (ru < rv) parent(rv) = ru
-        else if (rv < ru) parent(ru) = rv
-      }
-      val lng = org.apache.spark.sql.types.LongType
-      val outRows = parent.keysIterator.map { n =>
-        org.apache.spark.sql.Row(n, find(n)) }.toSeq
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(outRows).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", lng,
-            nullable = false),
-          org.apache.spark.sql.types.StructField("component", lng,
-            nullable = false))))
+    collectEdges(edges, uCol, vCol) match {
+      case Some(g) =>
+        val parent = Array.tabulate(g.n)(identity)
+        var i = 0
+        while (i < g.m) { unionMin(parent, g.iu(i), g.iv(i)); i += 1 }
+        localDf(edges.sparkSession, StructType(Seq(
+            StructField("node", LongType, nullable = false),
+            StructField("component", LongType, nullable = false))),
+          g.ids.indices.map(j => Row(g.ids(j), g.ids(findRoot(parent, j)))))
+      case None => connectedComponentsTwin(edges.filter(nonNull(uCol, vCol)),
+        uCol, vCol, maxRounds)
     }
-    val e = orientedAdjacency(edges, uCol, vCol,
-      partitionByTarget = bFrontier).ckpt()
+
+  /** [[connectedComponentsMinLabel]]'s distributed twin; Louvain's twin
+    * runs its per-level pointer-graph CC through it directly. */
+  private def connectedComponentsTwin(edges: DataFrame, uCol: String,
+                                      vCol: String,
+                                      maxRounds: Int): DataFrame = {
+    val e = orientedAdjacency(edges, uCol, vCol).ckpt()
     val spent = scala.collection.mutable.ArrayBuffer(e)
-    val seedSide = if (bFrontier) "__t" else "__s"
-    var lab = e.select(col(seedSide).as("__n")).distinct()
+    var lab = e.select(col("__s").as("__n")).distinct()
       .withColumn("__l", col("__n"))
       .localCheckpoint(eager = false)
     spent += lab
@@ -2215,7 +1933,7 @@ object Graph {
     var converged = false
     var r = 0
     while (r < maxRounds && !converged) {
-      val merged = minLabelDeltaRound(e, lab, delta, bFrontier)
+      val merged = minLabelDeltaRound(e, lab, delta)
         .localCheckpoint(eager = false)
       spent += merged
       val changed = merged.filter(col("__chg")).count()
@@ -2250,153 +1968,55 @@ object Graph {
     require(nSources >= 1, s"nSources must be >= 1, got $nSources")
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
     // the (src, node) level table is ≤ nSources × node-sized
-    val bState = resolveBroadcast(pairs, factor = nSources)
-    val longMsIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (bState && longMsIds) {
-      // FULLY driver-resident multi-source BFS (the kcorePeel/pathCounts
-      // discipline): the gate says the pair stream fits driver memory,
-      // so all sources BFS over one CSR adjacency off one collect — no
-      // oriented checkpoint, no per-round candidate job. Duplicate pairs
-      // are harmless to level-BFS (first discovery wins either way).
-      // Restricted to BIGINT ids so the schema matches the twins; the
-      // LocalRelation-loop tier below keeps non-long callers, and the
-      // all-distributed loop remains the past-broadcast twin.
-      val sess = pairs.sparkSession
-      val raw = pairs.select(col(uCol), col(vCol))
-        .collect2
-      val lng = org.apache.spark.sql.types.LongType
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("src", lng),
-        org.apache.spark.sql.types.StructField("node", lng),
-        org.apache.spark.sql.types.StructField("lvl",
-          org.apache.spark.sql.types.IntegerType, nullable = false)))
-      val (ids, off, nbr) = driverCsr(raw, dedup = false)
-      val n = ids.length
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.Row]
-      val lvl = new Array[Int](n)
-      var srcI = 0
-      while (srcI < math.min(nSources, n)) {
-        val seed = ids(srcI)
-        java.util.Arrays.fill(lvl, -1)
-        lvl(srcI) = 0
-        out += org.apache.spark.sql.Row(seed, seed, 0)
-        var frontier = Array(srcI)
-        var d = 1
-        while (d <= maxDepth && frontier.nonEmpty) {
-          val next = scala.collection.mutable.ArrayBuffer.empty[Int]
-          frontier.foreach { s =>
-            var j = off(s)
-            val end = off(s + 1)
-            while (j < end) {
-              val t = nbr(j)
-              if (lvl(t) < 0) {
-                lvl(t) = d
-                next += t
-                out += org.apache.spark.sql.Row(seed, ids(t), d)
-              }
-              j += 1
-            }
-          }
-          frontier = next.toArray
-          d += 1
+    collectEdges(pairs, uCol, vCol, factor = nSources) match {
+      case Some(g) =>
+        // every source BFSes over one CSR; duplicate pairs are harmless to
+        // level-BFS (first discovery wins either way)
+        val (off, nbr) = driverCsr(g, dedup = false)
+        val rows = (0 until math.min(nSources, g.n)).flatMap { s =>
+          val lvl = csrLevels(off, nbr, s, maxDepth)
+          lvl.indices.collect { case i if lvl(i) >= 0 =>
+            Row(g.ids(s), g.ids(i), lvl(i)) }
         }
-        srcI += 1
-      }
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(out.toSeq).asJava,
-        outSchema)
-    }
-    val e = orientedAdjacency(pairs, uCol, vCol).localCheckpoint()
-    val sess = e.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    if (bState) {
-      // DRIVER-RESIDENT level state (r18 — the sccPivot/pathCounts
-      // pattern, keyed (src, node)): the pre-r18 loop re-aggregated the
-      // FULL (src, node) state every round and always ran maxDepth
-      // rounds; here each round is ONE cluster job (frontier re-enters
-      // as a LocalRelation broadcast, candidates dedup cluster-side to
-      // frontier-neighborhood size) with first-discovery-wins ≡
-      // min-level merge as a driver map lookup, and the loop EXITS as
-      // soon as a frontier comes back empty (this graph family
-      // saturates well inside the depth cap). Past the limit the twin
-      // keeps the all-distributed loop for nSources × |V| past the
-      // broadcast limit (spec-pinned equal in GraphSpec).
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        // type-agnostic node keys (the pathCountsLoop discipline):
-        // integer-typed caller columns must keep working
-        val nType = e.schema("__s").dataType
-        val srcIds = e.select(col("__s")).distinct()
-          .orderBy(col("__s")).limit(nSources)
-          .collect().map(_.get(0)).toSeq
-        val lvl = scala.collection.mutable.HashMap[(Any, Any), Int](
-          srcIds.map(s => ((s: Any, s: Any)) -> 0): _*)
-        var frontier: Seq[(Any, Any)] = srcIds.map(s => (s, s))
-        val fSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__src", nType),
-          org.apache.spark.sql.types.StructField("__s", nType)))
-        var i = 1
-        while (i <= maxDepth && frontier.nonEmpty) {
-          val fDf = sess.createDataFrame(
-            scala.jdk.CollectionConverters.SeqHasAsJava(
-              frontier.map { case (s, n) =>
-                org.apache.spark.sql.Row(s, n) }).asJava, fSchema)
-          val cand = e.join(broadcast(fDf), Seq("__s"))
-            .select(col("__src"), col("__t")).distinct().collect()
-          frontier = cand.toSeq.flatMap { r =>
-            val key = (r.get(0), r.get(1))
-            if (lvl.contains(key)) None
-            else { lvl(key) = i; Some(key) }
+        localDf(pairs.sparkSession, StructType(Seq(
+            StructField("src", LongType), StructField("node", LongType),
+            StructField("lvl", IntegerType, nullable = false))), rows)
+      case None =>
+        val e = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)), uCol, vCol)
+          .localCheckpoint()
+        val sess = e.sparkSession
+        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
+        val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+        val result = try {
+          sess.conf.set("spark.sql.adaptive.enabled", "false")
+          // every node appears as a source in the oriented frame; the
+          // distinct rides the __s partitioning (exchange-free)
+          val srcs = e.select(col("__s")).distinct()
+            .orderBy(col("__s")).limit(nSources)
+          var labels = srcs.select(col("__s").as("__src"), col("__s").as("__n"),
+            lit(0).as("__lvl"))
+          var i = 1
+          while (i <= maxDepth) {
+            val frontier = labels.filter(col("__lvl") === i - 1)
+              .select(col("__src"), col("__n").as("__s"))
+            val next = e.join(frontier, Seq("__s"))
+              .select(col("__src"), col("__t").as("__n"), lit(i).as("__lvl"))
+            labels = labels.unionByName(next)
+              .groupBy(col("__src"), col("__n")).agg(min(col("__lvl")).as("__lvl"))
+              .persist()
+            cached += labels
+            i += 1
           }
-          i += 1
+          labels.select(col("__src").as("src"), col("__n").as("node"),
+              col("__lvl").as("lvl"))
+            .localCheckpoint()
+        } finally {
+          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+          cached.foreach(_.unpersist(blocking = false))
+          Dedup.freeCheckpoints(e)
         }
-        val outRows = lvl.toSeq.map { case ((s, n), l) =>
-          org.apache.spark.sql.Row(s, n, l) }
-        return sess.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(outRows).asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("src", nType),
-            org.apache.spark.sql.types.StructField("node", nType),
-            org.apache.spark.sql.types.StructField("lvl",
-              org.apache.spark.sql.types.IntegerType, nullable = false))))
-      } finally {
-        sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        Dedup.freeCheckpoints(e)
-      }
+        result
     }
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val result = try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      // every node appears as a source in the oriented frame; the
-      // distinct rides the __s partitioning (exchange-free)
-      val srcs = e.select(col("__s")).distinct()
-        .orderBy(col("__s")).limit(nSources)
-      var labels = srcs.select(col("__s").as("__src"), col("__s").as("__n"),
-        lit(0).as("__lvl"))
-      var i = 1
-      while (i <= maxDepth) {
-        val frontier = labels.filter(col("__lvl") === i - 1)
-          .select(col("__src"), col("__n").as("__s"))
-        val next = e.join(frontier, Seq("__s"))
-          .select(col("__src"), col("__t").as("__n"), lit(i).as("__lvl"))
-        labels = labels.unionByName(next)
-          .groupBy(col("__src"), col("__n")).agg(min(col("__lvl")).as("__lvl"))
-          .persist()
-        cached += labels
-        i += 1
-      }
-      labels.select(col("__src").as("src"), col("__n").as("node"),
-          col("__lvl").as("lvl"))
-        .localCheckpoint()
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      cached.foreach(_.unpersist(blocking = false))
-      Dedup.freeCheckpoints(e)
-    }
-    result
   }
 
   /** SHORTEST-PATH COUNTS from the `nSources` smallest node ids — the
@@ -2443,103 +2063,40 @@ object Graph {
                  nSources: Int, maxDepth: Int,
                  dedupEdges: Boolean = false): DataFrame = {
     require(nSources >= 1, s"nSources must be >= 1, got $nSources")
-    // visited state is ~ nSources x the node frame — scale the proxy
-    val bVisited = resolveBroadcast(pairs, factor = nSources)
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
-    val longPcIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (bVisited && longPcIds) {
-      // FULLY driver-resident Brandes forward pass (the kcorePeel /
-      // ssspBounded discipline): the nSources-scaled gate says the pair
-      // stream itself fits driver memory, so collect it once and run the
-      // level-synchronous σ-fold over a CSR adjacency on the driver — no
-      // doubled-orientation explode/distinct/checkpoint, no per-round
-      // fold job (12 → 2 jobs at sf0.1). Arithmetic is the identical
-      // integer σ-sum / first-discovery-level BFS; restricted to BIGINT
-      // ids so the output schema matches the twins exactly.
-      val sess = pairs.sparkSession
-      val raw = pairs.select(col(uCol), col(vCol))
-        .collect2
-      val lng = org.apache.spark.sql.types.LongType
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("src", lng),
-        org.apache.spark.sql.types.StructField("node", lng),
-        org.apache.spark.sql.types.StructField("lvl",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("paths", lng,
-          nullable = false)))
-      // dense index + CSR: primitive arrays throughout (a boxed HashMap
-      // here measured as the new wall-clock floor once the cluster jobs
-      // were gone); dedup matches the operator's parallel-path contract
-      val (ids, off, nbr) = driverCsr(raw, dedupEdges)
-      val n = ids.length
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.Row]
-      val sig = new Array[Long](n)
-      val lvl = new Array[Int](n)
-      val acc = new Array[Long](n)
-      val touched = new Array[Int](n)
-      var srcI = 0
-      while (srcI < math.min(nSources, n)) {
-        val seed = ids(srcI)
-        java.util.Arrays.fill(lvl, -1)
-        val si = srcI
-        sig(si) = 1L; lvl(si) = 0
-        out += org.apache.spark.sql.Row(seed, seed, 0, 1L)
-        var frontier = Array(si)
-        var d = 1
-        while (d <= maxDepth && frontier.nonEmpty) {
-          var nt = 0
-          frontier.foreach { s =>
-            val sg = sig(s)
-            var j = off(s)
-            val end = off(s + 1)
-            while (j < end) {
-              val t = nbr(j)
-              // σ contributions are strictly positive, so acc == 0 marks
-              // first touch this level; lvl >= 0 marks earlier discovery
-              if (lvl(t) < 0) {
-                if (acc(t) == 0L) { touched(nt) = t; nt += 1 }
-                acc(t) += sg
-              }
-              j += 1
-            }
-          }
-          frontier = new Array[Int](nt)
-          var f = 0
-          while (f < nt) {
-            val t = touched(f)
-            sig(t) = acc(t); lvl(t) = d
-            out += org.apache.spark.sql.Row(seed, ids(t), d, acc(t))
-            acc(t) = 0L
-            frontier(f) = t
-            f += 1
-          }
-          d += 1
+    // visited state is ~ nSources x the node frame — scale the proxy
+    collectEdges(pairs, uCol, vCol, factor = nSources) match {
+      case Some(g) =>
+        // the level-synchronous σ-fold over one CSR (12 → 2 jobs at sf0.1);
+        // dedup matches the operator's parallel-path contract
+        val (off, nbr) = driverCsr(g, dedupEdges)
+        val out = (0 until math.min(nSources, g.n)).flatMap { s =>
+          val (frontiers, sig) = csrSigma(off, nbr, s, maxDepth)
+          frontiers.indices.flatMap(d =>
+            frontiers(d).map(t => Row(g.ids(s), g.ids(t), d, sig(t))))
         }
-        srcI += 1
-      }
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(out.toSeq).asJava,
-        outSchema)
+        localDf(pairs.sparkSession, StructType(Seq(
+            StructField("src", LongType), StructField("node", LongType),
+            StructField("lvl", IntegerType, nullable = false),
+            StructField("paths", LongType, nullable = false))), out.toSeq)
+      case None =>
+        val oriented = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)),
+          uCol, vCol, partitionByTarget = true)
+        val e = checkpointPartitioned(
+          if (dedupEdges) oriented.distinct() else oriented)
+        val sess = e.sparkSession
+        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
+        val result = try {
+          sess.conf.set("spark.sql.adaptive.enabled", "false")
+          val state = pathCountsLoop(e, nSources, maxDepth)
+          state.select(col("__src").as("src"), col("__n").as("node"),
+            col("__lvl").as("lvl"), col("__sig").as("paths"))
+        } finally {
+          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+          Dedup.freeCheckpoints(e)
+        }
+        result
     }
-    val oriented = orientedAdjacency(pairs, uCol, vCol,
-      partitionByTarget = true)
-    val e = checkpointPartitioned(
-      if (dedupEdges) oriented.distinct() else oriented)
-    val sess = e.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val result = try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      val state = pathCountsLoop(e, nSources, maxDepth, bVisited)
-      state.select(col("__src").as("src"), col("__n").as("node"),
-        col("__lvl").as("lvl"), col("__sig").as("paths"))
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      Dedup.freeCheckpoints(e)
-    }
-    result
   }
 
   /** The forward Brandes loop over a PREPARED oriented, __t-partitioned,
@@ -2549,144 +2106,76 @@ object Graph {
     * Returns the final (__src, __n, __lvl, __sig) state as one coalesced
     * checkpoint; every per-round intermediate is freed before returning,
     * the result's blocks belong to the caller. */
-  private def pathCountsLoop(e: DataFrame, nSources: Int, maxDepth: Int,
-                             bVisited: Boolean): DataFrame = {
+  private def pathCountsLoop(e: DataFrame, nSources: Int,
+                             maxDepth: Int): DataFrame = {
     val sess = e.sparkSession
     // every node appears on the __t side of the oriented frame and the
-      // edges are __t-partitioned, so the seed distinct is exchange-free.
-      // The nSources seed ids COLLECT to the driver (index-sized by
-      // contract — a handful of probe sources, the same bounded trade
-      // Similarity.kmeansAssignInt8 makes for its seed ids): the seed
-      // state becomes a LocalRelation, so round 1's two broadcast builds
-      // are driver-local (no cluster job) and the old seed-state
-      // checkpoint job disappears — the r15 chain-shortening lever.
-      val seedIds = e.select(col("__t").as("__s")).distinct()
-        .orderBy(col("__s")).limit(nSources).collect().map(_.get(0))
-      val tType = e.schema("__t").dataType
-      val seedSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__src", tType),
-        org.apache.spark.sql.types.StructField("__n", tType),
-        org.apache.spark.sql.types.StructField("__lvl",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("__sig",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val seedRows = seedIds.map(v =>
-        org.apache.spark.sql.Row(v, v, 0, 1L)).toSeq
-      if (bVisited) {
-        // DRIVER-RESIDENT (src, node) state (r17 chain-shortening): the
-        // state is nSources × node-sized and resolveBroadcast just
-        // declared it broadcast-eligible — what fits an executor
-        // broadcast fits the driver. Each round is then ONE cluster job:
-        // the frontier re-enters as a LocalRelation broadcast (built
-        // driver-side, no job), the candidate σ-fold still rides the
-        // __t-partitioned edge frame exchange-free, and only the
-        // (src, node)-keyed fold RESULT is collected; the anti-merge
-        // against visited keys is a driver HashSet lookup instead of a
-        // per-round broadcast anti-join (two build jobs gone per round).
-        // Arithmetic identical (integer σ sums, min levels, BFS
-        // discovery order); the `bVisited = false` twin below keeps the
-        // all-distributed loop for nSources × |V| past the broadcast
-        // limit (spec-pinned equal in GraphSpec).
-        val visited = scala.collection.mutable.HashSet[(Any, Any)](
-          seedIds.map(v => (v, v)): _*)
-        val state = scala.collection.mutable.ArrayBuffer[
-          org.apache.spark.sql.Row](seedRows: _*)
-        var frontier: Seq[org.apache.spark.sql.Row] = seedRows
-        var i = 1
-        while (i <= maxDepth && frontier.nonEmpty) {
-          val fDf = sess.createDataFrame(
-            scala.jdk.CollectionConverters.SeqHasAsJava(frontier).asJava,
-            seedSchema)
-          val folded = e.join(broadcast(fDf.select(col("__src"),
-              col("__n").as("__s"), col("__sig"), col("__lvl"))), Seq("__s"))
-            .select(col("__src"), col("__t").as("__n"), col("__sig"),
-              col("__lvl"))
-            .groupBy(col("__src"), col("__n"))
-            .agg(sum(col("__sig")).as("__c"),
-              (min(col("__lvl")) + 1).as("__nl"))
-            .collect()
-          frontier = folded.toSeq.flatMap { r =>
-            val key = (r.get(0), r.get(1))
-            if (visited(key)) None
-            else {
-              visited += key
-              Some(org.apache.spark.sql.Row(
-                r.get(0), r.get(1), r.getInt(3), r.getLong(2)))
-            }
-          }
-          state ++= frontier
-          i += 1
-        }
-        return sess.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(state.toSeq).asJava,
-          seedSchema)
-      }
-      // EAGER localCheckpoint per round (not lazy persist): each round's
-      // plan references the previous round TWICE (push side + visited
-      // side), and the two async broadcast-build futures would otherwise
-      // race to materialize the same uncached plan — concurrent
-      // first-readers of an InMemoryRelation each compute it, and the
-      // recompute cascades through the round chain (measured 3× CPU).
-      // Checkpoint blocks are computed exactly once, in round order.
-      val spent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var state = sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(seedRows).asJava,
-        seedSchema)
-      // the frontier is the rows DISCOVERED last round (all new at seed).
-      // The round's level is carried as a COLUMN from the frontier
-      // (lvl + 1), not a lit(i) literal: a baked-in literal makes each
-      // round's generated code a distinct class, so every round runs
-      // JIT-cold — with identical plan text all rounds share one codegen
-      // class, hot from round 2 (measured: the big rounds at first-run
-      // speed were the dominant loop cost).
-      var frontier = state
-      var i = 1
-      while (i <= maxDepth) {
-        // candidate fold: the frontier broadcasts into the
-        // __t-partitioned edges (map-only push); the (src, node) sum
-        // rides the alias partitioning — zero exchange for the round's
-        // dominant stream. min(__lvl) is exact: every frontier row
-        // carries the same level within a round.
-        val d = frontier.select(col("__src"), col("__n").as("__s"),
-          col("__sig"), col("__lvl"))
-        val cand = e.join(broadcast(d), Seq("__s"))
-          .select(col("__src"), col("__t").as("__n"), col("__sig"),
-            col("__lvl"))
-          .groupBy(col("__src"), col("__n"))
-          .agg(sum(col("__sig")).as("__c"),
-            (min(col("__lvl")) + 1).as("__nl"))
-        // delta merge as an ANTI against the visited keys: candidates
-        // hitting an existing (src, node) are discarded (their level is
-        // smaller by BFS — the "keep existing" arm); the survivors ARE
-        // this round's discoveries, σ already summed. On the broadcast
-        // path the anti runs IN the fold's stage (no exchange, no join
-        // of the state table) — a whole round is one riding stage plus
-        // its two driver broadcast builds, and state is only ever
-        // UNIONED, never re-aggregated or re-shuffled. `bVisited =
-        // false` is the 100×-scale twin for graphs where nSources × |V|
-        // outgrows a broadcast: a shuffled-hash anti (state exchanges
-        // per round, delta-merge asymptotics unchanged) — spec-pinned
-        // equal in GraphSpec.
-        val vis = state.select(col("__src"), col("__n"))
-        val visSide = if (bVisited) broadcast(vis)
-          else vis.hint("shuffle_hash")
-        val newRows = cand.join(visSide, Seq("__src", "__n"), "left_anti")
-          .select(col("__src"), col("__n"), col("__nl").as("__lvl"),
-            col("__c").as("__sig"))
-          .ckpt()
-        spent += newRows
-        frontier = newRows
-        state = state.unionByName(newRows)
-        i += 1
-      }
-      // coalesce the union-of-rounds (1 + rounds × par cached parts)
-      // back to par partitions — no exchange, just fewer tiny tasks for
-      // the result checkpoint and its consumers
-      val out = state
-        .coalesce(sess.sparkContext.defaultParallelism)
-        .ckpt()
-      Dedup.freeCheckpoints(spent.toSeq: _*)
-      out
+    // edges are __t-partitioned, so the seed distinct is exchange-free.
+    // The nSources seed ids COLLECT to the driver (index-sized by
+    // contract — a handful of probe sources, the same bounded trade
+    // Similarity.kmeansAssignInt8 makes for its seed ids): the seed
+    // state becomes a LocalRelation, so round 1's broadcast build is
+    // driver-local (no cluster job) and no seed-state checkpoint job runs.
+    val seedIds = e.select(col("__t").as("__s")).distinct()
+      .orderBy(col("__s")).limit(nSources).collect().map(_.get(0))
+    val tType = e.schema("__t").dataType
+    // EAGER localCheckpoint per round (not lazy persist): each round's
+    // plan references the previous round TWICE (push side + visited
+    // side), and concurrent first-readers of an uncached InMemoryRelation
+    // each compute it — the recompute cascades through the round chain
+    // (measured 3× CPU). Checkpoint blocks are computed exactly once, in
+    // round order.
+    val spent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var state = localDf(sess, StructType(Seq(
+        StructField("__src", tType), StructField("__n", tType),
+        StructField("__lvl", IntegerType, nullable = false),
+        StructField("__sig", LongType, nullable = false))),
+      seedIds.map(v => Row(v, v, 0, 1L)).toSeq)
+    // the frontier is the rows DISCOVERED last round (all new at seed)
+    var frontier = state
+    var i = 1
+    while (i <= maxDepth) {
+      val newRows = pathCountsRound(e, state, frontier).ckpt()
+      spent += newRows
+      frontier = newRows
+      state = state.unionByName(newRows)
+      i += 1
+    }
+    // coalesce the union-of-rounds (1 + rounds × par cached parts)
+    // back to par partitions — no exchange, just fewer tiny tasks for
+    // the result checkpoint and its consumers
+    val out = state
+      .coalesce(sess.sparkContext.defaultParallelism)
+      .ckpt()
+    Dedup.freeCheckpoints(spent.toSeq: _*)
+    out
+  }
+
+  /** One forward Brandes round of [[pathCountsLoop]], shared with the plan
+    * audit: the (src, node, lvl, σ) rows first discovered this round.
+    * Candidate fold: the frontier broadcasts into the __t-partitioned
+    * edges (map-only push) and the (src, node) σ-sum rides the alias
+    * partitioning — zero exchange for the round's dominant stream.
+    * min(__lvl) is exact: every frontier row carries the same level. The
+    * level is carried as a COLUMN (lvl + 1), not a lit(i) literal: a
+    * baked-in literal makes each round's generated code a distinct class,
+    * so every round would run JIT-cold. Delta merge: a shuffled-hash ANTI
+    * against the visited keys drops candidates hitting an existing
+    * (src, node) (their level is smaller by BFS); the survivors ARE the
+    * round's discoveries, σ already summed, and state only ever UNIONS
+    * them in — it is never re-aggregated. */
+  private def pathCountsRound(e: DataFrame, state: DataFrame,
+                              frontier: DataFrame): DataFrame = {
+    val d = frontier.select(col("__src"), col("__n").as("__s"),
+      col("__sig"), col("__lvl"))
+    e.join(broadcast(d), Seq("__s"))
+      .select(col("__src"), col("__t").as("__n"), col("__sig"), col("__lvl"))
+      .groupBy(col("__src"), col("__n"))
+      .agg(sum(col("__sig")).as("__c"), (min(col("__lvl")) + 1).as("__nl"))
+      .join(state.select(col("__src"), col("__n")).hint("shuffle_hash"),
+        Seq("__src", "__n"), "left_anti")
+      .select(col("__src"), col("__n"), col("__nl").as("__lvl"),
+        col("__c").as("__sig"))
   }
 
   /** Sampled BETWEENNESS centrality — the full Brandes round over the
@@ -2716,458 +2205,237 @@ object Graph {
                          dedupEdges: Boolean = false,
                          scaleBits: Int = 20): DataFrame = {
     require(nSources >= 1, s"nSources must be >= 1, got $nSources")
-    // per-level state is ~ nSources x the node frame — scale the proxy
-    val bDelta = resolveBroadcast(pairs, factor = nSources)
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     require(scaleBits >= 1 && scaleBits <= 40,
       s"scaleBits must be in [1, 40], got $scaleBits")
     val scale = 1L << scaleBits
-    val longBwIds = pairs.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      pairs.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (bDelta && longBwIds) {
-      // FULLY driver-resident Brandes (the pathCounts discipline, both
-      // passes): the nSources-scaled gate says the pair stream fits
-      // driver memory, so forward σ-BFS and the backward δ ladder run
-      // over one CSR off one collect — no per-level fold job either
-      // direction. Arithmetic replicates the ladder exactly: deepest
-      // level c = SCALE div σ; F(v) = Σ c(w) pushed from every level-
-      // (l+1) node w along its (possibly duplicated) incident entries;
-      // δ = σ·F accumulated per NODE across sources; c = (SCALE+δ) div σ.
-      // Only nodes discovered at levels 1..maxDepth emit (seeds do not),
-      // matching the distributed union over the level frames.
-      val sess = pairs.sparkSession
-      val raw = pairs.select(col(uCol), col(vCol))
-        .collect2
-      val (ids, off, nbr) = driverCsr(raw, dedupEdges)
-      val n = ids.length
-      val sig = new Array[Long](n)
-      val lvl = new Array[Int](n)
-      val accF = new Array[Long](n)
-      val touched = new Array[Int](n)
-      val cArr = new Array[Long](n)
-      val deltaAcc = new Array[Long](n)
-      val emits = new Array[Boolean](n)
-      val frontiers = new Array[Array[Int]](maxDepth + 1)
-      var srcI = 0
-      while (srcI < math.min(nSources, n)) {
-        java.util.Arrays.fill(lvl, -1)
-        sig(srcI) = 1L; lvl(srcI) = 0
-        frontiers(0) = Array(srcI)
-        var d = 1
-        while (d <= maxDepth) {
-          var nt = 0
-          val prev = frontiers(d - 1)
-          if (prev != null && prev.nonEmpty) {
-            prev.foreach { s =>
-              val sg = sig(s)
-              var j = off(s)
-              val end = off(s + 1)
-              while (j < end) {
-                val t = nbr(j)
-                if (lvl(t) < 0) {
-                  if (accF(t) == 0L) { touched(nt) = t; nt += 1 }
-                  accF(t) += sg
-                }
-                j += 1
-              }
+    // per-level state is ~ nSources x the node frame — scale the proxy
+    collectEdges(pairs, uCol, vCol, factor = nSources) match {
+      case Some(g) =>
+        // both Brandes passes over one CSR, replicating the twin's ladder
+        // exactly: deepest level c = SCALE div σ; F(v) = Σ c(w) pushed from
+        // every level-(l+1) node w along its (possibly duplicated) incident
+        // entries; δ = σ·F accumulated per NODE across sources;
+        // c = (SCALE + δ) div σ. Only nodes discovered at levels
+        // 1..maxDepth emit (seeds do not), like the twin's level union.
+        val (off, nbr) = driverCsr(g, dedupEdges)
+        val accF = new Array[Long](g.n)
+        val cArr = new Array[Long](g.n)
+        val deltaAcc = new Array[Long](g.n)
+        val emits = new Array[Boolean](g.n)
+        (0 until math.min(nSources, g.n)).foreach { s =>
+          val (frontiers, sig) = csrSigma(off, nbr, s, maxDepth)
+          (1 to maxDepth).foreach(d => frontiers(d).foreach(emits(_) = true))
+          frontiers(maxDepth).foreach(t => cArr(t) = scale / sig(t))
+          var l = maxDepth - 1
+          while (l >= 1) {
+            // duplicate CSR entries push twice — the twin's fold joins the
+            // same doubled stream
+            frontiers(l + 1).foreach { w0 =>
+              var j = off(w0)
+              while (j < off(w0 + 1)) { accF(nbr(j)) += cArr(w0); j += 1 }
             }
-          }
-          val fr = new Array[Int](nt)
-          var f = 0
-          while (f < nt) {
-            val t = touched(f)
-            sig(t) = accF(t); lvl(t) = d; emits(t) = true
-            accF(t) = 0L
-            fr(f) = t
-            f += 1
-          }
-          frontiers(d) = fr
-          d += 1
-        }
-        // backward ladder: c at the deepest level, then F-push downward
-        var lvlB = maxDepth
-        frontiers(maxDepth).foreach(t => cArr(t) = scale / sig(t))
-        lvlB = maxDepth - 1
-        while (lvlB >= 1) {
-          // F(v) = Σ c(w) over level-(lvlB+1) nodes w pushed along ALL
-          // their incident entries (duplicate entries push twice — the
-          // cluster fold joins the same doubled stream)
-          var nt = 0
-          frontiers(lvlB + 1).foreach { w0 =>
-            val cw = cArr(w0)
-            var j = off(w0)
-            val end = off(w0 + 1)
-            while (j < end) {
-              val t = nbr(j)
-              if (accF(t) == 0L && cw != 0L) { touched(nt) = t; nt += 1 }
-              accF(t) += cw
-              j += 1
+            frontiers(l).foreach { v =>
+              val delta = sig(v) * accF(v)
+              deltaAcc(v) += delta
+              cArr(v) = (scale + delta) / sig(v)
             }
+            frontiers(l + 1).foreach { w0 =>
+              var j = off(w0)
+              while (j < off(w0 + 1)) { accF(nbr(j)) = 0L; j += 1 }
+            }
+            l -= 1
           }
-          frontiers(lvlB).foreach { v =>
-            val delta = sig(v) * accF(v)
-            deltaAcc(v) += delta
-            cArr(v) = (scale + delta) / sig(v)
-          }
-          var f = 0
-          while (f < nt) { accF(touched(f)) = 0L; f += 1 }
-          nt = 0
-          lvlB -= 1
         }
-        srcI += 1
-      }
-      val lng = org.apache.spark.sql.types.LongType
-      val outRows = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.Row]
-      var i = 0
-      while (i < n) {
-        if (emits(i))
-          outRows += org.apache.spark.sql.Row(ids(i), deltaAcc(i))
-        i += 1
-      }
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(outRows.toSeq).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", lng),
-          org.apache.spark.sql.types.StructField("betweenness", lng,
-            nullable = false))))
+        localDf(pairs.sparkSession, StructType(Seq(
+            StructField("node", LongType),
+            StructField("betweenness", LongType, nullable = false))),
+          emits.indices.collect { case i if emits(i) => Row(g.ids(i), deltaAcc(i)) })
+      case None =>
+        val oriented = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)),
+          uCol, vCol, partitionByTarget = true)
+        val e = checkpointPartitioned(
+          if (dedupEdges) oriented.distinct() else oriented)
+        val sess = e.sparkSession
+        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
+        // declared outside the try so a throwing loop body can't leak the
+        // per-level checkpoint blocks (freed in the finally; freeing an
+        // already-freed or never-materialized frame is a no-op)
+        val spent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+        val result = try {
+          sess.conf.set("spark.sql.adaptive.enabled", "false")
+          val state = pathCountsLoop(e, nSources, maxDepth)
+          spent += state
+          // deepest level: no successors within the bound, δ = 0 by the
+          // bounded-metric definition, c = SCALE div σ
+          var cur = state.filter(col("__lvl") === maxDepth)
+            .select(col("__src"), col("__n"), lit(0L).as("__delta"),
+              expr(s"$scale div __sig").as("__c"))
+            .ckpt()
+          spent += cur
+          val levels = scala.collection.mutable.ArrayBuffer(cur)
+          var l = maxDepth - 1
+          while (l >= 1) {
+            // F(v) = Σ c(w) over successors w at level l+1: push cur's c
+            // along the symmetric edge frame read in REVERSE (__s = w,
+            // __t = v) so the (src, v) sum rides HashPartitioning(__t);
+            // the shuffled-hash inner attach to the level-l state slice both
+            // enforces lvl(v) = lvl(w) − 1 (the DAG) and brings σ(v) for the
+            // δ = σ·F multiply.
+            val d = cur.select(col("__src"), col("__n").as("__s"), col("__c"))
+            val f = e.join(broadcast(d), Seq("__s"))
+              .select(col("__src"), col("__t").as("__n"), col("__c"))
+              .groupBy(col("__src"), col("__n"))
+              .agg(sum(col("__c")).as("__f"))
+            cur = state.filter(col("__lvl") === l)
+              .join(f.hint("shuffle_hash"), Seq("__src", "__n"), "left")
+              .select(col("__src"), col("__n"),
+                (col("__sig") * coalesce(col("__f"), lit(0L))).as("__delta"),
+                col("__sig"))
+              .select(col("__src"), col("__n"), col("__delta"),
+                expr(s"($scale + __delta) div __sig").as("__c"))
+              .ckpt()
+            spent += cur
+            levels += cur
+            l -= 1
+          }
+          val out = levels.map(_.select(col("__n"), col("__delta")))
+            .reduce(_ unionByName _)
+            .groupBy(col("__n"))
+            .agg(sum(col("__delta")).as("betweenness"))
+            .select(col("__n").as("node"), col("betweenness"))
+            .ckpt()
+          out
+        } finally {
+          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+          Dedup.freeCheckpoints(spent.toSeq: _*)
+          Dedup.freeCheckpoints(e)
+        }
+        result
     }
-    val oriented = orientedAdjacency(pairs, uCol, vCol,
-      partitionByTarget = true)
-    val e = checkpointPartitioned(
-      if (dedupEdges) oriented.distinct() else oriented)
-    val sess = e.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    // declared outside the try so a throwing loop body can't leak the
-    // per-level checkpoint blocks (freed in the finally; freeing an
-    // already-freed or never-materialized frame is a no-op)
-    val spent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val result = try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      val state = pathCountsLoop(e, nSources, maxDepth, bVisited = bDelta)
-      spent += state
-      if (bDelta) {
-        // DRIVER-RESIDENT backward pass (r18): the forward fast path
-        // already returned LocalRelation-backed (src, node, lvl, σ)
-        // rows, and the per-level δ/coefficient state is the same
-        // nSources × node-sized table the gate just declared
-        // broadcast-eligible. Each backward level is then ONE cluster
-        // job — the successor-coefficient fold F(v) = Σ c(w) over the
-        // target-partitioned edge frame with cur broadcast — and the
-        // DAG attach (lvl(v) = lvl(w) − 1, δ = σ·F, c = (S + δ) div σ)
-        // is a driver map fold instead of a per-level broadcast join +
-        // checkpoint. Integer arithmetic identical; `bDelta = false`
-        // below keeps the all-distributed ladder (spec-pinned equal).
-        val stateRows = state.collect()
-          .map(r => (r.get(0), r.get(1), r.getInt(2), r.getLong(3)))
-        val byLvl = stateRows.groupBy(_._3)
-        val nType = e.schema("__s").dataType
-        val fSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__src", nType),
-          org.apache.spark.sql.types.StructField("__s", nType),
-          org.apache.spark.sql.types.StructField("__c",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        // deepest level: δ = 0, c = S div σ
-        var cur: Seq[(Any, Any, Long)] = byLvl.getOrElse(maxDepth, Array.empty)
-          .toSeq.map { case (s, n, _, sig) => (s, n, scale / sig) }
-        val deltaAcc = scala.collection.mutable.HashMap.empty[Any, Long]
-        var l = maxDepth - 1
-        while (l >= 1) {
-          val fMap: Map[(Any, Any), Long] =
-            if (cur.isEmpty) Map.empty
-            else {
-              val curDf = sess.createDataFrame(
-                scala.jdk.CollectionConverters.SeqHasAsJava(
-                  cur.map { case (s, n, c) =>
-                    org.apache.spark.sql.Row(s, n, c) }).asJava, fSchema)
-              e.join(broadcast(curDf), Seq("__s"))
-                .select(col("__src"), col("__t").as("__n"), col("__c"))
-                .groupBy(col("__src"), col("__n"))
-                .agg(sum(col("__c")).as("__f"))
-                .collect().map(r => (r.get(0), r.get(1)) -> r.getLong(2)).toMap
-            }
-          cur = byLvl.getOrElse(l, Array.empty).toSeq.map {
-            case (s, n, _, sig) =>
-              val delta = sig * fMap.getOrElse((s, n), 0L)
-              deltaAcc(n) = deltaAcc.getOrElse(n, 0L) + delta
-              (s, n, (scale + delta) / sig)
-          }
-          l -= 1
-        }
-        // the distributed union sums over EVERY level frame 1..maxDepth,
-        // so deepest-level nodes (δ = 0 by definition) emit rows too
-        stateRows.filter(_._3 == maxDepth).foreach { case (_, n, _, _) =>
-          deltaAcc.getOrElseUpdate(n, 0L) }
-        val outRows = deltaAcc.toSeq.map { case (n, d) =>
-          org.apache.spark.sql.Row(n, d) }
-        return sess.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(outRows).asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", nType),
-            org.apache.spark.sql.types.StructField("betweenness",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-      }
-      // deepest level: no successors within the bound, δ = 0 by the
-      // bounded-metric definition, c = SCALE div σ
-      var cur = state.filter(col("__lvl") === maxDepth)
-        .select(col("__src"), col("__n"), lit(0L).as("__delta"),
-          expr(s"$scale div __sig").as("__c"))
-        .ckpt()
-      spent += cur
-      val levels = scala.collection.mutable.ArrayBuffer(cur)
-      var l = maxDepth - 1
-      while (l >= 1) {
-        // F(v) = Σ c(w) over successors w at level l+1: push cur's c
-        // along the symmetric edge frame read in REVERSE (__s = w,
-        // __t = v) so the (src, v) sum rides HashPartitioning(__t);
-        // the inner attach to the level-l state slice both enforces
-        // lvl(v) = lvl(w) − 1 (the DAG) and brings σ(v) for the
-        // δ = σ·F multiply. `bDelta = false` is the at-scale twin
-        // (shuffled-hash attach) for nSources × |V| past broadcast
-        // range — spec-pinned equal in GraphSpec.
-        val d = cur.select(col("__src"), col("__n").as("__s"), col("__c"))
-        val f = e.join(broadcast(d), Seq("__s"))
-          .select(col("__src"), col("__t").as("__n"), col("__c"))
-          .groupBy(col("__src"), col("__n"))
-          .agg(sum(col("__c")).as("__f"))
-        val fSide = if (bDelta) broadcast(f) else f.hint("shuffle_hash")
-        cur = state.filter(col("__lvl") === l)
-          .join(fSide, Seq("__src", "__n"), "left")
-          .select(col("__src"), col("__n"),
-            (col("__sig") * coalesce(col("__f"), lit(0L))).as("__delta"),
-            col("__sig"))
-          .select(col("__src"), col("__n"), col("__delta"),
-            expr(s"($scale + __delta) div __sig").as("__c"))
-          .ckpt()
-        spent += cur
-        levels += cur
-        l -= 1
-      }
-      val out = levels.map(_.select(col("__n"), col("__delta")))
-        .reduce(_ unionByName _)
-        .groupBy(col("__n"))
-        .agg(sum(col("__delta")).as("betweenness"))
-        .select(col("__n").as("node"), col("betweenness"))
-        .ckpt()
-      out
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      Dedup.freeCheckpoints(spent.toSeq: _*)
-      Dedup.freeCheckpoints(e)
-    }
-    result
   }
 
   /** Bounded-round single-source shortest paths (Bellman-Ford) over an
     * undirected WEIGHTED pair list (`wCol` integer weights ≥ 0): after
     * `rounds` relaxations, (node, dist) = the min-weight path cost from
     * the graph's minimum node id using ≤ `rounds` hops; nodes not
-    * reached in `rounds` hops are absent. Same loop mechanics as
-    * [[bfsLoopFixed]] (persist-chained rounds, AQE off, one action) with
-    * the min-fold over dist + weight instead of hop counts — all-integer,
+    * reached in `rounds` hops are absent. The twin iterates
+    * [[ssspRound]] (AQE off, one eager checkpoint per round) with the
+    * min-fold over dist + weight instead of hop counts — all-integer,
     * bit-identical cross-engine (the DuckDB twin replays the identical
     * chained relaxations). Both orientations expand in-row with the
     * weight riding along. */
   def ssspBounded(wedges: DataFrame, uCol: String, vCol: String,
                   wCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    // frontier/dist frames are node-sized — bounded by the pair stream
-    val bFrontier = resolveBroadcast(wedges)
-    val longIds = wedges.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      wedges.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (bFrontier && longIds) {
-      // FULLY driver-resident Bellman-Ford (the kcorePeel discipline): the
-      // gate that would have broadcast the frontier each round says the
-      // weighted EDGE LIST itself fits driver memory, so collect it once
-      // and relax on the driver — no doubled-orientation explode, no
-      // checkpoint barrier, no per-round candidate-fold job (12 → 2 jobs
-      // at sf0.1). Arithmetic is the identical integer min-relaxation;
-      // restricted to BIGINT ids so the output schema matches the twins
-      // exactly. Non-long or past-broadcast graphs take the paths below.
-      val sess = wedges.sparkSession
-      val rows = wedges
-        .select(col(uCol), col(vCol), col(wCol).cast("bigint"))
-        .collect3
-      val lng = org.apache.spark.sql.types.LongType
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", lng),
-        org.apache.spark.sql.types.StructField("dist", lng,
-          nullable = false)))
-      if (rows.isEmpty)
-        return sess.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          outSchema)
-      val adj = scala.collection.mutable.HashMap
-        .empty[Long, scala.collection.mutable.ArrayBuffer[(Long, Long)]]
-      var seed = Long.MaxValue
-      rows.foreach { case (u, v, w) =>
-        adj.getOrElseUpdate(u,
-          scala.collection.mutable.ArrayBuffer.empty) += ((v, w))
-        adj.getOrElseUpdate(v,
-          scala.collection.mutable.ArrayBuffer.empty) += ((u, w))
-        if (u < seed) seed = u
-        if (v < seed) seed = v
-      }
-      val dist = scala.collection.mutable.HashMap[Long, Long](seed -> 0L)
-      var delta: Seq[Long] = Seq(seed)
-      var r0 = 0
-      while (r0 < rounds && delta.nonEmpty) {
-        val cand = scala.collection.mutable.HashMap.empty[Long, Long]
-        delta.foreach { s =>
-          val ds = dist(s)
-          adj.get(s).foreach(_.foreach { case (t, w) =>
-            val c = ds + w
-            if (cand.get(t).forall(c < _)) cand(t) = c
-          })
+    collectEdges(wedges, uCol, vCol, Some(wCol)) match {
+      case Some(g) =>
+        // synchronous relaxations over the edge arrays from the minimum id
+        // (index 0): a round relaxes the edges of nodes whose distance
+        // improved last round, both orientations — the twin's delta rounds
+        val dist = Array.fill(g.n)(Long.MaxValue)
+        val delta = new Array[Boolean](g.n)
+        if (g.n > 0) { dist(0) = 0L; delta(0) = true }
+        var live = g.n > 0
+        var r = 0
+        while (r < rounds && live) {
+          val cand = Array.fill(g.n)(Long.MaxValue)
+          var i = 0
+          while (i < g.m) {
+            val (u, v, w) = (g.iu(i), g.iv(i), g.w(i))
+            if (delta(u)) cand(v) = math.min(cand(v), dist(u) + w)
+            if (delta(v)) cand(u) = math.min(cand(u), dist(v) + w)
+            i += 1
+          }
+          live = false
+          i = 0
+          while (i < g.n) {
+            delta(i) = cand(i) < dist(i)
+            if (delta(i)) { dist(i) = cand(i); live = true }
+            i += 1
+          }
+          r += 1
         }
-        delta = cand.iterator.flatMap { case (n, c) =>
-          if (dist.get(n).forall(c < _)) { dist(n) = c; Some(n) }
-          else None
-        }.toSeq
-        r0 += 1
-      }
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(
-          dist.toSeq.map { case (n, d) =>
-            org.apache.spark.sql.Row(n, d) }).asJava, outSchema)
+        localDf(wedges.sparkSession, StructType(Seq(
+            StructField("node", LongType),
+            StructField("dist", LongType, nullable = false))),
+          dist.indices.collect { case i if dist(i) < Long.MaxValue =>
+            Row(g.ids(i), dist(i)) })
+      case None =>
+        // both orientations in-row, source-partitioned so each round's
+        // shuffled delta join is co-located
+        val par = wedges.sparkSession.sparkContext.defaultParallelism
+        val e = ssspEdges(wedges.filter(nonNull(uCol, vCol, wCol)), uCol, vCol, wCol)
+          .repartition(par, col("__s"))
+          .ckpt()
+        val sess = e.sparkSession
+        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
+        val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+        val result = try {
+          sess.conf.set("spark.sql.adaptive.enabled", "false")
+          // the source seed stays LAZY (min over the checkpointed blocks,
+          // filtered empty on a null min — no rows on an empty graph), so
+          // the whole loop including seeding is ONE action with no
+          // separate driver probe
+          var dist = e.agg(min(col("__s")).as("__n"))
+            .filter(col("__n").isNotNull)
+            .select(col("__n"), lit(0L).as("__d"))
+          var delta = dist
+          var r = 0
+          while (r < rounds) {
+            // EAGER checkpoint per round, not lazy persist: each round's
+            // build side re-walked the LAZY persisted chain before it was
+            // cached (53 completed stages for a 4-round loop); eager rounds
+            // compute each frame exactly once, in round order (3.3 → 2.4 s)
+            val merged = ssspRound(e, dist, delta).ckpt()
+            cached += merged
+            dist = merged.select(col("__n"), col("__d2").as("__d"))
+            delta = merged.filter(col("__chg"))
+              .select(col("__n"), col("__d2").as("__d"))
+            r += 1
+          }
+          dist.select(col("__n").as("node"), col("__d").as("dist"))
+            .ckpt()
+        } finally {
+          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+          Dedup.freeCheckpoints(cached.toSeq: _*)
+          Dedup.freeCheckpoints(e)
+        }
+        result
     }
-    val par = wedges.sparkSession.sparkContext.defaultParallelism
-    // co-location choice as in [[orientedAdjacency]]: target-partitioned
-    // for the broadcast-frontier path (exchange-free candidate fold),
-    // source-partitioned for the shuffle twin
-    val eKey = if (bFrontier) "__t" else "__s"
-    val e = wedges.select(explode(array(
+  }
+
+  /** Both orientations of a weighted pair list as (__s, __t, __w BIGINT). */
+  private def ssspEdges(wedges: DataFrame, uCol: String, vCol: String,
+                        wCol: String): DataFrame =
+    wedges.select(explode(array(
         struct(col(uCol).as("__s"), col(vCol).as("__t"), col(wCol).as("__w")),
         struct(col(vCol).as("__s"), col(uCol).as("__t"), col(wCol).as("__w"))))
         .as("__e"))
       .select(col("__e.__s").as("__s"), col("__e.__t").as("__t"),
         col("__e.__w").cast("bigint").as("__w"))
-      .repartition(par, col(eKey))
-      .ckpt()
-    val sess = e.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    if (bFrontier) {
-      // DRIVER-RESIDENT distance state (r17 chain-shortening): the dist
-      // table is node-sized and resolveBroadcast just declared it
-      // broadcast-eligible — state that fits an executor broadcast fits
-      // the driver, so the per-round full-outer merge + eager checkpoint
-      // (one cluster job each, plus its broadcast-build jobs) collapses
-      // to ONE cluster job per relaxation: the candidate fold's
-      // node-keyed min, collected. The frontier re-enters each round as
-      // a LocalRelation broadcast (built driver-side, no job). The heavy
-      // stream — edges and the candidate fold — never leaves the
-      // cluster; only the node-sized fold RESULT crosses. Arithmetic is
-      // identical (integer min over dist + w), and past the limit the
-      // twin below keeps the all-distributed
-      // loop for graphs whose node frame outgrows a broadcast
-      // (spec-pinned equal in GraphSpec).
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        val seedRow = e.agg(min(col("__s"))).head()
-        if (seedRow.isNullAt(0)) {
-          return e.limit(0)
-            .select(col("__s").as("node"), col("__w").as("dist"))
-            .localCheckpoint()
-        }
-        val nType = e.schema("__s").dataType
-        val fSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__s", nType),
-          org.apache.spark.sql.types.StructField("__d",
-            org.apache.spark.sql.types.LongType, nullable = false)))
-        val dist = scala.collection.mutable.HashMap[Any, Long](
-          seedRow.get(0) -> 0L)
-        var delta: Seq[(Any, Long)] = Seq(seedRow.get(0) -> 0L)
-        var r = 0
-        while (r < rounds && delta.nonEmpty) {
-          val fDf = sess.createDataFrame(
-            scala.jdk.CollectionConverters.SeqHasAsJava(
-              delta.map { case (n, d) =>
-                org.apache.spark.sql.Row(n, d) }).asJava, fSchema)
-          val folded = e.join(broadcast(fDf), Seq("__s"))
-            .select(col("__t").as("__n"), (col("__d") + col("__w")).as("__d"))
-            .groupBy(col("__n")).agg(min(col("__d")).as("__c"))
-            .collect()
-          delta = folded.toSeq.flatMap { row =>
-            val n = row.get(0); val c = row.getLong(1)
-            if (dist.get(n).forall(c < _)) { dist(n) = c; Some(n -> c) }
-            else None
-          }
-          r += 1
-        }
-        val outRows = dist.toSeq.map { case (n, d) =>
-          org.apache.spark.sql.Row(n, d) }
-        return sess.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(outRows).asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node", nType),
-            org.apache.spark.sql.types.StructField("dist",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-      } finally {
-        sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        Dedup.freeCheckpoints(e)
-      }
-    }
-    val result = try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      // the source seed stays LAZY (min over the checkpointed blocks,
-      // filtered empty on a null min — no rows on an empty graph), so
-      // the whole loop including seeding is ONE action with no
-      // separate driver probe
-      var dist = e.agg(min(col("__s")).as("__n"))
-        .filter(col("__n").isNotNull)
-        .select(col("__n"), lit(0L).as("__d"))
-      // FRONTIER DELTA (r12 verdict): pre-r13 every relaxation paid a
-      // `dist ∪ relax → groupBy` exchange of the FULL distance table;
-      // now only nodes whose distance IMPROVED last round relax their
-      // neighbors, the candidate fold shuffles the delta-neighborhood
-      // stream, and the full-outer merge sees both sides partitioned by
-      // __n (dist from the previous merge, candidates from their fold).
-      // Correct for Bellman-Ford because an unimproved node's relaxation
-      // replays the round it last improved — already folded into every
-      // neighbor's min.
-      var delta = dist
-      var r = 0
-      while (r < rounds) {
-        // join strategy pins as in [[minLabelDeltaRound]]: the frontier
-        // broadcasts into the __s-partitioned edges (shuffled-hash twin
-        // for billion-node graphs), and the merge sees both sides
-        // __n-partitioned
-        val d = delta.select(col("__n").as("__s"), col("__d"))
-        val dSide = if (bFrontier) broadcast(d) else d.hint("shuffle_hash")
-        val cand = e.join(dSide, Seq("__s"))
-          .select(col("__t").as("__n"), (col("__d") + col("__w")).as("__d"))
-          .groupBy(col("__n")).agg(min(col("__d")).as("__c"))
-        // full outer: candidates may REACH nodes dist has never seen
-        // (least() skips NULLs, so the merged distance is total).
-        // EAGER checkpoint per round, not lazy persist (the pathCounts
-        // lesson applied here r15): each round's broadcast-build job
-        // re-walked the LAZY persisted chain before it was cached —
-        // 53 completed stages for a 4-round loop, ~30 of them
-        // recomputed broadcast-side stages. Eager rounds compute each
-        // frame exactly once, in round order (measured 3.3 → 2.4 s).
-        val merged = dist.join(cand.hint("shuffle_hash"), Seq("__n"), "full_outer")
-          .select(col("__n"),
-            least(col("__d"), col("__c")).as("__d2"),
-            (col("__d").isNull ||
-              (col("__c").isNotNull && col("__c") < col("__d"))).as("__chg"))
-          .ckpt()
-        cached += merged
-        dist = merged.select(col("__n"), col("__d2").as("__d"))
-        delta = merged.filter(col("__chg"))
-          .select(col("__n"), col("__d2").as("__d"))
-        r += 1
-      }
-      dist.select(col("__n").as("node"), col("__d").as("dist"))
-        .ckpt()
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      Dedup.freeCheckpoints(cached.toSeq: _*)
-      Dedup.freeCheckpoints(e)
-    }
-    result
+
+  /** One FRONTIER-DELTA Bellman-Ford relaxation of [[ssspBounded]]'s
+    * twin, shared with the plan audit: only nodes whose distance
+    * IMPROVED last round (`delta`) relax their neighbors — an unimproved
+    * node's relaxation replays the round it last improved, already folded
+    * into every neighbor's min. The delta shuffles to the
+    * __s-partitioned edges, the candidate fold shuffles the
+    * delta-neighborhood stream, and the full-outer merge sees both sides
+    * __n-partitioned (candidates may REACH nodes dist has never seen;
+    * least() skips NULLs, so the merged distance is total). Returns
+    * (__n, __d2, __chg). */
+  private def ssspRound(e: DataFrame, dist: DataFrame,
+                        delta: DataFrame): DataFrame = {
+    val cand = e.join(delta.select(col("__n").as("__s"), col("__d"))
+        .hint("shuffle_hash"), Seq("__s"))
+      .select(col("__t").as("__n"), (col("__d") + col("__w")).as("__d"))
+      .groupBy(col("__n")).agg(min(col("__d")).as("__c"))
+    dist.join(cand.hint("shuffle_hash"), Seq("__n"), "full_outer")
+      .select(col("__n"),
+        least(col("__d"), col("__c")).as("__d2"),
+        (col("__d").isNull ||
+          (col("__c").isNotNull && col("__c") < col("__d"))).as("__chg"))
   }
 
   /** Per-edge TRIANGLE SUPPORT over a DISTINCT undirected edge list —
@@ -3209,80 +2477,115 @@ object Graph {
         coalesce(col("__sup"), lit(0L)).cast("bigint").as("support"))
   }
 
-  /** Bounded-round K-TRUSS peel: `rounds` rounds of "drop edges with
-    * triangle support < k−2", then the support HISTOGRAM of the
-    * surviving induced subgraph — (support, n_edges). The fixed round
-    * count keeps the result a deterministic cross-engine twin (the
-    * [[kcorePeel]] convention, over edges instead of nodes); each round
-    * re-runs [[edgeSupportBody]] on the survivors, so the cost is
-    * rounds+1 edge-iterator passes with no wedge materialization
-    * anywhere. The oracle replays the identical rounds with the
-    * wedge-pair-count formulation (portable SQL has no sorted-array
-    * intersection). */
-  /** Driver-side per-edge triangle support over int-indexed undirected
-    * edges — the degree-oriented forward algorithm ([[edgeSupportBody]]'s
-    * exact semantics in one memory pass): rank nodes by (degree, id),
-    * orient every edge low→high rank, keep rank-sorted higher-rank
-    * adjacency with a parallel edge-id array, and merge-intersect the two
-    * lists of each oriented edge — every triangle is found exactly once
-    * at its lowest-rank corner and pushes one support count to each of
-    * its three edges. Primitive arrays throughout (packed rank<<32|eid
-    * entries). Cost Σ(|A⁺(s)|+|A⁺(t)|) per pass, never wedge-sized. */
-  /** Sorted-distinct id array + both-orientation CSR adjacency over a
-    * collected raw pair array — the shared substrate of the driver-
-    * resident graph tiers (pathCounts / betweennessSampled /
-    * multiSourceBfs). `dedup` sort-dedupes the DIRECTED entry stream
-    * (the operator contracts that treat duplicate pairs as parallel
-    * edges pass false). Returns (ids, off, nbr): node id at index i is
-    * ids(i); neighbors of i are nbr(off(i) until off(i+1)). */
-  private def driverCsr(raw: Array[(Long, Long)], dedup: Boolean)
-      : (Array[Long], Array[Int], Array[Int]) = {
-    val allIds = new Array[Long](raw.length * 2)
-    var w0 = 0
-    raw.foreach { case (u, v) =>
-      allIds(w0) = u; allIds(w0 + 1) = v; w0 += 2 }
-    java.util.Arrays.sort(allIds)
-    var n = 0
-    var r1 = 0
-    while (r1 < allIds.length) {
-      if (n == 0 || allIds(r1) != allIds(n - 1)) {
-        allIds(n) = allIds(r1); n += 1 }
-      r1 += 1
+  /** Both-orientation CSR adjacency over a tier's edges — the shared
+    * substrate of the undirected driver tiers. `dedup` sort-dedupes the
+    * DIRECTED entry stream (the operator contracts that treat duplicate
+    * pairs as parallel edges pass false). Neighbors of index i are
+    * nbr(off(i) until off(i + 1)). */
+  private def driverCsr(g: Edges, dedup: Boolean): (Array[Int], Array[Int]) = {
+    val src = g.iu ++ g.iv
+    val dst = g.iv ++ g.iu
+    if (!dedup) csr(g.n, src, dst)
+    else {
+      val keys = Array.tabulate(src.length)(i =>
+        (src(i).toLong << 32) | dst(i))
+      val m = sortDedup(keys)
+      csr(g.n, Array.tabulate(m)(i => (keys(i) >>> 32).toInt),
+        Array.tabulate(m)(i => keys(i).toInt))
     }
-    val ids = java.util.Arrays.copyOf(allIds, n)
-    require(n.toLong < (1L << 31), s"driver CSR tier: $n nodes")
-    def lookup(x: Long): Int = java.util.Arrays.binarySearch(ids, x)
-    var packed = new Array[Long](raw.length * 2)
-    var w1 = 0
-    raw.foreach { case (u, v) =>
-      val ui = lookup(u).toLong; val vi = lookup(v).toLong
-      packed(w1) = (ui << 31) | vi
-      packed(w1 + 1) = (vi << 31) | ui
-      w1 += 2
-    }
-    if (dedup) {
-      java.util.Arrays.sort(packed)
-      var wd = 0
-      var rd = 0
-      while (rd < packed.length) {
-        if (wd == 0 || packed(rd) != packed(wd - 1)) {
-          packed(wd) = packed(rd); wd += 1 }
-        rd += 1
-      }
-      packed = java.util.Arrays.copyOf(packed, wd)
-    }
+  }
+
+  /** Directed CSR over index-space entries src(i) → dst(i) on n nodes:
+    * (off, nbr), neighbors of a are nbr(off(a) until off(a + 1)). */
+  private def csr(n: Int, src: Array[Int],
+                  dst: Array[Int]): (Array[Int], Array[Int]) = {
     val off = new Array[Int](n + 1)
-    packed.foreach(p => off((p >>> 31).toInt + 1) += 1)
+    src.foreach(a => off(a + 1) += 1)
     var a = 0
     while (a < n) { off(a + 1) += off(a); a += 1 }
     val fill = java.util.Arrays.copyOf(off, n)
-    val nbr = new Array[Int](packed.length)
-    packed.foreach { p =>
-      val si = (p >>> 31).toInt
-      nbr(fill(si)) = (p & ((1L << 31) - 1)).toInt
-      fill(si) += 1
+    val nbr = new Array[Int](src.length)
+    var i = 0
+    while (i < src.length) {
+      nbr(fill(src(i))) = dst(i); fill(src(i)) += 1; i += 1 }
+    (off, nbr)
+  }
+
+  /** Hop levels ≤ `maxDepth` from index `src` over a CSR; −1 = unreached. */
+  private def csrLevels(off: Array[Int], nbr: Array[Int], src: Int,
+                        maxDepth: Int): Array[Int] = {
+    val lvl = Array.fill(off.length - 1)(-1)
+    lvl(src) = 0
+    var frontier = Array(src)
+    var d = 1
+    while (d <= maxDepth && frontier.nonEmpty) {
+      val next = Array.newBuilder[Int]
+      frontier.foreach { s =>
+        var j = off(s)
+        while (j < off(s + 1)) {
+          val t = nbr(j)
+          if (lvl(t) < 0) { lvl(t) = d; next += t }
+          j += 1
+        }
+      }
+      frontier = next.result()
+      d += 1
     }
-    (ids, off, nbr)
+    lvl
+  }
+
+  /** Brandes' forward pass from index `src` over a CSR: (frontiers, σ)
+    * with frontiers(d) the nodes first reached at level d ≤ `maxDepth`
+    * (empty past the last reached level; frontiers(0) is the source) and
+    * σ(t) their shortest-path counts, σ(t) = Σ σ(p) over the level-(d−1)
+    * entries p → t. */
+  private def csrSigma(off: Array[Int], nbr: Array[Int], src: Int,
+                       maxDepth: Int): (Array[Array[Int]], Array[Long]) = {
+    val n = off.length - 1
+    val sig = new Array[Long](n)
+    val lvl = Array.fill(n)(-1)
+    val acc = new Array[Long](n)
+    val touched = new Array[Int](n)
+    val frontiers = Array.fill(maxDepth + 1)(Array.emptyIntArray)
+    sig(src) = 1L; lvl(src) = 0
+    frontiers(0) = Array(src)
+    var d = 1
+    while (d <= maxDepth && frontiers(d - 1).nonEmpty) {
+      var nt = 0
+      frontiers(d - 1).foreach { s =>
+        var j = off(s)
+        while (j < off(s + 1)) {
+          val t = nbr(j)
+          // σ contributions are strictly positive, so acc == 0 marks the
+          // first touch this level; lvl >= 0 marks an earlier discovery
+          if (lvl(t) < 0) {
+            if (acc(t) == 0L) { touched(nt) = t; nt += 1 }
+            acc(t) += sig(s)
+          }
+          j += 1
+        }
+      }
+      frontiers(d) = java.util.Arrays.copyOf(touched, nt)
+      frontiers(d).foreach { t => sig(t) = acc(t); lvl(t) = d; acc(t) = 0L }
+      d += 1
+    }
+    (frontiers, sig)
+  }
+
+  /** Union-find root of `x` with path compression. */
+  private def findRoot(parent: Array[Int], x: Int): Int = {
+    var r = x
+    while (parent(r) != r) r = parent(r)
+    var c = x
+    while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+    r
+  }
+
+  /** Union by MIN root: every root stays its component's minimum index. */
+  private def unionMin(parent: Array[Int], a: Int, b: Int): Unit = {
+    val ra = findRoot(parent, a)
+    val rb = findRoot(parent, b)
+    if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
   }
 
   /** Minimal open-addressing long→long additive map for the driver-
@@ -3348,6 +2651,12 @@ object Graph {
                       rows: Seq[Row]): DataFrame =
     sess.createDataFrame(
       scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema)
+
+  /** (node, `name`) rows of a per-index driver-tier result. */
+  private def nodeValueDf(sess: SparkSession, name: String, ids: Array[Long],
+                          vals: Array[Long]): DataFrame =
+    localDf(sess, StructType(Seq(StructField("node", LongType),
+      StructField(name, LongType))), ids.indices.map(i => Row(ids(i), vals(i))))
 
   /** DRIVER-COLLECTED BASKET INDEX — the shared substrate of the r19
     * basket/co-occurrence driver tiers (guide §2.4 "remove shuffles
@@ -3441,27 +2750,14 @@ object Graph {
     val raw = items.select(col(gCol), col(iCol)).limit(cap + 1)
       .queryExecution.executedPlan.executeCollect()
     if (raw.length > cap || raw.exists(_.isNullAt(0))) return None
-    val rows = raw.collect {
-      case r if !r.isNullAt(1) => (r.getLong(0), r.getLong(1))
-    }
-    if (rows.isEmpty)
-      return Some(new BasketIndex(new Array[Long](0), 0,
-        new Array[Long](0), 0))
-    val gIds = rows.map(_._1)
-    val nG = sortDedup(gIds)
-    val itemIds = rows.map(_._2)
-    val nI = sortDedup(itemIds)
-    require(nG.toLong < (1L << 31) && nI.toLong < (1L << 31),
-      s"basket driver tier size: $nG groups / $nI items")
-    val entries = new Array[Long](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      val g = java.util.Arrays.binarySearch(gIds, 0, nG, rows(i)._1).toLong
-      val it = java.util.Arrays.binarySearch(itemIds, 0, nI, rows(i)._2).toLong
-      entries(i) = (g << 32) | it
-      i += 1
-    }
-    val bi = new BasketIndex(itemIds, nI, entries, sortDedup(entries))
+    val rows = raw.filterNot(_.isNullAt(1))
+    val grp = rows.map(_.getLong(0))
+    val item = rows.map(_.getLong(1))
+    val itemIds = denseIds(item)
+    val gi = indexOf(denseIds(grp), grp)
+    val ii = indexOf(itemIds, item)
+    val entries = Array.tabulate(rows.length)(i => (gi(i).toLong << 32) | ii(i))
+    val bi = new BasketIndex(itemIds, itemIds.length, entries, sortDedup(entries))
     val pairLimit = math.min(Int.MaxValue.toLong - 8, sess.conf
       .get("graft.graph.pairStreamLimit", (1L << 25).toString).toLong)
     if (pairBound && bi.pairExpansionCount > pairLimit) None else Some(bi)
@@ -3514,6 +2810,15 @@ object Graph {
       if (heap.size < k) Double.NegativeInfinity else heap.peek() - 2e-6
   }
 
+  /** Driver-side per-edge triangle support over int-indexed undirected
+    * edges — the degree-oriented forward algorithm ([[edgeSupportBody]]'s
+    * exact semantics in one memory pass): rank nodes by (degree, id),
+    * orient every edge low→high rank, keep rank-sorted higher-rank
+    * adjacency with a parallel edge-id array, and merge-intersect the two
+    * lists of each oriented edge — every triangle is found exactly once
+    * at its lowest-rank corner and pushes one support count to each of
+    * its three edges. Primitive arrays throughout (packed rank<<32|eid
+    * entries). Cost Σ(|A⁺(s)|+|A⁺(t)|) per pass, never wedge-sized. */
   private def driverEdgeSupport(eu: Array[Int], ev: Array[Int],
                                 n: Int): Array[Long] = {
     val m = eu.length
@@ -3847,13 +3152,19 @@ object Graph {
       ev = keep.map(ev)
       r0 += 1
     }
-    val hist = scala.collection.mutable.HashMap.empty[Long, Long]
-    driverEdgeSupport(eu, ev, nNodes).foreach { s =>
-      hist(s) = hist.getOrElse(s, 0L) + 1L }
+    val sup = driverEdgeSupport(eu, ev, nNodes)
+    java.util.Arrays.sort(sup)
+    val hist = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var i = 0
+    while (i < sup.length) {
+      var j = i + 1
+      while (j < sup.length && sup(j) == sup(i)) j += 1
+      hist += Row(sup(i), (j - i).toLong)
+      i = j
+    }
     localDf(sess, StructType(Seq(
       StructField("support", LongType, nullable = false),
-      StructField("n_edges", LongType, nullable = false))),
-      hist.toSeq.map { case (s, c) => Row(s, c) })
+      StructField("n_edges", LongType, nullable = false))), hist.toSeq)
   }
 
   /** [[trussPeel]] off the raw basket stream: all rounds+1 support
@@ -3871,48 +3182,57 @@ object Graph {
     }
   }
 
+  /** Bounded-round K-TRUSS peel: `rounds` rounds of "drop edges with
+    * triangle support < k−2", then the support HISTOGRAM of the
+    * surviving induced subgraph — (support, n_edges). The input is read
+    * as the SIMPLE undirected graph it implies: self-loops are dropped
+    * and a pair repeated in either orientation is one edge. The fixed
+    * round count keeps the result a deterministic cross-engine twin (the
+    * [[kcorePeel]] convention, over edges instead of nodes). The driver
+    * tier runs all rounds+1 support passes as [[driverEdgeSupport]]
+    * folds; the twin re-runs [[edgeSupportBody]] on the survivors each
+    * round — rounds+1 edge-iterator passes with no wedge materialization
+    * anywhere. The oracle replays the identical rounds with the
+    * wedge-pair-count formulation (portable SQL has no sorted-array
+    * intersection). */
   def trussPeel(edges: DataFrame, uCol: String, vCol: String,
                 k: Int, rounds: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val longTrussIds = edges.schema(uCol).dataType ==
-      org.apache.spark.sql.types.LongType &&
-      edges.schema(vCol).dataType == org.apache.spark.sql.types.LongType
-    if (longTrussIds && resolveBroadcast(edges)) {
-      // DRIVER-RESIDENT peel (the kcorePeel discipline): the gate says
-      // the edge list fits driver memory, so ALL rounds+1 support passes
-      // run as [[driverEdgeSupport]] folds over one collect — no
-      // adjacency aggregation, no triangle-corner exchange, no
-      // per-round checkpoint barrier. The distributed loop below stays
-      // the spec-pinned twin for edge lists past broadcast range.
-      val rows = edges.select(col(uCol), col(vCol))
-        .collect2
-      val ids = rows.flatMap(p => Array(p._1, p._2))
-      val n0 = sortDedup(ids)
-      def lk(x: Long): Int =
-        java.util.Arrays.binarySearch(ids, 0, n0, x)
-      return driverTrussPeel(edges.sparkSession, rows.map(p => lk(p._1)),
-        rows.map(p => lk(p._2)), n0, k, rounds)
+    collectEdges(edges, uCol, vCol) match {
+      case Some(g) =>
+        // canonical (lo, hi) index pairs, self-loops out, sort-deduped
+        val keys = g.iu.indices.collect { case i if g.iu(i) != g.iv(i) =>
+          (math.min(g.iu(i), g.iv(i)).toLong << 32) | math.max(g.iu(i), g.iv(i))
+        }.toArray
+        val m = sortDedup(keys)
+        driverTrussPeel(edges.sparkSession,
+          Array.tabulate(m)(i => (keys(i) >>> 32).toInt),
+          Array.tabulate(m)(i => keys(i).toInt), g.n, k, rounds)
+      case None =>
+        var e = edges.filter(nonNull(uCol, vCol) && col(uCol) =!= col(vCol))
+          .select(least(col(uCol), col(vCol)).as("u"),
+            greatest(col(uCol), col(vCol)).as("v"))
+          .distinct()
+          .ckpt()
+        // resolved AFTER the checkpoint so the estimate reads measured bytes
+        val bAdj = resolveBroadcast(e)
+        val spent = scala.collection.mutable.ArrayBuffer(e)
+        var r = 0
+        while (r < rounds) {
+          e = edgeSupportBody(e, bAdj)
+            .filter(col("support") >= k - 2)
+            .select(col("u"), col("v"))
+            .ckpt()
+          spent += e
+          r += 1
+        }
+        val result = edgeSupportBody(e, bAdj)
+          .groupBy(col("support")).agg(count(lit(1)).as("n_edges"))
+          .ckpt()
+        Dedup.freeCheckpoints(spent.toSeq: _*)
+        result
     }
-    var e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
-      .ckpt()
-    // resolved AFTER the checkpoint so the estimate reads measured bytes
-    val bAdj = resolveBroadcast(e)
-    val spent = scala.collection.mutable.ArrayBuffer(e)
-    var r = 0
-    while (r < rounds) {
-      e = edgeSupportBody(e, bAdj)
-        .filter(col("support") >= k - 2)
-        .select(col("u"), col("v"))
-        .ckpt()
-      spent += e
-      r += 1
-    }
-    val result = edgeSupportBody(e, bAdj)
-      .groupBy(col("support")).agg(count(lit(1)).as("n_edges"))
-      .ckpt()
-    Dedup.freeCheckpoints(spent.toSeq: _*)
-    result
   }
 
   /** Top-k edges by NEIGHBORHOOD JACCARD — (u, v, common, jaccard) with
@@ -4027,16 +3347,12 @@ object Graph {
     * (node, degree). Fixed round count keeps the result a deterministic
     * cross-engine twin at any scale (the streaming approximation of full
     * peeling; a production loop adds the convergence count exactly like
-    * [[bfsLevels]]' earlyExit). Loop mechanics are [[bfsLoopFixed]]'s:
-    * every round's edge frame AND its survivor set are `persist`-marked
-    * (the survivor agg would otherwise run twice — once per semi-join
-    * build side), AQE is off for the fixed-shape chain, and the whole
-    * peel is ONE straight-line action instead of one checkpoint barrier
-    * per round (the r11 shape paid 4 driver round-trips for 1.8 s of
-    * compute). Survivor sets are node-sized, so both per-round semi
-    * joins are `broadcast()` hash joins — map-only over the cached edge
-    * blocks; past the [[resolveBroadcast]] limit a shuffle path serves
-    * billion-node graphs (same semantics, spec-pinned). The chained-CTE
+    * [[bfsLevels]]' earlyExit). The driver tier peels edge arrays; the
+    * twin's loop mechanics are [[bfsLoopFixed]]'s: every round's degree
+    * table is `persist`-marked, AQE is off for the fixed-shape chain, and
+    * the whole peel is ONE straight-line action instead of one checkpoint
+    * barrier per round (the r11 shape paid 4 driver round-trips for 1.8 s
+    * of compute). The chained-CTE
     * SQL form re-inlines every round's subtree ~3× per level in Catalyst
     * (plan grows 3^rounds; measured 12.5 s wall on 1.8 s of compute at
     * sf0.1), which is why the engine side is this loop and only the
@@ -4044,164 +3360,117 @@ object Graph {
   def kcorePeel(edges: DataFrame, uCol: String, vCol: String,
                 k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // dead/survivor node frames — bounded by the pair stream
-    val bKeep = resolveBroadcast(edges)
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    if (bKeep) {
-      // DRIVER-RESIDENT peel: the same resolveBroadcast gate that would
-      // have broadcast the survivor set each round says the EDGE LIST
-      // itself fits driver memory, so the whole bounded peel is a driver
-      // fold over ONE collect job — no doubled-orientation explode, no
-      // checkpoint barrier, no per-round broadcast builds (measured
-      // 19 → 2 jobs at sf0.1). Ids normalize to long like every other
-      // driver-resident graph fold in this file; the shuffled loop below
-      // stays the spec-pinned twin for edge lists past broadcast range.
-      val sess = edges.sparkSession
-      val rows = edges.select(col(uCol).cast("long"), col(vCol).cast("long"))
-        .collect2
-      // primitive index space (the driverCsr discipline — the boxed
-      // HashMap degree folds were the peel's own wall floor)
-      val ids = rows.flatMap(p => Array(p._1, p._2))
-      java.util.Arrays.sort(ids)
-      var n0 = 0
-      var ri = 0
-      while (ri < ids.length) {
-        if (n0 == 0 || ids(ri) != ids(n0 - 1)) { ids(n0) = ids(ri); n0 += 1 }
-        ri += 1
-      }
-      def lk(x: Long): Int = java.util.Arrays.binarySearch(ids, 0, n0, x)
-      var m = rows.length
-      val eu = new Array[Int](m); val ev = new Array[Int](m)
-      var i0 = 0
-      rows.foreach { p =>
-        eu(i0) = lk(p._1); ev(i0) = lk(p._2); i0 += 1 }
-      val deg = new Array[Long](n0)
-      var r0 = 0
-      while (r0 < rounds && m > 0) {
-        java.util.Arrays.fill(deg, 0L)
-        var i = 0
-        while (i < m) { deg(eu(i)) += 1; deg(ev(i)) += 1; i += 1 }
-        var w = 0
-        i = 0
-        while (i < m) {
-          if (deg(eu(i)) >= k && deg(ev(i)) >= k) {
-            eu(w) = eu(i); ev(w) = ev(i); w += 1 }
-          i += 1
+    collectEdges(edges, uCol, vCol) match {
+      case Some(g) =>
+        // the whole bounded peel as a driver fold over one collect
+        // (19 → 2 jobs at sf0.1): per round, keep the edges whose
+        // endpoints both have degree ≥ k
+        val eu = g.iu.clone()
+        val ev = g.iv.clone()
+        var m = g.m
+        val deg = new Array[Long](g.n)
+        def degrees(): Unit = {
+          java.util.Arrays.fill(deg, 0L)
+          var i = 0
+          while (i < m) { deg(eu(i)) += 1; deg(ev(i)) += 1; i += 1 }
         }
-        m = w
-        r0 += 1
-      }
-      java.util.Arrays.fill(deg, 0L)
-      var i1 = 0
-      while (i1 < m) { deg(eu(i1)) += 1; deg(ev(i1)) += 1; i1 += 1 }
-      val lng = org.apache.spark.sql.types.LongType
-      val outRows = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.Row]
-      var i2 = 0
-      while (i2 < n0) {
-        if (deg(i2) > 0)
-          outRows += org.apache.spark.sql.Row(ids(i2), deg(i2))
-        i2 += 1
-      }
-      return sess.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(outRows.toSeq).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", lng, nullable = false),
-          org.apache.spark.sql.types.StructField("degree", lng, nullable = false))))
+        var r0 = 0
+        while (r0 < rounds && m > 0) {
+          degrees()
+          var w = 0
+          var i = 0
+          while (i < m) {
+            if (deg(eu(i)) >= k && deg(ev(i)) >= k) {
+              eu(w) = eu(i); ev(w) = ev(i); w += 1 }
+            i += 1
+          }
+          m = w
+          r0 += 1
+        }
+        degrees()
+        localDf(edges.sparkSession, StructType(Seq(
+            StructField("node", LongType, nullable = false),
+            StructField("degree", LongType, nullable = false))),
+          deg.indices.collect { case i if deg(i) > 0 => Row(g.ids(i), deg(i)) })
+      case None =>
+        // the twin peels on the DEGREE TABLE with a dead-node frontier instead
+        // of re-inducing the edge frame every round: the edge frame is built
+        // ONCE (both orientations, source-partitioned) and a dead endpoint
+        // simply has no degree row, so the induced subgraph is implicit. Each
+        // edge decrements its other endpoint exactly once (its dead endpoint
+        // leaves deg the same round it pushes), edges between already-dead
+        // nodes resolve to no surviving row, and a survivor orphaned to
+        // degree 0 is dropped at the end exactly like the induced-subgraph
+        // formulation drops nodes with no surviving edges.
+        val e = orientedAdjacency(edges.filter(nonNull(uCol, vCol)), uCol, vCol)
+          .ckpt()
+        val sess = e.sparkSession
+        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
+        val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+        val result = try {
+          sess.conf.set("spark.sql.adaptive.enabled", "false")
+          // persisted because every round reads it twice (frontier + survivors)
+          var deg = kcoreDegrees(e).persist()
+          cached += deg
+          var r = 0
+          while (r < rounds) {
+            deg = kcoreRound(e, deg, k).persist()
+            cached += deg
+            r += 1
+          }
+          deg.filter(col("__d") > 0)
+            .select(col("__n").as("node"), col("__d").as("degree"))
+            .ckpt()
+        } finally {
+          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
+          cached.foreach(_.unpersist(blocking = false))
+          Dedup.freeCheckpoints(e)
+        }
+        result
     }
-    // r13 rebuild: peel on the DEGREE TABLE with a dead-node frontier
-    // instead of re-inducing the edge frame every round. The edge frame
-    // is built ONCE (both orientations, co-located by contribution
-    // target on the broadcast path — [[orientedAdjacency]] discipline)
-    // and never rebuilt: a dead endpoint simply has no degree row, so
-    // the induced subgraph is implicit. Per round:
-    //   newly-dead = deg rows < k  (frontier — shrinks fast),
-    //   loss       = e ⋈ broadcast(newly-dead) folded by target, riding
-    //                the edge partitioning (zero exchange),
-    //   deg'       = survivors ⋈ loss (shuffled-hash, both sides
-    //                __n-partitioned — zero exchange), d − lost.
-    // Each edge decrements its other endpoint exactly once (its dead
-    // endpoint leaves deg the same round it pushes), edges between
-    // already-dead nodes resolve to no surviving row, and a survivor
-    // orphaned to degree 0 is dropped at the end exactly like the
-    // induced-subgraph formulation drops nodes with no surviving edges.
-    // `bKeep = false` keeps a source-partitioned shuffled-hash
-    // twin for billion-node graphs (spec-pinned equal). The pre-r13
-    // shape paid one full degree aggregate + two semi-joins + an edge
-    // rebuild per round.
-    val par = edges.sparkSession.sparkContext.defaultParallelism
-    val eKey = if (bKeep) "__t" else "__s"
-    val e = edges.select(explode(array(
-        struct(col(uCol).as("__s"), col(vCol).as("__t")),
-        struct(col(vCol).as("__s"), col(uCol).as("__t")))).as("__e"))
-      .select(col("__e.__s").as("__s"), col("__e.__t").as("__t"))
-      .repartition(par, col(eKey))
-      .ckpt()
-    val sess = e.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val result = try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      // full degrees off whichever side the edges are co-located by
-      // (both orientations are present, so either side counts every
-      // incident edge) — rides the partitioning, zero exchange; persisted
-      // because every round reads it twice (frontier + survivors)
-      var deg = e.groupBy(col(eKey)).agg(count(lit(1)).as("__d"))
-        .select(col(eKey).as("__n"), col("__d"))
-        .persist()
-      cached += deg
-      var r = 0
-      while (r < rounds) {
-        val dead = deg.filter(col("__d") < k).select(col("__n").as("__s"))
-        val dSide = if (bKeep) broadcast(dead)
-          else dead.hint("shuffle_hash")
-        val loss = e.join(dSide, Seq("__s"))
-          .groupBy(col("__t")).agg(count(lit(1)).as("__c"))
-          .select(col("__t").as("__n"), col("__c"))
-        deg = deg.filter(col("__d") >= k)
-          .join(loss.hint("shuffle_hash"), Seq("__n"), "left")
-          .select(col("__n"),
-            (col("__d") - coalesce(col("__c"), lit(0L))).as("__d"))
-          .persist()
-        cached += deg
-        r += 1
-      }
-      deg.filter(col("__d") > 0)
-        .select(col("__n").as("node"), col("__d").as("degree"))
-        .ckpt()
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      cached.foreach(_.unpersist(blocking = false))
-      Dedup.freeCheckpoints(e)
-    }
-    result
   }
 
-  /** PRE-checkpoint single-round Brandes-forward plan, for the plan
-    * audit — the exact [[pathCountsLoop]] round-1 expressions (frontier
-    * broadcast into the __t-partitioned oriented frame, alias-riding
-    * (src, node) σ-sum fold, anti-join delta merge against the visited
-    * keys) with the checkpoint barriers omitted so explain shows the
-    * loop body instead of a `Scan ExistingRDD`. Built for explain, not
-    * execution. */
+  /** Full degrees (__n, __d) off the __s-partitioned oriented frame —
+    * both orientations are present, so the source side counts every
+    * incident edge; rides the partitioning, zero exchange. */
+  private def kcoreDegrees(e: DataFrame): DataFrame =
+    e.groupBy(col("__s")).agg(count(lit(1)).as("__d"))
+      .select(col("__s").as("__n"), col("__d"))
+
+  /** One twin peel round of [[kcorePeel]], shared with the plan audit:
+    * newly-dead = degree rows < k (the frontier — shrinks fast);
+    * loss = e ⋈ newly-dead (shuffled hash) folded by target;
+    * deg' = survivors ⋈ loss (shuffled hash, both sides
+    * __n-partitioned), d − lost. */
+  private def kcoreRound(e: DataFrame, deg: DataFrame, k: Int): DataFrame = {
+    val dead = deg.filter(col("__d") < k).select(col("__n").as("__s"))
+    val loss = e.join(dead.hint("shuffle_hash"), Seq("__s"))
+      .groupBy(col("__t")).agg(count(lit(1)).as("__c"))
+      .select(col("__t").as("__n"), col("__c"))
+    deg.filter(col("__d") >= k)
+      .join(loss.hint("shuffle_hash"), Seq("__n"), "left")
+      .select(col("__n"),
+        (col("__d") - coalesce(col("__c"), lit(0L))).as("__d"))
+  }
+
+  /** PRE-checkpoint round-1 Brandes-forward plan, for the plan audit —
+    * [[pathCountsRound]] (the twin's round: frontier broadcast into the
+    * __t-partitioned oriented frame, alias-riding (src, node) σ-sum fold,
+    * shuffled-hash anti-join delta merge against the visited keys) with
+    * the checkpoint barriers omitted so explain shows the loop body
+    * instead of a `Scan ExistingRDD`. Built for explain, not execution. */
   def pathCountsRoundPlan(pairs: DataFrame, uCol: String,
                           vCol: String): DataFrame = {
     val e = orientedAdjacency(pairs, uCol, vCol, partitionByTarget = true)
       .distinct()
-    val srcs = e.select(col("__t").as("__s")).distinct()
+    val state = e.select(col("__t").as("__s")).distinct()
       .orderBy(col("__s")).limit(4)
-    val state = srcs.select(col("__s").as("__src"), col("__s").as("__n"),
-      lit(0).as("__lvl"), lit(1L).as("__sig"))
-    val d = state.select(col("__src"), col("__n").as("__s"),
-      col("__sig"), col("__lvl"))
-    val cand = e.join(broadcast(d), Seq("__s"))
-      .select(col("__src"), col("__t").as("__n"), col("__sig"), col("__lvl"))
-      .groupBy(col("__src"), col("__n"))
-      .agg(sum(col("__sig")).as("__c"), (min(col("__lvl")) + 1).as("__nl"))
-    cand.join(broadcast(state.select(col("__src"), col("__n"))),
-        Seq("__src", "__n"), "left_anti")
-      .select(col("__src"), col("__n"), col("__nl").as("lvl"),
-        col("__c").as("paths"))
+      .select(col("__s").as("__src"), col("__s").as("__n"),
+        lit(0).as("__lvl"), lit(1L).as("__sig"))
+    pathCountsRound(e, state, state)
+      .select(col("__src"), col("__n"), col("__lvl").as("lvl"),
+        col("__sig").as("paths"))
   }
 
   /** PRE-checkpoint single FUSED bidirectional reach round, for the plan
@@ -4263,24 +3532,14 @@ object Graph {
       .groupBy(col("__src"), col("__n")).agg(min(col("__lvl")).as("__lvl"))
   }
 
-  /** PRE-checkpoint single k-core peel round, for the plan audit — the
-    * exact [[kcorePeel]] round expressions (dead-node frontier broadcast
-    * into the target-partitioned edge frame, alias-riding loss fold,
-    * survivor merge), un-checkpointed. Built for explain, not
-    * execution. */
+  /** PRE-checkpoint single k-core peel round, for the plan audit —
+    * [[kcoreRound]] (the twin's round: shuffled dead-node frontier, loss
+    * fold, survivor merge) over the un-checkpointed source-partitioned
+    * edge frame. Built for explain, not execution. */
   def kcoreRoundPlan(edges: DataFrame, uCol: String, vCol: String,
                      k: Int): DataFrame = {
-    val e = orientedAdjacency(edges, uCol, vCol, partitionByTarget = true)
-    val deg = e.groupBy(col("__t")).agg(count(lit(1)).as("__d"))
-      .select(col("__t").as("__n"), col("__d"))
-    val dead = deg.filter(col("__d") < k).select(col("__n").as("__s"))
-    val loss = e.join(broadcast(dead), Seq("__s"))
-      .groupBy(col("__t")).agg(count(lit(1)).as("__c"))
-      .select(col("__t").as("__n"), col("__c"))
-    deg.filter(col("__d") >= k)
-      .join(loss.hint("shuffle_hash"), Seq("__n"), "left")
-      .select(col("__n"),
-        (col("__d") - coalesce(col("__c"), lit(0L))).as("__d"))
+    val e = orientedAdjacency(edges, uCol, vCol)
+    kcoreRound(e, kcoreDegrees(e), k)
   }
 
   /** PRE-checkpoint single personalized-PageRank iteration, for the plan
@@ -4353,13 +3612,13 @@ object Graph {
   }
 
   /** PRE-checkpoint single min-label round, for the plan audit — the
-    * exact [[minLabelDeltaRound]] expressions [[labelPropagate]] and
-    * [[connectedComponentsMinLabel]] iterate, un-checkpointed (round 1,
-    * where the delta is the full seed table — later rounds shrink the
-    * delta side of the same shape). */
+    * [[minLabelDeltaRound]] the [[labelPropagate]] and
+    * [[connectedComponentsMinLabel]] twins iterate, un-checkpointed
+    * (round 1, where the delta is the full seed table — later rounds
+    * shrink the delta side of the same shape). */
   def minLabelRoundPlan(pairs: DataFrame, uCol: String, vCol: String): DataFrame = {
-    val e = orientedAdjacency(pairs, uCol, vCol, partitionByTarget = true)
-    val lab0 = e.select(col("__t").as("__n")).distinct()
+    val e = orientedAdjacency(pairs, uCol, vCol)
+    val lab0 = e.select(col("__s").as("__n")).distinct()
       .withColumn("__l", col("__n"))
     minLabelDeltaRound(e, lab0, lab0)
       .select(col("__n").as("node"), col("__l").as("label"),
@@ -4367,26 +3626,17 @@ object Graph {
   }
 
   /** PRE-checkpoint single Bellman-Ford relaxation, for the plan audit —
-    * the exact frontier-delta merge body [[ssspBounded]] iterates,
-    * un-checkpointed. */
+    * [[ssspRound]], the frontier-delta merge [[ssspBounded]]'s twin
+    * iterates, un-checkpointed. */
   def ssspRoundPlan(wedges: DataFrame, uCol: String, vCol: String,
                     wCol: String, source: Long): DataFrame = {
-    val e = wedges.select(explode(array(
-        struct(col(uCol).as("__s"), col(vCol).as("__t"), col(wCol).as("__w")),
-        struct(col(vCol).as("__s"), col(uCol).as("__t"), col(wCol).as("__w"))))
-        .as("__e"))
-      .select(col("__e.__s").as("__s"), col("__e.__t").as("__t"),
-        col("__e.__w").cast("bigint").as("__w"))
+    val par = wedges.sparkSession.sparkContext.defaultParallelism
+    val e = ssspEdges(wedges, uCol, vCol, wCol).repartition(par, col("__s"))
     val dist0 = e.sparkSession.range(1)
       .select(lit(source).as("__n"), lit(0L).as("__d"))
-    val cand = e.join(dist0.select(col("__n").as("__s"), col("__d")), Seq("__s"))
-      .select(col("__t").as("__n"), (col("__d") + col("__w")).as("__d"))
-      .groupBy(col("__n")).agg(min(col("__d")).as("__c"))
-    dist0.join(cand, Seq("__n"), "full_outer")
-      .select(col("__n").as("node"),
-        least(col("__d"), col("__c")).as("dist"),
-        (col("__d").isNull ||
-          (col("__c").isNotNull && col("__c") < col("__d"))).as("changed"))
+    ssspRound(e, dist0, dist0)
+      .select(col("__n").as("node"), col("__d2").as("dist"),
+        col("__chg").as("changed"))
   }
 
   /** PRE-checkpoint edge-support plan ([[edgeSupportBody]]'s

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -9,8 +10,11 @@ import graft.SparkSpec
   * nodes/edges, and self-loop-only graphs must return well-formed empty
   * or trivial frames with the documented schemas — not throw — on the
   * DEFAULT (gated) path, which on these tiny inputs is the driver tier.
-  * Result-correctness against brute force and the distributed twins is
-  * pinned in GraphSpec; this spec pins the degenerate shapes. */
+  * Result-correctness against brute force is pinned in GraphSpec; this
+  * spec pins the degenerate shapes and the tier contract of Graph.scala's
+  * header: every operator behind the shared edge collector returns the
+  * same schema and rows on both paths, over a table of adversarial
+  * inputs. */
 class GraphDriverTierSpec extends AnyFunSuite with SparkSpec {
 
   private def emptyPairs = {
@@ -80,5 +84,69 @@ class GraphDriverTierSpec extends AnyFunSuite with SparkSpec {
     val cyc = Seq((1L, 2L), (2L, 1L)).toDF("s", "t")
     assert(Graph.sccPivot(cyc, "s", "t", maxDepth = 3)
       .collect().map(_.getLong(0)).toSet == Set(1L, 2L))
+  }
+
+  /** (u, v, w) edge rows for the tier-contract table; None is a NULL. */
+  private val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+    (5L, 6L), (6L, 4L), (2L, 5L)).map { case (u, v) => (Option(u), Option(v)) }
+  private val inputs: Seq[(String, Seq[(Option[Long], Option[Long])], Boolean)] = Seq(
+    ("NULL endpoints", base ++ Seq((None, Some(2L)), (Some(5L), None),
+      (None, None)), false),
+    ("empty", Nil, false),
+    ("single edge", Seq((Some(1L), Some(2L))), false),
+    ("self-loops", base ++ Seq((Some(1L), Some(1L)), (Some(4L), Some(4L))),
+      false),
+    ("duplicate pairs", base ++ base.take(3), false),
+    ("INT ids", base, true))
+
+  private def edgeFrame(rows: Seq[(Option[Long], Option[Long])],
+                        intIds: Boolean): DataFrame = {
+    val sq = spark
+    import sq.implicits._
+    val df = rows.map { case (u, v) =>
+        (u, v, u.zip(v).map { case (a, b) => (a + b) % 3 + 1 }.getOrElse(1L))
+      }.toDF("u", "v", "w")
+    if (intIds) df.select(col("u").cast("int").as("u"),
+      col("v").cast("int").as("v"), col("w"))
+    else df
+  }
+
+  /** Every operator that goes through the shared edge collector. */
+  private val operators: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "bfsLevelsUndirected" -> (Graph.bfsLevelsUndirected(_, "u", "v", 3)),
+    "pagerankUndirected" -> (Graph.pagerankUndirected(_, "u", "v", 3)),
+    "personalizedPagerank" -> (Graph.personalizedPagerank(_, "u", "v", 3, 2)),
+    "hitsBipartite" -> (Graph.hitsBipartite(_, "u", "v", 3, 10)),
+    "louvainLevels" -> (Graph.louvainLevels(_, "u", "v", "w", 3)),
+    "louvainModularity" -> (Graph.louvainModularity(_, "u", "v", "w", 3)),
+    "sccPivot" -> (Graph.sccPivot(_, "u", "v", 3)),
+    "labelPropagate" -> (Graph.labelPropagate(_, "u", "v", 2)),
+    "connectedComponentsMinLabel" ->
+      (Graph.connectedComponentsMinLabel(_, "u", "v")),
+    "multiSourceBfs" -> (Graph.multiSourceBfs(_, "u", "v", 2, 3)),
+    "pathCounts" -> (Graph.pathCounts(_, "u", "v", 2, 3)),
+    "betweennessSampled" -> (Graph.betweennessSampled(_, "u", "v", 2, 3)),
+    "ssspBounded" -> (Graph.ssspBounded(_, "u", "v", "w", 3)),
+    "trussPeel" -> (Graph.trussPeel(_, "u", "v", 3, 1)),
+    "kcorePeel" -> (Graph.kcorePeel(_, "u", "v", 2, 2)))
+
+  test("tier contract: every collector-using operator returns the same " +
+      "schema and rows at the default limits and with the twins pinned, " +
+      "on NULL endpoints, empty input, a single edge, self-loops, " +
+      "duplicate pairs and INT ids") {
+    def run(op: DataFrame => DataFrame, df: DataFrame) = scala.util.Try {
+      val out = op(df)
+      (out.schema.map(f => f.name -> f.dataType),
+        out.collect().map(_.toSeq.mkString("|")).sorted.toSeq)
+    }.toEither.left.map(_.toString)
+    val mismatches = for {
+      (inName, rows, intIds) <- inputs
+      (opName, op) <- operators
+      df = edgeFrame(rows, intIds)
+      tier = run(op, df)
+      twin = withTwins(run(op, df))
+      if tier != twin || tier.isLeft
+    } yield s"$opName on $inName: tier $tier vs twin $twin"
+    assert(mismatches.isEmpty, mismatches.mkString("\n"))
   }
 }
