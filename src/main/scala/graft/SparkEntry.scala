@@ -8786,7 +8786,8 @@ object SparkEntry {
     * min reachable id → keep a doc iff it IS its component's minimum (docs
     * outside the graph are kept). The closure is O(Σ component²) rows —
     * fine for an oracle, which is exactly why the engine side uses
-    * iterative hash-min label propagation instead. */
+    * Graph.connectedComponentsMinLabel (union-find driver tier, hash-min
+    * twin) instead. */
   /** The verified-near-dup component closure (doc-level candidates →
     * J ≥ 0.95 verify → symmetric edges → recursive min-reachability →
     * `comp(node, component)`) — shared by the CC drop filter and the

@@ -95,11 +95,15 @@ object Transfer {
     * is taps' compression negotiation (`lib/taps/operation.rb:165-173`)
     * surfaced where it lives in a Spark pipeline: the landing files ARE the
     * transport, so the Parquet codec (zstd default — gzip-class ratio at
-    * several times the speed) is the wire compression. Validation
-    * runs in quarantine mode: violating rows are diverted, not fatal, unless
-    * `strict`. Returns per-table results; the manifest at `manifestPath` is
-    * updated after EVERY table (for taps' finer per-chunk checkpoint
-    * granularity, see [[pullChunked]]). */
+    * several times the speed) is the wire compression. Tables already
+    * completed in the manifest are skipped; the rest are written
+    * concurrently (`parallelism` at a time), each in one pass whose
+    * observed metrics give its row count and, for a single integer pk,
+    * its max-pk watermark. No row validation runs here (see
+    * [[operators.Validate]] and [[verifyTransfer]]). Returns per-table
+    * results; the manifest at `manifestPath` is updated after EVERY table
+    * (for taps' finer per-chunk checkpoint granularity, see
+    * [[pullChunked]]). */
   def pull(spark: SparkSession, srcDir: String, dstDir: String, manifestPath: String,
            tables: Seq[String] = Tables.names,
            filterRegex: Option[String] = None,

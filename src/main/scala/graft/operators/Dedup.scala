@@ -703,143 +703,14 @@ object Dedup {
     keepDocs(docs, idCol, textCol, kept)
   }
 
-  /** Connected components over an undirected (doc_a, doc_b) edge list by
-    * iterative min-label propagation ("hash-min"): every node starts as its
-    * own label; each round a node takes the min of its own and its
-    * neighbors' labels; fixpoint = every node carries its component's
-    * minimum id. Returns (node, component).
-    *
-    * Size-adaptive: below `localThreshold` edges the component solve runs
-    * as a single-pass union-find on the driver (bounded, partition-streamed
-    * via toLocalIterator, like the k×dims bound on IVF centroids) —
-    * near-dup CC graphs are rep-level and
-    * post-verification, typically thousands of edges even when the corpus
-    * is huge. Above the threshold the distributed hash-min loop below
-    * owns it, so driver memory never scales with data.
-    *
-    * Scale shape: each round is ONE shuffle (edge⋈label join + groupBy min)
-    * over |edges| rows, and the round count is the graph DIAMETER — for
-    * near-dup graphs (dense clique-ish clusters from shared LSH buckets)
-    * that is small and bounded. Each round is `localCheckpoint`ed — rounds
-    * execute against materialized blocks with truncated lineage (persist
-    * alone re-optimizes an ever-deeper plan and measured 10× slower) — and
-    * every intermediate's checkpoint RDD is explicitly unpersisted before
-    * returning: checkpoint blocks are invisible to
-    * `spark.catalog.clearCache()`, and leaking them measurably starves
-    * whatever memory-hungry job runs next in the session. For adversarially
-    * long path graphs the alternating large-star/small-star algorithm
-    * (O(log n) rounds) is the upgrade path; the contract here is the same
-    * either way. Converges-or-throws: a non-converged label map is never
-    * returned. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25,
-                          localThreshold: Long = 500L * 1000): DataFrame = {
-    val sym = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
-    // Near-dup graphs shrink brutally by the time they reach CC (verified
-    // rep-level pairs): below the threshold a single-pass union-find beats
-    // diameter× distributed rounds, each of which costs a join + agg +
-    // checkpoint barrier. Realistic driver budget at the 500k-edge default:
-    // the parent map holds ≤ 2·edges = 1M nodes of boxed HashMap entries
-    // (~64 B each ≈ 64 MB), and the edge list streams through
-    // `toLocalIterator` one partition at a time rather than being collected
-    // whole — peak transient footprint is one partition of (Long, Long)
-    // pairs, not the full graph. Big graphs take the distributed loop
-    // below, so driver traffic never scales with data. localThreshold = 0
-    // forces the distributed path (used by tests; also the right setting
-    // when the driver is memory-starved).
-    val idType = edges.schema("doc_a").dataType
-    val integralIds = idType match {
-      case _: org.apache.spark.sql.types.ByteType | _: org.apache.spark.sql.types.ShortType |
-           _: org.apache.spark.sql.types.IntegerType | _: org.apache.spark.sql.types.LongType => true
-      case _ => false // string/decimal ids take the distributed loop (min/least handles any ordered type)
-    }
-    // lazy: string/decimal-id inputs always take the distributed loop and
-    // must not pay a count job for a threshold they can never meet
-    lazy val symCount = sym.count()
-    if (integralIds && symCount <= 2 * localThreshold) {
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      // coalesce before streaming: toLocalIterator schedules ONE JOB PER
-      // PARTITION, and the checkpointed edge list inherits the join's
-      // partitioning (64 × ~15 ms of job round-trips measured for a 5k-edge
-      // graph). Width ADAPTS to the count just taken: ~250k rows per
-      // partition keeps the partition-at-a-time driver memory bound, and
-      // a typical near-dup pair graph (tens of k edges) streams in ONE
-      // job instead of a fixed 8 (7 job round-trips saved; the 1M-row
-      // ceiling still splits 4 ways)
-      val streamParts = math.max(1L, math.min(8L,
-        (symCount + 249999L) / 250000L)).toInt
-      val edgeIt = sym.select(col("src").cast("long"), col("dst").cast("long"))
-        .coalesce(streamParts)
-        .as[(Long, Long)](org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong))
-        .toLocalIterator()
-      while (edgeIt.hasNext) {
-        val (u, v) = edgeIt.next()
-        parent.getOrElseUpdate(u, u); parent.getOrElseUpdate(v, v)
-        val (ru, rv) = (find(u), find(v))
-        // union by MIN: the root is always the smallest id seen, so the
-        // final find(x) IS the component minimum — no second pass
-        if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
-      }
-      checkpointRdds(sym).foreach(_.unpersist(blocking = false))
-      val spark = edges.sparkSession
-      import spark.implicits._
-      // cast back so the output schema matches the distributed path (the
-      // input id type), whatever the graph size was
-      return parent.keys.toSeq.map(n => (n, find(n)))
-        .toDF("node", "component")
-        .select(col("node").cast(idType).as("node"),
-          col("component").cast(idType).as("component"))
-    }
-    // seed with round 1 for free: label₀ = min(node, direct neighbors) is
-    // one groupBy over the edge list, no join — saves a full join round
-    var labels = sym.groupBy(col("src"))
-      .agg(min(col("dst")).as("__m"))
-      .select(col("src").as("node"), least(col("src"), col("__m")).as("component"))
-      .localCheckpoint()
-    // convergence test: labels only ever DECREASE, so the label sum is a
-    // strictly-monotone progress measure — one cheap agg over the freshly
-    // checkpointed round result instead of a join against the previous round
-    def labelSum(df: DataFrame): java.math.BigDecimal = df
-      .agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val nbrMin = sym.join(labels.select(col("node").as("dst"), col("component")), "dst")
-        .groupBy(col("src")).agg(min(col("component")).as("__nbr"))
-        .select(col("src").as("node"), col("__nbr"))
-      val updated = labels.join(nbrMin, Seq("node"), "left")
-        .select(col("node"),
-          least(col("component"), coalesce(col("__nbr"), col("component"))).as("component"))
-        .localCheckpoint()
-      val s = labelSum(updated)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      checkpointRdds(labels).foreach(_.unpersist(blocking = false))
-      labels = updated
-      iter += 1
-    }
-    checkpointRdds(sym).foreach(_.unpersist(blocking = false))
-    require(converged, s"connectedComponents did not converge in $maxIter rounds")
-    labels
-  }
-
   /** Alternating large-star/small-star connected components (the MapReduce
     * CC algorithm of Kiveris et al.) — O(log n) rounds regardless of graph
-    * DIAMETER, where [[connectedComponents]]' hash-min needs O(diameter)
-    * rounds. Near-dup graphs are clique-ish (small diameter), so hash-min
-    * is the default; this is the variant for adversarial long-path graphs.
-    * Same contract: (node, component) with component = min id reachable;
+    * DIAMETER, where the hash-min twin of
+    * [[Graph.connectedComponentsMinLabel]] needs O(diameter) rounds.
+    * Near-dup graphs are clique-ish (small diameter), so the near-dup
+    * drops use that operator; this is the variant for adversarial
+    * long-path graphs and the specs' reference. Same contract:
+    * (node, component) with component = min id reachable;
     * converges-or-throws.
     *
     * Each round: LARGE-STAR hangs every neighbor v > u under u's
@@ -914,7 +785,8 @@ object Dedup {
     val verified = verifiedRepPairs(reps, seeds, rowsPerBand, threshold,
         withMembers = false)
       .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    val comp = connectedComponents(verified, maxIter)
+    val comp = Graph.connectedComponentsMinLabel(verified, "doc_a", "doc_b",
+      maxRounds = maxIter)
     // non-minimum nodes of each component are the dominated reps; reps
     // outside the edge graph never appear in `comp` and survive
     val droppedReps = comp.filter(col("node") =!= col("component"))
@@ -932,7 +804,7 @@ object Dedup {
     * component structure SURFACED instead of consumed by a drop filter,
     * the input to dedup AUDIT reports (cluster sizes, source spread,
     * which doc was kept and what it dominated). Same machinery: rep
-    * collapse, banded candidates, verify, hash-min CC at rep level,
+    * collapse, banded candidates, verify, CC at rep level,
     * members inherit their rep's component (rep = min member id and
     * component = min rep id, so the cluster label IS the cluster's
     * minimum doc id). Docs outside the near-dup graph label as their
@@ -948,7 +820,8 @@ object Dedup {
     val verified = verifiedRepPairs(reps, seeds, rowsPerBand, threshold,
         withMembers = false)
       .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    val comp = connectedComponents(verified, maxIter)
+    val comp = Graph.connectedComponentsMinLabel(verified, "doc_a", "doc_b",
+      maxRounds = maxIter)
     val docRep = tokenSets(docs, idCol, textCol)
       .select(col(idCol), col("__set_key"))
       .join(reps.select(col("__set_key"), col("__rep")), "__set_key")

@@ -32,7 +32,11 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, 
  *  - the gate: the tier runs only when the id columns are BIGINT and
  *    [[resolveBroadcast]] passes (the edge frame, times a per-operator
  *    state factor, fits `graft.graph.broadcastLimitBytes`; 0 pins the
- *    twin). Any other id type takes the twin, which handles every type;
+ *    twin). Any other id type takes the twin, which handles every type.
+ *    The basket tiers ([[collectBaskets]]) spend the same byte budget:
+ *    16 B a collected (group, item) row, 8 B an expanded item pair. That
+ *    limit is the only path selector of this file (Dedup's bitmap tier
+ *    has `graft.dedup.bitmapMaxReps`); there is no per-call override;
  *  - NULLs: an edge with a NULL endpoint (or NULL weight) is dropped —
  *    the collector skips it and every twin input carries the same
  *    [[nonNull]] filter;
@@ -284,11 +288,8 @@ object Graph {
     // 146 tasks adaptive vs a straight-line job without). Global AQE
     // stays on — the r8 lesson was about the whole suite, not a
     // fixed-iteration loop.
-    val sess = e.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
     val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val result = try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
+    try withoutAqe(e.sparkSession) {
       var labels = e.sparkSession.range(1)
         .select(lit(source).as("__n"), lit(0).as("__lvl"))
       var i = 1
@@ -303,11 +304,9 @@ object Graph {
       // cleanup lives in the finally so a throwing loop body can't leak
       // cached layers or checkpoint blocks until the ContextCleaner
       // happens by (unpersisting a never-materialized frame is a no-op)
-      sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
       cached.foreach(_.unpersist(blocking = false))
       Dedup.freeCheckpoints(e)
     }
-    result
   }
 
   /** One BFS round: join the round-(i−1) frontier against the edge list,
@@ -494,10 +493,7 @@ object Graph {
         // — adaptivity has nothing to decide and would turn each of the
         // chain's exchanges into its own job barrier (the bfsLoopFixed
         // measurement). The loop compiles into ONE straight-line job.
-        val sess = e.sparkSession
-        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-        val result = try {
-          sess.conf.set("spark.sql.adaptive.enabled", "false")
+        try withoutAqe(e.sparkSession) {
           val base = outdegBase(e)
           var pr = base.withColumn("__pr", lit(1000000L))
           (1 to iters).foreach { _ =>
@@ -505,11 +501,7 @@ object Graph {
           }
           pr.select(col("__n").as("node"), col("__pr").as("pagerank"))
             .ckpt()
-        } finally {
-          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-          Dedup.freeCheckpoints(e) // free on the throw path too
-        }
-        result
+        } finally Dedup.freeCheckpoints(e) // free on the throw path too
     }
   }
 
@@ -542,10 +534,7 @@ object Graph {
         val e = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)), uCol, vCol)
           .distinct()
           .ckpt()
-        val sess = e.sparkSession
-        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-        val result = try {
-          sess.conf.set("spark.sql.adaptive.enabled", "false")
+        try withoutAqe(e.sparkSession) {
           val seeds = outdegBase(e).select(col("__n"))
             .orderBy(col("__n")).limit(nSeeds)
             .withColumn("__seed", lit(1))
@@ -568,11 +557,7 @@ object Graph {
           }
           pr.select(col("__n").as("node"), col("__pr").as("ppr"))
             .ckpt()
-        } finally {
-          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-          Dedup.freeCheckpoints(e)
-        }
-        result
+        } finally Dedup.freeCheckpoints(e)
     }
   }
 
@@ -656,10 +641,7 @@ object Graph {
         // the checkpointed ep blocks inside its own job instead (same
         // exchange volume, one less job barrier; measured 9 → 7 jobs)
         val ec = if (iters >= 3) ecPlan.ckpt() else ecPlan
-        val sess = ec.sparkSession
-        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-        val result = try {
-          sess.conf.set("spark.sql.adaptive.enabled", "false")
+        try withoutAqe(ec.sparkSession) {
           // iteration 1 with h0 ≡ 1 is the indegree count — exchange-free
           // over the __p-partitioned copy, no join, no h0 frame at all.
           // The hub half-step is built only where a LATER authority step
@@ -678,11 +660,7 @@ object Graph {
           a.orderBy(col("__as").desc, col("__p").asc).limit(topK)
             .select(col("__p").as("part"), col("__as").as("authority"))
             .ckpt()
-        } finally {
-          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-          Dedup.freeCheckpoints(ec, ep)
-        }
-        result
+        } finally Dedup.freeCheckpoints(ec, ep)
     }
   }
 
@@ -924,9 +902,7 @@ object Graph {
     var eLvl = e
       .repartition(par, col("__u"))
       .ckpt()
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
+    try withoutAqe(sess) {
       // per-level CC via the min-label loop, mapping composed as a
       // checkpointed frame
       val spent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -978,10 +954,7 @@ object Graph {
         else mapping.ckpt()
       Dedup.freeCheckpoints(spent.toSeq: _*)
       result
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      Dedup.freeCheckpoints(eLvl)
-    }
+    } finally Dedup.freeCheckpoints(eLvl)
   }
 
   /** MODULARITY audit of the final [[louvainLevels]] partition — the
@@ -1198,134 +1171,81 @@ object Graph {
     * round's output (zero-valued contributions still form groups) —
     * the restart mask needs no outer join.
     *
-    * r18: when the node-sized rank state passes [[resolveBroadcast]]
-    * (default), the state lives DRIVER-RESIDENT and each iteration is
-    * one cluster job with the strength divisor shipped on the frontier
-    * LocalRelation — see the fast-path comment in the body; past the
-    * limit the twin keeps this distributed loop. */
+    * Driver tier: the collected edges ([[collectEdges]], weight cast to
+    * BIGINT) run the same recurrence in index space — seeds are the
+    * `nSeeds` smallest indices, and a zero-rank source is skipped, since
+    * its per-edge share (0·w) div W is 0. Exact (overflow-checked) long
+    * arithmetic keeps the twin's ANSI failures. */
   def weightedPersonalizedPagerank(wpairs: DataFrame, uCol: String,
                                    vCol: String, wCol: String,
                                    iters: Int, nSeeds: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(nSeeds >= 1, s"nSeeds must be >= 1, got $nSeeds")
-    // rank + strength state is node-sized — bounded by the pair stream
-    val bState = resolveBroadcast(wpairs)
-    val par = wpairs.sparkSession.sparkContext.defaultParallelism
-    // node ids cast to long up front: the seed collect below reads
-    // getLong, and integer-typed caller columns must keep working (the
-    // pre-r16 all-DataFrame form was type-agnostic)
-    val eBare = wpairs.select(explode(array(
-        struct(col(uCol).cast("long").as("__s"),
-          col(vCol).cast("long").as("__t"),
-          col(wCol).cast("bigint").as("__w")),
-        struct(col(vCol).cast("long").as("__s"),
-          col(uCol).cast("long").as("__t"),
-          col(wCol).cast("bigint").as("__w")))).as("__e"))
-      .select(col("__e.__s").as("__s"), col("__e.__t").as("__t"),
-        col("__e.__w").as("__w"))
-    if (bState) {
-      // DRIVER-RESIDENT rank state:
-      // the (node → pr) table is node-sized and resolveBroadcast just
-      // declared it broadcast-eligible — state that fits an executor
-      // broadcast fits the driver. Two structural wins over the
-      // distributed loop:
-      //  - the strength divisor W(u) no longer rides the edge frame as
-      //    a window sum (a full per-partition SORT of the doubled edge
-      //    stream); it folds once (node-keyed hash agg), COLLECTS, and
-      //    re-enters each round on the frontier LocalRelation rows —
-      //    the edge checkpoint is the bare (s, t, w) stream.
-      //  - each iteration is ONE cluster job: e ⋈ broadcast(frontier)
-      //    + the __t-keyed contribution fold, collected. Zero-rank
-      //    nodes are DROPPED from the frontier — exact, because their
-      //    per-edge contribution (0·w) div W ≡ 0 and a node absent
-      //    from every in-neighborhood folds to c = 0, replayed
-      //    driver-side (seed bonus for seeds, 0 otherwise).
-      //  - no __s repartition: every round joins by BROADCAST, so edge
-      //    co-location buys nothing — the doubled stream checkpoints in
-      //    the upstream's partitioning and one full 2|E|-row exchange
-      //    disappears (the __t contribution fold still exchanges only
-      //    node-sized partials).
-      // Arithmetic is identical (integer (pr·w) div W per edge, integer
-      // 17·c div 20 damping); past the limit the twin keeps the
-      // all-distributed loop for graphs whose node frame outgrows a
-      // broadcast (spec-pinned equal in GraphSpec).
-      val e = eBare.ckpt()
-      val sess = e.sparkSession
-      val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-      try {
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-        val strength = e.groupBy(col("__s"))
-          .agg(sum(col("__w")).as("__wk")).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        if (strength.isEmpty)
-          return e.limit(0).select(col("__s").as("node"),
-            col("__w").as("wppr")).localCheckpoint()
-        val seedIds = strength.keys.toSeq.sorted.take(nSeeds)
-        val seedSet = seedIds.toSet
-        var pr = scala.collection.mutable.HashMap[Long, Long](
-          seedIds.map(_ -> 1000000L): _*)
-        val fSchema = StructType(Seq("__s", "__pr", "__wk")
-          .map(StructField(_, LongType, nullable = false)))
-        (1 to iters).foreach { _ =>
-          val fDf = localDf(sess, fSchema, pr.toSeq.collect {
-            case (n, p) if p != 0L => Row(n, p, strength(n)) })
-          val folded = e.join(broadcast(fDf), Seq("__s"))
-            .groupBy(col("__t"))
-            .agg(sum(expr("(__pr * __w) div __wk")).as("__c"))
-            .collect()
-          val next = scala.collection.mutable.HashMap.empty[Long, Long]
-          folded.foreach { r =>
-            val t = r.getLong(0); val c = r.getLong(1)
-            // c ≥ 0 (integer sums of non-negative floors), so JVM / is
-            // the same floor div the distributed expr computes
-            next(t) = (if (seedSet(t)) 150000L else 0L) + 17 * c / 20
-          }
-          seedIds.foreach { s => if (!next.contains(s)) next(s) = 150000L }
-          pr = next
+    collectEdges(wpairs, uCol, vCol, Some(wCol)) match {
+      case Some(g) =>
+        val (iu, iv, w) = (g.iu, g.iv, g.w)
+        val strength = new Array[Long](g.n)
+        var i = 0
+        while (i < g.m) {
+          strength(iu(i)) = Math.addExact(strength(iu(i)), w(i))
+          strength(iv(i)) = Math.addExact(strength(iv(i)), w(i))
+          i += 1
         }
-        return localDf(sess, StructType(Seq("node", "wppr")
-            .map(StructField(_, LongType, nullable = false))),
-          strength.keys.toSeq.map(n => Row(n, pr.getOrElse(n, 0L))))
-      } finally {
-        sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-        Dedup.freeCheckpoints(e)
-      }
+        val k = math.min(nSeeds, g.n)
+        var pr = Array.tabulate(g.n)(t => if (t < k) 1000000L else 0L)
+        (1 to iters).foreach { _ =>
+          val c = new Array[Long](g.n)
+          def push(s: Int, t: Int, wt: Long): Unit = if (pr(s) != 0L)
+            c(t) = Math.addExact(c(t), Math.multiplyExact(pr(s), wt) / strength(s))
+          i = 0
+          while (i < g.m) {
+            push(iu(i), iv(i), w(i)); push(iv(i), iu(i), w(i)); i += 1 }
+          pr = Array.tabulate(g.n)(t =>
+            (if (t < k) 150000L else 0L) + Math.multiplyExact(17L, c(t)) / 20)
+        }
+        nodeValueDf(wpairs.sparkSession, "wppr", g.ids, pr)
+      case None =>
+        val par = wpairs.sparkSession.sparkContext.defaultParallelism
+        // node ids cast to long: the seed collect below reads getLong,
+        // and non-BIGINT ids take this path
+        val e = wpairs.filter(nonNull(uCol, vCol, wCol))
+          .select(explode(array(
+            struct(col(uCol).cast("long").as("__s"),
+              col(vCol).cast("long").as("__t"),
+              col(wCol).cast("bigint").as("__w")),
+            struct(col(vCol).cast("long").as("__s"),
+              col(uCol).cast("long").as("__t"),
+              col(wCol).cast("bigint").as("__w")))).as("__e"))
+          .select(col("__e.__s").as("__s"), col("__e.__t").as("__t"),
+            col("__e.__w").as("__w"))
+          .repartition(par, col("__s"))
+          .withColumn("__wk",
+            sum(col("__w")).over(Window.partitionBy(col("__s"))))
+          .ckpt()
+        try withoutAqe(e.sparkSession) {
+          // nSeeds smallest node ids — driver-collected (nSeeds-bounded by
+          // the require above; rides the checkpoint's partitioning)
+          val seedIds = e.select(col("__s")).distinct()
+            .orderBy(col("__s")).limit(nSeeds)
+            .collect().map(_.getLong(0)).toSeq
+          def seedMask(n: Column): Column =
+            if (seedIds.isEmpty) lit(false) else n.isin(seedIds: _*)
+          var pr = e.select(col("__s")).distinct()
+            .select(col("__s"), when(seedMask(col("__s")), lit(1000000L))
+              .otherwise(lit(0L)).as("__pr"))
+          (1 to iters).foreach { _ =>
+            pr = e
+              .join(pr, Seq("__s"))
+              .groupBy(col("__t"))
+              .agg(sum(expr("(__pr * __w) div __wk")).as("__c"))
+              .select(col("__t").as("__s"),
+                (when(seedMask(col("__t")), lit(150000L)).otherwise(lit(0L))
+                  + expr("(17 * __c) div 20")).as("__pr"))
+          }
+          pr.select(col("__s").as("node"), col("__pr").as("wppr"))
+            .ckpt()
+        } finally Dedup.freeCheckpoints(e)
     }
-    val e = eBare
-      .repartition(par, col("__s"))
-      .withColumn("__wk",
-        sum(col("__w")).over(Window.partitionBy(col("__s"))))
-      .ckpt()
-    val sess = e.sparkSession
-    val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    val result = try {
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      // nSeeds smallest node ids — driver-collected (nSeeds-bounded by
-      // the require above; rides the checkpoint's partitioning)
-      val seedIds = e.select(col("__s")).distinct()
-        .orderBy(col("__s")).limit(nSeeds)
-        .collect().map(_.getLong(0)).toSeq
-      def seedMask(n: Column): Column =
-        if (seedIds.isEmpty) lit(false) else n.isin(seedIds: _*)
-      var pr = e.select(col("__s")).distinct()
-        .select(col("__s"), when(seedMask(col("__s")), lit(1000000L))
-          .otherwise(lit(0L)).as("__pr"))
-      (1 to iters).foreach { _ =>
-        pr = e
-          .join(pr, Seq("__s"))
-          .groupBy(col("__t"))
-          .agg(sum(expr("(__pr * __w) div __wk")).as("__c"))
-          .select(col("__t").as("__s"),
-            (when(seedMask(col("__t")), lit(150000L)).otherwise(lit(0L))
-              + expr("(17 * __c) div 20")).as("__pr"))
-      }
-      pr.select(col("__s").as("node"), col("__pr").as("wppr"))
-        .ckpt()
-    } finally {
-      sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      Dedup.freeCheckpoints(e)
-    }
-    result
   }
 
   /** LINK PREDICTION by RESOURCE ALLOCATION index (Zhou/Lü/Zhang 2009):
@@ -1451,11 +1371,17 @@ object Graph {
     * checkpoint in this file — harmless on result frames that are only
     * read back, and AQE contributes nothing to these checkpoint jobs
     * anyway (their plans end in explicit fixed-count repartitions). */
-  private[graft] def checkpointPartitioned(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
+  private[graft] def checkpointPartitioned(df: DataFrame): DataFrame =
+    withoutAqe(df.sparkSession)(df.localCheckpoint())
+
+  /** Runs `body` with AQE off, restoring the session's setting after —
+    * the fixed-shape iteration chains and partition-preserving
+    * checkpoints of this file, where adaptivity has nothing to decide
+    * and would turn each exchange into its own job barrier. */
+  private def withoutAqe[T](sess: SparkSession)(body: => T): T = {
     val was = sess.conf.get("spark.sql.adaptive.enabled", "true")
     sess.conf.set("spark.sql.adaptive.enabled", "false")
-    try df.localCheckpoint()
+    try body
     finally sess.conf.set("spark.sql.adaptive.enabled", was)
   }
 
@@ -1819,11 +1745,8 @@ object Graph {
       case None =>
         val e = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)), uCol, vCol)
           .ckpt()
-        val sess = e.sparkSession
-        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
         val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        val result = try {
-          sess.conf.set("spark.sql.adaptive.enabled", "false")
+        try withoutAqe(e.sparkSession) {
           // every node appears as a source of the __s-partitioned oriented
           // frame, so the seed distinct is exchange-free.
           // FRONTIER DELTA (r12 verdict): only labels that CHANGED last round
@@ -1848,11 +1771,9 @@ object Graph {
           merged.select(col("__n").as("node"), col("__l").as("label"))
             .ckpt()
         } finally {
-          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
           cached.foreach(_.unpersist(blocking = false))
           Dedup.freeCheckpoints(e)
         }
-        result
     }
   }
 
@@ -1984,11 +1905,8 @@ object Graph {
       case None =>
         val e = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)), uCol, vCol)
           .localCheckpoint()
-        val sess = e.sparkSession
-        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
         val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        val result = try {
-          sess.conf.set("spark.sql.adaptive.enabled", "false")
+        try withoutAqe(e.sparkSession) {
           // every node appears as a source in the oriented frame; the
           // distinct rides the __s partitioning (exchange-free)
           val srcs = e.select(col("__s")).distinct()
@@ -2011,11 +1929,9 @@ object Graph {
               col("__lvl").as("lvl"))
             .localCheckpoint()
         } finally {
-          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
           cached.foreach(_.unpersist(blocking = false))
           Dedup.freeCheckpoints(e)
         }
-        result
     }
   }
 
@@ -2084,18 +2000,11 @@ object Graph {
           uCol, vCol, partitionByTarget = true)
         val e = checkpointPartitioned(
           if (dedupEdges) oriented.distinct() else oriented)
-        val sess = e.sparkSession
-        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
-        val result = try {
-          sess.conf.set("spark.sql.adaptive.enabled", "false")
+        try withoutAqe(e.sparkSession) {
           val state = pathCountsLoop(e, nSources, maxDepth)
           state.select(col("__src").as("src"), col("__n").as("node"),
             col("__lvl").as("lvl"), col("__sig").as("paths"))
-        } finally {
-          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
-          Dedup.freeCheckpoints(e)
-        }
-        result
+        } finally Dedup.freeCheckpoints(e)
     }
   }
 
@@ -2256,14 +2165,11 @@ object Graph {
           uCol, vCol, partitionByTarget = true)
         val e = checkpointPartitioned(
           if (dedupEdges) oriented.distinct() else oriented)
-        val sess = e.sparkSession
-        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
         // declared outside the try so a throwing loop body can't leak the
         // per-level checkpoint blocks (freed in the finally; freeing an
         // already-freed or never-materialized frame is a no-op)
         val spent = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        val result = try {
-          sess.conf.set("spark.sql.adaptive.enabled", "false")
+        try withoutAqe(e.sparkSession) {
           val state = pathCountsLoop(e, nSources, maxDepth)
           spent += state
           // deepest level: no successors within the bound, δ = 0 by the
@@ -2307,11 +2213,9 @@ object Graph {
             .ckpt()
           out
         } finally {
-          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
           Dedup.freeCheckpoints(spent.toSeq: _*)
           Dedup.freeCheckpoints(e)
         }
-        result
     }
   }
 
@@ -2368,11 +2272,8 @@ object Graph {
         val e = ssspEdges(wedges.filter(nonNull(uCol, vCol, wCol)), uCol, vCol, wCol)
           .repartition(par, col("__s"))
           .ckpt()
-        val sess = e.sparkSession
-        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
         val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        val result = try {
-          sess.conf.set("spark.sql.adaptive.enabled", "false")
+        try withoutAqe(e.sparkSession) {
           // the source seed stays LAZY (min over the checkpointed blocks,
           // filtered empty on a null min — no rows on an empty graph), so
           // the whole loop including seeding is ONE action with no
@@ -2397,11 +2298,9 @@ object Graph {
           dist.select(col("__n").as("node"), col("__d").as("dist"))
             .ckpt()
         } finally {
-          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
           Dedup.freeCheckpoints(cached.toSeq: _*)
           Dedup.freeCheckpoints(e)
         }
-        result
     }
   }
 
@@ -2731,9 +2630,9 @@ object Graph {
     * (executeTake runs partitions in waves) and falls back to the
     * caller's distributed twin having moved at most the broadcast-class
     * byte budget once. `pairBound` additionally declines when the
-    * quadratic pair expansion would exceed `graft.graph.pairStreamLimit`,
-    * clamped to the one array [[BasketIndex.expandPairs]] can fill
-    * (callers that expand pairs). NULL semantics follow the twin's
+    * quadratic pair expansion, at 8 bytes a pair, would exceed the same
+    * byte budget, clamped to the one array [[BasketIndex.expandPairs]]
+    * can fill (callers that expand pairs). NULL semantics follow the twin's
     * sorted sets: NULL items are skipped; a NULL group declines, since
     * the twin keeps it as its own basket and the packed index cannot
     * tell it from group 0. Non-BIGINT id columns take the distributed
@@ -2743,10 +2642,9 @@ object Graph {
       : Option[BasketIndex] = {
     if (items.schema(gCol).dataType != LongType ||
         items.schema(iCol).dataType != LongType) return None
-    val sess = items.sparkSession
-    val capRows = sess.conf
-      .get("graft.graph.broadcastLimitBytes", (256L << 20).toString).toLong / 16
-    val cap = math.min(capRows, (Int.MaxValue - 8).toLong).toInt
+    val limit = items.sparkSession.conf
+      .get("graft.graph.broadcastLimitBytes", (256L << 20).toString).toLong
+    val cap = math.min(limit / 16, (Int.MaxValue - 8).toLong).toInt
     val raw = items.select(col(gCol), col(iCol)).limit(cap + 1)
       .queryExecution.executedPlan.executeCollect()
     if (raw.length > cap || raw.exists(_.isNullAt(0))) return None
@@ -2758,8 +2656,7 @@ object Graph {
     val ii = indexOf(itemIds, item)
     val entries = Array.tabulate(rows.length)(i => (gi(i).toLong << 32) | ii(i))
     val bi = new BasketIndex(itemIds, itemIds.length, entries, sortDedup(entries))
-    val pairLimit = math.min(Int.MaxValue.toLong - 8, sess.conf
-      .get("graft.graph.pairStreamLimit", (1L << 25).toString).toLong)
+    val pairLimit = math.min(limit / 8, Int.MaxValue.toLong - 8)
     if (pairBound && bi.pairExpansionCount > pairLimit) None else Some(bi)
   }
 
@@ -3405,11 +3302,8 @@ object Graph {
         // formulation drops nodes with no surviving edges.
         val e = orientedAdjacency(edges.filter(nonNull(uCol, vCol)), uCol, vCol)
           .ckpt()
-        val sess = e.sparkSession
-        val aqeWas = sess.conf.get("spark.sql.adaptive.enabled", "true")
         val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        val result = try {
-          sess.conf.set("spark.sql.adaptive.enabled", "false")
+        try withoutAqe(e.sparkSession) {
           // persisted because every round reads it twice (frontier + survivors)
           var deg = kcoreDegrees(e).persist()
           cached += deg
@@ -3423,11 +3317,9 @@ object Graph {
             .select(col("__n").as("node"), col("__d").as("degree"))
             .ckpt()
         } finally {
-          sess.conf.set("spark.sql.adaptive.enabled", aqeWas)
           cached.foreach(_.unpersist(blocking = false))
           Dedup.freeCheckpoints(e)
         }
-        result
     }
   }
 

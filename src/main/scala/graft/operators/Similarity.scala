@@ -753,11 +753,12 @@ object Similarity {
     * This is the "dedup by meaning" pass a training pipeline runs after
     * token-level dedup: paraphrases and near-translations share no n-grams
     * but sit together in embedding space. Scale shape inherits from the
-    * parts: bucketed pair generation O(n·2^−bits-ish), CC edge-proportional
-    * with the bounded driver path / distributed hash-min fallback. The
-    * kept-row anti-join reads the component labels' narrow checkpoint
-    * (freed by the ContextCleaner once the result is garbage — the CC
-    * contract). */
+    * parts: bucketed pair generation O(n·2^−bits-ish), then
+    * [[Graph.connectedComponentsMinLabel]] (driver union-find tier under
+    * `graft.graph.broadcastLimitBytes`, distributed hash-min twin past
+    * it). The kept-row anti-join reads the component labels (the twin's
+    * narrow checkpoint is freed by the ContextCleaner once the result is
+    * garbage — the CC contract). */
   def dropEmbeddingNearDupsCC(vecs: DataFrame, threshold: Double, bits: Int = 8,
                               maxIter: Int = 25, idCol: String = "vec_id",
                               vecCol: String = "embedding"): DataFrame = {
@@ -766,7 +767,8 @@ object Similarity {
     // edge checkpoint as soon as the component labels materialize
     val pairs = embeddingNearDups(vecs, threshold, bits, idCol, vecCol)
       .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    val comp = Dedup.connectedComponents(pairs, maxIter)
+    val comp = Graph.connectedComponentsMinLabel(pairs, "doc_a", "doc_b",
+      maxRounds = maxIter)
     Dedup.freeCheckpoints(pairs)
     val dropped = comp.filter(col("node") =!= col("component"))
       .select(col("node").as(idCol))

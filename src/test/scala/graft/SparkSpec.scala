@@ -8,7 +8,7 @@ import org.scalatest.Suite
 trait SparkSpec { self: Suite =>
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** Runs `body` with the three driver-tier size limits at 0, so every
+  /** Runs `body` with the two driver-tier size limits at 0, so every
     * size gate declines and the distributed twins run (the benchmark's
     * twin regime); the previous settings are restored afterwards. */
   def withTwins[T](body: => T): T = {
@@ -21,7 +21,7 @@ trait SparkSpec { self: Suite =>
 
 object SparkSpec {
   val TierLimits = Seq("graft.graph.broadcastLimitBytes",
-    "graft.graph.pairStreamLimit", "graft.dedup.bitmapMaxReps")
+    "graft.dedup.bitmapMaxReps")
 
   lazy val session: SparkSession = LocalTuning(SparkSession.builder()
     .master("local[4]")

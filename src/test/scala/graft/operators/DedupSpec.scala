@@ -286,14 +286,12 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // two components: {1,2,3} (a chain — 1 and 3 not directly joined) and {10,11}
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L)
-    // local union-find path (small graph, default threshold)...
-    val local = Dedup.connectedComponents(edges)
+    def cc() = Graph.connectedComponentsMinLabel(edges, "doc_a", "doc_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(local == expected)
-    // ...and the distributed hash-min loop, forced via localThreshold = 0
-    val dist = Dedup.connectedComponents(edges, localThreshold = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(dist == expected)
+    // union-find driver tier (small graph, default limits)...
+    assert(cc() == expected)
+    // ...and the distributed hash-min twin
+    assert(withTwins(cc()) == expected)
   }
 
   test("star CC equals hash-min CC on seeded random graphs, and on a long path") {
@@ -305,7 +303,8 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val starPath = labelsOf(Dedup.connectedComponentsStar(path))
     assert(starPath.size == 40 && starPath.values.forall(_ == 0L))
     // distributed hash-min walks the full 39-round diameter
-    val hmPath = labelsOf(Dedup.connectedComponents(path, maxIter = 45, localThreshold = 0))
+    val hmPath = withTwins(labelsOf(
+      Graph.connectedComponentsMinLabel(path, "doc_a", "doc_b", maxRounds = 45)))
     assert(hmPath.size == 40 && hmPath.values.forall(_ == 0L))
     // seeded random graphs: same components from both algorithms
     (1 to 3).foreach { seed =>
@@ -313,8 +312,10 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       val es = Seq.fill(60)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
         .filter { case (a, b) => a != b }
       val edges = es.toDF("doc_a", "doc_b")
-      val hm = labelsOf(Dedup.connectedComponents(edges, localThreshold = 0))
-      val lo = labelsOf(Dedup.connectedComponents(edges))
+      def cc() = labelsOf(
+        Graph.connectedComponentsMinLabel(edges, "doc_a", "doc_b"))
+      val hm = withTwins(cc())
+      val lo = cc()
       val st = labelsOf(Dedup.connectedComponentsStar(edges))
       assert(st == hm, s"seed=$seed: star=$st hashmin=$hm")
       assert(lo == hm, s"seed=$seed: local=$lo hashmin=$hm")

@@ -97,9 +97,12 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
     val rows = randomBaskets(43, 4, 30, 300) // few hub groups → big expansion
     val df = basketDf(rows)
     val conf = spark.conf
-    val was = conf.getOption("graft.graph.pairStreamLimit")
+    val wasB = conf.getOption("graft.graph.broadcastLimitBytes")
     try {
-      conf.set("graft.graph.pairStreamLimit", "10")
+      // the 300 rows fit the budget at 16 B a row; their group pairs,
+      // at 8 B a pair, do not
+      conf.set("graft.graph.broadcastLimitBytes", (300 * 16).toString)
+      assert(Graph.collectBaskets(df, "g", "i").isDefined)
       assert(Graph.collectBaskets(df, "g", "i", pairBound = true).isEmpty)
       val viaTwin = Graph.bipartiteProjectionTopK(df, "g", "i", 10)
       val twin = withTwins(Graph.bipartiteProjectionTopK(df, "g", "i", 10))
@@ -107,22 +110,16 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
       // at any limit the expansion must fit the one array expandPairs
       // fills: 65,537 items in one group expand to 2,147,516,416 pairs,
       // past Int.MaxValue − 8
-      conf.set("graft.graph.pairStreamLimit", Long.MaxValue.toString)
+      conf.set("graft.graph.broadcastLimitBytes", Long.MaxValue.toString)
       val hub = spark.range(65537L).select(lit(1L).as("g"), col("id").as("i"))
       assert(Graph.collectBaskets(hub, "g", "i", pairBound = true).isEmpty)
-    } finally {
-      was.fold(conf.unset("graft.graph.pairStreamLimit"))(
-        conf.set("graft.graph.pairStreamLimit", _))
-    }
-    val wasB = conf.getOption("graft.graph.broadcastLimitBytes")
-    try {
       conf.set("graft.graph.broadcastLimitBytes", "64") // capRows = 4
       assert(Graph.collectBaskets(df, "g", "i").isEmpty)
-      val viaTwin = Graph.triangleCountFromBaskets(df, "g", "i",
+      val triViaTwin = Graph.triangleCountFromBaskets(df, "g", "i",
         distEdges(df))
-      val twin = withTwins(Graph.triangleCountFromBaskets(df, "g", "i",
+      val triTwin = withTwins(Graph.triangleCountFromBaskets(df, "g", "i",
         distEdges(df)))
-      assert(rowSet(viaTwin) == rowSet(twin))
+      assert(rowSet(triViaTwin) == rowSet(triTwin))
     } finally {
       wasB.fold(conf.unset("graft.graph.broadcastLimitBytes"))(
         conf.set("graft.graph.broadcastLimitBytes", _))

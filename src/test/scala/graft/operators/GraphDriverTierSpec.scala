@@ -127,6 +127,8 @@ class GraphDriverTierSpec extends AnyFunSuite with SparkSpec {
     "pathCounts" -> (Graph.pathCounts(_, "u", "v", 2, 3)),
     "betweennessSampled" -> (Graph.betweennessSampled(_, "u", "v", 2, 3)),
     "ssspBounded" -> (Graph.ssspBounded(_, "u", "v", "w", 3)),
+    "weightedPersonalizedPagerank" ->
+      (Graph.weightedPersonalizedPagerank(_, "u", "v", "w", 3, 2)),
     "trussPeel" -> (Graph.trussPeel(_, "u", "v", 3, 1)),
     "kcorePeel" -> (Graph.kcorePeel(_, "u", "v", 2, 2)))
 
