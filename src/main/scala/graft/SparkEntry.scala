@@ -3986,16 +3986,14 @@ object SparkEntry {
       operators.Graph.triangleCountPlan(copurchaseEdgesRaw(s, dir), "u", "v")),
     "ext_clustering_coeff [pre-checkpoint edge-iterator]" -> ((s, dir) =>
       operators.Graph.clusteringPlan(copurchaseEdgesRaw(s, dir), "u", "v")),
-    "ext_dedup_jaccard_join [pre-checkpoint candidates+verify]" -> ((s, dir) => {
-      val reps = operators.Dedup.jaccardReps(t(s, dir, "documents"), "doc_id", "text")
-      val sorted = operators.Dedup.jaccardOrderedPrefix(reps, 4, 5)
-      operators.Dedup.jaccardVerifiedPairs(reps, sorted, 4, 5)
-    }),
+    "ext_dedup_jaccard_join [pre-checkpoint candidates+verify]" -> ((s, dir) =>
+      operators.Dedup.repPairsPlan(t(s, dir, "documents"), "doc_id", "text",
+        4, 5, bitmap = false)),
     "ext_dedup_jaccard_join / ext_containment_join [dense-vocab bitmap " +
       "pair stage: popcount gate on the join condition, zero pair-stream " +
       "exchanges]" -> ((s, dir) =>
-        operators.Dedup.bitmapPairsPlan(t(s, dir, "documents"),
-          "doc_id", "text", 4, 5)),
+        operators.Dedup.repPairsPlan(t(s, dir, "documents"),
+          "doc_id", "text", 4, 5, bitmap = true)),
     "ext_graph_components / ext_label_prop [one pre-checkpoint twin " +
       "min-label round: shuffled-hash delta push, label merge]" ->
       ((s, dir) =>

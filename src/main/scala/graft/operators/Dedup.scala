@@ -520,17 +520,10 @@ object Dedup {
     require(configs.nonEmpty && configs.forall(r => r >= 1 && seeds % r == 0),
       s"every rows-per-band must divide seeds=$seeds, got $configs")
     val jreps = jaccardReps(docs, idCol, textCol).localCheckpoint()
-    var toFree = Seq(jreps)
-    // ground truth only needs the PAIR IDS — dense-vocab corpora take the
-    // popcount join (bitmapMasks doc) and skip the prefix machinery
-    val truth = (bitmapMasks(jreps) match {
-      case Some(m) => bitmapPairs(m, thetaNum, thetaDen, containment = false)
-      case None =>
-        val sorted = jaccardOrderedPrefix(jreps, thetaNum, thetaDen)
-          .localCheckpoint()
-        toFree :+= sorted
-        jaccardVerifiedPairs(jreps, sorted, thetaNum, thetaDen)
-    }).select(col("__ra").as("doc_a"), col("__rb").as("doc_b"))
+    // ground truth only needs the PAIR IDS of the exact rep-pair kernel
+    val (repPairs, sorted) = exactRepPairs(jreps, thetaNum, thetaDen,
+      containment = false, cross = false)
+    val truth = repPairs.select(col("__ra").as("doc_a"), col("__rb").as("doc_b"))
     // signatures come straight off the CHECKPOINTED rep table — its __ts
     // arrays are the sorted distinct tokens, so hashing them in-row is
     // the same __harr [[tokenSets]] builds, without a second corpus
@@ -576,7 +569,7 @@ object Dedup {
           .otherwise(round(col("n_caught").cast("double") /
             col("n_true").cast("double"), 6)))
     val result = rows.localCheckpoint()
-    freeCheckpoints(toFree :+ t2: _*)
+    freeCheckpoints(jreps +: t2 +: sorted: _*)
     result
   }
 
@@ -1288,7 +1281,75 @@ object Dedup {
         s"slice(__ots, 1, __sz - (($thetaNum * __sz + $thetaDen - 1) div $thetaDen) + 1)"))
   }
 
-  /** Stage 3 of [[jaccardJoinExact]]: the candidate pair set — LIGHT rows
+  /** How the exact rep-pair joins differ, as data, so one kernel
+    * ([[exactRepPairs]]) serves all of them. The MEASURE (jaccard or
+    * containment at θ = num/den) fixes the size prune, the upper-bound
+    * gate, the build side's tokens and the merge verify; the FORM (self
+    * or cross-corpus) fixes the side filters on the `__corp` tag
+    * (0 = incoming = probe, 1 = reference = build) and the pair order. */
+  private[graft] final class PairForm(thetaNum: Int, thetaDen: Int,
+                                      containment: Boolean, cross: Boolean) {
+    /** Rep columns the form reads besides `__rep` and the tokens. */
+    val carry: Seq[String] = if (cross) Seq("__corp") else Nil
+    val probe: Column = if (cross) col("__corp") === 0 else lit(true)
+    val build: Column = if (cross) col("__corp") === 1 else lit(true)
+    /** Across corpora the split is the orientation; a self join keeps
+      * jaccard pairs unordered (a < b) and containment pairs ordered
+      * (a ≠ b: (a⊆b) and (b⊆a) are different facts). */
+    val order: Column =
+      if (cross) lit(true)
+      else if (containment) col("__ra") =!= col("__rb")
+      else col("__ra") < col("__rb")
+    /** Jaccard is size-symmetric, so the build side exposes its prefix
+      * too; any superset contains, so a container exposes ALL its
+      * ordered tokens. */
+    val buildTokens: String = if (containment) "__ots" else "__pref"
+    /** Lossless size prune over the candidate sizes (__sa, __sb):
+      * num·max ≤ den·min (jaccard), num·|A| ≤ den·|B| (containment). */
+    val sizeGate: Column =
+      if (containment) lit(thetaNum) * col("__sa") <= lit(thetaDen) * col("__sb")
+      else lit(thetaNum) * greatest(col("__sa"), col("__sb")) <=
+        lit(thetaDen) * least(col("__sa"), col("__sb"))
+    /** ub ≥ α: (num+den)·ub ≥ num·(sa+sb) for J ≥ num/den, den·ub ≥
+      * num·sa for containment(A in B) ≥ num/den. With ub an overlap
+      * BOUND it is the positional and suffix filter; with ub the exact
+      * overlap it is the bitmap θ gate. */
+    def ubGate(ub: Column, sa: Column, sb: Column): Column =
+      if (containment) lit(thetaDen) * ub >= lit(thetaNum) * sa
+      else lit(thetaNum + thetaDen) * ub >= lit(thetaNum) * (sa + sb)
+    /** Fused merge verify over two lexicographically sorted token arrays:
+      * the exact overlap, or -1 once the rest cannot reach α. */
+    def verify(ta: Column, tb: Column): Column =
+      if (containment)
+        org.apache.spark.sql.graft.SortedContainGate.of(ta, tb, thetaNum, thetaDen)
+      else org.apache.spark.sql.graft.SortedOverlapGate.of(ta, tb, thetaNum, thetaDen)
+  }
+
+  /** THE exact rep-pair kernel of the jaccard/containment family: every
+    * pair of `reps` (checkpointed [[jaccardReps]], plus `__corp` for a
+    * cross form) that passes the θ gate, as (__ra, __rb, __i overlap,
+    * __la, __lb set sizes), with the checkpoints the caller frees once
+    * its result is materialized. Dense-vocab rep tables take the
+    * popcount join ([[bitmapMasks]] gate, [[bitmapPairs]]); the rest take
+    * the PPJoin prefix filter, whose ordered prefixes are checkpointed
+    * once (they feed both sides of the candidate join). Same-set (clone)
+    * pairs and member expansion stay with the caller. */
+  private def exactRepPairs(reps: DataFrame, thetaNum: Int, thetaDen: Int,
+                            containment: Boolean, cross: Boolean)
+      : (DataFrame, Seq[DataFrame]) = {
+    val form = new PairForm(thetaNum, thetaDen, containment, cross)
+    bitmapMasks(reps, form.carry) match {
+      case Some(m) => (bitmapPairs(m, form), Nil)
+      case None =>
+        val ordered = jaccardOrderedPrefix(reps, thetaNum, thetaDen)
+        val sorted = (if (form.carry.isEmpty) ordered
+          else ordered.join(reps.select(("__rep" +: form.carry).map(col): _*),
+            Seq("__rep"))).localCheckpoint()
+        (verifiedPairs(reps, sorted, form), Seq(sorted))
+    }
+  }
+
+  /** Stage 3 of the prefix filter: the candidate pair set — LIGHT rows
     * only (rep id + size + match position): a pair sharing several prefix
     * tokens meets several times, so the scalar distinct runs BEFORE any
     * array work (a 6× verify cut on the fixture corpus), and the arrays
@@ -1297,22 +1358,64 @@ object Dedup {
     * verify stage's parallelism: their inputs are byte-light but
     * compute-dense, exactly the shape AQE's byte-based coalescing
     * serializes onto one core (skill-book lesson; measured 272 s →
-    * seconds at sf0.1).
+    * seconds at sf0.1). The probe side always meets on its PREFIX; the
+    * build side on [[PairForm.buildTokens]].
     *
     * POSITIONAL FILTER (full PPJoin, Xiao et al. 2008): a row meeting on
     * a prefix token at 0-based positions (pa, pb) bounds the overlap by
     * ubound = min(sa − pa, sb − pb) — only tokens at-or-after the match
-    * can still intersect — and J ≥ θ needs o ≥ ⌈num·(sa+sb)/(num+den)⌉,
-    * so rows with (num+den)·ubound < num·(sa+sb) cannot witness a
-    * qualifying pair. Exactness survives because the filter runs
-    * PER-ROW, before the scalar distinct: for a true pair the MINIMAL
-    * shared token (global order) has every intersection token at or
-    * after it in both arrays, so ITS row always passes — dropping the
-    * other meetings only removes duplicates the distinct would eat.
-    * `positional = false` keeps the pre-r10 size-only pruning (spec /
-    * diagnostics use it to measure the filter's candidate cut).
-    *
-    * GROUPED SUFFIX FILTER (r15): the scalar distinct is an aggregation
+    * can still intersect — so rows whose ubound fails the form's
+    * [[PairForm.ubGate]] cannot witness a qualifying pair. Exactness
+    * survives because the filter runs PER-ROW, before the scalar
+    * distinct: for a true pair the MINIMAL shared token (global order)
+    * has every intersection token at or after it in both arrays (both
+    * are ordered by the SAME global order, container side included), so
+    * ITS row always passes — dropping the other meetings only removes
+    * duplicates the distinct would eat. `positional = false` keeps the
+    * pre-r10 size-only pruning (spec / diagnostics use it to measure the
+    * filter's candidate cut). */
+  private[graft] def prefixCandidates(sorted: DataFrame, form: PairForm,
+                                      positional: Boolean = true): DataFrame = {
+    val par = sorted.sparkSession.sparkContext.defaultParallelism
+    // SALTED pair-emitting join: a small-vocabulary corpus has fewer
+    // prefix tokens than cores (the fixture: 31 tokens, 32 threads), so a
+    // plain token-keyed shuffle join caps parallelism at the token count
+    // and serializes on hot tokens. Salting spreads each token's probe
+    // rows over `salts` buckets (pa rides exactly one salt, pb replicates
+    // to all — pair multiplicity unchanged, so exactness and the distinct
+    // are untouched); replication cost is salts × prefix-row count on the
+    // build side only — the standard skew recipe [[Skew.saltedJoin]].
+    val salts = 8
+    val pa = sorted.filter(form.probe)
+      .select(col("__rep").as("__ra"), col("__sz").as("__sa"),
+        posexplode(col("__pref")).as(Seq("__pa", "__ptok")))
+      .withColumn("__salt", pmod(hash(col("__ra")), lit(salts)))
+      .repartition(par, col("__ptok"), col("__salt"))
+    val pb = sorted.filter(form.build)
+      .select(col("__rep").as("__rb"), col("__sz").as("__sb"),
+        posexplode(col(form.buildTokens)).as(Seq("__pb", "__ptok")))
+      .withColumn("__salt", explode(sequence(lit(0), lit(salts - 1))))
+      .repartition(par, col("__ptok"), col("__salt"))
+    val met = pa.join(pb, Seq("__ptok", "__salt"))
+      .filter(form.order)
+      .filter(form.sizeGate)
+    // ONE exchange for the dedup AND the parallelism pin: the explicit
+    // repartition hash-partitions on exactly the fold's grouping keys,
+    // so the aggregation reuses it (no second exchange), and AQE never
+    // coalesces a user-specified repartition — the byte-light candidate
+    // stream keeps `par`-way parallelism into the verify stage.
+    if (positional)
+      suffixFoldedPairs(
+        met.filter(form.ubGate(
+          least(col("__sa") - col("__pa"), col("__sb") - col("__pb")),
+          col("__sa"), col("__sb"))),
+        par)(form.ubGate)
+    else met.select(col("__ra"), col("__rb"))
+      .repartition(par, col("__ra"), col("__rb"))
+      .distinct()
+  }
+
+  /** GROUPED SUFFIX FILTER (r15): the scalar distinct is an aggregation
     * anyway, so it folds the per-pair evidence instead of discarding it:
     * o = matched prefix tokens, (xa, xb) = the LAST match's positions.
     * Both arrays are ordered by the SAME global df order, so the
@@ -1340,79 +1443,34 @@ object Dedup {
       .select(col("__ra"), col("__rb"))
   }
 
-  /** ub ≥ α for J ≥ num/den: (num+den)·ub ≥ num·(sa+sb). */
-  private def jaccardUbGate(num: Int, den: Int)
-                           (ub: Column, sa: Column, sb: Column): Column =
-    lit(num + den) * ub >= lit(num) * (sa + sb)
-
-  /** ub ≥ α for containment(A in B) ≥ num/den: den·ub ≥ num·sa. */
-  private def containUbGate(num: Int, den: Int)
-                           (ub: Column, sa: Column, sb: Column): Column =
-    lit(den) * ub >= lit(num) * sa
-
-  private[graft] def jaccardCandidates(sorted: DataFrame, thetaNum: Int,
-                                           thetaDen: Int,
-                                           positional: Boolean = true): DataFrame = {
-    val par = sorted.sparkSession.sparkContext.defaultParallelism
-    // SALTED pair-emitting join: a small-vocabulary corpus has fewer
-    // prefix tokens than cores (the fixture: 31 tokens, 32 threads), so a
-    // plain token-keyed shuffle join caps parallelism at the token count
-    // and serializes on hot tokens. Salting spreads each token's probe
-    // rows over `salts` buckets (pa rides exactly one salt, pb replicates
-    // to all — pair multiplicity unchanged, so exactness and the distinct
-    // are untouched); replication cost is salts × prefix-row count on the
-    // build side only — the standard skew recipe [[Skew.saltedJoin]].
-    val salts = 8
-    val pa = sorted.select(col("__rep").as("__ra"), col("__sz").as("__sa"),
-        posexplode(col("__pref")).as(Seq("__pa", "__ptok")))
-      .withColumn("__salt", pmod(hash(col("__ra")), lit(salts)))
-      .repartition(par, col("__ptok"), col("__salt"))
-    val pb = sorted.select(col("__rep").as("__rb"), col("__sz").as("__sb"),
-        posexplode(col("__pref")).as(Seq("__pb", "__ptok")))
-      .withColumn("__salt", explode(sequence(lit(0), lit(salts - 1))))
-      .repartition(par, col("__ptok"), col("__salt"))
-    val met = pa.join(pb, Seq("__ptok", "__salt"))
-      .filter(col("__ra") < col("__rb"))
-      .filter(lit(thetaNum) * greatest(col("__sa"), col("__sb")) <=
-        lit(thetaDen) * least(col("__sa"), col("__sb")))
-    // ONE exchange for the dedup AND the parallelism pin: the explicit
-    // repartition hash-partitions on exactly the fold's grouping keys,
-    // so the aggregation reuses it (no second exchange), and AQE never
-    // coalesces a user-specified repartition — the byte-light candidate
-    // stream keeps `par`-way parallelism into the verify stage.
-    if (positional)
-      suffixFoldedPairs(
-        met.filter(lit(thetaNum + thetaDen) *
-            least(col("__sa") - col("__pa"), col("__sb") - col("__pb")) >=
-          lit(thetaNum) * (col("__sa") + col("__sb"))),
-        par)(jaccardUbGate(thetaNum, thetaDen))
-    else met.select(col("__ra"), col("__rb"))
-      .repartition(par, col("__ra"), col("__rb"))
-      .distinct()
-  }
-
-  /** Stage 4 of [[jaccardJoinExact]]: candidates verified at REP level —
-    * (__ra, __rb, __i inter size, __la, __lb set sizes), J ≥ θ
-    * guaranteed. Verify arrays come from reps' LEXICOGRAPHIC token sets
-    * (not the df-ordered prefix arrays): SortedOverlapGate
-    * merge-intersects two sorted arrays in one fused codegen'd pass — no
-    * per-pair hash set, and the θ gate folded into the loop aborts a
-    * failing pair the moment the remaining elements can't reach α
-    * (PPJoin's verify early-exit). Exactness spec-pinned against the
-    * array_intersect + integer-gate composition. */
-  private[graft] def jaccardVerifiedPairs(reps: DataFrame, sorted: DataFrame,
-                                          thetaNum: Int, thetaDen: Int): DataFrame = {
-    val candIds = jaccardCandidates(sorted, thetaNum, thetaDen)
-    val arrA = reps.select(col("__rep").as("__ra"), col("__ts").as("__ta"),
-      size(col("__ts")).cast("long").as("__la"))
-    val arrB = reps.select(col("__rep").as("__rb"), col("__ts").as("__tb"),
-      size(col("__ts")).cast("long").as("__lb"))
+  /** Stage 4 of the prefix filter: candidates verified at REP level —
+    * (__ra, __rb, __i inter size, __la, __lb set sizes), θ guaranteed.
+    * Verify arrays come from reps' LEXICOGRAPHIC token sets (not the
+    * df-ordered prefix arrays): [[PairForm.verify]] merge-intersects two
+    * sorted arrays in one fused codegen'd pass — no per-pair hash set,
+    * and the θ gate folded into the loop aborts a failing pair the
+    * moment the remaining elements can't reach α (PPJoin's verify
+    * early-exit). Exactness spec-pinned against the array_intersect +
+    * integer-gate composition. */
+  private def verifiedPairs(reps: DataFrame, sorted: DataFrame,
+                            form: PairForm): DataFrame = {
+    val candIds = prefixCandidates(sorted, form)
+    val arrA = reps.filter(form.probe)
+      .select(col("__rep").as("__ra"), col("__ts").as("__ta"),
+        size(col("__ts")).cast("long").as("__la"))
+    val arrB = reps.filter(form.build)
+      .select(col("__rep").as("__rb"), col("__ts").as("__tb"),
+        size(col("__ts")).cast("long").as("__lb"))
     candIds.join(arrA, Seq("__ra")).join(arrB, Seq("__rb"))
-      .withColumn("__i", org.apache.spark.sql.graft.SortedOverlapGate.of(
-        col("__ta"), col("__tb"), thetaNum, thetaDen))
+      .withColumn("__i", form.verify(col("__ta"), col("__tb")))
       .filter(col("__i") >= 0L)
       .select(col("__ra"), col("__rb"), col("__i"), col("__la"), col("__lb"))
   }
+
+  /** Past this rep count the bitmap join's quadratic popcount work
+    * (≈ 0.5 G evals at the cap) loses to the prefix filter's candidate
+    * bound. */
+  private val BitmapMaxReps = 32768L
 
   /** DENSE-VOCAB BITMAP fast path for the exact jaccard/containment
     * families (optimization r18; guide §2.3 "shuffle fewer bytes" and
@@ -1430,23 +1488,24 @@ object Dedup {
     * corpus fails the 65-token probe on a dictionary-sized job and takes
     * the prefix-filter path unchanged.
     *
-    * Gate: distinct tokens ≤ 64 AND rep count ≤
-    * `graft.dedup.bitmapMaxReps` (default 32768 ≈ 0.5 G popcount evals —
-    * bounds the quadratic gate work; past it the prefix filter's
-    * candidate bound wins). The limit is the only selector: 0 forces the
-    * prefix-filter twin on any non-empty rep table. Returns
+    * Gate, cheapest test first: (1) the rep table fits
+    * `graft.graph.broadcastLimitBytes` ([[Graph.resolveBroadcast]] —
+    * measured block bytes of the checkpointed reps, no job; they bound
+    * the broadcast mask table); (2) rep count ≤ [[BitmapMaxReps]];
+    * (3) distinct tokens ≤ 64. The byte limit is the only selector: 0
+    * forces the prefix-filter twin on any non-empty rep table. Returns
     * (__rep [, carry…], __m, __sz) or None.
     *
     * Bit assignment is the sorted token order — any assignment yields
     * the same popcounts, sorting just keeps plans/specs deterministic. */
   private[graft] def bitmapMasks(reps: DataFrame,
                                  carryCols: Seq[String] = Nil): Option[DataFrame] = {
+    if (!Graph.resolveBroadcast(reps) || reps.count() > BitmapMaxReps)
+      return None
     val toks = reps.select(explode(col("__ts")).as("__t"))
       .distinct().orderBy(col("__t")).limit(65)
       .collect().map(_.getString(0))
-    val maxReps = reps.sparkSession.conf
-      .get("graft.dedup.bitmapMaxReps", "32768").toLong
-    if (toks.length > 64 || reps.count() > maxReps) return None
+    if (toks.length > 64) return None
     // token → bit as a MAP literal: the in-row fold is a pure projection
     // over the checkpointed rep table — no dictionary join, no exchange
     val dict = if (toks.isEmpty) map()
@@ -1460,15 +1519,13 @@ object Dedup {
   }
 
   /** All-pairs popcount join over the bitmap rep table: the exact
-    * verified pair set (__ra, __rb, __i, __la, __lb) of
-    * [[jaccardVerifiedPairs]] (containment = false: unordered,
-    * __ra < __rb, (num+den)·i ≥ num·(sa+sb)) or of
-    * [[containmentJoinExact]]'s candidate+verify stages (containment =
-    * true: ORDERED pairs, __ra ≠ __rb, den·i ≥ num·sa). The θ gate rides
-    * the join CONDITION, so only qualifying pairs ever materialize; the
-    * build side is rep-count-bounded by the [[bitmapMasks]] gate. */
-  private def bitmapPairs(masks: DataFrame, thetaNum: Int, thetaDen: Int,
-                          containment: Boolean): DataFrame = {
+    * verified pair set (__ra, __rb, __i, __la, __lb) of the prefix
+    * filter's [[verifiedPairs]] for the same form — probe side
+    * repartitioned, build side broadcast, the form's pair order and
+    * [[PairForm.ubGate]] on the exact popcount as the join CONDITION, so
+    * only qualifying pairs ever materialize; the build side is
+    * rep-count-bounded by the [[bitmapMasks]] gate. */
+  private def bitmapPairs(masks: DataFrame, form: PairForm): DataFrame = {
     // tiny-input/pair-emitting join: the probe side is rep-count rows but
     // the output is the (potentially dense) pair stream, and the nested-
     // loop join inherits the probe's AQE-coalesced partitioning (often 1)
@@ -1476,56 +1533,32 @@ object Dedup {
     // coalesced) so the popcount gate AND everything downstream of the
     // pair stream fan across cores (the r13 levenshtein-verify lesson)
     val par = masks.sparkSession.sparkContext.defaultParallelism
-    val a = masks.select(col("__rep").as("__ra"), col("__m").as("__bma"),
-      col("__sz").as("__la")).repartition(par)
-    val b = broadcast(masks.select(col("__rep").as("__rb"),
-      col("__m").as("__bmb"), col("__sz").as("__lb")))
-    val i = call_function("bit_count",
-      col("__bma").bitwiseAND(col("__bmb"))).cast("long")
-    val order = if (containment) col("__ra") =!= col("__rb")
-      else col("__ra") < col("__rb")
-    val gate = if (containment) lit(thetaDen.toLong) * i >= lit(thetaNum.toLong) * col("__la")
-      else lit((thetaNum + thetaDen).toLong) * i >=
-        lit(thetaNum.toLong) * (col("__la") + col("__lb"))
-    a.join(b, order && gate)
-      .select(col("__ra"), col("__rb"), i.as("__i"), col("__la"), col("__lb"))
-  }
-
-  /** [[bitmapPairs]] for the R-S (cross-corpus) joins: probe = __corp 0
-    * (incoming), build = __corp 1 (reference), no canonicalization (the
-    * corpus split is the orientation) — the bitmap twin of
-    * [[jaccardCandidatesCross]]+verify and of [[containmentDropAgainst]]'s
-    * candidate+verify stages. */
-  private def bitmapPairsCross(masks: DataFrame, thetaNum: Int, thetaDen: Int,
-                               containment: Boolean): DataFrame = {
-    // same probe-side explicit-count pin as [[bitmapPairs]]
-    val par = masks.sparkSession.sparkContext.defaultParallelism
-    val a = masks.filter(col("__corp") === 0)
+    val a = masks.filter(form.probe)
       .select(col("__rep").as("__ra"), col("__m").as("__bma"),
         col("__sz").as("__la")).repartition(par)
-    val b = broadcast(masks.filter(col("__corp") === 1)
+    val b = broadcast(masks.filter(form.build)
       .select(col("__rep").as("__rb"), col("__m").as("__bmb"),
         col("__sz").as("__lb")))
     val i = call_function("bit_count",
       col("__bma").bitwiseAND(col("__bmb"))).cast("long")
-    val gate = if (containment) lit(thetaDen.toLong) * i >= lit(thetaNum.toLong) * col("__la")
-      else lit((thetaNum + thetaDen).toLong) * i >=
-        lit(thetaNum.toLong) * (col("__la") + col("__lb"))
-    a.join(b, gate)
+    a.join(b, form.order && form.ubGate(i, col("__la"), col("__lb")))
       .select(col("__ra"), col("__rb"), i.as("__i"), col("__la"), col("__lb"))
   }
 
-  /** UN-checkpointed single-stage body of the dense-vocab bitmap pair
-    * stage, for the plan audit trail only ([[graft.SparkEntry.loopBodyPlans]]
-    * / PLANS.md — the production entry points checkpoint their result, so
-    * their final plans collapse to `Scan ExistingRDD`). Callers pass a
-    * dense-vocab corpus that passes the [[bitmapMasks]] gate. Never run
-    * by Verify/Bench. */
-  def bitmapPairsPlan(docs: DataFrame, idCol: String, textCol: String,
-                      thetaNum: Int, thetaDen: Int): DataFrame = {
+  /** UN-checkpointed body of [[exactRepPairs]] (jaccard, self form) over
+    * `docs`, for the plan audit trail only
+    * ([[graft.SparkEntry.loopBodyPlans]] / PLANS.md — the production
+    * entry points checkpoint their result, so their final plans collapse
+    * to `Scan ExistingRDD`): the dense-vocab bitmap pair stage when
+    * `bitmap` (callers pass a corpus that passes the [[bitmapMasks]]
+    * gate), else the prefix candidates + verify. Never run by
+    * Verify/Bench. */
+  def repPairsPlan(docs: DataFrame, idCol: String, textCol: String,
+                   thetaNum: Int, thetaDen: Int, bitmap: Boolean): DataFrame = {
     val reps = jaccardReps(docs, idCol, textCol)
-    bitmapPairs(bitmapMasks(reps).get, thetaNum, thetaDen,
-      containment = false)
+    val form = new PairForm(thetaNum, thetaDen, containment = false, cross = false)
+    if (bitmap) bitmapPairs(bitmapMasks(reps).get, form)
+    else verifiedPairs(reps, jaccardOrderedPrefix(reps, thetaNum, thetaDen), form)
   }
 
   /** Multi-threshold dedup PLANNING from one pipeline run at the LOOSEST
@@ -1546,14 +1579,8 @@ object Dedup {
       s"thetasPct must be percentages in (0, 100], got $thetasPct")
     val tmin = thetasPct.min
     val reps = jaccardReps(docs, idCol, textCol).localCheckpoint()
-    var toFree = Seq(reps)
-    val rp = bitmapMasks(reps) match {
-      case Some(m) => bitmapPairs(m, tmin, 100, containment = false)
-      case None =>
-        val sorted = jaccardOrderedPrefix(reps, tmin, 100).localCheckpoint()
-        toFree :+= sorted
-        jaccardVerifiedPairs(reps, sorted, tmin, 100)
-    }
+    val (rp, sorted) = exactRepPairs(reps, tmin, 100,
+      containment = false, cross = false)
     val cnt = reps.select(col("__rep"),
       size(col("__members")).cast("long").as("__c"))
     val thetaArr = array(thetasPct.map(lit(_)): _*)
@@ -1573,37 +1600,8 @@ object Dedup {
       .groupBy(col("theta_pct"))
       .agg(sum(col("__n")).as("n_pairs"))
       .localCheckpoint()
-    freeCheckpoints(toFree: _*)
+    freeCheckpoints(reps +: sorted: _*)
     result
-  }
-
-  /** [[jaccardCandidates]] for an R-S (cross-corpus) join: `sorted`
-    * carries a `__corp` tag (0 = incoming, 1 = reference); candidate
-    * pairs take the incoming side as probe and the reference side as the
-    * salt-replicated build — no `__ra < __rb` canonicalization (the
-    * corpus split IS the orientation). The positional filter's overlap
-    * ubound argument is side-symmetric, so it applies unchanged. */
-  private def jaccardCandidatesCross(sorted: DataFrame, thetaNum: Int,
-                                     thetaDen: Int): DataFrame = {
-    val par = sorted.sparkSession.sparkContext.defaultParallelism
-    val salts = 8
-    val pa = sorted.filter(col("__corp") === 0)
-      .select(col("__rep").as("__ra"), col("__sz").as("__sa"),
-        posexplode(col("__pref")).as(Seq("__pa", "__ptok")))
-      .withColumn("__salt", pmod(hash(col("__ra")), lit(salts)))
-      .repartition(par, col("__ptok"), col("__salt"))
-    val pb = sorted.filter(col("__corp") === 1)
-      .select(col("__rep").as("__rb"), col("__sz").as("__sb"),
-        posexplode(col("__pref")).as(Seq("__pb", "__ptok")))
-      .withColumn("__salt", explode(sequence(lit(0), lit(salts - 1))))
-      .repartition(par, col("__ptok"), col("__salt"))
-    val met = pa.join(pb, Seq("__ptok", "__salt"))
-      .filter(lit(thetaNum) * greatest(col("__sa"), col("__sb")) <=
-        lit(thetaDen) * least(col("__sa"), col("__sb")))
-      .filter(lit(thetaNum + thetaDen) *
-          least(col("__sa") - col("__pa"), col("__sb") - col("__pb")) >=
-        lit(thetaNum) * (col("__sa") + col("__sb")))
-    suffixFoldedPairs(met, par)(jaccardUbGate(thetaNum, thetaDen))
   }
 
   /** Cross-corpus EXACT-recall jaccard join at θ = num/den: every
@@ -1628,31 +1626,9 @@ object Dedup {
       .unionByName(
         jaccardReps(ref, idCol, textCol).withColumn("__corp", lit(1)))
       .localCheckpoint()
-    var toFree = Seq(reps)
-    // dense-vocab corpora take the cross-corpus popcount join
-    // (bitmapMasks doc) — the vocab probe spans BOTH sides' reps
-    val repPairs = bitmapMasks(reps, carryCols = Seq("__corp")) match {
-      case Some(m) =>
-        bitmapPairsCross(m, thetaNum, thetaDen, containment = false)
-      case None =>
-        val sorted = jaccardOrderedPrefix(reps, thetaNum, thetaDen)
-          .join(reps.select(col("__rep"), col("__corp")), Seq("__rep"))
-          .localCheckpoint()
-        toFree :+= sorted
-        val candIds = jaccardCandidatesCross(sorted, thetaNum, thetaDen)
-        val arrA = reps.filter(col("__corp") === 0)
-          .select(col("__rep").as("__ra"), col("__ts").as("__ta"),
-            size(col("__ts")).cast("long").as("__la"))
-        val arrB = reps.filter(col("__corp") === 1)
-          .select(col("__rep").as("__rb"), col("__ts").as("__tb"),
-            size(col("__ts")).cast("long").as("__lb"))
-        candIds.join(arrA, Seq("__ra")).join(arrB, Seq("__rb"))
-          .withColumn("__i", org.apache.spark.sql.graft.SortedOverlapGate.of(
-            col("__ta"), col("__tb"), thetaNum, thetaDen))
-          .filter(col("__i") >= 0L)
-          .select(col("__ra"), col("__rb"), col("__i"), col("__la"),
-            col("__lb"))
-    }
+    // the kernel's vocab probe and token order span BOTH sides' reps
+    val (repPairs, sorted) = exactRepPairs(reps, thetaNum, thetaDen,
+      containment = false, cross = true)
     val memA = reps.filter(col("__corp") === 0)
       .select(col("__rep").as("__ra"), col("__members").as("__mas"))
     val memB = reps.filter(col("__corp") === 1)
@@ -1667,7 +1643,7 @@ object Dedup {
       .withColumn("jaccard", col("inter_size").cast("double") /
         (col("size_in") + col("size_ref") - col("inter_size")))
       .localCheckpoint()
-    freeCheckpoints(toFree: _*)
+    freeCheckpoints(reps +: sorted: _*)
     result
   }
 
@@ -1676,8 +1652,9 @@ object Dedup {
     require(thetaNum > 0 && thetaDen > 0 && thetaNum <= thetaDen,
       s"theta must be a rational in (0,1], got $thetaNum/$thetaDen")
     // materialize the shared stages ONCE: reps feeds the token-df join,
-    // the member expansion, and the same-set pairs; sorted feeds the
-    // candidate join and BOTH verify array sides. Un-checkpointed, each
+    // both verify array sides, the member expansion, and the same-set
+    // pairs; the kernel's sorted prefixes feed both sides of the
+    // candidate join. Un-checkpointed, each
     // consumer re-runs the final aggregation past the reused exchange
     // (ReuseExchange shares only the exchange subtree) — the pagerank
     // lesson applied to a DAG instead of a loop. Blocks are freed
@@ -1685,14 +1662,8 @@ object Dedup {
     // lesson: localCheckpoint blocks are invisible to clearCache).
     // Dense-vocab corpora skip `sorted` entirely (bitmapMasks doc).
     val reps = jaccardReps(docs, idCol, textCol).localCheckpoint()
-    var toFree = Seq(reps)
-    val repPairs = bitmapMasks(reps) match {
-      case Some(m) => bitmapPairs(m, thetaNum, thetaDen, containment = false)
-      case None =>
-        val sorted = jaccardOrderedPrefix(reps, thetaNum, thetaDen).localCheckpoint()
-        toFree :+= sorted
-        jaccardVerifiedPairs(reps, sorted, thetaNum, thetaDen)
-    }
+    val (repPairs, sorted) = exactRepPairs(reps, thetaNum, thetaDen,
+      containment = false, cross = false)
     // 4. expand members in-row (rep-id joins against the small rep table;
     // sizes swap with the id canonicalization), plus the in-group pairs
     val repsA = reps.select(col("__rep").as("__ra"), col("__members").as("__mas"))
@@ -1722,7 +1693,7 @@ object Dedup {
       .withColumn("jaccard", col("inter_size").cast("double") /
         (col("size_a") + col("size_b") - col("inter_size")))
       .localCheckpoint()
-    freeCheckpoints(toFree: _*)
+    freeCheckpoints(reps +: sorted: _*)
     result
   }
 
@@ -1755,46 +1726,9 @@ object Dedup {
                            thetaNum: Int, thetaDen: Int): DataFrame = {
     require(thetaNum > 0 && thetaDen > 0 && thetaNum <= thetaDen,
       s"theta must be a rational in (0,1], got $thetaNum/$thetaDen")
-    val par = docs.sparkSession.sparkContext.defaultParallelism
     val reps = jaccardReps(docs, idCol, textCol).localCheckpoint()
-    var toFree = Seq(reps)
-    // dense-vocab corpora take the popcount join (bitmapMasks doc) —
-    // same ordered-pair gate den·i ≥ num·|A|, zero pair-stream exchanges
-    val repPairs = bitmapMasks(reps) match {
-      case Some(m) => bitmapPairs(m, thetaNum, thetaDen, containment = true)
-      case None =>
-        val sorted = jaccardOrderedPrefix(reps, thetaNum, thetaDen)
-          .localCheckpoint()
-        toFree :+= sorted
-        val salts = 8
-        // probe = contained side: PREFIX tokens only, one salt per row
-        val pa = sorted.select(col("__rep").as("__ra"), col("__sz").as("__sa"),
-            posexplode(col("__pref")).as(Seq("__pa", "__ptok")))
-          .withColumn("__salt", pmod(hash(col("__ra")), lit(salts)))
-          .repartition(par, col("__ptok"), col("__salt"))
-        // build = container side: ALL ordered tokens, replicated to all salts
-        val pb = sorted.select(col("__rep").as("__rb"), col("__sz").as("__sb"),
-            posexplode(col("__ots")).as(Seq("__pb", "__ptok")))
-          .withColumn("__salt", explode(sequence(lit(0), lit(salts - 1))))
-          .repartition(par, col("__ptok"), col("__salt"))
-        val candIds = suffixFoldedPairs(
-          pa.join(pb, Seq("__ptok", "__salt"))
-            .filter(col("__ra") =!= col("__rb"))
-            .filter(lit(thetaNum) * col("__sa") <= lit(thetaDen) * col("__sb"))
-            .filter(lit(thetaDen) *
-              least(col("__sa") - col("__pa"), col("__sb") - col("__pb")) >=
-              lit(thetaNum) * col("__sa")),
-          par)(containUbGate(thetaNum, thetaDen))
-        val arrA = reps.select(col("__rep").as("__ra"), col("__ts").as("__ta"),
-          size(col("__ts")).cast("long").as("__la"))
-        val arrB = reps.select(col("__rep").as("__rb"), col("__ts").as("__tb"),
-          size(col("__ts")).cast("long").as("__lb"))
-        candIds.join(arrA, Seq("__ra")).join(arrB, Seq("__rb"))
-          .withColumn("__i", org.apache.spark.sql.graft.SortedContainGate.of(
-            col("__ta"), col("__tb"), thetaNum, thetaDen))
-          .filter(col("__i") >= 0L)
-          .select(col("__ra"), col("__rb"), col("__i"), col("__la"), col("__lb"))
-    }
+    val (repPairs, sorted) = exactRepPairs(reps, thetaNum, thetaDen,
+      containment = true, cross = false)
     // ordered member expansion — contained ids from ra, container ids
     // from rb, NO least/greatest swap
     val repsA = reps.select(col("__rep").as("__ra"), col("__members").as("__mas"))
@@ -1822,7 +1756,7 @@ object Dedup {
       .withColumn("containment",
         col("inter_size").cast("double") / col("size_a"))
       .localCheckpoint()
-    freeCheckpoints(toFree: _*)
+    freeCheckpoints(reps +: sorted: _*)
     result
   }
 
@@ -1850,54 +1784,20 @@ object Dedup {
                              thetaNum: Int, thetaDen: Int): DataFrame = {
     require(thetaNum > 0 && thetaDen > 0 && thetaNum <= thetaDen,
       s"theta must be a rational in (0,1], got $thetaNum/$thetaDen")
-    val par = incoming.sparkSession.sparkContext.defaultParallelism
     val reps = jaccardReps(incoming, idCol, textCol).withColumn("__corp", lit(0))
       .unionByName(
         jaccardReps(reference, idCol, textCol).withColumn("__corp", lit(1)))
       .localCheckpoint()
-    var toFree = Seq(reps)
-    // dense-vocab corpora take the cross-corpus popcount join
-    // (bitmapMasks doc); the drop stays decided at REP level
-    val droppedReps = (bitmapMasks(reps, carryCols = Seq("__corp")) match {
-      case Some(m) =>
-        bitmapPairsCross(m, thetaNum, thetaDen, containment = true)
-      case None =>
-        val sorted = jaccardOrderedPrefix(reps, thetaNum, thetaDen)
-          .join(reps.select(col("__rep"), col("__corp")), Seq("__rep"))
-          .localCheckpoint()
-        toFree :+= sorted
-        val salts = 8
-        val pa = sorted.filter(col("__corp") === 0)
-          .select(col("__rep").as("__ra"), col("__sz").as("__sa"),
-            posexplode(col("__pref")).as(Seq("__pa", "__ptok")))
-          .withColumn("__salt", pmod(hash(col("__ra")), lit(salts)))
-          .repartition(par, col("__ptok"), col("__salt"))
-        val pb = sorted.filter(col("__corp") === 1)
-          .select(col("__rep").as("__rb"), col("__sz").as("__sb"),
-            posexplode(col("__ots")).as(Seq("__pb", "__ptok")))
-          .withColumn("__salt", explode(sequence(lit(0), lit(salts - 1))))
-          .repartition(par, col("__ptok"), col("__salt"))
-        val candIds = suffixFoldedPairs(
-          pa.join(pb, Seq("__ptok", "__salt"))
-            .filter(lit(thetaNum) * col("__sa") <= lit(thetaDen) * col("__sb"))
-            .filter(lit(thetaDen) *
-              least(col("__sa") - col("__pa"), col("__sb") - col("__pb")) >=
-              lit(thetaNum) * col("__sa")),
-          par)(containUbGate(thetaNum, thetaDen))
-        val arrA = reps.filter(col("__corp") === 0)
-          .select(col("__rep").as("__ra"), col("__ts").as("__ta"))
-        val arrB = reps.filter(col("__corp") === 1)
-          .select(col("__rep").as("__rb"), col("__ts").as("__tb"))
-        candIds.join(arrA, Seq("__ra")).join(arrB, Seq("__rb"))
-          .filter(org.apache.spark.sql.graft.SortedContainGate.of(
-            col("__ta"), col("__tb"), thetaNum, thetaDen) >= 0L)
-    }).select(col("__ra")).distinct()
+    // the drop stays decided at REP level
+    val (repPairs, sorted) = exactRepPairs(reps, thetaNum, thetaDen,
+      containment = true, cross = true)
+    val droppedReps = repPairs.select(col("__ra")).distinct()
     val result = reps.filter(col("__corp") === 0)
       .join(droppedReps.withColumnRenamed("__ra", "__rep"),
         Seq("__rep"), "left_anti")
       .select(explode(col("__members")).as("doc_id"))
       .localCheckpoint()
-    freeCheckpoints(toFree: _*)
+    freeCheckpoints(reps +: sorted: _*)
     result
   }
 }

@@ -34,9 +34,10 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, 
  *    state factor, fits `graft.graph.broadcastLimitBytes`; 0 pins the
  *    twin). Any other id type takes the twin, which handles every type.
  *    The basket tiers ([[collectBaskets]]) spend the same byte budget:
- *    16 B a collected (group, item) row, 8 B an expanded item pair. That
- *    limit is the only path selector of this file (Dedup's bitmap tier
- *    has `graft.dedup.bitmapMaxReps`); there is no per-call override;
+ *    16 B a collected (group, item) row, 8 B an expanded item pair, and
+ *    Dedup's bitmap tier gates its rep table on it too. That limit is
+ *    the only path selector of the codebase; there is no per-call
+ *    override;
  *  - NULLs: an edge with a NULL endpoint (or NULL weight) is dropped —
  *    the collector skips it and every twin input carries the same
  *    [[nonNull]] filter;
@@ -1422,11 +1423,14 @@ object Graph {
     * operators that checkpoint first (triangle/support family, HITS,
     * the Louvain audit) resolve from measured block sizes. */
   private[graft] def resolveBroadcast(proxy: DataFrame,
-                                      factor: Long = 1L): Boolean = {
-    val limit = proxy.sparkSession.conf
-      .get("graft.graph.broadcastLimitBytes", (256L << 20).toString).toLong
-    materializedBytes(proxy) <= limit / math.max(1L, factor)
-  }
+                                      factor: Long = 1L): Boolean =
+    materializedBytes(proxy) <=
+      broadcastLimitBytes(proxy.sparkSession) / math.max(1L, factor)
+
+  /** `graft.graph.broadcastLimitBytes` (default 256 MB): the one byte
+    * budget of every driver tier and broadcast gate. */
+  private def broadcastLimitBytes(sess: SparkSession): Long =
+    sess.conf.get("graft.graph.broadcastLimitBytes", (256L << 20).toString).toLong
 
   private def orientedAdjacency(pairs: DataFrame, uCol: String,
                                 vCol: String,
@@ -2629,21 +2633,19 @@ object Graph {
     * row), so an over-budget corpus terminates the scan early
     * (executeTake runs partitions in waves) and falls back to the
     * caller's distributed twin having moved at most the broadcast-class
-    * byte budget once. `pairBound` additionally declines when the
-    * quadratic pair expansion, at 8 bytes a pair, would exceed the same
-    * byte budget, clamped to the one array [[BasketIndex.expandPairs]]
-    * can fill (callers that expand pairs). NULL semantics follow the twin's
-    * sorted sets: NULL items are skipped; a NULL group declines, since
+    * byte budget once. It also declines when the quadratic pair
+    * expansion, at 8 bytes a pair, would exceed the same byte budget,
+    * clamped to the one array [[BasketIndex.expandPairs]] can fill.
+    * NULL semantics follow the twin's sorted sets: NULL items are
+    * skipped; a NULL group declines, since
     * the twin keeps it as its own basket and the packed index cannot
     * tell it from group 0. Non-BIGINT id columns take the distributed
     * twin (the packed-index arithmetic is 64-bit). */
   private[graft] def collectBaskets(items: DataFrame, gCol: String,
-                                    iCol: String, pairBound: Boolean = false)
-      : Option[BasketIndex] = {
+                                    iCol: String): Option[BasketIndex] = {
     if (items.schema(gCol).dataType != LongType ||
         items.schema(iCol).dataType != LongType) return None
-    val limit = items.sparkSession.conf
-      .get("graft.graph.broadcastLimitBytes", (256L << 20).toString).toLong
+    val limit = broadcastLimitBytes(items.sparkSession)
     val cap = math.min(limit / 16, (Int.MaxValue - 8).toLong).toInt
     val raw = items.select(col(gCol), col(iCol)).limit(cap + 1)
       .queryExecution.executedPlan.executeCollect()
@@ -2657,7 +2659,7 @@ object Graph {
     val entries = Array.tabulate(rows.length)(i => (gi(i).toLong << 32) | ii(i))
     val bi = new BasketIndex(itemIds, itemIds.length, entries, sortDedup(entries))
     val pairLimit = math.min(limit / 8, Int.MaxValue.toLong - 8)
-    if (pairBound && bi.pairExpansionCount > pairLimit) None else Some(bi)
+    if (bi.pairExpansionCount > pairLimit) None else Some(bi)
   }
 
   /** Distinct co-occurrence edges + supports off the SORTED pair stream:
@@ -2830,7 +2832,7 @@ object Graph {
   /** [[triangleCount]] off the raw basket stream. */
   def triangleCountFromBaskets(items: DataFrame, gCol: String, iCol: String,
                                distEdges: => DataFrame): DataFrame =
-    collectBaskets(items, gCol, iCol, pairBound = true) match {
+    collectBaskets(items, gCol, iCol) match {
       case Some(bi) =>
         val (eu, ev, _) = pairRuns(bi.expandPairs())
         val nTri =
@@ -2846,7 +2848,7 @@ object Graph {
     * exactly two n-incident edges, so tri(n) = Σ_{e∋n} sup(e) / 2. */
   def clusteringFromBaskets(items: DataFrame, gCol: String, iCol: String,
                             distEdges: => DataFrame): DataFrame =
-    collectBaskets(items, gCol, iCol, pairBound = true) match {
+    collectBaskets(items, gCol, iCol) match {
       case Some(bi) =>
         val (eu, ev, _) = pairRuns(bi.expandPairs())
         val sup =
@@ -2885,7 +2887,7 @@ object Graph {
   /** [[transitivitySummary]] off the raw basket stream. */
   def transitivityFromBaskets(items: DataFrame, gCol: String, iCol: String,
                               distEdges: => DataFrame): DataFrame =
-    collectBaskets(items, gCol, iCol, pairBound = true) match {
+    collectBaskets(items, gCol, iCol) match {
       case Some(bi) =>
         val (eu, ev, _) = pairRuns(bi.expandPairs())
         val sup =
@@ -2920,7 +2922,7 @@ object Graph {
   def edgeJaccardTopKFromBaskets(items: DataFrame, gCol: String, iCol: String,
                                  k: Int, distEdges: => DataFrame): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    collectBaskets(items, gCol, iCol, pairBound = true) match {
+    collectBaskets(items, gCol, iCol) match {
       case Some(bi) =>
         val (eu, ev, _) = pairRuns(bi.expandPairs())
         val schema = StructType(Seq(
@@ -2971,7 +2973,7 @@ object Graph {
   def bipartiteProjectionTopK(items: DataFrame, gCol: String, iCol: String,
                               topK: Int): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    collectBaskets(items, gCol, iCol, pairBound = true) match {
+    collectBaskets(items, gCol, iCol) match {
       case Some(bi) =>
         val np = bi.itemSupports
         val keys = bi.expandPairs()
@@ -3071,7 +3073,7 @@ object Graph {
                            distEdges: => DataFrame): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    collectBaskets(items, gCol, iCol, pairBound = true) match {
+    collectBaskets(items, gCol, iCol) match {
       case Some(bi) =>
         val (eu, ev, _) = pairRuns(bi.expandPairs())
         driverTrussPeel(items.sparkSession, eu, ev, bi.nItems, k, rounds)

@@ -8,9 +8,9 @@ import org.scalatest.Suite
 trait SparkSpec { self: Suite =>
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** Runs `body` with the two driver-tier size limits at 0, so every
-    * size gate declines and the distributed twins run (the benchmark's
-    * twin regime); the previous settings are restored afterwards. */
+  /** Runs `body` with the driver-tier size limit at 0, so every size
+    * gate declines and the distributed twins run (the benchmark's twin
+    * regime); the previous setting is restored afterwards. */
   def withTwins[T](body: => T): T = {
     val was = SparkSpec.TierLimits.map(k => k -> spark.conf.getOption(k))
     SparkSpec.TierLimits.foreach(spark.conf.set(_, "0"))
@@ -20,8 +20,7 @@ trait SparkSpec { self: Suite =>
 }
 
 object SparkSpec {
-  val TierLimits = Seq("graft.graph.broadcastLimitBytes",
-    "graft.dedup.bitmapMaxReps")
+  val TierLimits = Seq("graft.graph.broadcastLimitBytes")
 
   lazy val session: SparkSession = LocalTuning(SparkSession.builder()
     .master("local[4]")

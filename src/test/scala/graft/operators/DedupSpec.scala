@@ -733,6 +733,34 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // …and the default limits must silently take the prefix twin there
     assert(rows(Dedup.jaccardJoinExact(wide, "doc_id", "text", 4, 5)) ==
       withTwins(rows(Dedup.jaccardJoinExact(wide, "doc_id", "text", 4, 5))))
+    // edge corpora: empty, and all clones (one token set, so only
+    // same-set pairs) — both paths agree and neither throws
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val clones = (1L to 6L).map(id => (id, "c a b")).toDF("doc_id", "text")
+    Seq("empty" -> empty, "all-clones" -> clones).foreach { case (cname, c) =>
+      val cInc = c.filter($"doc_id" % 2 =!= 0)
+      val cRef = c.filter($"doc_id" % 2 === 0)
+      Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "jaccardJoinExact" -> (() =>
+          Dedup.jaccardJoinExact(c, "doc_id", "text", 7, 10)),
+        "containmentJoinExact" -> (() =>
+          Dedup.containmentJoinExact(c, "doc_id", "text", 9, 10)),
+        "jaccardThresholdSweep" -> (() =>
+          Dedup.jaccardThresholdSweep(c, "doc_id", "text", Seq(70, 80, 90))),
+        "lshRecallSweep" -> (() =>
+          Dedup.lshRecallSweep(c, "doc_id", "text", seeds = 8,
+            configs = Seq(2, 4), thetaNum = 4, thetaDen = 5)),
+        "jaccardJoinAgainst" -> (() =>
+          Dedup.jaccardJoinAgainst(cInc, cRef, "doc_id", "text", 7, 10)),
+        "containmentDropAgainst" -> (() =>
+          Dedup.containmentDropAgainst(cRef, cInc, "doc_id", "text", 4, 5))
+      ).foreach { case (name, f) =>
+        val dflt = rows(f()); val pf = withTwins(rows(f()))
+        assert(dflt == pf, s"$name on the $cname corpus: default != twin")
+      }
+    }
+    assert(rows(Dedup.jaccardJoinExact(clones, "doc_id", "text", 7, 10))
+      .size == 15) // C(6, 2) same-set pairs
   }
 
   test("prefix + positional filters PRUNE on a Zipfian vocabulary " +
@@ -753,8 +781,9 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val reps = Dedup.jaccardReps(df, "doc_id", "text").localCheckpoint()
     val nReps = reps.count()
     val sorted = Dedup.jaccardOrderedPrefix(reps, 4, 5).localCheckpoint()
-    val sizeOnly = Dedup.jaccardCandidates(sorted, 4, 5, positional = false).count()
-    val cand = Dedup.jaccardCandidates(sorted, 4, 5).count()
+    val form = new Dedup.PairForm(4, 5, containment = false, cross = false)
+    val sizeOnly = Dedup.prefixCandidates(sorted, form, positional = false).count()
+    val cand = Dedup.prefixCandidates(sorted, form).count()
     val repPairs = nReps * (nReps - 1) / 2
     info(s"repPairs=$repPairs sizeOnly=$sizeOnly positional=$cand " +
       f"(${100.0 * cand / repPairs}%.2f%% of the pair space)")

@@ -47,7 +47,7 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
     // the twin's sorted sets drop a NULL item; the tier must skip it too
     val df = (rows.map { case (g, i) => (g, Option(i)) } :+ ((10L, None)))
       .toDF("g", "i")
-    assert(Graph.collectBaskets(df, "g", "i", pairBound = true).isDefined)
+    assert(Graph.collectBaskets(df, "g", "i").isDefined)
     Seq[(String, () => DataFrame)](
       "triangles" -> (() => Graph.triangleCountFromBaskets(df, "g", "i",
         distEdges(df))),
@@ -101,9 +101,11 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
     try {
       // the 300 rows fit the budget at 16 B a row; their group pairs,
       // at 8 B a pair, do not
+      conf.set("graft.graph.broadcastLimitBytes", Long.MaxValue.toString)
+      val pairs = Graph.collectBaskets(df, "g", "i").get.pairExpansionCount
+      assert(df.count() <= 300 && pairs * 8 > 300 * 16)
       conf.set("graft.graph.broadcastLimitBytes", (300 * 16).toString)
-      assert(Graph.collectBaskets(df, "g", "i").isDefined)
-      assert(Graph.collectBaskets(df, "g", "i", pairBound = true).isEmpty)
+      assert(Graph.collectBaskets(df, "g", "i").isEmpty)
       val viaTwin = Graph.bipartiteProjectionTopK(df, "g", "i", 10)
       val twin = withTwins(Graph.bipartiteProjectionTopK(df, "g", "i", 10))
       assert(rowSet(viaTwin) == rowSet(twin))
@@ -112,7 +114,7 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
       // past Int.MaxValue − 8
       conf.set("graft.graph.broadcastLimitBytes", Long.MaxValue.toString)
       val hub = spark.range(65537L).select(lit(1L).as("g"), col("id").as("i"))
-      assert(Graph.collectBaskets(hub, "g", "i", pairBound = true).isEmpty)
+      assert(Graph.collectBaskets(hub, "g", "i").isEmpty)
       conf.set("graft.graph.broadcastLimitBytes", "64") // capRows = 4
       assert(Graph.collectBaskets(df, "g", "i").isEmpty)
       val triViaTwin = Graph.triangleCountFromBaskets(df, "g", "i",
