@@ -2039,11 +2039,12 @@ object SparkEntry {
     "schema_dump" -> ((s, dir) => // oracle: DuckDB DESCRIBE, names mapped
       CatalogOps.schemaDump(t(s, dir, "lineitem"))),
 
-    // ── §2.7 LIVE JDBC round-trip (S5/S7/S8/S9) ──────────────────────────
+    // ── §2.7 LIVE JDBC round-trip (S5/S7/S8) ─────────────────────────────
     // The taps production sequence against a real embedded database (Derby,
     // in-process): CREATE TABLE DDL executed, data bulk-loaded over JDBC,
-    // index replayed, identity restarted — then the table is read BACK via
-    // a partitioned JDBC scan. The oracle compares that read-back against
+    // index replayed — then the table is read BACK via a partitioned JDBC
+    // scan. No sequence reset runs here (S9 is live in JdbcRoundtripSpec
+    // and `Transfer.pullToJdbc`). The oracle compares that read-back against
     // the original parquet: a hash match proves the whole round trip is
     // lossless.
     "jdbc_roundtrip" -> ((s, dir) => {

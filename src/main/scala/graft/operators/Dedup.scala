@@ -139,15 +139,6 @@ object Dedup {
         transform(array_sort(collect_list(struct(col("j"), col("sig")))),
           x => x.getField("sig").cast("string")), "_").as("band_sig"))
 
-  /** All bands fused into per-set array expressions: every sig_j minimum is
-    * computed by ONE native-expression traversal of the set's token-hash
-    * array ([[org.apache.spark.sql.graft.MinHashSigs]] — codegen'd fused
-    * loop; the earlier `seeds` × `array_min(transform(...))` form allocated
-    * `seeds` intermediate arrays per row and dispatched a CodegenFallback
-    * lambda per element). NO shuffle at all — the only exchange left in
-    * candidate generation is the band self-join. Identical output to
-    * signatures→bands (same mins, same '_'-joined seed order, ceil-division
-    * trailing partial band) — pinned by the fused-vs-unfused spec. */
   /** The per-row band-signature strings over a `__sigs` signature array —
     * ONE definition shared by the batch banding and the streaming
     * dedup-on-ingest path ([[graft.streaming.Streams.nearDupStream]]), so
@@ -168,9 +159,19 @@ object Dedup {
     org.apache.spark.sql.graft.MinHashSigs.of(col("__harr"), as, bs, SigMod)
   }
 
-  private[graft] def bandsOfSets(sets: DataFrame, idCol: String,
-                                 seeds: Int, rowsPerBand: Int,
-                                 carry: Seq[String] = Nil): DataFrame = {
+  /** All bands fused into per-set array expressions: every sig_j minimum is
+    * computed by ONE native-expression traversal of the set's token-hash
+    * array ([[org.apache.spark.sql.graft.MinHashSigs]] — codegen'd fused
+    * loop; the earlier `seeds` × `array_min(transform(...))` form allocated
+    * `seeds` intermediate arrays per row and dispatched a CodegenFallback
+    * lambda per element). NO shuffle at all — the only exchange left in
+    * candidate generation is the band join ([[bandJoin]]). Identical output
+    * to signatures→bands (same mins, same '_'-joined seed order,
+    * ceil-division trailing partial band) — pinned by the fused-vs-unfused
+    * spec. Rows are (id, __n set size, band, band_sig, carry…). */
+  private def bandsOfSets(sets: DataFrame, idCol: String,
+                          seeds: Int, rowsPerBand: Int,
+                          carry: Seq[String] = Nil): DataFrame = {
     val nBands = math.max(1, (seeds + rowsPerBand - 1) / rowsPerBand)
     val sigs = sigArrayExpr(seeds)
     val bandSigExprs = this.bandSigExprs(seeds, rowsPerBand)
@@ -220,6 +221,64 @@ object Dedup {
       (x, y) => x === y),
     b => b)
 
+  /** THE band join of the LSH family: `l` × `r` band rows ([[bandsOfSets]]
+    * tables carrying `__allsigs`) meeting on (band, band_sig), each pair
+    * emitted from its first matching band only ([[noEarlierBandMatch]]),
+    * so the pair stream is duplicate-free with no distinct exchange. A rep
+    * self-join (`repOrder`) keeps l.__rep < r.__rep; `extra` is any further
+    * filter over the `l`/`r` aliases, whose qualified columns the caller
+    * reads. */
+  private def bandJoin(l: DataFrame, r: DataFrame, repOrder: Boolean,
+                       extra: Column = lit(true)): DataFrame =
+    l.as("l").join(r.as("r"),
+        col("l.band") === col("r.band") && col("l.band_sig") === col("r.band_sig"))
+      .filter((if (repOrder) col("l.__rep") < col("r.__rep") else lit(true)) &&
+        noEarlierBandMatch && extra)
+
+  /** [[bandJoin]] plus THE near-dup verify, computed entirely inside the
+    * join row: both sides' token-hash arrays (`__harr`) ride through the
+    * band explode, so there is no join-back to a set table and no
+    * checkpoint. The size pre-filter is provably lossless for threshold t:
+    * jaccard ≥ t forces min(|A|,|B|) ≥ t·max(|A|,|B|) (i ≤ min and
+    * i ≥ t(na+nb−i)), and it runs BEFORE the intersection. Verify on the
+    * 40-bit token-hash SETS: long-vs-long intersection is ~2× cheaper than
+    * string arrays; jaccard over hash sets equals token jaccard unless two
+    * distinct tokens of one doc collide in 40 bits (~1e-7 per pair) — and
+    * the oracle replays the identical hash-set arithmetic. Adds `__i` and
+    * `jaccard` (≥ t) to the joined row. */
+  private def verifiedBandPairs(l: DataFrame, r: DataFrame, repOrder: Boolean,
+                                threshold: Double): DataFrame =
+    bandJoin(l, r, repOrder,
+        least(col("l.__n"), col("r.__n")).cast("double") >=
+          lit(threshold) * greatest(col("l.__n"), col("r.__n")).cast("double"))
+      .withColumn("__i", size(array_intersect(col("l.__harr"), col("r.__harr"))))
+      .withColumn("jaccard", col("__i").cast("double") /
+        (col("l.__n") + col("r.__n") - col("__i")).cast("double"))
+      .filter(col("jaccard") >= lit(threshold))
+
+  /** THE clone-member expansion: every member id in `mas` crossed with
+    * every member id in `mbs` by a double in-row explode, as
+    * (carry…, __ma, __mb) — rep pairs become doc pairs without a doc→rep
+    * side table or an expansion join. `carry` columns are evaluated before
+    * the explodes and ride through them. */
+  private def memberPairs(pairs: DataFrame, mas: Column, mbs: Column,
+                          carry: Column*): DataFrame = {
+    val outer = pairs.select(carry :+ explode(mas).as("__ma") :+ mbs.as("__mbs"): _*)
+    outer.select(outer.columns.init.map(col) :+ explode(col("__mbs")).as("__mb"): _*)
+  }
+
+  /** Same-set (exact clone) pairs: the in-row 2-combinations of each rep's
+    * members ([[memberPairs]] of `__members` with itself) as
+    * (carry…, __ma, __mb). Clones are IDENTICAL content, so the caller
+    * attaches jaccard 1.0, edit distance 0 or the set size as the overlap.
+    * `ordered` keeps both orders (containment: a⊆b and b⊆a are different
+    * facts); otherwise `<` keeps one. */
+  private def sameSetPairs(reps: DataFrame, ordered: Boolean,
+                           carry: Column*): DataFrame =
+    memberPairs(reps.filter(size(col("__members")) > 1),
+        col("__members"), col("__members"), carry: _*)
+      .filter(if (ordered) col("__ma") =!= col("__mb") else col("__ma") < col("__mb"))
+
   /** X2 step 3: candidate pairs = docs agreeing on any full band.
     * The self-join key is (band, band_sig): identical content lands in the
     * same bucket, everything else almost surely doesn't — this is what keeps
@@ -251,7 +310,7 @@ object Dedup {
     * row. */
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    seeds: Int = 16, rowsPerBand: Int = 8): DataFrame =
-    minhashPairsOf(repsWithMembers(docs, idCol, textCol), seeds, rowsPerBand)
+    minhashPairsOf(repSets(docs, idCol, textCol, members = true), seeds, rowsPerBand)
 
   /** Candidate pairs with their signature-agreement Jaccard ESTIMATE:
     * est = (matching signature positions) / seeds. This is what a 100 TB
@@ -275,20 +334,18 @@ object Dedup {
     // band rows widen by seeds longs each — bounded, and cheaper than
     // re-reading the corpus. Same-set clone pairs have identical
     // signatures by construction: n_agree = seeds exactly.
-    val reps = repsWithMembers(docs, idCol, textCol)
+    val reps = repSets(docs, idCol, textCol, members = true)
     val bands = bandsOfSets(reps, "__rep", seeds, rowsPerBand,
       carry = Seq("__allsigs", "__members", "__sigs"))
-    val pairs = bands.as("l").join(bands.as("r"),
-        col("l.band") === col("r.band") && col("l.band_sig") === col("r.band_sig"))
-      .filter(col("l.__rep") < col("r.__rep") && noEarlierBandMatch)
+    val agree = bandJoin(bands, bands, repOrder = true)
       .select(size(filter(zip_with(col("l.__sigs"), col("r.__sigs"),
           (a, b) => a === b), x => x)).as("n_agree"),
         col("l.__members").as("__mas"), col("r.__members").as("__mbs"))
-      .select(col("n_agree"), explode(col("__mas")).as("__ma"), col("__mbs"))
-      .select(col("n_agree"), col("__ma"), explode(col("__mbs")).as("__mb"))
+    memberPairs(agree, col("__mas"), col("__mbs"), col("n_agree"))
       .select(least(col("__ma"), col("__mb")).as("doc_a"),
         greatest(col("__ma"), col("__mb")).as("doc_b"), col("n_agree"))
-    pairs.unionByName(sameSetPairs(reps, lit(seeds).as("n_agree")))
+      .unionByName(sameSetPairs(reps, ordered = false).select(
+        col("__ma").as("doc_a"), col("__mb").as("doc_b"), lit(seeds).as("n_agree")))
       .withColumn("est_jaccard",
         col("n_agree").cast("double") / lit(seeds.toDouble))
   }
@@ -305,7 +362,7 @@ object Dedup {
     * small-in-large treatment is [[SpanDedup.removeDupSpans]]. This
     * operator prices the candidates the bands DO emit (size-skewed
     * near-dups, wrapper pages) — note the deliberate ABSENCE of
-    * [[verifiedRepPairs]]' size-ratio prefilter, which would discard
+    * [[verifiedBandPairs]]' size-ratio prefilter, which would discard
     * exactly the skewed pairs containment exists to score.
     *
     * Same single-pass shape as [[minhashEstimates]]: token-hash sets ride
@@ -314,19 +371,15 @@ object Dedup {
     * on both sides by construction. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        seeds: Int = 16, rowsPerBand: Int = 8): DataFrame = {
-    val reps = repsWithMembers(docs, idCol, textCol)
+    val reps = repSets(docs, idCol, textCol, members = true)
     val bands = bandsOfSets(reps, "__rep", seeds, rowsPerBand,
       carry = Seq("__allsigs", "__members", "__harr"))
-    val cross = bands.as("l").join(bands.as("r"),
-        col("l.band") === col("r.band") && col("l.band_sig") === col("r.band_sig"))
-      .filter(col("l.__rep") < col("r.__rep") && noEarlierBandMatch)
+    val overlaps = bandJoin(bands, bands, repOrder = true)
       .select(size(array_intersect(col("l.__harr"), col("r.__harr"))).as("__i"),
         size(col("l.__harr")).as("__nl"), size(col("r.__harr")).as("__nr"),
         col("l.__members").as("__mas"), col("r.__members").as("__mbs"))
-      .select(col("__i"), col("__nl"), col("__nr"),
-        explode(col("__mas")).as("__ma"), col("__mbs"))
-      .select(col("__i"), col("__nl"), col("__nr"), col("__ma"),
-        explode(col("__mbs")).as("__mb"))
+    val cross = memberPairs(overlaps, col("__mas"), col("__mbs"),
+        col("__i"), col("__nl"), col("__nr"))
       // orient sizes with the id swap: doc_a is the smaller ID, and __na
       // must be THAT document's set size, whichever join side it came from
       .select(least(col("__ma"), col("__mb")).as("doc_a"),
@@ -334,11 +387,7 @@ object Dedup {
         col("__i").as("overlap"),
         when(col("__ma") < col("__mb"), col("__nl")).otherwise(col("__nr")).as("__na"),
         when(col("__ma") < col("__mb"), col("__nr")).otherwise(col("__nl")).as("__nb"))
-    val same = reps.filter(size(col("__members")) > 1)
-      .select(size(col("__harr")).as("__n"),
-        explode(col("__members")).as("__ma"), col("__members").as("__mbs"))
-      .select(col("__n"), col("__ma"), explode(col("__mbs")).as("__mb"))
-      .filter(col("__ma") < col("__mb"))
+    val same = sameSetPairs(reps, ordered = false, size(col("__harr")).as("__n"))
       .select(col("__ma").as("doc_a"), col("__mb").as("doc_b"),
         col("__n").as("overlap"), col("__n").as("__na"), col("__n").as("__nb"))
     cross.unionByName(same)
@@ -354,15 +403,13 @@ object Dedup {
                              rowsPerBand: Int): DataFrame = {
     val bands = bandsOfSets(reps, "__rep", seeds, rowsPerBand,
         carry = Seq("__allsigs", "__members"))
-    val cross = bands.as("l").join(bands.as("r"),
-        col("l.band") === col("r.band") && col("l.band_sig") === col("r.band_sig"))
-      .filter(col("l.__rep") < col("r.__rep") && noEarlierBandMatch)
+    val cands = bandJoin(bands, bands, repOrder = true)
       .select(col("l.__members").as("__mas"), col("r.__members").as("__mbs"))
-      .select(explode(col("__mas")).as("__ma"), col("__mbs"))
-      .select(col("__ma"), explode(col("__mbs")).as("__mb"))
+    memberPairs(cands, col("__mas"), col("__mbs"))
       .select(least(col("__ma"), col("__mb")).as("doc_a"),
         greatest(col("__ma"), col("__mb")).as("doc_b"))
-    cross.unionByName(sameSetPairs(reps))
+      .unionByName(sameSetPairs(reps, ordered = false)
+        .select(col("__ma").as("doc_a"), col("__mb").as("doc_b")))
   }
 
   /** [[minhashPairs]] on the production token path: the tokenize+hash map
@@ -379,23 +426,9 @@ object Dedup {
     * corpus (spec-pinned). No DuckDB oracle — xxhash64 has no DuckDB
     * primitive; [[minhashPairs]] is the hash-exact witness. */
   def minhashPairsFast(docs: DataFrame, idCol: String, textCol: String,
-                       seeds: Int = 16, rowsPerBand: Int = 8): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val ts = org.apache.spark.sql.graft.TokenSetHashes.of(col(textCol))
-    // the cheap translate pre-filter replaces `__ts.isNotNull` (kernel
-    // null ⟺ no tokens ⟺ no non-space char): the isNotNull form is
-    // pushed to the scan and runs the whole kernel a second time per row
-    val reps = Query.ensureParallelism(docs)
-      .filter(length(translate(col(textCol), " ", "")) > 0)
-      .select(col(idCol), ts.as("__ts"))
-      .select(col(idCol), hex(col("__ts.key")).as("__set_key"),
-        col("__ts.harr").as("__harr"))
-      .repartition(par, col("__set_key"))
-      .groupBy(col("__set_key"))
-      .agg(min(col(idCol)).as("__rep"), first(col("__harr")).as("__harr"),
-        array_sort(collect_list(col(idCol))).as("__members"))
-    minhashPairsOf(reps, seeds, rowsPerBand)
-  }
+                       seeds: Int = 16, rowsPerBand: Int = 8): DataFrame =
+    minhashPairsOf(repSets(docs, idCol, textCol, members = true, fast = true),
+      seeds, rowsPerBand)
 
   /** Shared rep-level table for the near-dup verify family: ONE corpus
     * pass, ONE shuffle, fully lazy (zero persists/checkpoints — the
@@ -418,35 +451,25 @@ object Dedup {
     * tokenize exactly once. Member arrays are bounded by the largest
     * exact-clone group, whose pair OUTPUT is quadratic in any formulation
     * — the array changes constant factors, not asymptotics. ONLY the
-    * pair-emitting APIs consume this; the drop paths (no pair output, so
-    * no quadratic floor to hide behind) read the array-free
-    * [[docRepMap]] instead. */
-  private def repsWithMembers(docs: DataFrame, idCol: String,
-                              textCol: String): DataFrame = {
+    * pair-emitting APIs ask for `members`. The drop paths emit no pairs,
+    * so they have no quadratic floor to hide behind, and a boilerplate
+    * corpus at scale can hold a clone group of hundreds of millions of
+    * docs, whose `collect_list` row is a multi-GB single row (executor
+    * OOM) carrying information the drop decision never needs: keep/drop is
+    * decidable from the kept REP ids alone (a doc survives iff its id IS a
+    * surviving rep), so without `members` every row is scalar-width.
+    * `fast` picks the hash source ([[keyedSets]]). */
+  private def repSets(docs: DataFrame, idCol: String, textCol: String,
+                      members: Boolean, fast: Boolean = false): DataFrame = {
     val par = docs.sparkSession.sparkContext.defaultParallelism
-    tokenSets(docs, idCol, textCol)
-      .select(col(idCol), col("__set_key"), col("__harr"))
+    val aggs = Seq(min(col(idCol)).as("__rep"), first(col("__harr")).as("__harr")) ++
+      (if (members) Seq(array_sort(collect_list(col(idCol))).as("__members")) else Nil)
+    keyedSets(docs, idCol, textCol, fast)
       .repartition(par, col("__set_key"))
       .groupBy(col("__set_key"))
-      .agg(min(col(idCol)).as("__rep"), first(col("__harr")).as("__harr"),
-        array_sort(collect_list(col(idCol))).as("__members"))
+      .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Verified rep-level near-dup pairs over a rep table, computed entirely
-    * INSIDE the band self-join: the token-hash arrays (and, when
-    * `withMembers`, member lists) ride through the band explode, so there
-    * is no join-back to a rep table, no distinct exchange (each pair emits
-    * from its first matching band only — [[noEarlierBandMatch]]), and no
-    * checkpoint. The size pre-filter is provably lossless for threshold t:
-    * jaccard ≥ t forces min(|A|,|B|) ≥ t·max(|A|,|B|) (i ≤ min and
-    * i ≥ t(na+nb−i)), and it runs BEFORE the intersection. Verify on the
-    * 40-bit token-hash SETS: long-vs-long intersection is ~2× cheaper than
-    * string arrays; jaccard over hash sets equals token jaccard unless two
-    * distinct tokens of one doc collide in 40 bits (~1e-7 per pair) — and
-    * the oracle replays the identical hash-set arithmetic. Output:
-    * (doc_a, doc_b, jaccard[, __mas, __mbs]) at rep level, doc_a < doc_b.
-    * `withMembers = false` is the drop-path form: no `__members` column is
-    * required on `reps` and none crosses the band exchange. */
   /** LSH BAND-CONFIG cost sweep — for each rows-per-band config r, the
     * banding's bucket-occupancy profile over ONE shared signature pass:
     * occupied buckets and Σ C(size,2) candidate slots (the candidate WORK
@@ -527,8 +550,8 @@ object Dedup {
     // signatures come straight off the CHECKPOINTED rep table — its __ts
     // arrays are the sorted distinct tokens, so hashing them in-row is
     // the same __harr [[tokenSets]] builds, without a second corpus
-    // tokenize pass + rep exchange ([[repsOnly]] re-ran both; the rep ids
-    // agree by construction — min member id per distinct token set)
+    // tokenize pass + rep exchange (a [[repSets]] table re-ran both; the
+    // rep ids agree by construction — min member id per distinct token set)
     val sigs = jreps
       .select(col("__rep"),
         array_distinct(transform(col("__ts"), w => h40Md5(w))).as("__harr"))
@@ -573,49 +596,15 @@ object Dedup {
     result
   }
 
+  /** Verified rep-level near-dup pairs over a [[repSets]] table: the
+    * [[verifiedBandPairs]] rep self-join, l.__rep < r.__rep. `carry` names
+    * further rep columns to ride the band explode (the member lists, for
+    * the pair-emitting form); the caller reads them as `l.*`/`r.*`. */
   private def verifiedRepPairs(reps: DataFrame, seeds: Int, rowsPerBand: Int,
-                               threshold: Double,
-                               withMembers: Boolean = true): DataFrame = {
-    val carry = if (withMembers) Seq("__harr", "__members", "__allsigs")
-                else Seq("__harr", "__allsigs")
-    val bands = bandsOfSets(reps, "__rep", seeds, rowsPerBand, carry = carry)
-    val verified = bands.as("l").join(bands.as("r"),
-        col("l.band") === col("r.band") && col("l.band_sig") === col("r.band_sig"))
-      .filter(col("l.__rep") < col("r.__rep") && noEarlierBandMatch &&
-        least(col("l.__n"), col("r.__n")).cast("double") >=
-          lit(threshold) * greatest(col("l.__n"), col("r.__n")).cast("double"))
-      .withColumn("__i", size(array_intersect(col("l.__harr"), col("r.__harr"))))
-      .withColumn("jaccard", col("__i").cast("double") /
-        (col("l.__n") + col("r.__n") - col("__i")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-    if (withMembers)
-      verified.select(col("l.__rep").as("doc_a"), col("r.__rep").as("doc_b"),
-        col("jaccard"),
-        col("l.__members").as("__mas"), col("r.__members").as("__mbs"))
-    else
-      verified.select(col("l.__rep").as("doc_a"), col("r.__rep").as("doc_b"),
-        col("jaccard"))
-  }
-
-  /** Rep table WITHOUT member arrays — the drop-path backbone: one row
-    * per distinct token set, (min id, hash array), plain hash aggregate.
-    * The member-collecting aggregate ([[repsWithMembers]]) is correct
-    * where pairs are the declared output (the group's pair output is
-    * quadratic in any formulation), but the drop paths emit no pairs —
-    * and a boilerplate corpus at scale can hold a clone group of
-    * hundreds of millions of docs, whose `collect_list` row is a
-    * multi-GB single row (executor OOM) carrying information the drop
-    * decision never needs: keep/drop is decidable from the kept REP ids
-    * alone (a doc survives iff its id IS a surviving rep), so no member
-    * list and no doc→rep side table exist anywhere in the drop paths —
-    * every row is scalar-width. */
-  private def repsOnly(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    tokenSets(docs, idCol, textCol)
-      .select(col(idCol), col("__set_key"), col("__harr"))
-      .repartition(par, col("__set_key"))
-      .groupBy(col("__set_key"))
-      .agg(min(col(idCol)).as("__rep"), first(col("__harr")).as("__harr"))
+                               threshold: Double, carry: String*): DataFrame = {
+    val bands = bandsOfSets(reps, "__rep", seeds, rowsPerBand,
+      carry = ("__harr" +: carry) :+ "__allsigs")
+    verifiedBandPairs(bands, bands, repOrder = true, threshold)
   }
 
   /** ONE-pass keep filter for the drop paths: a doc survives iff its id
@@ -632,35 +621,22 @@ object Dedup {
         length(translate(col(textCol), " ", "")) === 0)
       .drop("__keep")
 
-  /** Every doc of one rep's members crossed with every doc of the other's,
-    * jaccard carried; canonicalized with least/greatest (member sets of
-    * different reps are disjoint, so no duplicates arise). */
-  private def explodeCross(verified: DataFrame): DataFrame = verified
-    .select(col("jaccard"), explode(col("__mas")).as("__ma"), col("__mbs"))
-    .select(col("jaccard"), col("__ma"), explode(col("__mbs")).as("__mb"))
-    .select(least(col("__ma"), col("__mb")).as("doc_a"),
-      greatest(col("__ma"), col("__mb")).as("doc_b"), col("jaccard"))
-
-  /** In-row 2-combinations of each rep's members (exact clones), with the
-    * caller's carry columns attached (clones are IDENTICAL content:
-    * jaccard exactly 1.0, edit distance exactly 0). The double explode
-    * emits both orders, `<` keeps one. */
-  private def sameSetPairs(reps: DataFrame, carry: Column*): DataFrame = reps
-    .filter(size(col("__members")) > 1)
-    .select(explode(col("__members")).as("__ma"), col("__members").as("__mbs"))
-    .select(col("__ma"), explode(col("__mbs")).as("__mb"))
-    .filter(col("__ma") < col("__mb"))
-    .select(col("__ma").as("doc_a") +: col("__mb").as("doc_b") +: carry: _*)
-
   def nearDupsFused(docs: DataFrame, idCol: String, textCol: String,
                     seeds: Int = 16, rowsPerBand: Int = 8,
                     threshold: Double = 0.95): DataFrame = {
     // verify at rep level (each distinct set-pair's jaccard computed once),
     // then expand in-row: clones inherit the rep jaccard; same-set pairs
     // are exactly 1.0 (≥ any threshold ≤ 1, matching the verified filter)
-    val reps = repsWithMembers(docs, idCol, textCol)
-    explodeCross(verifiedRepPairs(reps, seeds, rowsPerBand, threshold))
-      .unionByName(sameSetPairs(reps, lit(1.0).as("jaccard")))
+    // (member sets of different reps are disjoint: no duplicate pairs)
+    val reps = repSets(docs, idCol, textCol, members = true)
+    val verified = verifiedRepPairs(reps, seeds, rowsPerBand, threshold, "__members")
+      .select(col("jaccard"), col("l.__members").as("__mas"),
+        col("r.__members").as("__mbs"))
+    memberPairs(verified, col("__mas"), col("__mbs"), col("jaccard"))
+      .select(least(col("__ma"), col("__mb")).as("doc_a"),
+        greatest(col("__ma"), col("__mb")).as("doc_b"), col("jaccard"))
+      .unionByName(sameSetPairs(reps, ordered = false).select(
+        col("__ma").as("doc_a"), col("__mb").as("doc_b"), lit(1.0).as("jaccard")))
   }
 
   /** The deduplicated corpus under near-dup semantics: drop every doc that
@@ -670,8 +646,9 @@ object Dedup {
     * needed for the keep-lowest policy).
     *
     * Decided entirely at rep level — no pair expansion, no member arrays
-    * ([[repsOnly]]: every row scalar-width, so the largest clone group a
-    * boilerplate corpus can produce costs nothing beyond its row count).
+    * ([[repSets]] without members: every row scalar-width, so the largest
+    * clone group a boilerplate corpus can produce costs nothing beyond its
+    * row count).
     * The KEPT set has a one-sided characterization that needs no doc→rep
     * mapping at all: a doc survives ⟺ it is token-less (near-dup of
     * nothing) OR its id is a rep (the min of its clone set — any non-rep
@@ -686,10 +663,9 @@ object Dedup {
   def dropNearDups(docs: DataFrame, idCol: String, textCol: String,
                    seeds: Int = 16, rowsPerBand: Int = 8,
                    threshold: Double = 0.95): DataFrame = {
-    val reps = repsOnly(docs, idCol, textCol)
-    val dominated = verifiedRepPairs(reps, seeds, rowsPerBand, threshold,
-        withMembers = false)
-      .select(col("doc_b").as("__rep"))
+    val reps = repSets(docs, idCol, textCol, members = false)
+    val dominated = verifiedRepPairs(reps, seeds, rowsPerBand, threshold)
+      .select(col("r.__rep").as("__rep"))
     val kept = reps.select(col("__rep"))
       .join(dominated, Seq("__rep"), "left_anti")
       .select(col("__rep").as(idCol))
@@ -767,17 +743,18 @@ object Dedup {
     * labels are true document minima because each rep is already the min id
     * of its clone set. Token-less docs are retained (not near-dups of
     * anything). Like [[dropNearDups]], keep/drop is decided from rep ids
-    * alone ([[repsOnly]] + a dominated-rep list from CC) — no member
-    * arrays, no row wider than a scalar anywhere in either drop path. */
+    * alone (member-free [[repSets]] + a dominated-rep list from CC) — no
+    * member arrays, no row wider than a scalar anywhere in either drop
+    * path. */
   def dropNearDupsCC(docs: DataFrame, idCol: String, textCol: String,
                      seeds: Int = 16, rowsPerBand: Int = 8,
                      threshold: Double = 0.95, maxIter: Int = 25): DataFrame = {
-    val reps = repsOnly(docs, idCol, textCol)
+    val reps = repSets(docs, idCol, textCol, members = false)
     // CC iterates over the verified edges — checkpoint once (narrow,
     // rep-level id pairs) so the corpus pipeline runs exactly once
-    val verified = verifiedRepPairs(reps, seeds, rowsPerBand, threshold,
-        withMembers = false)
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
+    val verified = verifiedRepPairs(reps, seeds, rowsPerBand, threshold)
+      .select(col("l.__rep").as("doc_a"), col("r.__rep").as("doc_b"))
+      .localCheckpoint()
     val comp = Graph.connectedComponentsMinLabel(verified, "doc_a", "doc_b",
       maxRounds = maxIter)
     // non-minimum nodes of each component are the dominated reps; reps
@@ -809,10 +786,10 @@ object Dedup {
   def nearDupClusters(docs: DataFrame, idCol: String, textCol: String,
                       seeds: Int = 16, rowsPerBand: Int = 8,
                       threshold: Double = 0.95, maxIter: Int = 25): DataFrame = {
-    val reps = repsOnly(docs, idCol, textCol).localCheckpoint()
-    val verified = verifiedRepPairs(reps, seeds, rowsPerBand, threshold,
-        withMembers = false)
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
+    val reps = repSets(docs, idCol, textCol, members = false).localCheckpoint()
+    val verified = verifiedRepPairs(reps, seeds, rowsPerBand, threshold)
+      .select(col("l.__rep").as("doc_a"), col("r.__rep").as("doc_b"))
+      .localCheckpoint()
     val comp = Graph.connectedComponentsMinLabel(verified, "doc_a", "doc_b",
       maxRounds = maxIter)
     val docRep = tokenSets(docs, idCol, textCol)
@@ -863,7 +840,7 @@ object Dedup {
     *  - candidates = band equi-join on (band, band_sig), each incoming×set
     *    pair verified once from its first matching band
     *    ([[noEarlierBandMatch]]), size-prefiltered (provably lossless, see
-    *    [[verifiedRepPairs]]), exact hash-set jaccard inside the join.
+    *    [[verifiedBandPairs]]), exact hash-set jaccard inside the join.
     *  - the matched incoming ids anti-join the corpus: token-less docs are
     *    never candidates, so they survive without a special path. Every
     *    shuffled row is scalar-width or one hash array; zero persists,
@@ -898,6 +875,9 @@ object Dedup {
                         fast: Boolean): DataFrame =
     if (!fast) tokenSets(docs, idCol, textCol)
       .select(col(idCol), col("__set_key"), col("__harr"))
+    // the cheap translate pre-filter replaces `__ts.isNotNull` (kernel
+    // null ⟺ no tokens ⟺ no non-space char): the isNotNull form is
+    // pushed to the scan and runs the whole kernel a second time per row
     else Query.ensureParallelism(docs)
       .filter(length(translate(col(textCol), " ", "")) > 0)
       .select(col(idCol),
@@ -930,23 +910,17 @@ object Dedup {
     bandsOfSets(sets, "__ref", seeds, rowsPerBand, Seq("__harr", "__allsigs"))
   }
 
-  /** Candidate generation + verification for the cross-corpus family,
-    * shared verbatim by the batch drops and the streaming flag form: band
-    * equi-join (aliases `l` = incoming, `r` = reference), one emission per
-    * (incoming doc, reference set) from its first matching band, lossless
-    * size pre-filter, exact hash-set jaccard ≥ threshold. Callers select
-    * the qualified `l.*` columns they need plus `jaccard`. */
-  private[graft] def crossBandMatches(incBands: DataFrame, refBands: DataFrame,
-                                      threshold: Double): DataFrame =
-    incBands.as("l").join(refBands.as("r"),
-        col("l.band") === col("r.band") && col("l.band_sig") === col("r.band_sig"))
-      .filter(noEarlierBandMatch &&
-        least(col("l.__n"), col("r.__n")).cast("double") >=
-          lit(threshold) * greatest(col("l.__n"), col("r.__n")).cast("double"))
-      .withColumn("__i", size(array_intersect(col("l.__harr"), col("r.__harr"))))
-      .withColumn("jaccard", col("__i").cast("double") /
-        (col("l.__n") + col("r.__n") - col("__i")).cast("double"))
-      .filter(col("jaccard") >= lit(threshold))
+  /** The incoming side of the cross-corpus family, shared verbatim by the
+    * batch drops and the streaming flag form: doc-level (idCol, __harr)
+    * rows banded and verified against a reference band table
+    * ([[verifiedBandPairs]], aliases `l` = incoming, `r` = reference), one
+    * emission per (incoming doc, reference set). Callers select the
+    * qualified `l.*` columns they need plus `jaccard`. */
+  private[graft] def referenceMatches(incDocs: DataFrame, idCol: String,
+                                      refBands: DataFrame, seeds: Int,
+                                      rowsPerBand: Int, threshold: Double): DataFrame =
+    verifiedBandPairs(bandsOfSets(incDocs, idCol, seeds, rowsPerBand,
+      Seq("__harr", "__allsigs")), refBands, repOrder = false, threshold)
 
   private def dropAgainstImpl(reference: DataFrame, incoming: DataFrame,
                               idCol: String, textCol: String,
@@ -954,10 +928,8 @@ object Dedup {
                               fast: Boolean): DataFrame = {
     val incDocs = keyedSets(incoming, idCol, textCol, fast)
       .select(col(idCol), col("__harr"))
-    val lb = bandsOfSets(incDocs, idCol, seeds, rowsPerBand,
-      Seq("__harr", "__allsigs"))
     val rb = referenceBandTable(reference, idCol, textCol, seeds, rowsPerBand, fast)
-    val matched = crossBandMatches(lb, rb, threshold)
+    val matched = referenceMatches(incDocs, idCol, rb, seeds, rowsPerBand, threshold)
       .select(col(s"l.$idCol").as(idCol))
     incoming.join(matched, Seq(idCol), "left_anti")
   }
@@ -1039,7 +1011,7 @@ object Dedup {
     // added, only the partition count is fixed.
     val par = docs.sparkSession.sparkContext.defaultParallelism
     // rep-collapse identical snippets (min id represents each) with the
-    // family's one-pass member-collecting aggregate ([[repsWithMembers]]
+    // family's one-pass member-collecting aggregate ([[repSets]]
     // shape, keyed on the snippet itself): gram hashing, banding, and the
     // levenshtein verify run once per DISTINCT snippet, and clone pairs
     // expand by in-row explode of the member lists — no doc→rep side
@@ -1072,17 +1044,14 @@ object Dedup {
     val bandsWithStr = bandsOfSets(sets, "__rep", seeds, rowsPerBand,
       carry = Seq("__s", "__members", "__allsigs"))
       .repartition(par, col("band"), col("band_sig"))
-    val cross = bandsWithStr.as("l").join(bandsWithStr.as("r"),
-        col("l.band") === col("r.band") && col("l.band_sig") === col("r.band_sig"))
-      .filter(col("l.__rep") < col("r.__rep") && noEarlierBandMatch)
+    val near = bandJoin(bandsWithStr, bandsWithStr, repOrder = true)
       .withColumn("dist", levenshtein(col("l.__s"), col("r.__s")))
       .filter(col("dist") <= maxDist)
-      .select(col("dist"), explode(col("l.__members")).as("__ma"),
-        col("r.__members").as("__mbs"))
-      .select(col("dist"), col("__ma"), explode(col("__mbs")).as("__mb"))
+    memberPairs(near, col("l.__members"), col("r.__members"), col("dist"))
       .select(least(col("__ma"), col("__mb")).as("doc_a"),
         greatest(col("__ma"), col("__mb")).as("doc_b"), col("dist"))
-    cross.unionByName(sameSetPairs(reps, lit(0).as("dist")))
+      .unionByName(sameSetPairs(reps, ordered = false).select(
+        col("__ma").as("doc_a"), col("__mb").as("doc_b"), lit(0).as("dist")))
   }
 
   /** The SimHash bit-vote circuit: `tok` carries (idCol, h); for bit k,
@@ -1206,40 +1175,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
-  /** EXACT-recall set-similarity self-join (AllPairs/PPJoin prefix-filter
-    * family, Bayardo et al. 2007 / Xiao et al. 2008): every pair of
-    * documents whose token-set Jaccard ≥ θ = `thetaNum`/`thetaDen`, with
-    * NO false negatives — the guarantee the minhash-LSH family
-    * ([[minhashPairs]]) deliberately trades away. Use LSH for the routine
-    * corpus pass; use this when recall must be provable (contamination
-    * audits, legal-hold dedup, evaluating the LSH miss rate itself).
-    *
-    * Candidate pruning is the PREFIX FILTER: tokens are ordered by global
-    * document frequency (rarest first, ties by token — a total order both
-    * engines replay), each document keeps its first p = |d| − ⌈θ·|d|⌉ + 1
-    * tokens, and candidates meet through a plain equi-join on a shared
-    * PREFIX token. Exactness: if J(A,B) ≥ θ then o = |A∩B| ≥ ⌈θ·|A|⌉,
-    * and the MINIMAL shared token (global order) has ≥ o−1 intersection
-    * tokens after it in both documents, so it sits within both prefixes —
-    * the equi-join cannot miss a qualifying pair. Skew-resistance falls
-    * out of the same ordering: prefix tokens are each document's RAREST
-    * tokens, so join buckets are bounded by design (the stopword bucket
-    * never forms).
-    *
-    * Scale shape: one broadcast-or-shuffle df join + one id-keyed exchange
-    * build the ordered token arrays; the candidate join shuffles prefix
-    * rows only (p ≪ |d| per doc — at θ=0.8, a fifth of each document).
-    * Candidate rows are scalar-width (rep id, size, match position) and
-    * pass three cheap integer gates — the size-ratio filter
-    * num·max ≤ den·min, then the PPJoin POSITIONAL upper bound
-    * (num+den)·min(szₐ−pₐ, szᵦ−pᵦ) ≥ num·(szₐ+szᵦ) — before a scalar
-    * `distinct` collapses the several meetings of a pair to ONE row.
-    * Only then do the token arrays attach (two joins against the small
-    * rep table) for exactly one in-row `array_intersect` verify per
-    * surviving pair, gated by den·o ≥ num·(|A|+|B|−o). The distinct
-    * exchange never carries token arrays (the r7 wide-row lesson), and
-    * the positional filter prunes candidates even when every document
-    * shares a prefix token. */
   /** Stage 1 of [[jaccardJoinExact]]: REP COLLAPSE — the same clone-group
     * defense as the minhash family: a boilerplate corpus puts hundreds of
     * identical token sets in one group, and every clone pair shares every
@@ -1247,7 +1182,7 @@ object Dedup {
     * candidates and run the array verify on each (measured 584 s at sf0.1
     * before this restructure, sub-second after). Distinct sets pair ONCE;
     * members expand in-row afterwards, where the pair output is quadratic
-    * only because the declared OUTPUT is (as with repsWithMembers).
+    * only because the declared OUTPUT is (as with [[repSets]]).
     * Returns (__ts token-set, __rep, __members). */
   private[graft] def jaccardReps(docs: DataFrame, idCol: String,
                                      textCol: String): DataFrame =
@@ -1461,10 +1396,14 @@ object Dedup {
     val arrB = reps.filter(form.build)
       .select(col("__rep").as("__rb"), col("__ts").as("__tb"),
         size(col("__ts")).cast("long").as("__lb"))
+    // the gate is a one-element explode, not a Project alias: Catalyst
+    // would inline an aliased `__i` into the `__i >= 0` filter, fold that
+    // into the join condition and run the whole merge twice per pair
     candIds.join(arrA, Seq("__ra")).join(arrB, Seq("__rb"))
-      .withColumn("__i", form.verify(col("__ta"), col("__tb")))
+      .select(col("__ra"), col("__rb"),
+        explode(array(form.verify(col("__ta"), col("__tb")))).as("__i"),
+        col("__la"), col("__lb"))
       .filter(col("__i") >= 0L)
-      .select(col("__ra"), col("__rb"), col("__i"), col("__la"), col("__lb"))
   }
 
   /** Past this rep count the bitmap join's quadratic popcount work
@@ -1633,12 +1572,10 @@ object Dedup {
       .select(col("__rep").as("__ra"), col("__members").as("__mas"))
     val memB = reps.filter(col("__corp") === 1)
       .select(col("__rep").as("__rb"), col("__members").as("__mbs"))
-    val result = repPairs.join(memA, Seq("__ra")).join(memB, Seq("__rb"))
-      .select(col("__i"), col("__la"), col("__lb"),
-        explode(col("__mas")).as("id_in"), col("__mbs"))
-      .select(col("__i"), col("__la"), col("__lb"), col("id_in"),
-        explode(col("__mbs")).as("id_ref"))
-      .select(col("id_in"), col("id_ref"), col("__i").as("inter_size"),
+    val result = memberPairs(repPairs.join(memA, Seq("__ra")).join(memB, Seq("__rb")),
+        col("__mas"), col("__mbs"), col("__i"), col("__la"), col("__lb"))
+      .select(col("__ma").as("id_in"), col("__mb").as("id_ref"),
+        col("__i").as("inter_size"),
         col("__la").as("size_in"), col("__lb").as("size_ref"))
       .withColumn("jaccard", col("inter_size").cast("double") /
         (col("size_in") + col("size_ref") - col("inter_size")))
@@ -1647,6 +1584,40 @@ object Dedup {
     result
   }
 
+  /** EXACT-recall set-similarity self-join (AllPairs/PPJoin prefix-filter
+    * family, Bayardo et al. 2007 / Xiao et al. 2008): every pair of
+    * documents whose token-set Jaccard ≥ θ = `thetaNum`/`thetaDen`, with
+    * NO false negatives — the guarantee the minhash-LSH family
+    * ([[minhashPairs]]) deliberately trades away. Use LSH for the routine
+    * corpus pass; use this when recall must be provable (contamination
+    * audits, legal-hold dedup, evaluating the LSH miss rate itself).
+    *
+    * Candidate pruning is the PREFIX FILTER: tokens are ordered by global
+    * document frequency (rarest first, ties by token — a total order both
+    * engines replay), each document keeps its first p = |d| − ⌈θ·|d|⌉ + 1
+    * tokens, and candidates meet through a plain equi-join on a shared
+    * PREFIX token. Exactness: if J(A,B) ≥ θ then o = |A∩B| ≥ ⌈θ·|A|⌉,
+    * and the MINIMAL shared token (global order) has ≥ o−1 intersection
+    * tokens after it in both documents, so it sits within both prefixes —
+    * the equi-join cannot miss a qualifying pair. Skew-resistance falls
+    * out of the same ordering: prefix tokens are each document's RAREST
+    * tokens, so join buckets are bounded by design (the stopword bucket
+    * never forms).
+    *
+    * Scale shape: one broadcast-or-shuffle df join + one id-keyed exchange
+    * build the ordered token arrays; the candidate join shuffles prefix
+    * rows only (p ≪ |d| per doc — at θ=0.8, a fifth of each document).
+    * Candidate rows are scalar-width (rep id, size, match position) and
+    * pass three cheap integer gates — the size-ratio filter
+    * num·max ≤ den·min, then the PPJoin POSITIONAL upper bound
+    * (num+den)·min(szₐ−pₐ, szᵦ−pᵦ) ≥ num·(szₐ+szᵦ) — before a scalar
+    * `distinct` collapses the several meetings of a pair to ONE row.
+    * Only then do the token arrays attach (two joins against the small
+    * rep table) for exactly one in-row merge verify per surviving pair
+    * ([[PairForm.verify]]), gated by den·o ≥ num·(|A|+|B|−o). The distinct
+    * exchange never carries token arrays (the r7 wide-row lesson), and
+    * the positional filter prunes candidates even when every document
+    * shares a prefix token. */
   def jaccardJoinExact(docs: DataFrame, idCol: String, textCol: String,
                        thetaNum: Int, thetaDen: Int): DataFrame = {
     require(thetaNum > 0 && thetaDen > 0 && thetaNum <= thetaDen,
@@ -1668,24 +1639,17 @@ object Dedup {
     // sizes swap with the id canonicalization), plus the in-group pairs
     val repsA = reps.select(col("__rep").as("__ra"), col("__members").as("__mas"))
     val repsB = reps.select(col("__rep").as("__rb"), col("__members").as("__mbs"))
-    val cross = repPairs.join(repsA, Seq("__ra")).join(repsB, Seq("__rb"))
-      .select(col("__i"), col("__la"), col("__lb"),
-        explode(col("__mas")).as("__ma"), col("__mbs"))
-      .select(col("__i"), col("__la"), col("__lb"), col("__ma"),
-        explode(col("__mbs")).as("__mb"))
+    val cross = memberPairs(repPairs.join(repsA, Seq("__ra")).join(repsB, Seq("__rb")),
+        col("__mas"), col("__mbs"), col("__i"), col("__la"), col("__lb"))
       .select(least(col("__ma"), col("__mb")).as("id_a"),
         greatest(col("__ma"), col("__mb")).as("id_b"),
         col("__i").as("inter_size"),
-        when(col("__ma") <= col("__mb"), col("__la")).otherwise(col("__lb"))
+        when(col("__ma") < col("__mb"), col("__la")).otherwise(col("__lb"))
           .as("size_a"),
-        when(col("__ma") <= col("__mb"), col("__lb")).otherwise(col("__la"))
+        when(col("__ma") < col("__mb"), col("__lb")).otherwise(col("__la"))
           .as("size_b"))
-    val same = reps
-      .filter(size(col("__members")) > 1)
-      .select(size(col("__ts")).cast("long").as("__sz"),
-        explode(col("__members")).as("__ma"), col("__members").as("__mbs"))
-      .select(col("__sz"), col("__ma"), explode(col("__mbs")).as("__mb"))
-      .filter(col("__ma") < col("__mb"))
+    val same = sameSetPairs(reps, ordered = false,
+        size(col("__ts")).cast("long").as("__sz"))
       .select(col("__ma").as("id_a"), col("__mb").as("id_b"),
         col("__sz").as("inter_size"), col("__sz").as("size_a"),
         col("__sz").as("size_b"))
@@ -1733,22 +1697,15 @@ object Dedup {
     // from rb, NO least/greatest swap
     val repsA = reps.select(col("__rep").as("__ra"), col("__members").as("__mas"))
     val repsB = reps.select(col("__rep").as("__rb"), col("__members").as("__mbs"))
-    val cross = repPairs.join(repsA, Seq("__ra")).join(repsB, Seq("__rb"))
-      .select(col("__i"), col("__la"), col("__lb"),
-        explode(col("__mas")).as("__ma"), col("__mbs"))
-      .select(col("__i"), col("__la"), col("__lb"), col("__ma"),
-        explode(col("__mbs")).as("__mb"))
+    val cross = memberPairs(repPairs.join(repsA, Seq("__ra")).join(repsB, Seq("__rb")),
+        col("__mas"), col("__mbs"), col("__i"), col("__la"), col("__lb"))
       .select(col("__ma").as("id_a"), col("__mb").as("id_b"),
         col("__i").as("inter_size"), col("__la").as("size_a"),
         col("__lb").as("size_b"))
     // clone families: identical sets ⇒ containment 1 both ways — all
     // ordered pairs
-    val same = reps
-      .filter(size(col("__members")) > 1)
-      .select(size(col("__ts")).cast("long").as("__sz"),
-        explode(col("__members")).as("__ma"), col("__members").as("__mbs"))
-      .select(col("__sz"), col("__ma"), explode(col("__mbs")).as("__mb"))
-      .filter(col("__ma") =!= col("__mb"))
+    val same = sameSetPairs(reps, ordered = true,
+        size(col("__ts")).cast("long").as("__sz"))
       .select(col("__ma").as("id_a"), col("__mb").as("id_b"),
         col("__sz").as("inter_size"), col("__sz").as("size_a"),
         col("__sz").as("size_b"))

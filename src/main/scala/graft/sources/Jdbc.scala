@@ -479,12 +479,6 @@ object Jdbc {
     s"CREATE ${u}INDEX $indexName ON $table (${columns.mkString(", ")})"
   }
 
-  /** S9 sequence reset (PostgreSQL form): re-sync the pk sequence after a
-    * bulk load (`lib/taps/schema.rb:74-80`). */
-  def resetSequenceSql(table: String, pk: String): String =
-    s"SELECT setval(pg_get_serial_sequence('$table', '$pk'), " +
-      s"coalesce((SELECT max($pk) FROM $table), 0) + 1, false)"
-
   /** S9, identity-column dialects (Derby/DB2 family): restart the pk's
     * identity counter past the bulk-loaded maximum — same effect as
     * Postgres' setval, different spelling. */
@@ -496,7 +490,7 @@ object Jdbc {
     * DuckDB has no serial/identity shorthand, so the sequence object is
     * ours to make. Classic-serial Postgres is NOT in this class — serial
     * creates its own backing sequence at DDL time and the reset is
-    * `setval` ([[resetSequenceSql]]), dispatched separately below.
+    * `setval`, dispatched separately below.
     * Identity-column engines (Derby/DB2/H2) take the ALTER…RESTART branch.
     * The cross-engine split taps hides behind Sequel adapters
     * (lib/taps/schema.rb:74-80). */
@@ -537,10 +531,9 @@ object Jdbc {
       Seq(s"CREATE SEQUENCE $seq START WITH $next",
         s"ALTER TABLE $table ALTER COLUMN $pk SET DEFAULT nextval('$seq')")
     } else if (url.startsWith("jdbc:postgresql:"))
-      // honor the caller-supplied `next` exactly like the other two
-      // branches (a caller reserving a gap must get it on every dialect);
-      // the table-derived variant (resetSequenceSql, = taps' max+1
-      // behavior) remains for callers that want the watermark default
+      // S9 in PostgreSQL's spelling (`lib/taps/schema.rb:74-80`), honoring
+      // the caller-supplied `next` exactly like the other two branches (a
+      // caller reserving a gap must get it on every dialect)
       Seq(s"SELECT setval(pg_get_serial_sequence('$table', '$pk'), " +
         s"$next, false)")
     else Seq(restartIdentitySql(table, pk, next))
@@ -628,24 +621,5 @@ object Jdbc {
         c -> s"VARCHAR(${math.max(256, 2 * row.getInt(i))})"
       }.toMap
     }
-  }
-
-  /** Batched INSERT executor over a fresh per-call connection — the live
-    * sink for [[adaptiveWriteLoop]] (each batch ≙ one taps POST; the
-    * controller sizes the next one from the observed wall time). */
-  def batchInserter(url: String, table: String, schema: StructType): (Seq[Row], Int) => Unit = {
-    val placeholders = schema.fields.map(_ => "?").mkString(", ")
-    val insert = s"INSERT INTO $table (${schema.fieldNames.mkString(", ")}) VALUES ($placeholders)"
-    (batch: Seq[Row], _: Int) =>
-      withConnection(url) { conn =>
-        val ps = conn.prepareStatement(insert)
-        batch.foreach { row =>
-          schema.fields.zipWithIndex.foreach { case (_, i) =>
-            ps.setObject(i + 1, row.get(i))
-          }
-          ps.addBatch()
-        }
-        ps.executeBatch()
-      }
   }
 }

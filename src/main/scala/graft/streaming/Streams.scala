@@ -314,9 +314,7 @@ object Streams {
       .select(col(idCol).cast("long").as("id"),
         org.apache.spark.sql.graft.TokenSetHashes.of(col(textCol))
           .getField("harr").as("__harr"))
-    val bands = Dedup.bandsOfSets(docs, "id", seeds, rowsPerBand,
-      Seq("__harr", "__allsigs"))
-    Dedup.crossBandMatches(bands, referenceBands, threshold)
+    Dedup.referenceMatches(docs, "id", referenceBands, seeds, rowsPerBand, threshold)
       .select(col("l.id").as("doc_id"), col("l.band").as("band"), col("jaccard"))
   }
 

@@ -965,4 +965,117 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(got(2)._3 >= got(4)._3 && got(4)._3 >= got(8)._3 &&
       got(8)._3 >= got(16)._3, s"monotone: $got")
   }
+
+  // The LSH family against a driver-side brute force built from the
+  // UNFUSED reference path (minhashSignatures + minhashBands): candidates
+  // are exactly the doc pairs sharing a (band, band_sig), verified pairs
+  // are candidates with token-set jaccard >= t, keep-lowest drops every
+  // doc with a verified lower-id partner, and components are labeled by
+  // their minimum id. Every entry point must reproduce its slice of that
+  // truth row for row (duplicates included), on degenerate corpora too.
+  private val lshBase = (1 to 40).map(i => s"w$i")
+  private val lshCorpora: Seq[(String, Seq[(Long, String)], Seq[(Int, Int, Double)])] = Seq(
+    ("an empty corpus", Seq.empty[(Long, String)], Seq((16, 8, 0.95))),
+    ("only NULL or whitespace text",
+      Seq[(Long, String)]((1L, null), (2L, ""), (3L, "   "), (4L, " ")),
+      Seq((16, 8, 0.95))),
+    ("a single doc", Seq[(Long, String)]((7L, "alpha beta gamma")), Seq((16, 8, 0.95))),
+    ("six clones of one text",
+      (1L to 6L).map(i => (i, if (i % 2 == 0) " The QUICK brown  fox " else "the quick brown fox")),
+      Seq((16, 8, 0.95))),
+    ("clones mixed with near-dups", Seq[(Long, String)](
+      (10L, lshBase.mkString(" ")),                                // base
+      (11L, lshBase.map(_.toUpperCase).mkString("  ")),            // clone of 10
+      (12L, lshBase.reverse.mkString(" ")),                        // clone of 10
+      (20L, ("x1" +: lshBase.tail).mkString(" ")),                 // J(10,20) = 39/41
+      (21L, (lshBase.init :+ "x2").mkString(" ")),                 // J(20,21) = 38/42
+      (22L, lshBase.tail.mkString(" ")),                           // J(10,22) = 39/40
+      (23L, lshBase.take(20).mkString(" ")),                       // contained in 10
+      (30L, "alpha beta gamma delta"), (31L, "delta gamma beta alpha"),
+      (32L, "alpha beta gamma epsilon"),
+      (40L, ""), (41L, null), (42L, "  ")),
+      Seq((16, 8, 0.95), (16, 2, 0.9))))
+
+  lshCorpora.foreach { case (name, rows, configs) =>
+    test(s"LSH family equals the banded brute force on $name") {
+      import spark.implicits._
+      val docs = rows.toDF("doc_id", "text")
+      def num(r: org.apache.spark.sql.Row, c: String): Long =
+        r.getAs[Number](c).longValue
+      def dbl(r: org.apache.spark.sql.Row, c: String): Double = r.getAs[Double](c)
+      def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+        df.select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
+      val toks: Map[Long, Set[String]] = rows.collect { case (id, t) if t != null &&
+          t.toLowerCase.split(" ").exists(_.nonEmpty) =>
+        id -> t.toLowerCase.split(" ").filter(_.nonEmpty).toSet }.toMap
+      val allIds = rows.map(_._1).sorted
+      for ((seeds, rpb, t) <- configs) {
+        val sigDf = Dedup.minhashSignatures(docs, "doc_id", "text", seeds)
+        val sigs = sigDf.collect().groupBy(_.getLong(0)).map { case (id, rs) =>
+          id -> rs.sortBy(num(_, "j")).map(num(_, "sig")).toSeq }
+        val buckets = Dedup.minhashBands(sigDf, "doc_id", rpb).collect()
+          .groupBy(_.getLong(0)).map { case (id, rs) =>
+            id -> rs.map(r => (num(r, "band"), r.getAs[String]("band_sig"))).toSet }
+        assert(sigs.keySet == toks.keySet && buckets.keySet == toks.keySet)
+        def inter(a: Long, b: Long): Long = (toks(a) & toks(b)).size.toLong
+        def jac(a: Long, b: Long): Double =
+          inter(a, b).toDouble / (toks(a).size + toks(b).size - inter(a, b)).toDouble
+        def meets(a: Long, b: Long): Boolean = (buckets(a) & buckets(b)).nonEmpty
+        val setIds = toks.keys.toSeq.sorted
+        val cands = for (a <- setIds; b <- setIds if a < b && meets(a, b)) yield (a, b)
+        val verified = cands.filter { case (a, b) => jac(a, b) >= t }
+        val cfg = s"seeds=$seeds rowsPerBand=$rpb t=$t"
+
+        val pairs = Dedup.minhashPairs(docs, "doc_id", "text", seeds, rpb).collect()
+          .map(r => (num(r, "doc_a"), num(r, "doc_b"))).toSeq.sorted
+        assert(pairs == cands, cfg)
+        val est = Dedup.minhashEstimates(docs, "doc_id", "text", seeds, rpb).collect()
+          .map(r => (num(r, "doc_a"), num(r, "doc_b"), num(r, "n_agree"),
+            dbl(r, "est_jaccard"))).toSeq.sorted
+        assert(est == cands.map { case (a, b) =>
+          val n = sigs(a).zip(sigs(b)).count { case (x, y) => x == y }.toLong
+          (a, b, n, n.toDouble / seeds.toDouble)
+        }, cfg)
+        val cont = Dedup.containmentPairs(docs, "doc_id", "text", seeds, rpb).collect()
+          .map(r => (num(r, "doc_a"), num(r, "doc_b"), num(r, "overlap"),
+            dbl(r, "cont_a"), dbl(r, "cont_b"))).toSeq.sorted
+        assert(cont == cands.map { case (a, b) =>
+          val i = inter(a, b)
+          (a, b, i, i.toDouble / toks(a).size.toDouble, i.toDouble / toks(b).size.toDouble)
+        }, cfg)
+        val fused = Dedup.nearDupsFused(docs, "doc_id", "text", seeds, rpb, t).collect()
+          .map(r => (num(r, "doc_a"), num(r, "doc_b"), dbl(r, "jaccard"))).toSeq.sorted
+        assert(fused == verified.map { case (a, b) => (a, b, jac(a, b)) }, cfg)
+        assert(fused.forall(_._3 >= t), cfg)
+
+        val dominated = verified.map(_._2).toSet
+        assert(ids(Dedup.dropNearDups(docs, "doc_id", "text", seeds, rpb, t)) ==
+          allIds.filterNot(dominated), cfg)
+        val label = scala.collection.mutable.Map(allIds.map(i => i -> i): _*)
+        def find(i: Long): Long = if (label(i) == i) i else find(label(i))
+        verified.foreach { case (a, b) =>
+          val (ra, rb) = (find(a), find(b))
+          label(math.max(ra, rb)) = math.min(ra, rb)
+        }
+        val comp = allIds.map(i => i -> find(i)).toMap
+        for (twin <- Seq(false, true)) {
+          def run[T](f: => T): T = if (twin) withTwins(f) else f
+          val mode = s"$cfg twin=$twin"
+          assert(run(ids(Dedup.dropNearDupsCC(docs, "doc_id", "text", seeds, rpb, t))) ==
+            allIds.filter(i => comp(i) == i), mode)
+          assert(run(Dedup.nearDupClusters(docs, "doc_id", "text", seeds, rpb, t)
+            .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted) ==
+            allIds.map(i => (i, comp(i))), mode)
+        }
+
+        val (refIds, incIds) = allIds.partition(_ % 2 == 0)
+        val ref = docs.filter(col("doc_id") % 2 === 0)
+        val inc = docs.filter(col("doc_id") % 2 =!= 0)
+        val hit = incIds.filter(i => toks.contains(i) && refIds.exists(r =>
+          toks.contains(r) && meets(i, r) && jac(i, r) >= t)).toSet
+        assert(ids(Dedup.dropNearDupsAgainst(ref, inc, "doc_id", "text", seeds, rpb, t)) ==
+          incIds.filterNot(hit), cfg)
+      }
+    }
+  }
 }

@@ -242,10 +242,13 @@ class JdbcRoundtripSpec extends AnyFunSuite with SparkSpec {
     val source = Tables.load(spark, src, "customer")
     Jdbc.execute(url, Jdbc.createTableDdl(source, "loop_target", Seq("c_custkey"), Some(url)))
     val rows = source.collect() // 1500 rows at sf0.001 — a driver-side batch fixture
-    val (written, sizer) = Jdbc.adaptiveWriteLoop(
-      rows.iterator, Jdbc.batchInserter(url, "loop_target", source.schema),
-      graft.streaming.ChunkSizer(100))
-    assert(written == rows.length && !sizer.exhausted)
+    // the production partition writer: its adaptiveWriteLoop throws once
+    // the controller is exhausted, so a return means every batch landed
+    val (insertSql, types) = Jdbc.insertPlan(url, "loop_target", source.columns.toSeq)
+    val written = Jdbc.writePartitionAdaptive(rows.iterator, insertSql, types,
+      () => java.sql.DriverManager.getConnection(url), "loop_target", 100,
+      tolerateDuplicates = false)
+    assert(written == rows.length)
     assert(Jdbc.queryLong(url, "SELECT count(*) FROM loop_target").contains(rows.length.toLong))
     val sumBal = Jdbc.queryLong(url, "SELECT CAST(sum(c_acctbal) AS BIGINT) FROM loop_target").get
     val srcSum = source.agg(sum("c_acctbal").cast("long")).head().getLong(0)

@@ -108,7 +108,6 @@ class JdbcSpec extends AnyFunSuite {
       "CREATE INDEX t_name_idx ON t (name)")
     assert(Jdbc.createIndexDdl("t", "t_id_u", Seq("id"), unique = true)
       .startsWith("CREATE UNIQUE INDEX"))
-    assert(Jdbc.resetSequenceSql("t", "id").contains("pg_get_serial_sequence"))
   }
 
   test("resetPkSequenceSql dispatches per dialect: DuckDB creates+attaches " +
