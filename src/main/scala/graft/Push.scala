@@ -7,8 +7,8 @@ package graft
  * roles of source and destination swapped (the HTTP asymmetry that made
  * them different code paths in the reference — who executes the scan vs the
  * import — dissolves into Spark's unified execution). The verbs only
- * diverge again at a JDBC edge, where [[sources.Jdbc.write]] carries the
- * bulk-import batch semantics.
+ * diverge again at a JDBC edge, where [[sources.Jdbc.writeAdaptive]]
+ * carries the bulk-import batch semantics.
  */
 object Push {
   def main(args: Array[String]): Unit = Pull.main(args)

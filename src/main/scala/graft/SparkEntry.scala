@@ -2041,12 +2041,13 @@ object SparkEntry {
 
     // ── §2.7 LIVE JDBC round-trip (S5/S7/S8) ─────────────────────────────
     // The taps production sequence against a real embedded database (Derby,
-    // in-process): CREATE TABLE DDL executed, data bulk-loaded over JDBC,
-    // index replayed — then the table is read BACK via a partitioned JDBC
-    // scan. No sequence reset runs here (S9 is live in JdbcRoundtripSpec
-    // and `Transfer.pullToJdbc`). The oracle compares that read-back against
-    // the original parquet: a hash match proves the whole round trip is
-    // lossless.
+    // in-process): CREATE TABLE DDL executed, data bulk-loaded through the
+    // production sink (`Jdbc.writeAdaptive`, as `Transfer.pullToJdbc`
+    // loads), index replayed — then the table is read BACK via a
+    // partitioned JDBC scan. No sequence reset runs here (S9 is live in
+    // JdbcRoundtripSpec and `Transfer.pullToJdbc`). The oracle compares that
+    // read-back against the original parquet: a hash match proves the whole
+    // round trip is lossless.
     "jdbc_roundtrip" -> ((s, dir) => {
       import graft.sources.Jdbc
       val url = "jdbc:derby:memory:graft_q;create=true"
@@ -2054,7 +2055,7 @@ object SparkEntry {
       val src = t(s, dir, "nation")
       Jdbc.dropTableIfExists(url, table)
       Jdbc.execute(url, Jdbc.createTableDdl(src, table, Seq("n_nationkey"), Some(url)))
-      Jdbc.write(src, Jdbc.writeOptions(url, table))
+      Jdbc.writeAdaptive(src, url, table)
       Jdbc.execute(url, Jdbc.createIndexDdl(table, "idx_rt_region", Seq("n_regionkey")))
       val bounds = src.agg(min(col("n_nationkey")).cast("long"),
         max(col("n_nationkey")).cast("long")).head()
@@ -3971,74 +3972,6 @@ object SparkEntry {
       |  COALESCE(ov.n_overlap, 0) AS n_overlap,
       |  CASE WHEN COALESCE(ov.n_overlap, 0) > 0 THEN 1 ELSE 0 END AS contaminated
       |FROM g LEFT JOIN ov USING (doc_id) WHERE g.doc_id % 13 <> 0""".stripMargin
-
-  /** PRE-checkpoint loop-body plans for the plan audit only: the
-    * iterative queries' final plans collapse to `Scan ExistingRDD` past
-    * their checkpoint barriers, so `plans.Explain` renders these
-    * un-checkpointed single-round bodies alongside the real queries
-    * (r10 verdict item 4). Built from the SAME shared round functions
-    * the loops execute — no drift. Never run by Verify/Bench. */
-  def loopBodyPlans: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ext_pagerank [one pre-checkpoint iteration]" -> ((s, dir) =>
-      operators.Graph.pagerankIterationPlan(copurchasePairs(s, dir), "u", "v")),
-    "ext_bfs_levels [one pre-checkpoint round]" -> ((s, dir) =>
-      operators.Graph.bfsRoundPlan(copurchasePairs(s, dir), "u", "v", 0L)),
-    "ext_graph_triangles [pre-checkpoint edge-iterator]" -> ((s, dir) =>
-      operators.Graph.triangleCountPlan(copurchaseEdgesRaw(s, dir), "u", "v")),
-    "ext_clustering_coeff [pre-checkpoint edge-iterator]" -> ((s, dir) =>
-      operators.Graph.clusteringPlan(copurchaseEdgesRaw(s, dir), "u", "v")),
-    "ext_dedup_jaccard_join [pre-checkpoint candidates+verify]" -> ((s, dir) =>
-      operators.Dedup.repPairsPlan(t(s, dir, "documents"), "doc_id", "text",
-        4, 5, bitmap = false)),
-    "ext_dedup_jaccard_join / ext_containment_join [dense-vocab bitmap " +
-      "pair stage: popcount gate on the join condition, zero pair-stream " +
-      "exchanges]" -> ((s, dir) =>
-        operators.Dedup.repPairsPlan(t(s, dir, "documents"),
-          "doc_id", "text", 4, 5, bitmap = true)),
-    "ext_graph_components / ext_label_prop [one pre-checkpoint twin " +
-      "min-label round: shuffled-hash delta push, label merge]" ->
-      ((s, dir) =>
-        operators.Graph.minLabelRoundPlan(copurchasePairs(s, dir), "u", "v")),
-    "ext_sssp_bounded [one pre-checkpoint twin relaxation: shuffled-hash " +
-      "delta push, full-outer merge]" -> ((s, dir) =>
-      operators.Graph.ssspRoundPlan(copurchaseWeightedEdges(s, dir),
-        "u", "v", "w", 0L)),
-    "ext_path_counts / ext_betweenness_sampled [one pre-checkpoint twin " +
-      "frontier-delta round: broadcast push, alias-riding sigma fold, " +
-      "shuffled-hash anti-join delta merge]" -> ((s, dir) =>
-        operators.Graph.pathCountsRoundPlan(copurchasePairs(s, dir),
-          "u", "v")),
-    "ext_ktruss / ext_edge_jaccard_topk [pre-checkpoint edge-support]" ->
-      ((s, dir) =>
-        operators.Graph.edgeSupportPlan(copurchaseEdgesRaw(s, dir), "u", "v")),
-    "ext_louvain_full [one pre-checkpoint move level: doubled orientation," +
-      " broadcast strength, integer argmax, stay-fallback left join]" ->
-      ((s, dir) =>
-        operators.Graph.louvainLevelPlan(copurchaseSupport(s, dir),
-          "u", "v", "c")),
-    "ext_hits_scores [pre-checkpoint indegree + first hub fold]" ->
-      ((s, dir) =>
-        operators.Graph.hitsRoundPlan(custPartPairs(s, dir), "c", "p")),
-    "ext_scc_pivot [one pre-checkpoint fused bidirectional round]" ->
-      ((s, dir) =>
-        operators.Graph.sccRoundPlan(itemTransitions(s, dir), "u", "v", 0L)),
-    "ext_eccentricity / ext_closeness_centrality / " +
-      "ext_neighborhood_function [one pre-checkpoint multi-source BFS " +
-      "round]" -> ((s, dir) =>
-        operators.Graph.multiBfsRoundPlan(copurchasePairs(s, dir), "u", "v",
-          nSources = 4)),
-    "ext_kcore_peel [one pre-checkpoint twin peel round: shuffled-hash " +
-      "dead-node frontier, loss fold, survivor merge]" -> ((s, dir) =>
-        operators.Graph.kcoreRoundPlan(copurchaseEdgesRaw(s, dir), "u", "v",
-          k = 4)),
-    "ext_pagerank_personalized / ext_ppr_weighted [one pre-checkpoint " +
-      "iteration: seed-masked restart, contribution fold, restore]" ->
-      ((s, dir) =>
-        operators.Graph.pprIterationPlan(copurchasePairs(s, dir), "u", "v",
-          nSeeds = 4)),
-    "ext_kmeans_round2 [one pre-checkpoint assign round: int8 coding, " +
-      "broadcast centroids, min-struct argmin]" -> ((s, dir) =>
-        operators.Similarity.kmeansRoundPlan(t(s, dir, "embeddings"), k = 8)))
 
   /** DuckDB-equivalent SQL for each oracle-checkable query above. */
   def oracleSql: Map[String, String] = Map(

@@ -245,13 +245,16 @@ object Dedup {
     * string arrays; jaccard over hash sets equals token jaccard unless two
     * distinct tokens of one doc collide in 40 bits (~1e-7 per pair) — and
     * the oracle replays the identical hash-set arithmetic. Adds `__i` and
-    * `jaccard` (≥ t) to the joined row. */
+    * `jaccard` (≥ t) to the joined row. `__i` is a one-element explode,
+    * not a Project alias: Catalyst would inline an alias into the jaccard
+    * filter and the join condition and intersect once per use. */
   private def verifiedBandPairs(l: DataFrame, r: DataFrame, repOrder: Boolean,
                                 threshold: Double): DataFrame =
     bandJoin(l, r, repOrder,
         least(col("l.__n"), col("r.__n")).cast("double") >=
           lit(threshold) * greatest(col("l.__n"), col("r.__n")).cast("double"))
-      .withColumn("__i", size(array_intersect(col("l.__harr"), col("r.__harr"))))
+      .select(col("*"), explode(array(
+        size(array_intersect(col("l.__harr"), col("r.__harr"))))).as("__i"))
       .withColumn("jaccard", col("__i").cast("double") /
         (col("l.__n") + col("r.__n") - col("__i")).cast("double"))
       .filter(col("jaccard") >= lit(threshold))
@@ -1044,8 +1047,10 @@ object Dedup {
     val bandsWithStr = bandsOfSets(sets, "__rep", seeds, rowsPerBand,
       carry = Seq("__s", "__members", "__allsigs"))
       .repartition(par, col("band"), col("band_sig"))
+    // one-element explode: an aliased `dist` would be inlined into the
+    // join condition and computed again in the Project above it
     val near = bandJoin(bandsWithStr, bandsWithStr, repOrder = true)
-      .withColumn("dist", levenshtein(col("l.__s"), col("r.__s")))
+      .select(col("*"), explode(array(levenshtein(col("l.__s"), col("r.__s")))).as("dist"))
       .filter(col("dist") <= maxDist)
     memberPairs(near, col("l.__members"), col("r.__members"), col("dist"))
       .select(least(col("__ma"), col("__mb")).as("doc_a"),
@@ -1482,22 +1487,6 @@ object Dedup {
       col("__bma").bitwiseAND(col("__bmb"))).cast("long")
     a.join(b, form.order && form.ubGate(i, col("__la"), col("__lb")))
       .select(col("__ra"), col("__rb"), i.as("__i"), col("__la"), col("__lb"))
-  }
-
-  /** UN-checkpointed body of [[exactRepPairs]] (jaccard, self form) over
-    * `docs`, for the plan audit trail only
-    * ([[graft.SparkEntry.loopBodyPlans]] / PLANS.md — the production
-    * entry points checkpoint their result, so their final plans collapse
-    * to `Scan ExistingRDD`): the dense-vocab bitmap pair stage when
-    * `bitmap` (callers pass a corpus that passes the [[bitmapMasks]]
-    * gate), else the prefix candidates + verify. Never run by
-    * Verify/Bench. */
-  def repPairsPlan(docs: DataFrame, idCol: String, textCol: String,
-                   thetaNum: Int, thetaDen: Int, bitmap: Boolean): DataFrame = {
-    val reps = jaccardReps(docs, idCol, textCol)
-    val form = new PairForm(thetaNum, thetaDen, containment = false, cross = false)
-    if (bitmap) bitmapPairs(bitmapMasks(reps).get, form)
-    else verifiedPairs(reps, jaccardOrderedPrefix(reps, thetaNum, thetaDen), form)
   }
 
   /** Multi-threshold dedup PLANNING from one pipeline run at the LOOSEST

@@ -312,7 +312,7 @@ object Graph {
 
   /** One BFS round: join the round-(i−1) frontier against the edge list,
     * fold discoveries in with the min-aggregate. Shared by both loop
-    * drivers and by the pre-checkpoint plan audit. */
+    * drivers. */
   private def bfsRound(e: DataFrame, labels: DataFrame, i: Int): DataFrame = {
     val frontier = labels.filter(col("__lvl") === i - 1)
       .select(col("__n").as("__s"))
@@ -1327,20 +1327,6 @@ object Graph {
         col("common_neighbors"))
   }
 
-  /** One pre-checkpoint HITS half-step pair (indegree a₀ then the first
-    * hub fold) for the plan audit only — the real loop reads its edge
-    * copies off localCheckpoints, which render as opaque
-    * `Scan ExistingRDD`; this shows the un-checkpointed round shape
-    * ([[hitsBipartite]] executes the same joins/aggregations). */
-  def hitsRoundPlan(edges: DataFrame, leftCol: String,
-                    rightCol: String): DataFrame = {
-    val ep = edges.select(col(leftCol).cast("long").as("__c"),
-        col(rightCol).cast("long").as("__p"))
-      .repartition(col("__p")).distinct()
-    val a = ep.groupBy(col("__p")).agg(count(lit(1)).cast("bigint").as("__as"))
-    ep.join(a, "__p").groupBy(col("__c")).agg(sum(col("__as")).as("__hs"))
-  }
-
   /** Undirected node base = the out-degree aggregate (every node appears
     * as a source; exchange-free over the __s-partitioned edge frame). */
   private def outdegBase(e: DataFrame): DataFrame =
@@ -1349,7 +1335,7 @@ object Graph {
 
   /** One undirected-PageRank round: contribution agg by target, INNER
     * restore against the base (contrib covers every node — all nodes
-    * have in-edges). Shared by the loop and the plan audit. */
+    * have in-edges). */
   private def prIteration(e: DataFrame, base: DataFrame, pr: DataFrame): DataFrame = {
     val contrib = e
       .join(pr.select(col("__n").as("__s"), col("__od"), col("__pr")), Seq("__s"))
@@ -2064,8 +2050,8 @@ object Graph {
     out
   }
 
-  /** One forward Brandes round of [[pathCountsLoop]], shared with the plan
-    * audit: the (src, node, lvl, σ) rows first discovered this round.
+  /** One forward Brandes round of [[pathCountsLoop]]: the (src, node,
+    * lvl, σ) rows first discovered this round.
     * Candidate fold: the frontier broadcasts into the __t-partitioned
     * edges (map-only push) and the (src, node) σ-sum rides the alias
     * partitioning — zero exchange for the round's dominant stream.
@@ -2319,7 +2305,7 @@ object Graph {
         col("__e.__w").cast("bigint").as("__w"))
 
   /** One FRONTIER-DELTA Bellman-Ford relaxation of [[ssspBounded]]'s
-    * twin, shared with the plan audit: only nodes whose distance
+    * twin: only nodes whose distance
     * IMPROVED last round (`delta`) relax their neighbors — an unimproved
     * node's relaxation replays the round it last improved, already folded
     * into every neighbor's min. The delta shuffles to the
@@ -3332,7 +3318,7 @@ object Graph {
     e.groupBy(col("__s")).agg(count(lit(1)).as("__d"))
       .select(col("__s").as("__n"), col("__d"))
 
-  /** One twin peel round of [[kcorePeel]], shared with the plan audit:
+  /** One twin peel round of [[kcorePeel]]:
     * newly-dead = degree rows < k (the frontier — shrinks fast);
     * loss = e ⋈ newly-dead (shuffled hash) folded by target;
     * deg' = survivors ⋈ loss (shuffled hash, both sides
@@ -3346,200 +3332,5 @@ object Graph {
       .join(loss.hint("shuffle_hash"), Seq("__n"), "left")
       .select(col("__n"),
         (col("__d") - coalesce(col("__c"), lit(0L))).as("__d"))
-  }
-
-  /** PRE-checkpoint round-1 Brandes-forward plan, for the plan audit —
-    * [[pathCountsRound]] (the twin's round: frontier broadcast into the
-    * __t-partitioned oriented frame, alias-riding (src, node) σ-sum fold,
-    * shuffled-hash anti-join delta merge against the visited keys) with
-    * the checkpoint barriers omitted so explain shows the loop body
-    * instead of a `Scan ExistingRDD`. Built for explain, not execution. */
-  def pathCountsRoundPlan(pairs: DataFrame, uCol: String,
-                          vCol: String): DataFrame = {
-    val e = orientedAdjacency(pairs, uCol, vCol, partitionByTarget = true)
-      .distinct()
-    val state = e.select(col("__t").as("__s")).distinct()
-      .orderBy(col("__s")).limit(4)
-      .select(col("__s").as("__src"), col("__s").as("__n"),
-        lit(0).as("__lvl"), lit(1L).as("__sig"))
-    pathCountsRound(e, state, state)
-      .select(col("__src"), col("__n"), col("__lvl").as("lvl"),
-        col("__sig").as("paths"))
-  }
-
-  /** PRE-checkpoint single FUSED bidirectional reach round, for the plan
-    * audit — the exact [[sccPivot]] round expressions (direction-tagged
-    * doubled edge frame, (dir, node)-keyed frontier join + min-fold
-    * serving both reaches at once) with the checkpoint barriers omitted.
-    * Built for explain, not execution. */
-  def sccRoundPlan(dedges: DataFrame, srcCol: String, dstCol: String,
-                   pivot: Long): DataFrame = {
-    val par = dedges.sparkSession.sparkContext.defaultParallelism
-    val e = dedges.select(explode(array(
-        struct(lit(0).as("__dir"), col(srcCol).cast("long").as("__s"),
-          col(dstCol).cast("long").as("__t")),
-        struct(lit(1).as("__dir"), col(dstCol).cast("long").as("__s"),
-          col(srcCol).cast("long").as("__t")))).as("__e"))
-      .select(col("__e.__dir").as("__dir"), col("__e.__s").as("__s"),
-        col("__e.__t").as("__t"))
-      .repartition(par, col("__dir"), col("__s"))
-    val labels0 = e.sparkSession.range(1)
-      .select(explode(array(lit(0), lit(1))).as("__dir"),
-        lit(pivot).as("__n"), lit(0).as("__lvl"))
-    val f = labels0.select(col("__dir"), col("__n").as("__s"))
-    val cand = e.join(f, Seq("__dir", "__s"))
-      .select(col("__dir"), col("__t").as("__n"), lit(1).as("__lvl"))
-    labels0.unionByName(cand)
-      .groupBy(col("__dir"), col("__n")).agg(min(col("__lvl")).as("__lvl"))
-  }
-
-  /** PRE-checkpoint single Louvain level body, for the plan audit — the
-    * exact [[louvainLevels]] move phase (doubled orientation, broadcast
-    * strength decoration, integer argmax, stay-fallback left join) over
-    * the un-checkpointed input; contraction and pointer-CC are
-    * node-sized and ride either the driver or the min-label loop (whose
-    * round shape [[minLabelRoundPlan]] audits). Built for explain, not
-    * execution. */
-  def louvainLevelPlan(wpairs: DataFrame, uCol: String, vCol: String,
-                       wCol: String): DataFrame =
-    louvainMovePlan(wpairs.select(col(uCol).cast("long").as("__u"),
-        col(vCol).cast("long").as("__v"), col(wCol).cast("bigint").as("__w")))
-      .select(col("__n").as("node"), col("__p").as("pointer"))
-
-  /** PRE-checkpoint single multi-source BFS round, for the plan audit —
-    * the exact [[multiSourceBfs]] round expressions (the loop behind
-    * eccentricity / closeness / the neighborhood function), with the
-    * persist/checkpoint barriers omitted. Built for explain, not
-    * execution. */
-  def multiBfsRoundPlan(pairs: DataFrame, uCol: String, vCol: String,
-                        nSources: Int): DataFrame = {
-    val e = orientedAdjacency(pairs, uCol, vCol)
-    val srcs = e.select(col("__s")).distinct()
-      .orderBy(col("__s")).limit(nSources)
-    val labels0 = srcs.select(col("__s").as("__src"), col("__s").as("__n"),
-      lit(0).as("__lvl"))
-    val frontier = labels0.filter(col("__lvl") === 0)
-      .select(col("__src"), col("__n").as("__s"))
-    val next = e.join(frontier, Seq("__s"))
-      .select(col("__src"), col("__t").as("__n"), lit(1).as("__lvl"))
-    labels0.unionByName(next)
-      .groupBy(col("__src"), col("__n")).agg(min(col("__lvl")).as("__lvl"))
-  }
-
-  /** PRE-checkpoint single k-core peel round, for the plan audit —
-    * [[kcoreRound]] (the twin's round: shuffled dead-node frontier, loss
-    * fold, survivor merge) over the un-checkpointed source-partitioned
-    * edge frame. Built for explain, not execution. */
-  def kcoreRoundPlan(edges: DataFrame, uCol: String, vCol: String,
-                     k: Int): DataFrame = {
-    val e = orientedAdjacency(edges, uCol, vCol)
-    kcoreRound(e, kcoreDegrees(e), k)
-  }
-
-  /** PRE-checkpoint single personalized-PageRank iteration, for the plan
-    * audit — the exact [[personalizedPagerank]] round expressions
-    * (seed-masked restart, contribution fold, inner restore), shared in
-    * shape by [[weightedPersonalizedPagerank]] (whose strength divisor
-    * rides the edge frame as a window sum). Built for explain, not
-    * execution. */
-  def pprIterationPlan(pairs: DataFrame, uCol: String, vCol: String,
-                       nSeeds: Int): DataFrame = {
-    val e = orientedAdjacency(pairs, uCol, vCol).distinct()
-    val seeds = outdegBase(e).select(col("__n"))
-      .orderBy(col("__n")).limit(nSeeds)
-      .withColumn("__seed", lit(1))
-    val base = outdegBase(e)
-      .join(broadcast(seeds), Seq("__n"), "left")
-      .select(col("__n"), col("__od"),
-        coalesce(col("__seed"), lit(0)).as("__seed"))
-    val pr = base.withColumn("__pr",
-      when(col("__seed") === 1, lit(1000000L)).otherwise(lit(0L)))
-    val contrib = e
-      .join(pr.select(col("__n").as("__s"), col("__od"), col("__pr")),
-        Seq("__s"))
-      .groupBy(col("__t"))
-      .agg(sum(expr("__pr div __od")).as("__c"))
-    base.join(contrib.withColumnRenamed("__t", "__n"), Seq("__n"))
-      .select(col("__n").as("node"),
-        (when(col("__seed") === 1, lit(150000L)).otherwise(lit(0L))
-          + expr("(17 * __c) div 20")).as("ppr"))
-  }
-
-  /** PRE-checkpoint single-iteration PageRank plan, for the plan audit
-    * (PLANS.md): the exact [[prIteration]]/[[outdegBase]] expressions one
-    * [[pagerankUndirected]] round runs, with the checkpoint barriers
-    * omitted so explain shows the loop body's join/agg shapes instead of
-    * a `Scan ExistingRDD`. Built for explain, not execution. */
-  def pagerankIterationPlan(pairs: DataFrame, uCol: String,
-                            vCol: String): DataFrame = {
-    val e = orientedAdjacency(pairs, uCol, vCol).distinct()
-    val base = outdegBase(e)
-    prIteration(e, base, base.withColumn("__pr", lit(1000000L)))
-      .select(col("__n").as("node"), col("__pr").as("pagerank"))
-  }
-
-  /** PRE-checkpoint triangle-count plan, for the plan audit — the exact
-    * [[triangleBody]] expressions (orientation broadcasts, adjacency
-    * fold, SortedLongOverlap close) with the edge checkpoint omitted so
-    * explain shows the edge-iterator's shape instead of a
-    * `Scan ExistingRDD`. Built for explain, not execution. */
-  def triangleCountPlan(edges: DataFrame, uCol: String, vCol: String): DataFrame =
-    triangleBody(edges.select(col(uCol).as("u"), col(vCol).as("v")),
-      bcast = true)
-
-  /** PRE-checkpoint clustering-coefficient plan — [[clusteringBody]]
-    * un-checkpointed, for the plan audit. */
-  def clusteringPlan(edges: DataFrame, uCol: String, vCol: String): DataFrame =
-    clusteringBody(edges.select(col(uCol).as("u"), col(vCol).as("v")),
-      bcast = true)
-
-  /** PRE-checkpoint round-1 BFS plan, for the plan audit — the exact
-    * [[bfsRound]] expressions with the edge/label checkpoints omitted.
-    * Built for explain, not execution. */
-  def bfsRoundPlan(pairs: DataFrame, uCol: String, vCol: String,
-                   source: Long): DataFrame = {
-    val e = orientedAdjacency(pairs, uCol, vCol)
-    val labels0 = e.sparkSession.range(1)
-      .select(lit(source).as("__n"), lit(0).as("__lvl"))
-    bfsRound(e, labels0, 1)
-      .select(col("__n").as("node"), col("__lvl").as("lvl"))
-  }
-
-  /** PRE-checkpoint single min-label round, for the plan audit — the
-    * [[minLabelDeltaRound]] the [[labelPropagate]] and
-    * [[connectedComponentsMinLabel]] twins iterate, un-checkpointed
-    * (round 1, where the delta is the full seed table — later rounds
-    * shrink the delta side of the same shape). */
-  def minLabelRoundPlan(pairs: DataFrame, uCol: String, vCol: String): DataFrame = {
-    val e = orientedAdjacency(pairs, uCol, vCol)
-    val lab0 = e.select(col("__s").as("__n")).distinct()
-      .withColumn("__l", col("__n"))
-    minLabelDeltaRound(e, lab0, lab0)
-      .select(col("__n").as("node"), col("__l").as("label"),
-        col("__chg").as("changed"))
-  }
-
-  /** PRE-checkpoint single Bellman-Ford relaxation, for the plan audit —
-    * [[ssspRound]], the frontier-delta merge [[ssspBounded]]'s twin
-    * iterates, un-checkpointed. */
-  def ssspRoundPlan(wedges: DataFrame, uCol: String, vCol: String,
-                    wCol: String, source: Long): DataFrame = {
-    val par = wedges.sparkSession.sparkContext.defaultParallelism
-    val e = ssspEdges(wedges, uCol, vCol, wCol).repartition(par, col("__s"))
-    val dist0 = e.sparkSession.range(1)
-      .select(lit(source).as("__n"), lit(0L).as("__d"))
-    ssspRound(e, dist0, dist0)
-      .select(col("__n").as("node"), col("__d2").as("dist"),
-        col("__chg").as("changed"))
-  }
-
-  /** PRE-checkpoint edge-support plan ([[edgeSupportBody]]'s
-    * triangle-corner unpivot), for the plan audit — runs the same
-    * [[resolveBroadcast]] auto-selection as [[edgeSupport]] (stats-based
-    * here, nothing is materialized yet), so PlanShapeSpec can pin the
-    * size-driven broadcast/shuffle flip on the static plan. */
-  def edgeSupportPlan(edges: DataFrame, uCol: String, vCol: String): DataFrame = {
-    val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
-    edgeSupportBody(e, resolveBroadcast(e))
   }
 }

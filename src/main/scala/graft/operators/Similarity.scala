@@ -658,34 +658,6 @@ object Similarity {
     result
   }
 
-  /** PRE-checkpoint single k-means assign round, for the plan audit —
-    * the exact [[kmeansRound2Int8]] assignment expressions (int8 coding,
-    * broadcast centroid cross join, per-vector min-struct argmin) with
-    * the code-frame checkpoint omitted so explain shows the assign
-    * shape instead of a `Scan ExistingRDD`. Built for explain, not
-    * execution (the two driver collects — dim stats and seed ids — are
-    * index-sized). */
-  def kmeansRoundPlan(vecs: DataFrame, k: Int,
-                      idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
-    val (mins, maxs) = dimStats(vecs, vecCol)
-    val codes = int8CodesCol(mins, maxs) _
-    val seedIds = vecs.select(col(idCol)).orderBy(col(idCol)).limit(k)
-      .collect().map(_.get(0))
-    val coded = Query.ensureParallelism(vecs)
-      .select(col(idCol), codes(col(vecCol)).as("__codes"))
-    val cents0 = coded.filter(col(idCol).isin(seedIds: _*))
-      .select(col(idCol).as("__cid"), col("__codes").as("__cc"))
-    coded.crossJoin(broadcast(cents0))
-      .select(col(idCol), struct(
-        int8Sq(col("__codes"), col("__cc")).as("dist"),
-        col("__cid").as("cluster")).as("__m"))
-      .groupBy(col(idCol))
-      .agg(min(col("__m")).as("__m"))
-      .select(col(idCol), col("__m.cluster").as("cluster"),
-        col("__m.dist").as("dist"))
-  }
-
   /** RECIPROCAL-RANK FUSION of two rankers over the same corpus — the
     * float cosine ranking ([[bruteForceTopK]]) and the int8 code-space
     * L2 ranking — the standard way hybrid retrieval merges incomparable

@@ -1,17 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /**
- * Per-query formatted-plan snapshots for the optimization-round audit
- * trail (`plans/r18/<query>_{before,after}.txt`): the same rendering as
- * [[Explain]] but for a named subset of queries, one file per query.
+ * Per-query plan snapshots for before/after audits (`tools/plandiff.py`):
+ * the same audit section as [[Explain]] — final plan and executed plans,
+ * per regime — for a named subset of queries, one file per query.
  *
  * Usage:
  *   sbt "runMain graft.plans.ExplainSome <suffix> <outDir> <key> [key ...]"
- * writes `<outDir>/<key>_<suffix>.txt` for each requested key (declared
- * queries and loop-body plans both resolve).
+ * writes `<outDir>/<key>_<suffix>.txt` for each requested key.
  */
 object ExplainSome {
   def main(args: Array[String]): Unit = {
@@ -21,34 +19,14 @@ object ExplainSome {
     val keys = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Explain.session(sfDir)
     keys.foreach { k =>
-      val fn = graft.SparkEntry.queries.get(k)
-        .orElse(graft.SparkEntry.loopBodyPlans.get(k))
-      fn match {
+      graft.SparkEntry.queries.get(k) match {
         case None => println(s"[explain-some] UNKNOWN key: $k")
-        case Some(f) =>
-          val body =
-            try {
-              val plan = f(spark, sfDir).queryExecution.explainString(
-                org.apache.spark.sql.execution.FormattedMode)
-              plan.linesIterator.map { l =>
-                if (l.length > 2000)
-                  l.take(2000) + s" …[truncated ${l.length - 2000} chars]"
-                else l
-              }.mkString("\n")
-            } catch { case e: Throwable => s"FAILED: ${e.getMessage}" }
-          val safe = k.replaceAll("[^A-Za-z0-9_.-]", "_")
-          Files.writeString(outDir.resolve(s"${safe}_$suffix.txt"),
-            s"# $k — explain(formatted) @ $sfDir\n$body\n")
-          println(s"[explain-some] wrote ${safe}_$suffix.txt")
+        case Some(q) =>
+          Files.writeString(outDir.resolve(s"${k}_$suffix.txt"),
+            s"# $k — explain(formatted) @ $sfDir\n${Explain.audit(spark, sfDir, q)}")
+          println(s"[explain-some] wrote ${k}_$suffix.txt")
       }
     }
     spark.stop()

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.sql.{Connection, DriverManager}
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.types._
 import graft.Tables.TableMeta
@@ -19,10 +19,11 @@ import graft.Tables.TableMeta
  *    a single-partition read, exactly as slow as taps documents
  *    (`README.rdoc:36`); we surface it honestly as `numPartitions=1`.
  *
- * The write side carries taps' bulk-import semantics (S5): multi-row
- * batches (`batchsize` ≙ chunksize, tunable by the ChunkSizer controller),
- * DDL replay (S6/S7) via `createTableColumnTypes`/`createTableOptions`,
- * and index/sequence pass-through (S8/S9) as post-write statements.
+ * The write side carries taps' bulk-import semantics (S5): batched
+ * INSERTs per partition ([[writeAdaptive]]; batch size ≙ chunksize,
+ * retuned by the ChunkSizer controller), DDL replay (S6/S7) via
+ * [[createTableDdl]], and index/sequence pass-through (S8/S9) as
+ * post-write statements.
  *
  * No live database ships in this container, so the wrappers are thin and
  * the OPTION-BUILDING logic — what to partition on, how many partitions,
@@ -96,19 +97,6 @@ object Jdbc {
 
   def read(spark: SparkSession, plan: ReadPlan): DataFrame =
     spark.read.format("jdbc").options(plan.options).load()
-
-  /** Bulk-import options (S5): `batchsize` is taps' chunksize — start at
-    * the reference default (1000) and let a ChunkSizer retune it. */
-  def writeOptions(url: String, table: String, batchSize: Int = graft.streaming.ChunkSizer.Default,
-                   isolation: String = "READ_COMMITTED"): Map[String, String] =
-    Map(
-      "url" -> url,
-      "dbtable" -> table,
-      "batchsize" -> batchSize.toString,
-      "isolationLevel" -> isolation)
-
-  def write(df: DataFrame, opts: Map[String, String], mode: SaveMode = SaveMode.Append): Unit =
-    df.write.format("jdbc").options(opts).mode(mode).save()
 
   /** The PRODUCTION bulk-import sink: distributed writes where every
     * partition drives its own [[adaptiveWriteLoop]] — each executor task

@@ -4,7 +4,8 @@
  * private[sql] expression APIs). Used by the bench instrument to drain the
  * async listener bus before snapshotting per-query task metrics — without
  * it, a query's tail stage-completed events get attributed to the next
- * query's measurement window.
+ * query's measurement window — and by `graft.plans.Explain.capture`, for
+ * the same reason, before reading a query's executed plans.
  */
 package org.apache.spark.graft
 

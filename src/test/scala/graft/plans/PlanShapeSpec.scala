@@ -295,31 +295,45 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     // below is the graft-side decision under test
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
+      // edgeSupport checkpoints its body, so the plans it executed are
+      // where the tier decision shows
+      def run(): (Set[Seq[Any]], String) = {
+        val (df, ran) = Explain.capture(spark)(
+          graft.operators.Graph.edgeSupport(edges, "u", "v"))
+        (df.collect().map(_.toSeq).toSet, ran.map(Explain.formatted).mkString("\n"))
+      }
       // default budget (256 MB): the fixture frame fits -> broadcast plan
-      // (edgeSupportPlan = the pre-checkpoint body, so the plan is visible)
-      val bc = graft.operators.Graph.edgeSupportPlan(edges, "u", "v")
-        .queryExecution.executedPlan.toString
+      val (a, bc) = run()
       assert(bc.contains("BroadcastHashJoin"),
         s"within budget the adjacency/degree lookups must broadcast:\n${bc.take(1500)}")
       // a 1-byte budget simulates the frame outgrowing the driver: the
       // SAME call (no flag) must flip to the shuffle twin
       spark.conf.set("graft.graph.broadcastLimitBytes", "1")
-      val sh = graft.operators.Graph.edgeSupportPlan(edges, "u", "v")
-        .queryExecution.executedPlan.toString
+      val (b, sh) = run()
       assert(!sh.contains("BroadcastHashJoin"),
         s"past budget the auto path must not broadcast:\n${sh.take(1500)}")
       // and both shapes agree on the answer
-      spark.conf.unset("graft.graph.broadcastLimitBytes")
-      val a = graft.operators.Graph.edgeSupport(edges, "u", "v")
-        .collect().map(_.toSeq).toSet
-      spark.conf.set("graft.graph.broadcastLimitBytes", "1")
-      val b = graft.operators.Graph.edgeSupport(edges, "u", "v")
-        .collect().map(_.toSeq).toSet
       assert(a == b, "auto-broadcast and auto-shuffle twins must agree")
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("graft.graph.broadcastLimitBytes")
     }
+  }
+
+  test("the plan capture records a twin's loop rounds and no loop plan " +
+      "for the driver tier") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L), (5L, 6L), (7L, 7L))
+      .toDF("u", "v")
+    def plans(): Seq[String] = Explain.capture(spark)(
+      graft.operators.Graph.connectedComponentsMinLabel(edges, "u", "v")
+    )._2.map(_.toString)
+    val twin = withTwins(plans())
+    assert(twin.exists(_.contains("Exchange hashpartitioning")),
+      s"the twin's rounds must show their shuffles:\n${twin.mkString("\n").take(3000)}")
+    val tier = plans()
+    assert(!tier.exists(_.contains("Exchange hashpartitioning")),
+      s"the driver tier runs no loop:\n${tier.mkString("\n").take(3000)}")
   }
 
   test("Q6: date range + residual predicates reach the Parquet scan") {

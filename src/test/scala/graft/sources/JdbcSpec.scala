@@ -31,17 +31,9 @@ class JdbcSpec extends AnyFunSuite {
     assert(!Jdbc.readPlan(url, TableMeta("orders", Seq("o_orderkey")), None, 8).parallel)
   }
 
-  test("write options carry taps' bulk-import batch semantics (S5)") {
-    val o = Jdbc.writeOptions(url, "orders", batchSize = 2000)
-    assert(o("batchsize") == "2000" && o("dbtable") == "orders")
-  }
-
   test("--chunksize parity: the write default IS ChunkSizer.Default, an " +
       "override seeds both the JDBC batchsize and the controller's first " +
       "batch (lib/taps/cli.rb:135)") {
-    // default flows from the single constant the CLI flag overrides
-    assert(Jdbc.writeOptions(url, "orders")("batchsize") ==
-      graft.streaming.ChunkSizer.Default.toString)
     // an overridden initial chunk size is what the AIMD loop sends FIRST
     var t = 0L
     val sizes = scala.collection.mutable.ArrayBuffer[Int]()
