@@ -620,7 +620,7 @@ object SparkEntry {
     // shuffle-join variant.
     "ext_graph_triangles" -> ((s, dir) =>
       operators.Graph.triangleCountFromBaskets(lineitemBaskets(s, dir),
-        "l_orderkey", "l_partkey", copurchaseEdgesRaw(s, dir))),
+        "l_orderkey", "l_partkey")),
     // single-consumer: one LINEAR job off the RAW pair stream
     // (Graph.degreeHistogram) — in-row both-orientation explode, ONE
     // node-keyed exchange, then the (s,t) distinct / degree count /
@@ -657,12 +657,12 @@ object SparkEntry {
     // replays sqlClusteringTail
     "ext_clustering_coeff" -> ((s, dir) =>
       operators.Graph.clusteringFromBaskets(lineitemBaskets(s, dir),
-        "l_orderkey", "l_partkey", copurchaseEdgesRaw(s, dir))),
+        "l_orderkey", "l_partkey")),
     // neighbor-degree (assortativity) profile, integer-exact — the
     // single-consumer fast path (Graph.neighborDegreeFromPairs): fold
     // the distinct adjacency once off the RAW pair stream (dedup inside
     // the node-keyed exchange), decorate ends with ONE broadcast degree
-    // lookup; spec-pinned ≡ neighborDegreeProfile. Oracle replays
+    // lookup; spec-pinned ≡ brute force. Oracle replays
     // sqlNeighborDegreeTail.
     "ext_neighbor_degree" -> ((s, dir) =>
       operators.Graph.neighborDegreeFromPairs(
@@ -677,7 +677,7 @@ object SparkEntry {
     // degree assortativity (Newman's r): integer moments over the
     // both-orientation end-degree stream, one fixed double expression —
     // bit-identical cross-engine; single-consumer adjacency-fold path
-    // (Graph.assortativityFromPairs, spec-pinned ≡ assortativity)
+    // (Graph.assortativityFromPairs, spec-pinned ≡ brute-force moments)
     "ext_assortativity" -> ((s, dir) =>
       operators.Graph.assortativityFromPairs(copurchasePairs(s, dir), "u", "v")),
     // 3 rounds of min-label propagation (bounded-pass CC / community
@@ -1021,19 +1021,18 @@ object SparkEntry {
     // rounds with the portable wedge-pair-count formulation)
     "ext_ktruss" -> ((s, dir) =>
       operators.Graph.trussPeelFromBaskets(lineitemBaskets(s, dir),
-        "l_orderkey", "l_partkey", k = 4, rounds = 1,
-        copurchaseEdgesRaw(s, dir))),
+        "l_orderkey", "l_partkey", k = 4, rounds = 1)),
     // top-20 edges by neighborhood Jaccard (common-neighbors link
     // strength): |N∩| from the triangle-corner stream, one IEEE division
     // over exact integers, (u, v) tie-break — deterministic top-k cut
     "ext_edge_jaccard_topk" -> ((s, dir) =>
       operators.Graph.edgeJaccardTopKFromBaskets(lineitemBaskets(s, dir),
-        "l_orderkey", "l_partkey", k = 20, copurchaseEdgesRaw(s, dir))),
+        "l_orderkey", "l_partkey", k = 20)),
     // global clustering summary: wedges (Σ d(d−1)/2, integer), triangles
     // (edge-iterator), transitivity = 3·△/wedges — one row, one division
     "ext_transitivity" -> ((s, dir) =>
       operators.Graph.transitivityFromBaskets(lineitemBaskets(s, dir),
-        "l_orderkey", "l_partkey", copurchaseEdgesRaw(s, dir))),
+        "l_orderkey", "l_partkey")),
     // PERSONALIZED PageRank (random walk with restart to the 4 smallest
     // node ids — the recommendation primitive): integer fixed-point,
     // seed-only teleport mass, nodes unreachable from seeds hold 0;
@@ -7066,14 +7065,13 @@ object SparkEntry {
     * or that dedup in-pipeline anyway (pagerank's adjacency build). */
   /** Raw (l_orderkey, l_partkey) basket stream — the FromBaskets driver
     * tiers' input (map-only scan; dedup / pair expansion happen past the
-    * gate on the driver, or in the distEdges distributed twin). */
+    * gate on the driver, or in [[operators.Graph.basketEdges]], the
+    * distributed twin's input). */
   private def lineitemBaskets(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
 
   private def copurchasePairs(s: SparkSession, dir: String): DataFrame =
-    operators.Graph.itemPairs(
-        t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-        "l_orderkey", "l_partkey")
+    operators.Graph.itemPairs(lineitemBaskets(s, dir), "l_orderkey", "l_partkey")
       .select(col("u"), col("v"))
 
   /** DIRECTED item-transition edges: within each order, the parts in
@@ -7103,12 +7101,8 @@ object SparkEntry {
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
 
   private def copurchaseEdgesRaw(s: SparkSession, dir: String): DataFrame =
-    copurchasePairs(s, dir)
-      // u-keyed pin: pins the byte-light pair stream's parallelism
-      // (unpinned, AQE coalesces it to 1-2 tasks) AND makes the distinct
-      // exchange-free — HashPartitioning(u) already clusters (u, v)
-      .repartition(s.sparkContext.defaultParallelism, col("u"))
-      .distinct()
+    operators.Graph.basketEdges(lineitemBaskets(s, dir), "l_orderkey",
+      "l_partkey")
 
   /** Co-purchase SUPPORT table (u, v, c): c = number of orders sharing
     * the pair — one exchange-free count over the per-order-unique pair
@@ -7230,7 +7224,7 @@ object SparkEntry {
     * deterministic cross-engine twin at any scale (the streaming
     * approximation of full peeling — convergence is a liveness check a
     * production loop adds exactly like [[operators.Graph.bfsLevels]]'
-    * earlyExit); each round is one aggregate + two semi-joins, all
+    * dead-frontier exit); each round is one aggregate + two semi-joins, all
     * node-keyed. */
   /** Every round CTE is MATERIALIZED (DuckDB keyword; this string is
     * oracle-side only — the engine runs [[operators.Graph.kcorePeel]]):
@@ -7273,7 +7267,7 @@ object SparkEntry {
 
   /** Degree assortativity (Newman's r) — integer moments over the
     * both-orientation end stream, one fixed double expression
-    * (the regression-moments recipe; engine: Graph.assortativity). */
+    * (the regression-moments recipe; engine: Graph.assortativityFromPairs). */
   private val sqlAssortativity: String =
     "WITH " + sqlEdgesSelfJoinCte + sqlDegCte +
       """,

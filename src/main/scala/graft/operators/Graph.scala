@@ -25,10 +25,16 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, 
  * integer. (Float PageRank sums doubles in partition order:
  * nondeterministic everywhere.)
  *
- * DRIVER TIER vs TWIN. Most iterative operators here have exactly two
- * paths. The driver tier collects the edge list once ([[collectEdges]])
- * into primitive arrays and computes on the driver; the twin is the
- * distributed plan that runs at any scale. The contract both keep:
+ * DRIVER TIER vs TWIN. Every analytic here has at most two paths. The
+ * driver tier collects the edge list once ([[collectEdges]]) into
+ * primitive arrays and computes on the driver; the twin is the
+ * distributed plan that runs at any scale, and each operator builds its
+ * own twin input (the FromBaskets family via [[basketEdges]]). A tier
+ * stays only while it beats its twin by 1.3× on its own query, so some
+ * analytics are twin-only ([[hitsBipartite]], the edge-set
+ * [[trussPeel]]). Every driver-tier collect goes through
+ * [[collectRows]], a SQL execution the plan audit records. The
+ * contract both paths keep:
  *  - the gate: the tier runs only when the id columns are BIGINT and
  *    [[resolveBroadcast]] passes (the edge frame, times a per-operator
  *    state factor, fits `graft.graph.broadcastLimitBytes`; 0 pins the
@@ -84,9 +90,8 @@ object Graph {
     if (df.schema(uCol).dataType != LongType ||
         df.schema(vCol).dataType != LongType ||
         !resolveBroadcast(df, factor)) return None
-    val rows = df.filter(nonNull(Seq(uCol, vCol) ++ wCol: _*))
-      .select(Seq(col(uCol), col(vCol)) ++ wCol.map(col(_).cast("bigint")): _*)
-      .queryExecution.executedPlan.executeCollect()
+    val rows = collectRows(df.filter(nonNull(Seq(uCol, vCol) ++ wCol: _*))
+      .select(Seq(col(uCol), col(vCol)) ++ wCol.map(col(_).cast("bigint")): _*))
     def column(i: Int): Array[Long] = {
       val a = new Array[Long](rows.length)
       var r = 0
@@ -95,6 +100,16 @@ object Graph {
     }
     Some(new Edges(column(0), column(1),
       if (wCol.isDefined) column(2) else Array.emptyLongArray))
+  }
+
+  /** The one driver-tier collect: the deserialized InternalRows of `df`,
+    * run as a SQL execution so the plan audit's listener records it like
+    * any other action (`executeCollect` alone posts no execution event). */
+  private def collectRows(df: DataFrame)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+      qe, Some("collect"))(qe.executedPlan.executeCollect())
   }
 
   /** `array_sort(collect_set(c))` with the primitive-long native fold
@@ -237,14 +252,17 @@ object Graph {
     * place: the per-round min-fold is multiplicity-invariant, so the
     * distinct every other graph consumer pays would be a wasted
     * full-stream exchange here. Empty edge set → empty result (no NPE
-    * on the null min). */
+    * on the null min). The twin runs [[bfsLoop]] with AQE off: the
+    * rounds are fixed-shape node-keyed exchanges where adaptivity has
+    * nothing to decide, and each would become its own job barrier
+    * (measured at sf0.1, `local[4]`, `maxDepth` 6: 18 jobs AQE off vs
+    * 26 on). */
   def bfsLevelsUndirected(pairs: DataFrame, uCol: String, vCol: String,
-                          maxDepth: Int, earlyExit: Boolean = false): DataFrame =
+                          maxDepth: Int): DataFrame =
     collectEdges(pairs, uCol, vCol) match {
       case Some(g) =>
         // one CSR walk from the minimum id (index 0); a dead frontier
-        // makes the remaining rounds no-ops, so the fixed and early-exit
-        // variants agree
+        // makes the remaining rounds no-ops
         val rows =
           if (g.m == 0) Nil
           else {
@@ -263,67 +281,13 @@ object Graph {
           Dedup.freeCheckpoints(e)
           e.sparkSession.range(0)
             .select(col("id").as("node"), col("id").cast("int").as("lvl"))
-        } else if (earlyExit) bfsLoop(e, srcRow.get(0), maxDepth)
-        else bfsLoopFixed(e, srcRow.get(0), maxDepth)
+        } else withoutAqe(e.sparkSession)(bfsLoop(e, srcRow.get(0), maxDepth))
     }
-
-  /** [[bfsLoop]] without the per-round liveness barrier, for TIGHT depth
-    * bounds (the oracle-twin queries run a depth-bounded recursion on
-    * both engines): every round's label table is `persist`-marked instead
-    * of checkpoint-materialized, so the whole loop is ONE action — each
-    * cached layer computes once and is read twice (frontier filter +
-    * union), and no driver round-trip separates the rounds. A dead
-    * frontier makes the remaining rounds no-ops (the min-fold is
-    * idempotent), so semantics match [[bfsLoop]] exactly; an
-    * unknown-diameter graph at scale wants `earlyExit = true` instead —
-    * there the count-per-round buys skipped rounds, not wasted ones. */
-  private def bfsLoopFixed(e: DataFrame, source: Any, maxDepth: Int): DataFrame = {
-    require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
-    // AQE OFF for the whole loop (restored in finally — and it must wrap
-    // the persist() calls too: CacheManager compiles each cached layer's
-    // physical plan at persist time, so a layer persisted under AQE
-    // replays as its own multi-job adaptive execution later). The loop
-    // body is a fixed-shape chain of tiny node-keyed exchanges — AQE
-    // contributes nothing (no skew, no coalesce win at these sizes) and
-    // turns every exchange into its own job barrier (measured: 33 jobs /
-    // 146 tasks adaptive vs a straight-line job without). Global AQE
-    // stays on — the r8 lesson was about the whole suite, not a
-    // fixed-iteration loop.
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try withoutAqe(e.sparkSession) {
-      var labels = e.sparkSession.range(1)
-        .select(lit(source).as("__n"), lit(0).as("__lvl"))
-      var i = 1
-      while (i <= maxDepth) {
-        labels = bfsRound(e, labels, i).persist()
-        cached += labels
-        i += 1
-      }
-      labels.select(col("__n").as("node"), col("__lvl").as("lvl"))
-        .localCheckpoint()
-    } finally {
-      // cleanup lives in the finally so a throwing loop body can't leak
-      // cached layers or checkpoint blocks until the ContextCleaner
-      // happens by (unpersisting a never-materialized frame is a no-op)
-      cached.foreach(_.unpersist(blocking = false))
-      Dedup.freeCheckpoints(e)
-    }
-  }
-
-  /** One BFS round: join the round-(i−1) frontier against the edge list,
-    * fold discoveries in with the min-aggregate. Shared by both loop
-    * drivers. */
-  private def bfsRound(e: DataFrame, labels: DataFrame, i: Int): DataFrame = {
-    val frontier = labels.filter(col("__lvl") === i - 1)
-      .select(col("__n").as("__s"))
-    val next = e.join(frontier, Seq("__s"))
-      .select(col("__t").as("__n"), lit(i).as("__lvl"))
-    labels.unionByName(next)
-      .groupBy(col("__n")).agg(min(col("__lvl")).as("__lvl"))
-  }
 
   /** Shared level-synchronous loop over a CHECKPOINTED (__s, __t) edge
-    * frame pre-partitioned on __s. ONE barrier per round: the label table
+    * frame pre-partitioned on __s. Each round joins the round-(i−1)
+    * frontier against the edge list and folds discoveries in with the
+    * min-aggregate. ONE barrier per round: the label table
     * is lazily checkpoint-marked and the liveness `count()` is the action
     * that materializes it — the pre-r11 eager-checkpoint-then-count shape
     * paid two jobs per level for the same blocks. Frees `e` and every
@@ -341,7 +305,13 @@ object Graph {
     var i = 1
     var frontierAlive = true
     while (i <= maxDepth && frontierAlive) {
-      labels = bfsRound(e, labels, i).localCheckpoint(eager = false)
+      val frontier = labels.filter(col("__lvl") === i - 1)
+        .select(col("__n").as("__s"))
+      val next = e.join(frontier, Seq("__s"))
+        .select(col("__t").as("__n"), lit(i).as("__lvl"))
+      labels = labels.unionByName(next)
+        .groupBy(col("__n")).agg(min(col("__lvl")).as("__lvl"))
+        .localCheckpoint(eager = false)
       spent += labels
       val now = labels.count()
       frontierAlive = now > known
@@ -492,8 +462,9 @@ object Graph {
         // AQE OFF for the iteration chain (restored in finally): fixed-shape
         // node-keyed exchanges over a checkpointed co-partitioned edge frame
         // — adaptivity has nothing to decide and would turn each of the
-        // chain's exchanges into its own job barrier (the bfsLoopFixed
-        // measurement). The loop compiles into ONE straight-line job.
+        // chain's exchanges into its own job barrier (measured: 33 jobs /
+        // 146 tasks adaptive vs a straight-line job without). The loop
+        // compiles into ONE straight-line job.
         try withoutAqe(e.sparkSession) {
           val base = outdegBase(e)
           var pr = base.withColumn("__pr", lit(1000000L))
@@ -591,7 +562,12 @@ object Graph {
     * because the score frame arrives partitioned by the PREVIOUS
     * aggregation's key — which is the join key. AQE off inside the
     * fixed-shape chain, one action, cleanup in finally
-    * ([[pagerankUndirected]] discipline). */
+    * ([[pagerankUndirected]] discipline).
+    *
+    * No driver tier: the distributed form is the only path. A driver
+    * fold over the collected edges measured only 1.18× faster at sf0.1
+    * (`local[4]`) and ran the same 6 jobs — the cost is the input join,
+    * not the rounds. */
   def hitsBipartite(edges: DataFrame, leftCol: String, rightCol: String,
                     iters: Int, topK: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
@@ -607,62 +583,28 @@ object Graph {
     // the single consumer re-exchanges the checkpointed blocks in-plan
     // instead of paying a second materialization barrier.
     val ep = raw.repartition(col("__p")).distinct().ckpt()
-    collectEdges(ep, "__c", "__p") match {
-      case Some(g) =>
-        // the exact integer half-steps as primitive folds over the DISTINCT
-        // pairs; the two modes never mix, so each side has its own index
-        Dedup.freeCheckpoints(ep)
-        val cs = denseIds(g.u)
-        val ps = denseIds(g.v)
-        val hu = indexOf(cs, g.u)
-        val hv = indexOf(ps, g.v)
-        // iteration 1 with h0 ≡ 1 is the indegree count
-        var a = new Array[Long](ps.length)
-        hv.foreach(p => a(p) += 1L)
-        var it0 = 2
-        while (it0 <= iters) {
-          val h = new Array[Long](cs.length)
-          var i = 0
-          while (i < g.m) { h(hu(i)) += a(hv(i)); i += 1 }
-          a = new Array[Long](ps.length)
-          i = 0
-          while (i < g.m) { a(hv(i)) += h(hu(i)); i += 1 }
-          it0 += 1
-        }
-        val top = ps.indices.sortBy(i => (-a(i), ps(i))).take(topK)
-        localDf(edges.sparkSession, StructType(Seq(
-            StructField("part", LongType),
-            StructField("authority", LongType, nullable = false))),
-          top.map(i => Row(ps(i), a(i))))
-      case None =>
-        val ecPlan = ep.repartition(col("__c"))
-        // the __c-keyed copy serves the a-join of every round from round 2
-        // on (iters − 1 uses), so its materialization BARRIER only pays for
-        // itself at ≥ 2 uses — at iters = 2 the single consumer re-exchanges
-        // the checkpointed ep blocks inside its own job instead (same
-        // exchange volume, one less job barrier; measured 9 → 7 jobs)
-        val ec = if (iters >= 3) ecPlan.ckpt() else ecPlan
-        try withoutAqe(ec.sparkSession) {
-          // iteration 1 with h0 ≡ 1 is the indegree count — exchange-free
-          // over the __p-partitioned copy, no join, no h0 frame at all.
-          // The hub half-step is built only where a LATER authority step
-          // consumes it (rounds 2..iters) — the returned frame derives from
-          // `a` alone, so a trailing h would be dead plan construction.
-          // Score frames past the driver tier's range are node-dimension-
-          // sized too, so each half-step joins them co-partitioned against
-          // the edge copy keyed on the join key.
-          var a = ep.groupBy(col("__p")).agg(count(lit(1)).cast("bigint").as("__as"))
-          (2 to iters).foreach { _ =>
-            val h = ep.join(a, "__p").groupBy(col("__c"))
-              .agg(sum(col("__as")).as("__hs"))
-            a = ec.join(h, "__c").groupBy(col("__p"))
-              .agg(sum(col("__hs")).as("__as"))
-          }
-          a.orderBy(col("__as").desc, col("__p").asc).limit(topK)
-            .select(col("__p").as("part"), col("__as").as("authority"))
-            .ckpt()
-        } finally Dedup.freeCheckpoints(ec, ep)
-    }
+    // (at iters = 2 the unmaterialized copy measured 9 → 7 jobs)
+    val ecPlan = ep.repartition(col("__c"))
+    val ec = if (iters >= 3) ecPlan.ckpt() else ecPlan
+    try withoutAqe(ec.sparkSession) {
+      // iteration 1 with h0 ≡ 1 is the indegree count — exchange-free
+      // over the __p-partitioned copy, no join, no h0 frame at all.
+      // The hub half-step is built only where a LATER authority step
+      // consumes it (rounds 2..iters) — the returned frame derives from
+      // `a` alone, so a trailing h would be dead plan construction.
+      // Score frames are node-dimension-sized, so each half-step joins
+      // them co-partitioned against the edge copy keyed on the join key.
+      var a = ep.groupBy(col("__p")).agg(count(lit(1)).cast("bigint").as("__as"))
+      (2 to iters).foreach { _ =>
+        val h = ep.join(a, "__p").groupBy(col("__c"))
+          .agg(sum(col("__as")).as("__hs"))
+        a = ec.join(h, "__c").groupBy(col("__p"))
+          .agg(sum(col("__hs")).as("__as"))
+      }
+      a.orderBy(col("__as").desc, col("__p").asc).limit(topK)
+        .select(col("__p").as("part"), col("__as").as("authority"))
+        .ckpt()
+    } finally Dedup.freeCheckpoints(ec, ep)
   }
 
   /** ONE LEVEL of Louvain community detection over a weighted pair list
@@ -1523,79 +1465,6 @@ object Graph {
           "(CAST(d AS DOUBLE) * (CAST(d AS DOUBLE) - 1.0)), 6) AS clustering")
   }
 
-  /** Neighbor-degree (assortativity) profile of a DISTINCT undirected
-    * edge list: for each degree class, how many edge ENDS it owns and
-    * the integer sum of its neighbors' degrees — (degree, n_ends,
-    * sum_nbr_degree), INTEGER-exact cross-engine. Both orientations
-    * expand IN-ROW (one explode over the pair stream), both degree
-    * lookups are `broadcast()` hash joins (deg is node-sized), and the
-    * per-degree-class fold partial-combines map-side — so the only
-    * exchanges are the node-sized degree aggregate and the tiny final
-    * group-by, where the portable SQL twin shuffle-joins the 2|E| end
-    * stream against the deg CTE twice. */
-  def neighborDegreeProfile(edges: DataFrame, uCol: String,
-                            vCol: String): DataFrame = {
-    val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
-      .ckpt()
-    val result = neighborDegreeBody(e, resolveBroadcast(e)).ckpt()
-    Dedup.freeCheckpoints(e)
-    result
-  }
-
-  private def neighborDegreeBody(e: DataFrame, bcast: Boolean): DataFrame =
-    endDegrees(e, bcast)
-      .groupBy(col("__da"))
-      .agg(count(lit(1)).as("n_ends"),
-        sum(col("__db")).cast("bigint").as("sum_nbr_degree"))
-      .select(col("__da").as("degree"), col("n_ends"), col("sum_nbr_degree"))
-
-  /** Both-orientation edge-end stream decorated with the endpoint
-    * degrees — (__da = deg(this end), __db = deg(other end)); the two
-    * degree lookups are broadcast hash joins (deg is node-sized). Shared
-    * by [[neighborDegreeProfile]] and [[assortativity]]. */
-  private def endDegrees(e: DataFrame, bcast: Boolean): DataFrame = {
-    val deg = degreeTable(e)
-    val hint = (d: DataFrame) => if (bcast) broadcast(d) else d
-    e.select(explode(array(
-        struct(col("u").as("n"), col("v").as("m")),
-        struct(col("v").as("n"), col("u").as("m")))).as("__p"))
-      .select(col("__p.n").as("n"), col("__p.m").as("m"))
-      .join(hint(deg.select(col("n").as("__dn"), col("d").as("__da"))),
-        col("n") === col("__dn"))
-      .join(hint(deg.select(col("n").as("__dm"), col("d").as("__db"))),
-        col("m") === col("__dm"))
-      .select(col("__da"), col("__db"))
-  }
-
-  /** Degree assortativity coefficient of a DISTINCT undirected edge
-    * list: the Pearson correlation of (deg(x), deg(y)) over all
-    * 2|E| directed edge ends — Newman's r, THE one-number answer to
-    * "do hubs attach to hubs?". Every moment (n, Σx, Σxy, Σx²) is an
-    * INTEGER sum over the [[endDegrees]] stream (the symmetric marginals
-    * make Σy = Σx, Σy² = Σx²), and r is one fixed IEEE-double expression
-    * over those exact integers — bit-identical cross-engine (the
-    * regression-moments recipe on the degree stream). Returns one row
-    * (n_ends, assortativity). Degenerate variance (regular graph) →
-    * NULL, both engines. */
-  def assortativity(edges: DataFrame, uCol: String, vCol: String): DataFrame = {
-    val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
-      .ckpt()
-    val result = endDegrees(e, resolveBroadcast(e))
-      .agg(count(lit(1)).cast("bigint").as("n"),
-        sum(col("__da")).cast("bigint").as("sx"),
-        sum(col("__da") * col("__db")).cast("bigint").as("sxy"),
-        sum(col("__da") * col("__da")).cast("bigint").as("sx2"))
-      .selectExpr("n AS n_ends",
-        "round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) " +
-          "- CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) / " +
-          "nullif(CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE) " +
-          "- CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0.0), 6) " +
-          "AS assortativity")
-      .ckpt()
-    Dedup.freeCheckpoints(e)
-    result
-  }
-
   /** Degree HISTOGRAM of the distinct undirected graph implied by a raw
     * pair stream (u < v per row; duplicate pairs across rows allowed) —
     * (degree, n_nodes) — as ONE LINEAR JOB for the single-consumer case:
@@ -1614,63 +1483,60 @@ object Graph {
       .groupBy(col("d")).agg(count(lit(1)).as("n_nodes"))
       .select(col("d").as("degree"), col("n_nodes"))
 
-  /** Node-keyed DISTINCT adjacency folded straight off a raw pair stream
-    * — (__n, __nbrs = distinct neighbors, __d = degree), checkpointed
-    * (node-sized barrier: ~|V| rows carrying |E|·2 longs in arrays).
-    * `collect_set` does the edge dedup inside the one node-keyed
-    * exchange, so the pair-level distinct (a second full-stream
-    * exchange) is never paid. The degree-profile family derives
-    * everything from this frame. */
-  private def adjFromPairs(pairs: DataFrame, uCol: String, vCol: String): DataFrame = {
-    val adj = orientedAdjacency(pairs, uCol, vCol)
-    adj
-      .groupBy(col("__s")).agg(sortedSetOf(adj, "__t").as("__nbrs"))
+  /** The both-orientation edge-end stream of the distinct undirected
+    * graph implied by a raw pair stream (u < v per row; duplicate pairs
+    * across rows allowed), decorated with both endpoint degrees —
+    * (__da = deg(this end), __db = deg(other end)) — and folded by
+    * `fold` into the checkpointed result. The distinct adjacency folds
+    * once (orientation-exploded stream, ONE node-keyed exchange,
+    * `collect_set` doing the edge dedup inside it, so no pair-level
+    * distinct exchange), checkpointed as a node-sized barrier; each
+    * (node, nbr) end already carries its own degree, and the
+    * neighbor's comes from one `broadcast()` hash join of the
+    * node-sized degree projection while [[resolveBroadcast]] passes. */
+  private def degreeEnds(pairs: DataFrame, uCol: String, vCol: String)
+                        (fold: DataFrame => DataFrame): DataFrame = {
+    val o = orientedAdjacency(pairs, uCol, vCol)
+    val adj = o
+      .groupBy(col("__s")).agg(sortedSetOf(o, "__t").as("__nbrs"))
       .select(col("__s").as("__n"), col("__nbrs"),
         size(col("__nbrs")).cast("bigint").as("__d"))
       .ckpt()
-  }
-
-  /** [[neighborDegreeProfile]] recomputed as the single-consumer fast
-    * path, directly off the raw pair stream: fold the distinct adjacency
-    * once ([[adjFromPairs]] — orderkey exchange + ONE node-keyed
-    * exchange, dedup inside the fold), then decorate each (node, nbr)
-    * end with the NEIGHBOR's degree via one `broadcast()` hash join of
-    * the node-sized degree projection — the end's own degree is already
-    * in the row (the r11 edge-set form paid a pair-distinct exchange, an
-    * edge-frame checkpoint, and TWO degree broadcasts). Identical
-    * results (spec-pinned against [[neighborDegreeProfile]]). */
-  def neighborDegreeFromPairs(pairs: DataFrame, uCol: String,
-                              vCol: String): DataFrame = {
-    val adj = adjFromPairs(pairs, uCol, vCol)
     val bcast = resolveBroadcast(adj)
-    val hint = (d: DataFrame) => if (bcast) broadcast(d) else d
     val deg = adj.select(col("__n").as("__m"), col("__d").as("__db"))
-    val result = adj
+    val result = fold(adj
       .select(col("__d").as("__da"), explode(col("__nbrs")).as("__m"))
-      .join(hint(deg), Seq("__m"))
-      .groupBy(col("__da"))
-      .agg(count(lit(1)).as("n_ends"),
-        sum(col("__db")).cast("bigint").as("sum_nbr_degree"))
-      .select(col("__da").as("degree"), col("n_ends"), col("sum_nbr_degree"))
+      .join(if (bcast) broadcast(deg) else deg, Seq("__m")))
       .ckpt()
     Dedup.freeCheckpoints(adj)
     result
   }
 
-  /** [[assortativity]] over the same single-pass adjacency fold as
-    * [[neighborDegreeFromPairs]] — the identical (__da, __db) end stream
-    * (so the moments match the edge-set form integer for integer,
-    * spec-pinned), with one broadcast degree lookup instead of two and
-    * no pair-distinct exchange or edge checkpoint. */
+  /** Neighbor-degree (assortativity) profile of the distinct undirected
+    * graph implied by a raw pair stream: for each degree class, how many
+    * edge ENDS it owns and the integer sum of its neighbors' degrees —
+    * (degree, n_ends, sum_nbr_degree), INTEGER-exact cross-engine; the
+    * per-degree-class fold partial-combines map-side. */
+  def neighborDegreeFromPairs(pairs: DataFrame, uCol: String,
+                              vCol: String): DataFrame =
+    degreeEnds(pairs, uCol, vCol)(_
+      .groupBy(col("__da"))
+      .agg(count(lit(1)).as("n_ends"),
+        sum(col("__db")).cast("bigint").as("sum_nbr_degree"))
+      .select(col("__da").as("degree"), col("n_ends"), col("sum_nbr_degree")))
+
+  /** Degree assortativity coefficient (Newman's r) of the distinct
+    * undirected graph implied by a raw pair stream: the Pearson
+    * correlation of (deg(x), deg(y)) over all 2|E| directed edge ends —
+    * THE one-number answer to "do hubs attach to hubs?". Every moment
+    * (n, Σx, Σxy, Σx²) is an INTEGER sum over the end stream (the
+    * symmetric marginals make Σy = Σx, Σy² = Σx²), and r is one fixed
+    * IEEE-double expression over those exact integers — bit-identical
+    * cross-engine. Returns one row (n_ends, assortativity). Degenerate
+    * variance (regular graph) → NULL, both engines. */
   def assortativityFromPairs(pairs: DataFrame, uCol: String,
-                             vCol: String): DataFrame = {
-    val adj = adjFromPairs(pairs, uCol, vCol)
-    val bcast = resolveBroadcast(adj)
-    val hint = (d: DataFrame) => if (bcast) broadcast(d) else d
-    val deg = adj.select(col("__n").as("__m"), col("__d").as("__db"))
-    val result = adj
-      .select(col("__d").as("__da"), explode(col("__nbrs")).as("__m"))
-      .join(hint(deg), Seq("__m"))
+                             vCol: String): DataFrame =
+    degreeEnds(pairs, uCol, vCol)(_
       .agg(count(lit(1)).cast("bigint").as("n"),
         sum(col("__da")).cast("bigint").as("sx"),
         sum(col("__da") * col("__db")).cast("bigint").as("sxy"),
@@ -1680,11 +1546,7 @@ object Graph {
           "- CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) / " +
           "nullif(CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE) " +
           "- CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0.0), 6) " +
-          "AS assortativity")
-      .ckpt()
-    Dedup.freeCheckpoints(adj)
-    result
-  }
+          "AS assortativity"))
 
   /** Bounded-round MIN-LABEL PROPAGATION over an undirected pair list
     * (duplicate pairs allowed — the min-fold is multiplicity-invariant,
@@ -1693,10 +1555,9 @@ object Graph {
     * neighbors' labels. After r rounds label(n) = min node id within r
     * hops — the bounded-pass core of connected components / community
     * seeding (full CC iterates to fixpoint with a liveness count, the
-    * [[bfsLevels]] earlyExit pattern). Each round is ONE node-keyed
-    * join + one min-aggregate over the label table, exactly the
-    * [[bfsLoopFixed]] shape: persist-marked rounds, AQE off inside the
-    * fixed chain, one straight-line action. Returns (node, label),
+    * [[bfsLoop]] pattern). Each round is ONE node-keyed join + one
+    * min-aggregate over the label table: persist-marked rounds, AQE off
+    * inside the fixed chain, one straight-line action. Returns (node, label),
     * integer-exact cross-engine.
     *
     * BOUNDED rounds by design: each round references the label table
@@ -1867,8 +1728,8 @@ object Graph {
   /** MULTI-SOURCE bounded BFS over an undirected pair list: hop counts
     * ≤ `maxDepth` from each of the `nSources` SMALLEST node ids, as one
     * shared loop — (src, node, lvl). The label table is keyed
-    * (src, node), so one [[bfsLoopFixed]]-shaped persist chain (AQE off,
-    * one straight-line action) walks all sources simultaneously instead
+    * (src, node), so one persist chain (AQE off, one straight-line
+    * action) walks all sources simultaneously instead
     * of paying the per-round barrier chain once per source — the
     * centrality fan-out pattern (closeness/harmonic need BFS from many
     * seeds; at scale you batch the seeds, not the loop). Integer-exact
@@ -2633,8 +2494,7 @@ object Graph {
         items.schema(iCol).dataType != LongType) return None
     val limit = broadcastLimitBytes(items.sparkSession)
     val cap = math.min(limit / 16, (Int.MaxValue - 8).toLong).toInt
-    val raw = items.select(col(gCol), col(iCol)).limit(cap + 1)
-      .queryExecution.executedPlan.executeCollect()
+    val raw = collectRows(items.select(col(gCol), col(iCol)).limit(cap + 1))
     if (raw.length > cap || raw.exists(_.isNullAt(0))) return None
     val rows = raw.filterNot(_.isNullAt(1))
     val grp = rows.map(_.getLong(0))
@@ -2809,15 +2669,28 @@ object Graph {
     * entry points take the RAW (group, item) stream instead: past the
     * [[collectBaskets]] gate the edge/support derivation runs as packed
     * primitive sorts on the driver (zero exchanges, zero checkpoint
-    * barriers, ONE bounded map-only collect); past the gate the
-    * `distEdges` thunk builds the UNCHANGED distributed derivation and
-    * the operator's existing distributed/driver paths take over — the
-    * at-scale plan is untouched (spec-pinned twin equality on random
-    * basket streams, the twin pinned by zero size limits). ------------ */
+    * barriers, ONE bounded map-only collect); past the gate
+    * [[basketEdges]] builds the distributed derivation and the edge-set
+    * operator's distributed path takes over (spec-pinned twin equality
+    * on random basket streams, the twin pinned by zero size limits).
+    * Two paths per analytic. ----------------------------------------- */
+
+  /** The distinct co-occurrence edges (u < v) of a raw basket stream —
+    * every FromBaskets twin's input: the in-row [[itemPairs]] expansion,
+    * then a u-keyed pin that fixes the byte-light pair stream's
+    * parallelism (unpinned, AQE coalesces it to 1-2 tasks) AND makes the
+    * distinct exchange-free — HashPartitioning(u) already clusters
+    * (u, v). */
+  private[graft] def basketEdges(items: DataFrame, gCol: String,
+                                 iCol: String): DataFrame =
+    itemPairs(items, gCol, iCol)
+      .select(col("u"), col("v"))
+      .repartition(items.sparkSession.sparkContext.defaultParallelism, col("u"))
+      .distinct()
 
   /** [[triangleCount]] off the raw basket stream. */
-  def triangleCountFromBaskets(items: DataFrame, gCol: String, iCol: String,
-                               distEdges: => DataFrame): DataFrame =
+  def triangleCountFromBaskets(items: DataFrame, gCol: String,
+                               iCol: String): DataFrame =
     collectBaskets(items, gCol, iCol) match {
       case Some(bi) =>
         val (eu, ev, _) = pairRuns(bi.expandPairs())
@@ -2826,14 +2699,14 @@ object Graph {
         localDf(items.sparkSession,
           StructType(Seq(StructField("n_triangles", LongType, nullable = false))),
           Seq(Row(nTri)))
-      case None => triangleCount(distEdges, "u", "v")
+      case None => triangleCount(basketEdges(items, gCol, iCol), "u", "v")
     }
 
   /** [[clusteringCoefficients]] off the raw basket stream. Node triangle
     * counts fold from the per-edge supports: every triangle through n has
     * exactly two n-incident edges, so tri(n) = Σ_{e∋n} sup(e) / 2. */
-  def clusteringFromBaskets(items: DataFrame, gCol: String, iCol: String,
-                            distEdges: => DataFrame): DataFrame =
+  def clusteringFromBaskets(items: DataFrame, gCol: String,
+                            iCol: String): DataFrame =
     collectBaskets(items, gCol, iCol) match {
       case Some(bi) =>
         val (eu, ev, _) = pairRuns(bi.expandPairs())
@@ -2867,12 +2740,13 @@ object Graph {
           StructField("degree", LongType, nullable = false),
           StructField("clustering", DoubleType, nullable = false))),
           rows.toSeq)
-      case None => clusteringCoefficients(distEdges, "u", "v")
+      case None =>
+        clusteringCoefficients(basketEdges(items, gCol, iCol), "u", "v")
     }
 
   /** [[transitivitySummary]] off the raw basket stream. */
-  def transitivityFromBaskets(items: DataFrame, gCol: String, iCol: String,
-                              distEdges: => DataFrame): DataFrame =
+  def transitivityFromBaskets(items: DataFrame, gCol: String,
+                              iCol: String): DataFrame =
     collectBaskets(items, gCol, iCol) match {
       case Some(bi) =>
         val (eu, ev, _) = pairRuns(bi.expandPairs())
@@ -2897,7 +2771,8 @@ object Graph {
           StructField("n_triangles", LongType, nullable = false),
           StructField("transitivity", DoubleType, nullable = true))),
           Seq(Row(wedges, tri, trans)))
-      case None => transitivitySummary(distEdges, "u", "v")
+      case None =>
+        transitivitySummary(basketEdges(items, gCol, iCol), "u", "v")
     }
 
   /** [[edgeJaccardTopK]] off the raw basket stream: per-edge support from
@@ -2906,7 +2781,7 @@ object Graph {
     * candidate set — the fix for the r18 net-negative full-driver
     * ranking). */
   def edgeJaccardTopKFromBaskets(items: DataFrame, gCol: String, iCol: String,
-                                 k: Int, distEdges: => DataFrame): DataFrame = {
+                                 k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     collectBaskets(items, gCol, iCol) match {
       case Some(bi) =>
@@ -2942,7 +2817,7 @@ object Graph {
         val top = cand.sortBy(t => (-t._4, t._1, t._2)).take(k)
         localDf(items.sparkSession, schema,
           top.map { case (u, v, c, j) => Row(u, v, c, j) }.toSeq)
-      case None => edgeJaccardTopK(distEdges, "u", "v", k)
+      case None => edgeJaccardTopK(basketEdges(items, gCol, iCol), "u", "v", k)
     }
   }
 
@@ -3019,8 +2894,8 @@ object Graph {
     }
   }
 
-  /** The driver truss peel shared by [[trussPeel]] and
-    * [[trussPeelFromBaskets]]: `rounds` support passes over the
+  /** The driver truss peel of [[trussPeelFromBaskets]]: `rounds`
+    * support passes over the
     * index-space edge list (eu, ev) on `nNodes` nodes, each keeping the
     * edges with support ≥ k − 2, then the (support, n_edges) histogram
     * of the survivors. */
@@ -3055,15 +2930,14 @@ object Graph {
   /** [[trussPeel]] off the raw basket stream: all rounds+1 support
     * passes run on the striped kernel over the driver-derived edge list. */
   def trussPeelFromBaskets(items: DataFrame, gCol: String, iCol: String,
-                           k: Int, rounds: Int,
-                           distEdges: => DataFrame): DataFrame = {
+                           k: Int, rounds: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     collectBaskets(items, gCol, iCol) match {
       case Some(bi) =>
         val (eu, ev, _) = pairRuns(bi.expandPairs())
         driverTrussPeel(items.sparkSession, eu, ev, bi.nItems, k, rounds)
-      case None => trussPeel(distEdges, "u", "v", k, rounds)
+      case None => trussPeel(basketEdges(items, gCol, iCol), "u", "v", k, rounds)
     }
   }
 
@@ -3073,51 +2947,40 @@ object Graph {
     * as the SIMPLE undirected graph it implies: self-loops are dropped
     * and a pair repeated in either orientation is one edge. The fixed
     * round count keeps the result a deterministic cross-engine twin (the
-    * [[kcorePeel]] convention, over edges instead of nodes). The driver
-    * tier runs all rounds+1 support passes as [[driverEdgeSupport]]
-    * folds; the twin re-runs [[edgeSupportBody]] on the survivors each
-    * round — rounds+1 edge-iterator passes with no wedge materialization
-    * anywhere. The oracle replays the identical rounds with the
+    * [[kcorePeel]] convention, over edges instead of nodes). Each round
+    * re-runs [[edgeSupportBody]] on the survivors — rounds+1
+    * edge-iterator passes with no wedge materialization anywhere. This
+    * is the twin of [[trussPeelFromBaskets]], whose driver tier runs the
+    * same passes as [[driverEdgeSupport]] folds; it has no driver tier
+    * of its own. The oracle replays the identical rounds with the
     * wedge-pair-count formulation (portable SQL has no sorted-array
     * intersection). */
   def trussPeel(edges: DataFrame, uCol: String, vCol: String,
                 k: Int, rounds: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    collectEdges(edges, uCol, vCol) match {
-      case Some(g) =>
-        // canonical (lo, hi) index pairs, self-loops out, sort-deduped
-        val keys = g.iu.indices.collect { case i if g.iu(i) != g.iv(i) =>
-          (math.min(g.iu(i), g.iv(i)).toLong << 32) | math.max(g.iu(i), g.iv(i))
-        }.toArray
-        val m = sortDedup(keys)
-        driverTrussPeel(edges.sparkSession,
-          Array.tabulate(m)(i => (keys(i) >>> 32).toInt),
-          Array.tabulate(m)(i => keys(i).toInt), g.n, k, rounds)
-      case None =>
-        var e = edges.filter(nonNull(uCol, vCol) && col(uCol) =!= col(vCol))
-          .select(least(col(uCol), col(vCol)).as("u"),
-            greatest(col(uCol), col(vCol)).as("v"))
-          .distinct()
-          .ckpt()
-        // resolved AFTER the checkpoint so the estimate reads measured bytes
-        val bAdj = resolveBroadcast(e)
-        val spent = scala.collection.mutable.ArrayBuffer(e)
-        var r = 0
-        while (r < rounds) {
-          e = edgeSupportBody(e, bAdj)
-            .filter(col("support") >= k - 2)
-            .select(col("u"), col("v"))
-            .ckpt()
-          spent += e
-          r += 1
-        }
-        val result = edgeSupportBody(e, bAdj)
-          .groupBy(col("support")).agg(count(lit(1)).as("n_edges"))
-          .ckpt()
-        Dedup.freeCheckpoints(spent.toSeq: _*)
-        result
+    var e = edges.filter(nonNull(uCol, vCol) && col(uCol) =!= col(vCol))
+      .select(least(col(uCol), col(vCol)).as("u"),
+        greatest(col(uCol), col(vCol)).as("v"))
+      .distinct()
+      .ckpt()
+    // resolved AFTER the checkpoint so the estimate reads measured bytes
+    val bAdj = resolveBroadcast(e)
+    val spent = scala.collection.mutable.ArrayBuffer(e)
+    var r = 0
+    while (r < rounds) {
+      e = edgeSupportBody(e, bAdj)
+        .filter(col("support") >= k - 2)
+        .select(col("u"), col("v"))
+        .ckpt()
+      spent += e
+      r += 1
     }
+    val result = edgeSupportBody(e, bAdj)
+      .groupBy(col("support")).agg(count(lit(1)).as("n_edges"))
+      .ckpt()
+    Dedup.freeCheckpoints(spent.toSeq: _*)
+    result
   }
 
   /** Top-k edges by NEIGHBORHOOD JACCARD — (u, v, common, jaccard) with
@@ -3232,9 +3095,8 @@ object Graph {
     * (node, degree). Fixed round count keeps the result a deterministic
     * cross-engine twin at any scale (the streaming approximation of full
     * peeling; a production loop adds the convergence count exactly like
-    * [[bfsLevels]]' earlyExit). The driver tier peels edge arrays; the
-    * twin's loop mechanics are [[bfsLoopFixed]]'s: every round's degree
-    * table is `persist`-marked, AQE is off for the fixed-shape chain, and
+    * [[bfsLoop]]). The driver tier peels edge arrays; in the twin every
+    * round's degree table is `persist`-marked, AQE is off for the fixed-shape chain, and
     * the whole peel is ONE straight-line action instead of one checkpoint
     * barrier per round (the r11 shape paid 4 driver round-trips for 1.8 s
     * of compute). The chained-CTE

@@ -14,9 +14,9 @@ import scala.jdk.CollectionConverters._
  * an opaque `Scan ExistingRDD` still shows the round shapes Spark ran.
  * Each query is audited at the default limits and again with
  * `graft.graph.broadcastLimitBytes=0` (every driver tier declined: the
- * twin regime); the twin section appears only where it differs. Driver
- * tiers collect through `executedPlan.executeCollect()`, which reports
- * no execution, so a regime that takes one shows its final plan only.
+ * twin regime); the twin section appears only where it differs. A
+ * driver tier's one collect runs as a SQL execution (`Graph.collectRows`),
+ * so a regime that takes one shows that collect's plan.
  * Review that:
  *  - filters/pruning reach the Parquet scan (`PushedFilters`, `ReadSchema`),
  *  - small dimensions broadcast (`BroadcastHashJoin`), facts sort-merge,

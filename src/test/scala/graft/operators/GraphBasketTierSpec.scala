@@ -30,66 +30,79 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
     rows.toDF("g", "i")
   }
 
-  /** The SparkEntry edge derivation (itemPairs + distinct), the distEdges
-    * twin input of the FromBaskets entry points. */
-  private def distEdges(items: DataFrame): DataFrame =
-    Graph.itemPairs(items, "g", "i").select(col("u"), col("v")).distinct()
-
   private def rowSet(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 
-  test("FromBaskets tiers equal their distributed twins bit-for-bit " +
-      "(duplicate rows, random baskets)") {
+  /** The tier-contract table: small (group, item) frames, each ≤ 400
+    * rows, and whether every operator must find pairs in it. */
+  private def frames: Seq[(String, DataFrame, Boolean)] = {
     val sq = spark
     import sq.implicits._
-    val rows = randomBaskets(41, nGroups = 25, nItems = 18, rows = 400) ++
-      randomBaskets(41, 25, 18, 50) // extra duplicates
+    val rows = randomBaskets(41, nGroups = 25, nItems = 18, rows = 350) ++
+      randomBaskets(41, 25, 18, 49) // extra duplicates
     // the twin's sorted sets drop a NULL item; the tier must skip it too
-    val df = (rows.map { case (g, i) => (g, Option(i)) } :+ ((10L, None)))
+    val dupNull = (rows.map { case (g, i) => (g, Option(i)) } :+ ((10L, None)))
       .toDF("g", "i")
-    assert(Graph.collectBaskets(df, "g", "i").isDefined)
-    Seq[(String, () => DataFrame)](
-      "triangles" -> (() => Graph.triangleCountFromBaskets(df, "g", "i",
-        distEdges(df))),
-      "clustering" -> (() => Graph.clusteringFromBaskets(df, "g", "i",
-        distEdges(df))),
-      "transitivity" -> (() => Graph.transitivityFromBaskets(df, "g", "i",
-        distEdges(df))),
-      "edgeJaccard" -> (() => Graph.edgeJaccardTopKFromBaskets(df, "g", "i",
-        k = 15, distEdges(df))),
-      "trussPeel" -> (() => Graph.trussPeelFromBaskets(df, "g", "i",
-        k = 4, rounds = 1, distEdges(df))),
-      "bipartite" -> (() => Graph.bipartiteProjectionTopK(df, "g", "i",
-        topK = 15))
-    ).foreach { case (name, f) =>
-      val tier = rowSet(f())
-      val twin = withTwins(rowSet(f()))
-      assert(tier == twin, s"$name driver tier != distributed twin")
-      assert(tier.nonEmpty, s"$name degenerate test input")
-    }
+    Seq(
+      ("duplicate rows and a NULL item", dupNull, true),
+      ("empty", Seq.empty[(Long, Long)].toDF("g", "i"), false),
+      ("single-item groups", Seq((1L, 7L), (2L, 8L), (3L, 9L), (3L, 9L))
+        .toDF("g", "i"), false),
+      // the twin keeps a NULL group as its own basket beside group 0
+      ("a NULL group beside group 0", Seq[(Option[Long], Long)](
+        (Some(0L), 1L), (Some(0L), 2L), (Some(0L), 3L), (Some(0L), 4L),
+        (None, 2L), (None, 3L), (None, 4L), (None, 5L),
+        (Some(1L), 1L), (Some(1L), 5L), (Some(2L), 3L), (Some(2L), 5L))
+        .toDF("g", "i"), false),
+      ("INT ids", basketDf(randomBaskets(53, 20, 15, 200))
+        .select(col("g").cast("int").as("g"), col("i").cast("int").as("i")),
+        false))
+  }
+
+  test("FromBaskets tiers equal their distributed twins bit-for-bit " +
+      "(duplicate rows, random baskets)") {
+    def run(f: DataFrame => DataFrame, df: DataFrame) = scala.util.Try {
+      val out = f(df)
+      (out.schema.map(c => c.name -> c.dataType), rowSet(out))
+    }.toEither.left.map(_.toString)
+    val operators = Seq[(String, DataFrame => DataFrame)](
+      "triangles" -> (Graph.triangleCountFromBaskets(_, "g", "i")),
+      "clustering" -> (Graph.clusteringFromBaskets(_, "g", "i")),
+      "transitivity" -> (Graph.transitivityFromBaskets(_, "g", "i")),
+      "edgeJaccard" -> (Graph.edgeJaccardTopKFromBaskets(_, "g", "i", k = 15)),
+      "trussPeel" -> (Graph.trussPeelFromBaskets(_, "g", "i", k = 4, rounds = 1)),
+      "bipartite" -> (Graph.bipartiteProjectionTopK(_, "g", "i", topK = 15)))
+    val all = frames
+    assert(Graph.collectBaskets(all.head._2, "g", "i").isDefined)
+    val mismatches = for {
+      (inName, df, rich) <- all
+      (opName, f) <- operators
+      tier = run(f, df)
+      twin = withTwins(run(f, df))
+      if tier != twin || tier.isLeft || (rich && tier.exists(_._2.isEmpty))
+    } yield s"$opName on $inName: tier $tier vs twin $twin"
+    assert(mismatches.isEmpty, mismatches.mkString("\n"))
   }
 
   test("FromBaskets tiers: empty and trivial inputs") {
     val sq = spark
     import sq.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("g", "i")
-    assert(Graph.triangleCountFromBaskets(empty, "g", "i", distEdges(empty))
+    assert(Graph.triangleCountFromBaskets(empty, "g", "i")
       .collect().map(_.getLong(0)).toSeq == Seq(0L))
-    assert(Graph.clusteringFromBaskets(empty, "g", "i", distEdges(empty))
-      .collect().isEmpty)
-    val tr = Graph.transitivityFromBaskets(empty, "g", "i", distEdges(empty))
-      .collect()(0)
+    assert(Graph.clusteringFromBaskets(empty, "g", "i").collect().isEmpty)
+    val tr = Graph.transitivityFromBaskets(empty, "g", "i").collect()(0)
     assert(tr.getLong(0) == 0L && tr.getLong(1) == 0L && tr.isNullAt(2))
-    assert(Graph.edgeJaccardTopKFromBaskets(empty, "g", "i", 5,
-      distEdges(empty)).collect().isEmpty)
+    assert(Graph.edgeJaccardTopKFromBaskets(empty, "g", "i", 5)
+      .collect().isEmpty)
     assert(Graph.bipartiteProjectionTopK(empty, "g", "i", 5)
       .collect().isEmpty)
     // single-item groups: no pairs anywhere
     val singles = Seq((1L, 7L), (2L, 8L), (3L, 9L)).toDF("g", "i")
     assert(Graph.bipartiteProjectionTopK(singles, "g", "i", 5)
       .collect().isEmpty)
-    assert(Graph.triangleCountFromBaskets(singles, "g", "i",
-      distEdges(singles)).collect().map(_.getLong(0)).toSeq == Seq(0L))
+    assert(Graph.triangleCountFromBaskets(singles, "g", "i")
+      .collect().map(_.getLong(0)).toSeq == Seq(0L))
   }
 
   test("gate declines fall back to the distributed twin: pair-expansion " +
@@ -117,10 +130,8 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
       assert(Graph.collectBaskets(hub, "g", "i").isEmpty)
       conf.set("graft.graph.broadcastLimitBytes", "64") // capRows = 4
       assert(Graph.collectBaskets(df, "g", "i").isEmpty)
-      val triViaTwin = Graph.triangleCountFromBaskets(df, "g", "i",
-        distEdges(df))
-      val triTwin = withTwins(Graph.triangleCountFromBaskets(df, "g", "i",
-        distEdges(df)))
+      val triViaTwin = Graph.triangleCountFromBaskets(df, "g", "i")
+      val triTwin = withTwins(Graph.triangleCountFromBaskets(df, "g", "i"))
       assert(rowSet(triViaTwin) == rowSet(triTwin))
     } finally {
       wasB.fold(conf.unset("graft.graph.broadcastLimitBytes"))(

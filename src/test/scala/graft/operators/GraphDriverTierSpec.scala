@@ -14,7 +14,7 @@ import graft.SparkSpec
   * spec pins the degenerate shapes and the tier contract of Graph.scala's
   * header: every operator behind the shared edge collector returns the
   * same schema and rows on both paths, over a table of adversarial
-  * inputs. */
+  * inputs (GraphBasketTierSpec holds the basket tiers' table). */
 class GraphDriverTierSpec extends AnyFunSuite with SparkSpec {
 
   private def emptyPairs = {
@@ -111,7 +111,9 @@ class GraphDriverTierSpec extends AnyFunSuite with SparkSpec {
     else df
   }
 
-  /** Every operator that goes through the shared edge collector. */
+  /** Every edge-list operator with a driver tier behind the shared edge
+    * collector, plus the twin-only `hitsBipartite` and `trussPeel`: their
+    * one path must survive the same adversarial inputs in both regimes. */
   private val operators: Seq[(String, DataFrame => DataFrame)] = Seq(
     "bfsLevelsUndirected" -> (Graph.bfsLevelsUndirected(_, "u", "v", 3)),
     "pagerankUndirected" -> (Graph.pagerankUndirected(_, "u", "v", 3)),

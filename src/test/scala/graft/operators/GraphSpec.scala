@@ -152,12 +152,14 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     val sx2 = ends.map(p => p._1 * p._1).sum.toDouble
     val want = BigDecimal((n * sxy - sx * sx) / (n * sx2 - sx * sx))
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val row = Graph.assortativity(es.toDF("u", "v"), "u", "v").collect()(0)
+    // a distinct edge list is a valid pair stream
+    val row = Graph.assortativityFromPairs(es.toDF("u", "v"), "u", "v")
+      .collect()(0)
     assert(row.getLong(0) == ends.size.toLong)
     assert(math.abs(row.getDouble(1) - want) < 2e-6)
     // 4-cycle: every degree is 2 → zero variance → NULL r (both engines)
     val ring = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L)).toDF("u", "v")
-    assert(Graph.assortativity(ring, "u", "v").collect()(0).isNullAt(1))
+    assert(Graph.assortativityFromPairs(ring, "u", "v").collect()(0).isNullAt(1))
   }
 
   test("single-pass pair-stream forms equal the edge-set forms: " +
@@ -167,23 +169,32 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     val (es, _) = randomGraph(37, 30, 300)
     // raw pair stream with cross-row duplicates — the itemPairs shape
     val raw = (es ++ es.take(70)).toDF("u", "v")
-    val edges = es.toDF("u", "v")
-    val wantHist = es.flatMap(p => Seq(p._1, p._2)).groupBy(identity)
-      .map { case (_, xs) => xs.size.toLong }
-      .groupBy(identity).map { case (d, xs) => d -> xs.size.toLong }
+    val deg = es.flatMap(p => Seq(p._1, p._2)).groupBy(identity)
+      .map { case (n, xs) => n -> xs.size.toLong }
+    val ends = es.flatMap(p => Seq((p._1, p._2), (p._2, p._1)))
+      .map { case (a, b) => (deg(a), deg(b)) }
+    // the edge-set forms, computed directly off the distinct edges
+    val wantHist = deg.values.groupBy(identity)
+      .map { case (d, xs) => d -> xs.size.toLong }
     val gotHist = Graph.degreeHistogram(raw, "u", "v")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotHist == wantHist)
-    val wantProfile = Graph.neighborDegreeProfile(edges, "u", "v")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val wantProfile = ends.groupBy(_._1).map { case (d, ps) =>
+      d -> ((ps.size.toLong, ps.map(_._2).sum))
+    }
     def profile = Graph.neighborDegreeFromPairs(raw, "u", "v")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(profile == wantProfile, "broadcast path")
     assert(withTwins(profile) == wantProfile, "twin")
-    val wantR = Graph.assortativity(edges, "u", "v").collect()(0)
+    val n = ends.size.toDouble
+    val sx = ends.map(_._1).sum.toDouble
+    val sxy = ends.map(p => p._1 * p._2).sum.toDouble
+    val sx2 = ends.map(p => p._1 * p._1).sum.toDouble
+    val wantR = BigDecimal((n * sxy - sx * sx) / (n * sx2 - sx * sx))
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val gotR = Graph.assortativityFromPairs(raw, "u", "v").collect()(0)
-    assert(gotR.getLong(0) == wantR.getLong(0))
-    assert(math.abs(gotR.getDouble(1) - wantR.getDouble(1)) < 1e-9)
+    assert(gotR.getLong(0) == ends.size.toLong)
+    assert(math.abs(gotR.getDouble(1) - wantR) < 2e-6)
   }
 
   test("itemPairs equals the self-join + distinct formulation (same edge " +
@@ -287,7 +298,8 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     val want = ends.groupBy(p => deg(p._1)).map { case (d, ps) =>
       d -> ((ps.size.toLong, ps.map(p => deg(p._2)).sum))
     }
-    def got = Graph.neighborDegreeProfile(df, "u", "v")
+    // a distinct edge list is a valid pair stream
+    def got = Graph.neighborDegreeFromPairs(df, "u", "v")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
     assert(got == want, "broadcast path")

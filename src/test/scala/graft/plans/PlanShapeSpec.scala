@@ -334,6 +334,9 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     val tier = plans()
     assert(!tier.exists(_.contains("Exchange hashpartitioning")),
       s"the driver tier runs no loop:\n${tier.mkString("\n").take(3000)}")
+    // the tier's one collect is a SQL execution the capture records
+    assert(tier.size == 1,
+      s"the driver tier runs exactly its collect:\n${tier.mkString("\n").take(3000)}")
   }
 
   test("Q6: date range + residual predicates reach the Parquet scan") {
