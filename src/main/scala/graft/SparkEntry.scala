@@ -488,14 +488,12 @@ object SparkEntry {
         .limit(20)),
     // association RULES from the pair supports: confidence both ways and
     // lift for the top-20 support pairs — item supports are part-sized
-    // (broadcast), the basket count is a one-row broadcast, so the rule
-    // table costs the pair count plus two broadcast lookups. Ratios are
+    // (shuffled-hash lookups), the basket count is a one-row broadcast,
+    // so the rule table costs the pair count plus two lookups. Ratios are
     // exact-integer-valued double divisions, rounded once.
     "ext_assoc_rules" -> ((s, dir) =>
       // no pre-distinct: itemPairs dedups inside its collect_set, and the
-      // support sides use countDistinct — one less full-table exchange.
-      // Past graft.graph.broadcastLimitBytes the item-support lookups take
-      // the shuffled-hash twin (plan-pinned)
+      // support sides use countDistinct — one less full-table exchange
       operators.Graph.assocRules(
         t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")),
         "l_orderkey", "l_partkey", topK = 20)),
@@ -613,11 +611,10 @@ object SparkEntry {
     //    the `edges` view; the analytic tail (deg/ore/wedge/close) stays
     //    SHARED VERBATIM with the DuckDB oracle, whose edges CTE replays
     //    the identical set via the portable self-join. ────────────────────
-    // engine side is Graph.triangleCount (broadcast-oriented node-
-    // iterator — the wedge stream never shuffles); the oracle replays
-    // the identical orientation/wedge/close as portable SQL
-    // (sqlTrianglesTail). TriangleSpec pins engine ≡ brute-force ≡ the
-    // shuffle-join variant.
+    // engine side is Graph.triangleCountFromBaskets (degree-oriented
+    // edge iterator — the wedge stream is never generated); the oracle
+    // replays the identical orientation/wedge/close as portable SQL
+    // (sqlTrianglesTail). GraphSpec pins engine ≡ brute force.
     "ext_graph_triangles" -> ((s, dir) =>
       operators.Graph.triangleCountFromBaskets(lineitemBaskets(s, dir),
         "l_orderkey", "l_partkey")),
@@ -661,8 +658,8 @@ object SparkEntry {
     // neighbor-degree (assortativity) profile, integer-exact — the
     // single-consumer fast path (Graph.neighborDegreeFromPairs): fold
     // the distinct adjacency once off the RAW pair stream (dedup inside
-    // the node-keyed exchange), decorate ends with ONE broadcast degree
-    // lookup; spec-pinned ≡ brute force. Oracle replays
+    // the node-keyed exchange), decorate ends with ONE degree lookup;
+    // spec-pinned ≡ brute force. Oracle replays
     // sqlNeighborDegreeTail.
     "ext_neighbor_degree" -> ((s, dir) =>
       operators.Graph.neighborDegreeFromPairs(
@@ -896,17 +893,18 @@ object SparkEntry {
     // pair would be a parallel path). Oracle = the identical fold as
     // chained materialized CTEs.
     "ext_path_counts" -> ((s, dir) =>
-      // raw (undistincted) pair stream: the dedup rides the loop's own
-      // oriented partitioning (dedupEdges) — one exchange, not two
+      // raw (undistincted) pair stream: pathCounts reads the simple graph,
+      // its dedup riding the loop's own oriented partitioning — one
+      // exchange, not two
       operators.Graph.pathCounts(copurchasePairs(s, dir), "u", "v",
-        nSources = 4, maxDepth = 4, dedupEdges = true)),
+        nSources = 4, maxDepth = 4)),
     // the BACKWARD half completing Brandes: sampled betweenness from
     // the same 4 seeds — level-descending dependency accumulation
     // δ(v) = σv/σw·(1+δw) in ×2^20 integer fixed point (floor-division
     // recurrence replayed verbatim by the DuckDB twin → hash-exact)
     "ext_betweenness_sampled" -> ((s, dir) =>
       operators.Graph.betweennessSampled(copurchasePairs(s, dir), "u", "v",
-        nSources = 4, maxDepth = 4, dedupEdges = true)),
+        nSources = 4, maxDepth = 4)),
     // ONE Louvain move level over the support-weighted co-purchase
     // graph: singleton-community argmax with the exact integer score
     // 2m·w_ij − k_i·k_j — no floats, no iteration; the community

@@ -42,8 +42,9 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, 
  *    The basket tiers ([[collectBaskets]]) spend the same byte budget:
  *    16 B a collected (group, item) row, 8 B an expanded item pair, and
  *    Dedup's bitmap tier gates its rep table on it too. That limit is
- *    the only path selector of the codebase; there is no per-call
- *    override;
+ *    the only path selector of the codebase and it selects nothing but
+ *    the tier: no twin reads it, so inside a twin Spark chooses every
+ *    join strategy from observed sizes. There is no per-call override;
  *  - NULLs: an edge with a NULL endpoint (or NULL weight) is dropped —
  *    the collector skips it and every twin input carries the same
  *    [[nonNull]] filter;
@@ -179,14 +180,12 @@ object Graph {
     * for the top-`topK` support pairs — pair supports from the in-row
     * [[itemPairs]] stream (one exchange, per-group-unique pairs so no
     * dedup), item supports from one item-keyed countDistinct, the basket
-    * count a one-row broadcast scalar. The two item-support lookups
-    * BROADCAST while [[resolveBroadcast]] passes (the item side is
-    * catalog-dimension-sized); past the limit a shuffled-hash path
-    * serves catalogs that outgrow a broadcast at 100× SF — the pair
-    * stream exchanges on the item key it already carries, no sort of
-    * either side
-    * (spec-pinned in PlanShapeSpec). Ratios are exact-integer-valued
-    * double divisions, rounded once — cross-engine stable. */
+    * count a one-row broadcast scalar. The two item-support lookups are
+    * shuffled-hash joins (the item side is catalog-dimension-sized and
+    * outgrows a broadcast at 100× SF): the pair stream exchanges on the
+    * item key it already carries, no sort of either side (spec-pinned in
+    * PlanShapeSpec). Ratios are exact-integer-valued double divisions,
+    * rounded once — cross-engine stable. */
   def assocRules(items: DataFrame, orderCol: String, itemCol: String,
                  topK: Int): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
@@ -197,15 +196,11 @@ object Graph {
     val sa = li.groupBy(col(itemCol))
       .agg(countDistinct(col(orderCol)).as("__s"))
     val nb = li.agg(countDistinct(col(orderCol)).as("__N"))
-    // item-support side is bounded by the distinct-item projection
-    val bcast = resolveBroadcast(sa)
-    val side = (d: DataFrame) =>
-      if (bcast) broadcast(d) else d.hint("shuffle_hash")
     sab
-      .join(side(sa.select(col(itemCol).as("part_a"), col("__s").as("s_a"))),
-        "part_a")
-      .join(side(sa.select(col(itemCol).as("part_b"), col("__s").as("s_b"))),
-        "part_b")
+      .join(sa.select(col(itemCol).as("part_a"), col("__s").as("s_a"))
+        .hint("shuffle_hash"), "part_a")
+      .join(sa.select(col(itemCol).as("part_b"), col("__s").as("s_b"))
+        .hint("shuffle_hash"), "part_b")
       .crossJoin(broadcast(nb))
       .orderBy(col("support").desc, col("part_a"), col("part_b"))
       .limit(topK)
@@ -240,7 +235,7 @@ object Graph {
     val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"))
       .repartition(par, col("__s"))
       .localCheckpoint()
-    bfsLoop(e, source, maxDepth)
+    bfsLoop(e, seed(e.sparkSession, source), 1L, Nil, maxDepth)
   }
 
   /** BFS over an UNDIRECTED pair list (`uCol` < `vCol`), source = the
@@ -281,36 +276,45 @@ object Graph {
           Dedup.freeCheckpoints(e)
           e.sparkSession.range(0)
             .select(col("id").as("node"), col("id").cast("int").as("lvl"))
-        } else withoutAqe(e.sparkSession)(bfsLoop(e, srcRow.get(0), maxDepth))
+        } else withoutAqe(e.sparkSession)(
+          bfsLoop(e, seed(e.sparkSession, srcRow.get(0)), 1L, Nil, maxDepth))
     }
 
+  /** The one-row level-0 label table of a single-source BFS. */
+  private def seed(sess: SparkSession, source: Any): DataFrame =
+    sess.range(1).select(lit(source).as("__n"), lit(0).as("__lvl"))
+
   /** Shared level-synchronous loop over a CHECKPOINTED (__s, __t) edge
-    * frame pre-partitioned on __s. Each round joins the round-(i−1)
-    * frontier against the edge list and folds discoveries in with the
-    * min-aggregate. ONE barrier per round: the label table
-    * is lazily checkpoint-marked and the liveness `count()` is the action
-    * that materializes it — the pre-r11 eager-checkpoint-then-count shape
-    * paid two jobs per level for the same blocks. Frees `e` and every
-    * round's blocks before returning. */
-  private def bfsLoop(e: DataFrame, source: Any, maxDepth: Int): DataFrame = {
+    * frame pre-partitioned on __s. `seeds` is the level-0 label table —
+    * (keys…, __n, __lvl = 0), `nSeeds` rows — where `keys` name the
+    * searches that share the loop: none for a single source, the source
+    * id for a multi-source BFS, whose labels are then keyed
+    * (keys…, __n). Each round joins the round-(i−1) frontier against the
+    * edge list and folds discoveries in with the min-aggregate. ONE
+    * barrier per round: the label table is lazily checkpoint-marked and
+    * the liveness `count()` is the action that materializes it, so every
+    * round plans over the previous round's blocks and the plan does not
+    * grow with the round count. Returns (keys…, node, lvl); frees `e`
+    * and every round's blocks before returning. */
+  private def bfsLoop(e: DataFrame, seeds: DataFrame, nSeeds: Long,
+                      keys: Seq[String], maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
-    var labels = e.sparkSession.range(1)
-      .select(lit(source).as("__n"), lit(0).as("__lvl"))
-      .localCheckpoint()
+    val k = keys.map(col)
+    var labels = seeds.localCheckpoint()
     val spent = scala.collection.mutable.ArrayBuffer(e, labels)
     // early exit on a dead frontier — a diameter-3 graph pays 3 rounds,
     // not maxDepth; the label count comes from the SAME job that
     // materializes the round's checkpoint blocks
-    var known = 1L
+    var known = nSeeds
     var i = 1
     var frontierAlive = true
     while (i <= maxDepth && frontierAlive) {
       val frontier = labels.filter(col("__lvl") === i - 1)
-        .select(col("__n").as("__s"))
+        .select(k :+ col("__n").as("__s"): _*)
       val next = e.join(frontier, Seq("__s"))
-        .select(col("__t").as("__n"), lit(i).as("__lvl"))
+        .select(k :+ col("__t").as("__n") :+ lit(i).as("__lvl"): _*)
       labels = labels.unionByName(next)
-        .groupBy(col("__n")).agg(min(col("__lvl")).as("__lvl"))
+        .groupBy(k :+ col("__n"): _*).agg(min(col("__lvl")).as("__lvl"))
         .localCheckpoint(eager = false)
       spent += labels
       val now = labels.count()
@@ -319,7 +323,7 @@ object Graph {
       i += 1
     }
     val result = labels
-      .select(col("__n").as("node"), col("__lvl").as("lvl"))
+      .select(k :+ col("__n").as("node") :+ col("__lvl").as("lvl"): _*)
       .localCheckpoint()
     Dedup.freeCheckpoints(spent.toSeq: _*)
     result
@@ -1336,27 +1340,28 @@ object Graph {
       .min(BigInt(Long.MaxValue)).toLong
   }
 
-  /** SIZE-BASED tier selection for the graph family (r15 verdict #4):
-    * every node-/frontier-/score-sized broadcast or driver collect in
-    * this file runs only while `proxy` (the operator's edge frame, whose
-    * bytes BOUND the node-sized frames derived from it) times `factor`
-    * fits `graft.graph.broadcastLimitBytes` (default 256 MB — a frame
-    * every production driver/executor can hold); otherwise the
-    * distributed twin runs. The limit is the only selector: 0 forces the
-    * twin on any non-empty proxy, a very large value lets the tier run
-    * wherever its id columns are BIGINT. `factor` scales the proxy
+  /** SIZE-BASED tier selection: a driver tier runs only while `proxy`
+    * (the operator's input frame, whose bytes bound the driver state
+    * derived from it) times `factor` fits
+    * `graft.graph.broadcastLimitBytes` (default 256 MB — a frame every
+    * production driver can hold); otherwise the distributed twin runs.
+    * It picks the path and nothing else: no twin reads it, so a twin's
+    * joins are planned by Spark from observed sizes. Its two callers are
+    * the tier gates [[collectEdges]] and Dedup's bitmap gate. 0 forces
+    * the twin on any non-empty proxy, a very large value lets the tier
+    * run wherever its id columns are BIGINT. `factor` scales the proxy
     * where the driver state can outgrow the edge frame (multi-source
-    * visited state ≈ nSources × node frame). Operators that decide
-    * before anything materializes ride the optimizer's stats estimate;
-    * operators that checkpoint first (triangle/support family, HITS,
-    * the Louvain audit) resolve from measured block sizes. */
+    * visited state ≈ nSources × node frame). A proxy that is not yet
+    * materialized rides the optimizer's stats estimate; a checkpointed
+    * one (Dedup's rep table, the Louvain audit's edges) resolves from
+    * measured block sizes. */
   private[graft] def resolveBroadcast(proxy: DataFrame,
                                       factor: Long = 1L): Boolean =
     materializedBytes(proxy) <=
       broadcastLimitBytes(proxy.sparkSession) / math.max(1L, factor)
 
   /** `graft.graph.broadcastLimitBytes` (default 256 MB): the one byte
-    * budget of every driver tier and broadcast gate. */
+    * budget of every driver tier. */
   private def broadcastLimitBytes(sess: SparkSession): Long =
     sess.conf.get("graft.graph.broadcastLimitBytes", (256L << 20).toString).toLong
 
@@ -1383,17 +1388,15 @@ object Graph {
     * intersection), engineered so the wedge stream — the one
     * intermediate that dwarfs the graph (41 M wedges over 1.2 M edges on
     * the co-purchase fixture) — is never generated at all:
-    *  - orientation: edges join the degree table TWICE; deg is
-    *    node-sized (≪ |E|), so both joins are `broadcast()` hash joins —
-    *    one map-only pass over the checkpointed edge blocks. Degree
-    *    orientation bounds every out-degree by O(√|E|) — the
-    *    graph-analytics skew defense, and here also the intersection
+    *  - orientation: edges join the node-sized (≪ |E|) degree table
+    *    TWICE. Degree orientation bounds every out-degree by O(√|E|) —
+    *    the graph-analytics skew defense, and here also the intersection
     *    length bound;
     *  - adjacency: out-edges fold IN-ROW into per-node SORTED neighbor
     *    arrays (ONE s-keyed exchange of the |E| stream; node-sized
-    *    result, broadcastable);
+    *    result);
     *  - count: each oriented edge (s, t) picks up both endpoints'
-    *    arrays from the broadcast and contributes |N⁺(s) ∩ N⁺(t)| via
+    *    arrays and contributes |N⁺(s) ∩ N⁺(t)| via
     *    [[org.apache.spark.sql.graft.SortedLongOverlap]] — a codegen'd
     *    two-cursor primitive merge, zero allocation — summed map-side.
     *    Each triangle is counted exactly once (orientation makes it a
@@ -1405,19 +1408,19 @@ object Graph {
     * 41 M-row generate/probe stages were the whole cost. All-integer →
     * bit-identical cross-run/partitioning/engine; the DuckDB oracle
     * replays the same triangle set as the portable wedge/close SQL.
-    * Past the [[resolveBroadcast]] limit the broadcasts become node-keyed
-    * shuffle joins — the billion-edge cluster path where deg/adjacency outgrow
-    * the driver (same semantics, spec-pinned). */
+    * Every join strategy is Spark's choice from observed sizes: broadcast
+    * while the node-sized sides are small, shuffle joins once they
+    * outgrow the broadcast threshold. */
   def triangleCount(edges: DataFrame, uCol: String, vCol: String): DataFrame = {
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
-    val result = triangleBody(e, resolveBroadcast(e)).ckpt()
+    val result = triangleBody(e).ckpt()
     Dedup.freeCheckpoints(e)
     result
   }
 
-  private def triangleBody(e: DataFrame, bcast: Boolean): DataFrame =
-    edgesWithAdjacency(e, bcast)
+  private def triangleBody(e: DataFrame): DataFrame =
+    edgesWithAdjacency(e)
       .agg(coalesce(sum(org.apache.spark.sql.graft.SortedLongOverlap
           .of(col("__na"), col("__nb"))), lit(0L))
         .cast("bigint").as("n_triangles"))
@@ -1437,28 +1440,27 @@ object Graph {
                              vCol: String): DataFrame = {
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
-    val result = clusteringBody(e, resolveBroadcast(e)).ckpt()
+    val result = clusteringBody(e).ckpt()
     Dedup.freeCheckpoints(e)
     result
   }
 
-  private def clusteringBody(e: DataFrame, bcast: Boolean): DataFrame = {
+  private def clusteringBody(e: DataFrame): DataFrame = {
     // explode(sorted merge intersect) drops empty/null W in-stage — the
     // inner-close semantics; the native kernel replaces array_intersect's
     // per-edge hash-set build with one linear merge over primitive longs
-    val tri = edgesWithAdjacency(e, bcast)
+    val tri = edgesWithAdjacency(e)
       .select(col("s"), col("t"),
         explode(org.apache.spark.sql.graft.SortedLongIntersect
           .of(col("__na"), col("__nb"))).as("w"))
     val tc = tri.select(explode(array(col("s"), col("t"), col("w"))).as("n"))
       .groupBy(col("n")).agg(count(lit(1)).as("t"))
-    // tc is node-sized after the fold → broadcast into the degree frame
-    // (LEFT: zero-triangle nodes keep n_tri = 0); the final projection
-    // is the SQL tail's expression text verbatim, so the one float
-    // division parses through the same literal/cast path
-    val hint = (d: DataFrame) => if (bcast) broadcast(d) else d
+    // tc is node-sized after the fold; LEFT into the degree frame keeps
+    // zero-triangle nodes at n_tri = 0. The final projection is the SQL
+    // tail's expression text verbatim, so the one float division parses
+    // through the same literal/cast path
     degreeTable(e).filter(col("d") >= 2)
-      .join(hint(tc), Seq("n"), "left")
+      .join(tc, Seq("n"), "left")
       .selectExpr("n AS node", "CAST(COALESCE(t, 0) AS BIGINT) AS n_tri",
         "CAST(d AS BIGINT) AS degree",
         "round(2.0 * COALESCE(t, 0) / " +
@@ -1492,8 +1494,8 @@ object Graph {
     * `collect_set` doing the edge dedup inside it, so no pair-level
     * distinct exchange), checkpointed as a node-sized barrier; each
     * (node, nbr) end already carries its own degree, and the
-    * neighbor's comes from one `broadcast()` hash join of the
-    * node-sized degree projection while [[resolveBroadcast]] passes. */
+    * neighbor's comes from one join of the node-sized degree
+    * projection. */
   private def degreeEnds(pairs: DataFrame, uCol: String, vCol: String)
                         (fold: DataFrame => DataFrame): DataFrame = {
     val o = orientedAdjacency(pairs, uCol, vCol)
@@ -1502,11 +1504,10 @@ object Graph {
       .select(col("__s").as("__n"), col("__nbrs"),
         size(col("__nbrs")).cast("bigint").as("__d"))
       .ckpt()
-    val bcast = resolveBroadcast(adj)
     val deg = adj.select(col("__n").as("__m"), col("__d").as("__db"))
     val result = fold(adj
       .select(col("__d").as("__da"), explode(col("__nbrs")).as("__m"))
-      .join(if (bcast) broadcast(deg) else deg, Seq("__m")))
+      .join(deg, Seq("__m")))
       .ckpt()
     Dedup.freeCheckpoints(adj)
     result
@@ -1727,14 +1728,14 @@ object Graph {
 
   /** MULTI-SOURCE bounded BFS over an undirected pair list: hop counts
     * ≤ `maxDepth` from each of the `nSources` SMALLEST node ids, as one
-    * shared loop — (src, node, lvl). The label table is keyed
-    * (src, node), so one persist chain (AQE off, one straight-line
-    * action) walks all sources simultaneously instead
-    * of paying the per-round barrier chain once per source — the
-    * centrality fan-out pattern (closeness/harmonic need BFS from many
-    * seeds; at scale you batch the seeds, not the loop). Integer-exact
-    * cross-engine; the DuckDB twin is the depth-bounded recursive UNION
-    * carrying the src column. */
+    * shared loop — (src, node, lvl). The twin runs [[bfsLoop]] (AQE off)
+    * with its label table keyed (src, node), so one loop walks all
+    * sources simultaneously instead of paying the per-round barrier
+    * chain once per source — the centrality fan-out pattern
+    * (closeness/harmonic need BFS from many seeds; at scale you batch
+    * the seeds, not the loop). Integer-exact cross-engine; the DuckDB
+    * twin is the depth-bounded recursive UNION carrying the src
+    * column. */
   def multiSourceBfs(pairs: DataFrame, uCol: String, vCol: String,
                      nSources: Int, maxDepth: Int): DataFrame = {
     require(nSources >= 1, s"nSources must be >= 1, got $nSources")
@@ -1756,32 +1757,19 @@ object Graph {
       case None =>
         val e = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)), uCol, vCol)
           .localCheckpoint()
-        val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        try withoutAqe(e.sparkSession) {
+        withoutAqe(e.sparkSession) {
           // every node appears as a source in the oriented frame; the
-          // distinct rides the __s partitioning (exchange-free)
-          val srcs = e.select(col("__s")).distinct()
-            .orderBy(col("__s")).limit(nSources)
-          var labels = srcs.select(col("__s").as("__src"), col("__s").as("__n"),
-            lit(0).as("__lvl"))
-          var i = 1
-          while (i <= maxDepth) {
-            val frontier = labels.filter(col("__lvl") === i - 1)
-              .select(col("__src"), col("__n").as("__s"))
-            val next = e.join(frontier, Seq("__s"))
-              .select(col("__src"), col("__t").as("__n"), lit(i).as("__lvl"))
-            labels = labels.unionByName(next)
-              .groupBy(col("__src"), col("__n")).agg(min(col("__lvl")).as("__lvl"))
-              .persist()
-            cached += labels
-            i += 1
-          }
-          labels.select(col("__src").as("src"), col("__n").as("node"),
-              col("__lvl").as("lvl"))
-            .localCheckpoint()
-        } finally {
-          cached.foreach(_.unpersist(blocking = false))
-          Dedup.freeCheckpoints(e)
+          // distinct rides the __s partitioning (exchange-free), and the
+          // nSources seed ids collect to the driver (index-sized, like
+          // [[pathCountsLoop]]'s), so the seed count is known up front
+          val seedIds = e.select(col("__s")).distinct()
+            .orderBy(col("__s")).limit(nSources).collect().map(_.get(0))
+          val idType = e.schema("__s").dataType
+          val seeds = localDf(e.sparkSession, StructType(Seq(
+              StructField("src", idType), StructField("__n", idType),
+              StructField("__lvl", IntegerType, nullable = false))),
+            seedIds.map(v => Row(v, v, 0)).toSeq)
+          bfsLoop(e, seeds, seedIds.length, Seq("src"), maxDepth)
         }
     }
   }
@@ -1818,25 +1806,23 @@ object Graph {
     * partitioning ⊆ grouping) — the candidate stream, the one
     * intermediate that dwarfs the state (Σ frontier degrees), never
     * exchanges at all. Unlike the min-folds, σ SUMS over edges, so a
-    * duplicate pair is a parallel path and doubles the count: the input
-    * must be DISTINCT, either upstream (default contract) or via
-    * `dedupEdges = true`, which accepts a raw pair stream and dedups ON
-    * the oriented target-partitioned frame — the distinct rides
-    * HashPartitioning(__t) ⊆ {__s, __t} (exchange-free), replacing the
-    * caller-side repartition + distinct EXCHANGE of the whole pair
-    * stream with an in-place agg pass — one full exchange of the pair
-    * stream instead of two. */
+    * duplicate pair would be a parallel path and double the count: both
+    * paths read the SIMPLE graph the input implies (a pair repeated in
+    * either orientation is one edge, the [[trussPeel]] contract). The
+    * twin dedups ON the oriented target-partitioned frame — the distinct
+    * rides HashPartitioning(__t) ⊆ {__s, __t} (exchange-free), so a raw
+    * pair stream costs one full exchange, not a caller-side repartition
+    * + distinct on top. */
   def pathCounts(pairs: DataFrame, uCol: String, vCol: String,
-                 nSources: Int, maxDepth: Int,
-                 dedupEdges: Boolean = false): DataFrame = {
+                 nSources: Int, maxDepth: Int): DataFrame = {
     require(nSources >= 1, s"nSources must be >= 1, got $nSources")
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
     // visited state is ~ nSources x the node frame — scale the proxy
     collectEdges(pairs, uCol, vCol, factor = nSources) match {
       case Some(g) =>
-        // the level-synchronous σ-fold over one CSR (12 → 2 jobs at sf0.1);
-        // dedup matches the operator's parallel-path contract
-        val (off, nbr) = driverCsr(g, dedupEdges)
+        // the level-synchronous σ-fold over one CSR (12 → 2 jobs at sf0.1)
+        // of the simple graph
+        val (off, nbr) = driverCsr(g, dedup = true)
         val out = (0 until math.min(nSources, g.n)).flatMap { s =>
           val (frontiers, sig) = csrSigma(off, nbr, s, maxDepth)
           frontiers.indices.flatMap(d =>
@@ -1847,10 +1833,9 @@ object Graph {
             StructField("lvl", IntegerType, nullable = false),
             StructField("paths", LongType, nullable = false))), out.toSeq)
       case None =>
-        val oriented = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)),
-          uCol, vCol, partitionByTarget = true)
-        val e = checkpointPartitioned(
-          if (dedupEdges) oriented.distinct() else oriented)
+        val e = checkpointPartitioned(orientedAdjacency(
+          pairs.filter(nonNull(uCol, vCol)), uCol, vCol,
+          partitionByTarget = true).distinct())
         try withoutAqe(e.sparkSession) {
           val state = pathCountsLoop(e, nSources, maxDepth)
           state.select(col("__src").as("src"), col("__n").as("node"),
@@ -1959,10 +1944,10 @@ object Graph {
     * of the pair stream total, reused by BOTH passes. Output: (node,
     * betweenness) over every node reached at level ≥ 1 — deepest-level
     * nodes carry δ = 0, sources appear only where another source's
-    * tree reaches them. */
+    * tree reaches them. Like [[pathCounts]], both paths read the simple
+    * graph the input implies. */
   def betweennessSampled(pairs: DataFrame, uCol: String, vCol: String,
                          nSources: Int, maxDepth: Int,
-                         dedupEdges: Boolean = false,
                          scaleBits: Int = 20): DataFrame = {
     require(nSources >= 1, s"nSources must be >= 1, got $nSources")
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
@@ -1974,11 +1959,11 @@ object Graph {
       case Some(g) =>
         // both Brandes passes over one CSR, replicating the twin's ladder
         // exactly: deepest level c = SCALE div σ; F(v) = Σ c(w) pushed from
-        // every level-(l+1) node w along its (possibly duplicated) incident
-        // entries; δ = σ·F accumulated per NODE across sources;
+        // every level-(l+1) node w along its incident edges; δ = σ·F
+        // accumulated per NODE across sources;
         // c = (SCALE + δ) div σ. Only nodes discovered at levels
         // 1..maxDepth emit (seeds do not), like the twin's level union.
-        val (off, nbr) = driverCsr(g, dedupEdges)
+        val (off, nbr) = driverCsr(g, dedup = true)
         val accF = new Array[Long](g.n)
         val cArr = new Array[Long](g.n)
         val deltaAcc = new Array[Long](g.n)
@@ -1989,8 +1974,6 @@ object Graph {
           frontiers(maxDepth).foreach(t => cArr(t) = scale / sig(t))
           var l = maxDepth - 1
           while (l >= 1) {
-            // duplicate CSR entries push twice — the twin's fold joins the
-            // same doubled stream
             frontiers(l + 1).foreach { w0 =>
               var j = off(w0)
               while (j < off(w0 + 1)) { accF(nbr(j)) += cArr(w0); j += 1 }
@@ -2012,10 +1995,9 @@ object Graph {
             StructField("betweenness", LongType, nullable = false))),
           emits.indices.collect { case i if emits(i) => Row(g.ids(i), deltaAcc(i)) })
       case None =>
-        val oriented = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)),
-          uCol, vCol, partitionByTarget = true)
-        val e = checkpointPartitioned(
-          if (dedupEdges) oriented.distinct() else oriented)
+        val e = checkpointPartitioned(orientedAdjacency(
+          pairs.filter(nonNull(uCol, vCol)), uCol, vCol,
+          partitionByTarget = true).distinct())
         // declared outside the try so a throwing loop body can't leak the
         // per-level checkpoint blocks (freed in the finally; freeing an
         // already-freed or never-materialized frame is a no-op)
@@ -2194,21 +2176,19 @@ object Graph {
     * is discovered exactly once at its oriented (s, t) edge, then its
     * THREE edges each collect one support count from the
     * triangle-corner stream (≈|△|·3 rows, never wedge-sized). The
-    * support fold is edge-keyed and broadcast back over the edge list
-    * (support frame ≤ |E|); past the [[resolveBroadcast]] limit the
-    * shuffle path runs throughout. Support is what k-truss peels on and what
+    * support fold is edge-keyed and LEFT-joins back over the edge list
+    * (support frame ≤ |E|). Support is what k-truss peels on and what
     * common-neighbor link prediction ranks by. */
   def edgeSupport(edges: DataFrame, uCol: String, vCol: String): DataFrame = {
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
-    val bAdj = resolveBroadcast(e)
-    val result = edgeSupportBody(e, bAdj).ckpt()
+    val result = edgeSupportBody(e).ckpt()
     Dedup.freeCheckpoints(e)
     result
   }
 
-  private def edgeSupportBody(e: DataFrame, bcast: Boolean): DataFrame = {
-    val tri = edgesWithAdjacency(e, bcast)
+  private def edgeSupportBody(e: DataFrame): DataFrame = {
+    val tri = edgesWithAdjacency(e)
       .select(col("s"), col("t"),
         explode(org.apache.spark.sql.graft.SortedLongIntersect
           .of(col("__na"), col("__nb"))).as("w"))
@@ -2221,8 +2201,7 @@ object Graph {
           greatest(col("t"), col("w")).as("v")))).as("__te"))
       .select(col("__te.u").as("u"), col("__te.v").as("v"))
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("__sup"))
-    val hint = (d: DataFrame) => if (bcast) broadcast(d) else d
-    e.join(hint(sup), Seq("u", "v"), "left")
+    e.join(sup, Seq("u", "v"), "left")
       .select(col("u"), col("v"),
         coalesce(col("__sup"), lit(0L)).cast("bigint").as("support"))
   }
@@ -2964,19 +2943,17 @@ object Graph {
         greatest(col(uCol), col(vCol)).as("v"))
       .distinct()
       .ckpt()
-    // resolved AFTER the checkpoint so the estimate reads measured bytes
-    val bAdj = resolveBroadcast(e)
     val spent = scala.collection.mutable.ArrayBuffer(e)
     var r = 0
     while (r < rounds) {
-      e = edgeSupportBody(e, bAdj)
+      e = edgeSupportBody(e)
         .filter(col("support") >= k - 2)
         .select(col("u"), col("v"))
         .ckpt()
       spent += e
       r += 1
     }
-    val result = edgeSupportBody(e, bAdj)
+    val result = edgeSupportBody(e)
       .groupBy(col("support")).agg(count(lit(1)).as("n_edges"))
       .ckpt()
     Dedup.freeCheckpoints(spent.toSeq: _*)
@@ -2988,21 +2965,18 @@ object Graph {
     * stream) and jaccard = common / (d(u) + d(v) − common), the
     * common-neighbors link-strength ranking. The division is ONE IEEE op
     * over exact integers (bit-identical cross-engine); ties order by
-    * (u, v), so the top-k cut is deterministic. Degrees broadcast
-    * (node-sized). */
+    * (u, v), so the top-k cut is deterministic. Degrees join in from the
+    * node-sized degree table. */
   def edgeJaccardTopK(edges: DataFrame, uCol: String, vCol: String,
                       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
-    // resolved AFTER the checkpoint so the estimate reads measured bytes
-    val bAdj = resolveBroadcast(e)
-    val hint = (d: DataFrame) => if (bAdj) broadcast(d) else d
     val deg = degreeTable(e)
-    val result = edgeSupportBody(e, bAdj)
-      .join(hint(deg.select(col("n").as("__un"), col("d").as("__du"))),
+    val result = edgeSupportBody(e)
+      .join(deg.select(col("n").as("__un"), col("d").as("__du")),
         col("u") === col("__un"))
-      .join(hint(deg.select(col("n").as("__vn"), col("d").as("__dv"))),
+      .join(deg.select(col("n").as("__vn"), col("d").as("__dv")),
         col("v") === col("__vn"))
       .selectExpr("u", "v", "support AS common",
         "round(CAST(support AS DOUBLE) / (CAST(__du AS DOUBLE) " +
@@ -3024,11 +2998,10 @@ object Graph {
                           vCol: String): DataFrame = {
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
-    val bAdj = resolveBroadcast(e)
     val wedges = degreeTable(e).agg(
       coalesce(sum(expr("d * (d - 1) div 2")), lit(0L))
         .cast("bigint").as("n_wedges"))
-    val result = wedges.crossJoin(triangleBody(e, bAdj))
+    val result = wedges.crossJoin(triangleBody(e))
       .selectExpr("n_wedges", "n_triangles",
         "round(CASE WHEN n_wedges = 0 THEN NULL " +
           "ELSE CAST(3 AS DOUBLE) * CAST(n_triangles AS DOUBLE) " +
@@ -3046,16 +3019,15 @@ object Graph {
 
   /** Degree-oriented edge list (s, t, dt): each edge re-pointed from its
     * lower-(degree, id) endpoint, carrying the TARGET's degree for the
-    * wedge ordering. The two degree lookups are broadcast hash joins
-    * (deg is node-sized) — map-only over the edge blocks. */
-  private def orientEdges(e: DataFrame, bcast: Boolean): DataFrame = {
+    * wedge ordering. The two degree lookups join the node-sized degree
+    * table. */
+  private def orientEdges(e: DataFrame): DataFrame = {
     val deg = degreeTable(e)
-    val hint = (d: DataFrame) => if (bcast) broadcast(d) else d
     val fwd = col("__da") < col("__db") ||
       (col("__da") === col("__db") && col("u") < col("v"))
-    e.join(hint(deg.select(col("n").as("__na"), col("d").as("__da"))),
+    e.join(deg.select(col("n").as("__na"), col("d").as("__da")),
         col("u") === col("__na"))
-      .join(hint(deg.select(col("n").as("__nb"), col("d").as("__db"))),
+      .join(deg.select(col("n").as("__nb"), col("d").as("__db")),
         col("v") === col("__nb"))
       .select(
         when(fwd, col("u")).otherwise(col("v")).as("s"),
@@ -3069,10 +3041,9 @@ object Graph {
     * out-edges, which callers treat as the empty intersection). The
     * adjacency fold is one s-keyed exchange (explicit-count repartition:
     * the stream is byte-light, the AQE-coalesce shape) to a node-sized
-    * frame; both lookups are broadcast hash joins by default, so the
-    * edge stream itself never exchanges. */
-  private def edgesWithAdjacency(e: DataFrame, bcast: Boolean): DataFrame = {
-    val ore = orientEdges(e, bcast)
+    * frame that both lookups join. */
+  private def edgesWithAdjacency(e: DataFrame): DataFrame = {
+    val ore = orientEdges(e)
     val adj = ore
       .repartition(ore.sparkSession.sparkContext.defaultParallelism,
         col("s"))
@@ -3080,11 +3051,10 @@ object Graph {
       // sorted-set native fold (primitive buffers, map-side combine) —
       // (s, t) is distinct by the caller contract, so set ≡ list here
       .agg(sortedSetOf(ore, "t").as("__adj"))
-    val hint = (d: DataFrame) => if (bcast) broadcast(d) else d
     ore.select(col("s"), col("t"))
-      .join(hint(adj.select(col("s").as("__js"), col("__adj").as("__na"))),
+      .join(adj.select(col("s").as("__js"), col("__adj").as("__na")),
         col("s") === col("__js"))
-      .join(hint(adj.select(col("s").as("__jt"), col("__adj").as("__nb"))),
+      .join(adj.select(col("s").as("__jt"), col("__adj").as("__nb")),
         col("t") === col("__jt"), "left")
       .select(col("s"), col("t"), col("__na"), col("__nb"))
   }

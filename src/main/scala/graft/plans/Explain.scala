@@ -90,7 +90,7 @@ object Explain {
   /** `plan` with [[Noise]] and AQE query-stage ids (the bare `Arguments`
     * line of a `(n) …QueryStage` node) normalized, so two executions of
     * one shape compare equal. */
-  private def normalize(plan: String): String = {
+  private[plans] def normalize(plan: String): String = {
     var stage = false
     plan.linesIterator.map { l =>
       val n = Noise.foldLeft(l) { case (acc, (p, r)) => acc.replaceAll(p, r) }

@@ -17,6 +17,18 @@ trait SparkSpec { self: Suite =>
     try body
     finally was.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
+
+  /** Runs `body` with Spark's auto-broadcast off, so every join without a
+    * hint plans as a shuffle join — the shape a twin runs once its sides
+    * outgrow the broadcast threshold; the previous setting is restored
+    * afterwards. */
+  def withShuffleJoins[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body
+    finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 object SparkSpec {

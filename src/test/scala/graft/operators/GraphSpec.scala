@@ -184,8 +184,8 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     }
     def profile = Graph.neighborDegreeFromPairs(raw, "u", "v")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(profile == wantProfile, "broadcast path")
-    assert(withTwins(profile) == wantProfile, "twin")
+    assert(profile == wantProfile, "broadcast joins")
+    assert(withShuffleJoins(profile) == wantProfile, "shuffle joins")
     val n = ends.size.toDouble
     val sx = ends.map(_._1).sum.toDouble
     val sxy = ends.map(p => p._1 * p._2).sum.toDouble
@@ -249,9 +249,9 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       val got = Graph.triangleCount(df, "u", "v").collect()
       assert(got.length == 1 && got(0).getLong(0) == tris.size.toLong,
         s"seed=$seed want=${tris.size}")
-      val shuffled = withTwins(Graph.triangleCount(df, "u", "v")
+      val shuffled = withShuffleJoins(Graph.triangleCount(df, "u", "v")
         .collect()(0).getLong(0))
-      assert(shuffled == tris.size.toLong, s"seed=$seed shuffle path")
+      assert(shuffled == tris.size.toLong, s"seed=$seed shuffle joins")
     }
   }
 
@@ -279,8 +279,8 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       assert(gt == t && gd == d, s"node $n counts")
       assert(math.abs(gcc - cc) < 2e-6, s"node $n cc $gcc vs $cc")
     }
-    // shuffle-join path: identical frame
-    val shuffled = withTwins(Graph.clusteringCoefficients(df, "u", "v")
+    // shuffle joins: identical frame
+    val shuffled = withShuffleJoins(Graph.clusteringCoefficients(df, "u", "v")
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
       .toMap)
@@ -302,8 +302,8 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     def got = Graph.neighborDegreeFromPairs(df, "u", "v")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
-    assert(got == want, "broadcast path")
-    assert(withTwins(got) == want, "twin")
+    assert(got == want, "broadcast joins")
+    assert(withShuffleJoins(got) == want, "shuffle joins")
   }
 
   test("connectedComponentsMinLabel equals brute-force components and the " +
@@ -372,6 +372,27 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       lvl.map { case (n, l) => (s, n) -> l }
     }.toMap
     assert(got == want)
+  }
+
+  test("multiSourceBfs' twin checkpoints every round: at maxDepth 8 no " +
+      "executed plan nests more than a handful of InMemoryRelations, and " +
+      "it equals the driver tier") {
+    import spark.implicits._
+    // a 12-node path plus the chord 3-7: node 12 is 8 hops from node 1,
+    // so all 8 rounds discover nodes
+    val es = (1L until 12L).map(i => (i, i + 1)) :+ ((3L, 7L))
+    val df = es.toDF("u", "v")
+    def levels(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    val tier = levels(Graph.multiSourceBfs(df, "u", "v", nSources = 3,
+      maxDepth = 8))
+    val (twin, ran) = withTwins(graft.plans.Explain.capture(spark)(
+      levels(Graph.multiSourceBfs(df, "u", "v", nSources = 3, maxDepth = 8))))
+    assert(twin == tier)
+    assert(tier.keySet.map(_._1) == Set(1L, 2L, 3L) && tier((1L, 12L)) == 8)
+    val nested = ran.map(p => "InMemoryRelation".r.findAllIn(p.toString).size)
+    assert(ran.nonEmpty && nested.max <= 4,
+      s"InMemoryRelation nodes per executed plan: ${nested.mkString(", ")}")
   }
 
   test("labelPropagate (frontier-delta rounds) equals the retained " +
@@ -710,24 +731,33 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       maxDepth))) == want.toMap)
   }
 
-  test("pathCounts twins: dedupEdges=true on a duplicated raw pair " +
-      "stream equals the default on the distinct input, and " +
-      "the shuffled-hash anti twin matches row-for-row") {
+  test("pathCounts and betweennessSampled read the simple graph: a raw " +
+      "pair stream with repeats in both orientations equals the distinct " +
+      "input, driver tier and twin alike") {
     import spark.implicits._
     val (es, _) = randomGraph(41, 19, 120)
-    val distinctDf = es.distinct.toDF("u", "v")
-    // duplicate every third pair — dedupEdges must collapse them or the
-    // σ sums double (a dup pair is a parallel path)
-    val rawDf = (es ++ es.zipWithIndex.collect { case (p, i) if i % 3 == 0 => p })
+    val distinctDf = es.toDF("u", "v")
+    // repeat every third pair and reverse every fifth — both must
+    // collapse or the σ sums double (a repeated pair is a parallel path)
+    val rawDf = (es ++ es.zipWithIndex.collect { case (p, i) if i % 3 == 0 => p }
+        ++ es.zipWithIndex.collect { case ((u, v), i) if i % 5 == 0 => (v, u) })
       .toDF("u", "v")
-    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getInt(2), r.getLong(3))))
-      .toMap
-    val base = key(Graph.pathCounts(distinctDf, "u", "v", 3, 4))
-    assert(key(Graph.pathCounts(rawDf, "u", "v", 3, 4,
-      dedupEdges = true)) == base)
-    assert(withTwins(key(Graph.pathCounts(distinctDf, "u", "v", 3, 4)))
-      == base)
+    def paths(df: org.apache.spark.sql.DataFrame) =
+      Graph.pathCounts(df, "u", "v", 3, 4).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getInt(2), r.getLong(3))))
+        .toMap
+    def betweenness(df: org.apache.spark.sql.DataFrame) =
+      Graph.betweennessSampled(df, "u", "v", 3, 4).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val basePaths = paths(distinctDf)
+    val baseBetweenness = betweenness(distinctDf)
+    assert(paths(rawDf) == basePaths, "pathCounts driver tier")
+    assert(betweenness(rawDf) == baseBetweenness, "betweennessSampled driver tier")
+    withTwins {
+      assert(paths(rawDf) == basePaths, "pathCounts twin")
+      assert(paths(distinctDf) == basePaths, "pathCounts twin, distinct input")
+      assert(betweenness(rawDf) == baseBetweenness, "betweennessSampled twin")
+    }
   }
 
   test("pathCounts edge cases: maxDepth = 0 is the seed rows only; " +
@@ -830,11 +860,11 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     def gotHist = Graph.trussPeel(df, "u", "v", k = 4, rounds = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want, "broadcast path")
-    assert(gotHist == wantHist, "driver peel")
-    withTwins {
-      assert(got == want, "twin")
-      assert(gotHist == wantHist, "distributed peel")
+    assert(got == want, "broadcast joins")
+    assert(gotHist == wantHist, "peel, broadcast joins")
+    withShuffleJoins {
+      assert(got == want, "shuffle joins")
+      assert(gotHist == wantHist, "peel, shuffle joins")
     }
   }
 

@@ -253,70 +253,71 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     assert(!p.contains("Exchange"), s"no shuffle for a driver-sized top-k:\n${p.take(1500)}")
   }
 
-  test("assoc rules: item-support lookups broadcast by default; the " +
-      "twin past the size limit joins shuffled-hash (no sort, no " +
-      "broadcast of a 100x-SF catalog dimension)") {
+  test("the tier limit picks the path and nothing else: edgeSupport and " +
+      "assocRules execute the same plans at the default limit and at 1 byte") {
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.col
     val li = graft.Tables.load(spark, sf, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey"))
-    // nothing auto-broadcasts: the asserted shapes are the hinted ones
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val bc = graft.operators.Graph.assocRules(li, "l_orderkey",
-        "l_partkey", 20).queryExecution.executedPlan.toString
-      assert("BroadcastHashJoin".r.findAllIn(bc).size >= 2,
-        s"default path must broadcast both item-support sides:\n${bc.take(1500)}")
-      val sh = withTwins(graft.operators.Graph.assocRules(li, "l_orderkey",
-        "l_partkey", 20).queryExecution.executedPlan.toString)
-      assert("ShuffledHashJoin".r.findAllIn(sh).size >= 2,
-        s"twin must shuffled-hash both support joins:\n${sh.take(1500)}")
-      // the one-row basket-count scalar rides a broadcast NESTED-LOOP
-      // cross join in both paths; no HASH join may broadcast in the twin
-      assert(!sh.contains("BroadcastHashJoin"),
-        s"item-support sides must not broadcast in the twin:\n${sh.take(1500)}")
-      // and the two paths agree on the answer
-      val a = graft.operators.Graph.assocRules(li, "l_orderkey", "l_partkey", 20)
-        .collect().map(_.toSeq).toSeq
-      val b = withTwins(graft.operators.Graph.assocRules(li, "l_orderkey",
-        "l_partkey", 20).collect().map(_.toSeq).toSeq)
-      assert(a == b, "broadcast and shuffled twins must return identical rules")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    val edges = li.select(col("l_orderkey").as("u"), col("l_partkey").as("v"))
+      .filter(col("u") < col("v"))
+    val items = li.select(col("l_orderkey"), col("l_partkey"))
+    def support = graft.operators.Graph.edgeSupport(edges, "u", "v")
+    def rules = graft.operators.Graph.assocRules(items, "l_orderkey", "l_partkey", 20)
+    // the rows and every normalized plan executed while building and
+    // collecting the frame, at `limit` (None: the default)
+    def ran(limit: Option[String])(build: => DataFrame): (Set[Seq[Any]], Seq[String]) = {
+      limit.foreach(spark.conf.set("graft.graph.broadcastLimitBytes", _))
+      try {
+        val (rows, plans) = Explain.capture(spark)(build.collect().map(_.toSeq).toSet)
+        (rows, plans.map(p => Explain.normalize(Explain.formatted(p))))
+      } finally spark.conf.unset("graft.graph.broadcastLimitBytes")
+    }
+    // nothing auto-broadcasts: a BroadcastHashJoin below could only be a
+    // graft-side hint
+    withShuffleJoins {
+      for ((name, build) <- Seq[(String, () => DataFrame)](
+          "edgeSupport" -> (() => support), "assocRules" -> (() => rules))) {
+        val (a, pa) = ran(None)(build())
+        val (b, pb) = ran(Some("1"))(build())
+        assert(a.nonEmpty && a == b, s"$name must return the same rows")
+        assert(pa == pb, s"$name must execute the same plans at any limit:\n" +
+          pa.zipAll(pb, "", "").find { case (x, y) => x != y }
+            .fold("")(d => s"${d._1.take(1500)}\nvs\n${d._2.take(1500)}"))
+      }
+    }
   }
 
-  test("graph family AUTO-selects broadcast by materialized size: the " +
-      "default (no flag) broadcasts adjacency while the edge frame fits " +
-      "graft.graph.broadcastLimitBytes, and FLIPS to the shuffle twin " +
-      "when the frame exceeds the budget — no caller knowledge at 100x") {
+  test("assoc rules: item-support lookups join shuffled-hash at every " +
+      "limit (no sort, no broadcast of a 100x-SF catalog dimension)") {
     import org.apache.spark.sql.functions.col
-    val edges = graft.Tables.load(spark, sf, "lineitem")
-      .select(col("l_orderkey").as("u"), col("l_partkey").as("v"))
-      .filter(col("u") < col("v"))
-    // nothing auto-broadcasts at the Spark level: every BroadcastHashJoin
-    // below is the graft-side decision under test
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      // edgeSupport checkpoints its body, so the plans it executed are
-      // where the tier decision shows
-      def run(): (Set[Seq[Any]], String) = {
-        val (df, ran) = Explain.capture(spark)(
-          graft.operators.Graph.edgeSupport(edges, "u", "v"))
-        (df.collect().map(_.toSeq).toSet, ran.map(Explain.formatted).mkString("\n"))
+    val items = graft.Tables.load(spark, sf, "lineitem")
+      .select(col("l_orderkey"), col("l_partkey"))
+    def rules = graft.operators.Graph.assocRules(items, "l_orderkey", "l_partkey", 20)
+    // nothing auto-broadcasts: the asserted shapes are the hinted ones
+    withShuffleJoins {
+      for ((regime, p) <- Seq(
+          "default" -> rules.queryExecution.executedPlan.toString,
+          "twin" -> withTwins(rules.queryExecution.executedPlan.toString))) {
+        assert("ShuffledHashJoin".r.findAllIn(p).size >= 2,
+          s"$regime: both support joins must be shuffled-hash:\n${p.take(1500)}")
+        assert(!p.contains("BroadcastHashJoin") && !p.contains("SortMergeJoin"),
+          s"$regime: no support side may broadcast or sort:\n${p.take(1500)}")
       }
-      // default budget (256 MB): the fixture frame fits -> broadcast plan
-      val (a, bc) = run()
-      assert(bc.contains("BroadcastHashJoin"),
-        s"within budget the adjacency/degree lookups must broadcast:\n${bc.take(1500)}")
-      // a 1-byte budget simulates the frame outgrowing the driver: the
-      // SAME call (no flag) must flip to the shuffle twin
-      spark.conf.set("graft.graph.broadcastLimitBytes", "1")
-      val (b, sh) = run()
-      assert(!sh.contains("BroadcastHashJoin"),
-        s"past budget the auto path must not broadcast:\n${sh.take(1500)}")
-      // and both shapes agree on the answer
-      assert(a == b, "auto-broadcast and auto-shuffle twins must agree")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("graft.graph.broadcastLimitBytes")
+    }
+  }
+
+  test("association rules: the basket count reaches the pair stream as a " +
+      "broadcast, the item supports as shuffled-hash joins, and the top-20 " +
+      "is a heap merge") {
+    withShuffleJoins {
+      val p = planOf("ext_assoc_rules")
+      assert("ShuffledHashJoin".r.findAllIn(p).size >= 2 && !p.contains("BroadcastHashJoin"),
+        s"both support joins must be shuffled-hash:\n${p.take(1500)}")
+      // the one-row basket count rides a broadcast nested-loop cross join
+      assert(p.contains("BroadcastNestedLoopJoin"),
+        s"the basket count must broadcast:\n${p.take(1500)}")
+      assert(p.contains("TakeOrderedAndProject"),
+        s"top-20 must be a heap merge:\n${p.take(1500)}")
     }
   }
 
@@ -422,14 +423,5 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
       assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
         s"the scalar total must broadcast:\n${p.take(1500)}")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
-  test("association rules: item supports and basket count reach the pair " +
-      "stream as broadcasts (pair side never re-shuffles for the lookups)") {
-    val p = planOf("ext_assoc_rules")
-    assert("BroadcastHashJoin".r.findAllIn(p).size >= 2,
-      s"both support lookups must be broadcast joins:\n${p.take(1500)}")
-    assert(p.contains("TakeOrderedAndProject"),
-      s"top-20 must be a heap merge:\n${p.take(1500)}")
   }
 }
