@@ -108,6 +108,19 @@ object SparkEntry {
     ivfPqCoarseCache.computeIfAbsent(dir, d =>
       Similarity.trainPqCodebooks(t(s, d, "embeddings"), m = 1, k = 8, iters = 2)(0))
 
+  /** recall@k per query of an `approx` ranking against the `exact` one
+    * (both (query_id, neighbor_id, …) top-k frames): left join on
+    * (query, neighbor), hit count / k. Both id sets are deterministic
+    * cross-engine, so the recall is too. */
+  private def recallAtK(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.select(col("query_id"), col("neighbor_id"))
+      .join(broadcast(approx.select(col("query_id"), col("neighbor_id"),
+        lit(1).as("__hit"))), Seq("query_id", "neighbor_id"), "left")
+      .groupBy(col("query_id"))
+      .agg(count(lit(1)).as("k"), count(col("__hit")).as("n_hit"))
+      .select(col("query_id"), col("n_hit"), col("k"),
+        round(col("n_hit").cast("double") / col("k"), 6).as("recall"))
+
   /** Bucketed twins of (orders, customer) per sf dir — the bucketed WRITE
     * is fixture setup (a production pipeline buckets its fact tables once,
     * at ingest); the measured query is the exchange-free co-located join.
@@ -2550,21 +2563,12 @@ object SparkEntry {
     // brute-force exact top-5, per query: the metric every ANN index
     // deployment is graded on (probe count vs recall is THE tuning
     // curve). Exact-arithmetic composition of two already-verified
-    // rankings: left join on (query, neighbor), hit count / k — both
-    // sides' id sets are deterministic cross-engine, so recall is too
+    // rankings (recallAtK)
     "ext_ann_recall" -> ((s, dir) => {
       val v = t(s, dir, "embeddings")
       val q = v.filter(col("vec_id") < 10)
-      val exact = Similarity.bruteForceTopK(v, q, k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val approx = Similarity.ivfTopK(v, q, k = 5, ivfIndex(s, dir),
-          nprobe = 2)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("__hit"))
-      exact.join(broadcast(approx), Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(lit(1)).as("k"), count(col("__hit")).as("n_hit"))
-        .select(col("query_id"), col("n_hit"), col("k"),
-          round(col("n_hit").cast("double") / col("k"), 6).as("recall"))
+      recallAtK(Similarity.bruteForceTopK(v, q, k = 5),
+        Similarity.ivfTopK(v, q, k = 5, ivfIndex(s, dir), nprobe = 2))
     }),
     // PQ recall@k eval: the ADC ranking vs the EXACT ranking in the same
     // fixed-point metric space the codes approximate — the
@@ -2575,15 +2579,8 @@ object SparkEntry {
       val q = v.filter(col("vec_id") < 10)
       val cb = pqIndex(s, dir)
       val dims = cb.length * cb(0)(0).length
-      val exact = Similarity.exactTopKFixed(v, q, dims, k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val adc = Similarity.pqTopK(v, q, cb, k = 5)
-        .select(col("query_id"), col("neighbor_id"), lit(1).as("__hit"))
-      exact.join(broadcast(adc), Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(lit(1)).as("k"), count(col("__hit")).as("n_hit"))
-        .select(col("query_id"), col("n_hit"), col("k"),
-          round(col("n_hit").cast("double") / col("k"), 6).as("recall"))
+      recallAtK(Similarity.exactTopKFixed(v, q, dims, k = 5),
+        Similarity.pqTopK(v, q, cb, k = 5))
     }),
     // product quantization: integer k-means codebooks (trained in fixture
     // setup, ORACLE REPLAYS THE TRAINING), shuffle-free 2-byte-per-vector
@@ -2627,14 +2624,6 @@ object SparkEntry {
     // centroids, in-row distance folds, no vector shuffle)
     "ext_kmeans_assign" -> ((s, dir) =>
       Similarity.kmeansAssignInt8(t(s, dir, "embeddings"), k = 8)),
-    // CLUSTER-BALANCED CAP (semantic diversity sampling, the SemDeDup /
-    // cluster-then-cap curation move): assign every vector to its
-    // exact-integer k-means cell, keep at most 8 per cell by vec_id
-    // order — caps over-represented semantic neighborhoods instead of
-    // uniform downsampling. Rides the bit-deterministic assignment
-    // (kmeansAssignInt8), so the kept set is exact cross-engine; the
-    // per-cell rank is one cell-keyed window over the assignment table
-    // (row-sized, no vector shuffle)
     // MRL truncation-quality probe: top-5 by the 16-dim PREFIX vs top-5
     // by all 64 dims, overlap per query — prices the dimension-truncation
     // storage/latency lever before a pipeline commits to it
@@ -2679,6 +2668,14 @@ object SparkEntry {
           round(col("nl").cast("double") / col("__n").cast("double"), 6)
             .as("purity"))
     }),
+    // CLUSTER-BALANCED CAP (semantic diversity sampling, the SemDeDup /
+    // cluster-then-cap curation move): assign every vector to its
+    // exact-integer k-means cell, keep at most 8 per cell by vec_id
+    // order — caps over-represented semantic neighborhoods instead of
+    // uniform downsampling. Rides the bit-deterministic assignment
+    // (kmeansAssignInt8), so the kept set is exact cross-engine; the
+    // per-cell rank is one cell-keyed window over the assignment table
+    // (row-sized, no vector shuffle)
     "ext_cluster_cap" -> ((s, dir) => {
       val w = Window.partitionBy(col("cluster")).orderBy(col("vec_id"))
       Similarity.kmeansAssignInt8(t(s, dir, "embeddings"), k = 8)

@@ -2459,7 +2459,8 @@ object Graph {
     * row), so an over-budget corpus terminates the scan early
     * (executeTake runs partitions in waves) and falls back to the
     * caller's distributed twin having moved at most the broadcast-class
-    * byte budget once. It also declines when the quadratic pair
+    * byte budget once. A budget that holds no row (cap 0) declines
+    * before any job runs. It also declines when the quadratic pair
     * expansion, at 8 bytes a pair, would exceed the same byte budget,
     * clamped to the one array [[BasketIndex.expandPairs]] can fill.
     * NULL semantics follow the twin's sorted sets: NULL items are
@@ -2473,6 +2474,7 @@ object Graph {
         items.schema(iCol).dataType != LongType) return None
     val limit = broadcastLimitBytes(items.sparkSession)
     val cap = math.min(limit / 16, (Int.MaxValue - 8).toLong).toInt
+    if (cap == 0) return None
     val raw = collectRows(items.select(col(gCol), col(iCol)).limit(cap + 1))
     if (raw.length > cap || raw.exists(_.isNullAt(0))) return None
     val rows = raw.filterNot(_.isNullAt(1))

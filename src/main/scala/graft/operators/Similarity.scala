@@ -6,20 +6,35 @@ import org.apache.spark.sql.expressions.Window
 
 /**
  * Embedding similarity search (SURVEY §2.11 X3) over an
- * `array<float>` column.
+ * `array<float>` column: for each query vector, its k nearest corpus
+ * vectors.
  *
- * Two paths:
- *  - [[bruteForceTopK]]: exact cosine top-k — broadcast the (small) query
- *    set against the full candidate table. The scan side streams: no
- *    shuffle of the candidates at all; per-partition top-k heaps merge at
- *    the driver via TakeOrderedAndProject. This is the right baseline even
- *    at 100 TB when |queries| is small.
- *  - [[lshBucketTopK]]: sign-random-projection LSH — hash every vector to a
- *    b-bit bucket with deterministic pseudo-random hyperplanes, then search
- *    only within matching buckets (candidates shrink ~2^b-fold; recall
- *    traded for a 2^b speedup, recovered by probing neighbor buckets).
- *    The bucket join is an equi-join Catalyst can hash-partition — this is
- *    the scale path when queries are many.
+ * Every ranker is candidate generation followed by one shared exact
+ * per-query ranking ([[rankPerQuery]]):
+ *  - exact: [[bruteForceTopK]] (cosine), [[exactTopKFixed]] and
+ *    [[hardNegatives]] (fixed-point L2) broadcast the (small) query set
+ *    against the scanned corpus. No candidate is shuffled, which keeps
+ *    this the right baseline even at 100 TB when |queries| is small.
+ *  - bucketed: [[lshBucketTopK]] (sign-random-projection buckets),
+ *    [[ivfTopK]] (k-means cells) and [[ivfPqTopK]] (coarse cells) join
+ *    candidates to the buckets a query probes on an equi-join Catalyst
+ *    can hash-partition — the scale path when queries are many.
+ *  - compressed: [[pqTopK]] scores product-quantization codes by table
+ *    lookups (ADC, [[Adc]]) without touching raw candidate vectors;
+ *    [[pqTopKRefine]] re-ranks its shortlist exactly.
+ *  - int8: [[quantizeInt8]] codes, k-means in code space
+ *    ([[kmeansAssignInt8]], [[kmeansRound2Int8]]) and [[rankFusionRrf]],
+ *    which fuses the cosine ranking with the int8 L2 one.
+ *
+ * Ranking contract: per query, pairs order by (score, neighbor_id) —
+ * similarities descending, distances ascending — ranks run contiguously
+ * from 1 to at most k, and no query matches itself. A pair with a NULL
+ * score never ranks. Every scoring kernel (CosineSim, SqDistLong, the
+ * ADC lookups) is NULL when a vector is NULL or the two lengths differ,
+ * so such a vector neither appears as a neighbor nor emits rows as a
+ * query. The NULL test sits above the window: below it, Catalyst would
+ * inline the score into the join condition and run the kernel twice per
+ * pair.
  *
  * Dot products run on codegen'd array expressions (`zip_with` +
  * left-to-right `aggregate` fold — sequential, deterministic), in double
@@ -48,6 +63,19 @@ object Similarity {
   def cosineHof(a: Column, b: Column, scale: Int = 6): Column =
     round(dot(a, b) / (norm(a) * norm(b)), scale)
 
+  /** The per-query ranking every top-k here ends with (the contract in
+    * the header): number each query's pairs of `scored` by (`score`,
+    * neighbor_id), `score` descending when `desc`, and keep the non-NULL
+    * scores ranked 1..k in a `rank` column. */
+  private def rankPerQuery(scored: DataFrame, score: String, desc: Boolean,
+                           k: Int): DataFrame = {
+    val s = col(score)
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(if (desc) s.desc_nulls_last else s.asc_nulls_last, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k && s.isNotNull)
+  }
+
   /** Exact top-k neighbors for each query vector. Ties broken by candidate
     * id → fully deterministic output. */
   def bruteForceTopK(candidates: DataFrame, queries: DataFrame, k: Int,
@@ -59,12 +87,8 @@ object Similarity {
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("sim"),
-        col("rn").as("rank"))
+    rankPerQuery(scored, "sim", desc = true, k)
+      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
   }
 
   /** Deterministic pseudo-random hyperplane component: a Knuth
@@ -88,7 +112,8 @@ object Similarity {
     * fold-order float noise can ever flip a near-zero projection's sign,
     * across partitions OR engines. Magnitude bound: |x| ≤ 2^11 keeps
     * |term| < 2^51 and a 4096-dim sum < 2^63. */
-  def lshBucket(vec: Column, bits: Int): Column =
+  def lshBucket(vec: Column, bits: Int): Column = {
+    require(bits >= 1 && bits <= 64, s"bits must be in [1, 64], got $bits")
     (0 until bits).map { p =>
       val proj = aggregate(
         zip_with(vec, sequence(lit(0), size(vec) - 1),
@@ -97,6 +122,7 @@ object Similarity {
         lit(0L), (acc, v) => acc + v)
       when(proj > 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_.bitwiseOR(_))
+  }
 
   /** Approximate top-k: candidates restricted to the query's LSH bucket.
     * `bits` tunes the recall/speed trade (each bit ~halves the candidate
@@ -111,11 +137,8 @@ object Similarity {
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rn").as("rank"))
+    rankPerQuery(scored, "sim", desc = true, k)
+      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
   }
 
   // ── IVF (inverted-file) ANN — the second scale path besides sign-LSH ──
@@ -178,11 +201,8 @@ object Similarity {
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rn").as("rank"))
+    rankPerQuery(scored, "sim", desc = true, k)
+      .select(col("query_id"), col("neighbor_id"), col("sim"), col("rank"))
   }
 
   // ── Product quantization (PQ) — the memory scale path beyond int8 ─────
@@ -297,38 +317,46 @@ object Similarity {
       .select(col(idCol), col("sub"), col("code"))
   }
 
-  /** ADC (asymmetric distance computation) top-k: candidates carry ONLY
-    * their m codes (in-row array — shuffle-free encode); each query builds
-    * its m×k lookup table of exact fixed-point squared distances ONCE
-    * (in-row, k·dims integer ops per query), then every query–candidate
-    * distance is m table lookups — the raw candidate vector is never
-    * touched at scoring time, which is the entire point at 100 TB. Queries
-    * broadcast; per-partition top-k heaps under the window. Ascending
-    * distance, ties by neighbor id — fully deterministic. */
+  /** The ADC (asymmetric distance computation) scorer [[pqTopK]] and
+    * [[ivfPqTopK]] share: a candidate carries only its m PQ `codes`, a
+    * query its m×k lookup table `lut` of exact fixed-point squared
+    * distances to every sub-centroid, and a pair's distance is the sum of
+    * its m table lookups. A NULL or short vector codes or tabulates to
+    * NULL, and so does its distance. */
+  private final class Adc(cb: Array[Array[Array[Long]]]) {
+    private val m = cb.length
+    private val dsub = cb(0)(0).length
+
+    def codes(vec: Column): Column =
+      array((0 until m).map(s => pqNearest(fpSub(vec, s, dsub), cb(s))): _*)
+
+    def lut(vec: Column): Column =
+      array((0 until m).map { s =>
+        val sv = fpSub(vec, s, dsub)
+        array(cb(s).map(cent => sqDist(sv, lit(cent))): _*)
+      }: _*)
+
+    def dist(lut: Column, codes: Column): Column =
+      (0 until m).map(s =>
+        element_at(element_at(lut, s + 1), element_at(codes, s + 1) + 1)).reduce(_ + _)
+  }
+
+  /** ADC top-k over the whole corpus ([[Adc]]): candidates encode in-row
+    * (shuffle-free), each query builds its lookup table once (k·dims
+    * integer ops), and the raw candidate vector is never touched at
+    * scoring time, which is the entire point at 100 TB. Queries
+    * broadcast. Ascending distance, ties by neighbor id. */
   def pqTopK(candidates: DataFrame, queries: DataFrame,
              cb: Array[Array[Array[Long]]], k: Int,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val m = cb.length
-    val dsub = cb(0)(0).length
+    val adc = new Adc(cb)
     val c = Query.ensureParallelism(candidates)
-      .select(col(idCol).as("neighbor_id"),
-        array((0 until m).map(s => pqNearest(fpSub(col(vecCol), s, dsub), cb(s))): _*)
-          .as("codes"))
-    val q = queries.select(col(idCol).as("query_id"),
-      array((0 until m).map { s =>
-        val sv = fpSub(col(vecCol), s, dsub)
-        array(cb(s).map(cent => sqDist(sv, lit(cent))): _*)
-      }: _*).as("lut"))
+      .select(col(idCol).as("neighbor_id"), adc.codes(col(vecCol)).as("codes"))
+    val q = queries.select(col(idCol).as("query_id"), adc.lut(col(vecCol)).as("lut"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("dist", (0 until m).map(s =>
-        element_at(element_at(col("lut"), s + 1),
-          element_at(col("codes"), s + 1) + 1)).reduce(_ + _))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("dist"),
-        col("rn").as("rank"))
+      .withColumn("dist", adc.dist(col("lut"), col("codes")))
+    rankPerQuery(scored, "dist", desc = false, k)
+      .select(col("query_id"), col("neighbor_id"), col("dist"), col("rank"))
   }
 
   /** PQ shortlist + EXACT re-rank — the refinement stage a production ANN
@@ -357,12 +385,8 @@ object Similarity {
     val exact = c.join(broadcast(short), Seq("neighbor_id"))
       .join(broadcast(q), Seq("query_id"))
       .withColumn("dist", sqDistFast(col("qf"), col("cf")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id"))
-    exact.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("dist"),
-        col("rn").as("rank"))
+    rankPerQuery(exact, "dist", desc = false, k)
+      .select(col("query_id"), col("neighbor_id"), col("dist"), col("rank"))
   }
 
   /** EXACT full-dimension fixed-point L2 top-k — [[pqTopKRefine]]'s
@@ -379,12 +403,8 @@ object Similarity {
       fpSub(col(vecCol), 0, dims).as("qf"))
     val exact = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("dist", sqDistFast(col("qf"), col("cf")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id"))
-    exact.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("dist"),
-        col("rn").as("rank"))
+    rankPerQuery(exact, "dist", desc = false, k)
+      .select(col("query_id"), col("neighbor_id"), col("dist"), col("rank"))
   }
 
   /** MATRYOSHKA truncation-quality probe (MRL embeddings, Kusupati et al.
@@ -436,15 +456,12 @@ object Similarity {
         col("query_id") =!= col("neighbor_id") &&
           col("neighbor_label") =!= col("__ql"))
       .withColumn("dist", sqDistFast(col("qf"), col("cf")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    rankPerQuery(scored, "dist", desc = false, k)
       .select(col("query_id"), col("neighbor_id"), col("neighbor_label"),
-        col("dist"), col("rn").as("rank"))
+        col("dist"), col("rank"))
   }
 
-    /** Probe list for the IVF-PQ coarse quantizer: indices of the `nprobe`
+  /** Probe list for the IVF-PQ coarse quantizer: indices of the `nprobe`
     * nearest coarse centroids by ascending exact integer squared L2 (ties
     * → lowest index). `coarse` is a full-dim integer codebook — train it
     * with [[trainPqCodebooks]] at m=1 (the coarse quantizer IS a PQ with
@@ -474,34 +491,21 @@ object Similarity {
                 coarse: Array[Array[Long]], cb: Array[Array[Array[Long]]],
                 k: Int, nprobe: Int = 2,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val m = cb.length
-    val dsub = cb(0)(0).length
+    val adc = new Adc(cb)
     val c = Query.ensureParallelism(candidates)
       .select(col(idCol).as("neighbor_id"),
         pqNearest(fpSub(col(vecCol), 0, coarse(0).length), coarse).as("bucket"),
-        array((0 until m).map(s => pqNearest(fpSub(col(vecCol), s, dsub), cb(s))): _*)
-          .as("codes"))
+        adc.codes(col(vecCol)).as("codes"))
     val q = queries.select(col(idCol).as("query_id"),
       explode(probeCoarse(col(vecCol), coarse, nprobe)).as("bucket"),
-      array((0 until m).map { s =>
-        val sv = fpSub(col(vecCol), s, dsub)
-        array(cb(s).map(cent => sqDist(sv, lit(cent))): _*)
-      }: _*).as("lut"))
+      adc.lut(col(vecCol)).as("lut"))
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("dist", (0 until m).map(s =>
-        element_at(element_at(col("lut"), s + 1),
-          element_at(col("codes"), s + 1) + 1)).reduce(_ + _))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("dist"),
-        col("rn").as("rank"))
+      .withColumn("dist", adc.dist(col("lut"), col("codes")))
+    rankPerQuery(scored, "dist", desc = false, k)
+      .select(col("query_id"), col("neighbor_id"), col("dist"), col("rank"))
   }
 
-  /** X2-adjacent near-dup by embedding: pairs with cosine ≥ threshold,
-    * bucketed by LSH so the pair join never goes all-pairs. */
   /** Per-dimension (min, max) over the corpus — the calibration pass for
     * [[quantizeInt8]]. One explode+groupBy job; only `dims` pairs of doubles
     * reach the driver (bounded by dimensionality, like the IVF centroids —
@@ -523,19 +527,22 @@ object Similarity {
     * output keeps every arithmetic step in exact-replayable IEEE doubles,
     * so a cross-engine oracle hash-verifies the codes. */
   def quantizeInt8(vecs: DataFrame, mins: Array[Double], maxs: Array[Double],
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val mnLit = array(mins.map(lit): _*)
-    val mxLit = array(maxs.map(lit): _*)
+                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     Query.ensureParallelism(vecs)
       .select(col(idCol), posexplode(col(vecCol)).as(Seq("pos", "v")))
-      .select(col(idCol), col("pos"), {
-        val mn = element_at(mnLit, col("pos") + 1)
-        val mx = element_at(mxLit, col("pos") + 1)
-        when(mx === mn, lit(0))
-          .otherwise(floor((col("v").cast("double") - mn) * lit(255.0) / (mx - mn) + lit(0.5))
-            .cast("int"))
-          .as("code")
-      })
+      .select(col(idCol), col("pos"),
+        int8Code(col("v"), col("pos"), mins, maxs, "int").as("code"))
+
+  /** [[quantizeInt8]]'s affine code of value `x` at 0-based dimension
+    * `pos`, cast to `as`; the calibration stats are baked in as array
+    * literals. */
+  private def int8Code(x: Column, pos: Column, mins: Array[Double],
+                       maxs: Array[Double], as: String): Column = {
+    val mn = element_at(array(mins.map(lit): _*), pos + 1)
+    val mx = element_at(array(maxs.map(lit): _*), pos + 1)
+    when(mx === mn, lit(0).cast(as))
+      .otherwise(floor((x.cast("double") - mn) * lit(255.0) / (mx - mn) + lit(0.5))
+        .cast(as))
   }
 
   /** Dequantize a code back to the bucket midpoint-ish value — the decode
@@ -543,6 +550,49 @@ object Similarity {
     * dimension (pinned by SimilaritySpec). */
   def dequantize(code: Column, mn: Column, mx: Column): Column =
     mn + code.cast("double") * (mx - mn) / lit(255.0)
+
+  /** Array form of [[quantizeInt8]]'s code (same IEEE ops, so the same
+    * cross-engine bit-guarantee): vector column → BIGINT code array. */
+  private def int8CodesCol(mins: Array[Double], maxs: Array[Double])
+                          (v: Column): Column =
+    transform(v, (x, i) => int8Code(x, i, mins, maxs, "long"))
+
+  /** What both int8 k-means entry points start from: an encoder of
+    * (id, vector) rows into (id, __codes) under `vecs`' calibration, and
+    * the `k` smallest ids, whose code rows seed the centroids (a k-row
+    * driver collect — index-sized by design). */
+  private def int8Seeding(vecs: DataFrame, k: Int, idCol: String,
+                          vecCol: String): (DataFrame => DataFrame, Array[Any]) = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val (mins, maxs) = dimStats(vecs, vecCol)
+    val seedIds = vecs.select(col(idCol)).orderBy(col(idCol)).limit(k)
+      .collect().map(_.get(0))
+    val codes = int8CodesCol(mins, maxs) _
+    (_.select(col(idCol), codes(col(vecCol)).as("__codes")), seedIds)
+  }
+
+  /** The seed centroids (__cid, __cc): the rows of `coded` (id, __codes)
+    * whose id is a seed id. */
+  private def int8Seeds(coded: DataFrame, seedIds: Array[Any],
+                        idCol: String): DataFrame =
+    coded.filter(col(idCol).isin(seedIds: _*))
+      .select(col(idCol).as("__cid"), col("__codes").as("__cc"))
+
+  /** One k-means assignment in int8 code space: each row of `coded`
+    * (id, __codes) goes to the centroid of `cents` (__cid, __cc) at the
+    * least exact squared L2, ties to the smaller cluster id (min struct).
+    * Output (id, cluster, dist, __codes); the centroids broadcast, so the
+    * corpus is never shuffled, only (id, dist, cluster) partials. */
+  private def int8Assign(coded: DataFrame, cents: DataFrame,
+                         idCol: String): DataFrame = coded
+    .crossJoin(broadcast(cents))
+    .select(col(idCol), col("__codes"), struct(
+      sqDistFast(col("__codes"), col("__cc")).as("dist"),
+      col("__cid").as("cluster")).as("__m"))
+    .groupBy(col(idCol))
+    .agg(min(col("__m")).as("__m"), first(col("__codes")).as("__codes"))
+    .select(col(idCol), col("__m.cluster").as("cluster"),
+      col("__m.dist").as("dist"), col("__codes"))
 
   /** One k-means ASSIGNMENT round over [[quantizeInt8]] codes: every
     * vector goes to the centroid (= the code vectors of the `k` smallest
@@ -554,6 +604,7 @@ object Similarity {
     * summation-order noise. This is the assignment step a Lloyd's
     * iteration, an IVF index build, or a balanced-shard layout all share;
     * int8 distances are also the standard serving trick (4× memory, SIMD).
+    * It is the first assignment of [[kmeansRound2Int8]].
     *
     * Scale shape: calibration stats and the k centroid rows are
     * index-sized driver collects (documented [[dimStats]] pattern); the
@@ -561,47 +612,13 @@ object Similarity {
     * centroid table, k distances per row folded in-row, argmin via a
     * min(struct) map-side-combined aggregation. No corpus shuffle of
     * vectors, only (id, dist, cluster) triples. */
-  /** Array form of [[quantizeInt8]]'s affine code arithmetic (same IEEE
-    * ops, so the same cross-engine bit-guarantee): vector column → BIGINT
-    * code array, calibration stats baked in as literals. */
-  private def int8CodesCol(mins: Array[Double], maxs: Array[Double])
-                          (v: Column): Column = {
-    val mnLit = array(mins.map(lit): _*)
-    val mxLit = array(maxs.map(lit): _*)
-    transform(v, (x, i) => {
-      val mn = element_at(mnLit, i + 1)
-      val mx = element_at(mxLit, i + 1)
-      when(mx === mn, lit(0L))
-        .otherwise(floor((x.cast("double") - mn) * lit(255.0) / (mx - mn)
-          + lit(0.5)).cast("long"))
-    })
-  }
-
-  /** Exact-BIGINT squared L2 between two code arrays. */
-  // native per-pair kernel — same numerics as the HOF fold (see sqDist)
-  private def int8Sq(a: Column, b: Column): Column = sqDistFast(a, b)
-
   def kmeansAssignInt8(vecs: DataFrame, k: Int,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val (mins, maxs) = dimStats(vecs, vecCol)
-    val codes = int8CodesCol(mins, maxs) _
-    // centroid seed ids: k-row driver collect (index-sized by design)
-    val seedIds = vecs.select(col(idCol)).orderBy(col(idCol)).limit(k)
-      .collect().map(_.get(0))
-    val cents = vecs.filter(col(idCol).isin(seedIds: _*))
-      .select(col(idCol).as("__cid"), codes(col(vecCol)).as("__cc"))
-    Query.ensureParallelism(vecs)
-      .select(col(idCol), codes(col(vecCol)).as("__codes"))
-      .crossJoin(broadcast(cents))
-      .select(col(idCol), struct(
-        int8Sq(col("__codes"), col("__cc")).as("dist"),
-        col("__cid").as("cluster")).as("__m"))
-      .groupBy(col(idCol))
-      .agg(min(col("__m")).as("__m"))
-      .select(col(idCol), col("__m.cluster").as("cluster"),
-        col("__m.dist").as("dist"))
+    val (encode, seedIds) = int8Seeding(vecs, k, idCol, vecCol)
+    int8Assign(encode(Query.ensureParallelism(vecs)),
+        int8Seeds(encode(vecs), seedIds, idCol), idCol)
+      .select(col(idCol), col("cluster"), col("dist"))
   }
 
   /** Lloyd's k-means ROUND TWO in int8 code space — one full
@@ -624,26 +641,9 @@ object Similarity {
   def kmeansRound2Int8(vecs: DataFrame, k: Int,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val (mins, maxs) = dimStats(vecs, vecCol)
-    val codes = int8CodesCol(mins, maxs) _
-    val seedIds = vecs.select(col(idCol)).orderBy(col(idCol)).limit(k)
-      .collect().map(_.get(0))
-    val coded = Query.ensureParallelism(vecs)
-      .select(col(idCol), codes(col(vecCol)).as("__codes"))
-      .localCheckpoint()
-    val cents0 = coded.filter(col(idCol).isin(seedIds: _*))
-      .select(col(idCol).as("__cid"), col("__codes").as("__cc"))
-    def assign(cents: DataFrame): DataFrame = coded
-      .crossJoin(broadcast(cents))
-      .select(col(idCol), col("__codes"), struct(
-        int8Sq(col("__codes"), col("__cc")).as("dist"),
-        col("__cid").as("cluster")).as("__m"))
-      .groupBy(col(idCol))
-      .agg(min(col("__m")).as("__m"), first(col("__codes")).as("__codes"))
-      .select(col(idCol), col("__m.cluster").as("cluster"),
-        col("__m.dist").as("dist"), col("__codes"))
-    val cents1 = assign(cents0)
+    val (encode, seedIds) = int8Seeding(vecs, k, idCol, vecCol)
+    val coded = encode(Query.ensureParallelism(vecs)).localCheckpoint()
+    val cents1 = int8Assign(coded, int8Seeds(coded, seedIds, idCol), idCol)
       .select(col("cluster").as("__cid"),
         posexplode(col("__codes")).as(Seq("__pos", "__code")))
       .groupBy(col("__cid"), col("__pos"))
@@ -651,7 +651,7 @@ object Similarity {
       .groupBy(col("__cid"))
       .agg(expr("transform(array_sort(collect_list(struct(__pos, __nc)))," +
         " x -> x.__nc)").as("__cc"))
-    val result = assign(cents1)
+    val result = int8Assign(coded, cents1, idCol)
       .select(col(idCol), col("cluster"), col("dist"))
       .localCheckpoint()
     graft.operators.Dedup.freeCheckpoints(coded)
@@ -686,25 +686,22 @@ object Similarity {
       codes(col(vecCol)).as("__qc"))
     val cand = Query.ensureParallelism(vecs)
       .select(col(idCol).as("neighbor_id"), codes(col(vecCol)).as("__cc"))
-    val wb = Window.partitionBy(col("query_id"))
-      .orderBy(col("__d").asc, col("neighbor_id"))
-    val b = cand.join(broadcast(qc), col("query_id") =!= col("neighbor_id"))
-      .withColumn("__d", int8Sq(col("__qc"), col("__cc")))
-      .withColumn("__rn", row_number().over(wb))
-      .filter(col("__rn") <= k)
+    val b = rankPerQuery(
+        cand.join(broadcast(qc), col("query_id") =!= col("neighbor_id"))
+          .withColumn("__d", sqDistFast(col("__qc"), col("__cc"))),
+        "__d", desc = false, k)
       .select(col("query_id"), col("neighbor_id"),
-        expr("CAST(1000000 div (60 + __rn) AS BIGINT)").as("__sb"))
+        expr("CAST(1000000 div (60 + rank) AS BIGINT)").as("__sb"))
     val fused = a.join(b, Seq("query_id", "neighbor_id"), "full_outer")
       .select(col("query_id"), col("neighbor_id"),
         (coalesce(col("__sa"), lit(0L)) + coalesce(col("__sb"), lit(0L)))
           .as("rrf"))
-    val wf = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf").desc, col("neighbor_id"))
-    fused.withColumn("__rn", row_number().over(wf))
-      .filter(col("__rn") <= topK)
+    rankPerQuery(fused, "rrf", desc = true, topK)
       .select(col("query_id"), col("neighbor_id"), col("rrf"))
   }
 
+  /** X2-adjacent near-dup by embedding: pairs with cosine ≥ threshold,
+    * bucketed by LSH so the pair join never goes all-pairs. */
   def embeddingNearDups(vecs: DataFrame, threshold: Double, bits: Int = 8,
                         idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val v = Query.ensureParallelism(vecs).select(col(idCol), col(vecCol),

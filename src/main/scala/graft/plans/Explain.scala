@@ -103,9 +103,12 @@ object Explain {
   private def fenced(plan: String): String = {
     // embedded binary literals (e.g. a serialized bloom filter inside
     // might_contain) can put multi-MB hex blobs on one plan line —
-    // truncate for the audit file; the plan SHAPE is what's reviewed
+    // truncate for the audit file; the plan SHAPE is what's reviewed. The
+    // cut is taken on the normalized line, so where it lands does not
+    // depend on how many digits the ids of one run happen to have
     val lines = plan.linesIterator.map { l =>
-      if (l.length > 2000) l.take(2000) + s" …[truncated ${l.length - 2000} chars]"
+      val n = normalize(l)
+      if (n.length > 2000) n.take(2000) + s" …[truncated ${n.length - 2000} chars]"
       else l
     }
     lines.mkString("```\n", "\n", "\n```\n")

@@ -151,6 +151,16 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
       withTwins(rowSet(Graph.bipartiteProjectionTopK(strDf, "g", "i", 5))))
   }
 
+  test("a limit below one row declines before any job, empty input included") {
+    val items = spark.range(400L)
+      .select((col("id") % 25).as("g"), (col("id") % 18).as("i"))
+    val (_, ran) = withTwins(graft.plans.Explain.capture(spark)(
+      Graph.edgeJaccardTopKFromBaskets(items, "g", "i", k = 5)))
+    assert(!ran.exists(_.toString.contains("CollectLimit")),
+      ran.map(_.toString).mkString("\n"))
+    assert(withTwins(Graph.collectBaskets(items.limit(0), "g", "i")).isEmpty)
+  }
+
   test("sparkRound6 is bit-equal to the SQL round(x, 6)") {
     val sq = spark
     import sq.implicits._

@@ -62,6 +62,22 @@ class IvfSpec extends AnyFunSuite with SparkSpec {
     assert(probes.head == own) // first probe = the assignment bucket
   }
 
+  test("ivfTopK with nprobe = all centroids degrades exactly to bruteForceTopK") {
+    val sq = spark
+    import sq.implicits._
+    // unclustered: most neighbors sit outside the query's own cell
+    val rnd = new scala.util.Random(11)
+    val df = (0L until 40L).map(i => (i, Array.fill(6)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    val cents = Similarity.trainCentroids(df, k = 4, iters = 2)
+    val queries = df.filter(col("vec_id") < 8)
+    def rows(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    val brute = rows(Similarity.bruteForceTopK(df, queries, k = 5))
+    val probed = rows(Similarity.ivfTopK(df, queries, k = 5, cents, nprobe = 4))
+    assert(probed == brute && brute.size == 40)
+  }
+
   test("training and search are deterministic run-over-run (no RNG)") {
     val a = Similarity.trainCentroids(clustered, 3, 2)
     val b = Similarity.trainCentroids(clustered, 3, 2)

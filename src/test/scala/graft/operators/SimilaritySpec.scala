@@ -303,4 +303,62 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       fullDims = 4, k = 1).collect()(0)
     assert(z.getLong(1) == 0L && z.getDouble(2) == 0.0)
   }
+
+  test("ranking contract: every ranker ranks by (score, neighbor_id) from 1, " +
+      "skips self-matches, and never ranks a NULL or short vector") {
+    import spark.implicits._
+    // 4-d corpus: 7 duplicates 3 (tied scores), 9 is NULL, 10 is short
+    def vec(i: Long) = Array.tabulate(4)(d => (((i * 7 + d * 5) % 11) - 5) / 5f)
+    val rows = (0L until 12L).map {
+      case 7L => (7L, vec(3L), 1)
+      case 9L => (9L, null, 0)
+      case 10L => (10L, vec(10L).take(3), 1)
+      case i => (i, vec(i), (i % 3).toInt)
+    }
+    val df = rows.toDF("vec_id", "embedding", "label")
+    val bad = Set(9L, 10L)
+    val clean = df.filter(!col("vec_id").isin(bad.toSeq: _*))
+    val cents = Similarity.trainCentroids(clean, k = 3, iters = 2)
+    val cb = Similarity.trainPqCodebooks(clean, m = 2, k = 4, iters = 2)
+    val coarse = Similarity.trainPqCodebooks(clean, m = 1, k = 3, iters = 2)(0)
+    val k = 20 // past the corpus size
+    // (name, output, score column, descending, ranks every valid pair)
+    val rankers = Seq(
+      ("bruteForceTopK", Similarity.bruteForceTopK(df, df, k), "sim", true, true),
+      ("lshBucketTopK", Similarity.lshBucketTopK(df, df, k, bits = 2), "sim", true, false),
+      ("ivfTopK", Similarity.ivfTopK(df, df, k, cents, nprobe = 2), "sim", true, false),
+      ("pqTopK", Similarity.pqTopK(df, df, cb, k), "dist", false, true),
+      ("pqTopKRefine", Similarity.pqTopKRefine(df, df, cb, k, shortlist = k),
+        "dist", false, true),
+      ("exactTopKFixed", Similarity.exactTopKFixed(df, df, 4, k), "dist", false, true),
+      ("hardNegatives", Similarity.hardNegatives(df, df, 4, k), "dist", false, false),
+      ("ivfPqTopK", Similarity.ivfPqTopK(df, df, coarse, cb, k, nprobe = 2),
+        "dist", false, false))
+    val valid = rows.count(r => !bad(r._1))
+    for ((name, out, score, desc, full) <- rankers) {
+      val got = out.select(col("query_id"), col("neighbor_id"),
+          col(score).cast("double"), col("rank"))
+        .collect().map(r => (r.getLong(0), r.getLong(1),
+          Option(r.getAs[java.lang.Double](2)).map(_.doubleValue), r.getInt(3)))
+      assert(got.nonEmpty, name)
+      assert(got.forall(_._3.nonEmpty), s"$name ranked a NULL score")
+      assert(got.forall { case (q, n, _, _) => q != n }, s"$name: self-match")
+      assert(got.forall { case (q, n, _, _) => !bad(q) && !bad(n) },
+        s"$name ranked a NULL or short vector: ${got.filter(r => bad(r._1) || bad(r._2)).toSeq}")
+      got.groupBy(_._1).foreach { case (q, g) =>
+        val byRank = g.sortBy(_._4).toSeq
+        assert(byRank.map(_._4) == (1 to g.length), s"$name: query $q ranks")
+        val keys = byRank.map { case (_, n, sc, _) => (if (desc) -sc.get else sc.get, n) }
+        assert(keys == keys.sorted, s"$name: query $q order")
+        if (full) assert(g.length == valid - 1, s"$name: query $q rows")
+      }
+    }
+    // the fused ranking inherits the contract from both of its rankings
+    val fused = Similarity.rankFusionRrf(df, df, k, topK = k).collect()
+    assert(fused.nonEmpty && fused.forall(r => !bad(r.getLong(0)) && !bad(r.getLong(1))))
+    // sign-LSH takes 1 to 64 hyperplane bits
+    Seq(0, 65).foreach { b =>
+      intercept[IllegalArgumentException](Similarity.lshBucket(col("embedding"), b))
+    }
+  }
 }
