@@ -149,13 +149,6 @@ object SparkEntry {
   private val evolutionFixtures =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Hive-style partitioned layout of events (PARTITIONED BY event_type):
-    * directory-level partitioning is THE first pruning primitive at
-    * 100 TB — a predicate on the partition column eliminates whole
-    * directories at PLANNING time (PartitionFilters in the scan node;
-    * PlanShapeSpec pins it), before any file footer is opened. Written
-    * once per JVM as fixture setup (Bench warm-up), never in a timed or
-    * verified path. */
   /** CSV dir with a known-bad tail: the orders projection as clean CSV
     * plus one hand-written file of exactly 3 malformed lines — the
     * ingest-robustness fixture for PERMISSIVE parsing (bad rows must
@@ -176,6 +169,13 @@ object SparkEntry {
       p
     })
 
+  /** Hive-style partitioned layout of events (PARTITIONED BY event_type):
+    * directory-level partitioning is THE first pruning primitive at
+    * 100 TB — a predicate on the partition column eliminates whole
+    * directories at PLANNING time (PartitionFilters in the scan node;
+    * PlanShapeSpec pins it), before any file footer is opened. Written
+    * once per JVM as fixture setup (Bench warm-up), never in a timed or
+    * verified path. */
   private val hivePartFixtures =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def hivePartFixture(s: SparkSession, dir: String): String =
@@ -1630,8 +1630,7 @@ object SparkEntry {
     "agg_approx_distinct_kmv" -> ((s, dir) => {
       val k = 256
       val h = t(s, dir, "orders")
-        .select(conv(substring(md5(col("o_custkey").cast("string")), 1, 10),
-          16, 10).cast("long").as("__h"))
+        .select(Text.md5Prefix(col("o_custkey").cast("string"), 10).as("__h"))
         .distinct()
       // (k−1)·2^40 = 255·1099511627776 precomputed so both engines divide
       // the same BIGINT literal
@@ -2484,7 +2483,7 @@ object SparkEntry {
     // (every other source dropped); thresholds from exact integer math
     "ext_token_budget_mix" -> ((s, dir) =>
       Sampling.tokenBudgetMix(t(s, dir, "documents"), "doc_id", "source",
-        size(filter(split(lower(col("text")), " "), w => w =!= "")),
+        size(Text.tokens(col("text"))),
         Map("src0" -> 400000L, "src1" -> 300000L,
             "src2" -> 200000L, "src3" -> 100000L))
         .select(col("doc_id"), col("source"))),
@@ -2742,7 +2741,7 @@ object SparkEntry {
     // random-noise text (TTR ≈ 1 at length). In-row set size over the
     // family tokenizer; the ratio is ONE double division of two exact ints
     "ext_type_token_ratio" -> ((s, dir) => {
-      val tk = filter(split(lower(coalesce(col("text"), lit(""))), " "), w => w =!= "")
+      val tk = Text.tokens(coalesce(col("text"), lit("")))
       Query.ensureParallelism(t(s, dir, "documents"))
         .select(col("doc_id"), size(tk).as("n_tokens"),
           size(array_distinct(tk)).as("n_types"))
@@ -2818,10 +2817,8 @@ object SparkEntry {
     "ext_feature_hashing" -> ((s, dir) =>
       Query.ensureParallelism(t(s, dir, "documents"))
         .select(col("doc_id"),
-          explode(filter(split(lower(col("text")), " "), w => w =!= "")).as("w"))
-        .withColumn("bucket",
-          expr("CAST(conv(substring(md5(w), 1, 4), 16, 10) AS BIGINT) % 64")
-            .cast("int"))
+          explode(Text.tokens(col("text"))).as("w"))
+        .withColumn("bucket", (Text.md5Prefix(col("w"), 4) % 64).cast("int"))
         .groupBy(col("doc_id"), col("bucket"))
         .agg(count(lit(1)).as("n"))),
     // exact two-sample Kolmogorov–Smirnov distance (view vs purchase
@@ -2894,8 +2891,7 @@ object SparkEntry {
     // corpus-bounded.
     "ext_kl_sources" -> ((s, dir) => {
       val cs = Query.ensureParallelism(t(s, dir, "documents"))
-        .select(col("source"), explode(filter(split(lower(col("text")), " "),
-          w => w =!= "")).as("token"))
+        .select(col("source"), explode(Text.tokens(col("text"))).as("token"))
         .groupBy(col("source"), col("token")).agg(count(lit(1)).as("cst"))
       val ct = cs.groupBy(col("token")).agg(sum(col("cst")).as("ct"))
       val ns = cs.groupBy(col("source")).agg(sum(col("cst")).as("ns"))
@@ -3013,7 +3009,7 @@ object SparkEntry {
     // the SAME pair table (no second corpus pass)
     "ext_bigram_lm" -> ((s, dir) => {
       val pairs = Query.ensureParallelism(t(s, dir, "documents"))
-        .withColumn("__tk", filter(split(lower(col("text")), " "), w => w =!= ""))
+        .withColumn("__tk", Text.tokens(col("text")))
         .filter(size(col("__tk")) >= 2)
         .select(explode(expr(
           "zip_with(slice(__tk, 1, size(__tk) - 1), slice(__tk, 2, size(__tk) - 1), " +
@@ -3057,8 +3053,7 @@ object SparkEntry {
     // corpus-sized).
     "ext_token_zipf_fit" -> ((s, dir) => {
       val fr = Query.ensureParallelism(t(s, dir, "documents"))
-        .select(explode(filter(split(lower(col("text")), " "),
-          w => w =!= "")).as("token"))
+        .select(explode(Text.tokens(col("text"))).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("__f"))
       val q = fr.select(
         floor(log(row_number().over(Window.orderBy(col("__f").desc,
@@ -3086,7 +3081,7 @@ object SparkEntry {
     // sized (broadcast); the corpus is scanned once.
     "ext_bigram_perplexity" -> ((s, dir) => {
       val dp = Query.ensureParallelism(t(s, dir, "documents"))
-        .withColumn("__tk", filter(split(lower(col("text")), " "), w => w =!= ""))
+        .withColumn("__tk", Text.tokens(col("text")))
         .filter(size(col("__tk")) >= 2)
         .select(col("doc_id"), explode(expr(
           "zip_with(slice(__tk, 1, size(__tk) - 1), slice(__tk, 2, size(__tk) - 1), " +
@@ -3125,7 +3120,7 @@ object SparkEntry {
     // any text corpus; one in-row pipeline, no shuffle
     "ext_text_stats_pack" -> ((s, dir) =>
       Query.ensureParallelism(t(s, dir, "documents"))
-        .withColumn("__tk", filter(split(lower(col("text")), " "), w => w =!= ""))
+        .withColumn("__tk", Text.tokens(col("text")))
         .select(col("doc_id"),
           length(col("text")).as("n_chars_raw"),
           size(col("__tk")).as("n_tokens"),
@@ -3158,12 +3153,10 @@ object SparkEntry {
     "ext_countmin_probe" -> ((s, dir) => {
       val w = 16
       val toks = Query.ensureParallelism(t(s, dir, "documents"))
-        .select(explode(filter(split(lower(col("text")), " "),
-          t => t =!= "")).as("token"))
+        .select(explode(Text.tokens(col("text"))).as("token"))
       val sk = toks.agg(graft.functions.CountMin.sketch(col("token"), 3, w).as("__cells"))
       val bucket = (r: Int) =>
-        (conv(substring(md5(concat(lit(s"cm$r:"), col("token"))), 1, 4), 16, 10)
-          .cast("int") % w)
+        (Text.md5Prefix(concat(lit(s"cm$r:"), col("token")), 4).cast("int") % w)
       val est = (r: Int) => element_at(col("__cells"), bucket(r) + lit(r * w) + 1)
       toks.groupBy(col("token")).agg(count(lit(1)).as("n_true"))
         .crossJoin(broadcast(sk))
@@ -3361,13 +3354,8 @@ object SparkEntry {
       // The old shape recomputed the whole gram pass per consumer.
       val g = operators.Graph.checkpointPartitioned(
         t(s, dir, "documents")
-          .select(col("source"),
-            expr("filter(split(lower(coalesce(text, '')), ' '), w -> w <> '')")
-              .as("__tk"))
-          .select(col("source"), explode(expr(
-            "CASE WHEN size(__tk) >= 3 THEN transform(sequence(0, size(__tk) - 3), " +
-              "i -> concat_ws(' ', __tk[i], __tk[i+1], __tk[i+2])) " +
-              "ELSE array() END")).as("gram"))
+          .select(col("source"), Text.tokens(coalesce(col("text"), lit(""))).as("__tk"))
+          .select(col("source"), explode(Text.grams(col("__tk"), 3)).as("gram"))
           .repartition(s.sparkContext.defaultParallelism, col("gram"))
           .distinct())
       val n = g.groupBy(col("source")).agg(count(lit(1)).as("__n"))
@@ -3445,9 +3433,8 @@ object SparkEntry {
       Query.ensureParallelism(t(s, dir, "orders"))
         .select(col("o_orderkey"), col("o_totalprice"))
         .withColumn("__b", explode(array((0 until reps).map(lit): _*)))
-        .withColumn("__u", expr("conv(substring(md5(concat(" +
-          "cast(o_orderkey as string), ':', cast(__b as string))), 1, 4), 16, 10)")
-          .cast("long"))
+        .withColumn("__u", Text.md5Prefix(concat(col("o_orderkey").cast("string"),
+          lit(":"), col("__b").cast("string")), 4))
         // P(0)=e⁻¹, P(≤1)=2e⁻¹, P(≤2)=2.5e⁻¹ scaled to 2^16: 24109/48219/60273
         .withColumn("__m", when(col("__u") < 24109, 0)
           .when(col("__u") < 48219, 1).when(col("__u") < 60273, 2)
@@ -6208,12 +6195,12 @@ object SparkEntry {
         | CAST(length(text) AS INT) AS n_chars_actual,
         | CAST(len(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS INT) AS n_tokens,
         | CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) /
-        |  CAST(length(text) AS DOUBLE) AS alpha_ratio,
+        |  nullif(CAST(length(text) AS DOUBLE), 0.0) AS alpha_ratio,
         | CAST(""".stripMargin + occursSql("the") + " + " + occursSql("a") +
       """ AS DOUBLE) /
-        |  CAST(len(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS DOUBLE) AS stopword_ratio,
+        |  nullif(CAST(len(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS DOUBLE), 0.0) AS stopword_ratio,
         | CAST(length(text) - len(list_filter(string_split(lower(text), ' '), w -> w <> '')) + 1 AS DOUBLE) /
-        |  CAST(len(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS DOUBLE) AS mean_token_len
+        |  nullif(CAST(len(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS DOUBLE), 0.0) AS mean_token_len
         | FROM documents""".stripMargin),
 
     // distinct 3-grams per doc, hashed like the engine (md5 prefix), train
@@ -6751,9 +6738,6 @@ object SparkEntry {
       |  AND epoch_us(CAST(c.ts AS TIMESTAMP)) <
       |      epoch_us(CAST(p.ts AS TIMESTAMP)) + 3600000000""".stripMargin
 
-  /** Shared verbatim by the Spark surface and the DuckDB oracle: the
-    * above-mean filter via exact decimal cross-multiplication
-    * (price·N > Σprice — no double division, no ulp seam). */
   /** Pearson correlation with EXACT moment accumulation, shared verbatim by
     * both engines. The naive `corr()` built-in sums doubles in partition
     * order — cross-engine (and cross-run, under AQE) nondeterministic. Here
@@ -7047,17 +7031,6 @@ object SparkEntry {
       |  min(o_totalprice) FILTER (WHERE o_totalprice > 150000.0) AS min_big
       |FROM orders GROUP BY o_orderstatus""".stripMargin
 
-  /** The co-purchase edge set (parts sharing an order, u < v, distinct):
-    * in-row per-order pair expansion (Graph.itemPairs — one exchange)
-    * plus one pair-keyed distinct, replacing the r9 lineitem self-join
-    * whose join AND distinct each exchanged the full pair stream. The
-    * DuckDB oracles replay the identical set via [[sqlEdgesSelfJoinCte]]
-    * (portable SQL); DISTINCT(u,v) over per-order-unique pairs equals
-    * DISTINCT over the self-join's output. */
-  /** Per-order co-purchase pairs (u < v), unique per order but possibly
-    * repeated ACROSS orders (0.3% dup at sf0.1) — the cheapest form, for
-    * consumers whose semantics are multiplicity-invariant (BFS min-fold)
-    * or that dedup in-pipeline anyway (pagerank's adjacency build). */
   /** Raw (l_orderkey, l_partkey) basket stream — the FromBaskets driver
     * tiers' input (map-only scan; dedup / pair expansion happen past the
     * gate on the driver, or in [[operators.Graph.basketEdges]], the
@@ -7065,6 +7038,10 @@ object SparkEntry {
   private def lineitemBaskets(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
 
+  /** Per-order co-purchase pairs (u < v), unique per order but possibly
+    * repeated ACROSS orders (0.3% dup at sf0.1) — the cheapest form, for
+    * consumers whose semantics are multiplicity-invariant (BFS min-fold)
+    * or that dedup in-pipeline anyway (pagerank's adjacency build). */
   private def copurchasePairs(s: SparkSession, dir: String): DataFrame =
     operators.Graph.itemPairs(lineitemBaskets(s, dir), "l_orderkey", "l_partkey")
       .select(col("u"), col("v"))
@@ -7095,6 +7072,13 @@ object SparkEntry {
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
 
+  /** The co-purchase edge set (parts sharing an order, u < v, distinct):
+    * in-row per-order pair expansion (Graph.itemPairs — one exchange)
+    * plus one pair-keyed distinct, replacing the r9 lineitem self-join
+    * whose join AND distinct each exchanged the full pair stream. The
+    * DuckDB oracles replay the identical set via [[sqlEdgesSelfJoinCte]]
+    * (portable SQL); DISTINCT(u,v) over per-order-unique pairs equals
+    * DISTINCT over the self-join's output. */
   private def copurchaseEdgesRaw(s: SparkSession, dir: String): DataFrame =
     operators.Graph.basketEdges(lineitemBaskets(s, dir), "l_orderkey",
       "l_partkey")
@@ -7220,9 +7204,9 @@ object SparkEntry {
     * approximation of full peeling — convergence is a liveness check a
     * production loop adds exactly like [[operators.Graph.bfsLevels]]'
     * dead-frontier exit); each round is one aggregate + two semi-joins, all
-    * node-keyed. */
-  /** Every round CTE is MATERIALIZED (DuckDB keyword; this string is
-    * oracle-side only — the engine runs [[operators.Graph.kcorePeel]]):
+    * node-keyed. Every round CTE is MATERIALIZED (DuckDB keyword; this
+    * string is oracle-side only — the engine runs
+    * [[operators.Graph.kcorePeel]]):
     * e_r is referenced three times by round r+1, so CTE inlining
     * recomputes the edges self-join 3^rounds times — the same plan
     * explosion Catalyst showed, fixed on the engine side by the
@@ -7560,9 +7544,9 @@ object SparkEntry {
     * MATERIALIZED CTEs — one per level, replaying Graph.pathCounts'
     * exact fold: keep an existing (smaller-level) label, else SUM the
     * frontier contributions; BIGINT casts per level kill HUGEINT SUM
-    * widening. */
-  /** The forward Brandes CTE chain (levels + σ, chained MATERIALIZED
-    * folds) shared by the path-counts and betweenness twins — ends with
+    * widening. The forward Brandes CTE chain (levels + σ, chained
+    * MATERIALIZED folds) is shared by the path-counts and betweenness
+    * twins — it ends with
     * `s$maxDepth(src, node, lvl, sig)` defined, no final SELECT. */
   private def sqlPathCountsCtes(nSources: Int, maxDepth: Int): String = {
     val sb = new StringBuilder("WITH " + sqlEdgesSelfJoinCte +
@@ -8143,6 +8127,9 @@ object SparkEntry {
       |    ((nd * sx2 - sx * sx) * (nd * sy2 - sy * sy)) AS DOUBLE) AS r2
       |FROM m""".stripMargin
 
+  /** Shared verbatim by the Spark surface and the DuckDB oracle: the
+    * above-mean filter via exact decimal cross-multiplication
+    * (price·N > Σprice — no double division, no ulp seam). */
   private val sqlScalarAboveAvg: String =
     """SELECT o_orderkey, o_totalprice FROM orders
       |WHERE CAST(o_totalprice AS DECIMAL(18,2)) * (SELECT count(*) FROM orders) >
@@ -8162,15 +8149,6 @@ object SparkEntry {
       |GROUP BY c_custkey, c_name, n_name
       |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin
 
-  /** DuckDB CTE producing minhash LSH candidate pairs — mirrors
-    * Dedup.minhashPairs(seeds=16, rowsPerBand=8) exactly: one md5 per
-    * token (40-bit prefix value), then the affine 2-universal family
-    * sig_j = min((a_j·h + b_j) mod 2^57) with the identical (a_j, b_j)
-    * literals Dedup.sigAffine generates, '_'-joined per band of 8. */
-  /** The shared minhash replay prefix (tokens → 40-bit md5 hashes → affine
-    * signatures → '_'-joined 8-row bands) — extended by both the symmetric
-    * self-join candidates ([[minhashCandidatesCte]]) and the asymmetric
-    * cross-corpus candidates (`ext_dedup_drop_against_ref`). */
   /** The minhash SIGNATURE replay prefix (tokens → 40-bit md5 hashes →
     * 16 affine signatures), ending at `sig(doc_id, j, sig)` — shared by
     * the fixed-8-row banding below and the band-shape sweep. */
@@ -8316,6 +8294,10 @@ object SparkEntry {
        |  CAST(SUM(h) AS DECIMAL(38,0)) AS sum_h, bit_xor(h) AS xor_h
        |  FROM h GROUP BY 1)""".stripMargin
 
+  /** The shared minhash replay prefix (tokens → 40-bit md5 hashes → affine
+    * signatures → '_'-joined 8-row bands) — extended by both the symmetric
+    * self-join candidates ([[minhashCandidatesCte]]) and the asymmetric
+    * cross-corpus candidates (`ext_dedup_drop_against_ref`). */
   private def minhashBandsCte: String = minhashSigCte +
     """,
       |band AS (
@@ -8437,6 +8419,11 @@ object SparkEntry {
        |WHERE ta.digest <> tz.digest""".stripMargin
   }
 
+  /** DuckDB CTE producing minhash LSH candidate pairs — mirrors
+    * Dedup.minhashPairs(seeds=16, rowsPerBand=8) exactly: one md5 per
+    * token (40-bit prefix value), then the affine 2-universal family
+    * sig_j = min((a_j·h + b_j) mod 2^57) with the identical (a_j, b_j)
+    * literals Dedup.sigAffine generates, '_'-joined per band of 8. */
   private def minhashCandidatesCte: String = minhashBandsCte +
     """,
       |pairs AS (
@@ -8444,10 +8431,6 @@ object SparkEntry {
       |  FROM band a JOIN band b
       |   ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id)""".stripMargin
 
-  /** DuckDB hex-digit decode: value of the leading `digits` hex chars of
-    * md5(`of`) as a BIGINT (DuckDB has no conv(); sum per-digit strpos
-    * values instead). Mirrors `conv(substring(md5(of),1,digits),16,10)`
-    * in Spark. */
   /** DuckDB twin of the cdcChangeLog fixture (I %7 seq1, U %3 seq2,
     * D %6 seq3 — distinct seq per op). */
   private val cdcChangeLogSql: String =
@@ -8575,14 +8558,15 @@ object SparkEntry {
       s"((($x >> $b) & 1) << ${2 * b})",
       s"((($y >> $b) & 1) << ${2 * b + 1})")).mkString(" + ")
 
+  /** DuckDB hex-digit decode: value of the leading `digits` hex chars of
+    * md5(`of`) as a BIGINT (DuckDB has no conv(); sum per-digit strpos
+    * values instead). Mirrors [[operators.Text.md5Prefix]] in Spark. */
   private def md5PrefixValueSql(digits: Int, of: String = "w"): String =
     (0 until digits).map { i =>
       val place = BigInt(16).pow(digits - 1 - i)
       s"(strpos('0123456789abcdef', substr(md5($of),${i + 1},1))-1)*$place"
     }.mkString(" + ")
 
-  /** DuckDB twin of Dedup.simhashMd5(bits=16): same distinct-token stream,
-    * same per-bit ±1 votes, same sign-assembled hash. */
   /** The k-means-assignment replay prefix shared by ext_kmeans_assign
     * and ext_cluster_cap: int8 affine codes, first-8 seed centroids,
     * exact BIGINT squared L2 per (vector, centroid) — ends at
@@ -8702,13 +8686,6 @@ object SparkEntry {
        |    (acc, x) -> (acc*31 + x) % ${1L << 57}) AS fingerprint
        |FROM documents""".stripMargin
 
-  /** DuckDB twin of Dedup.dropNearDupsCC: verified doc-level pairs →
-    * symmetric edges → transitive closure by recursive CTE → component =
-    * min reachable id → keep a doc iff it IS its component's minimum (docs
-    * outside the graph are kept). The closure is O(Σ component²) rows —
-    * fine for an oracle, which is exactly why the engine side uses
-    * Graph.connectedComponentsMinLabel (union-find driver tier, hash-min
-    * twin) instead. */
   /** The verified-near-dup component closure (doc-level candidates →
     * J ≥ 0.95 verify → symmetric edges → recursive min-reachability →
     * `comp(node, component)`) — shared by the CC drop filter and the
@@ -8732,6 +8709,13 @@ object SparkEntry {
         |  SELECT r.s, e.b FROM reach r JOIN edges e ON e.a = r.t),
         |comp AS (SELECT s AS node, min(t) AS component FROM reach GROUP BY s)""".stripMargin
 
+  /** DuckDB twin of Dedup.dropNearDupsCC: verified doc-level pairs →
+    * symmetric edges → transitive closure by recursive CTE → component =
+    * min reachable id → keep a doc iff it IS its component's minimum (docs
+    * outside the graph are kept). The closure is O(Σ component²) rows —
+    * fine for an oracle, which is exactly why the engine side uses
+    * Graph.connectedComponentsMinLabel (union-find driver tier, hash-min
+    * twin) instead. */
   private def dropNearDupsCcOracleSql: String = nearDupCompCte +
     """
       |SELECT doc_id FROM documents

@@ -2,7 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Every `graft.*`
+  * JVM system property becomes a session conf (SparkConf reads only
+  * `spark.*` ones), so `-Dgraft.graph.broadcastLimitBytes=0` runs the
+  * whole suite in the twin regime (DEPLOY.md). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -11,7 +14,9 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = LocalTuning(SparkSession.builder()
+    val builder = sys.props.toSeq.filter(_._1.startsWith("graft."))
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+    val spark = LocalTuning(builder
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus))
       .config("spark.sql.session.timeZone", "UTC")

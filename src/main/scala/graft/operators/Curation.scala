@@ -14,27 +14,30 @@ import org.apache.spark.sql.functions._
  */
 object Curation {
 
-  /** Distinct word n-grams of a document as an array column ('-'-free,
-    * single-space joined — the same token stream the dedup family uses).
-    * Documents shorter than n tokens produce an empty array. */
-  def gramArray(textCol: Column, n: Int): Column = {
-    val toks = filter(split(lower(textCol), " "), w => w =!= "")
-    when(size(toks) >= n,
-      array_distinct(transform(sequence(lit(1), size(toks) - lit(n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " "))))
-      .otherwise(array().cast("array<string>"))
-  }
+  /** Distinct word n-grams of a projected [[Text.tokens]] column — the
+    * token stream the dedup family uses. Documents shorter than n tokens,
+    * and NULL documents, have none. */
+  private def gramArray(toks: Column, n: Int): Column =
+    array_distinct(Text.grams(toks, n))
 
-  /** 60-bit md5-prefix hash of a gram — fixed 8-byte join keys instead of
-    * variable-length strings (the shuffle-byte economics that matter at
-    * corpus scale), and reproducible in any engine with md5 (the oracle
-    * replays the identical arithmetic). 60 bits (15 hex chars, still
-    * BIGINT-safe) rather than 40: at a realistic ~1e7 distinct benchmark
-    * grams, a 40-bit space gives each train gram ~1e-5 false-hit
+  /** 60-bit md5-prefix hash of a gram ([[Text.md5Prefix]], 15 hex digits)
+    * — fixed 8-byte join keys instead of variable-length strings (the
+    * shuffle-byte economics that matter at corpus scale), replayed by the
+    * oracle. 60 bits rather than 40: at a realistic ~1e7 distinct
+    * benchmark grams, a 40-bit space gives each train gram ~1e-5 false-hit
     * probability — ~1% of 1000-gram documents falsely dropped as
-    * contaminated — while 60 bits pushes that to ~1e-11 per gram. */
-  private def gramHashMd5(g: Column): Column =
-    conv(substring(md5(g), 1, 15), 16, 10).cast("long")
+    * contaminated — while 60 bits pushes that to ~1e-11 per gram.
+    * SpanDedup's gram hash is the same. */
+  private[graft] def gramHashMd5(g: Column): Column = Text.md5Prefix(g, 15)
+
+  /** The production gram hashes of a document
+    * ([[org.apache.spark.sql.graft.WordGramHashes]]), with NULL text
+    * coalesced to "" first: the kernel propagates NULL, but the witness's
+    * [[gramArray]] treats NULL text as zero grams — the empty-string path
+    * gives the identical (0, 0, 0) row, keeping the full oracle and
+    * witness contracts exact. */
+  private def gramHashes(textCol: Column, n: Int): Column =
+    org.apache.spark.sql.graft.WordGramHashes.of(coalesce(textCol, lit("")), n)
 
   /** Benchmark decontamination: for every training document, count how many
     * of its distinct word `n`-grams appear ANYWHERE in the held-out
@@ -54,7 +57,8 @@ object Curation {
                     textCol: String, n: Int = 3): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     val benchGrams = Query.ensureParallelism(bench)
-      .select(explode(gramArray(col(textCol), n)).as("__g"))
+      .select(Text.tokens(col(textCol)).as("__t"))
+      .select(explode(gramArray(col("__t"), n)).as("__g"))
       .select(gramHashMd5(col("__g")).as("__gh"))
       .distinct()
     // ONE gram pass over the corpus: the per-doc distinct-gram count and
@@ -66,7 +70,8 @@ object Curation {
     // pass over `train`. The per-doc overlap count partially aggregates
     // map-side, so the one exchange carries |docs| rows, not |grams|.
     Query.ensureParallelism(train)
-      .select(col(idCol), gramArray(col(textCol), n).as("__grams"))
+      .select(col(idCol), Text.tokens(col(textCol)).as("__t"))
+      .select(col(idCol), gramArray(col("__t"), n).as("__grams"))
       .select(col(idCol), size(col("__grams")).as("n_grams_distinct"),
         explode_outer(col("__grams")).as("__g"))
       .select(col(idCol), col("n_grams_distinct"),
@@ -90,17 +95,11 @@ object Curation {
     * the raw gram string. */
   def decontaminateFast(train: DataFrame, bench: DataFrame, idCol: String,
                         textCol: String, n: Int = 3): DataFrame = {
-    // coalesce NULL text to "" BEFORE the kernel: a UnaryExpression
-    // propagates NULL, but the witness's when/otherwise treats NULL text as
-    // zero grams — the empty-string kernel path gives the identical
-    // (0, 0, 0) row, keeping the full oracle and witness contracts exact
-    def grams(c: Column) =
-      org.apache.spark.sql.graft.WordGramHashes.of(coalesce(c, lit("")), n)
     val benchGrams = Query.ensureParallelism(bench)
-      .select(explode(grams(col(textCol))).as("__gh"))
+      .select(explode(gramHashes(col(textCol), n)).as("__gh"))
       .distinct()
     Query.ensureParallelism(train)
-      .select(col(idCol), grams(col(textCol)).as("__ghs"))
+      .select(col(idCol), gramHashes(col(textCol), n).as("__ghs"))
       .select(col(idCol), size(col("__ghs")).as("n_grams_distinct"),
         explode_outer(col("__ghs")).as("__gh"))
       .join(broadcast(benchGrams.withColumn("__hit", lit(1))), Seq("__gh"), "left")
@@ -146,10 +145,8 @@ object Curation {
                          textCol: String, n: Int = 3,
                          expectedGrams: Long = 1000L * 1000,
                          numBits: Long = 8L * 1024 * 1024): DataFrame = {
-    def grams(c: Column) =
-      org.apache.spark.sql.graft.WordGramHashes.of(coalesce(c, lit("")), n)
     val benchGrams = Query.ensureParallelism(bench)
-      .select(explode(grams(col(textCol))).as("__gh"))
+      .select(explode(gramHashes(col(textCol), n)).as("__gh"))
       .distinct()
       .localCheckpoint()
     val bytes = benchGrams
@@ -157,12 +154,12 @@ object Curation {
         .bloomAgg(xxhash64(col("__gh")), expectedGrams, numBits).as("bf"))
       .head.getAs[Array[Byte]](0)
     val perDoc = Query.ensureParallelism(train)
-      .select(col(idCol), size(grams(col(textCol))).as("n_grams_distinct"))
+      .select(col(idCol), size(gramHashes(col(textCol), n)).as("n_grams_distinct"))
     val hits =
       if (bytes == null) perDoc.select(col(idCol)).where(lit(false))
         .withColumn("n_overlap", lit(0L))
       else Query.ensureParallelism(train)
-        .select(col(idCol), explode(grams(col(textCol))).as("__gh"))
+        .select(col(idCol), explode(gramHashes(col(textCol), n)).as("__gh"))
         .where(org.apache.spark.sql.graft.Internals
           .bloomMightContain(bytes, xxhash64(col("__gh"))))
         .join(benchGrams, Seq("__gh"))
@@ -195,12 +192,10 @@ object Curation {
     * nullif guard, identically cross-engine. */
   def gramNovelty(docs: DataFrame, idCol: String, textCol: String,
                   n: Int = 3): DataFrame = {
-    def grams(c: Column) =
-      org.apache.spark.sql.graft.WordGramHashes.of(coalesce(c, lit("")), n)
     val perDoc = Query.ensureParallelism(docs)
-      .select(col(idCol), size(grams(col(textCol))).as("n_grams"))
+      .select(col(idCol), size(gramHashes(col(textCol), n)).as("n_grams"))
     val novel = Query.ensureParallelism(docs)
-      .select(col(idCol), explode(grams(col(textCol))).as("__gh"))
+      .select(col(idCol), explode(gramHashes(col(textCol), n)).as("__gh"))
       .groupBy(col("__gh")).agg(min(col(idCol)).as(idCol))
       .groupBy(col(idCol)).agg(count(lit(1)).as("n_novel"))
     perDoc.join(novel, Seq(idCol), "left")

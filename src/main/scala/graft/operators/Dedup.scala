@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
  */
 object Dedup {
 
-  /** Tokenize: lowercase, split on spaces, drop empties. DISTINCT per doc —
+  /** Tokenize with [[Text.tokens]] (NULL text: no rows). DISTINCT per doc —
     * set semantics, the standard for minhash/jaccard. The de-dup happens
     * INSIDE the row (`array_distinct` before the explode), so this is a pure
     * map — no `.distinct()` shuffle of token-level rows, and the explode
@@ -34,16 +34,13 @@ object Dedup {
     * one whole-stage-codegen span. Output is identical to the exploded
     * global-distinct form: tokens are per-doc distinct either way. */
   def tokens(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol),
-      explode(array_distinct(
-        filter(split(lower(col(textCol)), " "), w => w =!= ""))).as("w"))
+    docs.select(col(idCol), explode(array_distinct(Text.tokens(col(textCol)))).as("w"))
 
   /** 40-bit token hash, WITNESS form: md5 hex prefix parsed to a long —
     * expensive (full digest + hex string + base-16 parse per token) but
     * replayable arithmetic-for-arithmetic in any engine with `md5`, which
     * is what keeps the minhash-family oracles hash-exact. */
-  private[graft] def h40Md5(w: Column): Column =
-    conv(substring(md5(w), 1, 10), 16, 10).cast("long")
+  private[graft] def h40Md5(w: Column): Column = Text.md5Prefix(w, 10)
 
   /** Per-doc token SET as one narrow row: sorted distinct token array, the
     * 40-bit md5-prefix hash of each token ([[h40Md5]] — the WITNESS hash;
@@ -72,8 +69,7 @@ object Dedup {
     Query.ensureParallelism(docs)
       .filter(length(translate(col(textCol), " ", "")) > 0)
       .select(col(idCol),
-        array_sort(array_distinct(
-          filter(split(lower(col(textCol)), " "), w => w =!= ""))).as("toks"))
+        array_sort(array_distinct(Text.tokens(col(textCol)))).as("toks"))
       .select(col(idCol), col("toks"),
         array_distinct(transform(col("toks"), w => h40Md5(w))).as("__harr"),
         sha2(concat_ws(" ", col("toks")), 256).as("__set_key"))
@@ -122,7 +118,7 @@ object Dedup {
       val (a, b) = sigAffine(j); (j.toLong, a, b)
     }.toDF("j", "a", "b")
     tokens(docs, idCol, textCol)
-      .withColumn("h", conv(substring(md5(col("w")), 1, 10), 16, 10).cast("long"))
+      .withColumn("h", h40Md5(col("w")))
       .crossJoin(broadcast(seedsDf)) // seeds are tiny — broadcast, no shuffle
       .groupBy(col(idCol), col("j"))
       .agg(min((col("a") * col("h") + col("b")) % lit(SigMod)).as("sig"))
@@ -1103,8 +1099,7 @@ object Dedup {
     require(bits >= 1 && bits <= 60, s"bits must be in [1,60], got $bits")
     val hexDigits = (bits + 3) / 4
     voteAssemble(
-      tokens(docs, idCol, textCol).withColumn("h",
-        conv(substring(md5(col("w")), 1, hexDigits), 16, 10).cast("long")),
+      tokens(docs, idCol, textCol).withColumn("h", Text.md5Prefix(col("w"), hexDigits)),
       idCol, bits)
   }
 

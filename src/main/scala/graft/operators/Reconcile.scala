@@ -65,7 +65,7 @@ object Reconcile {
   def chunkChecksums(df: DataFrame, pk: String, lower: Long, upper: Long,
                      parts: Int, rowRepr: Column): DataFrame =
     checksumAgg(df, pk, lower, upper, parts,
-      conv(substring(md5(rowRepr), 1, 12), 16, 10).cast("long"))
+      Text.md5Prefix(rowRepr, 12))
 
   /** Production variant of [[chunkChecksums]]: the row hash is `xxhash64`
     * (codegen'd, single 64-bit pass) instead of md5→hex-substring→conv —

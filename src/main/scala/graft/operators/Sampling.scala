@@ -25,8 +25,7 @@ object Sampling {
     * ~0.4% (65536 % 100 bias), which is what hash-bucket splits accept in
     * exchange for engine-independence. */
   private def hashBucket(idCol: Column, buckets: Int): Column =
-    conv(substring(md5(idCol.cast("string")), 1, 4), 16, 10)
-      .cast("long") % lit(buckets.toLong)
+    Text.md5Prefix(idCol.cast("string"), 4) % lit(buckets.toLong)
 
   /** Train/test split: `trainPct` percent of rows (by id-hash bucket) get
     * 'train', the rest 'test'. Pure map — no shuffle, no state; a row's
@@ -198,8 +197,7 @@ object Sampling {
   def ppsSample(df: DataFrame, idCol: String, weight: Column, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val tot = df.agg(sum(weight.cast("long")).as("__W"))
-    val h = conv(substring(md5(concat(lit("pps:"), col(idCol).cast("string"))),
-      1, 4), 16, 10).cast("long")
+    val h = Text.md5Prefix(concat(lit("pps:"), col(idCol).cast("string")), 4)
     df.crossJoin(broadcast(tot))
       .filter(h * col("__W") < lit(k.toLong) * weight.cast("long") * lit(65536L))
       .drop("__W")

@@ -151,13 +151,15 @@ object Similarity {
     * the fixed-point centroid sums make each update merge-ORDER-FREE, so
     * the trained index is bit-identical across runs, partitionings, AND
     * engines — the IVF oracle replays the whole training loop in SQL.
-    * Empty buckets keep their previous centroid. */
+    * Empty buckets keep their previous centroid. NULL and short vectors
+    * never seed and are never assigned ([[fullVectors]]). */
   def trainCentroids(vecs: DataFrame, k: Int, iters: Int = 3,
                      idCol: String = "vec_id", vecCol: String = "embedding"): Array[Seq[Float]] = {
-    var cents: Array[Seq[Float]] = vecs.orderBy(col(idCol)).limit(k)
+    val full = fullVectors(vecs, vecCol, corpusDims(vecs, vecCol))
+    var cents: Array[Seq[Float]] = full.orderBy(col(idCol)).limit(k)
       .select(col(vecCol)).collect().map(_.getSeq[Float](0))
     for (_ <- 1 to iters) {
-      val updated = vecs
+      val updated = full
         .withColumn("b", nearestCentroid(col(vecCol), cents))
         .groupBy(col("b"))
         .agg(graft.functions.CentroidFixed.centroid(col(vecCol)).as("c"))
@@ -166,6 +168,16 @@ object Similarity {
     }
     cents
   }
+
+  /** The rows of `vecs` whose vector may seed or be assigned: not NULL
+    * and `dims` long — the rule the rankers follow, whose kernels are NULL
+    * on a NULL vector or a length mismatch. */
+  private def fullVectors(vecs: DataFrame, vecCol: String, dims: Int): DataFrame =
+    vecs.filter(size(col(vecCol)) === dims)
+
+  /** The corpus' vector length: its longest vector's (0 when empty). */
+  private def corpusDims(vecs: DataFrame, vecCol: String): Int =
+    Option(vecs.agg(max(size(col(vecCol)))).head.get(0)).fold(0)(_.asInstanceOf[Int])
 
   /** Index of the centroid with max cosine similarity (ties → lowest index,
     * deterministic). */
@@ -264,14 +276,16 @@ object Similarity {
     * centroids, the update moves only m·k·dsub (sum, count) pairs to the
     * driver per round (bounded by INDEX size, like [[trainCentroids]] /
     * [[dimStats]], never by data size). Empty buckets keep their previous
-    * centroid. Result: cb(s)(j) = centroid j of subspace s. */
+    * centroid. NULL and short vectors never seed and are never assigned
+    * ([[fullVectors]]). Result: cb(s)(j) = centroid j of subspace s. */
   def trainPqCodebooks(vecs: DataFrame, m: Int = 4, k: Int = 16, iters: Int = 2,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): Array[Array[Array[Long]]] = {
-    val dims = vecs.select(size(col(vecCol))).head.getInt(0)
+    val dims = corpusDims(vecs, vecCol)
+    val full = fullVectors(vecs, vecCol, dims)
     require(dims % m == 0, s"m=$m must divide dims=$dims")
     val dsub = dims / m
-    val init = vecs.orderBy(col(idCol)).limit(k)
+    val init = full.orderBy(col(idCol)).limit(k)
       .select(array((0 until m).map(s => fpSub(col(vecCol), s, dsub)): _*).as("subs"))
       .collect().map(_.getSeq[scala.collection.Seq[Long]](0))
     require(init.length == k, s"need at least $k vectors to init, got ${init.length}")
@@ -282,7 +296,7 @@ object Similarity {
       val assignExpr = (0 until m).foldRight(lit(-1).cast("int")) { (s, acc) =>
         when(col("s") === s, pqNearest(col("sv"), cbNow(s))).otherwise(acc)
       }
-      val sums = Query.ensureParallelism(vecs)
+      val sums = Query.ensureParallelism(full)
         .select(posexplode(array((0 until m).map(s =>
           fpSub(col(vecCol), s, dsub)): _*)).as(Seq("s", "sv")))
         .withColumn("j", assignExpr)
@@ -560,15 +574,18 @@ object Similarity {
   /** What both int8 k-means entry points start from: an encoder of
     * (id, vector) rows into (id, __codes) under `vecs`' calibration, and
     * the `k` smallest ids, whose code rows seed the centroids (a k-row
-    * driver collect — index-sized by design). */
+    * driver collect — index-sized by design). Only full-length vectors
+    * are encoded or seed: a NULL or short vector would have NULL
+    * distances, and `min(struct(dist, cluster))` orders a NULL first. */
   private def int8Seeding(vecs: DataFrame, k: Int, idCol: String,
                           vecCol: String): (DataFrame => DataFrame, Array[Any]) = {
     require(k >= 1, s"k must be >= 1, got $k")
     val (mins, maxs) = dimStats(vecs, vecCol)
-    val seedIds = vecs.select(col(idCol)).orderBy(col(idCol)).limit(k)
+    val full = fullVectors(_: DataFrame, vecCol, mins.length)
+    val seedIds = full(vecs).select(col(idCol)).orderBy(col(idCol)).limit(k)
       .collect().map(_.get(0))
     val codes = int8CodesCol(mins, maxs) _
-    (_.select(col(idCol), codes(col(vecCol)).as("__codes")), seedIds)
+    (full(_).select(col(idCol), codes(col(vecCol)).as("__codes")), seedIds)
   }
 
   /** The seed centroids (__cid, __cc): the rows of `coded` (id, __codes)

@@ -54,7 +54,8 @@ import org.apache.spark.sql.expressions.Window
  *    exists-per-token encodes (which approaches O(L²) on a long,
  *    heavily-boilerplate document and stalls its task — ADVICE r8).
  *
- * Oracle: the gram hash is the md5-prefix witness ([[gramHashMd5]]),
+ * Oracle: the gram hash is the md5-prefix witness
+ * ([[Curation.gramHashMd5]], the 60-bit [[Text.md5Prefix]]),
  * replayed digit-for-digit by the DuckDB oracle — the whole pipeline
  * (tokenize, positional grams, repeat threshold, coverage, cleaned text)
  * is cross-engine exact, hence a FULL hash oracle, not rows-only.
@@ -68,37 +69,26 @@ object SpanDedup {
     * planted boilerplate detectable while staying conservative). */
   val DefaultN = 5
 
-  /** Family tokenizer (single-space split, lowercased, empties dropped) —
-    * identical to `Dedup.tokens` / `Curation.gramArray` so span dedup,
-    * doc dedup and decontamination agree on token positions. */
-  private def toks(textCol: Column): Column =
-    filter(split(lower(coalesce(textCol, lit(""))), " "), w => w =!= "")
+  /** The family tokenizer ([[Text.tokens]]) with NULL text counted as
+    * empty, so a NULL document surfaces with zeros like "" does. Doc
+    * dedup and decontamination split tokens the same way, so all three
+    * agree on token positions. */
+  private def toks(textCol: Column): Column = Text.tokens(coalesce(textCol, lit("")))
 
-  /** 60-bit md5-prefix gram hash — same witness family and collision
-    * analysis as `Curation.gramHashMd5` (~1e-11 per-gram false-hit at a
-    * realistic 1e7-gram dictionary), reproducible in any engine. */
-  private def gramHashMd5(g: Column): Column =
-    conv(substring(md5(g), 1, 15), 16, 10).cast("long")
-
-  /** Positional n-gram array: struct(pos, gh) per start position 1-based
-    * over the token stream; `< n`-token docs yield an empty array (the
-    * when/otherwise guard also keeps `sequence` from producing a
-    * DESCENDING range when size < n, and avoids a row-level filter that
-    * Catalyst would push into the scan as a second full tokenize —
-    * round-8 filter-pushdown-recompute lesson). */
-  private def posGrams(tk: Column, n: Int): Column =
-    when(size(tk) >= n,
-      transform(sequence(lit(1), size(tk) - lit(n - 1)),
-        i => struct(i.as("pos"),
-          gramHashMd5(array_join(slice(tk, i, lit(n)), " ")).as("gh"))))
-      .otherwise(array().cast("array<struct<pos:int,gh:bigint>>"))
-
-  /** (id, pos, gh) stream of every n-gram occurrence in the corpus. */
+  /** (id, pos, gh) stream of every n-gram occurrence in the corpus: the
+    * 1-based start position and the gram's md5-prefix hash. `< n`-token
+    * docs emit nothing ([[Text.grams]]' guard — no row-level filter,
+    * which Catalyst would push into the scan as a second full tokenize).
+    * The hash is taken inside the array, before the explode: over the
+    * exploded column, the join's inferred `gh IS NOT NULL` filter would
+    * digest every gram a second time. */
   private def gramStream(docs: DataFrame, idCol: String, textCol: String,
                          n: Int): DataFrame =
     Query.ensureParallelism(docs)
-      .select(col(idCol), explode(posGrams(toks(col(textCol)), n)).as("__g"))
-      .select(col(idCol), col("__g.pos").as("__pos"), col("__g.gh").as("__gh"))
+      .select(col(idCol), toks(col(textCol)).as("__tk"))
+      .select(col(idCol), posexplode(transform(Text.grams(col("__tk"), n),
+        g => Curation.gramHashMd5(g))).as(Seq("__p0", "__gh")))
+      .select(col(idCol), (col("__p0") + 1).as("__pos"), col("__gh"))
 
   /**
    * Per-document duplicated-span statistics + cleaned text.
@@ -199,10 +189,11 @@ object SpanDedup {
     require(w >= 1, s"paragraph width must be >= 1, got $w")
     val tk = toks(col(textCol))
     val paras = Query.ensureParallelism(docs)
+      .select(col(idCol), tk.as("__tk"))
       .select(col(idCol), posexplode(
-        when(size(tk) > 0,
-          transform(sequence(lit(0), ((size(tk) - 1) / w).cast("int")),
-            i => array_join(slice(tk, i * w + 1, lit(w)), " ")))
+        when(size(col("__tk")) > 0,
+          transform(sequence(lit(0), ((size(col("__tk")) - 1) / w).cast("int")),
+            i => array_join(slice(col("__tk"), i * w + 1, lit(w)), " ")))
           .otherwise(array().cast("array<string>"))).as(Seq("__pidx", "__para")))
     // token-less docs explode to zero rows here; the final left join restores them
     val won = paras.withColumn("__rn", row_number().over(

@@ -16,15 +16,14 @@ object TextAnalysis {
 
   /** Global token frequency (explode + count — the one shuffle here). */
   def tokenCounts(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(split(lower(col(textCol)), " ")).as("token"))
+    docs.select(explode(Text.words(col(textCol))).as("token"))
       .filter(col("token") =!= "")
       .groupBy(col("token"))
       .agg(count(lit(1)).as("n"))
 
-  /** Whitespace token count per document. */
+  /** Whitespace token count per document ([[Text.whitespaceTokens]]). */
   def tokenCountPerDoc(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol),
-      size(filter(split(lower(col(textCol)), "\\s+"), w => w =!= "")).as("n_tokens"))
+    docs.select(col(idCol), size(Text.whitespaceTokens(col(textCol))).as("n_tokens"))
 
   /** BPE-ish subword count: a regex in the GPT-2 pre-tokenizer family —
     * letter runs, digit runs, punctuation runs (RE2-compatible: no
@@ -68,20 +67,25 @@ object TextAnalysis {
 
   /** X4 quality score: length, alpha ratio, stopword ratio, mean token
     * length — combined into one interpretable [0,1]-ish score. Each ratio
-    * is a single double division of exact ints (bit-stable). */
+    * is a single double division of exact ints (bit-stable). A ratio over
+    * zero characters or zero tokens is NULL (`nullif` on the divisor —
+    * ANSI division by zero would fail the query), so "" and all-space
+    * documents score NULL ratios in both engines. */
   def qualityScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val text = col(textCol)
     val nChars = length(text)
     val nAlpha = length(regexp_replace(text, "[^a-zA-Z]", ""))
-    val nTok = size(filter(split(lower(text), " "), w => w =!= ""))
+    val nTok = size(Text.tokens(text))
     val nStop = wordOccurrences(text, "the") + wordOccurrences(text, "a")
+    val perChar = nullif(nChars.cast("double"), lit(0.0))
+    val perTok = nullif(nTok.cast("double"), lit(0.0))
     docs.select(
       col(idCol),
       nChars.as("n_chars_actual"),
       nTok.as("n_tokens"),
-      (nAlpha.cast("double") / nChars.cast("double")).as("alpha_ratio"),
-      (nStop.cast("double") / nTok.cast("double")).as("stopword_ratio"),
-      ((nChars - nTok + 1).cast("double") / nTok.cast("double")).as("mean_token_len"))
+      (nAlpha.cast("double") / perChar).as("alpha_ratio"),
+      (nStop.cast("double") / perTok).as("stopword_ratio"),
+      ((nChars - nTok + 1).cast("double") / perTok).as("mean_token_len"))
   }
 
   /** X4 normalization: the canonical pre-dedup cleanup pass — lowercase,
@@ -139,7 +143,7 @@ object TextAnalysis {
     * the oracle. The xxhash64 form stays the production path. */
   def fingerprintMd5(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     fingerprintWith(docs, idCol, textCol,
-      w => conv(substring(md5(w), 1, 14), 16, 10).cast("long"))
+      w => Text.md5Prefix(w, 14))
 
   /** 2^57: keeps every fold intermediate below 2^63 (ANSI-safe — Spark 4
     * rejects wrapping overflow) while leaving ample collision resistance. */
@@ -148,16 +152,9 @@ object TextAnalysis {
   private def fingerprintWith(docs: DataFrame, idCol: String, textCol: String,
                               tokenHash: Column => Column): DataFrame =
     docs.select(col(idCol),
-      aggregate(
-        filter(split(lower(col(textCol)), " "), w => w =!= ""),
-        lit(0L),
+      aggregate(Text.tokens(col(textCol)), lit(0L),
         (acc, w) => (acc * lit(31L) + tokenHash(w)) % lit(FingerprintMod))
         .as("fingerprint"))
-
-  /** Ordered (non-distinct) token stream — word order matters here, unlike
-    * the set view dedup uses. */
-  private def tokenStream(textCol: Column): Column =
-    filter(split(lower(textCol), " "), w => w =!= "")
 
   /** X4 repetition filter (the Gopher/Rae-et-al. quality heuristic):
     * fraction of duplicated n-grams per document. Boilerplate and
@@ -168,12 +165,9 @@ object TextAnalysis {
   def ngramRepetition(docs: DataFrame, idCol: String, textCol: String,
                       n: Int = 3): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    val toks = tokenStream(col(textCol))
-    val grams = when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - lit(n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-    Query.ensureParallelism(docs).select(col(idCol), grams.as("__g"))
+    Query.ensureParallelism(docs)
+      .select(col(idCol), Text.tokens(col(textCol)).as("__t"))
+      .select(col(idCol), Text.grams(col("__t"), n).as("__g"))
       .select(col(idCol),
         size(col("__g")).as("n_ngrams"),
         size(array_distinct(col("__g"))).as("n_distinct"))
@@ -309,7 +303,7 @@ object TextAnalysis {
   def chunkTokens(docs: DataFrame, idCol: String, textCol: String,
                   chunkSize: Int): DataFrame = {
     require(chunkSize >= 1, s"chunkSize must be >= 1, got $chunkSize")
-    val toks = tokenStream(col(textCol))
+    val toks = Text.tokens(col(textCol))
     // translate pre-filter ⟺ size(toks) > 0 without the pushed-down scan
     // filter re-running the split (see tfidfTopK)
     docs.filter(length(translate(col(textCol), " ", "")) > 0)
@@ -339,7 +333,7 @@ object TextAnalysis {
   def heavyHitters(docs: DataFrame, textCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     Query.ensureParallelism(docs)
-      .select(explode(tokenStream(col(textCol))).as("token"))
+      .select(explode(Text.tokens(col(textCol))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token"))
       .limit(k)
@@ -353,7 +347,7 @@ object TextAnalysis {
   def heavyHittersApprox(docs: DataFrame, textCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     Query.ensureParallelism(docs)
-      .select(explode(tokenStream(col(textCol))).as("token"))
+      .select(explode(Text.tokens(col(textCol))).as("token"))
       .agg(graft.functions.MisraGries.sketch(col("token"), k).as("hitters"))
       .select(explode(col("hitters")).as("h"))
       .select(col("h.token").as("token"), col("h.lower_bound").as("lower_bound"))
@@ -378,7 +372,7 @@ object TextAnalysis {
   def cooccurrence(docs: DataFrame, textCol: String, window: Int = 2,
                    minSupport: Long = 2): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
-    val toks = tokenStream(col(textCol))
+    val toks = Text.tokens(col(textCol))
     val pairs = flatten(array((1 to window).map { j =>
       zip_with(slice(toks, lit(1), greatest(size(toks) - j, lit(0))),
         slice(toks, lit(j + 1), greatest(size(toks) - j, lit(0))),
@@ -444,16 +438,11 @@ object TextAnalysis {
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
                          shingle: Int = 3, window: Int = 4): DataFrame = {
     require(shingle >= 1 && window >= 1, s"bad ($shingle, $window)")
-    val toks = tokenStream(col(textCol))
-    // shingle hashes: md5 prefix (14 hex digits) of the space-joined gram
-    val hashes = when(size(toks) >= shingle,
-      transform(sequence(lit(1), size(toks) - lit(shingle - 1)),
-        i => conv(substring(md5(array_join(
-          slice(toks, i, lit(shingle)), " ")), 1, 14), 16, 10)
-          .cast("long")))
-      .otherwise(array().cast("array<long>"))
     Query.ensureParallelism(docs)
-      .select(col(idCol), hashes.as("__h"))
+      .select(col(idCol), Text.tokens(col(textCol)).as("__t"))
+      // shingle hashes: md5 prefix (14 hex digits) of the space-joined gram
+      .select(col(idCol), transform(Text.grams(col("__t"), shingle),
+        g => Text.md5Prefix(g, 14)).as("__h"))
       .select(col(idCol), size(col("__h")).as("n_shingles"),
         when(size(col("__h")) >= window,
           array_sort(array_distinct(
@@ -481,7 +470,7 @@ object TextAnalysis {
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty && terms == terms.sorted,
       s"terms must be non-empty and sorted, got $terms")
-    val toks = tokenStream(col(textCol))
+    val toks = Text.tokens(col(textCol))
     val withTf = Query.ensureParallelism(docs)
       .select(col(idCol), toks.as("__tk"))
       .filter(size(col("__tk")) > 0)

@@ -48,32 +48,20 @@ object TokenKernels {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("SHA-256")
   }
 
-  /** 64-bit xxhash64 (seed 42 — Spark's `xxhash64`) of each space-separated
-    * token of `lower(text)`, in token order, duplicates kept; null when the
-    * text has no tokens. Shared tokenizer of both kernels: byte-span scan —
-    * 0x20 never occurs inside a UTF-8 multi-byte sequence, so splitting on
-    * the raw byte equals `split(text, " ")`, and empty spans (runs of
-    * spaces) are skipped like the `w != ""` filter. */
+  /** 64-bit xxhash64 (seed 42 — Spark's `xxhash64`) of each token
+    * [[tokenSpans]] finds, in token order, duplicates kept; null when the
+    * text has no tokens. */
   private def tokenHashes(text: UTF8String): Array[Long] = {
-    val bytes = text.toLowerCase.getBytes
-    var arr = new Array[Long](16)
-    var m = 0
-    var start = 0
+    val (bytes, spans, m) = tokenSpans(text)
+    if (m == 0) return null
+    val arr = new Array[Long](m)
     var i = 0
-    while (i <= bytes.length) {
-      if (i == bytes.length || bytes(i) == ' ') {
-        if (i > start) {
-          if (m == arr.length) arr = java.util.Arrays.copyOf(arr, m * 2)
-          arr(m) = XXH64.hashUnsafeBytes(
-            bytes, Platform.BYTE_ARRAY_OFFSET + start, i - start, 42L)
-          m += 1
-        }
-        start = i + 1
-      }
+    while (i < m) {
+      arr(i) = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET + spans(2 * i),
+        spans(2 * i + 1) - spans(2 * i), 42L)
       i += 1
     }
-    if (m == 0) null else if (m == arr.length) arr
-    else java.util.Arrays.copyOf(arr, m)
+    arr
   }
 
   /** Sort + dedupe in place; returns the deduped length. */
@@ -138,9 +126,12 @@ object TokenKernels {
   }
 
   /** Byte spans (start, end) of the space-separated tokens of
-    * `lower(text)` in its UTF-8 bytes — shared helper of the
-    * string-emitting kernels. Returns the lowered bytes plus a packed
-    * span array (even index = start, odd = end); 0 spans ⇒ no tokens. */
+    * `lower(text)` in its UTF-8 bytes — the one tokenizer of every kernel
+    * here. 0x20 never occurs inside a UTF-8 multi-byte sequence, so
+    * splitting on the raw byte equals `split(text, " ")`, and empty spans
+    * (runs of spaces) are skipped like the `w != ""` filter. Returns the
+    * lowered bytes plus a packed span array (even index = start, odd =
+    * end); 0 spans ⇒ no tokens. */
   private def tokenSpans(text: UTF8String): (Array[Byte], Array[Int], Int) = {
     val bytes = text.toLowerCase.getBytes
     var spans = new Array[Int](32)

@@ -361,4 +361,28 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       intercept[IllegalArgumentException](Similarity.lshBucket(col("embedding"), b))
     }
   }
+
+  test("training and int8 k-means contract: a NULL or short vector never " +
+      "seeds and is never assigned, even among the smallest ids") {
+    import spark.implicits._
+    def vec(i: Long) = Array.tabulate(4)(d => (((i * 7 + d * 5) % 11) - 5) / 5f)
+    // id 0 is NULL; id 1 is short — a prefix of id 5's vector, so the int8
+    // calibration (per-dimension min and max) is the clean corpus' own
+    val df = (0L until 12L).map {
+      case 0L => (0L, null)
+      case 1L => (1L, vec(5L).take(3))
+      case i => (i, vec(i))
+    }.toDF("vec_id", "embedding")
+    val clean = df.filter(col("vec_id") >= 2)
+    // (function, its result as a comparable value)
+    val table: Seq[(String, org.apache.spark.sql.DataFrame => Any)] = Seq(
+      ("trainCentroids", d => Similarity.trainCentroids(d, k = 3, iters = 2).toSeq),
+      ("trainPqCodebooks", d => Similarity.trainPqCodebooks(d, m = 2, k = 4, iters = 2)
+        .map(_.map(_.toSeq).toSeq).toSeq),
+      ("kmeansAssignInt8", d => Similarity.kmeansAssignInt8(d, k = 3).collect().toSet),
+      ("kmeansRound2Int8", d => Similarity.kmeansRound2Int8(d, k = 3).collect().toSet))
+    // equal to the clean corpus' result: the bad vectors did not seed,
+    // and the int8 assignments carry no row for them
+    for ((name, run) <- table) assert(run(df) == run(clean), name)
+  }
 }
