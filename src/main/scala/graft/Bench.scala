@@ -147,15 +147,8 @@ object Bench {
     // nothing and keeps the 240 s default) widens the budget when the
     // surface outgrows one full pass: at 312 keys a pass is ~240 s, so
     // every measured key is exactly ONE warm run off C2 steady state
-    // (~0.3–0.5 s high on multi-job keys). NOTE the warm-up asymmetry is
-    // the pair contract's ESTABLISHED design, not introduced by this
-    // knob: Bench has always warm-passed the Spark side (the warm-up
-    // removes janino/JIT COMPILER time, a cost class DuckDB does not
-    // have) while duckbench.py times each query on first run (its warm
-    // state is the buffer cache, which the back-to-back pair order
-    // already grants it). The knob only deepens Spark's pass count;
-    // duckbench.py grew a --warm flag for sittings that want a
-    // symmetric untimed first pass on the DuckDB side too.
+    // (~0.3–0.5 s high on multi-job keys). The warm-up removes
+    // janino/JIT COMPILER time; the knob only deepens the pass count.
     val warmBudgetSec =
       sys.env.get("SPARK_GRAFT_WARM_BUDGET_SEC").map { raw =>
         raw.toLongOption.getOrElse(sys.error(

@@ -45,17 +45,9 @@ object BenchOne {
     val spark = LocalTuning(SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus))
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.graft.rangeJoin.binWidth", "3600000000")
-      // diagnostic toggles (BenchOne only — Bench/Verify keep defaults):
-      // SPARK_GRAFT_AQE=false isolates AQE stage-materialization barriers
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // SPARK_GRAFT_OBJAGG_FALLBACK isolates ObjectHashAggregate's
-      // sort-based fallback (unset: LocalTuning's 128k; Spark's own
-      // default is 128 distinct keys per partition)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJAGG_FALLBACK", "131072"))
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val counters = new Counters

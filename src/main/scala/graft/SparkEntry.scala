@@ -1994,23 +1994,19 @@ object SparkEntry {
           lit(":secret@host/db"))).as("masked"))),
 
     // ── §2.9 streaming semantics (batch-mode windows over events) ───────
-    // batch twin of Streams.dedupStream: the Deduplicate operator over the
-    // dedup key (key-only projection keeps the surviving-row choice moot)
+    // the key-only projection keeps the surviving-row choice moot
     "stream_dedup_keys" -> ((s, dir) =>
-      t(s, dir, "events")
-        .dropDuplicates("user_id", "event_type")
+      graft.streaming.Streams.dedupStream(t(s, dir, "events"), "ts",
+          Seq("user_id", "event_type"))
         .select(col("user_id"), col("event_type"))),
     "stream_tumbling_counts" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(window(col("ts"), "10 minutes"))
-        .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-        .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("win_start"),
+      graft.streaming.Streams.tumblingCounts(t(s, dir, "events"), "ts")
+        .select(date_format(col("win_start"), "yyyy-MM-dd HH:mm").as("win_start"),
           col("n"), col("sum_value"))),
     "stream_sliding_counts" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
-        .agg(count(lit(1)).as("n"))
-        .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("win_start"),
+      graft.streaming.Streams.slidingCounts(t(s, dir, "events"), "ts",
+          "10 minutes", "5 minutes")
+        .select(date_format(col("win_start"), "yyyy-MM-dd HH:mm").as("win_start"),
           col("n"))),
     // WATERMARK late-data accounting, batch REPLAY form: the fixture's
     // event stream is ts-ordered (zero drops — vacuous), so the replay
@@ -3799,8 +3795,7 @@ object SparkEntry {
     }),
 
     // ── data layout: z-order clustering key (multi-dim min/max pruning);
-    //    the layout write itself is pinned by LayoutSpec, the oracle
-    //    checks the interleave arithmetic cross-engine ────────────────────
+    //    the oracle checks the interleave arithmetic cross-engine ─────────
     "ext_zorder_cluster" -> ((s, dir) => {
       val o = t(s, dir, "orders")
       def x = col("o_custkey") % 1024

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /**
@@ -17,16 +17,6 @@ object Codec {
 
   /** F1: CRC32 of a string/binary value (`Zlib.crc32`, `lib/taps/utils.rb:25-31`). */
   def crc32Of(c: Column): Column = crc32(c.cast("binary"))
-
-  /** Chunk-level checksum in the taps sense: CRC32 over the concatenated,
-    * order-stable serialized rows of a (small, already-ordered) chunk.
-    * Deterministic because the chunk is pk-ordered first. */
-  def chunkChecksum(df: DataFrame, orderCols: Seq[String]): DataFrame = {
-    val serialized = concat_ws("", df.columns.map(c => col(c).cast("string")): _*)
-    df.orderBy(orderCols.map(col): _*)
-      .select(serialized.as("row_ser"))
-      .agg(crc32(concat_ws("\n", collect_list(col("row_ser"))).cast("binary")).as("chunk_crc32"))
-  }
 
   /** F2: base64 encode / decode (`lib/taps/utils.rb:33-39`). Spark's
     * built-in emits RFC-2045 MIME chunking (a `\r\n` every 76 chars) for

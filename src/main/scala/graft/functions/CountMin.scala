@@ -12,8 +12,8 @@ final case class CmBuf(cells: Array[Long])
 
 /**
  * Count-min sketch as a typed `Aggregator` (§2.10 custom-UDAF surface) —
- * the point-frequency sketch completing the family (HLL = cardinality,
- * Misra-Gries = heavy hitters, Bloom = membership, t-digest = quantiles):
+ * the point-frequency sketch beside Spark's built-in ones (HLL =
+ * cardinality, Bloom = membership):
  * fixed d·w counters per partition, merged by elementwise ADD, so a
  * 100 TB token stream reduces with NO token-level exchange and the
  * estimate  ĉ(t) = min_r cells[r·w + hash_r(t)]  satisfies the classical

@@ -78,17 +78,13 @@ object CatalogOps {
     counts.agg(sum(col("cnt")).as("total_records"))
 
   /** S6: schema dump as rows (name, type DDL) — the relational face of
-    * `Schema.dump_table` (`lib/taps/schema.rb:15-30`). Replay side uses
-    * `StructType.toDDL` via [[schemaDdl]]. */
+    * `Schema.dump_table` (`lib/taps/schema.rb:15-30`). */
   def schemaDump(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.schema.fields.map(f => (f.name, f.dataType.sql, f.nullable))
       .toSeq.toDF("col_name", "data_type", "nullable")
   }
-
-  /** S7: the executable DDL string (`CREATE TABLE` body) for schema replay. */
-  def schemaDdl(df: DataFrame): String = df.schema.toDDL
 
   /** Pre-transfer column profiling: one row per requested column with row
     * count, null count, distinct count, and min/max (surfaced as strings so

@@ -216,9 +216,7 @@ object Curation {
     * shape: one grouped aggregate whose exchange carries a row per group,
     * joined back (AQE broadcasts the quantile table when groups are few —
     * the common case) and a map-side `least/greatest` clip; the data rows
-    * shuffle only if the join does. At 100 TB with high-cardinality
-    * groups, [[winsorizeSketched]] swaps the exact percentile for the
-    * mergeable t-digest with the same join+clip shape. */
+    * shuffle only if the join does. */
   def winsorize(df: DataFrame, groupCol: String, valueCol: String,
                 lo: Double, hi: Double): DataFrame = {
     require(lo >= 0 && hi <= 1 && lo < hi, s"need 0 <= lo < hi <= 1, got ($lo, $hi)")
@@ -228,28 +226,6 @@ object Curation {
     df.join(q, Seq(groupCol))
       .withColumn(s"${valueCol}_w",
         least(greatest(col(valueCol), col("__qlo")), col("__qhi")))
-      .drop("__qlo", "__qhi")
-  }
-
-  /** The documented 100 TB swap point of [[winsorize]]: identical
-    * join+clip shape, but the per-group quantiles come from the mergeable
-    * [[graft.functions.TDigest]] sketch instead of exact `percentile` —
-    * per-group aggregation state drops from the group's full value list
-    * to ≤ ~2·compression centroids, so a billion-row group winsorizes
-    * without an executor OOM. Clip bounds are rank-approximate
-    * (TDigestSpec pins ≤ 1% rank error at the default compression);
-    * the exact form remains the declared oracle-checked query. */
-  def winsorizeSketched(df: DataFrame, groupCol: String, valueCol: String,
-                        lo: Double, hi: Double,
-                        compression: Int = 100): DataFrame = {
-    require(lo >= 0 && hi <= 1 && lo < hi, s"need 0 <= lo < hi <= 1, got ($lo, $hi)")
-    val q = df.groupBy(col(groupCol))
-      .agg(graft.functions.TDigest.quantiles(
-        col(valueCol).cast("double"), Seq(lo, hi), compression).as("__q"))
-      .select(col(groupCol), col("__q")(0).as("__qlo"), col("__q")(1).as("__qhi"))
-    df.join(q, Seq(groupCol))
-      .withColumn(s"${valueCol}_w",
-        least(greatest(col(valueCol).cast("double"), col("__qlo")), col("__qhi")))
       .drop("__qlo", "__qhi")
   }
 
@@ -264,8 +240,8 @@ object Curation {
     * exchanges one row per group and AQE broadcasts the tiny quantile
     * tables back onto the data. Exact `percentile` matches DuckDB
     * `quantile_cont` (the proven winsorize seam — both interpolate on the
-    * sorted values); at 100 TB with high-cardinality groups swap both
-    * medians for t-digests and keep the shape. */
+    * sorted values); at 100 TB with high-cardinality groups both medians
+    * would need a mergeable quantile sketch, in the same shape. */
   def madOutliers(df: DataFrame, groupCol: String, valueCol: String,
                   k: Double): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
@@ -293,15 +269,5 @@ object Curation {
     df.withColumn("__qi_n", count(lit(1)).over(w))
       .filter(col("__qi_n") >= k)
       .drop("__qi_n")
-  }
-
-  /** The suppressed-group report companion to [[kAnonymize]]: each
-    * quasi-identifier combination below k with its size — what a privacy
-    * review looks at before release. */
-  def kAnonymityViolations(df: DataFrame, qiCols: Seq[String], k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    df.groupBy(qiCols.map(col): _*)
-      .agg(count(lit(1)).as("group_size"))
-      .filter(col("group_size") < k)
   }
 }

@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
  *  3. [[simhash]] — 64-bit SimHash per doc; near-dups = small Hamming
  *     distance. One pass, no self-join; pairs found by matching on rotated
  *     bit-blocks (not materialized here).
- *  4. [[jaccardOnCandidates]] — exact token-set Jaccard, computed only on
- *     LSH candidates (verification step of the standard minhash pipeline).
+ *  4. [[nearDupsFused]] — exact token-set Jaccard, computed only on LSH
+ *     candidates (verification step of the standard minhash pipeline).
  *
  * All determinstic: hashing is md5/sha2/xxhash64 with fixed seeds — no RNG,
  * so results are reproducible run-over-run and engine-over-engine.
@@ -98,43 +98,6 @@ object Dedup {
     docs.groupBy(sha2(lower(trim(col(textCol))), 256).as("h"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** The deduplicated corpus itself (keep lowest id per content hash). */
-  def dropExactDups(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val keep = exact(docs, idCol, textCol).select(col("keep_id").as(idCol))
-    docs.join(keep, Seq(idCol), "left_semi")
-  }
-
-  /** X2 step 1 (unfused reference path): minhash signatures as (id, j, sig)
-    * rows. sig_j(doc) = min over tokens of the j-th affine hash of the
-    * token's 40-bit md5 prefix — ONE digest per token regardless of seed
-    * count (the old md5-per-seed family recomputed `seeds` digests per
-    * token for no recall gain). Exists for the fused-vs-unfused equivalence
-    * spec; production uses the fused array form in [[minhashPairs]]. */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        seeds: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val seedsDf = (0 until seeds).map { j =>
-      val (a, b) = sigAffine(j); (j.toLong, a, b)
-    }.toDF("j", "a", "b")
-    tokens(docs, idCol, textCol)
-      .withColumn("h", h40Md5(col("w")))
-      .crossJoin(broadcast(seedsDf)) // seeds are tiny — broadcast, no shuffle
-      .groupBy(col(idCol), col("j"))
-      .agg(min((col("a") * col("h") + col("b")) % lit(SigMod)).as("sig"))
-  }
-
-  /** X2 step 2 (unfused reference path): LSH banding — join each band's
-    * signatures in seed order with '_' (signatures are decimal numbers now,
-    * so an unseparated concat would not be injective). Returns
-    * (id, band, band_sig). */
-  def minhashBands(sigs: DataFrame, idCol: String, rowsPerBand: Int): DataFrame =
-    sigs.withColumn("band", expr(s"j div $rowsPerBand"))
-      .groupBy(col(idCol), col("band"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("j"), col("sig")))),
-          x => x.getField("sig").cast("string")), "_").as("band_sig"))
-
   /** The per-row band-signature strings over a `__sigs` signature array —
     * ONE definition shared by the batch banding and the streaming
     * dedup-on-ingest path ([[graft.streaming.Streams.nearDupStream]]), so
@@ -167,7 +130,7 @@ object Dedup {
     * spec. Rows are (id, __n set size, band, band_sig, carry…). */
   private def bandsOfSets(sets: DataFrame, idCol: String,
                           seeds: Int, rowsPerBand: Int,
-                          carry: Seq[String] = Nil): DataFrame = {
+                          carry: Seq[String]): DataFrame = {
     val nBands = math.max(1, (seeds + rowsPerBand - 1) / rowsPerBand)
     val sigs = sigArrayExpr(seeds)
     val bandSigExprs = this.bandSigExprs(seeds, rowsPerBand)
@@ -847,29 +810,29 @@ object Dedup {
   def dropNearDupsAgainst(reference: DataFrame, incoming: DataFrame,
                           idCol: String, textCol: String,
                           seeds: Int = 16, rowsPerBand: Int = 8,
-                          threshold: Double = 0.95): DataFrame =
-    dropAgainstImpl(reference, incoming, idCol, textCol, seeds, rowsPerBand,
-      threshold, fast = false)
-
-  /** [[dropNearDupsAgainst]] on the fused production kernel
-    * ([[org.apache.spark.sql.graft.TokenSetHashes]] — the same
-    * witness-vs-fast relationship as [[minhashPairs]]/[[minhashPairsFast]]:
-    * no DuckDB oracle for xxhash64, the md5 form is the hash-exact witness,
-    * and the fixture-corpus drop sets are spec-pinned equal). This is ALSO
-    * the batch twin of the streaming form
-    * ([[graft.streaming.Streams.againstReferenceStream]]) — both sides of
-    * that pin run the identical kernel and band construction. */
-  def dropNearDupsAgainstFast(reference: DataFrame, incoming: DataFrame,
-                              idCol: String, textCol: String,
-                              seeds: Int = 16, rowsPerBand: Int = 8,
-                              threshold: Double = 0.95): DataFrame =
-    dropAgainstImpl(reference, incoming, idCol, textCol, seeds, rowsPerBand,
-      threshold, fast = true)
+                          threshold: Double = 0.95): DataFrame = {
+    val incDocs = tokenSets(incoming, idCol, textCol)
+      .select(col(idCol), col("__harr"))
+    val par = reference.sparkSession.sparkContext.defaultParallelism
+    val refSets = tokenSets(reference, idCol, textCol)
+      .select(col("__set_key"), col("__harr"))
+      .repartition(par, col("__set_key"))
+      .groupBy(col("__set_key"))
+      .agg(first(col("__harr")).as("__harr"))
+      .select(lit(0L).as("__ref"), col("__harr"))
+    // aliases `l` = incoming, `r` = reference; one emission per
+    // (incoming doc, reference set)
+    val matched = verifiedBandPairs(
+      bandsOfSets(incDocs, idCol, seeds, rowsPerBand, Seq("__harr", "__allsigs")),
+      bandsOfSets(refSets, "__ref", seeds, rowsPerBand, Seq("__harr", "__allsigs")),
+      repOrder = false, threshold)
+      .select(col(s"l.$idCol").as(idCol))
+    incoming.join(matched, Seq(idCol), "left_anti")
+  }
 
   /** Doc-level (id, set key, hash array) rows: the md5 WITNESS hashes
     * ([[tokenSets]]) or the fused production kernel — one flag so the
-    * witness/fast twins of the cross-corpus family cannot structurally
-    * diverge. */
+    * witness/fast twins cannot structurally diverge. */
   private def keyedSets(docs: DataFrame, idCol: String, textCol: String,
                         fast: Boolean): DataFrame =
     if (!fast) tokenSets(docs, idCol, textCol)
@@ -883,92 +846,6 @@ object Dedup {
         org.apache.spark.sql.graft.TokenSetHashes.of(col(textCol)).as("__ts"))
       .select(col(idCol), hex(col("__ts.key")).as("__set_key"),
         col("__ts.harr").as("__harr"))
-
-  /** The reference side of the cross-corpus family as a band table:
-    * distinct token sets only (no doc ids, no member arrays — nothing about
-    * the reference survives but the sets), exploded to
-    * (band, band_sig, __n, __harr, __allsigs) rows. PRODUCTION (kernel)
-    * hashes — this is the table the streaming form joins against
-    * ([[graft.streaming.Streams.againstReferenceStream]]); a static side is
-    * re-evaluated every micro-batch, so long-running streams should
-    * materialize it (persist, or write/read a table) before wiring it in. */
-  def referenceBands(reference: DataFrame, idCol: String, textCol: String,
-                     seeds: Int = 16, rowsPerBand: Int = 8): DataFrame =
-    referenceBandTable(reference, idCol, textCol, seeds, rowsPerBand, fast = true)
-
-  private def referenceBandTable(reference: DataFrame, idCol: String,
-                                 textCol: String, seeds: Int, rowsPerBand: Int,
-                                 fast: Boolean): DataFrame = {
-    val par = reference.sparkSession.sparkContext.defaultParallelism
-    val sets = keyedSets(reference, idCol, textCol, fast)
-      .select(col("__set_key"), col("__harr"))
-      .repartition(par, col("__set_key"))
-      .groupBy(col("__set_key"))
-      .agg(first(col("__harr")).as("__harr"))
-      .select(lit(0L).as("__ref"), col("__harr"))
-    bandsOfSets(sets, "__ref", seeds, rowsPerBand, Seq("__harr", "__allsigs"))
-  }
-
-  /** The incoming side of the cross-corpus family, shared verbatim by the
-    * batch drops and the streaming flag form: doc-level (idCol, __harr)
-    * rows banded and verified against a reference band table
-    * ([[verifiedBandPairs]], aliases `l` = incoming, `r` = reference), one
-    * emission per (incoming doc, reference set). Callers select the
-    * qualified `l.*` columns they need plus `jaccard`. */
-  private[graft] def referenceMatches(incDocs: DataFrame, idCol: String,
-                                      refBands: DataFrame, seeds: Int,
-                                      rowsPerBand: Int, threshold: Double): DataFrame =
-    verifiedBandPairs(bandsOfSets(incDocs, idCol, seeds, rowsPerBand,
-      Seq("__harr", "__allsigs")), refBands, repOrder = false, threshold)
-
-  private def dropAgainstImpl(reference: DataFrame, incoming: DataFrame,
-                              idCol: String, textCol: String,
-                              seeds: Int, rowsPerBand: Int, threshold: Double,
-                              fast: Boolean): DataFrame = {
-    val incDocs = keyedSets(incoming, idCol, textCol, fast)
-      .select(col(idCol), col("__harr"))
-    val rb = referenceBandTable(reference, idCol, textCol, seeds, rowsPerBand, fast)
-    val matched = referenceMatches(incDocs, idCol, rb, seeds, rowsPerBand, threshold)
-      .select(col(s"l.$idCol").as(idCol))
-    incoming.join(matched, Seq(idCol), "left_anti")
-  }
-
-  /** X2 verification step: exact token-set Jaccard, computed ONLY on the
-    * LSH candidate pairs (never all-pairs). Output keeps pairs with
-    * jaccard ≥ threshold. The division is one IEEE double op on two exact
-    * integers — bit-stable across engines. */
-  def jaccardOnCandidates(docs: DataFrame, idCol: String, textCol: String,
-                          candidates: DataFrame, threshold: Double): DataFrame =
-    jaccardOn(tokens(docs, idCol, textCol), idCol, candidates, threshold)
-
-  /** Adapter for token-level input: aggregate to per-doc arrays once, then
-    * verify via [[jaccardOnArrays]]. */
-  private def jaccardOn(tok: DataFrame, idCol: String,
-                        candidates: DataFrame, threshold: Double): DataFrame = {
-    val arrs = tok.groupBy(col(idCol))
-      .agg(sort_array(collect_set(col("w"))).as("toks"))
-    jaccardOnArrays(arrs, idCol, candidates, threshold)
-  }
-
-  /** Jaccard over candidate pairs via per-doc token ARRAYS: two joins that
-    * move one ~tokens-sized array per candidate side, then a codegen'd
-    * `array_intersect` per pair. The alternative — explode both sides and
-    * re-group — shuffles |candidates|×|tokens/doc| rows (60M at sf0.1 here);
-    * this shape shuffles only |candidates| rows and is the one that survives
-    * boilerplate-heavy corpora where LSH buckets run hot. */
-  private def jaccardOnArrays(arrs: DataFrame, idCol: String,
-                              candidates: DataFrame, threshold: Double): DataFrame = {
-    val inter = candidates
-      .join(arrs.select(col(idCol).as("doc_a"), col("toks").as("ta")), Seq("doc_a"))
-      .join(arrs.select(col(idCol).as("doc_b"), col("toks").as("tb")), Seq("doc_b"))
-      .withColumn("i", size(array_intersect(col("ta"), col("tb"))))
-    inter
-      .withColumn("jaccard",
-        col("i").cast("double") /
-          (size(col("ta")) + size(col("tb")) - col("i")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
 
   /** FUZZY string near-dup join: pairs of strings within `maxDist` edit
     * distance, found WITHOUT an all-pairs levenshtein. Character q-gram

@@ -2179,7 +2179,7 @@ object Graph {
     * support fold is edge-keyed and LEFT-joins back over the edge list
     * (support frame ≤ |E|). Support is what k-truss peels on and what
     * common-neighbor link prediction ranks by. */
-  def edgeSupport(edges: DataFrame, uCol: String, vCol: String): DataFrame = {
+  private[graft] def edgeSupport(edges: DataFrame, uCol: String, vCol: String): DataFrame = {
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
     val result = edgeSupportBody(e).ckpt()
@@ -2969,8 +2969,8 @@ object Graph {
     * over exact integers (bit-identical cross-engine); ties order by
     * (u, v), so the top-k cut is deterministic. Degrees join in from the
     * node-sized degree table. */
-  def edgeJaccardTopK(edges: DataFrame, uCol: String, vCol: String,
-                      k: Int): DataFrame = {
+  private[graft] def edgeJaccardTopK(edges: DataFrame, uCol: String, vCol: String,
+                                     k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
@@ -2996,8 +2996,8 @@ object Graph {
     * (shared checkpointed edge frame — the pair build runs once), and
     * transitivity = 3·△/wedges as one IEEE division over the two exact
     * integers (NULL on a wedge-free graph, both engines). */
-  def transitivitySummary(edges: DataFrame, uCol: String,
-                          vCol: String): DataFrame = {
+  private[graft] def transitivitySummary(edges: DataFrame, uCol: String,
+                                         vCol: String): DataFrame = {
     val e = edges.select(col(uCol).as("u"), col(vCol).as("v"))
       .ckpt()
     val wedges = degreeTable(e).agg(

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
- * Multi-dimensional data-layout clustering (SURVEY §2.11 [EXT]): Z-order
- * (Morton) interleaving so parquet min/max statistics prune on SEVERAL
- * columns at once.
+ * Data layout (SURVEY §2.11 [EXT]): bucketed tables, small-file compaction,
+ * and the Z-order (Morton) key that lets parquet min/max statistics prune
+ * on SEVERAL columns at once.
  *
  * Why it matters at 100 TB: a table range-partitioned and sorted on one
  * key prunes scans on that key only — a predicate on any other column
@@ -15,9 +15,7 @@ import org.apache.spark.sql.functions._
  * min/max footer range covers a small rectangle of the key space, so the
  * reader skips files/row-groups for predicates on ANY of the clustered
  * columns. This is the layout trick behind the z-ordering of the lakehouse
- * table formats, expressed here as plain narrow expressions + one
- * `repartitionByRange` — no custom writer needed, Catalyst and the parquet
- * committer do the rest.
+ * table formats; the key is a plain narrow expression ([[zValue]]).
  *
  * Everything is integer bit arithmetic (`&`, `>>`, `<<` on longs) — exactly
  * reproducible in any engine, so the z-values themselves are oracle-checked
@@ -28,7 +26,7 @@ object Layout {
   /** Morton z-value of `cols`, each already normalized to [0, 2^bits).
     * Bit b of dimension d lands at position b·k + d of the result —
     * dimension-alternating interleave. Requires bits·k ≤ 62 (BIGINT-safe,
-    * no sign games). Normalize arbitrary domains first ([[normBucket]]). */
+    * no sign games). */
   def zValue(cols: Seq[Column], bits: Int): Column = {
     val k = cols.size
     require(k >= 1, "zValue needs at least one column")
@@ -38,34 +36,6 @@ object Layout {
         shiftleft(shiftright(c.cast("long"), b).bitwiseAND(lit(1L)), b * k + d)
       }
     }.reduce(_ + _)
-  }
-
-  /** Proportional bucket of a non-negative integral column into
-    * [0, 2^bits), given its (inclusive) domain maximum: (v · 2^bits) div
-    * (max + 1). Pure long arithmetic, replayable in any SQL engine. */
-  def normBucket(c: Column, maxVal: Long, bits: Int): Column = {
-    require(maxVal >= 0 && bits >= 1 && bits <= 31, s"bad domain: max=$maxVal bits=$bits")
-    org.apache.spark.sql.graft.Internals.intDiv(
-      c.cast("long") * lit(1L << bits), lit(maxVal + 1L))
-  }
-
-  /** Rewrite `df` into a z-clustered layout: range-partition and sort by
-    * the interleaved key so consecutive rows — and therefore parquet
-    * files/row-groups — cover compact hyper-rectangles of the clustered
-    * dimensions. `numPartitions` ≈ target file count; the z column is
-    * dropped from the output (it is derivable, not payload).
-    *
-    * Scale shape: one range exchange (sampled boundaries, AQE-friendly) +
-    * an in-partition sort — identical cost to a plain global sort, but the
-    * resulting min/max footers prune on EVERY clustered dimension instead
-    * of the leading sort column only. */
-  def clusterByZ(df: DataFrame, dims: Seq[Column], bits: Int,
-                 numPartitions: Int): DataFrame = {
-    val z = zValue(dims, bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(numPartitions, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
   }
 
   /** Write `df` as a BUCKETED table (hash-partitioned into `buckets` files
@@ -148,18 +118,5 @@ object Layout {
     (if (shuffle) df.repartition(nOut) else df.coalesce(nOut))
       .write.mode("overwrite").parquet(dstDir)
     (in.size, listParquet(dstDir).size)
-  }
-
-  /** Per-partition bounding-box report for a layout: for each physical
-    * partition, the (min, max) extent of every dimension — the quantity
-    * min/max footer pruning actually sees. Used by specs to prove the
-    * z-layout's per-file rectangles are tight on ALL dimensions where a
-    * linear sort is tight on one. */
-  def extentReport(df: DataFrame, dims: Seq[(String, Column)]): DataFrame = {
-    val aggs = dims.flatMap { case (name, c) =>
-      Seq(min(c).as(s"${name}_min"), max(c).as(s"${name}_max")) }
-    df.withColumn("__pid", spark_partition_id())
-      .groupBy(col("__pid"))
-      .agg(aggs.head, aggs.tail: _*)
   }
 }

@@ -4,7 +4,7 @@ import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -730,10 +730,4 @@ object Multimodal {
         i => substring(col("payload"), (i * frameBytes * stride + 1).cast("int"), lit(frameBytes)))))
       .withColumnRenamed("pos", "frame_no")
       .withColumnRenamed("col", "frame")
-
-  /** Resize stub: truncate/pad the payload to `n` bytes — stands in for an
-    * image resize; preserves the binary-in/binary-out contract. */
-  def resizePayload(df: DataFrame, n: Int): DataFrame =
-    df.withColumn("payload",
-      rpad(col("payload"), n, Array[Byte](0)))
 }

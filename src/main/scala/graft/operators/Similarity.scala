@@ -36,32 +36,19 @@ import org.apache.spark.sql.expressions.Window
  * inline the score into the join condition and run the kernel twice per
  * pair.
  *
- * Dot products run on codegen'd array expressions (`zip_with` +
- * left-to-right `aggregate` fold — sequential, deterministic), in double
- * precision. No UDFs.
+ * Scores run on codegen'd native kernels or built-in array expressions
+ * with a left-to-right fold, in double precision. No UDFs.
  */
 object Similarity {
-
-  /** Deterministic left-to-right dot product of two float arrays, in double. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity rounded to `scale` decimals: the rounding absorbs
     * fold-order float noise so ranks (and oracle hashes) are cross-engine
     * stable. Backed by the native codegen'd
     * [[org.apache.spark.sql.graft.CosineSim]] expression (single fused loop,
     * no intermediate arrays) — numerically identical to the HOF composition
-    * `dot/(norm*norm)`, pinned by spec. */
+    * `dot/(norm*norm)`, pinned by CosineSimSpec. */
   def cosine(a: Column, b: Column, scale: Int = 6): Column =
     round(org.apache.spark.sql.graft.CosineSim(a, b), scale)
-
-  /** The built-in-composition form (zip_with + aggregate): kept as the
-    * reference implementation the native expression is verified against. */
-  def cosineHof(a: Column, b: Column, scale: Int = 6): Column =
-    round(dot(a, b) / (norm(a) * norm(b)), scale)
 
   /** The per-query ranking every top-k here ends with (the contract in
     * the header): number each query's pairs of `scored` by (`score`,
@@ -253,15 +240,6 @@ object Similarity {
   /** Native per-pair squared L2 (codegen'd; bit-equal to [[sqDist]]). */
   private def sqDistFast(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.SqDistLong(a, b)
-
-  /** 0-based index of the nearest centroid (min squared L2, ties → lowest
-    * index) — HOF form, kept as the native kernel's bit-equality pin
-    * (`array_position` returns the FIRST occurrence, = the kernel's
-    * strict-less update). */
-  private[graft] def pqNearestHof(sv: Column, cents: Array[Array[Long]]): Column = {
-    val dists = array(cents.map(c => sqDist(sv, lit(c))): _*)
-    (array_position(dists, array_min(dists)) - 1).cast("int")
-  }
 
   /** 0-based index of the nearest centroid — the native codegen'd kernel
     * (k·dsub interpreted lambda dispatches per ROW under the HOF form made
@@ -480,7 +458,7 @@ object Similarity {
     * → lowest index). `coarse` is a full-dim integer codebook — train it
     * with [[trainPqCodebooks]] at m=1 (the coarse quantizer IS a PQ with
     * one subspace). */
-  def probeCoarse(vec: Column, coarse: Array[Array[Long]], nprobe: Int): Column = {
+  private def probeCoarse(vec: Column, coarse: Array[Array[Long]], nprobe: Int): Column = {
     val fv = fpSub(vec, 0, coarse(0).length)
     val ranked = coarse.zipWithIndex.map { case (c, i) =>
       struct(sqDist(fv, lit(c)).as("d"), lit(i).as("idx"))
@@ -558,12 +536,6 @@ object Similarity {
       .otherwise(floor((x.cast("double") - mn) * lit(255.0) / (mx - mn) + lit(0.5))
         .cast(as))
   }
-
-  /** Dequantize a code back to the bucket midpoint-ish value — the decode
-    * side of [[quantizeInt8]]; max absolute error is (max−min)/255/2 per
-    * dimension (pinned by SimilaritySpec). */
-  def dequantize(code: Column, mn: Column, mx: Column): Column =
-    mn + code.cast("double") * (mx - mn) / lit(255.0)
 
   /** Array form of [[quantizeInt8]]'s code (same IEEE ops, so the same
     * cross-engine bit-guarantee): vector column → BIGINT code array. */

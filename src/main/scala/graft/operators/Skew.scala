@@ -55,18 +55,4 @@ object Skew {
     val smallS = small.crossJoin(broadcast(saltsDf))
     bigS.join(smallS, Seq(key, "__salt"), joinType).drop("__salt")
   }
-
-  /** Partial (hot-key-only) salting: salt ONLY rows whose key is in the hot
-    * set; everything else joins unsalted. Avoids replicating the small side
-    * for the long tail. `hotKeys` is driver-side (it came from
-    * [[keyHistogram]] — by construction tiny). */
-  def skewAwareJoin(big: DataFrame, small: DataFrame, key: String,
-                    hotKeys: Seq[Any], salts: Int): DataFrame = {
-    if (hotKeys.isEmpty) return big.join(small, Seq(key))
-    val isHot = col(key).isInCollection(hotKeys)
-    val hot = saltedJoin(big.filter(isHot), small.filter(isHot), key, salts)
-    val cold = big.filter(!isHot).join(small.filter(!isHot), Seq(key))
-    // align column order before union (join output orders can differ)
-    hot.select(cold.columns.map(col): _*).unionByName(cold)
-  }
 }

@@ -339,20 +339,6 @@ object TextAnalysis {
       .limit(k)
   }
 
-  /** The sketch form: Misra-Gries summaries merged across partitions (see
-    * [[graft.functions.MisraGries]]) — one pass, bounded k-entry state per
-    * partition, no token-level exchange at all (each partition ships one
-    * k-entry map). The exact form above is cheap enough for most corpora;
-    * this is the shape for when even the distinct-token exchange hurts. */
-  def heavyHittersApprox(docs: DataFrame, textCol: String, k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    Query.ensureParallelism(docs)
-      .select(explode(Text.tokens(col(textCol))).as("token"))
-      .agg(graft.functions.MisraGries.sketch(col("token"), k).as("hitters"))
-      .select(explode(col("hitters")).as("h"))
-      .select(col("h.token").as("token"), col("h.lower_bound").as("lower_bound"))
-  }
-
   /** X4 skip-gram co-occurrence counts — the corpus statistic under PMI
     * association scoring, phrase mining, and word-vector objectives
     * (word2vec's window counts): unordered token pairs within `window`

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.Query.dsum
 
 /**
  * Structured-Streaming surface (SURVEY §2.9).
@@ -18,17 +19,20 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  * stateful operator uses [[GroupStateTimeout]] so abandoned keys expire.
  * At 100 TB/day the same code runs against Kafka/file sources — the
  * transforms are source-agnostic DataFrame combinators, also applicable in
- * batch mode (the driver's oracle runs [[tumblingCounts]]'s batch twin).
+ * batch mode: the `stream_tumbling_counts`, `stream_sliding_counts` and
+ * `stream_dedup_keys` queries run [[tumblingCounts]], [[slidingCounts]] and
+ * [[dedupStream]] on the events table. In batch, Spark drops the
+ * watermark, and [[dedupStream]] keeps one row per key.
  */
 object Streams {
 
-  /** T7: tumbling event-time window counts with a watermark bounding state.
-    * Batch twin: `stream_tumbling_counts` in SparkEntry. */
+  /** T7: tumbling event-time window counts with a watermark bounding state;
+    * `sum_value` is the exact fixed-point [[graft.operators.Query.dsum]]. */
   def tumblingCounts(events: DataFrame, tsCol: String, lateness: String = "10 minutes",
                      width: String = "10 minutes"): DataFrame =
     events.withWatermark(tsCol, lateness)
       .groupBy(window(col(tsCol), width))
-      .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
+      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
       .select(col("window.start").as("win_start"), col("n"), col("sum_value"))
 
   /** Sliding window variant (width, slide). */
@@ -54,12 +58,14 @@ object Streams {
     * evicts once event time passes the lateness bound, which is the only
     * way exact dedup runs forever on an unbounded stream; duplicates that
     * recur across horizons are the residual a periodic batch pass
-    * ([[graft.operators.Dedup.exact]]) cleans. Batch twin:
-    * `dropDuplicates(keyCols)` (the `stream_dedup_keys` query). */
+    * ([[graft.operators.Dedup.exact]]) cleans. Spark rejects
+    * `dropDuplicatesWithinWatermark` on a batch frame; there the whole
+    * input is one horizon, so the batch form is `dropDuplicates`. */
   def dedupStream(events: DataFrame, tsCol: String, keyCols: Seq[String],
                   lateness: String = "10 minutes"): DataFrame =
-    events.withWatermark(tsCol, lateness)
-      .dropDuplicatesWithinWatermark(keyCols)
+    if (events.isStreaming)
+      events.withWatermark(tsCol, lateness).dropDuplicatesWithinWatermark(keyCols)
+    else events.dropDuplicates(keyCols)
 
   /** Stream-static enrichment: join an unbounded stream against a bounded
     * dimension table — the standard on-ingest decoration (user → account,
@@ -73,63 +79,6 @@ object Streams {
                    streamKey: String, dimKey: String,
                    joinType: String = "inner"): DataFrame =
     stream.join(broadcast(dim), col(streamKey) === col(dimKey), joinType)
-
-  /** The streaming form of taps' per-key cursor state (T1/T2): tracks, per
-    * key, the high-water mark and row count seen so far — exactly what
-    * `DataStreamKeyed` keeps in `state[:filter]`/`state[:offset]`
-    * (reference `lib/taps/data_stream.rb:249-266`). */
-  final case class CursorState(watermark: Long, rows: Long)
-  final case class CursorUpdate(key: String, watermark: Long, rows: Long)
-
-  /** mapGroupsWithState updater: merges a batch of (key, pk) rows into the
-    * per-key cursor. With `idleTimeoutMs > 0`, ProcessingTimeTimeout evicts
-    * keys idle past the bound — bounded state on unbounded keyspaces (the
-    * production setting; timer-driven micro-batches keep firing to expire
-    * state). `idleTimeoutMs <= 0` disables eviction (deterministic tests). */
-  def trackCursors(input: Dataset[(String, Long)], idleTimeoutMs: Long = 3600000L)
-                  (implicit enc1: org.apache.spark.sql.Encoder[CursorState],
-                   enc2: org.apache.spark.sql.Encoder[CursorUpdate]): Dataset[CursorUpdate] = {
-    val timeout =
-      if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    input.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .mapGroupsWithState[CursorState, CursorUpdate](timeout) {
-        (key: String, rows: Iterator[(String, Long)], state: GroupState[CursorState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            CursorUpdate(key, s.watermark, s.rows)
-          } else {
-            val prev = state.getOption.getOrElse(CursorState(Long.MinValue, 0L))
-            var wm = prev.watermark; var n = prev.rows
-            rows.foreach { case (_, pk) => if (pk > wm) wm = pk; n += 1 }
-            val next = CursorState(wm, n)
-            state.update(next)
-            if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
-            CursorUpdate(key, next.watermark, next.rows)
-          }
-      }
-  }
-
-  /** flatMapGroupsWithState variant: emits a [[CursorUpdate]] only when the
-    * watermark actually ADVANCED (0 or 1 outputs per key per batch — the
-    * delta stream a downstream checkpoint consumer wants, vs
-    * [[trackCursors]]' echo of every touched key). Append-mode compatible. */
-  def trackCursorDeltas(input: Dataset[(String, Long)])
-                       (implicit enc1: org.apache.spark.sql.Encoder[CursorState],
-                        enc2: org.apache.spark.sql.Encoder[CursorUpdate]): Dataset[CursorUpdate] =
-    input.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[CursorState, CursorUpdate](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long)], state: GroupState[CursorState]) =>
-          val prev = state.getOption.getOrElse(CursorState(Long.MinValue, 0L))
-          var wm = prev.watermark; var n = prev.rows
-          rows.foreach { case (_, pk) => if (pk > wm) wm = pk; n += 1 }
-          val next = CursorState(wm, n)
-          state.update(next)
-          if (wm > prev.watermark) Iterator.single(CursorUpdate(key, wm, n))
-          else Iterator.empty
-      }
 
   /** Stream-stream interval join (the unbounded form of
     * [[graft.operators.Temporal.rangeJoinBinned]]'s fixture query): left
@@ -275,63 +224,4 @@ object Streams {
           }
       }
   }
-
-  /** Streaming CROSS-CORPUS near-dup flagging: every arriving document is
-    * checked against a STATIC reference corpus (the previous training
-    * snapshot, an eval suite) and emits one (doc_id, band, jaccard) row per
-    * matching reference SET — the dedup-on-ingest form of
-    * [[graft.operators.Dedup.dropNearDupsAgainstFast]], its exact batch
-    * twin (same fused kernel, same band construction, same verify — the
-    * flagged id set equals the batch drop set, spec-pinned).
-    *
-    * Unlike [[nearDupStream]] this is STATELESS: the reference is fixed, so
-    * the whole operator is a stream-static equi-join on (band, band_sig) —
-    * no `flatMapGroupsWithState`, no watermark, no state store, no eviction
-    * policy. Each (doc, reference set) match emits exactly once (from its
-    * first matching band — the same in-row [[graft.operators.Dedup]]
-    * first-match predicate the batch family uses, which needs no state);
-    * a doc matching k distinct reference sets emits k rows — consumers
-    * drop on "any hit" (`dropDuplicates("doc_id")` downstream if a single
-    * verdict row is wanted).
-    *
-    * `referenceBands` comes from [[graft.operators.Dedup.referenceBands]]
-    * (set-collapsed, kernel-hashed). Spark re-evaluates a static side every
-    * micro-batch — materialize it (persist, or write/read a compact table)
-    * for long-running streams; at 100 TB the reference collapses to its
-    * distinct sets × bands, the incoming side never shuffles more than the
-    * matched candidates, and executor loss re-plans without state
-    * recovery. */
-  def againstReferenceStream(incoming: DataFrame, referenceBands: DataFrame,
-                             idCol: String, textCol: String,
-                             seeds: Int = 16, rowsPerBand: Int = 8,
-                             threshold: Double = 0.95): DataFrame = {
-    import graft.operators.Dedup
-    val docs = incoming
-      // cheap token-presence gate (kernel NULL ⟺ no tokens), same reason
-      // as nearDupStream: the isNotNull form re-runs the kernel as a
-      // pushed filter
-      .filter(length(translate(col(textCol), " ", "")) > 0)
-      .select(col(idCol).cast("long").as("id"),
-        org.apache.spark.sql.graft.TokenSetHashes.of(col(textCol))
-          .getField("harr").as("__harr"))
-    Dedup.referenceMatches(docs, "id", referenceBands, seeds, rowsPerBand, threshold)
-      .select(col("l.id").as("doc_id"), col("l.band").as("band"), col("jaccard"))
-  }
-
-  /** readStream → transform → writeStream harness over a Parquet directory
-    * source — the file-native analogue of taps' chunked pull. Exactly-once:
-    * the file sink commits atomically per batch, checkpoint carries offsets
-    * (T2/T3 in one config). */
-  def fileToFile(spark: SparkSession, srcDir: String, schemaFrom: DataFrame,
-                 transform: DataFrame => DataFrame,
-                 dstDir: String, checkpoint: String): StreamingQuery =
-    transform(
-      spark.readStream.schema(schemaFrom.schema).parquet(srcDir))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow()) // drain-and-stop: taps' graceful T6
-      .option("checkpointLocation", checkpoint)
-      .format("parquet")
-      .option("path", dstDir)
-      .start()
 }

@@ -34,7 +34,7 @@ class NtzUtcSemanticsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("fn_date_format_events boundary hours match the naive wall-clock") {
-    val ev = Tables.load(spark, sf, "events")
+    Tables.load(spark, sf, "events") // a legacy nanos fixture needs the read conf this sets
     val Array(minNaive, maxNaive) = spark.read.parquet(s"$sf/events.parquet")
       .agg(date_format(min("ts"), "yyyy-MM-dd HH"),
            date_format(max("ts"), "yyyy-MM-dd HH")).collect()(0)

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 import graft.streaming.{ChunkSizer, Manifest}
 

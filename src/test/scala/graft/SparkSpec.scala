@@ -11,9 +11,13 @@ trait SparkSpec { self: Suite =>
   /** Runs `body` with the driver-tier size limit at 0, so every size
     * gate declines and the distributed twins run (the benchmark's twin
     * regime); the previous setting is restored afterwards. */
-  def withTwins[T](body: => T): T = {
+  def withTwins[T](body: => T): T = withTierLimit(0L)(body)
+
+  /** Runs `body` with the driver-tier size limit at `bytes`; the previous
+    * setting is restored afterwards. */
+  def withTierLimit[T](bytes: Long)(body: => T): T = {
     val was = SparkSpec.TierLimits.map(k => k -> spark.conf.getOption(k))
-    SparkSpec.TierLimits.foreach(spark.conf.set(_, "0"))
+    SparkSpec.TierLimits.foreach(spark.conf.set(_, bytes.toString))
     try body
     finally was.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }

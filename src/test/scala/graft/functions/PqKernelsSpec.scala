@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{PqArgmin, SqDistLong}
 import graft.SparkSpec
@@ -11,6 +12,14 @@ import graft.operators.Similarity
   * folds, ties included; SqDistLong ≡ the zip_with/aggregate fold), null
   * semantics, codegen participation. */
 class PqKernelsSpec extends AnyFunSuite with SparkSpec {
+
+  /** 0-based index of the nearest centroid (min squared L2, ties → lowest
+    * index) — the HOF reference (`array_position` returns the FIRST
+    * occurrence, = the kernel's strict-less update). */
+  private def pqNearestHof(sv: Column, cents: Array[Array[Long]]): Column = {
+    val dists = array(cents.map(c => Similarity.sqDist(sv, lit(c))): _*)
+    (array_position(dists, array_min(dists)) - 1).cast("int")
+  }
 
   // deterministic pseudo-random BIGINT subvectors, WITH planted exact
   // duplicates of centroid rows so argmin ties are exercised
@@ -32,7 +41,7 @@ class PqKernelsSpec extends AnyFunSuite with SparkSpec {
   test("PqArgmin matches the HOF argmin bit-for-bit, ties to first index") {
     val cmp = subs.select(
       PqArgmin(col("sv"), cents).as("native"),
-      Similarity.pqNearestHof(col("sv"), cents).as("hof"))
+      pqNearestHof(col("sv"), cents).as("hof"))
     assert(cmp.filter(col("native") =!= col("hof")).count() == 0)
     // the duplicated centroid proves the tie rule is actually exercised:
     // feed the centroid itself, expect the FIRST occurrence (2, never 5)
@@ -40,7 +49,7 @@ class PqKernelsSpec extends AnyFunSuite with SparkSpec {
     import sq.implicits._
     val tie = Seq(Tuple1(cents(5))).toDF("sv")
       .select(PqArgmin(col("sv"), cents).as("native"),
-        Similarity.pqNearestHof(col("sv"), cents).as("hof")).head()
+        pqNearestHof(col("sv"), cents).as("hof")).head()
     assert(tie.getInt(0) == 2 && tie.getInt(1) == 2)
   }
 

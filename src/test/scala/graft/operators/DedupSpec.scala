@@ -22,8 +22,6 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val groups = Dedup.exact(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(1), r.getLong(2))).toSet
     assert(groups.contains((1L, 3L))) // docs 1,2,5 collapse; keep 1
-    assert(Dedup.dropExactDups(docs, "doc_id", "text")
-      .select("doc_id").collect().map(_.getLong(0)).toSet == Set(1L, 3L, 4L))
   }
 
   test("minhash LSH finds identical-token-set docs as candidates (X2)") {
@@ -37,7 +35,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
 
   test("jaccard verification on candidates (X2 step 2)") {
     val cands = Dedup.minhashPairs(docs, "doc_id", "text", 16, 8)
-    val verified = Dedup.jaccardOnCandidates(docs, "doc_id", "text", cands, 0.99)
+    val verified = DedupReference.jaccardOnCandidates(docs, "doc_id", "text", cands, 0.99)
       .collect().map(r => (r.getLong(1), r.getLong(0), r.getDouble(2)))
     verified.foreach { case (_, _, j) => assert(j >= 0.99 && j <= 1.0) }
     // identical sets → jaccard exactly 1.0
@@ -47,7 +45,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
   test("nearDupsFused matches the unfused candidates→jaccard pipeline") {
     val fused = Dedup.nearDupsFused(docs, "doc_id", "text", 16, 8, 0.5)
       .collect().map(r => (r.getLong(1), r.getLong(0), r.getDouble(2))).toSet
-    val unfused = Dedup.jaccardOnCandidates(docs, "doc_id", "text",
+    val unfused = DedupReference.jaccardOnCandidates(docs, "doc_id", "text",
       Dedup.minhashPairs(docs, "doc_id", "text", 16, 8), 0.5)
       .collect().map(r => (r.getLong(1), r.getLong(0), r.getDouble(2))).toSet
     assert(fused == unfused && fused.nonEmpty)
@@ -123,40 +121,6 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(kept == incIds -- crossDropped)
   }
 
-  test("dropNearDupsAgainstFast (kernel) is index-equivalent to the md5 witness") {
-    // same contract as minhashPairsFast-vs-witness: the two 40-bit hash
-    // families are equivalent LSH indexes, not bit-identical ones — clone
-    // (identical-set) drops are deterministic under BOTH, marginal
-    // (0.95 <= j < 1) candidates are independent draws per family
-    import spark.implicits._
-    val reference = Seq(
-      (100L, "the quick brown fox"),
-      (101L, "zebra yak xylophone wombat")).toDF("doc_id", "text")
-    val incoming = Seq(
-      (1L, "fox brown THE quick"),                    // ref-100 clone set → drops
-      (2L, "completely different words entirely"),    // kept
-      (3L, "zebra wombat xylophone yak")              // ref-101 clone set → drops
-    ).toDF("doc_id", "text")
-    def kept(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id").collect().map(_.getLong(0)).toSet
-    // clone-only corpus: exact equality is deterministic for any family
-    assert(kept(Dedup.dropNearDupsAgainst(reference, incoming, "doc_id", "text")) == Set(2L))
-    assert(kept(Dedup.dropNearDupsAgainstFast(reference, incoming, "doc_id", "text")) == Set(2L))
-
-    // fixture corpus: dropped-set agreement pinned at the IoU floor the
-    // symmetric fast-vs-witness spec derives (~0.89 recall per family at
-    // j=0.95 → ≥0.80 IoU for ideal independent families)
-    val all = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val ref = all.filter(col("doc_id") % 13 === 0)
-    val inc = all.filter(col("doc_id") % 13 =!= 0)
-    val incIds = inc.select("doc_id").collect().map(_.getLong(0)).toSet
-    val dw = incIds -- kept(Dedup.dropNearDupsAgainst(ref, inc, "doc_id", "text", 16, 8, 0.95))
-    val df = incIds -- kept(Dedup.dropNearDupsAgainstFast(ref, inc, "doc_id", "text", 16, 8, 0.95))
-    assert(dw.nonEmpty && df.nonEmpty, "fixture must contain cross-corpus drops")
-    val iou = (dw & df).size.toDouble / (dw | df).size.toDouble
-    assert(iou >= 0.80, f"dropped-set IoU $iou%.3f fell below the pinned floor")
-  }
-
   test("fuzzyNearDups finds small-edit-distance pairs, never crosses maxDist") {
     import spark.implicits._
     val rows = Seq(
@@ -228,7 +192,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
         s"${(clonePairs -- md5Fix).size}, by fast: ${(clonePairs -- fastFix).size})")
     def verified(c: Set[(Long, Long)]) = {
       import spark.implicits._
-      Dedup.jaccardOnCandidates(fix, "doc_id", "text",
+      DedupReference.jaccardOnCandidates(fix, "doc_id", "text",
         c.toSeq.toDF("doc_a", "doc_b"), 0.95)
         .collect().map(r => (r.getLong(1), r.getLong(0))).toSet
     }
@@ -261,8 +225,8 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // produce the same candidate pairs as the unfused signatures→bands path
     val fusedPairs = Dedup.minhashPairs(docs, "doc_id", "text", seeds = 10, rowsPerBand = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val bands = Dedup.minhashBands(
-      Dedup.minhashSignatures(docs, "doc_id", "text", seeds = 10), "doc_id", rowsPerBand = 4)
+    val bands = DedupReference.minhashBands(
+      DedupReference.minhashSignatures(docs, "doc_id", "text", seeds = 10), "doc_id", rowsPerBand = 4)
     val a = bands.select(col("doc_id").as("doc_a"), col("band"), col("band_sig"))
     val b = bands.select(col("doc_id").as("doc_b"), col("band"), col("band_sig"))
     val unfusedPairs = a.join(b, Seq("band", "band_sig"))
@@ -396,7 +360,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val est = Dedup.minhashEstimates(docs, "doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
     assert(est.nonEmpty)
-    val sig = Dedup.minhashSignatures(docs, "doc_id", "text", 16).collect()
+    val sig = DedupReference.minhashSignatures(docs, "doc_id", "text", 16).collect()
       .groupBy(_.getLong(0)).map { case (id, rows) =>
         id -> rows.sortBy(_.getLong(1)).map(_.getLong(2)).toSeq }
     est.foreach { case (a, b, n, e) =>
@@ -414,7 +378,6 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("containmentPairs: bounds, same pair set, jaccard reconstructs, clones at 1.0") {
-    import org.apache.spark.sql.functions._
     val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val cont = Dedup.containmentPairs(docs, "doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
@@ -733,11 +696,22 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // …and the default limits must silently take the prefix twin there
     assert(rows(Dedup.jaccardJoinExact(wide, "doc_id", "text", 4, 5)) ==
       withTwins(rows(Dedup.jaccardJoinExact(wide, "doc_id", "text", 4, 5))))
-    // edge corpora: empty, and all clones (one token set, so only
-    // same-set pairs) — both paths agree and neither throws
+    // edge corpora: empty; all clones (one token set, so only same-set
+    // pairs); the dense corpus plus NULL, "" and all-space rows (no
+    // tokens); and exactly 64 distinct tokens, the widest vocabulary the
+    // bitmap gate takes (bit 63 is the sign bit) — both paths agree and
+    // neither throws
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val clones = (1L to 6L).map(id => (id, "c a b")).toDF("doc_id", "text")
-    Seq("empty" -> empty, "all-clones" -> clones).foreach { case (cname, c) =>
+    val blanks = (resolved.take(20) ++ Seq(101L -> null.asInstanceOf[String],
+      102L -> "", 103L -> "   ")).toDF("doc_id", "text")
+    val vocab64 = (1L to 30L).map(id =>
+      (id, (0 until 64).map(i => s"w$i").drop((id % 5).toInt).mkString(" ")))
+      .toDF("doc_id", "text")
+    assert(Dedup.bitmapMasks(Dedup.jaccardReps(vocab64, "doc_id", "text"))
+      .isDefined)
+    Seq("empty" -> empty, "all-clones" -> clones, "null-empty-space" -> blanks,
+        "64-token" -> vocab64).foreach { case (cname, c) =>
       val cInc = c.filter($"doc_id" % 2 =!= 0)
       val cRef = c.filter($"doc_id" % 2 === 0)
       Seq[(String, () => org.apache.spark.sql.DataFrame)](
@@ -892,10 +866,10 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
         seeds = 16, configs = Seq(2, 4, 8, 16))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2), r.getLong(3)))
       .toSet
-    val sigs = Dedup.minhashSignatures(fixture, "doc_id", "text", seeds = 16)
+    val sigs = DedupReference.minhashSignatures(fixture, "doc_id", "text", seeds = 16)
       .localCheckpoint()
     val want = Seq(2, 4, 8, 16).map { r =>
-      val occ = Dedup.minhashBands(sigs, "doc_id", r)
+      val occ = DedupReference.minhashBands(sigs, "doc_id", r)
         .groupBy(col("band"), col("band_sig"))
         .agg(count(lit(1)).as("c"))
         .agg(count(lit(1)), sum(expr("c * (c - 1) div 2")).cast("bigint"))
@@ -1010,10 +984,10 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
         id -> t.toLowerCase.split(" ").filter(_.nonEmpty).toSet }.toMap
       val allIds = rows.map(_._1).sorted
       for ((seeds, rpb, t) <- configs) {
-        val sigDf = Dedup.minhashSignatures(docs, "doc_id", "text", seeds)
+        val sigDf = DedupReference.minhashSignatures(docs, "doc_id", "text", seeds)
         val sigs = sigDf.collect().groupBy(_.getLong(0)).map { case (id, rs) =>
           id -> rs.sortBy(num(_, "j")).map(num(_, "sig")).toSeq }
-        val buckets = Dedup.minhashBands(sigDf, "doc_id", rpb).collect()
+        val buckets = DedupReference.minhashBands(sigDf, "doc_id", rpb).collect()
           .groupBy(_.getLong(0)).map { case (id, rs) =>
             id -> rs.map(r => (num(r, "band"), r.getAs[String]("band_sig"))).toSet }
         assert(sigs.keySet == toks.keySet && buckets.keySet == toks.keySet)

@@ -33,9 +33,15 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
   private def rowSet(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
 
+  /** Few hub groups: 300 rows whose group pairs, at 8 B a pair, outgrow a
+    * limit the rows fit at 16 B a row. */
+  private def hubs: DataFrame = basketDf(randomBaskets(43, 4, 30, 300))
+  private val hubLimit = 300L * 16
+
   /** The tier-contract table: small (group, item) frames, each ≤ 400
-    * rows, and whether every operator must find pairs in it. */
-  private def frames: Seq[(String, DataFrame, Boolean)] = {
+    * rows, whether every operator must find pairs in it, and the tier
+    * limit its default run takes (None: the default limit). */
+  private def frames: Seq[(String, DataFrame, Boolean, Option[Long])] = {
     val sq = spark
     import sq.implicits._
     val rows = randomBaskets(41, nGroups = 25, nItems = 18, rows = 350) ++
@@ -44,19 +50,20 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
     val dupNull = (rows.map { case (g, i) => (g, Option(i)) } :+ ((10L, None)))
       .toDF("g", "i")
     Seq(
-      ("duplicate rows and a NULL item", dupNull, true),
-      ("empty", Seq.empty[(Long, Long)].toDF("g", "i"), false),
+      ("duplicate rows and a NULL item", dupNull, true, None),
+      ("empty", Seq.empty[(Long, Long)].toDF("g", "i"), false, None),
       ("single-item groups", Seq((1L, 7L), (2L, 8L), (3L, 9L), (3L, 9L))
-        .toDF("g", "i"), false),
+        .toDF("g", "i"), false, None),
       // the twin keeps a NULL group as its own basket beside group 0
       ("a NULL group beside group 0", Seq[(Option[Long], Long)](
         (Some(0L), 1L), (Some(0L), 2L), (Some(0L), 3L), (Some(0L), 4L),
         (None, 2L), (None, 3L), (None, 4L), (None, 5L),
         (Some(1L), 1L), (Some(1L), 5L), (Some(2L), 3L), (Some(2L), 5L))
-        .toDF("g", "i"), false),
+        .toDF("g", "i"), false, None),
       ("INT ids", basketDf(randomBaskets(53, 20, 15, 200))
         .select(col("g").cast("int").as("g"), col("i").cast("int").as("i")),
-        false))
+        false, None),
+      ("hub groups past the pair budget", hubs, true, Some(hubLimit)))
   }
 
   test("FromBaskets tiers equal their distributed twins bit-for-bit " +
@@ -74,10 +81,15 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
       "bipartite" -> (Graph.bipartiteProjectionTopK(_, "g", "i", topK = 15)))
     val all = frames
     assert(Graph.collectBaskets(all.head._2, "g", "i").isDefined)
+    // the hub frame's rows fit its limit and its pairs do not
+    val hubPairs = withTierLimit(Long.MaxValue)(
+      Graph.collectBaskets(hubs, "g", "i").get.pairExpansionCount)
+    assert(hubPairs * 8 > hubLimit)
+    assert(withTierLimit(hubLimit)(Graph.collectBaskets(hubs, "g", "i")).isEmpty)
     val mismatches = for {
-      (inName, df, rich) <- all
+      (inName, df, rich, limit) <- all
       (opName, f) <- operators
-      tier = run(f, df)
+      tier = limit.fold(run(f, df))(withTierLimit(_)(run(f, df)))
       twin = withTwins(run(f, df))
       if tier != twin || tier.isLeft || (rich && tier.exists(_._2.isEmpty))
     } yield s"$opName on $inName: tier $tier vs twin $twin"
@@ -107,21 +119,11 @@ class GraphBasketTierSpec extends AnyFunSuite with SparkSpec {
 
   test("gate declines fall back to the distributed twin: pair-expansion " +
       "and row caps, a NULL group, non-BIGINT ids") {
-    val rows = randomBaskets(43, 4, 30, 300) // few hub groups → big expansion
-    val df = basketDf(rows)
+    // the pair budget itself is a row of the tier-contract table above
+    val df = hubs
     val conf = spark.conf
     val wasB = conf.getOption("graft.graph.broadcastLimitBytes")
     try {
-      // the 300 rows fit the budget at 16 B a row; their group pairs,
-      // at 8 B a pair, do not
-      conf.set("graft.graph.broadcastLimitBytes", Long.MaxValue.toString)
-      val pairs = Graph.collectBaskets(df, "g", "i").get.pairExpansionCount
-      assert(df.count() <= 300 && pairs * 8 > 300 * 16)
-      conf.set("graft.graph.broadcastLimitBytes", (300 * 16).toString)
-      assert(Graph.collectBaskets(df, "g", "i").isEmpty)
-      val viaTwin = Graph.bipartiteProjectionTopK(df, "g", "i", 10)
-      val twin = withTwins(Graph.bipartiteProjectionTopK(df, "g", "i", 10))
-      assert(rowSet(viaTwin) == rowSet(twin))
       // at any limit the expansion must fit the one array expandPairs
       // fills: 65,537 items in one group expand to 2,147,516,416 pairs,
       // past Int.MaxValue − 8

@@ -872,7 +872,6 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val (es, tris) = randomGraph(53, 20, 160)
     val df = es.toDF("u", "v")
-    val set = es.toSet
     val nodes = es.flatMap(p => Seq(p._1, p._2)).distinct
     val nb = nodes.map { n =>
       n -> es.collect { case (a, b) if a == n => b; case (a, b) if b == n => a }.toSet

@@ -4,9 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 
-/** Z-order layout: interleave arithmetic, normalization, and the actual
-  * pruning payoff — per-partition bounding boxes tight on BOTH dimensions
-  * where a linear sort is tight on one. */
+/** Layout: z-value interleave arithmetic and small-file compaction. */
 class LayoutSpec extends AnyFunSuite with SparkSpec {
 
   test("zValue interleaves bits dimension-alternating (known vectors)") {
@@ -33,44 +31,6 @@ class LayoutSpec extends AnyFunSuite with SparkSpec {
       val quadrant = ((y >> 3) << 1) | (x >> 3) // top bit of each dim
       assert(z >> 6 === quadrant, s"($x,$y) z=$z")
     }
-  }
-
-  test("normBucket maps [0,max] onto [0,2^bits) proportionally") {
-    import spark.implicits._
-    val df = Seq(0L, 1L, 499L, 500L, 999L).toDF("v")
-    val b = df.select(Layout.normBucket(col("v"), 999L, 3).as("b"))
-      .collect().map(_.getLong(0)).toSeq
-    assert(b == Seq(0L, 0L, 3L, 4L, 7L))
-    assert(b.forall(x => x >= 0 && x < 8))
-  }
-
-  test("clusterByZ: bounding boxes tight on BOTH dims vs linear sort") {
-    val orders = graft.Tables.load(spark, "/root/testdata/sf0.01", "orders")
-      .select(col("o_orderkey"), (col("o_custkey") % 1024).as("x"),
-        (col("o_orderkey") % 1024).as("y"))
-    val parts = 64
-    // AVERAGE per-partition extent: the right statistic for a z-layout —
-    // a partition straddling a quadrant crossing of the curve legitimately
-    // has a large box (the classic z-jump), but pruning effectiveness is
-    // the expected box size a predicate intersects, not the worst box
-    def avgExtent(df: org.apache.spark.sql.DataFrame, dim: String): Double =
-      Layout.extentReport(df, Seq("x" -> col("x"), "y" -> col("y")))
-        .select((col(s"${dim}_max") - col(s"${dim}_min")).as("e"))
-        .agg(avg(col("e"))).head().getDouble(0)
-    val zClustered = Layout.clusterByZ(orders,
-      Seq(col("x"), col("y")), bits = 10, numPartitions = parts)
-    val linear = orders.repartitionByRange(parts, col("x"))
-      .sortWithinPartitions(col("x"))
-    // linear layout: x is tight, y spans nearly the whole 1024 domain in
-    // every partition — a predicate on y prunes nothing
-    assert(avgExtent(linear, "y") > 800,
-      "fixture should make the linear layout pathological on y")
-    // z layout: BOTH dims' average extents land well below the domain
-    // (64 partitions of the 20-bit space ≈ 128×128 tiles + jump partitions)
-    assert(avgExtent(zClustered, "x") < 512, s"x avg ${avgExtent(zClustered, "x")}")
-    assert(avgExtent(zClustered, "y") < 512, s"y avg ${avgExtent(zClustered, "y")}")
-    // and the layout is a pure reordering: same rows
-    assert(zClustered.count() == orders.count())
   }
 
   test("compact folds a small-file directory without shuffling or losing rows") {

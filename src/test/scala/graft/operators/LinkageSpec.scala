@@ -2,7 +2,6 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class LinkageSpec extends AnyFunSuite with SparkSpec {
 

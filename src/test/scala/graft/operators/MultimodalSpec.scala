@@ -49,7 +49,6 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("decodeFeatures quarantines undecodable payloads as nulls, not failures") {
-    import spark.implicits._
     val rows = java.util.Arrays.asList(
       org.apache.spark.sql.Row(1L, Array[Byte](1, 2, 3),
         org.apache.spark.sql.Row("image", "png", null, null, null)))
@@ -170,12 +169,6 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
     assert(got.head.getInt(1) == 0)
     // frame 0 = first 8 payload bytes
     assert(new String(got.head.getAs[Array[Byte]](2)) == "a much l")
-  }
-
-  test("resizePayload pads/truncates to the target size") {
-    val out = Multimodal.resizePayload(media, 16)
-      .select(length(col("payload"))).collect().map(_.getInt(0))
-    assert(out.forall(_ == 16))
   }
 
   test("wavFixture emits genuine WAVs; decodeAudioFeatures recovers the signal stats") {

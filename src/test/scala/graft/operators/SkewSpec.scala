@@ -27,12 +27,6 @@ class SkewSpec extends AnyFunSuite with SparkSpec {
     assert(canon(salted) == canon(plain))
   }
 
-  test("skewAwareJoin (hot keys only) == plain join") {
-    val plain = big.join(small, Seq("k"))
-    val aware = Skew.skewAwareJoin(big, small, "k", hotKeys = Seq(1), salts = 8)
-    assert(canon(aware) == canon(plain))
-  }
-
   test("keyHistogram surfaces the hot key first") {
     val h = Skew.keyHistogram(big, "k").collect()
     // key 1: the 900 non-multiples of 10, plus multiples of 10 with i%7==1

@@ -165,18 +165,6 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
-  test("z-order clustering plans exactly ONE range exchange and no global sort") {
-    import org.apache.spark.sql.functions._
-    val orders = graft.Tables.load(spark, sf, "orders")
-    val p = graft.operators.Layout.clusterByZ(orders,
-      Seq(col("o_custkey") % 1024, col("o_orderkey") % 1024), 10, 8)
-      .queryExecution.executedPlan.toString
-    assert("Exchange rangepartitioning".r.findAllIn(p).size == 1,
-      s"exactly one range exchange:\n$p")
-    assert(!p.contains("Sort [__z") || !p.contains("global=true"),
-      s"sort must stay within partitions:\n$p")
-  }
-
   test("CDC apply windows only the change log and anti-joins the snapshot once") {
     val p = planOf("ext_cdc_apply")
     assert(p.contains("LeftAnti"), s"snapshot must pass through one anti-join:\n$p")

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 
 /** End-to-end: the REAL events fixture streamed through the windowed

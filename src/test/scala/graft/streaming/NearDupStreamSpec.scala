@@ -113,48 +113,6 @@ class NearDupStreamSpec extends AnyFunSuite with SparkSpec {
     } finally q.stop()
   }
 
-  test("againstReferenceStream flags exactly the batch cross-corpus drop set") {
-    val sq = spark
-    import sq.implicits._
-    implicit val ctx = sq.sqlContext
-    // reference: docs 1 and 4; incoming: everything else (2,3 near 1;
-    // 5 near 4; 6 unrelated; 7 clone of 1) + token-less edge rows
-    val refDf = corpus.filter(d => d._1 == 1L || d._1 == 4L).toDF("doc_id", "text")
-    val incRows = corpus.filterNot(d => d._1 == 1L || d._1 == 4L) ++
-      Seq(8L -> "", 9L -> null.asInstanceOf[String])
-    val refBands = graft.operators.Dedup.referenceBands(refDf, "doc_id", "text")
-    val mem = MemoryStream[(Long, String)]
-    val docs = mem.toDF().toDF("doc_id", "text")
-    val q = Streams.againstReferenceStream(docs, refBands, "doc_id", "text",
-        threshold = 0.9)
-      .writeStream.format("memory").queryName("against_ref")
-      .outputMode("append").start()
-    try {
-      // stateless: results must not depend on micro-batch boundaries
-      val (b1, b2) = incRows.splitAt(2)
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-      val hits = sq.sql("SELECT * FROM against_ref")
-        .collect().map(r => (r.getLong(0), r.getDouble(2)))
-      val flagged = hits.map(_._1).toSet
-      // batch twin: same kernel, same bands, same verify
-      val incDf = incRows.toDF("doc_id", "text")
-      val keptBatch = graft.operators.Dedup.dropNearDupsAgainstFast(
-          refDf, incDf, "doc_id", "text", 16, 8, 0.9)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      val droppedBatch = incRows.map(_._1).toSet -- keptBatch
-      assert(droppedBatch.nonEmpty)
-      assert(flagged == droppedBatch)
-      // one emission per (doc, reference set): no duplicate rows per doc
-      // here (each flagged doc matches exactly one reference set)
-      assert(hits.length == flagged.size)
-      // verify is EXACT jaccard (clone of ref doc 1 → exactly 1.0)
-      assert(hits.filter(_._1 == 7L).forall(_._2 == 1.0))
-      // token-less rows never flag
-      assert(!flagged.contains(8L) && !flagged.contains(9L))
-    } finally q.stop()
-  }
-
   test("maxBucketDocs bounds state — oldest entries drop first") {
     val sq = spark
     import sq.implicits._

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 import graft.SparkSpec
 
-/** Structured-Streaming semantics (T7 + the stateful cursor of T1/T2),
-  * driven end-to-end through MemoryStream micro-batches. */
+/** Structured-Streaming semantics (T7), driven end-to-end through
+  * MemoryStream micro-batches. */
 class StreamsSpec extends AnyFunSuite with SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
@@ -152,63 +152,9 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
       .orderBy("user_id", "sess_start").collect()
     assert(sess.map(r => (r.getString(0), r.getLong(2))).toSeq ==
       Seq(("u1", 2L), ("u1", 1L), ("u2", 1L)))
-  }
 
-  test("trackCursors keeps per-key high-water mark and row count (taps T1/T2)") {
-    val sq = spark
-    import sq.implicits._
-    implicit val ctx = sq.sqlContext
-    val mem = MemoryStream[(String, Long)]
-    val q = Streams.trackCursors(mem.toDS(), idleTimeoutMs = 0L)
-      .writeStream.format("memory").queryName("cursors")
-      .outputMode("update").start()
-    try {
-      mem.addData(("orders", 10L), ("orders", 7L), ("lineitem", 3L))
-      q.processAllAvailable()
-      mem.addData(("orders", 22L))
-      q.processAllAvailable()
-      val last = sq.sql(
-        """SELECT key, max(watermark) wm, max(rows) n FROM cursors GROUP BY key""")
-        .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      assert(last("orders") == ((22L, 3L)))   // watermark advanced, 3 rows total
-      assert(last("lineitem") == ((3L, 1L)))
-    } finally q.stop()
-  }
-
-  test("trackCursorDeltas emits only when the watermark advances (append mode)") {
-    val sq = spark
-    import sq.implicits._
-    implicit val ctx = sq.sqlContext
-    val mem = MemoryStream[(String, Long)]
-    val q = Streams.trackCursorDeltas(mem.toDS())
-      .writeStream.format("memory").queryName("deltas")
-      .outputMode("append").start()
-    try {
-      mem.addData(("orders", 10L))
-      q.processAllAvailable()
-      mem.addData(("orders", 7L)) // behind the watermark → no emission
-      q.processAllAvailable()
-      mem.addData(("orders", 15L)) // advance → one emission
-      q.processAllAvailable()
-      val rows = sq.sql("SELECT watermark, rows FROM deltas ORDER BY watermark")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(rows == Seq((10L, 1L), (15L, 3L))) // the 7 was absorbed silently
-    } finally q.stop()
-  }
-
-  test("fileToFile drains a parquet source exactly-once and stops (T2/T3/T6)") {
-    val sq = spark
-    import sq.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("stream").toString
-    val src = s"$tmp/src"; val dst = s"$tmp/dst"; val cp = s"$tmp/cp"
-    Seq((1L, "a"), (2L, "b")).toDF("pk", "v").write.parquet(src)
-    val schemaFrom = sq.read.parquet(src)
-    Streams.fileToFile(sq, src, schemaFrom,
-      df => df.filter(col("pk") > 1), dst, cp).awaitTermination()
-    assert(sq.read.parquet(dst).collect().map(_.getLong(0)).toSeq == Seq(2L))
-    // re-run with same checkpoint: nothing new → no duplicates (idempotent resume)
-    Streams.fileToFile(sq, src, schemaFrom,
-      df => df.filter(col("pk") > 1), dst, cp).awaitTermination()
-    assert(sq.read.parquet(dst).count() == 1)
+    // batch dedup keeps one row per key (the stream_dedup_keys form)
+    val dedup = Streams.dedupStream(events, "ts", Seq("user_id"))
+    assert(dedup.select("user_id").as[String].collect().sorted.toSeq == Seq("u1", "u2"))
   }
 }
