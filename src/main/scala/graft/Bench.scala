@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -78,15 +77,7 @@ object Bench {
     val loadBoot = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = LocalTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rangeJoin.binWidth", "3600000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalTuning.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // warm up JVM/codegen and the page cache with one full untimed pass over
     // every table — otherwise the alphabetically-first query on each table

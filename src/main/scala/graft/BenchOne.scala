@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Profile one declared query cold+warm, mirroring Bench's session config
@@ -42,13 +41,7 @@ object BenchOne {
     val q = args(0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = LocalTuning(SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rangeJoin.binWidth", "3600000000")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalTuning.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val counters = new Counters
     spark.sparkContext.addSparkListener(counters)

@@ -34,6 +34,23 @@ import org.apache.spark.sql.SparkSession
   * task runtime 58 → 2.4 s, task CPU 45 → 1.6 s.
   */
 object LocalTuning {
+  /** The local session of every entry point that runs the declared
+    * queries — Bench, BenchOne, Verify and the plan audit — so all four
+    * plan them alike: `local[cpus]` with one shuffle partition per core,
+    * UTC, Parquet aggregate pushdown, the graft SQL extensions with the
+    * range-join rewrite armed at one-hour bins, and this object's shuffle
+    * tuning. `confs` go on top (Verify's `graft.*` system properties). */
+  def session(cpus: String, confs: Seq[(String, String)] = Nil): SparkSession =
+    confs.foldLeft(apply(SparkSession.builder()
+        .master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.aggregatePushdown", "true")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.graft.rangeJoin.binWidth", "3600000000")
+      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+
   /** Minimum usable space on /dev/shm before shuffle scratch moves there:
     * a Docker-default 64 MB tmpfs (or any nearly-full one) must fall back
     * to the disk-backed default rather than die mid-job on ENOSPC. */

@@ -642,10 +642,10 @@ object SparkEntry {
       operators.Graph.degreeHistogram(copurchasePairs(s, dir), "u", "v")),
 
     // 3 rounds of damped PageRank over the same graph, INTEGER fixed-point
-    // (Graph.pagerank doc: bit-identical cross-run/partitioning/engine;
-    // float PageRank is partition-order nondeterministic). Undirected fast
-    // path: in-row orientation expansion + outdeg-as-base — the pair
-    // pipeline runs once into ONE checkpoint barrier.
+    // (Graph.pagerankRounds doc: bit-identical cross-run/partitioning/
+    // engine; float PageRank is partition-order nondeterministic). The
+    // pair pipeline runs once into ONE checkpoint barrier, then one
+    // exchange per round.
     "ext_pagerank" -> ((s, dir) =>
       operators.Graph.pagerankUndirected(
         copurchasePairs(s, dir), "u", "v", iters = 3)),
@@ -691,8 +691,8 @@ object SparkEntry {
     "ext_assortativity" -> ((s, dir) =>
       operators.Graph.assortativityFromPairs(copurchasePairs(s, dir), "u", "v")),
     // 3 rounds of min-label propagation (bounded-pass CC / community
-    // seeding): label(n) = min node id within 3 hops — persist-chained
-    // fixed loop engine side (Graph.labelPropagate), chained MATERIALIZED
+    // seeding): label(n) = min node id within 3 hops — the checkpointed
+    // min-label loop engine side (Graph.labelPropagate), chained MATERIALIZED
     // CTEs oracle side; duplicate pairs ride free (min-fold invariant)
     "ext_label_prop" -> ((s, dir) =>
       operators.Graph.labelPropagate(copurchasePairs(s, dir), "u", "v",
@@ -7849,7 +7849,8 @@ object SparkEntry {
 
   /** Bounded min-label propagation, `rounds` chained MATERIALIZED CTE
     * rounds (each round references its predecessor twice — the kcore
-    * re-inlining lesson; engine: Graph.labelPropagate's persist loop). */
+    * re-inlining lesson; engine: Graph.labelPropagate's checkpointed
+    * min-label loop). */
   private def sqlLabelPropTail(rounds: Int,
                                finalSql: Option[String] = None): String = {
     val sb = new StringBuilder(

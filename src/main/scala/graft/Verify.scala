@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Every `graft.*`
@@ -14,17 +13,8 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = sys.props.toSeq.filter(_._1.startsWith("graft."))
-      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
-    val spark = LocalTuning(builder
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.graft.rangeJoin.binWidth", "3600000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalTuning.session(cpus,
+      sys.props.toSeq.filter(_._1.startsWith("graft.")))
     spark.sparkContext.setLogLevel("WARN")
     // fixture drift guard: name the table/column/got/want up front — the
     // per-query catch below still lets every unaffected query dump

@@ -6,19 +6,19 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /**
- * Iterative graph computation on plain DataFrames — the PageRank loop every
- * engine demo runs, built the way a 1000-executor job needs it: each
- * iteration is ONE hash join (edges ⋈ the score frame on the source — the
- * out-degree rides IN the score frame, folded once before the loop) plus
- * ONE aggregation (contributions by target) plus a node-keyed left join
- * restoring in-edge-less nodes, so an iteration's cost is node-keyed
- * exchanges only and the edge table is never replicated. Spark's lazy lineage chains the iterations into one
- * DAG; for dozens of iterations, localCheckpoint every ~10 to cut lineage
- * (documented, not needed at the fixed small iteration counts a batch
- * pipeline uses).
+ * Iterative graph computation on plain DataFrames. The PageRank family
+ * ([[pagerankRounds]]) is the model round, built the way a 1000-executor
+ * job needs it: each round is ONE co-partitioned join (edges ⋈ the score
+ * frame on the source — every edge carries its source's strength, folded
+ * once before the loop) plus ONE aggregation (contributions by target),
+ * so a round costs one node-keyed exchange and the edge table is never
+ * replicated. The edge frame is checkpointed once and the fixed, small
+ * round count of a batch pipeline chains into one DAG; the fixpoint loops
+ * ([[bfsLoop]], [[minLabelTwin]]) checkpoint every round instead, so
+ * their plans do not grow with the round count.
  *
  * All arithmetic is INTEGER fixed-point (scores in millionths; damping
- * 0.85 applied as (17·x) div 20; per-edge contribution pr div outdeg):
+ * 0.85 applied as (17·x) div 20; per-edge contribution (pr·w) div W):
  * floor division is exact and associative-safe, so the result is
  * bit-identical cross-run, cross-partitioning, AND cross-engine — a
  * DuckDB oracle replays the same three chained CTE iterations integer for
@@ -227,8 +227,8 @@ object Graph {
     * and cross-engine (a DuckDB WITH RECURSIVE ... UNION oracle replays
     * the same levels; Spark's recursive CTE is UNION ALL-only as of 4.1,
     * which path-explodes on cyclic graphs — hence the iterative form).
-    * Edge list and per-round labels are localCheckpointed like
-    * [[pagerank]]'s loop inputs. */
+    * Edge list and per-round labels are localCheckpointed, as every
+    * [[bfsLoop]] caller's are. */
   def bfsLevels(edges: DataFrame, srcCol: String, dstCol: String,
                 source: Long, maxDepth: Int): DataFrame = {
     val par = edges.sparkSession.sparkContext.defaultParallelism
@@ -288,18 +288,22 @@ object Graph {
     * frame pre-partitioned on __s. `seeds` is the level-0 label table —
     * (keys…, __n, __lvl = 0), `nSeeds` rows — where `keys` name the
     * searches that share the loop: none for a single source, the source
-    * id for a multi-source BFS, whose labels are then keyed
-    * (keys…, __n). Each round joins the round-(i−1) frontier against the
-    * edge list and folds discoveries in with the min-aggregate. ONE
-    * barrier per round: the label table is lazily checkpoint-marked and
-    * the liveness `count()` is the action that materializes it, so every
-    * round plans over the previous round's blocks and the plan does not
-    * grow with the round count. Returns (keys…, node, lvl); frees `e`
-    * and every round's blocks before returning. */
+    * id for a multi-source BFS, the direction for [[sccPivot]]'s fused
+    * reaches; labels are then keyed (keys…, __n). Each round joins the
+    * round-(i−1) frontier against the edge list on __s plus every key the
+    * edge frame also carries (sccPivot's __dir tags its edges; a source id
+    * is not an edge column) and folds discoveries in with the
+    * min-aggregate. ONE barrier per round: the label table is lazily
+    * checkpoint-marked and the liveness `count()` is the action that
+    * materializes it, so every round plans over the previous round's
+    * blocks and the plan does not grow with the round count. Returns
+    * (keys…, node, lvl); frees `e` and every round's blocks before
+    * returning. */
   private def bfsLoop(e: DataFrame, seeds: DataFrame, nSeeds: Long,
                       keys: Seq[String], maxDepth: Int): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
     val k = keys.map(col)
+    val on = "__s" +: keys.filter(e.columns.contains)
     var labels = seeds.localCheckpoint()
     val spent = scala.collection.mutable.ArrayBuffer(e, labels)
     // early exit on a dead frontier — a diameter-3 graph pays 3 rounds,
@@ -311,7 +315,7 @@ object Graph {
     while (i <= maxDepth && frontierAlive) {
       val frontier = labels.filter(col("__lvl") === i - 1)
         .select(k :+ col("__n").as("__s"): _*)
-      val next = e.join(frontier, Seq("__s"))
+      val next = e.join(frontier, on)
         .select(k :+ col("__t").as("__n") :+ lit(i).as("__lvl"): _*)
       labels = labels.unionByName(next)
         .groupBy(k :+ col("__n"): _*).agg(min(col("__lvl")).as("__lvl"))
@@ -329,212 +333,151 @@ object Graph {
     result
   }
 
-  /** `iters` rounds of damped PageRank over a DIRECTED edge list
-    * (`srcCol`, `dstCol`); undirected graphs pass both orientations.
-    * Scores start at 1_000_000 per node; each round:
-    * pr'(v) = 150_000 + (17 · Σ_{u→v} (pr(u) div outdeg(u))) div 20.
-    * Nodes with no in-edges keep the 150_000 base (left join). Returns
-    * (node, pagerank). Truncation loses < 1 millionth per edge per round —
-    * irrelevant for ranking, and the price of exactness. */
-  def pagerank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int): DataFrame = {
+  /** `iters` rounds of damped PageRank over an UNDIRECTED pair list
+    * (`uCol`, `vCol`; duplicate pairs are deduplicated in-pipeline).
+    * Scores start at 1_000_000 per node; each round
+    * pr'(v) = 150_000 + (17 · Σ_{u–v} (pr(u) div deg(u))) div 20
+    * over the distinct adjacency — [[pagerankRounds]] with unit weights
+    * and every node in the restart set. Returns (node, pagerank).
+    * Truncation loses < 1 millionth per edge per round — irrelevant for
+    * ranking, and the price of exactness. */
+  def pagerankUndirected(pairs: DataFrame, uCol: String, vCol: String,
+                         iters: Int): DataFrame =
+    pagerankRounds(pairs, uCol, vCol, None, iters, None, "pagerank")
+
+  /** PERSONALIZED PageRank (the recommendation primitive: random walk
+    * with restart to a SEED SET instead of uniform teleport) over an
+    * undirected pair list — [[pagerankUndirected]] with the restart set
+    * narrowed to the `nSeeds` smallest node ids:
+    * pr₀(n) = 1_000_000·[n ∈ seeds];
+    * pr'(v) = 150_000·[v ∈ seeds] + (17 · Σ_{u–v} pr(u) div deg(u)) div 20.
+    * Nodes unreachable from the seed set hold rank 0 instead of the
+    * uniform base — that asymmetry is the whole point of PPR. Returns
+    * (node, ppr). */
+  def personalizedPagerank(pairs: DataFrame, uCol: String, vCol: String,
+                           iters: Int, nSeeds: Int): DataFrame =
+    pagerankRounds(pairs, uCol, vCol, None, iters, Some(nSeeds), "ppr")
+
+  /** WEIGHTED personalized PageRank — [[personalizedPagerank]] with
+    * edge-weight-proportional contribution splits over the raw weighted
+    * pair stream (weight cast to BIGINT; duplicate pairs are parallel
+    * edges): pr'(v) = 150_000·[v ∈ seeds]
+    * + (17 · Σ_{u–v} (pr(u)·w(u,v) div W(u))) div 20, W(u) = Σ_t w(u,t)
+    * the strength. Returns (node, wppr). */
+  def weightedPersonalizedPagerank(wpairs: DataFrame, uCol: String,
+                                   vCol: String, wCol: String,
+                                   iters: Int, nSeeds: Int): DataFrame =
+    pagerankRounds(wpairs, uCol, vCol, Some(wCol), iters, Some(nSeeds), "wppr")
+
+  /** THE PageRank recurrence behind the three entry points, over the
+    * both-orientation entry stream u → v with weight w:
+    * pr₀(v) = 1_000_000·[v ∈ R],
+    * pr'(v) = 150_000·[v ∈ R] + (17 · Σ_{u→v} (pr(u)·w) div W(u)) div 20,
+    * W(u) = Σ w over u's entries. The callers differ only as data: the
+    * entries are the DISTINCT adjacency with w = 1 (no `wCol`) or the raw
+    * doubled weighted stream; the restart set R is every node (`nSeeds`
+    * None) or the `nSeeds` smallest ids. The per-edge floor division
+    * keeps every score an exact BIGINT (sums of integers are
+    * fold-order-free), so the result is bit-identical cross-run,
+    * cross-partitioning and cross-engine — the DuckDB oracles unroll the
+    * same recurrence. Both paths fail on BIGINT overflow: the twin through
+    * ANSI, the driver tier through exact arithmetic. Returns
+    * (node, `name`). */
+  private def pagerankRounds(pairs: DataFrame, uCol: String, vCol: String,
+                             wCol: Option[String], iters: Int,
+                             nSeeds: Option[Int], name: String): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // materialize the iteration INPUTS once: every round references the
-    // edge list, and lazy lineage would re-run whatever produced it (an
-    // expensive self-join, a dedup…) once per round — measured 7.1 s at
-    // sf0.1 un-checkpointed vs edges-computed-once after. localCheckpoint
-    // blocks don't survive executor loss; a long-running production loop
-    // swaps in reliable checkpointing, same shape (the CC precedent).
-    // both loop inputs are checkpointed PRE-PARTITIONED on their join
-    // keys via ckpt() (plain localCheckpoint under AQE would capture
-    // UnknownPartitioning — see checkpointPartitioned), so every
-    // iteration's edge join reads e co-located on __s and the restore
-    // join reads base co-located on __n — the exchanges happen once
-    // here, not once per round (the bucketed-join recipe applied to an
-    // iterative loop).
-    val par = edges.sparkSession.sparkContext.defaultParallelism
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"))
-      .repartition(par, col("__s"))
-      .ckpt()
-    // outdeg is FOLDED into the node frame once, before the loop: the
-    // score frame carries (__n, __od, __pr), so each iteration joins the
-    // edge list against ONE frame instead of scores-then-outdeg — one
-    // join + one __s-keyed exchange fewer per round (r9 verdict item).
-    // __od = 0 marks sink nodes; they never match the edge join's __s
-    // side, so the div never sees a zero.
-    val outd = e.groupBy(col("__s")).agg(count(lit(1)).as("__od"))
-    val base = e.select(col("__s").as("__n"))
-      .union(e.select(col("__t").as("__n"))).distinct()
-      .join(outd.withColumnRenamed("__s", "__n"), Seq("__n"), "left")
-      .select(col("__n"), coalesce(col("__od"), lit(0L)).as("__od"))
-      .repartition(par, col("__n"))
-      .ckpt()
-    var pr = base.withColumn("__pr", lit(1000000L))
-    (1 to iters).foreach { _ =>
-      val contrib = e
-        .join(pr.select(col("__n").as("__s"), col("__od"), col("__pr")), Seq("__s"))
-        .groupBy(col("__t"))
-        .agg(sum(expr("__pr div __od")).as("__c"))
-      pr = base.join(contrib.withColumnRenamed("__t", "__n"), Seq("__n"), "left")
-        .select(col("__n"), col("__od"),
-          (lit(150000L) + expr("(17 * coalesce(__c, 0L)) div 20")).as("__pr"))
+    nSeeds.foreach(k => require(k >= 1, s"nSeeds must be >= 1, got $k"))
+    collectEdges(pairs, uCol, vCol, wCol) match {
+      case Some(g) =>
+        val (es, et) = driverEntries(g, dedup = wCol.isEmpty)
+        val ew = if (wCol.isDefined) g.w ++ g.w else Array.fill(es.length)(1L)
+        nodeValueDf(pairs.sparkSession, name, g.ids, pagerankDriver(g.n,
+          es, et, ew, iters, nSeeds.fold(g.n)(math.min(_, g.n))))
+      case None =>
+        // both orientations of every valid pair, partitioned on __s; the
+        // unweighted distinct rides that exchange (partitioning keys ⊆
+        // grouping keys), so dedup costs no second full-stream exchange
+        val (u, v) = (col(uCol).cast("long"), col(vCol).cast("long"))
+        val w = wCol.fold(lit(1L))(col(_).cast("bigint"))
+        val e = pairs.filter(nonNull(Seq(uCol, vCol) ++ wCol: _*))
+          .select(explode(array(
+            struct(u.as("__s"), v.as("__t"), w.as("__w")),
+            struct(v.as("__s"), u.as("__t"), w.as("__w")))).as("__e"))
+          .select(col("__e.__s").as("__s"), col("__e.__t").as("__t"),
+            col("__e.__w").as("__w"))
+          .repartition(pairs.sparkSession.sparkContext.defaultParallelism,
+            col("__s"))
+        pagerankTwin(if (wCol.isEmpty) e.distinct() else e, iters, nSeeds,
+          name)
     }
-    // the returned frame is itself checkpointed so the input blocks can
-    // be freed NOW (they're invisible to catalog.clearCache and would
-    // otherwise starve the next memory-hungry job — the r5 leak lesson)
-    val result = pr.select(col("__n").as("node"), col("__pr").as("pagerank"))
-      .ckpt()
-    Dedup.freeCheckpoints(e, base)
-    result
   }
 
-  /** Driver CSR PageRank rounds shared by [[pagerankUndirected]] and
-    * [[personalizedPagerank]]'s driver tiers — the identical integer
-    * recurrence pr'(v) = restart(v) + (17 · Σ pr(u) div od(u)) div 20
-    * over the deduped adjacency (od = CSR degree; every value positive,
-    * so Scala `/` ≡ the SQL `div`). */
-  private def driverPrRounds(off: Array[Int], nbr: Array[Int], iters: Int,
-                             pr0: Array[Long],
-                             restart: Int => Long): Array[Long] = {
-    val n = off.length - 1
-    var pr = pr0
-    var it = 0
-    while (it < iters) {
-      val contrib = new Array[Long](n)
-      var s = 0
-      while (s < n) {
-        val od = (off(s + 1) - off(s)).toLong
-        if (od > 0) {
-          val share = pr(s) / od
-          var j = off(s)
-          while (j < off(s + 1)) { contrib(nbr(j)) += share; j += 1 }
-        }
-        s += 1
+  /** [[pagerankRounds]]' driver tier in index space over the entries
+    * es(i) → et(i) with weight ew(i): seeds are the `k` smallest indices.
+    * A zero-rank source is skipped — its share (0·w) div W is 0. Exact
+    * (overflow-checked) long arithmetic keeps the twin's ANSI failures. */
+  private def pagerankDriver(n: Int, es: Array[Int], et: Array[Int],
+                             ew: Array[Long], iters: Int,
+                             k: Int): Array[Long] = {
+    val strength = new Array[Long](n)
+    var i = 0
+    while (i < es.length) {
+      strength(es(i)) = Math.addExact(strength(es(i)), ew(i)); i += 1 }
+    var pr = Array.tabulate(n)(t => if (t < k) 1000000L else 0L)
+    (1 to iters).foreach { _ =>
+      val c = new Array[Long](n)
+      i = 0
+      while (i < es.length) {
+        val s = es(i)
+        if (pr(s) != 0L) c(et(i)) = Math.addExact(c(et(i)),
+          Math.multiplyExact(pr(s), ew(i)) / strength(s))
+        i += 1
       }
-      val nxt = new Array[Long](n)
-      var v = 0
-      while (v < n) {
-        nxt(v) = restart(v) + (17L * contrib(v)) / 20L
-        v += 1
-      }
-      pr = nxt
-      it += 1
+      pr = Array.tabulate(n)(t => Math.addExact(if (t < k) 150000L else 0L,
+        Math.multiplyExact(17L, c(t)) / 20))
     }
     pr
   }
 
-  /** [[pagerank]] specialized to an UNDIRECTED pair list (`uCol`,
-    * `vCol`) that MAY contain duplicate pairs (they are deduplicated
-    * in-pipeline, exchange-free — see the adjacency-build comment):
-    * same integer recurrence, same results as feeding both distinct
-    * orientations to [[pagerank]] (spec-pinned), but the structure
-    * exploits what undirectedness guarantees —
-    *  - both orientations expand IN-ROW with one explode, so the pair
-    *    pipeline upstream runs ONCE (a union of two selects re-runs it
-    *    per orientation);
-    *  - every node has an out-edge AND an in-edge (its own reversed
-    *    orientation), so the node base IS the out-degree aggregate — no
-    *    union-distinct node discovery, no left-join restore, no
-    *    coalesce — and base needs no checkpoint of its own: it derives
-    *    from the checkpointed `e` by one exchange-free aggregation (`e`
-    *    is pre-partitioned on __s), so re-deriving it per reference is
-    *    cheaper than a barrier.
-    * Net: ONE checkpoint barrier (the edge frame) + one per-iteration
-    * exchange (the contribution agg — every join in the loop reads
-    * co-partitioned sides). */
-  def pagerankUndirected(pairs: DataFrame, uCol: String, vCol: String,
-                         iters: Int): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    collectEdges(pairs, uCol, vCol) match {
-      case Some(g) =>
-        // the exact integer recurrence over the deduped CSR
-        val (off, nbr) = driverCsr(g, dedup = true)
-        val pr = driverPrRounds(off, nbr, iters,
-          Array.fill(g.n)(1000000L), _ => 150000L)
-        nodeValueDf(pairs.sparkSession, "pagerank", g.ids, pr)
-      case None =>
-        // orientation-exploded DISTINCT adjacency in TWO exchanges: the
-        // caller hands the raw (possibly globally-duplicated) pair stream;
-        // dedup runs AFTER the explode, as an exchange-free aggregate — the
-        // explicit __s repartition already satisfies the (__s, __t) distinct's
-        // clustering requirement (partitioning keys ⊆ grouping keys), so the
-        // classic pre-distinct on (u, v) would only add a third full-stream
-        // exchange for nothing.
-        val e = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)), uCol, vCol)
-          .distinct()
-          .ckpt()
-        // AQE OFF for the iteration chain (restored in finally): fixed-shape
-        // node-keyed exchanges over a checkpointed co-partitioned edge frame
-        // — adaptivity has nothing to decide and would turn each of the
-        // chain's exchanges into its own job barrier (measured: 33 jobs /
-        // 146 tasks adaptive vs a straight-line job without). The loop
-        // compiles into ONE straight-line job.
-        try withoutAqe(e.sparkSession) {
-          val base = outdegBase(e)
-          var pr = base.withColumn("__pr", lit(1000000L))
-          (1 to iters).foreach { _ =>
-            pr = prIteration(e, base, pr)
-          }
-          pr.select(col("__n").as("node"), col("__pr").as("pagerank"))
-            .ckpt()
-        } finally Dedup.freeCheckpoints(e) // free on the throw path too
-    }
-  }
-
-  /** PERSONALIZED PageRank (the recommendation primitive: random walk
-    * with restart to a SEED SET instead of uniform teleport) over an
-    * undirected pair list, same integer fixed-point discipline as
-    * [[pagerankUndirected]] —
-    * pr₀(n) = 1_000_000·[n ∈ seeds];
-    * pr'(v) = 150_000·[v ∈ seeds] + (17 · Σ_{u→v} pr(u) div od(u)) div 20
-    * — bit-identical cross-run/partitioning/engine. Seeds are the
-    * `nSeeds` smallest node ids (node-sized frame, broadcast into the
-    * base); nodes unreachable from the seed set hold rank 0 instead of
-    * the uniform base — that asymmetry is the whole point of PPR.
-    * Loop mechanics identical to [[pagerankUndirected]] (one checkpoint
-    * barrier, AQE off inside the fixed chain, co-partitioned joins). */
-  def personalizedPagerank(pairs: DataFrame, uCol: String, vCol: String,
-                           iters: Int, nSeeds: Int): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(nSeeds >= 1, s"nSeeds must be >= 1, got $nSeeds")
-    collectEdges(pairs, uCol, vCol) match {
-      case Some(g) =>
-        // the PPR restart vector: seeds = nSeeds smallest ids = first indices
-        val (off, nbr) = driverCsr(g, dedup = true)
-        val k = math.min(nSeeds, g.n)
-        val pr = driverPrRounds(off, nbr, iters,
-          Array.tabulate(g.n)(i => if (i < k) 1000000L else 0L),
-          i => if (i < k) 150000L else 0L)
-        nodeValueDf(pairs.sparkSession, "ppr", g.ids, pr)
-      case None =>
-        val e = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)), uCol, vCol)
-          .distinct()
-          .ckpt()
-        try withoutAqe(e.sparkSession) {
-          val seeds = outdegBase(e).select(col("__n"))
-            .orderBy(col("__n")).limit(nSeeds)
-            .withColumn("__seed", lit(1))
-          val base = outdegBase(e)
-            .join(broadcast(seeds), Seq("__n"), "left")
-            .select(col("__n"), col("__od"),
-              coalesce(col("__seed"), lit(0)).as("__seed"))
-          var pr = base.withColumn("__pr",
-            when(col("__seed") === 1, lit(1000000L)).otherwise(lit(0L)))
-          (1 to iters).foreach { _ =>
-            val contrib = e
-              .join(pr.select(col("__n").as("__s"), col("__od"), col("__pr")),
-                Seq("__s"))
-              .groupBy(col("__t"))
-              .agg(sum(expr("__pr div __od")).as("__c"))
-            pr = base.join(contrib.withColumnRenamed("__t", "__n"), Seq("__n"))
-              .select(col("__n"), col("__od"), col("__seed"),
-                (when(col("__seed") === 1, lit(150000L)).otherwise(lit(0L))
-                  + expr("(17 * __c) div 20")).as("__pr"))
-          }
-          pr.select(col("__n").as("node"), col("__pr").as("ppr"))
-            .ckpt()
-        } finally Dedup.freeCheckpoints(e)
-    }
+  /** [[pagerankRounds]]' twin over the (__s, __t, __w) entry frame
+    * partitioned on __s — ONE barrier, no per-round node join. The
+    * strength W(u) rides the edge checkpoint as a window sum over the
+    * HashPartitioning(__s) the entry frame already has; the seed ids
+    * COLLECT to the driver (`nSeeds`-bounded, the pathCounts seed trade)
+    * and become an `isin` literal inside the round body. Each round is
+    * exactly e ⋈ pr (co-partitioned: pr arrives HashPartitioning(__t)
+    * from the previous round's aggregation, aliased to __s) plus one
+    * __t-keyed aggregation — ONE exchange per round, and with AQE off the
+    * whole chain executes as a single job. Every node has an in-entry
+    * (its own reversed orientation), so seeding pr₀ over distinct(__s)
+    * keeps every node in every round's output and the restart mask needs
+    * no outer join. Frees the edge blocks, on the throw path too. */
+  private def pagerankTwin(entries: DataFrame, iters: Int,
+                           nSeeds: Option[Int], name: String): DataFrame = {
+    val e = entries
+      .withColumn("__wk", sum(col("__w")).over(Window.partitionBy(col("__s"))))
+      .ckpt()
+    try withoutAqe(e.sparkSession) {
+      val nodes = e.select(col("__s")).distinct()
+      val seedIds = nSeeds.map(k =>
+        nodes.orderBy(col("__s")).limit(k).collect().map(_.getLong(0)).toSeq)
+      def restart(n: Column, v: Long): Column = seedIds match {
+        case None => lit(v)
+        case Some(ids) if ids.isEmpty => lit(0L)
+        case Some(ids) => when(n.isin(ids: _*), lit(v)).otherwise(lit(0L))
+      }
+      var pr = nodes.select(col("__s"), restart(col("__s"), 1000000L).as("__pr"))
+      (1 to iters).foreach { _ =>
+        pr = e.join(pr, Seq("__s"))
+          .groupBy(col("__t"))
+          .agg(sum(expr("(__pr * __w) div __wk")).as("__c"))
+          .select(col("__t").as("__s"),
+            (restart(col("__t"), 150000L) + expr("(17 * __c) div 20")).as("__pr"))
+      }
+      pr.select(col("__s").as("node"), col("__pr").as(name))
+        .ckpt()
+    } finally Dedup.freeCheckpoints(e)
   }
 
   /** HITS hubs-and-authorities over a BIPARTITE edge list (left = hubs,
@@ -614,53 +557,42 @@ object Graph {
   /** ONE LEVEL of Louvain community detection over a weighted pair list
     * — the first-pass move phase with every node starting in its own
     * singleton community: node i moves to neighbor j's community when
-    * the modularity gain is positive, taking the argmax neighbor. With
-    * singleton communities the gain comparison reduces to the exact
-    * INTEGER score 2m·w_ij − k_i·k_j (the 1/2m² normalization only
-    * rescales), so the whole level is one broadcast-decorated pass over
-    * the oriented edge stream + a struct-min argmax riding the source
-    * partitioning — no iteration, no floats, bit-identical cross-engine
-    * (the DuckDB twin replays the argmax as a row_number window). Ties
-    * break to the smaller neighbor id; score ≤ 0 everywhere → node
-    * stays. Returns (node, community). */
+    * the modularity gain is positive, taking the argmax neighbor. This is
+    * [[louvainMovePlan]], the move phase every level of [[louvainLevels]]
+    * runs, over the [[weightedPairs]] canonical form: edges with a NULL
+    * endpoint or weight are dropped, ties break to the smaller neighbor
+    * id, a self-loop is not a move candidate, and score ≤ 0 everywhere →
+    * node stays. No iteration, no floats, bit-identical cross-engine (the
+    * DuckDB twin replays the argmax as a row_number window). Returns
+    * (node, community). */
   def louvainFirstLevel(wpairs: DataFrame, uCol: String, vCol: String,
                         wCol: String): DataFrame = {
-    val par = wpairs.sparkSession.sparkContext.defaultParallelism
-    val e = wpairs.select(explode(array(
-        struct(col(uCol).as("__s"), col(vCol).as("__t"),
-          col(wCol).cast("bigint").as("__w")),
-        struct(col(vCol).as("__s"), col(uCol).as("__t"),
-          col(wCol).cast("bigint").as("__w")))).as("__e"))
-      .select(col("__e.__s").as("__s"), col("__e.__t").as("__t"),
-        col("__e.__w").as("__w"))
-      .repartition(par, col("__s"))
-      .ckpt()
-    // weighted degree (strength) — rides the __s partitioning
-    val wd = e.groupBy(col("__s")).agg(sum(col("__w")).as("__k"))
-    val m2 = wd.agg(sum(col("__k")).as("__m2"))
-    val result = e
-      .join(broadcast(wd.select(col("__s"), col("__k").as("__ki"))), "__s")
-      .join(broadcast(wd.select(col("__s").as("__t"), col("__k").as("__kj"))),
-        "__t")
-      .crossJoin(broadcast(m2))
-      .select(col("__s"), col("__t"),
-        (col("__m2") * col("__w") - col("__ki") * col("__kj")).as("__sc"))
-      // argmax neighbor, ties to the smaller id: min over (−score, j)
-      .groupBy(col("__s"))
-      .agg(min(struct((-col("__sc")).as("s"), col("__t").as("j"))).as("__b"))
-      .select(col("__s").as("node"),
-        when(col("__b.s") < 0, col("__b.j")).otherwise(col("__s"))
-          .as("community"))
+    // the move plan reads the pair stream three times — materialize the
+    // (often expensive) upstream pair build once
+    val e = weightedPairs(wpairs, uCol, vCol, wCol).ckpt()
+    val result = louvainMovePlan(e)
+      .select(col("__n").as("node"), col("__p").as("community"))
       .ckpt()
     Dedup.freeCheckpoints(e)
     result
   }
 
+  /** The (__u, __v, __w) pair list every Louvain operator reads: rows
+    * with a NULL endpoint or weight dropped (the header's NULL rule), ids
+    * cast to BIGINT, the weight to BIGINT. */
+  private def weightedPairs(wpairs: DataFrame, uCol: String, vCol: String,
+                            wCol: String): DataFrame =
+    wpairs.filter(nonNull(uCol, vCol, wCol))
+      .select(col(uCol).cast("long").as("__u"),
+        col(vCol).cast("long").as("__v"), col(wCol).cast("bigint").as("__w"))
+
   /** The one-shot move phase over an arbitrary AGGREGATED weighted
     * canonical pair list (a ≤ b, one row per pair, self-loops allowed —
     * the shape [[louvainLevels]]' contraction emits): every node starts
-    * in its own community and takes the argmax-gain neighbor, exactly
-    * [[louvainFirstLevel]]'s integer score 2m·w_ij − k_i·k_j. Self-loops
+    * in its own community and takes the argmax-gain neighbor. With
+    * singleton communities the gain comparison reduces to the exact
+    * INTEGER score 2m·w_ij − k_i·k_j (the 1/2m² normalization only
+    * rescales); ties go to the smaller j. Self-loops
     * count DOUBLE into the strength (the doubled orientation emits a
     * self-loop twice — the 2m = Σk convention real Louvain contraction
     * relies on) but are excluded as move candidates. Returns
@@ -730,10 +662,7 @@ object Graph {
           comm.indices.collect { case i if comm(i) >= 0 =>
             Row(g.ids(i), g.ids(comm(i))) })
       case None =>
-        louvainTwin(wpairs.filter(nonNull(uCol, vCol, wCol))
-          .select(col(uCol).cast("long").as("__u"),
-            col(vCol).cast("long").as("__v"), col(wCol).cast("bigint").as("__w")),
-          maxLevels)
+        louvainTwin(weightedPairs(wpairs, uCol, vCol, wCol), maxLevels)
     }
   }
 
@@ -923,10 +852,7 @@ object Graph {
     // ONE materialization of the (often expensive) upstream pair build:
     // the Louvain loop and both audit folds read these blocks — without
     // it the support aggregation runs twice inside one key
-    val e = wpairs.filter(nonNull(uCol, vCol, wCol))
-      .select(col(uCol).cast("long").as("__u"),
-        col(vCol).cast("long").as("__v"), col(wCol).cast("bigint").as("__w"))
-      .ckpt()
+    val e = weightedPairs(wpairs, uCol, vCol, wCol).ckpt()
     // one decision for loop and audit: the same gate [[louvainLevels]]
     // applies, on the same frame
     collectEdges(e, "__u", "__v", Some("__w"), factor = 2) match {
@@ -995,15 +921,14 @@ object Graph {
     * distances. The DuckDB twin runs two depth-capped recursive UNION
     * BFS CTEs and min-folds the levels.
     *
-    * The twin runs the two reaches FUSED: both orientations
-    * live in ONE edge frame tagged with a direction column (dir 0 =
-    * forward s→t, dir 1 = t→s), the label table is keyed (dir, node),
-    * and each round's frontier join / min-fold serves both reaches at
-    * once — serial rounds drop from depth_fwd + depth_bwd to
+    * The twin runs the two reaches FUSED in one [[bfsLoop]]: both
+    * orientations live in ONE edge frame tagged with a direction column
+    * (dir 0 = forward s→t, dir 1 = t→s), the loop's searches are keyed
+    * by dir, and each round's frontier join / min-fold serves both
+    * reaches at once — serial rounds drop from depth_fwd + depth_bwd to
     * max(depth_fwd, depth_bwd), with per-round volume unchanged (the
     * two directions never mix: dir is part of every join and group
-    * key). Early exit on a dead frontier per round, liveness count =
-    * the materializing action, as in [[bfsLoop]]. A 2-hop doubling
+    * key). A 2-hop doubling
     * stride was MEASURED NET-NEGATIVE here (warm 5.1 → 13 s at sf0.1):
     * the un-deduped 2-hop candidate stream multiplies by the hub
     * degree on this transitions graph — barrier savings can't buy back
@@ -1053,145 +978,18 @@ object Graph {
           return e.limit(0).select(col("__s").as("node"),
             lit(0).as("lvl_fwd"), lit(0).as("lvl_bwd"))
         }
-        val pivot = row.getLong(0)
-        val sess = e.sparkSession
-        var labels = sess.range(1)
+        // both reaches as one [[bfsLoop]], its searches keyed by __dir
+        val seeds = e.sparkSession.range(1)
           .select(explode(array(lit(0), lit(1))).as("__dir"),
-            lit(pivot).as("__n"), lit(0).as("__lvl"))
-          .localCheckpoint()
-        val spent = scala.collection.mutable.ArrayBuffer(e, labels)
-        var known = 2L
-        var done = 0
-        var frontierAlive = true
-        while (done < maxDepth && frontierAlive) {
-          // frontier = the rows discovered last round, in BOTH directions
-          val f = labels.filter(col("__lvl") === done)
-            .select(col("__dir"), col("__n").as("__s"))
-          val cand = e.join(f, Seq("__dir", "__s"))
-            .select(col("__dir"), col("__t").as("__n"),
-              lit(done + 1).as("__lvl"))
-          labels = labels.unionByName(cand)
-            .groupBy(col("__dir"), col("__n")).agg(min(col("__lvl")).as("__lvl"))
-            .localCheckpoint(eager = false)
-          spent += labels
-          val now = labels.count()
-          frontierAlive = now > known
-          known = now
-          done += 1
-        }
-        // one (node)-keyed fold replaces the fwd ⋈ bwd join: each (dir, n)
+            lit(row.getLong(0)).as("__n"), lit(0).as("__lvl"))
+        // one node-keyed fold replaces the fwd ⋈ bwd join: each (dir, node)
         // appears once, so the min-when picks that direction's level; inner
         // semantics = both levels present
-        val result = labels
-          .groupBy(col("__n"))
-          .agg(min(when(col("__dir") === 0, col("__lvl"))).as("lvl_fwd"),
-            min(when(col("__dir") === 1, col("__lvl"))).as("lvl_bwd"))
+        bfsLoop(e, seeds, 2L, Seq("__dir"), maxDepth)
+          .groupBy(col("node"))
+          .agg(min(when(col("__dir") === 0, col("lvl"))).as("lvl_fwd"),
+            min(when(col("__dir") === 1, col("lvl"))).as("lvl_bwd"))
           .filter(col("lvl_fwd").isNotNull && col("lvl_bwd").isNotNull)
-          .select(col("__n").as("node"), col("lvl_fwd"), col("lvl_bwd"))
-          .localCheckpoint()
-        Dedup.freeCheckpoints(spent.toSeq: _*)
-        result
-    }
-  }
-
-  /** WEIGHTED personalized PageRank — [[personalizedPagerank]] with
-    * edge-weight-proportional contribution splits:
-    * pr'(v) = 150_000·[v ∈ seeds]
-    *        + (17 · Σ_{u→v} (pr(u)·w(u,v) div W(u))) div 20,
-    * W(u) = Σ_t w(u,t) the strength. The per-edge floor division keeps
-    * every score an exact BIGINT (sums of integers are fold-order-free),
-    * so the DuckDB twin unrolls the identical recurrence — bit-identical
-    * cross-engine.
-    *
-    * r16 shape — ONE barrier, no per-round node join: the strength
-    * W(u) rides the edge checkpoint as a window sum over the same
-    * HashPartitioning(__s) the repartition already paid (no separate
-    * degree frame, no second checkpoint), the nSeeds seed ids COLLECT
-    * to the driver (index-sized by contract — the pathCounts seed
-    * trade) and become an `isin` literal inside the round body, and
-    * each round is exactly e ⋈ pr (co-partitioned: pr arrives
-    * HashPartitioning(__t) from the previous round's aggregation,
-    * aliased to __s) + one __t-keyed aggregation — ONE exchange per
-    * round, the whole iters-round chain executing as a single job.
-    * The doubled orientation guarantees every node has in-edges, so
-    * seeding pr₀ over distinct(__s) keeps every node present in every
-    * round's output (zero-valued contributions still form groups) —
-    * the restart mask needs no outer join.
-    *
-    * Driver tier: the collected edges ([[collectEdges]], weight cast to
-    * BIGINT) run the same recurrence in index space — seeds are the
-    * `nSeeds` smallest indices, and a zero-rank source is skipped, since
-    * its per-edge share (0·w) div W is 0. Exact (overflow-checked) long
-    * arithmetic keeps the twin's ANSI failures. */
-  def weightedPersonalizedPagerank(wpairs: DataFrame, uCol: String,
-                                   vCol: String, wCol: String,
-                                   iters: Int, nSeeds: Int): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(nSeeds >= 1, s"nSeeds must be >= 1, got $nSeeds")
-    collectEdges(wpairs, uCol, vCol, Some(wCol)) match {
-      case Some(g) =>
-        val (iu, iv, w) = (g.iu, g.iv, g.w)
-        val strength = new Array[Long](g.n)
-        var i = 0
-        while (i < g.m) {
-          strength(iu(i)) = Math.addExact(strength(iu(i)), w(i))
-          strength(iv(i)) = Math.addExact(strength(iv(i)), w(i))
-          i += 1
-        }
-        val k = math.min(nSeeds, g.n)
-        var pr = Array.tabulate(g.n)(t => if (t < k) 1000000L else 0L)
-        (1 to iters).foreach { _ =>
-          val c = new Array[Long](g.n)
-          def push(s: Int, t: Int, wt: Long): Unit = if (pr(s) != 0L)
-            c(t) = Math.addExact(c(t), Math.multiplyExact(pr(s), wt) / strength(s))
-          i = 0
-          while (i < g.m) {
-            push(iu(i), iv(i), w(i)); push(iv(i), iu(i), w(i)); i += 1 }
-          pr = Array.tabulate(g.n)(t =>
-            (if (t < k) 150000L else 0L) + Math.multiplyExact(17L, c(t)) / 20)
-        }
-        nodeValueDf(wpairs.sparkSession, "wppr", g.ids, pr)
-      case None =>
-        val par = wpairs.sparkSession.sparkContext.defaultParallelism
-        // node ids cast to long: the seed collect below reads getLong,
-        // and non-BIGINT ids take this path
-        val e = wpairs.filter(nonNull(uCol, vCol, wCol))
-          .select(explode(array(
-            struct(col(uCol).cast("long").as("__s"),
-              col(vCol).cast("long").as("__t"),
-              col(wCol).cast("bigint").as("__w")),
-            struct(col(vCol).cast("long").as("__s"),
-              col(uCol).cast("long").as("__t"),
-              col(wCol).cast("bigint").as("__w")))).as("__e"))
-          .select(col("__e.__s").as("__s"), col("__e.__t").as("__t"),
-            col("__e.__w").as("__w"))
-          .repartition(par, col("__s"))
-          .withColumn("__wk",
-            sum(col("__w")).over(Window.partitionBy(col("__s"))))
-          .ckpt()
-        try withoutAqe(e.sparkSession) {
-          // nSeeds smallest node ids — driver-collected (nSeeds-bounded by
-          // the require above; rides the checkpoint's partitioning)
-          val seedIds = e.select(col("__s")).distinct()
-            .orderBy(col("__s")).limit(nSeeds)
-            .collect().map(_.getLong(0)).toSeq
-          def seedMask(n: Column): Column =
-            if (seedIds.isEmpty) lit(false) else n.isin(seedIds: _*)
-          var pr = e.select(col("__s")).distinct()
-            .select(col("__s"), when(seedMask(col("__s")), lit(1000000L))
-              .otherwise(lit(0L)).as("__pr"))
-          (1 to iters).foreach { _ =>
-            pr = e
-              .join(pr, Seq("__s"))
-              .groupBy(col("__t"))
-              .agg(sum(expr("(__pr * __w) div __wk")).as("__c"))
-              .select(col("__t").as("__s"),
-                (when(seedMask(col("__t")), lit(150000L)).otherwise(lit(0L))
-                  + expr("(17 * __c) div 20")).as("__pr"))
-          }
-          pr.select(col("__s").as("node"), col("__pr").as("wppr"))
-            .ckpt()
-        } finally Dedup.freeCheckpoints(e)
     }
   }
 
@@ -1271,25 +1069,6 @@ object Graph {
       .limit(topK)
       .select(col("a").as("part_u"), col("b").as("part_v"),
         col("common_neighbors"))
-  }
-
-  /** Undirected node base = the out-degree aggregate (every node appears
-    * as a source; exchange-free over the __s-partitioned edge frame). */
-  private def outdegBase(e: DataFrame): DataFrame =
-    e.groupBy(col("__s")).agg(count(lit(1)).as("__od"))
-      .select(col("__s").as("__n"), col("__od"))
-
-  /** One undirected-PageRank round: contribution agg by target, INNER
-    * restore against the base (contrib covers every node — all nodes
-    * have in-edges). */
-  private def prIteration(e: DataFrame, base: DataFrame, pr: DataFrame): DataFrame = {
-    val contrib = e
-      .join(pr.select(col("__n").as("__s"), col("__od"), col("__pr")), Seq("__s"))
-      .groupBy(col("__t"))
-      .agg(sum(expr("__pr div __od")).as("__c"))
-    base.join(contrib.withColumnRenamed("__t", "__n"), Seq("__n"))
-      .select(col("__n"), col("__od"),
-        (lit(150000L) + expr("(17 * __c) div 20")).as("__pr"))
   }
 
   /** Eager localCheckpoint that PRESERVES the frame's hash partitioning.
@@ -1555,20 +1334,11 @@ object Graph {
     * id; each round every node takes the minimum of its own and its
     * neighbors' labels. After r rounds label(n) = min node id within r
     * hops — the bounded-pass core of connected components / community
-    * seeding (full CC iterates to fixpoint with a liveness count, the
-    * [[bfsLoop]] pattern). Each round is ONE node-keyed join + one
-    * min-aggregate over the label table: persist-marked rounds, AQE off
-    * inside the fixed chain, one straight-line action. Returns (node, label),
-    * integer-exact cross-engine.
-    *
-    * BOUNDED rounds by design: each round references the label table
-    * TWICE (self ∪ contributions), so the persist chain's LOGICAL plan
-    * doubles per round — fine at the single-digit round counts this
-    * serves, pathological past ~15 (Catalyst walks 2^rounds nodes even
-    * though persist truncates physical recompute). Unbounded iteration
-    * belongs to [[connectedComponentsMinLabel]], whose per-round
-    * `localCheckpoint(eager = false)` truncates the LOGICAL plan
-    * too. */
+    * seeding. Returns (node, label), integer-exact cross-engine. The twin
+    * is [[connectedComponentsMinLabel]]'s loop ([[minLabelTwin]]) capped
+    * at `rounds`, AQE off: its early exit at a zero-change round is exact,
+    * because every later round of the min-fold is a no-op, and its
+    * per-round checkpoints keep the plan flat at any round count. */
   def labelPropagate(pairs: DataFrame, uCol: String, vCol: String,
                      rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
@@ -1595,37 +1365,8 @@ object Graph {
         }
         nodeValueDf(pairs.sparkSession, "label", g.ids, lab.map(g.ids))
       case None =>
-        val e = orientedAdjacency(pairs.filter(nonNull(uCol, vCol)), uCol, vCol)
-          .ckpt()
-        val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        try withoutAqe(e.sparkSession) {
-          // every node appears as a source of the __s-partitioned oriented
-          // frame, so the seed distinct is exchange-free.
-          // FRONTIER DELTA (r12 verdict): only labels that CHANGED last round
-          // push this round — an unchanged node's contribution was already
-          // folded into its neighbors when it last changed, so re-pushing it
-          // is a no-op by the min-fold's idempotence. Round 0 seeds the delta
-          // with every node (all labels fresh); the seed is persist-marked
-          // because round 1 reads it twice (label side + delta side).
-          var merged = e.select(col("__s").as("__n")).distinct()
-            .select(col("__n"), col("__n").as("__l"), lit(true).as("__chg"))
-            .persist()
-          cached += merged
-          var r = 0
-          while (r < rounds) {
-            merged = minLabelDeltaRound(e,
-              merged.select(col("__n"), col("__l")),
-              merged.filter(col("__chg")).select(col("__n"), col("__l")))
-              .persist()
-            cached += merged
-            r += 1
-          }
-          merged.select(col("__n").as("node"), col("__l").as("label"))
-            .ckpt()
-        } finally {
-          cached.foreach(_.unpersist(blocking = false))
-          Dedup.freeCheckpoints(e)
-        }
+        withoutAqe(pairs.sparkSession)(minLabelTwin(
+          pairs.filter(nonNull(uCol, vCol)), uCol, vCol, rounds, "label")._1)
     }
   }
 
@@ -1660,12 +1401,8 @@ object Graph {
     * (duplicate pairs allowed) — (node, component) with component = min
     * node id in the component. The driver tier is one union-find fold
     * (union by min root, so every root IS its component's minimum). The
-    * twin ([[connectedComponentsTwin]]) is hash-min label propagation:
-    * each round is [[minLabelDeltaRound]]'s frontier-delta join +
-    * min-fold, and convergence detection rides the SAME action that
-    * materializes the round (the [[bfsLevels]] liveness pattern): labels
-    * are monotone nonincreasing under the min-fold, so a zero
-    * changed-row count means no label moved. Hash-min needs O(diameter)
+    * twin ([[connectedComponentsTwin]]) is hash-min label propagation
+    * ([[minLabelTwin]]) run to its fixpoint. Hash-min needs O(diameter)
     * rounds — right for the small-diameter graphs batch analytics feeds
     * it; adversarial long-path graphs want
     * [[Dedup.connectedComponentsStar]]'s O(log n) star contraction (same
@@ -1686,22 +1423,45 @@ object Graph {
         uCol, vCol, maxRounds)
     }
 
-  /** [[connectedComponentsMinLabel]]'s distributed twin; Louvain's twin
-    * runs its per-level pointer-graph CC through it directly. */
+  /** [[connectedComponentsMinLabel]]'s distributed twin: [[minLabelTwin]]
+    * to its fixpoint, throwing when `maxRounds` rounds do not reach it.
+    * Louvain's twin runs its per-level pointer-graph CC through it
+    * directly. */
   private def connectedComponentsTwin(edges: DataFrame, uCol: String,
                                       vCol: String,
                                       maxRounds: Int): DataFrame = {
+    val (cc, converged) = minLabelTwin(edges, uCol, vCol, maxRounds, "component")
+    if (!converged) {
+      Dedup.freeCheckpoints(cc)
+      throw new IllegalStateException(
+        s"connectedComponentsMinLabel did not converge in $maxRounds rounds")
+    }
+    cc
+  }
+
+  /** The min-label loop of both twins over an undirected pair list:
+    * labels start as each node's own id, and each round is one
+    * [[minLabelDeltaRound]], lazily checkpoint-marked; the count of its
+    * changed rows is the action that materializes it (the [[bfsLoop]]
+    * liveness pattern), so every round plans over the previous round's
+    * blocks and the plan does not grow with the round count. Labels are
+    * monotone nonincreasing under the min-fold, so a zero changed-row
+    * count means no label moved and every later round is a no-op: the
+    * loop stops there (converged) or after `maxRounds` rounds. Returns
+    * ((node, `name`) checkpointed, converged) and frees every round's
+    * blocks. */
+  private def minLabelTwin(edges: DataFrame, uCol: String, vCol: String,
+                           maxRounds: Int,
+                           name: String): (DataFrame, Boolean) = {
     val e = orientedAdjacency(edges, uCol, vCol).ckpt()
     val spent = scala.collection.mutable.ArrayBuffer(e)
+    // every node appears as a source of the __s-partitioned oriented
+    // frame, so the seed distinct is exchange-free; round 1 pushes every
+    // label (all are fresh)
     var lab = e.select(col("__s").as("__n")).distinct()
       .withColumn("__l", col("__n"))
       .localCheckpoint(eager = false)
     spent += lab
-    // frontier delta (see [[minLabelDeltaRound]]): convergence is now a
-    // COUNT of the changed rows — it rides the same action that
-    // materializes the round's checkpoint blocks (replacing the pre-r13
-    // full-table label-sum compare), and reads zero when the round was a
-    // no-op, which under the min-fold's monotonicity means fixpoint.
     var delta = lab
     var converged = false
     var r = 0
@@ -1715,15 +1475,10 @@ object Graph {
       converged = changed == 0L
       r += 1
     }
-    if (!converged) {
-      Dedup.freeCheckpoints(spent.toSeq: _*)
-      throw new IllegalStateException(
-        s"connectedComponentsMinLabel did not converge in $maxRounds rounds")
-    }
-    val result = lab.select(col("__n").as("node"), col("__l").as("component"))
+    val result = lab.select(col("__n").as("node"), col("__l").as(name))
       .ckpt()
     Dedup.freeCheckpoints(spent.toSeq: _*)
-    result
+    (result, converged)
   }
 
   /** MULTI-SOURCE bounded BFS over an undirected pair list: hop counts
@@ -1795,9 +1550,8 @@ object Graph {
     * min level — the old conditional-sum's "keep existing" arm), the
     * survivors are the round's discoveries at level i with σ = the
     * pre-aggregated sum (the "sum the frontier" arm), and state only
-    * ever UNIONS them in — it is never re-aggregated. Same loop
-    * mechanics otherwise (persist-marked rounds, AQE off, one
-    * straight-line action).
+    * ever UNIONS them in — it is never re-aggregated. Each round's
+    * discoveries are checkpointed eagerly ([[pathCountsLoop]]).
     *
     * The frontier (the round's newly discovered (src, node, σ) rows —
     * bounded by nSources × |V|, a few MB at any realistic nSources)
@@ -2207,19 +1961,28 @@ object Graph {
   }
 
   /** Both-orientation CSR adjacency over a tier's edges — the shared
-    * substrate of the undirected driver tiers. `dedup` sort-dedupes the
-    * DIRECTED entry stream (the operator contracts that treat duplicate
-    * pairs as parallel edges pass false). Neighbors of index i are
+    * substrate of the undirected driver tiers. Neighbors of index i are
     * nbr(off(i) until off(i + 1)). */
   private def driverCsr(g: Edges, dedup: Boolean): (Array[Int], Array[Int]) = {
+    val (src, dst) = driverEntries(g, dedup)
+    csr(g.n, src, dst)
+  }
+
+  /** The both-orientation entry stream src(i) → dst(i) of a tier's edges
+    * in index space. `dedup` sort-dedupes the DIRECTED entries (the
+    * operator contracts that treat duplicate pairs as parallel edges
+    * pass false); without it entry i and entry m + i are edge i's two
+    * orientations. */
+  private def driverEntries(g: Edges,
+                            dedup: Boolean): (Array[Int], Array[Int]) = {
     val src = g.iu ++ g.iv
     val dst = g.iv ++ g.iu
-    if (!dedup) csr(g.n, src, dst)
+    if (!dedup) (src, dst)
     else {
       val keys = Array.tabulate(src.length)(i =>
         (src(i).toLong << 32) | dst(i))
       val m = sortDedup(keys)
-      csr(g.n, Array.tabulate(m)(i => (keys(i) >>> 32).toInt),
+      (Array.tabulate(m)(i => (keys(i) >>> 32).toInt),
         Array.tabulate(m)(i => keys(i).toInt))
     }
   }
@@ -3067,11 +2830,13 @@ object Graph {
     * (node, degree). Fixed round count keeps the result a deterministic
     * cross-engine twin at any scale (the streaming approximation of full
     * peeling; a production loop adds the convergence count exactly like
-    * [[bfsLoop]]). The driver tier peels edge arrays; in the twin every
-    * round's degree table is `persist`-marked, AQE is off for the fixed-shape chain, and
-    * the whole peel is ONE straight-line action instead of one checkpoint
-    * barrier per round (the r11 shape paid 4 driver round-trips for 1.8 s
-    * of compute). The chained-CTE
+    * [[bfsLoop]]). The driver tier peels edge arrays; the twin runs the
+    * [[bfsLoop]] discipline with AQE off: every round's degree table is
+    * lazily checkpoint-marked and the count of its peelable rows is the
+    * action that materializes it, so the plan stays flat (a round reads
+    * the previous table twice — frontier and survivors — which a lazy
+    * chain would double per round), and a round with nothing to peel ends
+    * the loop: every later round would be a no-op. The chained-CTE
     * SQL form re-inlines every round's subtree ~3× per level in Catalyst
     * (plan grows 3^rounds; measured 12.5 s wall on 1.8 s of compute at
     * sf0.1), which is why the engine side is this loop and only the
@@ -3124,24 +2889,22 @@ object Graph {
         // formulation drops nodes with no surviving edges.
         val e = orientedAdjacency(edges.filter(nonNull(uCol, vCol)), uCol, vCol)
           .ckpt()
-        val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+        val spent = scala.collection.mutable.ArrayBuffer(e)
         try withoutAqe(e.sparkSession) {
-          // persisted because every round reads it twice (frontier + survivors)
-          var deg = kcoreDegrees(e).persist()
-          cached += deg
+          var deg = kcoreDegrees(e).localCheckpoint(eager = false)
+          spent += deg
           var r = 0
-          while (r < rounds) {
-            deg = kcoreRound(e, deg, k).persist()
-            cached += deg
+          var peeling = true
+          while (r < rounds && peeling) {
+            deg = kcoreRound(e, deg, k).localCheckpoint(eager = false)
+            spent += deg
+            peeling = deg.filter(col("__d") < k).count() > 0
             r += 1
           }
           deg.filter(col("__d") > 0)
             .select(col("__n").as("node"), col("__d").as("degree"))
             .ckpt()
-        } finally {
-          cached.foreach(_.unpersist(blocking = false))
-          Dedup.freeCheckpoints(e)
-        }
+        } finally Dedup.freeCheckpoints(spent.toSeq: _*)
     }
   }
 

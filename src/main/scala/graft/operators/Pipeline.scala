@@ -50,6 +50,6 @@ object Pipeline {
       .withColumn("__rn", row_number().over(perText))
       .filter(col("__rn") === 1)
       .select(col(idCol), col("clean_text"),
-        size(filter(split(col("clean_text"), " "), w => w =!= "")).as("n_tokens"))
+        size(Text.tokens(col("clean_text"))).as("n_tokens"))
   }
 }

@@ -30,17 +30,13 @@ object Explain {
 
   private val TierLimit = "graft.graph.broadcastLimitBytes"
 
-  /** The local session both [[Explain]] and [[ExplainSome]] audit in, with
-    * the per-query fixtures prepared up front (as the bench warm-up does),
-    * so no query's first build captures one-time setup writes. */
+  /** The local session both [[Explain]] and [[ExplainSome]] audit in —
+    * the session Bench and Verify run ([[graft.LocalTuning.session]]) at
+    * `local[4]` — with the per-query fixtures prepared up front (as the
+    * bench warm-up does), so no query's first build captures one-time
+    * setup writes. */
   private[plans] def session(sfDir: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalTuning.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.prepareFixtures(spark, sfDir)
     spark

@@ -60,10 +60,7 @@ class GraphInvariantSpec extends AnyFunSuite with SparkSpec {
     val df = es.toDF("u", "v")
     val cc = Graph.connectedComponentsMinLabel(df, "u", "v")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // brute-force the diameter bound, then run labelPropagate just past
-    // it (labelPropagate's persist chain doubles its LOGICAL plan per
-    // round — bounded rounds by design; the checkpoint loop is the
-    // fixpoint tool, see the scaladoc)
+    // brute-force the diameter bound, then run labelPropagate just past it
     val nodes = es.flatMap(p => Seq(p._1, p._2)).distinct
     val nbrs = nodes.map { n =>
       n -> es.collect { case (a, b) if a == n => b; case (a, b) if b == n => a }

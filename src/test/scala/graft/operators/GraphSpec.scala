@@ -5,53 +5,67 @@ import graft.SparkSpec
 
 class GraphSpec extends AnyFunSuite with SparkSpec {
 
-  private def run(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
-    import spark.implicits._
-    Graph.pagerank(edges.toDF("s", "t"), "s", "t", iters)
+  /** The PageRank recurrence in plain Scala over an undirected pair
+    * list: the distinct both-orientation adjacency, every node starts at
+    * 1_000_000 and restarts with 150_000,
+    * pr'(v) = 150_000 + (17 · Σ_{u–v} pr(u) div deg(u)) div 20. */
+  private def pagerankReference(pairs: Seq[(Long, Long)],
+                                iters: Int): Map[Long, Long] = {
+    val adj = pairs.flatMap { case (u, v) => Seq(u -> v, v -> u) }.distinct
+      .groupMap(_._1)(_._2)
+    var pr = adj.keys.map(_ -> 1000000L).toMap
+    for (_ <- 1 to iters) {
+      val c = adj.toSeq.flatMap { case (u, ts) => ts.map(_ -> pr(u) / ts.size) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      pr = pr.keys.map(n => n -> (150000L + 17L * c(n) / 20L)).toMap
+    }
+    pr
+  }
+
+  /** pagerankUndirected at the default limits and with the twin pinned. */
+  private def pagerankBoth(df: org.apache.spark.sql.DataFrame,
+                           iters: Int): (Map[Long, Long], Map[Long, Long]) = {
+    def run() = Graph.pagerankUndirected(df, "u", "v", iters)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    (run(), withTwins(run()))
   }
 
   test("pagerank: hand-computed integer recurrence on an undirected star") {
-    // star 1–2, 1–3 (both orientations); outdeg 1:2, 2:1, 3:1
-    val e = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L))
+    import spark.implicits._
+    // star 1–2, 1–3; degree 1:2, 2:1, 3:1
+    val df = Seq((1L, 2L), (1L, 3L)).toDF("u", "v")
     // iter1: pr(1) = 150000 + 17·2000000/20 = 1850000; pr(2) = pr(3) =
     //        150000 + 17·500000/20 = 575000
-    assert(run(e, 1) == Map(1L -> 1850000L, 2L -> 575000L, 3L -> 575000L))
+    val one = Map(1L -> 1850000L, 2L -> 575000L, 3L -> 575000L)
+    assert(pagerankBoth(df, 1) == ((one, one)))
     // iter2: pr(1) = 150000 + (17·1150000) div 20 = 1127500;
     //        pr(2) = pr(3) = 150000 + (17·925000) div 20 = 936250
-    assert(run(e, 2) == Map(1L -> 1127500L, 2L -> 936250L, 3L -> 936250L))
-  }
-
-  test("pagerank: a node with no in-edges keeps the damping base") {
-    assert(run(Seq((1L, 2L)), 1) == Map(1L -> 150000L, 2L -> 1000000L))
+    val two = Map(1L -> 1127500L, 2L -> 936250L, 3L -> 936250L)
+    assert(pagerankBoth(df, 2) == ((two, two)))
   }
 
   test("pagerank is partition-invariant (integer arithmetic, no float sums)") {
     import spark.implicits._
-    val e = (1L to 40L).flatMap(i => Seq((i, i % 40 + 1), (i % 40 + 1, i)))
-    val df = e.toDF("s", "t")
-    val a = Graph.pagerank(df, "s", "t", 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = Graph.pagerank(df.repartition(7), "s", "t", 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a == b && a.size == 40)
+    val pairs = (1L to 40L).map(i => (i, i % 40 + 1))
+    val df = pairs.toDF("u", "v")
+    val (a, aTwin) = pagerankBoth(df, 3)
+    val (b, bTwin) = pagerankBoth(df.repartition(7), 3)
+    assert(a == b && aTwin == a && bTwin == a && a.size == 40)
+    assert(a == pagerankReference(pairs, 3))
   }
 
-  test("pagerankUndirected equals pagerank fed both orientations") {
+  test("pagerankUndirected equals the plain-Scala recurrence over both " +
+      "orientations; duplicate and reversed pairs change nothing") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val pairs = (1 to 200).map(_ => (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
       .filter(p => p._1 != p._2)
       .map(p => (math.min(p._1, p._2), math.max(p._1, p._2)))
       .distinct
-    val df = pairs.toDF("u", "v")
-    val both = df.select($"u".as("s"), $"v".as("t"))
-      .unionByName(df.select($"v".as("s"), $"u".as("t")))
-    val want = Graph.pagerank(both, "s", "t", 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = Graph.pagerankUndirected(df, "u", "v", 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want)
+    val want = pagerankReference(pairs, 3)
+    assert(pagerankBoth(pairs.toDF("u", "v"), 3) == ((want, want)))
+    val noisy = pairs ++ pairs.take(20) ++ pairs.takeRight(20).map(_.swap)
+    assert(pagerankBoth(noisy.toDF("u", "v"), 3) == ((want, want)))
   }
 
   test("bfsLevelsUndirected: levels match the directed run from min id; " +
@@ -395,6 +409,26 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       s"InMemoryRelation nodes per executed plan: ${nested.mkString(", ")}")
   }
 
+  test("labelPropagate's twin checkpoints every round: at rounds 8 no " +
+      "executed plan nests more than a handful of InMemoryRelations, and " +
+      "it equals the driver tier") {
+    import spark.implicits._
+    // a 12-node path plus the chord 3-7: node 12 is 8 hops from node 1,
+    // so label 1 reaches it in the 8th round
+    val es = (1L until 12L).map(i => (i, i + 1)) :+ ((3L, 7L))
+    val df = es.toDF("u", "v")
+    def labels(out: org.apache.spark.sql.DataFrame) = out.collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val tier = labels(Graph.labelPropagate(df, "u", "v", rounds = 8))
+    val (twin, ran) = withTwins(graft.plans.Explain.capture(spark)(
+      labels(Graph.labelPropagate(df, "u", "v", rounds = 8))))
+    assert(twin == tier)
+    assert(tier == (1L to 12L).map(_ -> 1L).toMap)
+    val nested = ran.map(p => "InMemoryRelation".r.findAllIn(p.toString).size)
+    assert(ran.nonEmpty && nested.max <= 4,
+      s"InMemoryRelation nodes per executed plan: ${nested.mkString(", ")}")
+  }
+
   test("labelPropagate (frontier-delta rounds) equals the retained " +
       "full-table fold chain on seeded random graphs, every round count") {
     import spark.implicits._
@@ -469,6 +503,13 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     val got = Graph.louvainFirstLevel(df, "u", "v", "w")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want)
+    // the Graph header's NULL rule: an edge with a NULL endpoint is
+    // dropped, so it adds nothing to node 2's strength or to 2m
+    val withNull = (wes.map { case (u, v, w) => (u, Option(v), w) } :+
+      ((2L, Option.empty[Long], 50L))).toDF("u", "v", "w")
+    val gotNull = Graph.louvainFirstLevel(withNull, "u", "v", "w")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(gotNull == want)
   }
 
   test("sccPivot: the pivot's SCC is exactly fwd ∩ bwd reach with hop " +
